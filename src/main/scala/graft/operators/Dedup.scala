@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.catalog.Lake
 import graft.functions.{hashing, text}
+import graft.plans.LocalKernels
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -847,70 +848,37 @@ object Dedup {
       .orderBy("source_a", "source_b")
   }
 
-  /** Connected components over an undirected pair list (doc_a, doc_b):
-    * returns (u, lbl) where lbl is the smallest node id reachable from
-    * u. Iterative min-label propagation; labels only decrease, so the
-    * fixpoint test is a stable sum(lbl) — one scalar action per hop.
-    * Converges in component-diameter iterations, bounded by maxIters. */
-  def connectedComponents(pairs: DataFrame, maxIters: Int = 20): DataFrame = {
-    val edges = pairs
-      .select(col("doc_a").as("u"), col("doc_b").as("v"))
-      .unionAll(pairs.select(col("doc_b").as("u"), col("doc_a").as("v")))
-    var labels = edges
-      .select(col("u"))
-      .distinct()
-      .select(col("u"), col("u").as("lbl"))
-      .localCheckpoint(false)
-    // sum over ZERO rows is SQL null: an empty pair list must read as
-    // checksum 0, not NPE (the star variant's checksum already does).
-    def checksum(df: DataFrame): Long = {
-      val r = df.agg(sum("lbl")).head()
-      if (r.isNullAt(0)) 0L else r.getLong(0)
-    }
-    var prevSum = checksum(labels)
-    var converged = labels.isEmpty
-    var iter = 0
-    while (!converged && iter < maxIters) {
-      val neighborMin = edges
-        .join(labels.select(col("u").as("v"), col("lbl").as("vlbl")), "v")
-        .groupBy("u")
-        .agg(min("vlbl").as("nlbl"))
-      labels = labels
-        .join(neighborMin, Seq("u"), "left")
-        .select(
-          col("u"),
-          least(col("lbl"), coalesce(col("nlbl"), col("lbl"))).as("lbl")
-        )
-        .localCheckpoint(false)
-      val s = checksum(labels)
-      converged = s == prevSum
-      prevSum = s
-      iter += 1
-    }
-    labels
-  }
+  /** Star-CC's small-graph cutover: once a round's live edge count is
+    * at or below this (16 MB of id pairs), the edges are collected once
+    * and the remaining rounds finish in a driver-side union-find. A
+    * larger graph keeps running star rounds until it shrinks below it. */
+  private[graft] val StarCCLocalEdges: Long = 1L << 20
 
   /** Connected components via alternating large-star / small-star
     * rounds (Kiveris et al., "Connected Components in MapReduce and
     * Beyond", 2014) — O(log n) rounds on ANY graph topology, vs the
-    * component-DIAMETER rounds of `connectedComponents` above. On a
+    * component-DIAMETER rounds of plain min-label propagation. On a
     * 100 TB near-dup graph a boilerplate-chained component can have
     * diameter in the thousands; this variant's round count is
     * independent of that. Each round is two symmetric-join + min
     * aggregate passes over the edge list; convergence = stable
     * (count, Σ xxhash64(u,v)) checksum, one scalar action per round.
     * At the fixpoint the edge set is exactly the star u -> component
-    * minimum. Label semantics are identical to `connectedComponents`
+    * minimum. Once the live edge set is at most `localEdges` edges
+    * (`StarCCLocalEdges`; specs override it), it is collected and
+    * `LocalKernels.minRootComponents` computes that same star in one
+    * pass — labels are component minima either way, so the result is
+    * exactly equal. Label semantics are those of plain propagation
     * (smallest reachable id) — asserted in DedupSimilaritySpec. */
   def connectedComponentsStar(
       pairs: DataFrame,
-      maxIters: Int = 30
+      maxIters: Int = 30,
+      localEdges: Long = StarCCLocalEdges
   ): DataFrame = {
     // nodes has exactly ONE consumer (the final label join) and pairs
     // arrives localCheckpointed from every caller, so an EAGER
     // checkpoint here bought nothing but its own job + pass — the
-    // distinct now folds into the final job (round 15; the same
-    // one-consumer rule as kmeans' materialize flag).
+    // distinct folds into the final job.
     val nodes = pairs
       .select(col("doc_a").as("u"))
       .unionAll(pairs.select(col("doc_b").as("u")))
@@ -919,13 +887,8 @@ object Dedup {
     // RDD and the checksum aggregate's job materializes the blocks as
     // it streams them — ONE job per generation where the eager form
     // paid two (materialize, then re-scan the blocks to checksum).
-    // Measured structurally (ProbeJobs, round 15 — job count is the
-    // cost model for driver loops on a box with a ~0.1-0.3 s job
-    // floor, and unlike wall clock it is noise-immune): dedup08
-    // 45->40 jobs, samp05 44->39, samp07 47->42, dedup11 63->57,
-    // pipe03 54->49 at sf0.1; oracle hash-PASS unchanged on all six
-    // consumers. At scale the same fusion removes one full pass over
-    // the edge set per round.
+    // At scale the same fusion removes one full pass over the edge
+    // set per round.
     var edges = pairs
       .select(
         greatest(col("doc_a"), col("doc_b")).as("u"),
@@ -965,7 +928,7 @@ object Dedup {
     val sc = pairs.sparkSession.sparkContext
     var prevCkpt: Set[Int] =
       org.apache.spark.sql.graftbridge.Bridge.checkpointRddIds(edges)
-    while (cur != prev && iter < maxIters) {
+    while (cur != prev && iter < maxIters && cur._1 > localEdges) {
       // ONE explicit exchange per star (round 16, guide §2.4 — two
       // operations keyed the same way share one exchange): after
       // repartition(u), HashPartitioning(u) satisfies the clustering
@@ -973,15 +936,18 @@ object Dedup {
       // (u, v) dedup — so each star's aggregate + join + dedup all
       // run exchange-free in the repartition's stage. The old form
       // let every groupBy / join / distinct plan its own Exchange
-      // (4-6 per round). shuffle_hash on the min frames: strictly
-      // one build row per key (a min per node), so the hash build
-      // can't blow per-partition memory, and it drops the SMJ sorts.
+      // (4-6 per round). shuffle_hash on the min frames drops the
+      // SMJ sorts. Its build holds one row per key (a min per node),
+      // so a partition's hash table grows with the distinct nodes
+      // routed to it — bounded by the node count per partition, not
+      // by a constant — and ShuffledHashJoin's build does not spill
+      // the way a sort-merge join would.
       // Skew note for 100 TB: the hot key (a giant component's min
       // node) is a SINGLE key — AQE skew-split cannot divide one key
       // in either formulation, so fusing the join into the exchange's
       // stage gives up nothing on that axis.
-      // Measured (ProbeStarCC, interleaved same-JVM, sf0.1, label
-      // checksums identical): 26 -> 22 jobs per CC run, wall
+      // Measured (interleaved same-JVM, sf0.1, label checksums
+      // identical): 26 -> 22 jobs per CC run, wall
       // 1.011 -> 0.823 s (min of 3 alternating sweeps).
       //
       // large-star: hang every neighbor LARGER than u off
@@ -1024,6 +990,21 @@ object Dedup {
         sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false)))
       prevCkpt = added
       iter += 1
+    }
+    if (cur != prev && cur._1 <= localEdges) {
+      // small-graph cutover: one collect, then the in-memory star
+      val live = edges.collect()
+      val (us, ls) = LocalKernels.minRootComponents(
+        live.map(_.getAs[Number](0).longValue),
+        live.map(_.getAs[Number](1).longValue))
+      val spark = pairs.sparkSession
+      import spark.implicits._
+      edges = us.indices.map(i => (us(i), ls(i))).toDF("u", "v")
+        .select(
+          col("u").cast(edges.schema("u").dataType).as("u"),
+          col("v").cast(edges.schema("v").dataType).as("v"))
+      prevCkpt.foreach(id =>
+        sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false)))
     }
     nodes
       .join(edges.select(col("u"), col("v").as("lbl")), Seq("u"), "left")
@@ -1896,9 +1877,9 @@ object Dedup {
       // either path at test scale.
       blockedCutover: Double = 1e8
   ): DataFrame = {
-    // One materialization feeds the k-means loop, the assignment pass
-    // and the pair join — without it the upstream plan re-executes per
-    // consumer (and per Lloyd iteration).
+    // One materialization feeds the count, the k-means training
+    // collect, the assignment pass and the pair join — without it the
+    // upstream plan re-executes per consumer.
     val all = all0.localCheckpoint(false)
     val n = all.count()
     val kEff =

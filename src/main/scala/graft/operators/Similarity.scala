@@ -2,9 +2,11 @@ package graft.operators
 
 import graft.catalog.Lake
 import graft.functions.vectors
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.plans.LocalKernels
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, StructField, StructType}
 
 /** Similarity search over the embeddings table — the Spark-native
   * analog of the reference's FAISS flat-IP linkage
@@ -318,20 +320,6 @@ object Similarity {
     * Candidate volume is nprobe/nlist of the corpus per query — the
     * knob trades recall for compute exactly as in the reference's
     * FAISS usage (build_embedding_linkage.py:246-273). */
-  /** DataFrame-native spherical k-means (Lloyd iterations, cosine
-    * assignment, arithmetic-mean update — identical assignments to
-    * the normalized-mean update since cosine ignores scale, and the
-    * spherical objective Σ cos(v, c) is monotone non-decreasing).
-    * Deterministic: seeds are the k lowest vec_ids, ties in
-    * assignment break to the lowest cluster id, so the trained
-    * quantizer is reproducible across cluster sizes.
-    *
-    * Per iteration: one broadcast of the k centroids (crossJoin —
-    * the scalar-join idiom, k rows), one argmax window per vector,
-    * one (cluster, pos) mean shuffle of n x dim value rows. The
-    * centroid frame is localCheckpointed so iteration i+1 does not
-    * recompute iterations 1..i. This is the FAISS IVF *training*
-    * step (build_embedding_linkage.py's index build analog). */
   /** Per-vector argmax over the k broadcast centroids as ONE
     * partial-aggregating groupBy. The previous row_number-over-
     * (vec_id) formulation shuffled all n×k scored rows and globally
@@ -396,67 +384,76 @@ object Similarity {
       )
   }
 
-  /** `materialize = true` (the default) localCheckpoints every Lloyd
-    * step — right when callers re-derive several frames from the
-    * centroids. `materialize = false` keeps the whole train LAZY so
-    * it folds into the consumer's single job: each Spark job on this
-    * box costs a ~0.3 s scheduling floor, and at nlist ≈ 10 the
-    * per-iteration compute (n × nlist scorings) is far below it, so
-    * iters × 2 checkpoint jobs dominate the wall clock of any
-    * operator that trains inline (sim11 measured 1.4 s of its 3.2 s
-    * in train-job floors). The recompute the laziness trades away is
-    * that same tiny n × nlist scan — which is why laziness only pays
-    * when the CENTROIDS HAVE ONE CONSUMER: sim06 and dedup11 read
-    * them from two branches (assign + probe / assign + pairs), and
-    * measured SLOWER lazy (1.70→1.97 s, 3.4→3.8 s) because each
-    * branch re-executes the chain, one of them inside a broadcast
-    * build. Keep the default for multi-consumer callers. */
+  /** Spherical k-means (Lloyd iterations, cosine assignment,
+    * arithmetic-mean update — identical assignments to the
+    * normalized-mean update since cosine ignores scale, and the
+    * spherical objective Σ cos(v, c) is monotone non-decreasing).
+    * Deterministic: seeds are the k lowest vec_ids, ties in
+    * assignment break to the lowest cluster id, and a cell left empty
+    * disappears. This is the FAISS IVF *training* step
+    * (build_embedding_linkage.py's index build analog).
+    *
+    * Training runs on the driver: the training set is collected once
+    * as (vec_id, v) — at most `TrainCapVectors` vectors, see
+    * `collectTrainingSet` — and Lloyd runs as one local loop
+    * (`LocalKernels.lloyd`, the same arithmetic as the Spark
+    * expressions). A distributed Lloyd step costs several jobs for
+    * n × k scorings that take microseconds, so the per-job floor was
+    * the whole training cost. Returns a k-row local frame
+    * (cluster, centroid), so consumers plan it like any small table. */
   def kmeans(
       all: DataFrame,
       k: Int = 10,
       iters: Int = 3,
-      materialize: Boolean = true
+      // overridable so specs can force the sampled path at test scale
+      trainCap: Int = TrainCapVectors
   ): DataFrame = {
-    // LAZY checkpoint (round 15): persistence semantics are identical
-    // to the former eager form — the first consumer's job (the next
-    // iteration's broadcast build, or the caller's first action)
-    // materializes the blocks, every later consumer reads them — but
-    // the dedicated materialization job per Lloyd step disappears.
-    // This is NOT the measured-slower materialize=false (no
-    // checkpoint at all, chain re-executed per consumer); blocks are
-    // still shared. ProbeJobs: sim06 27->22, dedup11 57->52 jobs.
-    def mat(df: DataFrame): DataFrame =
-      if (materialize) df.localCheckpoint(false) else df
-    val seedW = Window.orderBy("vec_id")
-    var cents = mat(
-      all
-        .orderBy("vec_id")
-        .limit(k)
-        .select(
-          (row_number().over(seedW) - 1).as("cluster"),
-          col("v").as("centroid")
-        )
+    val rows = collectTrainingSet(all, k, trainCap)
+    val (ids, cents) = LocalKernels.lloyd(rows, k, iters, cosine = true)
+    all.sparkSession.createDataFrame(
+      java.util.Arrays.asList(ids.indices.map(i => Row(ids(i), cents(i))): _*),
+      StructType(Seq(
+        StructField("cluster", IntegerType),
+        StructField("centroid", ArrayType(DoubleType), nullable = false)
+      ))
     )
-    var i = 0
-    while (i < iters) {
-      val assigned = argmaxCell(all, cents, Seq("v"))
-        .select(col("cluster"), col("v"))
-      cents = mat(
-        assigned
-          .select(col("cluster"), posexplode(col("v")).as(Seq("pos", "x")))
-          .groupBy("cluster", "pos")
-          .agg(avg("x").as("c"))
-          .groupBy("cluster")
-          .agg(
-            transform(
-              array_sort(collect_list(struct(col("pos"), col("c")))),
-              s => s.getField("c")
-            ).as("centroid")
-          )
-      )
-      i += 1
-    }
-    cents
+  }
+
+  /** Driver-side training cap: a quantizer trains on at most this many
+    * vectors (64 MB of doubles at dim 64). */
+  private[graft] val TrainCapVectors: Int = 1 << 17
+
+  /** trainEvery's deterministic sample: the xxhash64(vec_id) stripe of
+    * stride `every` — a pure function of vec_id, no RNG. */
+  private def stripe(frame: DataFrame, every: Long): DataFrame =
+    frame.filter(pmod(xxhash64(col("vec_id")), lit(every)) === 0)
+
+  /** The training set of a driver-local Lloyd loop: the non-null
+    * vectors of `frame` in vec_id order. At most `cap` vectors are
+    * kept (never fewer than the `minRows` seeds the codebook needs);
+    * the first job reads at most cap + 1 rows, so at or below the cap
+    * it is the only job. Above the cap the set is trainEvery's
+    * xxhash64 stripe with stride ⌈n/cap⌉ (about `cap` vectors); a
+    * stripe too small to seed `minRows` clusters falls back to the
+    * first rows read, so a sampled codebook is never degenerate. */
+  private[graft] def collectTrainingSet(
+      frame: DataFrame,
+      minRows: Int,
+      cap: Int = TrainCapVectors
+  ): Array[Array[Double]] = {
+    val capEff = math.max(cap, minRows)
+    val vs = frame.select(col("vec_id"), col("v")).filter(col("v").isNotNull)
+    val head = vs.limit(capEff + 1).collect()
+    val picked =
+      if (head.length <= capEff) head
+      else {
+        val every = math.ceil(vs.count().toDouble / capEff).toLong
+        val sample = stripe(vs, every).collect()
+        if (sample.length >= minRows) sample else head
+      }
+    picked
+      .sortBy(_.getAs[Number](0).longValue)
+      .map(_.getSeq[Double](1).toArray)
   }
 
   /** Spherical k-means objective Σ cos(v, centroid of assigned cell)
@@ -528,11 +525,11 @@ object Similarity {
     * the top `quota` per cluster — one row per vector with its
     * cluster, rounded affinity, in-cluster rank and keep verdict.
     *
-    * Scale shape: training is kmeans' broadcast fold; assignment is
-    * the map-only argmax (no shuffle). The FULL-AUDIT form (default)
-    * then ranks every member through a per-cluster window — the
-    * report (and the oracle) audits the dropped tail too, and at test
-    * scale that window is bounded by cluster size. At 100 TB the
+    * Scale shape: training is kmeans' capped driver-local Lloyd;
+    * assignment is the map-only argmax (no shuffle). The FULL-AUDIT
+    * form (default) then ranks every member through a per-cluster
+    * window — the report (and the oracle) audits the dropped tail
+    * too, and at test scale that window is bounded by cluster size. At 100 TB the
     * audit form is the anti-pattern twice over: with a fixed small
     * `nlist` the window has only `nlist` partitions (the whole corpus
     * sorts through ~nlist tasks), and the output itself is
@@ -693,9 +690,10 @@ object Similarity {
     * drift means the appended batch sits farther from the centroids
     * than the data they were trained on, the retrain-trigger signal.
     *
-    * Scale shape: the train is kmeans' broadcast fold over the base;
-    * BOTH assignments are the map-only argmax (zero shuffle); the
-    * report aggregates map-side to <= nlist rows per task. The full
+    * Scale shape: the train is kmeans' capped driver-local Lloyd over
+    * the base; BOTH assignments are the map-only argmax (zero
+    * shuffle); the report aggregates map-side to <= nlist rows per
+    * task. The full
     * outer join is over <= nlist-row frames. Oracle: sim06's unrolled
     * 3-iteration Lloyd CTE trained on the base subset, then both
     * assignment replays and the per-cell aggregate in plain SQL
@@ -782,13 +780,12 @@ object Similarity {
     * per-query lookup table of partial dots against every codebook
     * entry, summed along the code word.
     *
-    * Spark-first training: all m subspace k-means runs train JOINTLY
-    * in one dataflow — the subvector frame carries (vec_id, sub_id,
-    * sv) and every Lloyd step is a single broadcast-join + window +
-    * aggregate over all subspaces at once, not m driver-side loops.
-    * The ADC scan is the PQ scale story: scoring joins the m·n code
-    * rows against a broadcast q·m·ks lookup table on (sub_id,
-    * cluster) — linear in codes, never touching the original vectors.
+    * Training: the m subspace codebooks train on the driver over one
+    * capped collect of the training vectors (pqTrainCore); encoding
+    * every vector stays a map-only pass. The ADC scan is the PQ scale
+    * story: scoring joins the m·n code rows against a broadcast
+    * q·m·ks lookup table on (sub_id, cluster) — linear in codes,
+    * never touching the original vectors.
     * Oracle-checked end to end: the joint-subspace Lloyd iterations
     * unroll as CTE triples and ADC is plain join/agg SQL (the graph06
     * unrolled-recursion trick); recall floor, code-shape and
@@ -962,9 +959,7 @@ object Similarity {
     val trainSet =
       if (trainEvery <= 1) all
       else {
-        val sampled = all
-          .filter(pmod(xxhash64(col("vec_id")), lit(trainEvery)) === 0)
-          .localCheckpoint()
+        val sampled = stripe(all, trainEvery).localCheckpoint()
         // A sample SMALLER than the codebooks it must seed (fewer
         // rows than nlist coarse centroids or ks codewords per
         // subspace) silently trains a degenerate quantizer — the
@@ -982,8 +977,8 @@ object Similarity {
         col("vec_id"),
         zip_with(col("v"), col("centroid"), (x, y) => x - y).as("v")
       )
-      // lazy: pqTrainCore's subvector checkpoint materializes this
-      // chain on first touch and every later consumer reads blocks
+      // lazy: pqTrainCore's first read materializes this chain and
+      // every later consumer reads blocks
       .localCheckpoint(false)
     val resid = residOf(cells)
     val residTrain =
@@ -1254,7 +1249,7 @@ object Similarity {
     val dDim = headDim.head.getInt(0)
     require(dDim % m == 0, s"dim $dDim not divisible by m=$m")
     val sd = dDim / m
-    def subvOf(frame: DataFrame): DataFrame = frame
+    val subv = all
       .withColumn("sub_id", explode(sequence(lit(0), lit(m - 1))))
       .select(
         col("vec_id"),
@@ -1262,84 +1257,58 @@ object Similarity {
         slice(col("v"), col("sub_id") * sd + 1, lit(sd)).as("sv")
       )
       .localCheckpoint()
-    val subv = subvOf(all)
-    val subvTrain = if (trainOn == null || (trainOn eq all)) subv else subvOf(trainOn)
-    // MAP-ONLY subspace argmin (argmaxCell's fold, applied to the PQ
-    // assign): the codebooks fold to ONE row per sub_id carrying all
-    // ks (cluster, centroid) entries, and each subvector row picks
-    // its code via array_min over a transform — lexicographic struct
-    // order (d2 asc, then cluster asc) reproduces the former
-    // row_number-over-(vec_id, sub_id) window's tiebreak exactly
-    // (both rank NaN above any double). The window formulation
-    // exchanged and globally SORTED all n·m·ks scored rows — sv and
-    // centroid payloads included — once per Lloyd iteration and once
-    // more to encode; this shape has NO exchange on the corpus at
-    // all. Measured (ProbePqAssign, interleaved in one JVM, results
-    // checksum-identical, round 15): fold 1.57/1.41 s vs window
-    // 2.04/2.53 s vs a min_by partial-agg middle form 2.01/1.91 s at
-    // sf1 (two windows); at sf0.1 fold 1.19 vs window 1.42. The HOF
-    // lambda evaluates dist2 interpreted and the codebook fold adds a
-    // tiny shuffle inside each broadcast build — both costs measured
-    // SMALLER than the corpus exchange they replace at every SF
-    // tried, and the gap widens with scale exactly as §2.3-§2.4
-    // predict (the exchange is linear in n·m·ks, the fold's overhead
-    // is per-broadcast fixed).
-    def argminCode(frame: DataFrame, cents: DataFrame): DataFrame = {
-      val folded = cents
-        .groupBy("sub_id")
-        .agg(collect_list(struct(col("cluster"), col("centroid"))).as("cs"))
-      frame
-        .join(broadcast(folded), Seq("sub_id"))
-        .withColumn(
-          "w",
-          array_min(
-            transform(
-              col("cs"),
-              c =>
-                struct(
-                  vectors.dist2(col("sv"), c.getField("centroid")).as("d2"),
-                  c.getField("cluster").as("cluster")
-                )
-            )
-          )
-        )
+    // Codebooks train on the driver (kmeans' rule): the training set is
+    // collected once as full (vec_id, v) rows — at most TrainCapVectors
+    // of them — sliced into the m subspaces locally, and each subspace
+    // runs LocalKernels.lloyd's L2 argmin from the first ks training
+    // vectors as seeds.
+    val train = collectTrainingSet(if (trainOn == null) all else trainOn, ks)
+    val codebooks = (0 until m).flatMap { sub =>
+      val rows = train.map(v =>
+        java.util.Arrays.copyOfRange(v, math.min(sub * sd, v.length),
+          math.min((sub + 1) * sd, v.length)))
+      val (ids, cs) = LocalKernels.lloyd(rows, ks, iters, cosine = false)
+      ids.indices.map(i => Row(sub, ids(i), cs(i)))
     }
-    // Seeds: the first ks TRAINING vectors' subvectors, per subspace.
-    // Seed and per-iteration codebooks checkpoint LAZILY (kmeans'
-    // round-15 fusion): the next step's broadcast build materializes
-    // the blocks, so no Lloyd step pays a dedicated job.
-    var cents = subvTrain
-      .withColumn(
-        "cluster",
-        row_number().over(Window.partitionBy("sub_id").orderBy("vec_id")) - 1
-      )
-      .filter(col("cluster") < ks)
-      .select(col("sub_id"), col("cluster"), col("sv").as("centroid"))
-      .localCheckpoint(false)
-    var i = 0
-    while (i < iters) {
-      val assigned = argminCode(subvTrain, cents)
-        .select(col("sub_id"), col("w.cluster").as("cluster"), col("sv"))
-      cents = assigned
-        .select(
-          col("sub_id"),
-          col("cluster"),
-          posexplode(col("sv")).as(Seq("pos", "x"))
-        )
-        .groupBy("sub_id", "cluster", "pos")
-        .agg(avg("x").as("c"))
-        .groupBy("sub_id", "cluster")
-        .agg(
+    val cents = all.sparkSession.createDataFrame(
+      java.util.Arrays.asList(codebooks: _*),
+      StructType(Seq(
+        StructField("sub_id", IntegerType, nullable = false),
+        StructField("cluster", IntegerType),
+        StructField("centroid", ArrayType(DoubleType), nullable = false)
+      ))
+    )
+    // MAP-ONLY encode (argmaxCell's fold, applied to the PQ argmin):
+    // the codebooks fold to ONE row per sub_id carrying all ks
+    // (cluster, centroid) entries, and each subvector row picks its
+    // code via array_min over a transform — lexicographic struct order
+    // (d2 asc, then cluster asc) is the training argmin's tiebreak and
+    // the former row_number-over-(vec_id, sub_id) window's (both rank
+    // NaN above any double). The window formulation exchanged and
+    // globally SORTED all n·m·ks scored rows, sv and centroid payloads
+    // included; this shape has NO exchange on the corpus at all.
+    // Measured (round 15, interleaved in one JVM, results
+    // checksum-identical): fold 1.57/1.41 s vs window 2.04/2.53 s at
+    // sf1 (two windows); at sf0.1 fold 1.19 vs window 1.42.
+    val folded = cents
+      .groupBy("sub_id")
+      .agg(collect_list(struct(col("cluster"), col("centroid"))).as("cs"))
+    val codes = subv
+      .join(broadcast(folded), Seq("sub_id"))
+      .select(
+        col("vec_id"),
+        col("sub_id"),
+        array_min(
           transform(
-            array_sort(collect_list(struct(col("pos"), col("c")))),
-            s => s.getField("c")
-          ).as("centroid")
-        )
-        .localCheckpoint(false)
-      i += 1
-    }
-    val codes = argminCode(subv, cents)
-      .select(col("vec_id"), col("sub_id"), col("w.cluster").as("cluster"))
+            col("cs"),
+            c =>
+              struct(
+                vectors.dist2(col("sv"), c.getField("centroid")).as("d2"),
+                c.getField("cluster").as("cluster")
+              )
+          )
+        ).getField("cluster").as("cluster")
+      )
     (subv, cents, codes)
   }
 
@@ -1586,16 +1555,12 @@ object Similarity {
       iters: Int = 2,
       salts: Int = 32
   ): DataFrame = {
-    // all IS checkpointed (one job): the lazy train below references
-    // it once per Lloyd iteration plus once for scoring — uncached,
-    // re-decoding the parquet scan per reference measured SLOWER
-    // (3.1 s vs 2.0 s) than the one checkpoint job it saves.
+    // all IS checkpointed (one job): the training collect and the
+    // scoring pass both read it, and re-decoding the parquet scan per
+    // reference measured SLOWER than the one checkpoint job it saves.
     val all = vecs(lake).localCheckpoint()
-    // Lazy train: the whole Lloyd chain folds into the scoring job
-    // below (see kmeans's materialize note) — at nlist=10 the
-    // recompute is noise and the saved job floors are not.
     val nlistEff = resolveNlist(all, nlist)
-    val cents = kmeans(all, nlistEff, iters, materialize = false)
+    val cents = kmeans(all, nlistEff, iters)
     // ONE centroid-scoring pass serves both roles: rank 1 is the home
     // assignment (argmaxCell's tiebreak — best ccos, then lowest
     // cluster), ranks 1..nprobe are the probe set. Materialized once
@@ -1612,8 +1577,8 @@ object Similarity {
     // cluster))) is exactly the window's (ccos desc, cluster asc)
     // order including the NaN-first-under-desc rule (ascending sort
     // puts NaN last; reversed, first), and posexplode's pos+1 is
-    // row_number. ProbePqAssign pinned the fold-vs-window trade at
-    // two SFs; sim11's standalone min-of-5 read 2.40 s before /
+    // row_number. The PQ encode's fold-vs-window A/B pinned the trade
+    // at two SFs; sim11's standalone min-of-5 read 2.40 s before /
     // 1.98 s after across windows (suite point 2.12), and the
     // exchange the fold deletes grows as n^1.5 · |v| while the fold's
     // cost stays the same n·nlist scorings the window already paid.

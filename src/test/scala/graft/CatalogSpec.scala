@@ -67,11 +67,15 @@ class CatalogSpec extends AnyFunSuite {
     val before = footprint(path)
     assert(before > 0)
     spark.sql("DROP TABLE trade.nation")
-    assert(path.exists() && footprint(path) == before,
-      "DROP TABLE deleted external parquet data")
-    // restore the catalog for later tests (drop tripped nothing on disk,
-    // so a forced re-register rebuilds the exact same objects)
-    lake.registerViews(force = true)
+    try {
+      assert(path.exists() && footprint(path) == before,
+        "DROP TABLE deleted external parquet data")
+    } finally {
+      // restore the catalog for later tests even if the check failed
+      // (drop tripped nothing on disk, so a forced re-register rebuilds
+      // the exact same objects)
+      lake.registerViews(force = true)
+    }
     assert(spark.sql("SELECT COUNT(*) FROM trade.nation").head().getLong(0) == 25)
   }
 

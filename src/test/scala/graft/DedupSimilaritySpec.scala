@@ -100,8 +100,8 @@ class DedupSimilaritySpec extends AnyFunSuite {
       (20L, 21L), (21L, 22L), (20L, 22L),
       (30L, 31L)
     ).toDF("doc_a", "doc_b")
-    val labels = Dedup
-      .connectedComponents(pairs)
+    val labels = DedupSimilaritySpec
+      .propagateLabels(pairs)
       .collect()
       .map(r => (r.getLong(0), r.getLong(1)))
       .toMap
@@ -113,27 +113,41 @@ class DedupSimilaritySpec extends AnyFunSuite {
 
   test("star CC labels equal min-label propagation on chains, triangles, and real pairs") {
     import spark.implicits._
+    import org.apache.spark.sql.functions.{col, greatest, least}
     val planted = Seq(
       (10L, 11L), (11L, 12L), (12L, 13L), (13L, 14L),
       (20L, 21L), (21L, 22L), (20L, 22L),
-      (30L, 31L),
+      (30L, 31L), (30L, 30L),
       // a star already rooted high: exercises the re-rooting path
-      (50L, 41L), (50L, 42L), (50L, 43L)
+      (50L, 41L), (50L, 42L), (50L, 43L), (43L, 41L)
     ).toDF("doc_a", "doc_b")
-    def asMap(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    assert(
-      asMap(Dedup.connectedComponentsStar(planted)) ==
-        asMap(Dedup.connectedComponents(planted))
-    )
     val real = Dedup
       .dedup04MinhashLsh(lake)
       .select("doc_a", "doc_b")
       .localCheckpoint()
-    assert(
-      asMap(Dedup.connectedComponentsStar(real)) ==
-        asMap(Dedup.connectedComponents(real))
-    )
+    def asMap(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+    for ((name, pairs) <- Seq("planted" -> planted, "minhash" -> real)) {
+      val expected = asMap(DedupSimilaritySpec.propagateLabels(pairs))
+      // The union-find cutover at 0 (star rounds only), mid-loop and
+      // unbounded. Live edges start at E0 and never drop below the
+      // spanning-forest size F (rounds preserve components), so a
+      // cutover at F runs at least one star round when E0 > F, then
+      // finishes in the union-find.
+      val e0 = pairs
+        .select(greatest(col("doc_a"), col("doc_b")).as("u"),
+          least(col("doc_a"), col("doc_b")).as("v"))
+        .filter(col("u") =!= col("v"))
+        .distinct()
+        .count()
+      val f = expected.count { case (u, l) => u != l }.toLong
+      assert(e0 > f, s"$name: the graph needs a cycle for a mid-loop cutover")
+      for (cut <- Seq(0L, f, Long.MaxValue)) {
+        assert(
+          asMap(Dedup.connectedComponentsStar(pairs, localEdges = cut)) == expected,
+          s"$name: cutover at $cut disagrees with plain propagation")
+      }
+    }
   }
 
   test("dedup08 clusters cover exactly the minhash pair nodes, one survivor each") {
@@ -1292,5 +1306,53 @@ class DedupSimilaritySpec extends AnyFunSuite {
     val ru = recall(uniform, refined = true)
     assert(rc >= ru, s"clustered refined recall $rc < uniform $ru")
     assert(rc >= 0.8, s"clustered refined recall unusable: $rc")
+  }
+}
+
+object DedupSimilaritySpec {
+  import org.apache.spark.sql.DataFrame
+  import org.apache.spark.sql.functions._
+
+  /** Reference connected components over an undirected pair list
+    * (doc_a, doc_b): returns (u, lbl) where lbl is the smallest node id
+    * reachable from u, by plain min-label propagation — one hop per
+    * round until sum(lbl) is stable, so it converges in
+    * component-diameter rounds. The yardstick the star-CC rounds and
+    * their union-find cutover are checked against. */
+  def propagateLabels(pairs: DataFrame, maxIters: Int = 20): DataFrame = {
+    val edges = pairs
+      .select(col("doc_a").as("u"), col("doc_b").as("v"))
+      .unionAll(pairs.select(col("doc_b").as("u"), col("doc_a").as("v")))
+    var labels = edges
+      .select(col("u"))
+      .distinct()
+      .select(col("u"), col("u").as("lbl"))
+      .localCheckpoint(false)
+    // sum over ZERO rows is SQL null: an empty pair list reads as 0
+    def checksum(df: DataFrame): Long = {
+      val r = df.agg(sum("lbl")).head()
+      if (r.isNullAt(0)) 0L else r.getLong(0)
+    }
+    var prevSum = checksum(labels)
+    var converged = labels.isEmpty
+    var iter = 0
+    while (!converged && iter < maxIters) {
+      val neighborMin = edges
+        .join(labels.select(col("u").as("v"), col("lbl").as("vlbl")), "v")
+        .groupBy("u")
+        .agg(min("vlbl").as("nlbl"))
+      labels = labels
+        .join(neighborMin, Seq("u"), "left")
+        .select(
+          col("u"),
+          least(col("lbl"), coalesce(col("nlbl"), col("lbl"))).as("lbl")
+        )
+        .localCheckpoint(false)
+      val s = checksum(labels)
+      converged = s == prevSum
+      prevSum = s
+      iter += 1
+    }
+    labels
   }
 }
