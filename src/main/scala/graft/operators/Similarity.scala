@@ -394,21 +394,15 @@ object Similarity {
     * (build_embedding_linkage.py's index build analog).
     *
     * Training runs on the driver: the training set is collected once
-    * as (vec_id, v) — at most `TrainCapVectors` vectors, see
+    * as (vec_id, v) — at most `TrainCapBytes` of vectors, see
     * `collectTrainingSet` — and Lloyd runs as one local loop
     * (`LocalKernels.lloyd`, the same arithmetic as the Spark
     * expressions). A distributed Lloyd step costs several jobs for
     * n × k scorings that take microseconds, so the per-job floor was
     * the whole training cost. Returns a k-row local frame
     * (cluster, centroid), so consumers plan it like any small table. */
-  def kmeans(
-      all: DataFrame,
-      k: Int = 10,
-      iters: Int = 3,
-      // overridable so specs can force the sampled path at test scale
-      trainCap: Int = TrainCapVectors
-  ): DataFrame = {
-    val rows = collectTrainingSet(all, k, trainCap)
+  def kmeans(all: DataFrame, k: Int = 10, iters: Int = 3): DataFrame = {
+    val rows = collectTrainingSet(all, k)
     val (ids, cents) = LocalKernels.lloyd(rows, k, iters, cosine = true)
     all.sparkSession.createDataFrame(
       java.util.Arrays.asList(ids.indices.map(i => Row(ids(i), cents(i))): _*),
@@ -420,8 +414,10 @@ object Similarity {
   }
 
   /** Driver-side training cap: a quantizer trains on at most this many
-    * vectors (64 MB of doubles at dim 64). */
-  private[graft] val TrainCapVectors: Int = 1 << 17
+    * bytes of raw vector doubles, 2^17 vectors at dim 64. The vector
+    * count follows from the dimension, so wider embeddings train on
+    * fewer vectors and the driver's share stays the same. */
+  private[graft] val TrainCapBytes: Long = 64L << 20
 
   /** trainEvery's deterministic sample: the xxhash64(vec_id) stripe of
     * stride `every` — a pure function of vec_id, no RNG. */
@@ -429,31 +425,57 @@ object Similarity {
     frame.filter(pmod(xxhash64(col("vec_id")), lit(every)) === 0)
 
   /** The training set of a driver-local Lloyd loop: the non-null
-    * vectors of `frame` in vec_id order. At most `cap` vectors are
-    * kept (never fewer than the `minRows` seeds the codebook needs);
-    * the first job reads at most cap + 1 rows, so at or below the cap
-    * it is the only job. Above the cap the set is trainEvery's
-    * xxhash64 stripe with stride ⌈n/cap⌉ (about `cap` vectors); a
-    * stripe too small to seed `minRows` clusters falls back to the
-    * first rows read, so a sampled codebook is never degenerate. */
+    * vectors of `frame` in vec_id order. `capBytes` becomes a vector
+    * cap at the widest dimension (never fewer than the `minRows` seeds
+    * the codebook needs). At or below the cap the whole set trains.
+    * Above it the set is trainEvery's xxhash64 stripe with stride
+    * ⌈n/cap⌉ (about `cap` vectors); a stripe too small to seed
+    * `minRows` clusters falls back to the first `cap` rows read, so a
+    * sampled codebook is never degenerate.
+    *
+    * One job counts the rows and reads the widest dimension; each
+    * partition also ships its rows while they fit its 1/P share of
+    * `capBytes`, so a set below the cap usually needs no second job.
+    * That job brings the driver at most the cap; the stripe, about the
+    * cap; neither is held while the other is collected. */
   private[graft] def collectTrainingSet(
       frame: DataFrame,
       minRows: Int,
-      cap: Int = TrainCapVectors
+      capBytes: Long = TrainCapBytes
   ): Array[Array[Double]] = {
-    val capEff = math.max(cap, minRows)
-    val vs = frame.select(col("vec_id"), col("v")).filter(col("v").isNotNull)
-    val head = vs.limit(capEff + 1).collect()
-    val picked =
-      if (head.length <= capEff) head
-      else {
-        val every = math.ceil(vs.count().toDouble / capEff).toLong
-        val sample = stripe(vs, every).collect()
-        if (sample.length >= minRows) sample else head
+    val vs = frame
+      .select(col("vec_id").cast("long"), col("v"))
+      .filter(col("v").isNotNull)
+    def rowsOf(df: DataFrame): Array[(Long, Array[Double])] =
+      df.collect().map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
+    val rdd = vs.queryExecution.toRdd
+    val share = capBytes / math.max(rdd.getNumPartitions, 1)
+    // per partition: (row count, widest dim, its rows or null past the share)
+    val parts = rdd.mapPartitions { it =>
+      val kept = Array.newBuilder[(Long, Array[Double])]
+      var n = 0L
+      var dim = 0
+      var bytes = 0L
+      it.foreach { r =>
+        val v = r.getArray(1).toDoubleArray()
+        n += 1
+        dim = math.max(dim, v.length)
+        bytes += 8L * v.length
+        if (bytes <= share) kept += ((r.getLong(0), v))
       }
-    picked
-      .sortBy(_.getAs[Number](0).longValue)
-      .map(_.getSeq[Double](1).toArray)
+      Iterator((n, dim, if (bytes <= share) kept.result() else null))
+    }.collect()
+    val n = parts.map(_._1).sum
+    val dim = parts.map(_._2).foldLeft(1)(math.max)
+    val cap = math.max(capBytes / (8L * dim), minRows.toLong)
+    val picked =
+      if (n <= cap && parts.forall(_._3 != null)) parts.flatMap(_._3)
+      else if (n <= cap) rowsOf(vs)
+      else {
+        val sample = rowsOf(stripe(vs, math.ceil(n.toDouble / cap).toLong))
+        if (sample.length >= minRows) sample else rowsOf(vs.limit(cap.toInt))
+      }
+    picked.sortBy(_._1).map(_._2)
   }
 
   /** Spherical k-means objective Σ cos(v, centroid of assigned cell)
@@ -944,7 +966,9 @@ object Similarity {
     * sample is
     * a pure function of vec_id (xxhash64 stripe), no RNG — and
     * trainEvery=1 is bit-identical to the historical build (the
-    * oracle form). A sample that misses the corpus entirely (tiny
+    * oracle form) as long as the training set fits `TrainCapBytes`;
+    * above that cap `collectTrainingSet` stripes it even at
+    * trainEvery=1. A sample that misses the corpus entirely (tiny
     * corpus, aggressive stride) falls back to full-corpus training
     * rather than an empty codebook. */
   private def ivfPqBuild(
@@ -1258,7 +1282,7 @@ object Similarity {
       )
       .localCheckpoint()
     // Codebooks train on the driver (kmeans' rule): the training set is
-    // collected once as full (vec_id, v) rows — at most TrainCapVectors
+    // collected once as full (vec_id, v) rows — at most TrainCapBytes
     // of them — sliced into the m subspaces locally, and each subspace
     // runs LocalKernels.lloyd's L2 argmin from the first ks training
     // vectors as seeds.

@@ -7,12 +7,15 @@ package graft.plans
   * edge set is small (Kiveris et al., SoCC 2014). Callers own the caps;
   * these kernels only see arrays that already fit.
   *
-  * The Lloyd arithmetic replays the Spark expressions of the
-  * distributed form it replaces, operator for operator: VectorDot's
-  * sequential fold, `cos = dot / (norm·norm)` with `norm = sqrt(dot)`,
+  * The Lloyd arithmetic matches the Spark expressions of the
+  * distributed form it replaces per expression: VectorDot's sequential
+  * fold, `cos = dot / (norm·norm)` with `norm = sqrt(dot)`,
   * `dist2 = dot(a,a) − 2·dot(a,b) + dot(b,b)`, Spark's double ordering
   * (NaN greatest, −0.0 equal to 0.0), ties to the lowest cluster id,
-  * and the `avg` mean (sum in row order, then one division). A cluster
+  * and the `avg` mean (one sum, then one division). The mean sums in
+  * vec_id order; Spark's `avg` adds per-partition partial sums in
+  * shuffle order, so the two agree bit for bit only on a single
+  * partition and may differ in the last bits otherwise. A cluster
   * that wins no row disappears, as it does under `groupBy`.
   */
 object LocalKernels {

@@ -69,25 +69,55 @@ class LocalKernelsSpec extends AnyFunSuite {
   test("training cap: the sampled path is deterministic and never seeds fewer than k") {
     val all = Similarity.vecs(lake).localCheckpoint()
     val n = all.count()
+    val dim = all.select(size(col("v"))).head().getInt(0)
     val full = Similarity.collectTrainingSet(all, 4)
     assert(full.length == n, "below the cap the whole frame trains")
-    for (cap <- Seq(1, 3, (n / 2).toInt)) {
-      val k = 4
-      val rows = Similarity.collectTrainingSet(all, k, cap)
-      assert(rows.length >= k, s"cap $cap: ${rows.length} rows cannot seed $k clusters")
-      assert(rows.length < n, s"cap $cap: nothing was sampled")
-      val again = Similarity.collectTrainingSet(all, k, cap)
-      assert(rows.map(_.toSeq).toSeq == again.map(_.toSeq).toSeq, s"cap $cap: not deterministic")
-      val seeds = Similarity.kmeans(all, k, 0, trainCap = cap)
-      assert(seeds.count() == k, s"cap $cap: degenerate codebook")
-      val cents = Similarity.kmeans(all, k, 2, trainCap = cap).collect()
-      assert(cents.nonEmpty && cents.length <= k)
-      assert(cents.forall(_.getSeq[Double](1).forall(x => !x.isNaN)))
+    val k = 4
+    // caps in vectors, turned into bytes at the frame's dimension
+    for (capRows <- Seq(1L, 3L, n / 2)) {
+      val rows = Similarity.collectTrainingSet(all, k, capRows * 8 * dim)
+      assert(rows.length >= k, s"cap $capRows: ${rows.length} rows cannot seed $k clusters")
+      assert(rows.length < n, s"cap $capRows: nothing was sampled")
+      val again = Similarity.collectTrainingSet(all, k, capRows * 8 * dim)
+      assert(rows.map(_.toSeq).toSeq == again.map(_.toSeq).toSeq, s"cap $capRows: not deterministic")
+      val (seeds, _) = LocalKernels.lloyd(rows, k, 0, cosine = true)
+      assert(seeds.length == k, s"cap $capRows: degenerate codebook")
+      val (ids, cents) = LocalKernels.lloyd(rows, k, 2, cosine = true)
+      assert(ids.nonEmpty && ids.length <= k)
+      assert(cents.forall(_.forall(x => !x.isNaN)))
     }
   }
 
+  test("training cap: the vector count follows the dimension") {
+    // the same byte cap admits 16x fewer vectors at 16x the width
+    val n = 400
+    def frame(dim: Int) = spark.range(n).select(
+      col("id").as("vec_id"),
+      transform(sequence(lit(1), lit(dim)), p => (col("id") * p % 7).cast("double")).as("v"))
+    val capBytes = 8L * 64 * 200
+    // 200 vectors fit at dim 64: a stride-2 stripe of the 400
+    val narrow = Similarity.collectTrainingSet(frame(64), 4, capBytes)
+    assert(narrow.length >= 100 && narrow.length <= 300, s"${narrow.length} narrow vectors")
+    // 12 fit at dim 1024: a stride-34 stripe of the 400
+    val wide = Similarity.collectTrainingSet(frame(64 * 16), 4, capBytes)
+    assert(wide.forall(_.length == 64 * 16))
+    assert(wide.length >= 4 && wide.length <= 24, s"${wide.length} wide vectors")
+    // all 400 fit 8·64·400 bytes, but two skewed partitions each
+    // overflow their 1/4 share: the set is still collected whole
+    val fits = 8L * 64 * n
+    val skewed = frame(64).repartition(4, col("vec_id") % 2)
+    val whole = Similarity.collectTrainingSet(skewed, 4, fits)
+    assert(whole.map(_.toSeq).toSeq ==
+      Similarity.collectTrainingSet(frame(64).coalesce(1), 4, fits).map(_.toSeq).toSeq)
+    assert(whole.length == n)
+  }
+
+  // The references below run on ONE partition in vec_id order: there
+  // Spark's avg sums in row order, as the local kernel does, so the
+  // comparison can be exact. Across partitions avg merges partial sums
+  // in shuffle order and may differ in the last bits.
   test("local kmeans equals the distributed Lloyd steps it replaced") {
-    val all = Similarity.vecs(lake).localCheckpoint()
+    val all = Similarity.vecs(lake).orderBy("vec_id").coalesce(1).localCheckpoint()
     def asMap(df: DataFrame) =
       df.collect().map(r => r.getInt(0) -> r.getSeq[Double](1)).toMap
     for (iters <- Seq(0, 1, 3)) {
@@ -99,7 +129,8 @@ class LocalKernelsSpec extends AnyFunSuite {
   }
 
   test("local PQ codebooks equal the distributed per-subspace Lloyd steps they replaced") {
-    val (subv, cents, _) = Similarity.pqTrain(lake, 8, 4, 2)
+    val (subv0, cents, _) = Similarity.pqTrain(lake, 8, 4, 2)
+    val subv = subv0.orderBy("sub_id", "vec_id").coalesce(1)
     def asMap(df: DataFrame) =
       df.collect().map(r => (r.getInt(0), r.getInt(1)) -> r.getSeq[Double](2)).toMap
     assert(asMap(cents) == asMap(LocalKernelsSpec.distributedPq(subv, 4, 2)))
