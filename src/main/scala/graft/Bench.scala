@@ -1,6 +1,37 @@
 package graft
 import org.apache.spark.sql.SparkSession
 object Bench {
+  /** Untimed warmup: JVM/codegen spin-up and file-index listing are
+    * session costs, not per-query costs; without this the first
+    * query measured pays ~3-5s of one-time overhead. */
+  private[graft] def warmUp(spark: SparkSession, sfDir: String): Unit = {
+    val lake = graft.catalog.Lake(spark, sfDir)
+    // Full noop materialization, not count(): count() is answered
+    // from parquet metadata and never decodes the wide string/array
+    // columns, so whichever query touched documents/embeddings first
+    // was silently billed the one-time cold decompression.
+    lake.tableNames.foreach { n =>
+      lake.resolve(n).write.mode("overwrite").format("noop").save()
+    }
+    spark.range(1000).selectExpr("sum(id)").collect()
+  }
+
+  /** Clear session + RDD caches AFTER the clock stops, BLOCKING
+    * (round-13 review, two lessons): an operator that persists
+    * internally (dedup13's repartitioned gram stream) must not
+    * serve sweep N+1 from sweep N's cache — min-of-sweeps would
+    * record a cache hit, not the query — and leaked entries pin
+    * storage against later queries (one ingredient in sim11's
+    * sf10 allocation failure). Clearing BEFORE the run with async
+    * unpersist was measured +23% on the whole sf0.1 suite: the
+    * block-removal work landed inside the next query's timed
+    * window. After + blocking keeps cleanup off the clock. */
+  private[graft] def releaseCaches(spark: SparkSession): Unit = {
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values
+      .foreach(_.unpersist(blocking = true))
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -12,24 +43,9 @@ object Bench {
     // query two more chances to land outside the window; reversal
     // (below) decorrelates which queries it covers.
     val sweeps = sys.env.getOrElse("SPARK_GRAFT_SWEEPS", "3").toInt
-    val spark = GraftSession
-      .configure(SparkSession.builder().master(s"local[$cpus]"), cpus.toInt)
-      .getOrCreate()
+    val spark = GraftSession.local(cpus.toInt, cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
-    // Untimed warmup: JVM/codegen spin-up and file-index listing are
-    // session costs, not per-query costs; without this the first
-    // query measured pays ~3-5s of one-time overhead.
-    locally {
-      val lake = graft.catalog.Lake(spark, sfDir)
-      // Full noop materialization, not count(): count() is answered
-      // from parquet metadata and never decodes the wide string/array
-      // columns, so whichever query touched documents/embeddings first
-      // was silently billed the one-time cold decompression.
-      lake.tableNames.foreach { n =>
-        lake.resolve(n).write.mode("overwrite").format("noop").save()
-      }
-      spark.range(1000).selectExpr("sum(id)").collect()
-    }
+    warmUp(spark, sfDir)
     // >=2 sweeps, report the per-query MIN: this machine's background
     // virtualization noise hits contiguous multi-second windows (r2's
     // bench showed one stretch elevated ~4-6x vs a clean run of the
@@ -84,19 +100,7 @@ object Bench {
           if (!failedElapsed.contains(name) || dt < failedElapsed(name))
             failedElapsed(name) = dt
       }
-      // Clear session + RDD caches AFTER the clock stops, BLOCKING
-      // (round-13 review, two lessons): an operator that persists
-      // internally (dedup13's repartitioned gram stream) must not
-      // serve sweep N+1 from sweep N's cache — min-of-sweeps would
-      // record a cache hit, not the query — and leaked entries pin
-      // storage against later queries (one ingredient in sim11's
-      // sf10 allocation failure). Clearing BEFORE the run with async
-      // unpersist was measured +23% on the whole sf0.1 suite: the
-      // block-removal work landed inside the next query's timed
-      // window. After + blocking keeps cleanup off the clock.
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
+      releaseCaches(spark)
     }
     // Alternate sweeps run in reverse order: this box's background
     // noise arrives in contiguous multi-second windows, so two sweeps

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale experiment for the PageRank crossover claim (BASELINE.md):
@@ -18,9 +17,7 @@ object BenchGraphScale {
     val ks = if (args.nonEmpty) args.map(_.toInt).toSeq else Seq(1, 4, 16)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession
-      .configure(SparkSession.builder().master(s"local[$cpus]"), cpus.toInt)
-      .getOrCreate()
+    val spark = GraftSession.local(cpus.toInt, cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
     val lake = graft.catalog.Lake(spark, sfDir)
     // Base pairs once (same construction as graph06, long ids).

@@ -1,18 +1,49 @@
 package graft
+
+import java.util.concurrent.atomic.AtomicLong
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** Local perf iteration: time a handful of queries by name without
-  * paying for the whole 105-query sweep. Same measurement discipline
-  * as Bench (noop sink, untimed warmup, min of N sweeps).
+  * paying for the whole suite. Same measurement discipline as Bench
+  * (its warm-up, noop sink, blocking cache release after each sweep,
+  * min of N sweeps).
+  *
+  * Each line also carries the last sweep's jobs, stages, tasks and
+  * task run time. Every Spark job pays a fixed scheduling floor
+  * (~0.1-0.3 s in local mode), so for the iterative operators the job
+  * count is the cost model; unlike wall clock it does not move with
+  * background load, which makes it the way to A/B a driver-loop
+  * change across two builds.
   *
   * usage: graft.BenchOne <query> [query ...]
-  * env:   SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS, SPARK_GRAFT_SWEEPS
+  * env:   SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS, SPARK_GRAFT_SWEEPS,
+  *        SPARK_GRAFT_MASTER
   */
 object BenchOne {
+
+  /** Jobs started, stages completed, their tasks and task run time
+    * (ms) since the last reset. */
+  private final class Counters extends SparkListener {
+    val jobs, stages, tasks, taskMs = new AtomicLong
+    override def onJobStart(j: SparkListenerJobStart): Unit =
+      jobs.incrementAndGet()
+    override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
+      stages.incrementAndGet()
+      tasks.addAndGet(s.stageInfo.numTasks)
+      taskMs.addAndGet(s.stageInfo.taskMetrics.executorRunTime)
+    }
+    def reset(): Unit = Seq(jobs, stages, tasks, taskMs).foreach(_.set(0))
+    def summary: String =
+      f"jobs=${jobs.get}%3d stages=${stages.get}%3d tasks=${tasks.get}%4d task_s=${taskMs.get / 1000.0}%.2f"
+  }
+
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: graft.BenchOne <query> [query ...]")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val sweeps = sys.env.getOrElse("SPARK_GRAFT_SWEEPS", "3").toInt
     // SPARK_GRAFT_MASTER overrides the in-process master — the
     // multi-executor validation knob: `local-cluster[4,8,8192]` runs
@@ -26,49 +57,38 @@ object BenchOne {
     // $SPARK_HOME/launcher/target, a source-tree layout the binary
     // distro lacks); application classes reach the executors via
     // extraClassPath (same box).
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val builder = SparkSession.builder().master(master)
-    if (master.startsWith("local-cluster")) {
-      val classes = new java.io.File("target/scala-2.13/classes").getAbsolutePath
-      builder
-        .config("spark.executor.extraClassPath", classes)
-        .config("spark.executor.memory",
-          sys.env.getOrElse("SPARK_GRAFT_EXEC_MEM", "8g"))
+    val spark = sys.env.get("SPARK_GRAFT_MASTER") match {
+      case None => GraftSession.local(cpus, cpus)
+      case Some(master) =>
+        val builder = SparkSession.builder().master(master)
+        if (master.startsWith("local-cluster")) {
+          val classes = new java.io.File("target/scala-2.13/classes").getAbsolutePath
+          builder
+            .config("spark.executor.extraClassPath", classes)
+            .config("spark.executor.memory",
+              sys.env.getOrElse("SPARK_GRAFT_EXEC_MEM", "8g"))
+        }
+        GraftSession.configure(builder, cpus).getOrCreate()
     }
-    val spark = GraftSession
-      .configure(builder, cpus.toInt)
-      .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val lake = graft.catalog.Lake(spark, sfDir)
-    lake.tableNames.foreach { n =>
-      lake.resolve(n).write.mode("overwrite").format("noop").save()
-    }
-    // Caches are released after each sweep's clock stops — DEFAULT ON
-    // since round 13, matching graft.Bench: an operator that persists
-    // internally (dedup13's repartitioned stream) would otherwise
-    // serve sweep N+1 from sweep N's cache and min-of-sweeps records
-    // a cache hit, not the query; accumulated storage also evicts
-    // later sweeps' blocks at scale (observed 48 s -> 271 s ASCENDING
-    // sweeps on dedup10 at sf10). SPARK_GRAFT_CLEAR=0 opts out for
-    // warm-cache experiments.
-    val clearPerSweep = !sys.env.get("SPARK_GRAFT_CLEAR").contains("0")
+    Bench.warmUp(spark, sfDir)
+    val counters = new Counters
+    spark.sparkContext.addSparkListener(counters)
     for (name <- args) {
       val fn = SparkEntry.queries(name)
+      var last = ""
       val times = (1 to sweeps).map { _ =>
+        Bridge.drainListeners(spark.sparkContext)
+        counters.reset()
         val t0 = System.nanoTime()
         fn(spark, sfDir).write.mode("overwrite").format("noop").save()
         val dt = (System.nanoTime() - t0) / 1e9
-        if (clearPerSweep) {
-          // blocking: async block removal would land inside the next
-          // sweep's timed window (measured +23% on the sf0.1 suite
-          // when Bench cleared async — same lesson)
-          spark.sharedState.cacheManager.clearCache()
-          spark.sparkContext.getPersistentRDDs.values
-            .foreach(_.unpersist(blocking = true))
-        }
+        Bridge.drainListeners(spark.sparkContext)
+        last = counters.summary
+        Bench.releaseCaches(spark)
         dt
       }
-      println(f"$name%-30s min=${times.min}%.3f  all=${times.map(t => f"$t%.3f").mkString(",")}")
+      println(f"$name%-30s min=${times.min}%.3f  $last  all=${times.map(t => f"$t%.3f").mkString(",")}")
     }
     spark.stop()
   }

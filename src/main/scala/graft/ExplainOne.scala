@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Plan inspection for perf iteration: print the formatted physical
   * plan of any `SparkEntry.queries` entry without running it — the
@@ -11,9 +10,7 @@ import org.apache.spark.sql.SparkSession
 object ExplainOne {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = GraftSession
-      .configure(SparkSession.builder().master("local[8]"), 8)
-      .getOrCreate()
+    val spark = GraftSession.local(8, 8)
     spark.sparkContext.setLogLevel("WARN")
     for (name <- args) {
       println(s"===== $name")

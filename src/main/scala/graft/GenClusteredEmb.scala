@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Clustered-embedding generator (dev tooling, GenScale's sibling —
@@ -34,9 +33,7 @@ object GenClusteredEmb {
     val sigma = sStr.toDouble
     val dim = 64
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession
-      .configure(SparkSession.builder().master(s"local[$cpus]"), cpus.toInt)
-      .getOrCreate()
+    val spark = GraftSession.local(cpus.toInt, cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
     val df = spark

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-factor amplifier for the benchmark corpus (dev tooling, not
@@ -44,9 +44,7 @@ object GenScale {
     val k = kStr.toInt
     require(k >= 1, "k must be >= 1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession
-      .configure(SparkSession.builder().master(s"local[$cpus]"), cpus.toInt)
-      .getOrCreate()
+    val spark = GraftSession.local(cpus.toInt, cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
 
     def rd(t: String): DataFrame = spark.read.parquet(s"$src/$t.parquet")

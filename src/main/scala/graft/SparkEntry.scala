@@ -117,7 +117,7 @@ object SparkEntry {
     "graph05_hierarchy_rollup4" -> q(Graph.graph05HierarchyRollup4),
     // kernel form (round 15): bit-for-bit equal to the DataFrame loop
     // (integer mass; GraphSpec pins it), 0.41x at sf10 and alive at
-    // 8g where the SQL loop needed 24g standalone (ProbePagerank)
+    // 8g where the SQL loop needed 24g standalone (BASELINE round 15)
     "graph06_pagerank" -> q(Graph.graph06PagerankKernel(_)),
     "graph07_optional_filter" -> q(Graph.graph07OptionalFilter),
     "graph08_ancestor_paths" -> q(Graph.graph08AncestorPaths(_)),

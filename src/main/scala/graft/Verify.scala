@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -13,20 +12,10 @@ object Verify {
     // Optional name filter for local iteration (the driver always
     // passes exactly two args and gets the full dump).
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // SharedState creates the warehouse dir eagerly; anchor it under
-      // target/ (git-ignored) instead of scattering `spark-warehouse`
-      // into whatever cwd the verifier runs from.
-      .config(
-        "spark.sql.warehouse.dir",
-        new java.io.File("target/spark-warehouse").getAbsolutePath
-      )
-      .getOrCreate()
+    // The session the bench times: same broadcast threshold, pushdown
+    // and aggregate settings, so the oracle checks the benched plans.
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = GraftSession.local(cpus, cpus)
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries

@@ -252,8 +252,9 @@ final case class Lake(spark: SparkSession, dir: String) {
     // job EVERY time the view text was analyzed — at registration
     // (each derived view's analysis cascades through the base views it
     // references) and again per spark.sql query — ~58 pure-metadata
-    // jobs on a fresh session (ProbeViewJobs). A catalog table stores
-    // the StructType, so analysis is a catalog lookup: zero jobs. The
+    // jobs on a fresh session (OPTIMIZATION_r16.md). A catalog table
+    // stores the StructType, so analysis is a catalog lookup: zero
+    // jobs. The
     // schema comes from [[Lake.schemaFor]] (fingerprint-guarded, so a
     // rewritten table re-infers); `LOCATION` makes the table EXTERNAL —
     // DROP never touches the parquet files (CatalogSpec pins this).

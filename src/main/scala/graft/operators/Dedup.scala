@@ -746,8 +746,9 @@ object Dedup {
     // clean corpus. One max() over the df frame decides; any
     // boilerplate-frequent shingle flips to the capped + exact-verify
     // plan, the only shape that survives 100 TB. Measured (round 15):
-    // ProbeJobs 18 -> 9 jobs; BenchOne min-of-5 2.25 -> 1.97 s at
-    // sf0.1 across windows (suite point 2.92); oracle hash-PASS
+    // 18 -> 9 jobs (BASELINE round 15, optimization phase); BenchOne
+    // min-of-5 2.25 -> 1.97 s at sf0.1 across windows (suite point
+    // 2.92); oracle hash-PASS
     // unchanged on both branches (the capped branch stays spec-pinned
     // by the boilerplate-flood test).
     val maxObserved = dfs.agg(max("df")).head() match {

@@ -1235,7 +1235,8 @@ object Graph {
     * SFs; contrast the float-sum case, where this rewrite would not
     * be result-stable). Same SYMMETRIC-edges precondition.
     *
-    * Why it beats the SQL loop at scale (measured in ProbePagerank):
+    * Why it beats the SQL loop at scale (measured in BASELINE round
+    * 15, "graph06's loop re-kerneled"):
     *  - the edge side is ONE shuffle total: raw pairs hash-partition
     *    by src and become a per-partition (src, dst)-sorted primitive
     *    index; the caller-side `repartition(a,b).distinct()` exchange
@@ -1457,10 +1458,11 @@ object Graph {
     // caches: each level's join/distinct/anti-join exchanges plus
     // AQE's per-cache stage-materialization jobs put the sf0.1 run at
     // 37 jobs / 37 stages / 1300 tasks for milliseconds of kernel
-    // work (measured, ProbeGraphFloor) — 4.9-5.2 s of pure floors.
-    // Tried and refuted on the DataFrame side (ProbeBfsVariants, all
-    // sweeps-min at sf0.1): pre-partitioned edge cache 4.0 s,
-    // last-two-frontier anti-join 3.9 s, two-hop rounds 5.6 s,
+    // work (measured with a stage-level listener, BASELINE round 14)
+    // — 4.9-5.2 s of pure floors. Tried and refuted on the DataFrame
+    // side (same BASELINE round, all sweeps-min at sf0.1):
+    // pre-partitioned edge cache 4.0 s, last-two-frontier anti-join
+    // 3.9 s, two-hop rounds 5.6 s,
     // parallelismFirst=false 4.1 s, uncached frontiers 11.8 s — the
     // floor is the number of AQE query-stage materializations, which
     // no DataFrame shape can push below ~4/level. The co-partitioned

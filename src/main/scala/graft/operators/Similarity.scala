@@ -962,8 +962,8 @@ object Similarity {
     * anti-pattern at volume). Measured at sf30 (1.5M vectors,
     * trainEvery=16): build+search 55.3 → 15.7 s (3.5×) with recall
     * vs brute force unchanged — 0.34 vs 0.30 at ADC's lossy
-    * recall@10 (ProbeRecall; BASELINE round 12). Deterministic — the
-    * sample is
+    * recall@10 (BASELINE round 12, "quantizer training is now
+    * sample-bound"). Deterministic — the sample is
     * a pure function of vec_id (xxhash64 stripe), no RNG — and
     * trainEvery=1 is bit-identical to the historical build (the
     * oracle form) as long as the training set fits `TrainCapBytes`;

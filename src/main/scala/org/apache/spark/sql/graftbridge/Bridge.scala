@@ -28,5 +28,11 @@ object Bridge {
     ds.queryExecution.logical.collect {
       case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id
     }.toSet
+
+  /** Blocks until every queued listener event is delivered, so a
+    * listener's counters are complete when read (listenerBus is
+    * private[spark]). */
+  def drainListeners(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
 }
 

@@ -90,8 +90,9 @@ class PlanAuditSpec extends AnyFunSuite {
   }
 
   test("q04/q10: micro-join kernels are sort-free shuffled-hash shapes") {
-    // Round-13 kernels (BASELINE round 13, ProbeMicro at sf30): q04
-    // builds the SMALL date-filtered orders side and probes raw
+    // Round-13 kernels (BASELINE round 13, q04/q10 decade closure,
+    // sf30): q04 builds the SMALL date-filtered orders side and
+    // probes raw
     // lineitem keys (inner SHJ BuildLeft + countDistinct — the only
     // expressible small-side-build semi join; LeftSemi BuildLeft
     // doesn't exist in Spark 4.1); q10 aggregates by the long custkey

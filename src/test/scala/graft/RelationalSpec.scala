@@ -26,21 +26,30 @@ class RelationalSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("every query has matching oracle or is declared rows-only") {
     val missing = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet
-    // rows-only entries are allowed but must be flagged in SURVEY.md §2
     val surveyText = new String(
       java.nio.file.Files.readAllBytes(java.nio.file.Paths.get("SURVEY.md")),
       java.nio.charset.StandardCharsets.UTF_8
     )
-    missing.foreach { name =>
-      assert(surveyText.contains(name), s"$name missing from SURVEY.md")
-    }
+    val sec2 = surveyText
+      .split("## §2")(1)
+      .split("## §3")(0)
+    // A query without an oracle is allowed only if its own §2
+    // checklist line declares it `[rows-only]`, and a declared line
+    // must have no oracle: an oracle dropped from `oracleSql` (or one
+    // added without updating §2) fails here instead of passing
+    // silently.
+    val rowsOnly = sec2.linesIterator
+      .filter(_.contains("[rows-only]"))
+      .flatMap(l => "^- \\[.\\] `([a-z0-9_]+)`".r.findFirstMatchIn(l))
+      .map(_.group(1))
+      .toSet
+    assert(missing == rowsOnly,
+      s"no oracle but not [rows-only] in §2: ${missing -- rowsOnly}; " +
+        s"[rows-only] in §2 but has an oracle: ${rowsOnly -- missing}")
     // Full §2 <-> code contract, both directions: every checklist
     // entry names a real query, every query appears in the checklist
     // (the judge reads §2 line by line — a drifted name there claims
     // an operator that doesn't exist, or hides one that does).
-    val sec2 = surveyText
-      .split("## §2")(1)
-      .split("## §3")(0)
     val listed = "`([a-z0-9_]+)`".r
       .findAllMatchIn(sec2)
       .map(_.group(1))
