@@ -44,25 +44,34 @@ object CatalogOps {
   }
 
   /** MERGE-style keyed upsert: rows from `updates` replace base rows
-    * with the same key; unmatched update rows insert. One shuffle on
-    * the key (union + per-key row_number, updates win ties) — the
-    * Delta-MERGE shape without a transaction log. At 100 TB both
-    * sides shuffle-partition on the key; a bucketed base table makes
-    * the base side exchange-free (Ingest.writeBucketed). */
-  def upsert(base: DataFrame, updates: DataFrame, key: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    // merge_src is retained as provenance (0 = from updates, 1 = from
-    // base); callers that don't want it drop it. Keys duplicated
-    // WITHIN `updates` have no defined winner — same as SQL MERGE.
-    val tagged = updates
+    * with the same key; unmatched update rows insert. The result is
+    * the updates, one row per key, UNION ALL the base LEFT ANTI JOIN
+    * the updates' keys — the `NOT EXISTS` form of ing01's DuckDB
+    * oracle. A small batch (a commit) is broadcast, so the base is
+    * scanned once with no exchange, sort or window over it; a batch
+    * past the broadcast threshold falls back to Spark's size-based
+    * shuffle join. At 100 TB a bucketed base table keeps that
+    * fallback exchange-free on the base side (Ingest.writeBucketed).
+    *
+    * Precondition: the base's keys are unique and non-null, as in a
+    * keyed table like `orders`; the output then holds one row per key.
+    * The base is not de-duplicated: a base key that appears twice and
+    * is not updated appears twice in the output. A NULL key never
+    * matches, so a NULL-keyed base row survives beside a NULL-keyed
+    * update. Keys duplicated WITHIN `updates` keep one of their rows,
+    * with no defined winner — same as SQL MERGE.
+    *
+    * `merge_src` is retained as provenance (0 = from updates, 1 = from
+    * base); callers that don't want it drop it. */
+  def upsert(base: DataFrame, updates: DataFrame, key: String): DataFrame =
+    updates
+      .dropDuplicates(key)
       .withColumn("merge_src", lit(0))
-      .unionByName(base.withColumn("merge_src", lit(1)))
-    val w = Window.partitionBy(key).orderBy(col("merge_src"))
-    tagged
-      .withColumn("_rn", row_number().over(w))
-      .filter(col("_rn") === 1)
-      .drop("_rn")
-  }
+      .unionByName(
+        base
+          .join(updates.select(key), Seq(key), "left_anti")
+          .withColumn("merge_src", lit(1))
+      )
 
   /** Snapshot diff — classify every key as added / removed / changed /
     * unchanged between two table versions (the audit a lake runs

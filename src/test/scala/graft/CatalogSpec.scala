@@ -2,6 +2,7 @@ package graft
 
 import graft.catalog.Lake
 import graft.operators.CatalogOps
+import org.apache.spark.sql.functions.lit
 import org.scalatest.funsuite.AnyFunSuite
 
 class CatalogSpec extends AnyFunSuite {
@@ -79,25 +80,52 @@ class CatalogSpec extends AnyFunSuite {
     assert(spark.sql("SELECT COUNT(*) FROM trade.nation").head().getLong(0) == 25)
   }
 
-  test("registerViews re-registers when the dir's contents change under the same path") {
-    // Build a private lake dir (region + nation suffice for the flat
-    // temp-view surface under test), register, then REWRITE a table
-    // in place: a non-forced registerViews() must notice the changed
-    // content fingerprint and refresh — the round-10 staleness bug
-    // served the old file listing until someone passed force=true.
-    val tmp = java.nio.file.Files.createTempDirectory("graft-fp-").toString
+  /** A private lake dir for registration tests: every table of the
+    * test lake, region and nation whole and the rest cut to one row. */
+  private def withTempLake(prefix: String)(body: String => Unit): Unit = {
+    val tmp = java.nio.file.Files.createTempDirectory(prefix).toString
     try {
       val l0 = Lake(spark, sfDir)
       l0.tableNames.foreach { n =>
-        l0.resolve(n)
-          .limit(if (n == "region") 5 else 1)
+        val df = l0.resolve(n)
+        (if (n == "region" || n == "nation") df else df.limit(1))
           .write.mode("overwrite").parquet(s"$tmp/$n.parquet")
       }
+      body(tmp)
+    } finally {
+      // leave the session catalog pointing at the shared test lake
+      Lake(spark, sfDir).registerViews()
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
+    }
+  }
+
+  /** The session's flat temp view object: a re-created view is a new
+    * object, an untouched one is the same. */
+  private def tempView(n: String): AnyRef =
+    spark.sessionState.catalog.getRawTempView(n).get
+
+  private def sqlCount(sql: String): Long = spark.sql(sql).head().getLong(0)
+
+  test("registerViews re-registers when the dir's contents change under the same path") {
+    // Register a private lake dir, then change it between non-forced
+    // registerViews() calls: the per-table content fingerprint must
+    // notice each change — the round-10 staleness bug served the old
+    // file listing until someone passed force=true.
+    withTempLake("graft-fp-") { tmp =>
+      import spark.implicits._
+      val l0 = Lake(spark, sfDir)
       val l = Lake(spark, tmp)
       l.registerViews()
       assert(spark.table("region").count() == 5)
-      assert(spark.sql("SELECT COUNT(*) FROM trade.region").head().getLong(0) == 5)
-      // rewrite region with fewer rows (different part files on disk)
+      assert(sqlCount("SELECT COUNT(*) FROM trade.region") == 5)
+      val joinSql = """SELECT COUNT(*) FROM trade.nation n JOIN trade.region r
+                      |ON n.n_regionkey = r.r_regionkey""".stripMargin
+      assert(sqlCount(joinSql) == 25)
+
+      // (a) rewrite region in place with the same schema (fewer rows,
+      // different part files): only region is refreshed in place.
+      val nationView = tempView("nation")
+      val regionView = tempView("region")
       l0.resolve("region").limit(3)
         .write.mode("overwrite").parquet(s"$tmp/region.parquet")
       l.registerViews() // NOT forced — the fingerprint must trip it
@@ -105,19 +133,94 @@ class CatalogSpec extends AnyFunSuite {
         spark.table("region").count() == 3,
         "non-forced registerViews served a stale catalog after a rewrite"
       )
-      // The SCHEMA-QUALIFIED path now resolves through a catalog TABLE
+      // The SCHEMA-QUALIFIED path resolves through a catalog TABLE
       // whose relation (schema + file listing) Spark caches per
-      // session — the re-registration must invalidate that cache too,
-      // or spark.sql serves the pre-rewrite listing (the documented
+      // session — the refresh must invalidate that cache too, or
+      // spark.sql serves the pre-rewrite listing (the documented
       // trade-off at the registerTable site).
       assert(
-        spark.sql("SELECT COUNT(*) FROM trade.region").head().getLong(0) == 3,
+        sqlCount("SELECT COUNT(*) FROM trade.region") == 3,
         "catalog-table relation cache served stale data after re-register"
       )
-    } finally {
-      // leave the session catalog pointing at the shared test lake
-      Lake(spark, sfDir).registerViews()
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
+      val nationsKept = spark.read.parquet(s"$tmp/nation.parquet")
+        .join(spark.read.parquet(s"$tmp/region.parquet"), $"n_regionkey" === $"r_regionkey")
+        .count()
+      assert(nationsKept < 25 && sqlCount(joinSql) == nationsKept)
+      assert(!(tempView("region") eq regionView), "region's temp view was not re-created")
+      assert(tempView("nation") eq nationView, "untouched nation's temp view was re-created")
+
+      // (b) rewrite region with an added column: the schema changed, so
+      // the full registration runs (every temp view is re-created) and
+      // trade.region shows the new column.
+      l0.resolve("region").limit(4).withColumn("r_extra", lit(7L))
+        .write.mode("overwrite").parquet(s"$tmp/region.parquet")
+      l.registerViews()
+      assert(sqlCount("SELECT SUM(r_extra) FROM trade.region") == 28)
+      assert(!(tempView("nation") eq nationView), "a schema change must re-register in full")
+
+      // (c) a non-table entry in the lake dir is not a table change.
+      val views = l.tableNames.map(n => n -> tempView(n)).toMap
+      val landing = new java.io.File(s"$tmp/_landing")
+      landing.mkdirs()
+      java.nio.file.Files.write(new java.io.File(landing, "x.jsonl").toPath,
+        "{\"o_orderkey\": 1}\n".getBytes("UTF-8"))
+      l.registerViews()
+      l.tableNames.foreach { n =>
+        assert(tempView(n) eq views(n), s"$n re-registered for a non-table file")
+      }
+      assert(sqlCount("SELECT COUNT(*) FROM trade.region") == 4)
+    }
+  }
+
+  test("registerViews rejects a table dir with hive-style partition subdirectories") {
+    // Registered without PARTITIONED BY, the partition column of such a
+    // table would read as NULL without any error.
+    withTempLake("graft-part-") { tmp =>
+      Lake(spark, sfDir).resolve("region")
+        .write.mode("overwrite").partitionBy("r_regionkey")
+        .parquet(s"$tmp/region.parquet")
+      val e = intercept[IllegalArgumentException](Lake(spark, tmp).registerViews())
+      assert(e.getMessage.contains("`region`") && e.getMessage.contains("r_regionkey="),
+        e.getMessage)
+      assert(e.getMessage.contains("unpartitioned"), e.getMessage)
+    }
+  }
+
+  test("readers of a table see no error while commits append to it and re-register") {
+    // The in-place refresh drops nothing, so a concurrent reader sees
+    // the old or the new listing. Appending keeps the old part files,
+    // so a stale listing stays readable.
+    withTempLake("graft-conc-") { tmp =>
+      val l = Lake(spark, tmp)
+      l.registerViews()
+      val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
+      val reads = new java.util.concurrent.atomic.AtomicInteger(0)
+      val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+      val reader = new Thread(() =>
+        while (!stop.get()) {
+          try {
+            spark.sql("SELECT COUNT(*), SUM(r_regionkey) FROM trade.region").collect()
+            reads.incrementAndGet()
+          } catch { case t: Throwable => errors.add(t) }
+        }
+      )
+      reader.start()
+      try {
+        val one = Lake(spark, sfDir).resolve("region").limit(1)
+        (1 to 5).foreach { _ =>
+          one.write.mode("append").parquet(s"$tmp/region.parquet")
+          l.registerViews()
+        }
+        // let the reader run at least once after the last commit
+        val seen = reads.get()
+        while (reads.get() < seen + 2 && errors.isEmpty) Thread.sleep(10)
+      } finally {
+        stop.set(true)
+        reader.join()
+      }
+      assert(errors.isEmpty, s"reader errors: ${errors.peek()}")
+      assert(reads.get() > 0)
+      assert(sqlCount("SELECT COUNT(*) FROM trade.region") == 10)
     }
   }
 
@@ -158,18 +261,22 @@ class CatalogSpec extends AnyFunSuite {
     import spark.implicits._
     val base = Seq((1L, "a", 10.0), (2L, "b", 20.0), (3L, "c", 30.0))
       .toDF("k", "name", "v")
-    val updates = Seq((2L, "b2", 25.0), (9L, "new", 90.0))
+    // key 3 appears twice in the updates: exactly one of its update
+    // rows survives, and the base row does not
+    val updates = Seq((2L, "b2", 25.0), (9L, "new", 90.0), (3L, "c1", 31.0), (3L, "c2", 32.0))
       .toDF("k", "name", "v")
     val merged = CatalogOps.upsert(base, updates, "k")
       .collect()
       .map(r => (r.getLong(0), r.getString(1), r.getDouble(2), r.getInt(3)))
       .sortBy(_._1)
-    assert(merged.toSeq == Seq(
+    assert(merged.filter(_._1 != 3L).toSeq == Seq(
       (1L, "a", 10.0, 1),   // untouched base row
       (2L, "b2", 25.0, 0),  // replaced by the update
-      (3L, "c", 30.0, 1),
       (9L, "new", 90.0, 0)  // inserted
     ))
+    val three = merged.filter(_._1 == 3L)
+    assert(three.length == 1, three.toSeq)
+    assert(Set((3L, "c1", 31.0, 0), (3L, "c2", 32.0, 0)).contains(three.head), three.head)
   }
 
   test("snapshotDiff classifies added/removed/changed/unchanged per key") {

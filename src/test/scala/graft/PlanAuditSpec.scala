@@ -720,4 +720,49 @@ class PlanAuditSpec extends AnyFunSuite {
         s"probe ranking lost its group-limit pushdown:\n$p")
     }
   }
+
+  test("upsert: a local batch broadcasts into a left-anti join; the base is scanned once, unshuffled") {
+    // A commit's batch is small: the base must stream through one
+    // left-anti BroadcastHashJoin, with no Window and no hash Exchange
+    // anywhere between its scan and the root. The only shuffle left is
+    // the batch's own one-row-per-key de-duplication.
+    import org.apache.spark.sql.catalyst.plans.LeftAnti
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    import org.apache.spark.sql.execution.window.WindowExec
+    import spark.implicits._
+    val base = lake.orders.select("o_orderkey", "o_orderpriority", "o_totalprice")
+    val batch = Seq((1L, "1-URGENT", 1.0), (7L, "2-HIGH", 2.0), (99999999L, "3-MEDIUM", 3.0))
+      .toDF("o_orderkey", "o_orderpriority", "o_totalprice")
+    val df = CatalogOps.upsert(base, batch, "o_orderkey")
+    df.collect()
+    def children(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case q: QueryStageExec        => Seq(q.plan)
+      case r: ReusedExchangeExec    => Seq(r.child)
+      case _                        => p.children
+    }
+    // every root-to-leaf path that ends at the base's parquet scan
+    def scanPaths(p: SparkPlan): Seq[List[SparkPlan]] = p match {
+      case _: FileSourceScanExec => Seq(List(p))
+      case _                     => children(p).flatMap(scanPaths).map(p :: _)
+    }
+    def all(p: SparkPlan): Seq[SparkPlan] = p +: children(p).flatMap(all)
+    val root = df.queryExecution.executedPlan
+    val paths = scanPaths(root)
+    assert(paths.size == 1, s"base scanned ${paths.size} times:\n$root")
+    assert(all(root).exists {
+      case j: BroadcastHashJoinExec => j.joinType == LeftAnti
+      case _                        => false
+    }, s"no left-anti BroadcastHashJoin:\n$root")
+    paths.head.foreach {
+      case w: WindowExec => fail(s"Window over the base scan:\n$root")
+      case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[HashPartitioning] =>
+        fail(s"hash Exchange over the base scan:\n$root")
+      case _ => ()
+    }
+  }
 }

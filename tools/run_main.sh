@@ -3,7 +3,8 @@
 # add-opens set as build.sbt's javaOptions. Usage:
 #   tools/run_main.sh graft.BenchOne dedup04_minhash_lsh
 # env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS, SPARK_GRAFT_SWEEPS,
-#      SPARK_DRIVER_MEM (default 8g)
+#      SPARK_DRIVER_MEM (default 8g),
+#      SPARK_HOME (default /opt/spark; its jars/ are the classpath)
 set -euo pipefail
 REPO="$(cd "$(dirname "$0")/.." && pwd)"
 OPENS=""
@@ -18,5 +19,5 @@ exec java $OPENS \
   -Dspark.ui.enabled=false \
   -Dspark.sql.session.timeZone=UTC \
   -Xmx"${SPARK_DRIVER_MEM:-8g}" \
-  -cp "$REPO/target/scala-2.13/classes:/opt/spark/jars/*" \
+  -cp "$REPO/target/scala-2.13/classes:${SPARK_HOME:-/opt/spark}/jars/*" \
   "$@"
