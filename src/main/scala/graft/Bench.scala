@@ -63,8 +63,7 @@ object Bench {
     val names = subsetEnv match {
       case Some(csv) =>
         val asked = csv.split(",").map(_.trim).filter(_.nonEmpty).toSeq
-        val unknown = asked.filterNot(SparkEntry.queries.contains)
-        require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(",")}")
+        SparkEntry.requireKnown(asked)
         asked.distinct.sorted
       case None => SparkEntry.queries.keys.toSeq.sorted
     }

@@ -42,6 +42,7 @@ object BenchOne {
 
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: graft.BenchOne <query> [query ...]")
+    SparkEntry.requireKnown(args)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val sweeps = sys.env.getOrElse("SPARK_GRAFT_SWEEPS", "3").toInt

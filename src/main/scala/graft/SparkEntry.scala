@@ -1,15 +1,21 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession, functions}
 
 import graft.catalog.Lake
+import graft.multimodal.Multimodal
 import graft.operators._
+import graft.sources.{Ingest, Rdf}
 
-/** Driver contract — see /root/repo/SURVEY.md §2 for the inventory.
+/** The query contract — see SURVEY.md §2 for the inventory.
   *
-  * Every `queries` entry has a DuckDB oracle in `oracleSql` unless the
-  * operator is not SQL-expressible (marked [rows-only] in SURVEY.md §2).
-  * Column names/types are aligned pairwise (the driver hash-compares
+  * `registry` holds one `Entry` per query: its name, its body over a
+  * `Lake` and its oracle. The oracle is either the DuckDB SQL whose
+  * answer must equal the query's rows (`Sql`), or the reason no SQL
+  * can replay the operator (`RowsOnly`, marked [rows-only] in SURVEY.md
+  * §2). `queries` and `oracleSql` are derived from it, so each name is
+  * written once and no oracle exists without its query. Column
+  * names/types are aligned pairwise (the compare hashes both sides
   * after sorting columns by name); doubles are rounded to 4dp on both
   * sides.
   */
@@ -19,222 +25,36 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     Relational.q05RegionVolume(Lake(spark, "/root/testdata/sf0.001"))
 
-  private def q(f: Lake => DataFrame): (SparkSession, String) => DataFrame =
-    (s, dir) => f(Lake(s, dir))
+  /** How a query's rows are checked. */
+  private[graft] sealed trait Oracle
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q01_pricing_summary" -> q(Relational.q01PricingSummary),
-    "q03_shipping_priority" -> q(Relational.q03ShippingPriority),
-    "q04_order_priority" -> q(Relational.q04OrderPriority),
-    "q05_region_volume" -> q(Relational.q05RegionVolume),
-    "q06_revenue_forecast" -> q(Relational.q06RevenueForecast),
-    "q07_top_parts" -> q(Relational.q07TopParts),
-    "q10_returned_items" -> q(Relational.q10ReturnedItems),
-    "rel01_running_total" -> q(Relational.rel01RunningTotal),
-    "rel02_topn_per_group" -> q(Relational.rel02TopNPerGroup),
-    "rel03_distinct_agg" -> q(Relational.rel03DistinctAgg),
-    "rel04_bucket_histogram" -> q(Relational.rel04BucketHistogram),
-    "rel05_corr_stats" -> q(Relational.rel05CorrStats),
-    "rel06_union_entities" -> q(Relational.rel06UnionEntities),
-    "rel07_anti_join" -> q(Relational.rel07AntiJoin),
-    "rel08_year_trend" -> q(Relational.rel08YearTrend),
-    "rel09_rollup" -> q(Relational.rel09Rollup),
-    "rel10_percentiles" -> q(Relational.rel10Percentiles),
-    "q18_large_orders" -> q(Relational.q18LargeOrders(_)),
-    "evt05_retention" -> q(Events.evt05Retention),
-    "evt06_moving_avg" -> q(Events.evt06MovingAvg),
-    "samp01_stratified" -> q(TextAnalysis.samp01Stratified(_)),
-    "samp08_seeded_sample" -> q(TextAnalysis.samp08SeededSample(_)),
-    "dedup14_bloom_decontaminate" -> q(Dedup.dedup14BloomDecontaminate(_)),
-    "eval05_score_calibration" -> q(Evaluation.eval05ScoreCalibration(_)),
-    "eval06_agreement" -> q(Evaluation.eval06Agreement),
-    "eval07_roc_auc" -> q(Evaluation.eval07RocAuc(_)),
-    "xref01_id_map" -> q(Linkage.xref01IdMap),
-    "xref02_unified_entities" -> q(Linkage.xref02UnifiedEntities),
-    "xref03_coverage_stats" -> q(Linkage.xref03CoverageStats),
-    "xref04_priority_dedup" -> q(Linkage.xref04PriorityDedup),
-    "xref05_sanity_checks" -> q(Linkage.xref05SanityChecks),
-    "txt01_stats" -> q(TextAnalysis.txt01Stats),
-    "txt02_langid" -> q(TextAnalysis.txt02LangId),
-    "txt03_quality" -> q(TextAnalysis.txt03Quality),
-    "txt04_fingerprint" -> q(TextAnalysis.txt04Fingerprint),
-    "txt05_vocab_stats" -> q(TextAnalysis.txt05VocabStats),
-    "txt06_top_ngrams" -> q(TextAnalysis.txt06TopNgrams),
-    "txt07_exact_label_match" -> q(TextAnalysis.txt07ExactLabelMatch),
-    "txt08_bm25_search" -> q(TextAnalysis.txt08Bm25Search(_)),
-    "txt09_tfidf" -> q(TextAnalysis.txt09TfIdf),
-    "txt10_jaro_winkler" -> q(TextAnalysis.txt10JaroWinkler(_)),
-    "txt11_doc_chunks" -> q(TextAnalysis.txt11DocChunks(_)),
-    "txt12_bpe_tokens" -> q(TextAnalysis.txt12BpeTokens),
-    "cat01_status" -> q(CatalogOps.cat01Status),
-    "cat02_snapshot_diff" -> q(CatalogOps.cat02SnapshotDiff),
-    "ing01_upsert" -> q(CatalogOps.ing01Upsert),
-    "ing02_scd2_history" -> q(CatalogOps.ing02Scd2History),
-    "ing03_ntriples" -> q(graft.sources.Rdf.ing03Ntriples),
-    "ing04_obo_closure" -> q(graft.sources.Rdf.ing04OboClosure),
-    "ing05_skos_terms" -> q(graft.sources.Rdf.ing05SkosTerms),
-    "ing06_turtle_skos" -> q(graft.sources.Rdf.ing06TurtleSkos),
-    "ing07_mesh_terms" -> q(graft.sources.Rdf.ing07MeshTerms),
-    "ing08_rdfxml_skos" -> q(graft.sources.Rdf.ing08RdfXmlSkos),
-    "ing09_graph_store" -> q(graft.sources.Rdf.ing09GraphStore),
-    "ing10_jsonl_quarantine" -> q(graft.sources.Ingest.ing10JsonlQuarantine),
-    "emb01_hash_embeddings" -> q(Embedding.emb01HashEmbeddings(_)),
-    "emb02_pca_projection" -> q(Embedding.emb02PcaProject(_)),
-    "emb03_prefix_fidelity" -> q(Embedding.emb03PrefixFidelity(_)),
-    "emb04_geometry_audit" -> q(Embedding.emb04GeometryAudit),
-    "samp13_exact_quota" -> q(TextAnalysis.samp13ExactQuota(_)),
-    "eval08_dist_drift" -> q(Evaluation.eval08DistDrift(_)),
-    "q12_late_shipments" -> q(Relational.q12LateShipments),
-    "q14_promo_revenue" -> q(Relational.q14PromoRevenue),
-    "rel12_cube" -> q(Relational.rel12Cube),
-    "rel13_pivot" -> q(Relational.rel13Pivot),
-    "rel15_grouping_sets" -> q(Relational.rel15GroupingSets),
-    "rel16_window_suite" -> q(Relational.rel16WindowSuite(_)),
-    "dedup01_exact" -> q(Dedup.dedup01Exact),
-    "dedup02_keep_canonical" -> q(Dedup.dedup02KeepCanonical),
-    "dedup03_ngram_jaccard" -> q(Dedup.dedup03NgramJaccard(_)),
-    "dedup04_minhash_lsh" -> q(Dedup.dedup04MinhashLsh(_)),
-    "dedup05_simhash" -> q(Dedup.dedup05Simhash(_)),
-    "dedup06_embedding_neardup" -> q(Dedup.dedup06EmbeddingNearDup(_)),
-    "sim01_topk_bruteforce" -> q(Similarity.sim01TopKBruteForce(_)),
-    "sim02_threshold_join" -> q(Similarity.sim02ThresholdJoin(_)),
-    "sim03_lsh_ann" -> q(Similarity.sim03LshAnn(_)),
-    "sim05_ivf_ann" -> q(Similarity.sim05IvfAnn(_)),
-    "sim08_knn_graph" -> q(Similarity.sim08KnnGraph(_)),
-    // nlist=0 → auto-⌈√N⌉ cells: the n^1.5 kernel contract (a fixed
-    // nlist re-quadratifies as the corpus grows — measured at sf1)
-    "sim11_knn_graph_ann" -> q(Similarity.sim11KnnGraphAnn(_, nlist = 0)),
-    "sim04_label_centroids" -> q(Similarity.sim04LabelCentroids),
-    "evt01_windowed_counts" -> q(Events.evt01WindowedCounts),
-    "evt02_sessionization" -> q(Events.evt02Sessionization(_)),
-    "evt03_json_extract" -> q(Events.evt03JsonExtract),
-    "evt04_funnel" -> q(Events.evt04Funnel),
-    "evt07_asof_join" -> q(Events.evt07AsofJoin),
-    "graph01_hierarchy_rollup" -> q(Graph.graph01HierarchyRollup),
-    "graph02_transitive_closure" -> q(Graph.graph02TransitiveClosure),
-    "graph03_triple_patterns" -> q(Graph.graph03TriplePatterns),
-    "graph04_bgp_nation_counts" -> q(Graph.graph04BgpNationCounts),
-    "graph05_hierarchy_rollup4" -> q(Graph.graph05HierarchyRollup4),
-    // kernel form (round 15): bit-for-bit equal to the DataFrame loop
-    // (integer mass; GraphSpec pins it), 0.41x at sf10 and alive at
-    // 8g where the SQL loop needed 24g standalone (BASELINE round 15)
-    "graph06_pagerank" -> q(Graph.graph06PagerankKernel(_)),
-    "graph07_optional_filter" -> q(Graph.graph07OptionalFilter),
-    "graph08_ancestor_paths" -> q(Graph.graph08AncestorPaths(_)),
-    "graph09_sparql_text" -> q(Graph.graph09SparqlText),
-    "graph10_sparql_agg" -> q(Graph.graph10SparqlAgg),
-    "graph11_sparql_union" -> q(Graph.graph11SparqlUnion),
-    "graph12_sparql_path_ops" -> q(Graph.graph12SparqlPathOps),
-    "graph13_sparql_values_bind" -> q(Graph.graph13SparqlValuesBind),
-    "graph14_sparql_minus" -> q(Graph.graph14SparqlMinus),
-    "graph15_sparql_ask" -> q(Graph.graph15SparqlAsk),
-    "graph16_sparql_construct" -> q(Graph.graph16SparqlConstruct),
-    "graph17_sparql_describe" -> q(Graph.graph17SparqlDescribe),
-    "graph18_sparql_graphs" -> q(Graph.graph18SparqlGraphs),
-    "graph19_sparql_exists" -> q(Graph.graph19SparqlExists),
-    "graph20_sparql_path_star" -> q(Graph.graph20SparqlPathStar),
-    "graph21_sparql_subquery" -> q(Graph.graph21SparqlSubquery),
-    "graph22_sparql_negated_props" -> q(Graph.graph22SparqlNegatedProps),
-    "graph23_sparql_optional_group" -> q(Graph.graph23SparqlOptionalGroup),
-    "graph24_sparql_having" -> q(Graph.graph24SparqlHaving),
-    "graph25_sparql_from_named" -> q(Graph.graph25SparqlFromNamed),
-    "graph26_sparql_numeric_agg" -> q(Graph.graph26SparqlNumericAgg),
-    "graph27_bfs_distances" -> q(Graph.graph27BfsDistances(_)),
-    "graph30_shortest_paths" -> q(Graph.graph30ShortestPaths(_)),
-    "graph28_sparql_nested_optional" -> q(Graph.graph28SparqlNestedOptional),
-    "graph29_sparql_values_undef" -> q(Graph.graph29SparqlValuesUndef),
-    "mm01_binary_meta" -> q(graft.multimodal.Multimodal.mm01BinaryMeta),
-    "mm02_frame_sample" -> q(graft.multimodal.Multimodal.mm02FrameSample(_)),
-    "mm03_audio_features" -> q(graft.multimodal.Multimodal.mm03AudioFeatures(_)),
-    "mm04_scene_cuts" -> q(graft.multimodal.Multimodal.mm04SceneCuts(_)),
-    "mm05_phash_neardup" -> q(graft.multimodal.Multimodal.mm05PhashNeardup(_)),
-    "txt13_pii_redaction" -> q(TextAnalysis.txt13PiiRedaction),
-    "txt14_repetition" -> q(TextAnalysis.txt14Repetition),
-    "txt16_sequence_packing" -> q(TextAnalysis.txt16SequencePacking(_)),
-    "txt15_unigram_logprob" -> q(TextAnalysis.txt15UnigramLogprob(_)),
-    "txt25_ccnet_buckets" -> q(TextAnalysis.txt25CcnetBuckets(_)),
-    "txt26_line_dedup" -> q(TextAnalysis.txt26LineDedup(_)),
-    "txt27_char_entropy" -> q(TextAnalysis.txt27CharEntropy),
-    "txt28_ngram_novelty" -> q(TextAnalysis.txt28NgramNovelty(_)),
-    "txt29_model_quality" -> q(TextAnalysis.txt29ModelQuality(_)),
-    "samp02_source_mixture" -> q(TextAnalysis.samp02SourceMixture),
-    "samp03_temperature_mixture" -> q(TextAnalysis.samp03TemperatureMixture),
-    "samp04_token_budget" -> q(TextAnalysis.samp04TokenBudget(_)),
-    "samp05_leakage_safe_split" -> q(Dedup.samp05LeakageSafeSplit(_)),
-    "samp07_soft_dedup" -> q(Dedup.samp07SoftDedup(_)),
-    "samp09_cluster_balanced" -> q(Dedup.samp09ClusterBalanced(_)),
-    "samp10_epoch_mixture" -> q(TextAnalysis.samp10EpochMixture(_)),
-    "samp11_interleave_schedule" -> q(TextAnalysis.samp11InterleaveSchedule(_)),
-    "samp12_mixture_sample" -> q(TextAnalysis.samp12MixtureSample(_)),
-    "dedup12_incremental" -> q(Dedup.dedup12Incremental(_)),
-    "dedup13_exact_substring" -> q(Dedup.dedup13ExactSubstring(_)),
-    "samp06_shuffle_shard" -> q(TextAnalysis.samp06ShuffleShard(_)),
-    "cat03_column_stats" -> q(CatalogOps.cat03ColumnStats(_)),
-    "cat04_zorder_layout" -> q(CatalogOps.cat04ZorderLayout(_)),
-    "cat05_prune_audit" -> q(CatalogOps.cat05PruneAudit(_)),
-    "txt19_clean_text" -> q(TextAnalysis.txt19CleanText),
-    "txt20_gopher_filter" -> q(TextAnalysis.txt20GopherFilter),
-    "xref06_total_mismatch" -> q(Linkage.xref06TotalMismatch(_)),
-    "xref07_tiered_linkage" -> q(Linkage.xref07TieredLinkage(_)),
-    "xref08_bridges" -> q(Linkage.xref08Bridges),
-    "xref09_blocking_quality" -> q(Linkage.xref09BlockingQuality(_)),
-    "xref10_upset_overlap" -> q(Linkage.xref10UpsetOverlap),
-    "xref11_ontology_reach" -> q(Linkage.xref11OntologyReach(_)),
-    "xref12_coverage_by_year" -> q(Linkage.xref12CoverageByYear),
-    "xref13_temporal_flags" -> q(Linkage.xref13TemporalFlags),
-    "sim06_ivf_trained" -> q(Similarity.sim06IvfTrained(_)),
-    "samp14_cluster_balance" -> q(Similarity.samp14ClusterBalance(_)),
-    "sim09_prefix_rerank" -> q(Similarity.sim09PrefixRerank(_)),
-    "sim10_sq_ann" -> q(Similarity.sim10SqAnn(_)),
-    "sim12_range_search" -> q(Similarity.sim12RangeSearch(_)),
-    "sim07_pq_ann" -> q(Similarity.sim07PqAnn(_)),
-    "sim13_pq_refine" -> q(Similarity.sim13PqRefine(_)),
-    "sim14_ivf_pq" -> q(Similarity.sim14IvfPq(_)),
-    "sim15_ivfpq_refine" -> q(Similarity.sim15IvfPqRefine(_)),
-    "evt08_daily_anomalies" -> q(Events.evt08DailyAnomalies(_)),
-    "evt09_interval_join" -> q(Events.evt09IntervalJoin(_)),
-    "evt10_lateness_profile" -> q(Events.evt10LatenessProfile(_)),
-    "evt11_watermark_curve" -> q(Events.evt11WatermarkCurve(_)),
-    "dedup07_decontaminate" -> q(Dedup.dedup07Decontaminate(_)),
-    "dedup15_contamination_report" -> q(Dedup.dedup15ContaminationReport(_)),
-    "dedup08_cluster_resolve" -> q(Dedup.dedup08ClusterResolve(_)),
-    "dedup09_cross_source_overlap" -> q(Dedup.dedup09CrossSourceOverlap),
-    "dedup10_containment" -> q(Dedup.dedup10Containment(_)),
-    "dedup11_semantic" -> q(Dedup.dedup11Semantic(_)),
-    "txt17_tfidf_cosine_linkage" -> q(Linkage.txt17TfidfCosineLinkage(_)),
-    // Driver-facing shape: the harness canonicalizes results with a
-    // pandas sort over every column, which cannot hash an array cell —
-    // ship the ids space-joined (same information, stable ordering);
-    // BpeSpec exercises the typed array API directly.
-    "txt18_bpe_encode" -> q(l =>
-      TextAnalysis
-        .txt18BpeEncode(l)
-        .withColumn(
-          "token_ids",
-          org.apache.spark.sql.functions
-            .concat_ws(" ", org.apache.spark.sql.functions.col("token_ids"))
-        )
-    ),
-    "rel11_approx_stats" -> q(Relational.rel11ApproxStats),
-    "rel14_heavy_hitters" -> q(Relational.rel14HeavyHitters(_)),
-    "nst01_order_history_unnest" -> q(Nested.nst01OrderHistoryUnnest(_)),
-    "nst02_struct_paths_trycast" -> q(Nested.nst02StructPathsTryCast),
-    "nst03_type_words_unnest" -> q(Nested.nst03TypeWordsUnnest),
-    "eval01_linkage_metrics" -> q(Evaluation.eval01LinkageMetrics(_)),
-    "eval02_ann_recall" -> q(Evaluation.eval02AnnRecall(_)),
-    "txt21_dsir_importance" -> q(TextAnalysis.txt21DsirImportance(_)),
-    "txt22_boilerplate" -> q(TextAnalysis.txt22Boilerplate(_)),
-    "txt23_bigram_logprob" -> q(TextAnalysis.txt23BigramLogprob(_)),
-    "txt24_quality_panel" -> q(TextAnalysis.txt24QualityPanel),
-    "rep01_corpus_report" -> q(TextAnalysis.rep01CorpusReport),
-    "eval03_langid_confusion" -> q(Evaluation.eval03LangidConfusion),
-    "eval04_cluster_quality" -> q(Evaluation.eval04ClusterQuality),
-    "pipe01_pretrain_corpus" -> q(Pipeline.pipe01PretrainCorpus(_)),
-    "pipe02_weighted_corpus" -> q(Pipeline.pipe02WeightedCorpus(_)),
-    "pipe03_eval_suite" -> q(Pipeline.pipe03EvalSuite(_)),
-    "txt30_quality_trainer" -> q(TextAnalysis.txt30QualityTrainer(_)),
-    "sim16_ivf_append" -> q(Similarity.sim16IvfAppend(_))
-  )
+  /** DuckDB SQL over the lake's tables whose answer must equal the
+    * query's rows. */
+  private[graft] final case class Sql(text: String) extends Oracle
+
+  /** No SQL oracle can replay the operator: `reason` names its
+    * engine-private state and the spec that pins its properties
+    * instead. Its result is only checked to be non-empty. */
+  private[graft] final case class RowsOnly(reason: String) extends Oracle
+
+  private[graft] final case class Entry(name: String, run: Lake => DataFrame, oracle: Oracle)
+
+  /** Every query by name, run over the lake in the given dir. */
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    registry.map { e =>
+      e.name -> ((s: SparkSession, dir: String) => e.run(Lake(s, dir)))
+    }.toMap
+
+  /** Every `Sql` oracle's text by query name. */
+  lazy val oracleSql: Map[String, String] =
+    registry.collect { case Entry(name, _, Sql(text)) => name -> text }.toMap
+
+  /** Fails, naming them, if any of `names` is not a query: a typo must
+    * not silently shrink a run. */
+  def requireKnown(names: Iterable[String]): Unit = {
+    val unknown = names.filterNot(queries.contains)
+    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(",")}")
+  }
 
   /** DuckDB-side shared SQL fragments for the text oracles. */
   private val dkToks =
@@ -600,28 +420,245 @@ object SparkEntry {
        |FROM t$rounds ORDER BY source""".stripMargin
   }
 
-  def oracleSql: Map[String, String] = Map(
-    "emb02_pca_projection" -> emb02OracleSql(15),
-    "samp10_epoch_mixture" -> samp10OracleSql(3),
-    // samp11: identical k/sqrt(n_s) arithmetic on both sides; ties
-    // (equal-size sources at the same k) break on (source, doc_id).
-    "samp11_interleave_schedule" ->
-      """WITH c AS (SELECT source, COUNT(*) AS n_s FROM documents GROUP BY source),
-        |k AS (SELECT d.doc_id, d.source,
-        |    CAST(ROW_NUMBER() OVER (PARTITION BY d.source ORDER BY d.doc_id)
-        |      AS DOUBLE) AS k, c.n_s
-        |  FROM documents d JOIN c USING (source)),
-        |v AS (SELECT doc_id, source,
-        |    k / SQRT(CAST(n_s AS DOUBLE)) AS vtime FROM k),
-        |t AS (SELECT * FROM v ORDER BY vtime, source, doc_id LIMIT 200)
-        |SELECT CAST(ROW_NUMBER() OVER (ORDER BY vtime, source, doc_id)
-        |    AS BIGINT) AS rank,
-        |  doc_id, source, ROUND(vtime, 6) AS vtime
-        |FROM t ORDER BY rank""".stripMargin,
+  /** One entry per query. Lazy, and below the helpers its oracle
+    * texts read: a strict val above them would read them as null. */
+  private[graft] lazy val registry: Seq[Entry] = Seq(
+    Entry("q01_pricing_summary", Relational.q01PricingSummary, Sql(
+      """SELECT l_returnflag, l_linestatus,
+        |  ROUND(SUM(l_quantity), 4) AS sum_qty,
+        |  ROUND(SUM(l_extendedprice), 4) AS sum_base_price,
+        |  ROUND(SUM(l_extendedprice * (1 - l_discount)), 4) AS sum_disc_price,
+        |  ROUND(SUM(l_extendedprice * (1 - l_discount) * (1 + l_tax)), 4) AS sum_charge,
+        |  ROUND(AVG(l_quantity), 4) AS avg_qty,
+        |  ROUND(AVG(l_extendedprice), 4) AS avg_price,
+        |  ROUND(AVG(l_discount), 4) AS avg_disc,
+        |  COUNT(*) AS count_order
+        |FROM lineitem
+        |WHERE l_shipdate <= TIMESTAMP '1999-12-01'
+        |GROUP BY l_returnflag, l_linestatus
+        |ORDER BY l_returnflag, l_linestatus""".stripMargin)),
+    Entry("q03_shipping_priority", Relational.q03ShippingPriority, Sql(
+      """SELECT l_orderkey, o_orderdate, o_orderpriority,
+        |  ROUND(SUM(l_extendedprice * (1 - l_discount)), 4) AS revenue
+        |FROM lineitem
+        |JOIN orders ON l_orderkey = o_orderkey
+        |JOIN customer ON o_custkey = c_custkey
+        |WHERE c_mktsegment = 'BUILDING'
+        |  AND o_orderdate < TIMESTAMP '1998-06-15'
+        |  AND l_shipdate > TIMESTAMP '1998-06-15'
+        |GROUP BY l_orderkey, o_orderdate, o_orderpriority
+        |ORDER BY revenue DESC, l_orderkey
+        |LIMIT 10""".stripMargin)),
+    Entry("q04_order_priority", Relational.q04OrderPriority, Sql(
+      """SELECT o_orderpriority, COUNT(*) AS order_count
+        |FROM orders
+        |WHERE o_orderdate >= TIMESTAMP '1997-01-01'
+        |  AND o_orderdate < TIMESTAMP '1998-01-01'
+        |  AND EXISTS (SELECT 1 FROM lineitem WHERE l_orderkey = o_orderkey)
+        |GROUP BY o_orderpriority
+        |ORDER BY o_orderpriority""".stripMargin)),
+    Entry("q05_region_volume", Relational.q05RegionVolume, Sql(
+      """SELECT n_name,
+        |  ROUND(SUM(l_extendedprice * (1 - l_discount)), 4) AS revenue
+        |FROM lineitem
+        |JOIN orders ON l_orderkey = o_orderkey
+        |JOIN customer ON o_custkey = c_custkey
+        |JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
+        |JOIN nation ON s_nationkey = n_nationkey
+        |JOIN region ON n_regionkey = r_regionkey
+        |WHERE r_name = 'EUROPE'
+        |  AND o_orderdate >= TIMESTAMP '1996-01-01'
+        |  AND o_orderdate < TIMESTAMP '1998-01-01'
+        |GROUP BY n_name
+        |ORDER BY revenue DESC, n_name""".stripMargin)),
+    Entry("q06_revenue_forecast", Relational.q06RevenueForecast, Sql(
+      """SELECT ROUND(SUM(l_extendedprice * l_discount), 4) AS revenue,
+        |  COUNT(*) AS n_items
+        |FROM lineitem
+        |WHERE l_shipdate >= TIMESTAMP '1997-01-01'
+        |  AND l_shipdate < TIMESTAMP '1998-01-01'
+        |  AND l_discount BETWEEN 0.03 AND 0.07
+        |  AND l_quantity < 24""".stripMargin)),
+    Entry("q07_top_parts", Relational.q07TopParts, Sql(
+      """SELECT p_brand,
+        |  ROUND(SUM(l_quantity), 4) AS total_qty,
+        |  ROUND(SUM(l_extendedprice * (1 - l_discount)), 4) AS revenue,
+        |  COUNT(*) AS n_lines
+        |FROM lineitem JOIN part ON l_partkey = p_partkey
+        |GROUP BY p_brand
+        |ORDER BY revenue DESC, p_brand
+        |LIMIT 10""".stripMargin)),
+    Entry("q10_returned_items", Relational.q10ReturnedItems, Sql(
+      """SELECT c_custkey, c_name, n_name,
+        |  ROUND(SUM(l_extendedprice * (1 - l_discount)), 4) AS revenue
+        |FROM lineitem
+        |JOIN orders ON l_orderkey = o_orderkey
+        |JOIN customer ON o_custkey = c_custkey
+        |JOIN nation ON c_nationkey = n_nationkey
+        |WHERE l_returnflag = 'R'
+        |GROUP BY c_custkey, c_name, n_name
+        |ORDER BY revenue DESC, c_custkey
+        |LIMIT 20""".stripMargin)),
+    Entry("rel01_running_total", Relational.rel01RunningTotal, Sql(
+      """SELECT o_custkey, o_orderkey, o_orderdate,
+        |  ROUND(SUM(o_totalprice) OVER (
+        |    PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
+        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 4)
+        |    AS running_total
+        |FROM orders""".stripMargin)),
+    Entry("rel02_topn_per_group", Relational.rel02TopNPerGroup, Sql(
+      """SELECT o_custkey, rn, o_orderkey, o_totalprice FROM (
+        |  SELECT o_custkey, o_orderkey, o_totalprice,
+        |    ROW_NUMBER() OVER (
+        |      PARTITION BY o_custkey
+        |      ORDER BY o_totalprice DESC, o_orderkey) AS rn
+        |  FROM orders) t
+        |WHERE rn <= 3""".stripMargin)),
+    Entry("rel03_distinct_agg", Relational.rel03DistinctAgg, Sql(
+      """SELECT c_mktsegment,
+        |  COUNT(DISTINCT c_nationkey) AS n_nations,
+        |  COUNT(*) AS n_customers,
+        |  ROUND(AVG(c_acctbal), 4) AS avg_acctbal
+        |FROM customer
+        |GROUP BY c_mktsegment
+        |ORDER BY c_mktsegment""".stripMargin)),
+    Entry("rel04_bucket_histogram", Relational.rel04BucketHistogram, Sql(
+      """SELECT
+        |  CASE WHEN o_totalprice < 50000 THEN '0-50k'
+        |       WHEN o_totalprice < 150000 THEN '50k-150k'
+        |       WHEN o_totalprice < 300000 THEN '150k-300k'
+        |       ELSE '300k+' END AS price_bucket,
+        |  COUNT(*) AS n_orders,
+        |  ROUND(AVG(o_totalprice), 4) AS avg_price
+        |FROM orders
+        |GROUP BY 1
+        |ORDER BY price_bucket""".stripMargin)),
+    Entry("rel05_corr_stats", Relational.rel05CorrStats, Sql(
+      """SELECT
+        |  ROUND(CORR(l_quantity, l_extendedprice), 4) AS corr_qty_price,
+        |  ROUND(CORR(l_discount, l_extendedprice), 4) AS corr_disc_price,
+        |  ROUND(STDDEV_SAMP(l_extendedprice), 4) AS stddev_price,
+        |  ROUND(AVG(ABS(l_extendedprice - l_quantity * 1000)), 4) AS avg_abs_diff
+        |FROM lineitem""".stripMargin)),
+    Entry("rel06_union_entities", Relational.rel06UnionEntities, Sql(
+      """SELECT * FROM (
+        |  SELECT 'customer' AS source, CAST(c_custkey AS BIGINT) AS entity_id,
+        |    LOWER(c_name) AS entity_name, CAST(c_nationkey AS BIGINT) AS nationkey
+        |  FROM customer
+        |  UNION ALL
+        |  SELECT 'supplier' AS source, CAST(s_suppkey AS BIGINT) AS entity_id,
+        |    LOWER(s_name) AS entity_name, CAST(s_nationkey AS BIGINT) AS nationkey
+        |  FROM supplier) t
+        |ORDER BY source, entity_id""".stripMargin)),
+    Entry("rel07_anti_join", Relational.rel07AntiJoin, Sql(
+      """SELECT c_custkey, c_name, c_mktsegment
+        |FROM customer
+        |WHERE NOT EXISTS (SELECT 1 FROM orders
+        |                  WHERE o_custkey = c_custkey AND o_totalprice > 350000)
+        |ORDER BY c_custkey""".stripMargin)),
+    Entry("rel08_year_trend", Relational.rel08YearTrend, Sql(
+      """SELECT CAST(YEAR(o_orderdate) AS BIGINT) AS order_year,
+        |  COUNT(*) AS n_orders,
+        |  CAST(SUM(CASE WHEN o_orderpriority = '1-URGENT' THEN 1 ELSE 0 END) AS BIGINT)
+        |    AS n_urgent,
+        |  ROUND(100.0 * SUM(CASE WHEN o_orderpriority = '1-URGENT' THEN 1.0 ELSE 0.0 END)
+        |    / COUNT(*), 4) AS pct_urgent,
+        |  ROUND(SUM(o_totalprice), 4) AS total_value
+        |FROM orders
+        |GROUP BY 1
+        |ORDER BY order_year""".stripMargin)),
+    Entry("rel09_rollup", Relational.rel09Rollup, Sql(
+      """SELECT r_name, n_name, COUNT(*) AS n_customers,
+        |  ROUND(SUM(c_acctbal), 4) AS total_acctbal
+        |FROM customer
+        |JOIN nation ON c_nationkey = n_nationkey
+        |JOIN region ON n_regionkey = r_regionkey
+        |GROUP BY ROLLUP(r_name, n_name)
+        |ORDER BY r_name ASC NULLS FIRST, n_name ASC NULLS FIRST""".stripMargin)),
+    Entry("rel10_percentiles", Relational.rel10Percentiles, Sql(
+      """SELECT o_orderpriority,
+        |  ROUND(quantile_cont(o_totalprice, 0.5), 4) AS p50,
+        |  ROUND(quantile_cont(o_totalprice, 0.9), 4) AS p90,
+        |  COUNT(*) AS n_orders
+        |FROM orders
+        |GROUP BY o_orderpriority
+        |ORDER BY o_orderpriority""".stripMargin)),
+    Entry("q18_large_orders", Relational.q18LargeOrders(_), Sql(
+      """WITH big AS (
+        |  SELECT l_orderkey, ROUND(SUM(l_quantity), 4) AS total_qty
+        |  FROM lineitem GROUP BY l_orderkey
+        |  HAVING ROUND(SUM(l_quantity), 4) > 300.0)
+        |SELECT c_custkey, c_name, o_orderkey, o_orderdate, o_totalprice, total_qty
+        |FROM big
+        |JOIN orders ON l_orderkey = o_orderkey
+        |JOIN customer ON o_custkey = c_custkey
+        |ORDER BY total_qty DESC, o_orderkey
+        |LIMIT 20""".stripMargin)),
+    Entry("evt05_retention", Events.evt05Retention, Sql(
+      """WITH weeks AS (
+        |  SELECT DISTINCT user_id, CAST(weekofyear(ts) AS BIGINT) AS week
+        |  FROM events),
+        |nxt AS (SELECT user_id AS u2, week - 1 AS wk FROM weeks)
+        |SELECT week, COUNT(*) AS active_users,
+        |  COUNT(*) FILTER (WHERE u2 IS NOT NULL) AS retained_next_week,
+        |  ROUND(CAST(COUNT(*) FILTER (WHERE u2 IS NOT NULL) AS DOUBLE)
+        |    / CAST(COUNT(*) AS DOUBLE), 4) AS retention_rate
+        |FROM weeks
+        |LEFT JOIN nxt ON week = wk AND user_id = u2
+        |GROUP BY week
+        |ORDER BY week""".stripMargin)),
+    Entry("evt06_moving_avg", Events.evt06MovingAvg, Sql(
+      """WITH daily AS (
+        |  SELECT event_type, date_trunc('day', ts) AS day,
+        |    ROUND(SUM(value), 4) AS daily_value
+        |  FROM events GROUP BY 1, 2)
+        |SELECT event_type, day, daily_value,
+        |  ROUND(AVG(daily_value) OVER (PARTITION BY event_type ORDER BY day
+        |    ROWS BETWEEN 6 PRECEDING AND CURRENT ROW), 4) AS ma7
+        |FROM daily
+        |ORDER BY event_type, day""".stripMargin)),
+    Entry("samp01_stratified", TextAnalysis.samp01Stratified(_), Sql(
+      """SELECT lang, COUNT(*) AS n_sampled, ROUND(AVG(n_chars), 4) AS avg_chars
+        |FROM documents
+        |WHERE doc_id % 100 < 30
+        |GROUP BY lang
+        |ORDER BY lang""".stripMargin)),
+    // samp08: same md5 hash-threshold keep rule, replayed verbatim —
+    // both engines emit lowercase-hex md5 and compare strings
+    // lexicographically (the USING SAMPLE analog; RNG sampling is
+    // deliberately not oracle-checkable, see SURVEY §2).
+    Entry("samp08_seeded_sample", TextAnalysis.samp08SeededSample(_), Sql(
+      """SELECT doc_id, source, lang, n_chars
+        |FROM documents
+        |WHERE substr(md5(CAST(doc_id AS VARCHAR) || ':7'), 1, 4) < '3333'
+        |ORDER BY doc_id""".stripMargin)),
+    Entry("dedup14_bloom_decontaminate", Dedup.dedup14BloomDecontaminate(_),
+      RowsOnly("the Bloom filter bit layout is engine-private (no SQL can replay might_contain); " +
+        "DedupSimilaritySpec pins no false negatives vs exact dedup07")),
+    // eval05: txt29's hashed-classifier score CTE + txt20's Gopher
+    // verdict CTE joined per doc, then every threshold's counts as
+    // FILTERed aggregates grouped by a VALUES threshold grid — the
+    // same one-pass conditional-sum curve the Spark side computes.
+    Entry("eval05_score_calibration", Evaluation.eval05ScoreCalibration(_), Sql(
+      s"""WITH $dkScorerVerdictCtes,
+        |th AS (SELECT CAST(x AS DOUBLE) AS threshold
+        |       FROM (VALUES (-0.10),(-0.05),(0.00),(0.05),(0.10),(0.15),(0.20)) t(x)),
+        |tot AS (SELECT COUNT(*) AS n, COUNT(*) FILTER (WHERE passes) AS pos FROM j)
+        |SELECT th.threshold,
+        |  COUNT(*) FILTER (WHERE q_score >= th.threshold) AS n_kept,
+        |  ROUND(COUNT(*) FILTER (WHERE q_score >= th.threshold) / CAST(tot.n AS DOUBLE), 4) AS kept_frac,
+        |  CASE WHEN COUNT(*) FILTER (WHERE q_score >= th.threshold) > 0 THEN
+        |    ROUND(COUNT(*) FILTER (WHERE q_score >= th.threshold AND passes)
+        |      / CAST(COUNT(*) FILTER (WHERE q_score >= th.threshold) AS DOUBLE), 4) END AS precision,
+        |  ROUND(COUNT(*) FILTER (WHERE q_score >= th.threshold AND passes)
+        |    / CAST(tot.pos AS DOUBLE), 4) AS recall
+        |FROM j CROSS JOIN th CROSS JOIN tot
+        |GROUP BY th.threshold, tot.n, tot.pos
+        |ORDER BY threshold""".stripMargin)),
     // eval06: identical log/diff arithmetic on both sides; corr and
     // stddev_pop differ only in aggregation order (~1e-15), absorbed
     // by the 4dp rounding.
-    "eval06_agreement" ->
+    Entry("eval06_agreement", Evaluation.eval06Agreement, Sql(
       """WITH r AS (SELECT l_orderkey,
         |    SUM(l_extendedprice * (1.0 - l_discount) * (1.0 + l_tax)) AS rec
         |  FROM lineitem GROUP BY l_orderkey),
@@ -636,213 +673,13 @@ object SparkEntry {
         |  ROUND(s.md + 1.96 * s.sd, 4) AS loa_hi,
         |  ROUND(AVG(CASE WHEN ABS(p.d - s.md) <= 1.96 * s.sd
         |    THEN 1.0 ELSE 0.0 END), 4) AS within_loa
-        |FROM p, s GROUP BY s.n, s.r, s.md, s.sd""".stripMargin,
-    "q01_pricing_summary" ->
-      """SELECT l_returnflag, l_linestatus,
-        |  ROUND(SUM(l_quantity), 4) AS sum_qty,
-        |  ROUND(SUM(l_extendedprice), 4) AS sum_base_price,
-        |  ROUND(SUM(l_extendedprice * (1 - l_discount)), 4) AS sum_disc_price,
-        |  ROUND(SUM(l_extendedprice * (1 - l_discount) * (1 + l_tax)), 4) AS sum_charge,
-        |  ROUND(AVG(l_quantity), 4) AS avg_qty,
-        |  ROUND(AVG(l_extendedprice), 4) AS avg_price,
-        |  ROUND(AVG(l_discount), 4) AS avg_disc,
-        |  COUNT(*) AS count_order
-        |FROM lineitem
-        |WHERE l_shipdate <= TIMESTAMP '1999-12-01'
-        |GROUP BY l_returnflag, l_linestatus
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin,
-    "q03_shipping_priority" ->
-      """SELECT l_orderkey, o_orderdate, o_orderpriority,
-        |  ROUND(SUM(l_extendedprice * (1 - l_discount)), 4) AS revenue
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |WHERE c_mktsegment = 'BUILDING'
-        |  AND o_orderdate < TIMESTAMP '1998-06-15'
-        |  AND l_shipdate > TIMESTAMP '1998-06-15'
-        |GROUP BY l_orderkey, o_orderdate, o_orderpriority
-        |ORDER BY revenue DESC, l_orderkey
-        |LIMIT 10""".stripMargin,
-    "q04_order_priority" ->
-      """SELECT o_orderpriority, COUNT(*) AS order_count
-        |FROM orders
-        |WHERE o_orderdate >= TIMESTAMP '1997-01-01'
-        |  AND o_orderdate < TIMESTAMP '1998-01-01'
-        |  AND EXISTS (SELECT 1 FROM lineitem WHERE l_orderkey = o_orderkey)
-        |GROUP BY o_orderpriority
-        |ORDER BY o_orderpriority""".stripMargin,
-    "q05_region_volume" ->
-      """SELECT n_name,
-        |  ROUND(SUM(l_extendedprice * (1 - l_discount)), 4) AS revenue
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
-        |JOIN nation ON s_nationkey = n_nationkey
-        |JOIN region ON n_regionkey = r_regionkey
-        |WHERE r_name = 'EUROPE'
-        |  AND o_orderdate >= TIMESTAMP '1996-01-01'
-        |  AND o_orderdate < TIMESTAMP '1998-01-01'
-        |GROUP BY n_name
-        |ORDER BY revenue DESC, n_name""".stripMargin,
-    "q06_revenue_forecast" ->
-      """SELECT ROUND(SUM(l_extendedprice * l_discount), 4) AS revenue,
-        |  COUNT(*) AS n_items
-        |FROM lineitem
-        |WHERE l_shipdate >= TIMESTAMP '1997-01-01'
-        |  AND l_shipdate < TIMESTAMP '1998-01-01'
-        |  AND l_discount BETWEEN 0.03 AND 0.07
-        |  AND l_quantity < 24""".stripMargin,
-    "q07_top_parts" ->
-      """SELECT p_brand,
-        |  ROUND(SUM(l_quantity), 4) AS total_qty,
-        |  ROUND(SUM(l_extendedprice * (1 - l_discount)), 4) AS revenue,
-        |  COUNT(*) AS n_lines
-        |FROM lineitem JOIN part ON l_partkey = p_partkey
-        |GROUP BY p_brand
-        |ORDER BY revenue DESC, p_brand
-        |LIMIT 10""".stripMargin,
-    "q10_returned_items" ->
-      """SELECT c_custkey, c_name, n_name,
-        |  ROUND(SUM(l_extendedprice * (1 - l_discount)), 4) AS revenue
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN nation ON c_nationkey = n_nationkey
-        |WHERE l_returnflag = 'R'
-        |GROUP BY c_custkey, c_name, n_name
-        |ORDER BY revenue DESC, c_custkey
-        |LIMIT 20""".stripMargin,
-    "rel01_running_total" ->
-      """SELECT o_custkey, o_orderkey, o_orderdate,
-        |  ROUND(SUM(o_totalprice) OVER (
-        |    PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 4)
-        |    AS running_total
-        |FROM orders""".stripMargin,
-    "rel02_topn_per_group" ->
-      """SELECT o_custkey, rn, o_orderkey, o_totalprice FROM (
-        |  SELECT o_custkey, o_orderkey, o_totalprice,
-        |    ROW_NUMBER() OVER (
-        |      PARTITION BY o_custkey
-        |      ORDER BY o_totalprice DESC, o_orderkey) AS rn
-        |  FROM orders) t
-        |WHERE rn <= 3""".stripMargin,
-    "rel03_distinct_agg" ->
-      """SELECT c_mktsegment,
-        |  COUNT(DISTINCT c_nationkey) AS n_nations,
-        |  COUNT(*) AS n_customers,
-        |  ROUND(AVG(c_acctbal), 4) AS avg_acctbal
-        |FROM customer
-        |GROUP BY c_mktsegment
-        |ORDER BY c_mktsegment""".stripMargin,
-    "rel04_bucket_histogram" ->
-      """SELECT
-        |  CASE WHEN o_totalprice < 50000 THEN '0-50k'
-        |       WHEN o_totalprice < 150000 THEN '50k-150k'
-        |       WHEN o_totalprice < 300000 THEN '150k-300k'
-        |       ELSE '300k+' END AS price_bucket,
-        |  COUNT(*) AS n_orders,
-        |  ROUND(AVG(o_totalprice), 4) AS avg_price
-        |FROM orders
-        |GROUP BY 1
-        |ORDER BY price_bucket""".stripMargin,
-    "rel05_corr_stats" ->
-      """SELECT
-        |  ROUND(CORR(l_quantity, l_extendedprice), 4) AS corr_qty_price,
-        |  ROUND(CORR(l_discount, l_extendedprice), 4) AS corr_disc_price,
-        |  ROUND(STDDEV_SAMP(l_extendedprice), 4) AS stddev_price,
-        |  ROUND(AVG(ABS(l_extendedprice - l_quantity * 1000)), 4) AS avg_abs_diff
-        |FROM lineitem""".stripMargin,
-    "rel06_union_entities" ->
-      """SELECT * FROM (
-        |  SELECT 'customer' AS source, CAST(c_custkey AS BIGINT) AS entity_id,
-        |    LOWER(c_name) AS entity_name, CAST(c_nationkey AS BIGINT) AS nationkey
-        |  FROM customer
-        |  UNION ALL
-        |  SELECT 'supplier' AS source, CAST(s_suppkey AS BIGINT) AS entity_id,
-        |    LOWER(s_name) AS entity_name, CAST(s_nationkey AS BIGINT) AS nationkey
-        |  FROM supplier) t
-        |ORDER BY source, entity_id""".stripMargin,
-    "rel07_anti_join" ->
-      """SELECT c_custkey, c_name, c_mktsegment
-        |FROM customer
-        |WHERE NOT EXISTS (SELECT 1 FROM orders
-        |                  WHERE o_custkey = c_custkey AND o_totalprice > 350000)
-        |ORDER BY c_custkey""".stripMargin,
-    "rel08_year_trend" ->
-      """SELECT CAST(YEAR(o_orderdate) AS BIGINT) AS order_year,
-        |  COUNT(*) AS n_orders,
-        |  CAST(SUM(CASE WHEN o_orderpriority = '1-URGENT' THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n_urgent,
-        |  ROUND(100.0 * SUM(CASE WHEN o_orderpriority = '1-URGENT' THEN 1.0 ELSE 0.0 END)
-        |    / COUNT(*), 4) AS pct_urgent,
-        |  ROUND(SUM(o_totalprice), 4) AS total_value
-        |FROM orders
-        |GROUP BY 1
-        |ORDER BY order_year""".stripMargin,
-    "rel09_rollup" ->
-      """SELECT r_name, n_name, COUNT(*) AS n_customers,
-        |  ROUND(SUM(c_acctbal), 4) AS total_acctbal
-        |FROM customer
-        |JOIN nation ON c_nationkey = n_nationkey
-        |JOIN region ON n_regionkey = r_regionkey
-        |GROUP BY ROLLUP(r_name, n_name)
-        |ORDER BY r_name ASC NULLS FIRST, n_name ASC NULLS FIRST""".stripMargin,
-    "rel10_percentiles" ->
-      """SELECT o_orderpriority,
-        |  ROUND(quantile_cont(o_totalprice, 0.5), 4) AS p50,
-        |  ROUND(quantile_cont(o_totalprice, 0.9), 4) AS p90,
-        |  COUNT(*) AS n_orders
-        |FROM orders
-        |GROUP BY o_orderpriority
-        |ORDER BY o_orderpriority""".stripMargin,
-    "q18_large_orders" ->
-      """WITH big AS (
-        |  SELECT l_orderkey, ROUND(SUM(l_quantity), 4) AS total_qty
-        |  FROM lineitem GROUP BY l_orderkey
-        |  HAVING ROUND(SUM(l_quantity), 4) > 300.0)
-        |SELECT c_custkey, c_name, o_orderkey, o_orderdate, o_totalprice, total_qty
-        |FROM big
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |ORDER BY total_qty DESC, o_orderkey
-        |LIMIT 20""".stripMargin,
-    "evt05_retention" ->
-      """WITH weeks AS (
-        |  SELECT DISTINCT user_id, CAST(weekofyear(ts) AS BIGINT) AS week
-        |  FROM events),
-        |nxt AS (SELECT user_id AS u2, week - 1 AS wk FROM weeks)
-        |SELECT week, COUNT(*) AS active_users,
-        |  COUNT(*) FILTER (WHERE u2 IS NOT NULL) AS retained_next_week,
-        |  ROUND(CAST(COUNT(*) FILTER (WHERE u2 IS NOT NULL) AS DOUBLE)
-        |    / CAST(COUNT(*) AS DOUBLE), 4) AS retention_rate
-        |FROM weeks
-        |LEFT JOIN nxt ON week = wk AND user_id = u2
-        |GROUP BY week
-        |ORDER BY week""".stripMargin,
-    "evt06_moving_avg" ->
-      """WITH daily AS (
-        |  SELECT event_type, date_trunc('day', ts) AS day,
-        |    ROUND(SUM(value), 4) AS daily_value
-        |  FROM events GROUP BY 1, 2)
-        |SELECT event_type, day, daily_value,
-        |  ROUND(AVG(daily_value) OVER (PARTITION BY event_type ORDER BY day
-        |    ROWS BETWEEN 6 PRECEDING AND CURRENT ROW), 4) AS ma7
-        |FROM daily
-        |ORDER BY event_type, day""".stripMargin,
-    "samp01_stratified" ->
-      """SELECT lang, COUNT(*) AS n_sampled, ROUND(AVG(n_chars), 4) AS avg_chars
-        |FROM documents
-        |WHERE doc_id % 100 < 30
-        |GROUP BY lang
-        |ORDER BY lang""".stripMargin,
+        |FROM p, s GROUP BY s.n, s.r, s.md, s.sd""".stripMargin)),
     // eval07: eval05's score+verdict CTE chain collapsed to
     // per-distinct-score (np, nn) bins, a strictly-below running
     // negative count over the bins, and the tie-aware rank-sum AUC
     // identity as one fold — integer arithmetic up to the final
     // divisions, so the engines agree bit-for-bit.
-    "eval07_roc_auc" ->
+    Entry("eval07_roc_auc", Evaluation.eval07RocAuc(_), Sql(
       s"""WITH $dkScorerVerdictCtes,
         |b AS (SELECT q_score,
         |    COUNT(*) FILTER (WHERE passes) AS np,
@@ -861,65 +698,8 @@ object SparkEntry {
         |  CASE WHEN SUM(np) > 0 AND SUM(nn) > 0 THEN
         |    ROUND(2.0 * (CAST(SUM(np * cum_nn) AS DOUBLE) + 0.5 * CAST(SUM(np * nn) AS DOUBLE))
         |      / (CAST(SUM(np) AS DOUBLE) * CAST(SUM(nn) AS DOUBLE)) - 1.0, 4) + 0.0 END AS gini
-        |FROM c""".stripMargin,
-    // eval05: txt29's hashed-classifier score CTE + txt20's Gopher
-    // verdict CTE joined per doc, then every threshold's counts as
-    // FILTERed aggregates grouped by a VALUES threshold grid — the
-    // same one-pass conditional-sum curve the Spark side computes.
-    // dedup14 is [rows-only]: the Bloom filter's bit layout is
-    // engine-private (no SQL oracle can replay might_contain).
-    "eval05_score_calibration" ->
-      s"""WITH $dkScorerVerdictCtes,
-        |th AS (SELECT CAST(x AS DOUBLE) AS threshold
-        |       FROM (VALUES (-0.10),(-0.05),(0.00),(0.05),(0.10),(0.15),(0.20)) t(x)),
-        |tot AS (SELECT COUNT(*) AS n, COUNT(*) FILTER (WHERE passes) AS pos FROM j)
-        |SELECT th.threshold,
-        |  COUNT(*) FILTER (WHERE q_score >= th.threshold) AS n_kept,
-        |  ROUND(COUNT(*) FILTER (WHERE q_score >= th.threshold) / CAST(tot.n AS DOUBLE), 4) AS kept_frac,
-        |  CASE WHEN COUNT(*) FILTER (WHERE q_score >= th.threshold) > 0 THEN
-        |    ROUND(COUNT(*) FILTER (WHERE q_score >= th.threshold AND passes)
-        |      / CAST(COUNT(*) FILTER (WHERE q_score >= th.threshold) AS DOUBLE), 4) END AS precision,
-        |  ROUND(COUNT(*) FILTER (WHERE q_score >= th.threshold AND passes)
-        |    / CAST(tot.pos AS DOUBLE), 4) AS recall
-        |FROM j CROSS JOIN th CROSS JOIN tot
-        |GROUP BY th.threshold, tot.n, tot.pos
-        |ORDER BY threshold""".stripMargin,
-    // samp08: same md5 hash-threshold keep rule, replayed verbatim —
-    // both engines emit lowercase-hex md5 and compare strings
-    // lexicographically (the USING SAMPLE analog; RNG sampling is
-    // deliberately not oracle-checkable, see SURVEY §2).
-    // samp12: samp08's hash-threshold rule weighted by the
-    // temperature keep rate — the rate double (one sqrt of an exact
-    // integer ratio) and the floored uint32 threshold are computed
-    // identically, so the kept set matches bit for bit.
-    "samp12_mixture_sample" ->
-      """WITH c AS (SELECT source, COUNT(*) AS n_docs,
-        |    CAST(SUM(n_chars) AS BIGINT) AS n_chars
-        |  FROM documents GROUP BY 1),
-        |m AS (SELECT MIN(n_chars) AS c_min FROM c),
-        |r AS (SELECT source, n_docs, n_chars,
-        |    SQRT(CAST(c_min AS DOUBLE) / n_chars) AS rate,
-        |    CAST(FLOOR(SQRT(CAST(c_min AS DOUBLE) / n_chars) * 4294967296.0)
-        |      AS BIGINT) AS thr
-        |  FROM c, m),
-        |k AS (SELECT d.source,
-        |    COUNT(*) FILTER (WHERE
-        |      ('0x' || substr(md5(CAST(d.doc_id AS VARCHAR) || ':7'), 1, 8))::BIGINT
-        |        < r.thr) AS n_kept
-        |  FROM documents d JOIN r USING (source) GROUP BY 1)
-        |SELECT r.source, CAST(r.n_docs AS BIGINT) AS n_docs,
-        |  r.n_chars,
-        |  ROUND(r.rate, 6) AS keep_rate,
-        |  CAST(k.n_kept AS BIGINT) AS n_kept,
-        |  ROUND(CAST(k.n_kept AS DOUBLE) / r.n_docs, 6) AS realized_rate
-        |FROM r JOIN k USING (source)
-        |ORDER BY source""".stripMargin,
-    "samp08_seeded_sample" ->
-      """SELECT doc_id, source, lang, n_chars
-        |FROM documents
-        |WHERE substr(md5(CAST(doc_id AS VARCHAR) || ':7'), 1, 4) < '3333'
-        |ORDER BY doc_id""".stripMargin,
-    "xref01_id_map" ->
+        |FROM c""".stripMargin)),
+    Entry("xref01_id_map", Linkage.xref01IdMap, Sql(
       """SELECT * FROM (
         |  SELECT 'customer' AS source, LOWER(REPLACE(c_name, 'Customer#', '')) AS key,
         |    CAST(c_custkey AS VARCHAR) AS source_id FROM customer
@@ -929,8 +709,8 @@ object SparkEntry {
         |  UNION ALL
         |  SELECT 'part' AS source, LOWER(p_name) AS key,
         |    CAST(p_partkey AS VARCHAR) AS source_id FROM part) t
-        |ORDER BY source, key""".stripMargin,
-    "xref02_unified_entities" ->
+        |ORDER BY source, key""".stripMargin)),
+    Entry("xref02_unified_entities", Linkage.xref02UnifiedEntities, Sql(
       """WITH spine AS (
         |  SELECT DISTINCT entity_id FROM (
         |    SELECT CAST(c_custkey AS BIGINT) AS entity_id FROM customer
@@ -953,8 +733,8 @@ object SparkEntry {
         |LEFT JOIN profile ON entity_id = p_id
         |LEFT JOIN orderagg ON entity_id = o_id
         |LEFT JOIN eventagg ON entity_id = e_id
-        |ORDER BY entity_id""".stripMargin,
-    "xref03_coverage_stats" ->
+        |ORDER BY entity_id""".stripMargin)),
+    Entry("xref03_coverage_stats", Linkage.xref03CoverageStats, Sql(
       """WITH spine AS (
         |  SELECT DISTINCT entity_id FROM (
         |    SELECT CAST(c_custkey AS BIGINT) AS entity_id FROM customer
@@ -976,58 +756,8 @@ object SparkEntry {
         |  COUNT(*) AS n_entities, ROUND(SUM(total_spent), 4) AS total_value
         |FROM unified
         |GROUP BY 1, 2, 3
-        |ORDER BY has_profile, has_orders, has_events""".stripMargin,
-    "xref12_coverage_by_year" ->
-      """WITH spine AS (
-        |  SELECT DISTINCT entity_id FROM (
-        |    SELECT CAST(c_custkey AS BIGINT) AS entity_id FROM customer
-        |    UNION ALL SELECT CAST(o_custkey AS BIGINT) FROM orders
-        |    UNION ALL SELECT CAST(user_id AS BIGINT) FROM events) u),
-        |profile AS (SELECT CAST(c_custkey AS BIGINT) AS p_id FROM customer),
-        |orderagg AS (SELECT CAST(o_custkey AS BIGINT) AS o_id,
-        |  ROUND(SUM(o_totalprice), 4) AS total_spent FROM orders GROUP BY 1),
-        |eventagg AS (SELECT CAST(user_id AS BIGINT) AS e_id FROM events GROUP BY 1),
-        |unified AS (
-        |  SELECT entity_id, p_id IS NOT NULL AS has_profile,
-        |    o_id IS NOT NULL AS has_orders, e_id IS NOT NULL AS has_events,
-        |    COALESCE(total_spent, 0.0) AS total_spent
-        |  FROM spine
-        |  LEFT JOIN profile ON entity_id = p_id
-        |  LEFT JOIN orderagg ON entity_id = o_id
-        |  LEFT JOIN eventagg ON entity_id = e_id),
-        |fy AS (SELECT CAST(o_custkey AS BIGINT) AS entity_id,
-        |  MIN(CAST(year(o_orderdate) AS BIGINT)) AS year FROM orders GROUP BY 1)
-        |SELECT year, COUNT(*) AS n_entities,
-        |  COUNT(*) FILTER (WHERE has_profile) AS n_profile,
-        |  COUNT(*) FILTER (WHERE has_events) AS n_events_src,
-        |  COUNT(*) FILTER (WHERE has_profile AND has_orders AND has_events) AS n_all_sources,
-        |  ROUND(SUM(total_spent), 4) AS total_value
-        |FROM unified JOIN fy USING (entity_id)
-        |GROUP BY 1
-        |ORDER BY year""".stripMargin,
-    // xref13: the flags keep three-valued logic on purpose (NULL year
-    // + has_x=true -> NULL flag), matching both the Spark operator and
-    // the reference's paper_temporal_flags DuckDB view text.
-    "xref13_temporal_flags" ->
-      """WITH spine AS (
-        |  SELECT DISTINCT entity_id FROM (
-        |    SELECT CAST(c_custkey AS BIGINT) AS entity_id FROM customer
-        |    UNION ALL SELECT CAST(o_custkey AS BIGINT) FROM orders
-        |    UNION ALL SELECT CAST(user_id AS BIGINT) FROM events) u),
-        |orderagg AS (SELECT CAST(o_custkey AS BIGINT) AS o_id FROM orders GROUP BY 1),
-        |eventagg AS (SELECT CAST(user_id AS BIGINT) AS e_id FROM events GROUP BY 1),
-        |fy AS (SELECT CAST(o_custkey AS BIGINT) AS f_id,
-        |  MIN(CAST(year(o_orderdate) AS BIGINT)) AS year FROM orders GROUP BY 1)
-        |SELECT entity_id, year,
-        |  (year > 1996 AND e_id IS NOT NULL) AS events_metrics_stale,
-        |  (year > 1997 AND o_id IS NOT NULL) AS orders_coverage_incomplete,
-        |  (year IS NULL) AS year_missing
-        |FROM spine
-        |LEFT JOIN orderagg ON entity_id = o_id
-        |LEFT JOIN eventagg ON entity_id = e_id
-        |LEFT JOIN fy ON entity_id = f_id
-        |ORDER BY entity_id""".stripMargin,
-    "xref04_priority_dedup" ->
+        |ORDER BY has_profile, has_orders, has_events""".stripMargin)),
+    Entry("xref04_priority_dedup", Linkage.xref04PriorityDedup, Sql(
       s"""WITH d AS (
          |  SELECT doc_id, $dkBagFp AS fp, source,
          |    TRY_CAST(regexp_extract(source, '(\\d+)$$', 1) AS BIGINT) AS priority,
@@ -1036,15 +766,15 @@ object SparkEntry {
          |r AS (SELECT *, ROW_NUMBER() OVER (
          |    PARTITION BY fp ORDER BY priority, n_chars DESC, doc_id) AS rn FROM d)
          |SELECT doc_id, fp, source, priority, n_chars FROM r WHERE rn = 1
-         |ORDER BY fp, doc_id""".stripMargin,
-    "xref05_sanity_checks" ->
+         |ORDER BY fp, doc_id""".stripMargin)),
+    Entry("xref05_sanity_checks", Linkage.xref05SanityChecks, Sql(
       """SELECT COUNT(*) AS total,
         |  COUNT(*) FILTER (WHERE text IS NULL OR LENGTH(text) = 0) AS n_empty_text,
         |  COUNT(*) FILTER (WHERE lang NOT IN ('en','de','es','fr','zh')) AS n_bad_lang,
         |  COUNT(*) FILTER (WHERE n_chars != LENGTH(text)) AS n_len_mismatch,
         |  COUNT(DISTINCT doc_id) AS n_distinct_ids
-        |FROM documents""".stripMargin,
-    "txt01_stats" ->
+        |FROM documents""".stripMargin)),
+    Entry("txt01_stats", TextAnalysis.txt01Stats, Sql(
       s"""SELECT doc_id, lang,
          |  CAST(len($dkToks) AS BIGINT) AS n_tokens,
          |  CAST(LENGTH(text) AS BIGINT) AS n_chars_actual,
@@ -1053,8 +783,8 @@ object SparkEntry {
          |  ROUND(CAST(LENGTH(regexp_replace(LOWER(text), '[a-z0-9 ]', '', 'g')) AS DOUBLE)
          |    / CAST(LENGTH(text) AS DOUBLE), 4) AS punct_ratio
          |FROM documents
-         |ORDER BY doc_id""".stripMargin,
-    "txt02_langid" ->
+         |ORDER BY doc_id""".stripMargin)),
+    Entry("txt02_langid", TextAnalysis.txt02LangId, Sql(
       s"""WITH t AS (SELECT doc_id, lang, $dkToks AS w FROM documents),
          |s AS (SELECT doc_id, lang,
          |  len(list_filter(w, x -> x IN ('the','a','of','and'))) AS s_en,
@@ -1071,8 +801,8 @@ object SparkEntry {
          |       WHEN s_de >= s_es AND s_de >= s_fr THEN 'de'
          |       WHEN s_es >= s_fr THEN 'es' ELSE 'fr' END) AS agrees
          |FROM s
-         |ORDER BY doc_id""".stripMargin,
-    "txt03_quality" ->
+         |ORDER BY doc_id""".stripMargin)),
+    Entry("txt03_quality", TextAnalysis.txt03Quality, Sql(
       s"""WITH t AS (SELECT doc_id, $dkToks AS w FROM documents),
          |s AS (SELECT doc_id,
          |  ROUND(0.5 * LEAST(CAST(len(w) AS DOUBLE) / 80.0, 1.0)
@@ -1082,23 +812,23 @@ object SparkEntry {
          |FROM t)
          |SELECT doc_id, quality, n_tokens FROM s
          |WHERE quality >= 0.5
-         |ORDER BY doc_id""".stripMargin,
-    "txt04_fingerprint" ->
+         |ORDER BY doc_id""".stripMargin)),
+    Entry("txt04_fingerprint", TextAnalysis.txt04Fingerprint, Sql(
       s"""SELECT doc_id,
          |  md5(LOWER(trim(regexp_replace(text, '\\s+', ' ', 'g')))) AS fp,
          |  $dkBagFp AS bag_fp,
          |  COUNT(*) OVER (PARTITION BY $dkBagFp) AS bag_dup_count
          |FROM documents
-         |ORDER BY doc_id""".stripMargin,
-    "txt05_vocab_stats" ->
+         |ORDER BY doc_id""".stripMargin)),
+    Entry("txt05_vocab_stats", TextAnalysis.txt05VocabStats, Sql(
       s"""SELECT doc_id,
          |  CAST(len($dkToks) AS BIGINT) AS n_tokens,
          |  CAST(len(list_distinct($dkToks)) AS BIGINT) AS n_distinct,
          |  ROUND(CAST(len(list_distinct($dkToks)) AS DOUBLE)
          |    / CAST(len($dkToks) AS DOUBLE), 4) AS type_token_ratio
          |FROM documents
-         |ORDER BY doc_id""".stripMargin,
-    "txt06_top_ngrams" ->
+         |ORDER BY doc_id""".stripMargin)),
+    Entry("txt06_top_ngrams", TextAnalysis.txt06TopNgrams, Sql(
       s"""WITH t AS (SELECT doc_id, $dkToks AS w FROM documents),
          |b AS (SELECT doc_id,
          |  UNNEST(list_distinct([w[i] || ' ' || w[i+1] FOR i IN RANGE(1, len(w))])) AS bigram
@@ -1107,16 +837,16 @@ object SparkEntry {
          |FROM b
          |GROUP BY bigram
          |ORDER BY n_docs DESC, bigram
-         |LIMIT 20""".stripMargin,
-    "txt07_exact_label_match" ->
+         |LIMIT 20""".stripMargin)),
+    Entry("txt07_exact_label_match", TextAnalysis.txt07ExactLabelMatch, Sql(
       s"""WITH terms AS (SELECT UNNEST(['join','scan','filter','sort','merge','hash',
          |  'window','stream','batch','query']) AS term),
          |dt AS (SELECT doc_id, UNNEST(list_distinct($dkToks)) AS term FROM documents)
          |SELECT dt.term, COUNT(DISTINCT dt.doc_id) AS n_docs
          |FROM dt JOIN terms ON dt.term = terms.term
          |GROUP BY dt.term
-         |ORDER BY dt.term""".stripMargin,
-    "txt08_bm25_search" ->
+         |ORDER BY dt.term""".stripMargin)),
+    Entry("txt08_bm25_search", TextAnalysis.txt08Bm25Search(_), Sql(
       s"""WITH docs AS (SELECT doc_id, $dkToks AS toks FROM documents),
          |dl AS (SELECT doc_id, CAST(len(toks) AS DOUBLE) AS dl FROM docs),
          |stats AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n_docs, AVG(dl) AS avgdl FROM dl),
@@ -1133,8 +863,8 @@ object SparkEntry {
          |SELECT doc_id, ROUND(SUM(term_score), 4) AS bm25
          |FROM scored GROUP BY doc_id
          |ORDER BY bm25 DESC, doc_id
-         |LIMIT 20""".stripMargin,
-    "txt09_tfidf" ->
+         |LIMIT 20""".stripMargin)),
+    Entry("txt09_tfidf", TextAnalysis.txt09TfIdf, Sql(
       s"""WITH docs AS (SELECT doc_id, $dkToks AS toks FROM documents),
          |nd AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n_docs FROM docs),
          |terms AS (SELECT UNNEST(['join','scan','filter','sort','merge','hash',
@@ -1150,8 +880,8 @@ object SparkEntry {
          |  FROM tf JOIN df USING (term) CROSS JOIN nd)
          |SELECT doc_id, rank, term, ROUND(tfidf_raw, 4) AS tfidf
          |FROM wtd WHERE rank <= 3
-         |ORDER BY doc_id, rank""".stripMargin,
-    "txt10_jaro_winkler" ->
+         |ORDER BY doc_id, rank""".stripMargin)),
+    Entry("txt10_jaro_winkler", TextAnalysis.txt10JaroWinkler(_), Sql(
       """WITH probes AS (SELECT UNNEST(['cold widgets','big bolt','smal widget',
         |  'larje nut','shiny gear']) AS probe),
         |scored AS (
@@ -1163,8 +893,8 @@ object SparkEntry {
         |    ORDER BY score_raw DESC, p_partkey) AS rank FROM scored)
         |SELECT probe, p_partkey, p_name AS best_match, ROUND(score_raw, 4) AS score
         |FROM ranked WHERE rank = 1
-        |ORDER BY probe""".stripMargin,
-    "txt11_doc_chunks" ->
+        |ORDER BY probe""".stripMargin)),
+    Entry("txt11_doc_chunks", TextAnalysis.txt11DocChunks(_), Sql(
       s"""WITH docs AS (SELECT doc_id, $dkToks AS toks FROM documents),
          |st AS (SELECT doc_id, toks, len(toks) AS n_tokens,
          |  UNNEST(range(0, GREATEST(len(toks) - 1, 0) + 1, 40)) AS start
@@ -1175,8 +905,8 @@ object SparkEntry {
          |  CAST(len(list_slice(toks, start + 1, start + 50)) AS BIGINT) AS chunk_len,
          |  md5(array_to_string(list_slice(toks, start + 1, start + 50), ' ')) AS chunk_fp
          |FROM st
-         |ORDER BY doc_id, chunk_id""".stripMargin,
-    "txt12_bpe_tokens" ->
+         |ORDER BY doc_id, chunk_id""".stripMargin)),
+    Entry("txt12_bpe_tokens", TextAnalysis.txt12BpeTokens, Sql(
       s"""SELECT doc_id,
          |  CAST(len($dkToks) AS BIGINT) AS n_ws_tokens,
          |  CAST(len(regexp_extract_all(LOWER(text), '[a-z]+|[0-9]+|[^a-z0-9 ]')) AS BIGINT)
@@ -1184,8 +914,8 @@ object SparkEntry {
          |  ROUND(CAST(len(regexp_extract_all(LOWER(text), '[a-z]+|[0-9]+|[^a-z0-9 ]')) AS DOUBLE)
          |    / CAST(len($dkToks) AS DOUBLE), 4) AS bpe_per_word
          |FROM documents
-         |ORDER BY doc_id""".stripMargin,
-    "cat01_status" ->
+         |ORDER BY doc_id""".stripMargin)),
+    Entry("cat01_status", CatalogOps.cat01Status, Sql(
       """SELECT * FROM (
         |  SELECT 'trade' AS schema_name, 'customer' AS table_name, COUNT(*) AS n_rows FROM customer
         |  UNION ALL SELECT 'corpus', 'documents', COUNT(*) FROM documents
@@ -1197,162 +927,8 @@ object SparkEntry {
         |  UNION ALL SELECT 'trade', 'part', COUNT(*) FROM part
         |  UNION ALL SELECT 'trade', 'region', COUNT(*) FROM region
         |  UNION ALL SELECT 'trade', 'supplier', COUNT(*) FROM supplier) t
-        |ORDER BY schema_name, table_name""".stripMargin,
-    "xref06_total_mismatch" ->
-      """WITH lt AS (SELECT l_orderkey,
-        |    ROUND(SUM(l_extendedprice * (1 - l_discount)), 4) AS line_total,
-        |    COUNT(*) AS n_lines
-        |  FROM lineitem GROUP BY 1)
-        |SELECT o_orderkey, o_totalprice, line_total, n_lines,
-        |  ROUND(ABS(o_totalprice - line_total), 4) AS abs_diff
-        |FROM orders JOIN lt ON o_orderkey = l_orderkey
-        |ORDER BY abs_diff DESC, o_orderkey
-        |LIMIT 20""".stripMargin,
-    "txt20_gopher_filter" ->
-      s"""WITH tok AS (SELECT doc_id, UNNEST($dkToks) AS w FROM documents),
-         |a AS (SELECT doc_id, COUNT(*) AS n_tokens,
-         |  CAST(SUM(LENGTH(w)) AS BIGINT) AS sum_len,
-         |  COUNT(*) FILTER (WHERE NOT regexp_matches(w, '[A-Za-z0-9]'))
-         |    AS n_symbol,
-         |  COUNT(DISTINCT CASE WHEN w IN ('the','a','of','and') THEN w END)
-         |    AS n_stop_distinct
-         |  FROM tok GROUP BY 1),
-         |b AS (SELECT doc_id, n_tokens,
-         |  ROUND(CAST(sum_len AS DOUBLE) / n_tokens, 4) AS mean_tok_len,
-         |  ROUND(CAST(n_symbol AS DOUBLE) / n_tokens, 4) AS symbol_ratio,
-         |  n_stop_distinct FROM a),
-         |c AS (SELECT *, concat_ws(',',
-         |    CASE WHEN n_tokens < 50 THEN 'too_short' END,
-         |    CASE WHEN n_tokens > 100000 THEN 'too_long' END,
-         |    CASE WHEN mean_tok_len < 3 OR mean_tok_len > 10
-         |      THEN 'mean_len' END,
-         |    CASE WHEN symbol_ratio >= 0.1 THEN 'symbol' END,
-         |    CASE WHEN n_stop_distinct < 2 THEN 'stopword' END)
-         |  AS fail_reasons FROM b)
-         |SELECT doc_id, n_tokens, mean_tok_len, symbol_ratio,
-         |  n_stop_distinct, fail_reasons, fail_reasons = '' AS passes
-         |FROM c
-         |ORDER BY doc_id""".stripMargin,
-    // evt10: the oracle replays the md5 ingest-delay model and the
-    // lateness scan with ONE global window (exact at oracle scale);
-    // the Spark side's sharded two-level prefix max must be
-    // value-identical.
-    "evt10_lateness_profile" ->
-      s"""WITH $dkLatenessCtes
-        |SELECT date_trunc('day', ts) AS day, COUNT(*) AS n_events,
-        |  CAST(SUM(CASE WHEN late_us > 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_late,
-        |  CAST(SUM(CASE WHEN late_us >= 60000000 THEN 1 ELSE 0 END) AS BIGINT) AS n_late_1m,
-        |  CAST(SUM(CASE WHEN late_us >= 3600000000 THEN 1 ELSE 0 END) AS BIGINT) AS n_late_1h,
-        |  ROUND(MAX(late_us) / 1000000.0, 4) AS max_late_s
-        |FROM lt GROUP BY 1 ORDER BY 1""".stripMargin,
-    // evt11: the same lateness model folded into the candidate-delay
-    // drop curve — an event is dropped under watermark delay D iff
-    // late_us > D (Structured Streaming's event_time < hwm − D rule).
-    "evt11_watermark_curve" ->
-      s"""WITH $dkLatenessCtes,
-        |t AS (SELECT COUNT(*) AS n FROM lt),
-        |d AS (SELECT CAST(x AS BIGINT) AS delay_s
-        |      FROM (VALUES (0),(30),(60),(300),(1800),(3600),(7200)) v(x))
-        |SELECT d.delay_s,
-        |  CAST(COUNT(*) FILTER (WHERE lt.late_us > d.delay_s * 1000000) AS BIGINT) AS n_dropped,
-        |  ROUND(COUNT(*) FILTER (WHERE lt.late_us > d.delay_s * 1000000)
-        |    / CAST(t.n AS DOUBLE), 4) AS drop_frac,
-        |  ROUND(1.0 - COUNT(*) FILTER (WHERE lt.late_us > d.delay_s * 1000000)
-        |    / CAST(t.n AS DOUBLE), 4) AS completeness
-        |FROM lt CROSS JOIN d CROSS JOIN t
-        |GROUP BY d.delay_s, t.n
-        |ORDER BY delay_s""".stripMargin,
-    "evt08_daily_anomalies" ->
-      """WITH daily AS (SELECT event_type, date_trunc('day', ts) AS day,
-        |    COUNT(*) AS n_events
-        |  FROM events GROUP BY 1, 2),
-        |s AS (SELECT event_type,
-        |    CAST(SUM(n_events) AS DOUBLE) / COUNT(*) AS mu
-        |  FROM daily GROUP BY 1),
-        |r AS (SELECT d.event_type, d.day, d.n_events, s.mu,
-        |    ROUND(d.n_events / s.mu, 4) AS ratio
-        |  FROM daily d JOIN s USING (event_type)),
-        |k AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY event_type
-        |    ORDER BY ABS(ratio - 1) DESC, day) AS rn FROM r)
-        |SELECT event_type, day, n_events,
-        |  ROUND(mu, 4) AS mean_daily, ratio
-        |FROM k WHERE rn <= 3
-        |ORDER BY event_type, day""".stripMargin,
-    // evt09: the oracle is the NAIVE inequality join — DuckDB's
-    // IEJoin handles it natively; the Spark side's bin-bucketed
-    // equi-join must reproduce it exactly.
-    "evt09_interval_join" ->
-      """WITH e AS (SELECT event_id, user_id,
-        |    -- FLOOR, not CAST: epoch() is fractional and DuckDB's
-        |    -- double->BIGINT cast rounds where Spark's unix_timestamp
-        |    -- truncates
-        |    CAST(FLOOR(epoch(ts)) AS BIGINT) AS sec, event_type FROM events),
-        |v AS (SELECT user_id, event_id AS view_id, sec AS view_sec
-        |  FROM e WHERE event_type = 'view'),
-        |p AS (SELECT user_id, event_id AS purchase_id, sec AS p_sec
-        |  FROM e WHERE event_type = 'purchase')
-        |SELECT p.purchase_id, v.view_id, p.p_sec - v.view_sec AS sec_before
-        |FROM p JOIN v ON p.user_id = v.user_id
-        | AND v.view_sec >= p.p_sec - 1800 AND v.view_sec < p.p_sec
-        |ORDER BY purchase_id, view_id""".stripMargin,
-    // cat03: one SELECT block per profiled column (the unpivoted shape
-    // of the single wide aggregate the Spark side runs per table).
-    // cat04: the shared Morton fragment, then identical bucket/extent
-    // aggregation — integer arithmetic end to end.
-    "cat04_zorder_layout" ->
-      s"""WITH $dkMortonCtes
-        |SELECT z >> 26 AS bucket,
-        |  COUNT(*) AS n_rows,
-        |  MIN(x) AS min_x, MAX(x) AS max_x,
-        |  MIN(y) AS min_y, MAX(y) AS max_y,
-        |  (MAX(x) - MIN(x) + 1) * (MAX(y) - MIN(y) + 1) AS extent_area
-        |FROM zc GROUP BY 1 ORDER BY 1""".stripMargin,
-    // cat05: the prune audit replayed off the same Morton cells —
-    // both layouts' bucket extents, the deterministic 16-window
-    // predicate grid, exact per-window selectivity, and the
-    // extent-intersection scan test.
-    "cat05_prune_audit" ->
-      s"""WITH $dkMortonCtes,
-        |zb AS (SELECT 'zorder' AS layout, z >> 26 AS bucket, COUNT(*) AS n_rows,
-        |    MIN(x) AS min_x, MAX(x) AS max_x, MIN(y) AS min_y, MAX(y) AS max_y
-        |  FROM zc GROUP BY 1, 2),
-        |xb AS (SELECT 'linear_x' AS layout, x >> 10 AS bucket, COUNT(*) AS n_rows,
-        |    MIN(x) AS min_x, MAX(x) AS max_x, MIN(y) AS min_y, MAX(y) AS max_y
-        |  FROM zc GROUP BY 1, 2),
-        |bk AS (SELECT * FROM zb UNION ALL SELECT * FROM xb),
-        |p AS (SELECT CAST(range AS BIGINT) AS qid,
-        |    (range // 4) * 16384 AS x_lo, (range // 4) * 16384 + 8192 AS x_hi,
-        |    (range % 4) * 16384 AS y_lo, (range % 4) * 16384 + 8192 AS y_hi
-        |  FROM range(16)),
-        |t AS (SELECT COUNT(*) AS total FROM zc),
-        |sel AS (SELECT (x // 16384) * 4 + (y // 16384) AS qid, COUNT(*) AS n_match
-        |  FROM zc WHERE (x % 16384) < 8192 AND (y % 16384) < 8192 GROUP BY 1),
-        |a AS (SELECT bk.layout, p.qid,
-        |    COUNT(*) FILTER (WHERE bk.min_x < p.x_hi AND bk.max_x >= p.x_lo
-        |      AND bk.min_y < p.y_hi AND bk.max_y >= p.y_lo) AS n_buckets_scanned,
-        |    SUM(CASE WHEN bk.min_x < p.x_hi AND bk.max_x >= p.x_lo
-        |      AND bk.min_y < p.y_hi AND bk.max_y >= p.y_lo
-        |      THEN bk.n_rows ELSE 0 END) AS rows_scanned
-        |  FROM bk CROSS JOIN p GROUP BY 1, 2)
-        |SELECT a.layout, a.qid,
-        |  CAST(a.n_buckets_scanned AS BIGINT) AS n_buckets_scanned,
-        |  ROUND(CAST(a.rows_scanned AS DOUBLE) / t.total, 4) AS frac_rows_scanned,
-        |  ROUND(CAST(COALESCE(sel.n_match, 0) AS DOUBLE) / t.total, 4) AS selectivity
-        |FROM a LEFT JOIN sel USING (qid) CROSS JOIN t
-        |ORDER BY layout, qid""".stripMargin,
-    "cat03_column_stats" -> {
-      def block(table: String, c: String) =
-        s"""SELECT '$table' AS table_name, '$c' AS column_name,
-           |  COUNT(*) AS n_rows, COUNT($c) AS n_nonnull,
-           |  COUNT(DISTINCT $c) AS n_distinct,
-           |  CAST(MIN($c) AS VARCHAR) AS min_val, CAST(MAX($c) AS VARCHAR) AS max_val
-           |FROM $table""".stripMargin
-      (Seq("doc_id", "lang", "source", "n_chars").map(block("documents", _)) ++
-        Seq("o_orderkey", "o_custkey", "o_orderstatus", "o_orderpriority")
-          .map(block("orders", _)))
-        .mkString("", "\nUNION ALL\n", "\nORDER BY table_name, column_name")
-    },
-    "cat02_snapshot_diff" ->
+        |ORDER BY schema_name, table_name""".stripMargin)),
+    Entry("cat02_snapshot_diff", CatalogOps.cat02SnapshotDiff, Sql(
       """WITH before_t AS (SELECT o_orderkey, o_totalprice FROM orders),
         |after_t AS (
         |  SELECT o_orderkey,
@@ -1371,8 +947,8 @@ object SparkEntry {
         |FROM before_t b FULL OUTER JOIN after_t a
         |  ON b.o_orderkey = a.o_orderkey
         |GROUP BY 1
-        |ORDER BY 1""".stripMargin,
-    "ing01_upsert" ->
+        |ORDER BY 1""".stripMargin)),
+    Entry("ing01_upsert", CatalogOps.ing01Upsert, Sql(
       """WITH base AS (
         |  SELECT o_orderkey, o_orderpriority, o_totalprice FROM orders),
         |upd AS (
@@ -1394,25 +970,24 @@ object SparkEntry {
         |  ROUND(SUM(o_totalprice), 4) AS total_price
         |FROM merged
         |GROUP BY 1
-        |ORDER BY 1""".stripMargin,
+        |ORDER BY 1""".stripMargin)),
+    Entry("ing02_scd2_history", CatalogOps.ing02Scd2History, Sql(
+      """SELECT o_custkey,
+        |  CAST(ROW_NUMBER() OVER w AS BIGINT) AS version,
+        |  o_orderkey,
+        |  o_orderdate AS valid_from,
+        |  LEAD(o_orderdate, 1) OVER w AS valid_to,
+        |  LEAD(o_orderdate, 1) OVER w IS NULL AS is_current,
+        |  o_totalprice
+        |FROM orders
+        |WHERE o_custkey % 50 = 0
+        |WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
+        |ORDER BY o_custkey, version""".stripMargin)),
     // ing03: the Spark side serializes the lake's triple store to
     // N-Triples text and parses it back; the oracle rebuilds the same
     // triple set directly — a serializer or parser defect (bracket
     // stripping, literal flagging, escape handling) changes rows.
-    // ing10: the corruption rule is doc_id arithmetic, so the audit
-    // replays directly off documents — good rows keep their payload
-    // (sum_chars over the clean subset), quarantined rows count the
-    // corrupted subset.
-    "ing10_jsonl_quarantine" ->
-      """SELECT * FROM (
-        |  SELECT 'good' AS status, COUNT(*) AS n_rows,
-        |    CAST(SUM(n_chars) AS BIGINT) AS sum_chars
-        |  FROM documents WHERE doc_id % 7 != 3
-        |  UNION ALL
-        |  SELECT 'quarantined', COUNT(*), CAST(NULL AS BIGINT)
-        |  FROM documents WHERE doc_id % 7 = 3)
-        |ORDER BY status""".stripMargin,
-    "ing03_ntriples" ->
+    Entry("ing03_ntriples", Rdf.ing03Ntriples, Sql(
       """WITH triples AS (
         |  SELECT 'cust:' || CAST(c_custkey AS VARCHAR) AS s, 'in_nation' AS p,
         |    'nat:' || CAST(c_nationkey AS VARCHAR) AS o, FALSE AS is_literal
@@ -1430,12 +1005,12 @@ object SparkEntry {
         |  SELECT 'nat:' || CAST(n_nationkey AS VARCHAR), 'flagged', 'true', TRUE
         |  FROM nation WHERE n_nationkey % 3 = 0)
         |SELECT s, p, o, is_literal FROM triples
-        |ORDER BY s, p, o""".stripMargin,
+        |ORDER BY s, p, o""".stripMargin)),
     // ing04: the OBO fixture's expected parse is written out
     // independently as VALUES (DuckDB cannot parse OBO); the closure
     // over those edges replays what the Spark side computes from the
     // parsed file through the SPARQL text front-end.
-    "ing04_obo_closure" ->
+    Entry("ing04_obo_closure", Rdf.ing04OboClosure, Sql(
       """WITH RECURSIVE ed(src, dst) AS (
         |  VALUES ('GT:0002', 'GT:0001'), ('GT:0003', 'GT:0002'),
         |         ('GT:0003', 'GT:0001')),
@@ -1449,11 +1024,11 @@ object SparkEntry {
         |  WHERE r.hops < 8),
         |cl AS (SELECT src AS t, dst AS anc FROM r GROUP BY src, dst)
         |SELECT cl.t, cl.anc, lab.l FROM cl JOIN lab ON cl.anc = lab.id
-        |ORDER BY cl.t, cl.anc""".stripMargin,
+        |ORDER BY cl.t, cl.anc""".stripMargin)),
     // ing05: like ing04, the fixture's expected SKOS export is written
     // independently as VALUES — en-preferred labels, definition-over-
     // scopeNote, lexical fallback, inverted narrower, concept gating.
-    "ing05_skos_terms" ->
+    Entry("ing05_skos_terms", Rdf.ing05SkosTerms, Sql(
       """SELECT * FROM (VALUES
         |  ('http://ex.org/c1', 'Physics', 'The study of matter.',
         |   'physical sciences', CAST(0 AS BIGINT), CAST(0 AS BIGINT)),
@@ -1462,11 +1037,11 @@ object SparkEntry {
         |  ('http://ex.org/c3', 'Chimie', '',
         |   '', CAST(1 AS BIGINT), CAST(0 AS BIGINT))
         |) AS t(id, label, definition, synonyms, n_parents, n_xrefs)
-        |ORDER BY id""".stripMargin,
+        |ORDER BY id""".stripMargin)),
     // ing06: SAME expected export as ing05 — the Turtle fixture
     // abbreviates the identical concept scheme, so format equivalence
     // is exactly what the shared oracle pins.
-    "ing06_turtle_skos" ->
+    Entry("ing06_turtle_skos", Rdf.ing06TurtleSkos, Sql(
       """SELECT * FROM (VALUES
         |  ('http://ex.org/c1', 'Physics', 'The study of matter.',
         |   'physical sciences', CAST(0 AS BIGINT), CAST(0 AS BIGINT)),
@@ -1475,34 +1050,11 @@ object SparkEntry {
         |  ('http://ex.org/c3', 'Chimie', '',
         |   '', CAST(1 AS BIGINT), CAST(0 AS BIGINT))
         |) AS t(id, label, definition, synonyms, n_parents, n_xrefs)
-        |ORDER BY id""".stripMargin,
-    // ing08: SAME expected export again from the RDF/XML spelling of
-    // the scheme — three syntaxes now share one oracle.
-    "ing08_rdfxml_skos" ->
-      """SELECT * FROM (VALUES
-        |  ('http://ex.org/c1', 'Physics', 'The study of matter.',
-        |   'physical sciences', CAST(0 AS BIGINT), CAST(0 AS BIGINT)),
-        |  ('http://ex.org/c2', 'Optics', 'About light.',
-        |   '', CAST(1 AS BIGINT), CAST(1 AS BIGINT)),
-        |  ('http://ex.org/c3', 'Chimie', '',
-        |   '', CAST(1 AS BIGINT), CAST(0 AS BIGINT))
-        |) AS t(id, label, definition, synonyms, n_parents, n_xrefs)
-        |ORDER BY id""".stripMargin,
-    // ing09: the two constant fixtures' per-graph inventory — 7 OBO
-    // triples (3 is_a/part_of edges + 4 term labels), 15 Turtle
-    // triples;
-    // hand-checkable against the fixture text, any parser or
-    // graph-tagging defect moves a count or a min subject.
-    "ing09_graph_store" ->
-      """SELECT * FROM (VALUES
-        |  ('onto.obo', CAST(7 AS BIGINT), 'GT:0001'),
-        |  ('skos.ttl', CAST(15 AS BIGINT), 'http://ex.org/c1')
-        |) AS t(g, n_triples, first_subject)
-        |ORDER BY g""".stripMargin,
+        |ORDER BY id""".stripMargin)),
     // ing07: the MeSH fixture's expected export — rdfs:label over
     // meshv:prefLabel, scopeNote fallbacks, active->obsolete
     // inversion, descriptor/concept namespacing.
-    "ing07_mesh_terms" ->
+    Entry("ing07_mesh_terms", Rdf.ing07MeshTerms, Sql(
       """SELECT * FROM (VALUES
         |  ('http://id.nlm.nih.gov/mesh/D000001', 'Anatomy',
         |   'Structure of organisms.', 'Body structure', 'descriptor',
@@ -1514,415 +1066,43 @@ object SparkEntry {
         |   CAST(1 AS BIGINT), CAST(0 AS BIGINT))
         |) AS t(id, label, definition, synonyms, namespace, obsolete,
         |       n_parents, n_xrefs)
-        |ORDER BY id""".stripMargin,
-    "q12_late_shipments" ->
-      """SELECT o_orderpriority,
-        |  COUNT(*) AS n_lineitems,
-        |  COUNT(*) FILTER (WHERE
-        |    date_diff('day', o_orderdate, l_shipdate) > 90) AS n_late,
-        |  ROUND(CAST(COUNT(*) FILTER (WHERE
-        |      date_diff('day', o_orderdate, l_shipdate) > 90) AS DOUBLE)
-        |    * 100 / COUNT(*), 4) AS late_pct
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |GROUP BY 1
-        |ORDER BY 1""".stripMargin,
-    "q14_promo_revenue" ->
-      """SELECT CAST(year(l_shipdate) AS BIGINT) AS ship_year,
-        |  ROUND(SUM(CASE WHEN p_type = 'PROMO'
-        |      THEN l_extendedprice * (1 - l_discount) ELSE 0 END) * 100
-        |    / SUM(l_extendedprice * (1 - l_discount)), 4) AS promo_pct,
-        |  ROUND(SUM(l_extendedprice * (1 - l_discount)), 4)
-        |    AS total_revenue,
-        |  COUNT(*) AS n_lineitems
-        |FROM lineitem JOIN part ON l_partkey = p_partkey
-        |GROUP BY 1
-        |ORDER BY 1""".stripMargin,
-    "rel12_cube" ->
-      """SELECT o_orderpriority, o_orderstatus,
-        |  CAST(GROUPING(o_orderpriority) AS BIGINT) AS g_priority,
-        |  CAST(GROUPING(o_orderstatus) AS BIGINT) AS g_status,
-        |  COUNT(*) AS n_orders,
-        |  ROUND(SUM(o_totalprice), 4) AS total_price
-        |FROM orders
-        |GROUP BY CUBE(o_orderpriority, o_orderstatus)
-        |ORDER BY o_orderpriority ASC NULLS FIRST,
-        |  o_orderstatus ASC NULLS FIRST""".stripMargin,
-    // rel14: oracle-expressible in the EXACT-DEGENERATION regime the
-    // fixture corpus sits in (31 distinct tokens << capacity 256, at
-    // every SF — the generator's vocabulary is fixed): with distinct
-    // items <= capacity, no Misra-Gries counter ever decrements —
-    // every partial holds <= |vocab| <= capacity entries so the
-    // update overflow branch never fires, and merged sizes stay
-    // <= |vocab| so the merge trim never fires; decr = 0 everywhere,
-    // count_lb = count_ub = the exact count regardless of Spark's
-    // partitioning — so the sketch output replays as plain
-    // GROUP BY + ROW_NUMBER (eval's order: count DESC, item ASC).
-    // The bounded regime (capacity < distinct: engine-private
-    // counter state, deterministic error bounds) stays property-
-    // pinned in SketchSpec, not oracled.
-    "rel14_heavy_hitters" ->
-      s"""WITH tok AS (SELECT UNNEST($dkToks) AS w FROM documents),
-         |c AS (SELECT w AS item, COUNT(*) AS cnt FROM tok GROUP BY w),
-         |r AS (SELECT item, cnt,
-         |    ROW_NUMBER() OVER (ORDER BY cnt DESC, item) AS rank FROM c)
-         |SELECT rank, item, cnt AS count_lb, cnt AS count_ub FROM r
-         |WHERE rank <= 20 ORDER BY rank""".stripMargin,
-    "rel15_grouping_sets" ->
-      """SELECT l_returnflag, l_linestatus,
-        |  CAST(GROUPING(l_returnflag) AS BIGINT) AS g_flag,
-        |  CAST(GROUPING(l_linestatus) AS BIGINT) AS g_status,
-        |  COUNT(*) AS n_items,
-        |  ROUND(SUM(l_quantity), 4) AS sum_qty
-        |FROM lineitem
-        |GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus))
-        |ORDER BY l_returnflag ASC NULLS FIRST,
-        |  l_linestatus ASC NULLS FIRST""".stripMargin,
-    "rel16_window_suite" ->
-      """SELECT o_custkey, o_orderkey,
-        |  ROUND(o_totalprice, 4) AS price,
-        |  ROUND(LAG(o_totalprice, 1) OVER w, 4) AS prev_price,
-        |  ROUND(LEAD(o_totalprice, 1) OVER w, 4) AS next_price,
-        |  NTILE(4) OVER w AS quartile,
-        |  ROUND(PERCENT_RANK() OVER w, 4) AS pct_rank,
-        |  ROUND(CUME_DIST() OVER w, 4) AS cume
-        |FROM orders
-        |WHERE o_custkey < 200
-        |WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
-        |ORDER BY o_custkey, o_orderkey""".stripMargin,
-    "rel13_pivot" ->
-      """SELECT o_orderpriority,
-        |  COUNT(*) FILTER (WHERE o_orderstatus = 'O') AS n_open,
-        |  COUNT(*) FILTER (WHERE o_orderstatus = 'F') AS n_filled,
-        |  COUNT(*) FILTER (WHERE o_orderstatus = 'P') AS n_pending
-        |FROM orders
-        |GROUP BY o_orderpriority
-        |ORDER BY o_orderpriority""".stripMargin,
-    "dedup01_exact" ->
-      s"""WITH d AS (SELECT doc_id, $dkBagFp AS fp FROM documents)
-         |SELECT fp, COUNT(*) AS n_dups, MIN(doc_id) AS canonical_id,
-         |  MAX(doc_id) AS max_id
-         |FROM d GROUP BY fp HAVING COUNT(*) > 1
-         |ORDER BY fp""".stripMargin,
-    "dedup02_keep_canonical" ->
-      s"""WITH d AS (SELECT doc_id, $dkBagFp AS fp FROM documents)
-         |SELECT MIN(doc_id) AS doc_id, fp, COUNT(*) AS group_size
-         |FROM d GROUP BY fp
-         |ORDER BY doc_id""".stripMargin,
-    "dedup03_ngram_jaccard" ->
-      s"""WITH t AS (SELECT doc_id, n_chars, $dkToks AS w FROM documents),
-         |sh AS (SELECT doc_id, n_chars, $dkShingles3 AS s FROM t)
-         |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, $dkJac AS jaccard
-         |FROM sh a JOIN sh b
-         |  ON a.doc_id < b.doc_id AND ABS(a.n_chars - b.n_chars) <= 40
-         |WHERE $dkJac >= 0.5
-         |ORDER BY doc_a, doc_b""".stripMargin,
-    "dedup04_minhash_lsh" ->
-      s"""WITH t AS (SELECT doc_id, $dkToks AS w FROM documents),
-         |sh AS (SELECT doc_id, $dkShingles3 AS s FROM t WHERE len(w) >= 3)
-         |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, $dkJac AS jaccard
-         |FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-         |WHERE $dkJac >= 0.5
-         |ORDER BY doc_a, doc_b""".stripMargin,
-    // dedup05: the full SimHash pipeline replayed in SQL — per-token
-    // java31 poly hash (list_reduce over chars), splitmix64 finalizer
-    // (split-multiply CTE chain), 64 sign-vote aggregates, two's-
-    // complement fingerprint assembly (bit 63 contributes -2^63, so
-    // the SUM lands directly on the signed BIGINT Spark emits), then
-    // the same 4x16-bit band join + bit_count hamming verify. Every
-    // step is exact integer arithmetic: the match is bit-for-bit,
-    // not approximate.
-    // Parity scope (round-13 review): trim strips the full Java-regex
-    // \s set (not just spaces — DuckDB's bare trim() is space-only),
-    // so tab/newline-edged documents tokenize identically. The split
-    // is [\s\x0B]+ not \s+ (round-14, fixing a round-13 comment that
-    // claimed the sets were equal): RE2's \s is [\t\n\f\r ] WITHOUT
-    // vertical tab, while Java's \s — SimHash64.isSep — includes
-    // \x0B, so an interior vertical tab must be an explicit separator
-    // here or fingerprints diverge. Remaining divergence is
-    // deliberate-scope: Java trim also strips sub-space control chars
-    // (\x00-\x1f beyond \s) and java31 folds UTF-16 units while ord()
-    // yields code points — both outside the lake's text contract (BMP
-    // text, no control-char edges), noted rather than replayed.
-    "dedup05_simhash" ->
-      s"""WITH tok AS (
-         |  SELECT doc_id, UNNEST(regexp_split_to_array(
-         |    trim(text, ' ' || chr(9) || chr(10) || chr(11) || chr(12) || chr(13)),
-         |    '[\\s\\x0B]+')) AS tok
-         |  FROM documents
-         |),
-         |ph AS (SELECT doc_id, ${dkPolyHash("tok")} AS z0 FROM tok),
-         |${dkSplitmixCtes("ph", "doc_id")},
-         |th AS (SELECT doc_id, xor(z, z>>31) AS th FROM m3),
-         |votes AS (
-         |  SELECT doc_id, d, SUM(CASE WHEN (th >> d) & 1 = 1 THEN 1 ELSE -1 END) AS vote
-         |  FROM th CROSS JOIN (SELECT UNNEST(range(64)) AS d) dims GROUP BY 1, 2
-         |),
-         |fp AS (
-         |  SELECT doc_id, CAST(SUM(CASE WHEN vote > 0 THEN
-         |      CASE WHEN d = 63 THEN -9223372036854775807 - 1 ELSE (1::BIGINT << d::INT) END
-         |    ELSE 0 END) AS BIGINT) AS simhash
-         |  FROM votes GROUP BY doc_id
-         |),
-         |banded AS (
-         |  SELECT doc_id, simhash, b AS band, (simhash >> (b::INT*16)) & 65535 AS key
-         |  FROM fp CROSS JOIN (SELECT UNNEST(range(4)) AS b) bands
-         |),
-         |pairs AS (
-         |  SELECT DISTINCT l.doc_id AS doc_a, r.doc_id AS doc_b,
-         |    CAST(bit_count(xor(l.simhash, r.simhash)) AS BIGINT) AS hamming
-         |  FROM banded l JOIN banded r ON l.band = r.band AND l.key = r.key
-         |  WHERE l.doc_id < r.doc_id
-         |)
-         |SELECT doc_a, doc_b, hamming FROM pairs WHERE hamming <= 6
-         |ORDER BY doc_a, doc_b""".stripMargin,
-    "dedup10_containment" ->
-      s"""WITH t AS (SELECT doc_id, $dkToks AS w FROM documents),
-         |sh AS (SELECT doc_id, $dkShingles3 AS s FROM t WHERE len(w) >= 3)
-         |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-         |  ROUND(CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)
-         |    / LEAST(len(a.s), len(b.s)), 4) AS containment
-         |FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-         |WHERE ROUND(CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)
-         |    / LEAST(len(a.s), len(b.s)), 4) >= 0.9
-         |ORDER BY doc_a, doc_b""".stripMargin,
-    "dedup09_cross_source_overlap" ->
-      s"""WITH d AS (SELECT $dkBagFp AS fp, source, COUNT(*) AS c
-         |  FROM documents GROUP BY 1, 2)
-         |SELECT a.source AS source_a, b.source AS source_b,
-         |  CAST(SUM(CASE WHEN a.source = b.source
-         |      THEN CAST(a.c * (a.c - 1) / 2 AS BIGINT)
-         |      ELSE a.c * b.c END) AS BIGINT) AS n_dup_pairs
-         |FROM d a JOIN d b ON a.fp = b.fp AND a.source <= b.source
-         |GROUP BY 1, 2
-         |HAVING SUM(CASE WHEN a.source = b.source
-         |      THEN CAST(a.c * (a.c - 1) / 2 AS BIGINT)
-         |      ELSE a.c * b.c END) > 0
-         |ORDER BY source_a, source_b""".stripMargin,
-    "txt17_tfidf_cosine_linkage" ->
-      """WITH lab AS (SELECT p_partkey AS lab_id, p_partkey % 2 = 0 AS is_probe,
-        |  lower(p_name) AS label FROM part),
-        |words AS (SELECT lab_id, is_probe, UNNEST(string_split(label, ' ')) AS w
-        |  FROM lab),
-        |pads AS (SELECT lab_id, is_probe, ' ' || w || ' ' AS pw
-        |  FROM words WHERE len(w) > 0),
-        |ns AS (SELECT lab_id, is_probe, pw, UNNEST([2, 3, 4]) AS n FROM pads),
-        |grams AS (SELECT lab_id, is_probe,
-        |    substr(pw, CAST(i AS INT), CAST(n AS INT)) AS g
-        |  FROM (SELECT lab_id, is_probe, pw, n,
-        |          UNNEST(range(1, len(pw) - n + 2)) AS i
-        |        FROM ns)),
-        |tf AS (SELECT lab_id, is_probe, g, CAST(COUNT(*) AS DOUBLE) AS tf
-        |  FROM grams GROUP BY ALL),
-        |dfx AS (SELECT g, COUNT(DISTINCT lab_id) AS df FROM grams GROUP BY g),
-        |nt AS (SELECT COUNT(*) AS n_labels FROM lab),
-        |w AS (SELECT lab_id, is_probe, g,
-        |    tf * (ln((1.0 + n_labels) / (1.0 + df)) + 1.0) AS wt
-        |  FROM tf JOIN dfx USING (g) CROSS JOIN nt),
-        |nrm AS (SELECT lab_id, sqrt(SUM(wt * wt)) AS nrm FROM w GROUP BY lab_id),
-        |dots AS (SELECT a.lab_id AS probe_id, b.lab_id AS cand_id,
-        |    SUM(a.wt * b.wt) AS dot
-        |  FROM w a JOIN w b ON a.g = b.g AND a.is_probe AND NOT b.is_probe
-        |  GROUP BY 1, 2),
-        |coss AS (SELECT probe_id, cand_id,
-        |    ROUND(dot / (na.nrm * nb.nrm), 4) AS cosine
-        |  FROM dots JOIN nrm na ON na.lab_id = probe_id
-        |            JOIN nrm nb ON nb.lab_id = cand_id),
-        |best AS (SELECT probe_id, cand_id, cosine, ROW_NUMBER() OVER (
-        |    PARTITION BY probe_id ORDER BY cosine DESC, cand_id) AS rn
-        |  FROM coss)
-        |SELECT probe_id, cand_id, cosine FROM best
-        |WHERE rn = 1 AND cosine >= 0.3
-        |ORDER BY probe_id""".stripMargin,
-    "dedup08_cluster_resolve" ->
-      s"""WITH RECURSIVE t AS (SELECT doc_id, $dkToks AS w FROM documents),
-         |sh AS (SELECT doc_id, $dkShingles3 AS s FROM t WHERE len(w) >= 3),
-         |pairs AS (
-         |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-         |  FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-         |  WHERE $dkJac >= 0.5),
-         |edges AS (SELECT doc_a AS u, doc_b AS v FROM pairs
-         |  UNION ALL SELECT doc_b, doc_a FROM pairs),
-         |reach(u, lbl) AS (
-         |  SELECT u, u FROM (SELECT DISTINCT u FROM edges)
-         |  UNION
-         |  SELECT e.u, r.lbl FROM edges e JOIN reach r ON e.v = r.u),
-         |comp AS (SELECT u AS doc_id, MIN(lbl) AS cluster_id FROM reach GROUP BY u),
-         |m AS (SELECT c.cluster_id, c.doc_id, d.n_chars
-         |  FROM comp c JOIN documents d USING (doc_id))
-         |SELECT cluster_id, n_members, survivor_id FROM (
-         |  SELECT cluster_id,
-         |    COUNT(*) OVER (PARTITION BY cluster_id) AS n_members,
-         |    doc_id AS survivor_id,
-         |    ROW_NUMBER() OVER (PARTITION BY cluster_id
-         |      ORDER BY n_chars DESC, doc_id) AS rn
-         |  FROM m) WHERE rn = 1
-         |ORDER BY cluster_id""".stripMargin,
-    // samp05: the oracle replays dedup08's recursive-CTE components,
-    // left-joins the full corpus (singletons label as themselves),
-    // and applies the same cluster-modulo split rule.
-    // pipe03: the funnel's three stages composed as one CTE chain —
-    // dedup07's contamination flag (unfiltered shingles), samp05's
-    // recursive-closure splits (len(w) >= 3 shingles, the pairs
-    // formulation), samp13's ranked quota, each stage's SQL text
-    // matching its standalone oracle.
-    "pipe03_eval_suite" ->
-      s"""WITH RECURSIVE t AS (SELECT doc_id, $dkToks AS w FROM documents),
-         |shc AS (SELECT doc_id, $dkShingles3 AS s FROM t),
-         |bench AS (SELECT DISTINCT UNNEST(s) AS s FROM shc WHERE doc_id < 10),
-         |corpus AS (SELECT doc_id, UNNEST(s) AS s FROM shc WHERE doc_id >= 10),
-         |contam AS (SELECT doc_id FROM corpus JOIN bench USING (s)
-         |  GROUP BY doc_id HAVING COUNT(*) >= 5),
-         |shp AS (SELECT doc_id, $dkShingles3 AS s FROM t WHERE len(w) >= 3),
-         |pairs AS (
-         |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-         |  FROM shp a JOIN shp b ON a.doc_id < b.doc_id
-         |  WHERE $dkJac >= 0.5),
-         |edges AS (SELECT doc_a AS u, doc_b AS v FROM pairs
-         |  UNION ALL SELECT doc_b, doc_a FROM pairs),
-         |reach(u, lbl) AS (
-         |  SELECT u, u FROM (SELECT DISTINCT u FROM edges)
-         |  UNION
-         |  SELECT e.u, r.lbl FROM edges e JOIN reach r ON e.v = r.u),
-         |comp AS (SELECT u AS doc_id, MIN(lbl) AS cluster_id FROM reach GROUP BY u),
-         |sel AS (
-         |  SELECT d.doc_id, d.lang, COALESCE(c.cluster_id, d.doc_id) AS cluster_id
-         |  FROM documents d LEFT JOIN comp c USING (doc_id)
-         |  WHERE d.doc_id >= 10
-         |    AND d.doc_id NOT IN (SELECT doc_id FROM contam)),
-         |sp AS (SELECT doc_id, lang,
-         |  CASE WHEN cluster_id % 10 < 8 THEN 'train'
-         |       WHEN cluster_id % 10 = 8 THEN 'val'
-         |       ELSE 'test' END AS split
-         |  FROM sel),
-         |u AS (SELECT split, lang, doc_id,
-         |    ('0x' || substr(md5(CAST(doc_id AS VARCHAR) || ':7'), 1, 8))::BIGINT AS u
-         |  FROM sp),
-         |r AS (SELECT split, lang, doc_id,
-         |    ROW_NUMBER() OVER (PARTITION BY split, lang ORDER BY u, doc_id) AS rank
-         |  FROM u)
-         |SELECT split, lang, CAST(rank AS BIGINT) AS rank, doc_id
-         |FROM r WHERE rank <= 20
-         |ORDER BY split, lang, rank""".stripMargin,
-    "samp05_leakage_safe_split" ->
-      s"""WITH RECURSIVE t AS (SELECT doc_id, $dkToks AS w FROM documents),
-         |sh AS (SELECT doc_id, $dkShingles3 AS s FROM t WHERE len(w) >= 3),
-         |pairs AS (
-         |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-         |  FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-         |  WHERE $dkJac >= 0.5),
-         |edges AS (SELECT doc_a AS u, doc_b AS v FROM pairs
-         |  UNION ALL SELECT doc_b, doc_a FROM pairs),
-         |reach(u, lbl) AS (
-         |  SELECT u, u FROM (SELECT DISTINCT u FROM edges)
-         |  UNION
-         |  SELECT e.u, r.lbl FROM edges e JOIN reach r ON e.v = r.u),
-         |comp AS (SELECT u AS doc_id, MIN(lbl) AS cluster_id FROM reach GROUP BY u),
-         |sel AS (
-         |  SELECT d.doc_id, COALESCE(c.cluster_id, d.doc_id) AS cluster_id
-         |  FROM documents d LEFT JOIN comp c USING (doc_id))
-         |SELECT doc_id, cluster_id,
-         |  CASE WHEN cluster_id % 10 < 8 THEN 'train'
-         |       WHEN cluster_id % 10 = 8 THEN 'val'
-         |       ELSE 'test' END AS split
-         |FROM sel
-         |ORDER BY doc_id""".stripMargin,
-    // samp07: samp05's cluster labels + per-cluster size → 1/n weight.
-    "samp07_soft_dedup" ->
-      s"""WITH RECURSIVE t AS (SELECT doc_id, $dkToks AS w FROM documents),
-         |sh AS (SELECT doc_id, $dkShingles3 AS s FROM t WHERE len(w) >= 3),
-         |pairs AS (
-         |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-         |  FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-         |  WHERE $dkJac >= 0.5),
-         |edges AS (SELECT doc_a AS u, doc_b AS v FROM pairs
-         |  UNION ALL SELECT doc_b, doc_a FROM pairs),
-         |reach(u, lbl) AS (
-         |  SELECT u, u FROM (SELECT DISTINCT u FROM edges)
-         |  UNION
-         |  SELECT e.u, r.lbl FROM edges e JOIN reach r ON e.v = r.u),
-         |comp AS (SELECT u AS doc_id, MIN(lbl) AS cluster_id FROM reach GROUP BY u),
-         |sel AS (
-         |  SELECT d.doc_id, COALESCE(c.cluster_id, d.doc_id) AS cluster_id
-         |  FROM documents d LEFT JOIN comp c USING (doc_id)),
-         |sz AS (SELECT cluster_id, COUNT(*) AS n_members FROM sel GROUP BY cluster_id)
-         |SELECT doc_id, cluster_id, n_members,
-         |  ROUND(1.0::DOUBLE / n_members, 4) AS weight
-         |FROM sel JOIN sz USING (cluster_id)
-         |ORDER BY doc_id""".stripMargin,
-    // samp06: same md5 order key and same overflow-safe shard mix,
-    // replayed verbatim — both engines emit lowercase-hex md5 strings.
-    "samp06_shuffle_shard" ->
-      s"""SELECT doc_id, source, shard,
-         |  ROW_NUMBER() OVER (PARTITION BY shard ORDER BY shuffle_key, doc_id) AS pos
-         |FROM (
-         |  SELECT doc_id, source,
-         |    md5(CAST(doc_id AS VARCHAR) || ':42') AS shuffle_key,
-         |    (((doc_id % 100003) * 2654435761) >> 16) % 8 AS shard
-         |  FROM documents)
-         |ORDER BY shard, pos""".stripMargin,
-    // dedup12: the oracle scores the delta (newest 20% of ids) by
-    // exhaustive Jaccard against every smaller-id doc — the result the
-    // incremental band-probe + exact-verify plan must reproduce.
-    "dedup12_incremental" ->
-      s"""WITH t AS (SELECT doc_id, $dkToks AS w FROM documents),
-         |sh AS (SELECT doc_id, $dkShingles3 AS s FROM t WHERE len(w) >= 3),
-         |cut AS (SELECT CAST(FLOOR(0.8 * (MAX(doc_id) + 1)) AS BIGINT) AS c FROM documents),
-         |m AS (
-         |  SELECT b.doc_id AS doc_b, MIN(a.doc_id) AS dup_of
-         |  FROM sh b JOIN cut ON b.doc_id >= cut.c
-         |  JOIN sh a ON a.doc_id < b.doc_id
-         |  WHERE $dkJac >= 0.5
-         |  GROUP BY b.doc_id),
-         |sel AS (SELECT doc_id FROM documents JOIN cut ON doc_id >= cut.c)
-         |SELECT sel.doc_id, m.dup_of,
-         |  CASE WHEN m.dup_of IS NULL THEN 'keep' ELSE 'drop' END AS verdict
-         |FROM sel LEFT JOIN m ON sel.doc_id = m.doc_b
-         |ORDER BY sel.doc_id""".stripMargin,
-    // dedup13: same planting, k=8 sliding windows (1-based list slice
-    // w[i:i+7]), distinct-doc df >= 2, and the islands merge (lag +
-    // running sum) the Spark side runs per doc.
-    "dedup13_exact_substring" ->
-      """WITH p AS (SELECT doc_id,
-        |    CASE WHEN doc_id % 5 = 0
-        |      THEN 'shared prefix banner alpha beta gamma delta epsilon zeta eta ' || text
-        |      ELSE text END AS t1
-        |  FROM documents),
-        |p2 AS (SELECT doc_id,
-        |    CASE WHEN doc_id % 7 = 0
-        |      THEN t1 || ' common footer block one two three four five six seven eight nine'
-        |      ELSE t1 END AS t
-        |  FROM p),
-        |tk AS (SELECT doc_id,
-        |    string_split(trim(regexp_replace(t, '\s+', ' ', 'g')), ' ') AS w
-        |  FROM p2),
-        |g0 AS (SELECT doc_id, w, UNNEST(generate_series(1, len(w) - 7)) AS i
-        |  FROM tk WHERE len(w) >= 8),
-        |g AS (SELECT doc_id, i - 1 AS pos, array_to_string(w[i:i+7], ' ') AS gram
-        |  FROM g0),
-        |d AS (SELECT gram FROM (
-        |    SELECT gram, COUNT(DISTINCT doc_id) AS df FROM g GROUP BY gram)
-        |  WHERE df >= 2),
-        |h AS (SELECT g.doc_id, g.pos FROM g JOIN d USING (gram)),
-        |s AS (SELECT doc_id, pos,
-        |    CASE WHEN LAG(pos) OVER (PARTITION BY doc_id ORDER BY pos) IS NULL
-        |           OR pos > LAG(pos) OVER (PARTITION BY doc_id ORDER BY pos) + 8
-        |         THEN 1 ELSE 0 END AS ns FROM h),
-        |s2 AS (SELECT doc_id, pos, SUM(ns) OVER (
-        |    PARTITION BY doc_id ORDER BY pos ROWS UNBOUNDED PRECEDING) AS sid
-        |  FROM s),
-        |sp AS (SELECT doc_id, sid, MIN(pos) AS st, MAX(pos) + 8 AS en
-        |  FROM s2 GROUP BY doc_id, sid)
-        |SELECT doc_id, COUNT(*) AS n_spans,
-        |  CAST(SUM(en - st) AS BIGINT) AS dup_tokens,
-        |  CAST(MAX(en - st) AS BIGINT) AS max_span
-        |FROM sp GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    "dedup06_embedding_neardup" ->
-      s"""WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings)
-         |SELECT a.vec_id AS vec_a, b.vec_id AS vec_b, a.label AS label,
-         |  ROUND(${dkCos("a.v", "b.v")}, 4) AS cos
-         |FROM e a JOIN e b ON a.label = b.label AND a.vec_id < b.vec_id
-         |WHERE ROUND(${dkCos("a.v", "b.v")}, 4) >= 0.4
-         |ORDER BY vec_a, vec_b""".stripMargin,
+        |ORDER BY id""".stripMargin)),
+    // ing08: SAME expected export again from the RDF/XML spelling of
+    // the scheme — three syntaxes now share one oracle.
+    Entry("ing08_rdfxml_skos", Rdf.ing08RdfXmlSkos, Sql(
+      """SELECT * FROM (VALUES
+        |  ('http://ex.org/c1', 'Physics', 'The study of matter.',
+        |   'physical sciences', CAST(0 AS BIGINT), CAST(0 AS BIGINT)),
+        |  ('http://ex.org/c2', 'Optics', 'About light.',
+        |   '', CAST(1 AS BIGINT), CAST(1 AS BIGINT)),
+        |  ('http://ex.org/c3', 'Chimie', '',
+        |   '', CAST(1 AS BIGINT), CAST(0 AS BIGINT))
+        |) AS t(id, label, definition, synonyms, n_parents, n_xrefs)
+        |ORDER BY id""".stripMargin)),
+    // ing09: the two constant fixtures' per-graph inventory — 7 OBO
+    // triples (3 is_a/part_of edges + 4 term labels), 15 Turtle
+    // triples;
+    // hand-checkable against the fixture text, any parser or
+    // graph-tagging defect moves a count or a min subject.
+    Entry("ing09_graph_store", Rdf.ing09GraphStore, Sql(
+      """SELECT * FROM (VALUES
+        |  ('onto.obo', CAST(7 AS BIGINT), 'GT:0001'),
+        |  ('skos.ttl', CAST(15 AS BIGINT), 'http://ex.org/c1')
+        |) AS t(g, n_triples, first_subject)
+        |ORDER BY g""".stripMargin)),
+    // ing10: the corruption rule is doc_id arithmetic, so the audit
+    // replays directly off documents — good rows keep their payload
+    // (sum_chars over the clean subset), quarantined rows count the
+    // corrupted subset.
+    Entry("ing10_jsonl_quarantine", Ingest.ing10JsonlQuarantine, Sql(
+      """SELECT * FROM (
+        |  SELECT 'good' AS status, COUNT(*) AS n_rows,
+        |    CAST(SUM(n_chars) AS BIGINT) AS sum_chars
+        |  FROM documents WHERE doc_id % 7 != 3
+        |  UNION ALL
+        |  SELECT 'quarantined', COUNT(*), CAST(NULL AS BIGINT)
+        |  FROM documents WHERE doc_id % 7 = 3)
+        |ORDER BY status""".stripMargin)),
     // emb01: HashProjectionModel replayed end to end — alnum-run
     // lowercase tokens, the shared java31 poly hash, one splitmix64
     // mix per (token, dim) off z0 = (h + d) mod 2^64, ±1 sign votes
@@ -1946,7 +1126,7 @@ object SparkEntry {
     // does. Non-BMP text still diverges (java31 folds UTF-16
     // surrogate halves, ord() yields code points) — outside the
     // lake's BMP text contract, noted not replayed.
-    "emb01_hash_embeddings" ->
+    Entry("emb01_hash_embeddings", Embedding.emb01HashEmbeddings(_), Sql(
       s"""WITH tok AS (
          |  SELECT doc_id AS vec_id, tok
          |  FROM (SELECT doc_id,
@@ -1977,12 +1157,13 @@ object SparkEntry {
          |  ROUND(COALESCE(sqrt(list_dot_product(lst, lst)), 0.0), 4) AS l2_norm,
          |  ROUND(COALESCE(list_reduce(lst, (a, b) -> a + b), 0.0), 4) AS checksum
          |FROM documents d LEFT JOIN vecs ON d.doc_id = vecs.vec_id
-         |ORDER BY vec_id""".stripMargin,
+         |ORDER BY vec_id""".stripMargin)),
+    Entry("emb02_pca_projection", Embedding.emb02PcaProject(_), Sql(emb02OracleSql(15))),
     // emb03: per prefix length, the truncated-cosine brute-force
     // top-k ranked exactly like sim01 (partitioned ROW_NUMBER over
     // raw cosine, vec_id tiebreak), LEFT-joined to full-dim truth,
     // hits counted per dim — recall denominator k * nQueries = 100.
-    "emb03_prefix_fidelity" ->
+    Entry("emb03_prefix_fidelity", Embedding.emb03PrefixFidelity(_), Sql(
       s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
          |q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < 10),
          |tr AS (SELECT query_id, vec_id FROM (
@@ -2000,7 +1181,7 @@ object SparkEntry {
          |  ROUND(COUNT(tr.query_id) / 100.0, 4) AS recall_at_k
          |FROM r LEFT JOIN tr ON r.query_id = tr.query_id AND r.vec_id = tr.vec_id
          |WHERE r.rank <= 10
-         |GROUP BY dim ORDER BY dim""".stripMargin,
+         |GROUP BY dim ORDER BY dim""".stripMargin)),
     // emb04: per-label geometry replayed off per-dim moment columns —
     // mean/variance per (label, dim) via generate_subscripts (the
     // sim04 centroid idiom), centroid re-assembled as an ordered
@@ -2008,7 +1189,7 @@ object SparkEntry {
     // `+ 0.0` guards are the emb02 negative-zero rule on ROUNDs that
     // can land at -0.0 (sd of a constant-norm corpus, a near-zero
     // mean cosine).
-    "emb04_geometry_audit" ->
+    Entry("emb04_geometry_audit", Embedding.emb04GeometryAudit, Sql(
       s"""WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
          |flat AS (SELECT label, generate_subscripts(v, 1) AS pos, UNNEST(v) AS x FROM e),
          |ds AS (SELECT label, pos, AVG(x) AS mean_d,
@@ -2031,11 +1212,11 @@ object SparkEntry {
          |  CASE WHEN cent.trace_var > 0
          |    THEN ROUND(cent.max_var / cent.trace_var, 4) + 0.0 END AS top_var_share
          |FROM na JOIN cent USING (label)
-         |ORDER BY label""".stripMargin,
+         |ORDER BY label""".stripMargin)),
     // samp13: the bounded-heap per-stratum quota replayed as the
     // ROW_NUMBER form it is row-for-row equivalent to (rank by the
     // samp08-family seeded md5 integer, doc_id tiebreak).
-    "samp13_exact_quota" ->
+    Entry("samp13_exact_quota", TextAnalysis.samp13ExactQuota(_), Sql(
       """WITH u AS (SELECT lang, doc_id,
         |    ('0x' || substr(md5(CAST(doc_id AS VARCHAR) || ':7'), 1, 8))::BIGINT AS u
         |  FROM documents),
@@ -2044,12 +1225,12 @@ object SparkEntry {
         |  FROM u)
         |SELECT lang, CAST(rank AS BIGINT) AS rank, doc_id, u
         |FROM r WHERE rank <= 20
-        |ORDER BY lang, rank""".stripMargin,
+        |ORDER BY lang, rank""".stripMargin)),
     // eval08: exact bit-length buckets (length(bin(x)) — NOT log2,
     // whose ln(x)/ln(2) form floors differently at powers of two
     // across engines), the full source×bucket grid with eps clamps,
     // one PSI fold per source.
-    "eval08_dist_drift" ->
+    Entry("eval08_dist_drift", Evaluation.eval08DistDrift(_), Sql(
       """WITH b AS (SELECT source,
         |    CAST(LEAST(LENGTH(bin(n_chars + 1)) - 1, 20) AS BIGINT) AS bucket
         |  FROM documents),
@@ -2067,8 +1248,155 @@ object SparkEntry {
         |  ROUND(SUM((p - q) * LN(p / q)), 4) AS psi,
         |  ROUND(SUM((p - q) * LN(p / q)), 4) >= 0.2 AS drifted
         |FROM j GROUP BY source, n_docs
-        |ORDER BY source""".stripMargin,
-    "sim01_topk_bruteforce" ->
+        |ORDER BY source""".stripMargin)),
+    Entry("q12_late_shipments", Relational.q12LateShipments, Sql(
+      """SELECT o_orderpriority,
+        |  COUNT(*) AS n_lineitems,
+        |  COUNT(*) FILTER (WHERE
+        |    date_diff('day', o_orderdate, l_shipdate) > 90) AS n_late,
+        |  ROUND(CAST(COUNT(*) FILTER (WHERE
+        |      date_diff('day', o_orderdate, l_shipdate) > 90) AS DOUBLE)
+        |    * 100 / COUNT(*), 4) AS late_pct
+        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+        |GROUP BY 1
+        |ORDER BY 1""".stripMargin)),
+    Entry("q14_promo_revenue", Relational.q14PromoRevenue, Sql(
+      """SELECT CAST(year(l_shipdate) AS BIGINT) AS ship_year,
+        |  ROUND(SUM(CASE WHEN p_type = 'PROMO'
+        |      THEN l_extendedprice * (1 - l_discount) ELSE 0 END) * 100
+        |    / SUM(l_extendedprice * (1 - l_discount)), 4) AS promo_pct,
+        |  ROUND(SUM(l_extendedprice * (1 - l_discount)), 4)
+        |    AS total_revenue,
+        |  COUNT(*) AS n_lineitems
+        |FROM lineitem JOIN part ON l_partkey = p_partkey
+        |GROUP BY 1
+        |ORDER BY 1""".stripMargin)),
+    Entry("rel12_cube", Relational.rel12Cube, Sql(
+      """SELECT o_orderpriority, o_orderstatus,
+        |  CAST(GROUPING(o_orderpriority) AS BIGINT) AS g_priority,
+        |  CAST(GROUPING(o_orderstatus) AS BIGINT) AS g_status,
+        |  COUNT(*) AS n_orders,
+        |  ROUND(SUM(o_totalprice), 4) AS total_price
+        |FROM orders
+        |GROUP BY CUBE(o_orderpriority, o_orderstatus)
+        |ORDER BY o_orderpriority ASC NULLS FIRST,
+        |  o_orderstatus ASC NULLS FIRST""".stripMargin)),
+    Entry("rel13_pivot", Relational.rel13Pivot, Sql(
+      """SELECT o_orderpriority,
+        |  COUNT(*) FILTER (WHERE o_orderstatus = 'O') AS n_open,
+        |  COUNT(*) FILTER (WHERE o_orderstatus = 'F') AS n_filled,
+        |  COUNT(*) FILTER (WHERE o_orderstatus = 'P') AS n_pending
+        |FROM orders
+        |GROUP BY o_orderpriority
+        |ORDER BY o_orderpriority""".stripMargin)),
+    Entry("rel15_grouping_sets", Relational.rel15GroupingSets, Sql(
+      """SELECT l_returnflag, l_linestatus,
+        |  CAST(GROUPING(l_returnflag) AS BIGINT) AS g_flag,
+        |  CAST(GROUPING(l_linestatus) AS BIGINT) AS g_status,
+        |  COUNT(*) AS n_items,
+        |  ROUND(SUM(l_quantity), 4) AS sum_qty
+        |FROM lineitem
+        |GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus))
+        |ORDER BY l_returnflag ASC NULLS FIRST,
+        |  l_linestatus ASC NULLS FIRST""".stripMargin)),
+    Entry("rel16_window_suite", Relational.rel16WindowSuite(_), Sql(
+      """SELECT o_custkey, o_orderkey,
+        |  ROUND(o_totalprice, 4) AS price,
+        |  ROUND(LAG(o_totalprice, 1) OVER w, 4) AS prev_price,
+        |  ROUND(LEAD(o_totalprice, 1) OVER w, 4) AS next_price,
+        |  NTILE(4) OVER w AS quartile,
+        |  ROUND(PERCENT_RANK() OVER w, 4) AS pct_rank,
+        |  ROUND(CUME_DIST() OVER w, 4) AS cume
+        |FROM orders
+        |WHERE o_custkey < 200
+        |WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
+        |ORDER BY o_custkey, o_orderkey""".stripMargin)),
+    Entry("dedup01_exact", Dedup.dedup01Exact, Sql(
+      s"""WITH d AS (SELECT doc_id, $dkBagFp AS fp FROM documents)
+         |SELECT fp, COUNT(*) AS n_dups, MIN(doc_id) AS canonical_id,
+         |  MAX(doc_id) AS max_id
+         |FROM d GROUP BY fp HAVING COUNT(*) > 1
+         |ORDER BY fp""".stripMargin)),
+    Entry("dedup02_keep_canonical", Dedup.dedup02KeepCanonical, Sql(
+      s"""WITH d AS (SELECT doc_id, $dkBagFp AS fp FROM documents)
+         |SELECT MIN(doc_id) AS doc_id, fp, COUNT(*) AS group_size
+         |FROM d GROUP BY fp
+         |ORDER BY doc_id""".stripMargin)),
+    Entry("dedup03_ngram_jaccard", Dedup.dedup03NgramJaccard(_), Sql(
+      s"""WITH t AS (SELECT doc_id, n_chars, $dkToks AS w FROM documents),
+         |sh AS (SELECT doc_id, n_chars, $dkShingles3 AS s FROM t)
+         |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, $dkJac AS jaccard
+         |FROM sh a JOIN sh b
+         |  ON a.doc_id < b.doc_id AND ABS(a.n_chars - b.n_chars) <= 40
+         |WHERE $dkJac >= 0.5
+         |ORDER BY doc_a, doc_b""".stripMargin)),
+    Entry("dedup04_minhash_lsh", Dedup.dedup04MinhashLsh(_), Sql(
+      s"""WITH t AS (SELECT doc_id, $dkToks AS w FROM documents),
+         |sh AS (SELECT doc_id, $dkShingles3 AS s FROM t WHERE len(w) >= 3)
+         |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, $dkJac AS jaccard
+         |FROM sh a JOIN sh b ON a.doc_id < b.doc_id
+         |WHERE $dkJac >= 0.5
+         |ORDER BY doc_a, doc_b""".stripMargin)),
+    // dedup05: the full SimHash pipeline replayed in SQL — per-token
+    // java31 poly hash (list_reduce over chars), splitmix64 finalizer
+    // (split-multiply CTE chain), 64 sign-vote aggregates, two's-
+    // complement fingerprint assembly (bit 63 contributes -2^63, so
+    // the SUM lands directly on the signed BIGINT Spark emits), then
+    // the same 4x16-bit band join + bit_count hamming verify. Every
+    // step is exact integer arithmetic: the match is bit-for-bit,
+    // not approximate.
+    // Parity scope (round-13 review): trim strips the full Java-regex
+    // \s set (not just spaces — DuckDB's bare trim() is space-only),
+    // so tab/newline-edged documents tokenize identically. The split
+    // is [\s\x0B]+ not \s+ (round-14, fixing a round-13 comment that
+    // claimed the sets were equal): RE2's \s is [\t\n\f\r ] WITHOUT
+    // vertical tab, while Java's \s — SimHash64.isSep — includes
+    // \x0B, so an interior vertical tab must be an explicit separator
+    // here or fingerprints diverge. Remaining divergence is
+    // deliberate-scope: Java trim also strips sub-space control chars
+    // (\x00-\x1f beyond \s) and java31 folds UTF-16 units while ord()
+    // yields code points — both outside the lake's text contract (BMP
+    // text, no control-char edges), noted rather than replayed.
+    Entry("dedup05_simhash", Dedup.dedup05Simhash(_), Sql(
+      s"""WITH tok AS (
+         |  SELECT doc_id, UNNEST(regexp_split_to_array(
+         |    trim(text, ' ' || chr(9) || chr(10) || chr(11) || chr(12) || chr(13)),
+         |    '[\\s\\x0B]+')) AS tok
+         |  FROM documents
+         |),
+         |ph AS (SELECT doc_id, ${dkPolyHash("tok")} AS z0 FROM tok),
+         |${dkSplitmixCtes("ph", "doc_id")},
+         |th AS (SELECT doc_id, xor(z, z>>31) AS th FROM m3),
+         |votes AS (
+         |  SELECT doc_id, d, SUM(CASE WHEN (th >> d) & 1 = 1 THEN 1 ELSE -1 END) AS vote
+         |  FROM th CROSS JOIN (SELECT UNNEST(range(64)) AS d) dims GROUP BY 1, 2
+         |),
+         |fp AS (
+         |  SELECT doc_id, CAST(SUM(CASE WHEN vote > 0 THEN
+         |      CASE WHEN d = 63 THEN -9223372036854775807 - 1 ELSE (1::BIGINT << d::INT) END
+         |    ELSE 0 END) AS BIGINT) AS simhash
+         |  FROM votes GROUP BY doc_id
+         |),
+         |banded AS (
+         |  SELECT doc_id, simhash, b AS band, (simhash >> (b::INT*16)) & 65535 AS key
+         |  FROM fp CROSS JOIN (SELECT UNNEST(range(4)) AS b) bands
+         |),
+         |pairs AS (
+         |  SELECT DISTINCT l.doc_id AS doc_a, r.doc_id AS doc_b,
+         |    CAST(bit_count(xor(l.simhash, r.simhash)) AS BIGINT) AS hamming
+         |  FROM banded l JOIN banded r ON l.band = r.band AND l.key = r.key
+         |  WHERE l.doc_id < r.doc_id
+         |)
+         |SELECT doc_a, doc_b, hamming FROM pairs WHERE hamming <= 6
+         |ORDER BY doc_a, doc_b""".stripMargin)),
+    Entry("dedup06_embedding_neardup", Dedup.dedup06EmbeddingNearDup(_), Sql(
+      s"""WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings)
+         |SELECT a.vec_id AS vec_a, b.vec_id AS vec_b, a.label AS label,
+         |  ROUND(${dkCos("a.v", "b.v")}, 4) AS cos
+         |FROM e a JOIN e b ON a.label = b.label AND a.vec_id < b.vec_id
+         |WHERE ROUND(${dkCos("a.v", "b.v")}, 4) >= 0.4
+         |ORDER BY vec_a, vec_b""".stripMargin)),
+    Entry("sim01_topk_bruteforce", Similarity.sim01TopKBruteForce(_), Sql(
       s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
          |q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < 10),
          |s AS (SELECT query_id, vec_id, ${dkCos("qv", "v")} AS cos_raw
@@ -2078,79 +1406,15 @@ object SparkEntry {
          |  FROM s)
          |SELECT query_id, rank, vec_id AS neighbor_id, ROUND(cos_raw, 4) AS cos
          |FROM r WHERE rank <= 10
-         |ORDER BY query_id, rank""".stripMargin,
-    // sim10: the SQ8 train/encode/decode/search pipeline replayed
-    // verbatim — per-dim min/max, affine 0..255 code, reconstruction,
-    // asymmetric cosine. Parallel UNNESTs zip, so (x, i) stay aligned.
-    "sim10_sq_ann" ->
-      s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-         |d AS (SELECT vec_id, UNNEST(v) AS x, UNNEST(range(1, len(v) + 1)) AS i FROM e),
-         |mm AS (SELECT i, MIN(x) AS lo, MAX(x) AS hi FROM d GROUP BY i),
-         |c AS (SELECT vec_id, i,
-         |    CASE WHEN hi > lo THEN round((x - lo) / (hi - lo) * 255) ELSE 0 END AS code,
-         |    lo, hi FROM d JOIN mm USING (i)),
-         |dv AS (SELECT vec_id, LIST(code / 255.0 * (hi - lo) + lo ORDER BY i) AS dec
-         |  FROM c GROUP BY vec_id),
-         |q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < 10),
-         |s AS (SELECT query_id, dv.vec_id, ${dkCos("qv", "dec")} AS cos_sq
-         |      FROM q JOIN dv ON dv.vec_id != query_id),
-         |r AS (SELECT query_id, vec_id, cos_sq, ROW_NUMBER() OVER (
-         |    PARTITION BY query_id ORDER BY cos_sq DESC, vec_id) AS rank
-         |  FROM s)
-         |SELECT query_id, rank, vec_id AS neighbor_id, ROUND(cos_sq, 4) AS cos_sq
-         |FROM r WHERE rank <= 10
-         |ORDER BY query_id, rank""".stripMargin,
-    // sim09: the two-stage plan replayed verbatim — prefix-16 cosine
-    // top-50 per query, then exact full-dim rerank of those ids.
-    "sim09_prefix_rerank" ->
-      s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-         |p AS (SELECT vec_id, v[1:16] AS vp FROM e),
-         |qp AS (SELECT vec_id AS query_id, vp AS qvp FROM p WHERE vec_id < 10),
-         |qf AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < 10),
-         |s AS (SELECT query_id, vec_id, ${dkCos("qvp", "vp")} AS pcos
-         |      FROM qp JOIN p ON vec_id != query_id),
-         |c AS (SELECT query_id, vec_id FROM (
-         |    SELECT query_id, vec_id, ROW_NUMBER() OVER (
-         |      PARTITION BY query_id ORDER BY pcos DESC, vec_id) AS pr FROM s)
-         |  WHERE pr <= 50),
-         |r AS (SELECT c.query_id, c.vec_id, ${dkCos("qv", "v")} AS cos_raw
-         |      FROM c JOIN e ON c.vec_id = e.vec_id
-         |      JOIN qf ON c.query_id = qf.query_id),
-         |t AS (SELECT query_id, vec_id, cos_raw, ROW_NUMBER() OVER (
-         |    PARTITION BY query_id ORDER BY cos_raw DESC, vec_id) AS rank FROM r)
-         |SELECT query_id, rank, vec_id AS neighbor_id, ROUND(cos_raw, 4) AS cos
-         |FROM t WHERE rank <= 10
-         |ORDER BY query_id, rank""".stripMargin,
-    "sim02_threshold_join" ->
+         |ORDER BY query_id, rank""".stripMargin)),
+    Entry("sim02_threshold_join", Similarity.sim02ThresholdJoin(_), Sql(
       s"""WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
          |t AS (SELECT vec_id AS topic_id, v AS tv FROM e WHERE label < 2),
          |m AS (SELECT vec_id AS term_id, v AS mv FROM e WHERE label >= 2)
          |SELECT topic_id, term_id, ROUND(${dkCos("tv", "mv")}, 4) AS cos
          |FROM m JOIN t ON TRUE
          |WHERE ROUND(${dkCos("tv", "mv")}, 4) >= 0.25
-         |ORDER BY topic_id, term_id""".stripMargin,
-    // sim12: the cone prune is exact (triangle inequality on the
-    // sphere), so the oracle is plain brute force — every pair whose
-    // ROUNDED cosine clears the radius. Same rounded-admission rule
-    // on both sides (the sim02 discipline).
-    "sim12_range_search" ->
-      s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-         |q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < 10)
-         |SELECT q.query_id, e.vec_id, ROUND(${dkCos("qv", "v")}, 4) AS cos
-         |FROM q JOIN e ON e.vec_id <> q.query_id
-         |WHERE ROUND(${dkCos("qv", "v")}, 4) >= 0.3
-         |ORDER BY q.query_id, e.vec_id""".stripMargin,
-    "sim04_label_centroids" ->
-      s"""WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
-         |flat AS (SELECT label, generate_subscripts(v, 1) AS pos, UNNEST(v) AS x FROM e),
-         |cpos AS (SELECT label, pos, AVG(x) AS c FROM flat GROUP BY 1, 2),
-         |cent AS (SELECT label, LIST(c ORDER BY pos) AS centroid FROM cpos GROUP BY label),
-         |j AS (SELECT e.label, ${dkCos("e.v", "centroid")} AS cos
-         |      FROM e JOIN cent ON e.label = cent.label)
-         |SELECT label, COUNT(*) AS n_vectors, ROUND(AVG(cos), 4) AS avg_cos,
-         |  ROUND(MIN(cos), 4) AS min_cos, ROUND(MAX(cos), 4) AS max_cos
-         |FROM j GROUP BY label
-         |ORDER BY label""".stripMargin,
+         |ORDER BY topic_id, term_id""".stripMargin)),
     // sim03: the hyperplane-LSH ANN, oracle-checked by embedding the
     // SAME deterministic splitmix64 plane constants as SQL literals
     // (Double.toString round-trips exactly; both engines fold the dot
@@ -2162,7 +1426,7 @@ object SparkEntry {
     // detail of the current build. If a DuckDB upgrade flips a
     // near-zero sign bit, this oracle (not the operator) changes; the
     // recall assertion in DedupSimilaritySpec is the stable backstop.
-    "sim03_lsh_ann" -> {
+    Entry("sim03_lsh_ann", Similarity.sim03LshAnn(_), Sql {
       val planes = graft.operators.Similarity.lshPlanes(16, 4, 64)
       val rows = for {
         t <- planes.indices
@@ -2188,14 +1452,14 @@ object SparkEntry {
          |SELECT query_id, rank, vec_id AS neighbor_id, ROUND(cos_raw, 4) AS cos
          |FROM r WHERE rank <= 10
          |ORDER BY query_id, rank""".stripMargin
-    },
+    }),
     // sim05: the label-centroid coarse quantizer is sim04's oracle CTE
     // verbatim; probe ranking and the per-cell exhaustive re-rank are
     // plain window SQL. Float-safety: exact cosines are deterministic
     // per pair (fixed fold order both engines); only the centroid AVG
     // carries distributed-sum noise (~1e-16), and cell-ranking margins
     // on this corpus are >= 2e-4 (the eval02 argument).
-    "sim05_ivf_ann" ->
+    Entry("sim05_ivf_ann", Similarity.sim05IvfAnn(_), Sql(
       s"""WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
          |flat AS (SELECT label, generate_subscripts(v, 1) AS pos, UNNEST(v) AS x FROM e),
          |cpos AS (SELECT label, pos, AVG(x) AS c FROM flat GROUP BY 1, 2),
@@ -2213,11 +1477,11 @@ object SparkEntry {
          |  FROM s)
          |SELECT query_id, rank, vec_id AS neighbor_id, ROUND(cos_raw, 4) AS cos
          |FROM r WHERE rank <= 10
-         |ORDER BY query_id, rank""".stripMargin,
+         |ORDER BY query_id, rank""".stripMargin)),
     // sim08: mutual kNN — COUNT(*)=2 over min/max-oriented directed
     // top-k edges is the mutuality test (cos is symmetric, so MAX
     // picks the same value either direction contributes).
-    "sim08_knn_graph" ->
+    Entry("sim08_knn_graph", Similarity.sim08KnnGraph(_), Sql(
       s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
          |s AS (SELECT a.vec_id AS src, b.vec_id AS dst, ${dkCos("a.v", "b.v")} AS cos_raw
          |      FROM e a JOIN e b ON a.vec_id != b.vec_id),
@@ -2228,7 +1492,9 @@ object SparkEntry {
          |u AS (SELECT LEAST(src, dst) AS src, GREATEST(src, dst) AS dst, cos_raw FROM k)
          |SELECT src, dst, ROUND(MAX(cos_raw), 4) AS cos
          |FROM u GROUP BY src, dst HAVING COUNT(*) = 2
-         |ORDER BY src, dst""".stripMargin,
+         |ORDER BY src, dst""".stripMargin)),
+    // nlist=0 → auto-⌈√N⌉ cells: the n^1.5 kernel contract (a fixed
+    // nlist re-quadratifies as the corpus grows — measured at sf1)
     // sim11: the ANN-backed mutual kNN graph replays END TO END — the
     // trained quantizer is sim06's unrolled Lloyd CTE (2 iterations,
     // dedup11's count; seeds = the ⌈√N⌉ lowest vec_ids — the AUTO
@@ -2239,7 +1505,7 @@ object SparkEntry {
     // mutuality fold is sim08's. Float-safety as sim06: exact
     // cosines are deterministic per pair; only centroid AVGs carry
     // distributed-sum noise.
-    "sim11_knn_graph_ann" -> {
+    Entry("sim11_knn_graph_ann", Similarity.sim11KnnGraphAnn(_, nlist = 0), Sql {
       val iter = (1 to 2).map { i =>
         s"""a$i AS (SELECT e.vec_id, e.v, c.cluster, ROW_NUMBER() OVER (
            |    PARTITION BY e.vec_id
@@ -2277,15 +1543,1021 @@ object SparkEntry {
          |SELECT src, dst, ROUND(MAX(cos_raw), 4) AS cos
          |FROM u GROUP BY src, dst HAVING COUNT(*) = 2
          |ORDER BY src, dst""".stripMargin
-    },
-    // samp14: cluster-balanced sampling replays end to end — sim06's
-    // unrolled 3-iteration Lloyd CTE trains the same quantizer, the
-    // final assignment keeps the winning cosine, and the per-cluster
-    // rank (affinity desc, vec_id) caps each cluster at the quota.
-    // Float-safety as sim06: exact cosines are deterministic per
-    // pair; only centroid AVGs carry distributed-sum noise.
-    "samp14_cluster_balance" -> {
-      val iter = (1 to 3).map { i =>
+    }),
+    Entry("sim04_label_centroids", Similarity.sim04LabelCentroids, Sql(
+      s"""WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
+         |flat AS (SELECT label, generate_subscripts(v, 1) AS pos, UNNEST(v) AS x FROM e),
+         |cpos AS (SELECT label, pos, AVG(x) AS c FROM flat GROUP BY 1, 2),
+         |cent AS (SELECT label, LIST(c ORDER BY pos) AS centroid FROM cpos GROUP BY label),
+         |j AS (SELECT e.label, ${dkCos("e.v", "centroid")} AS cos
+         |      FROM e JOIN cent ON e.label = cent.label)
+         |SELECT label, COUNT(*) AS n_vectors, ROUND(AVG(cos), 4) AS avg_cos,
+         |  ROUND(MIN(cos), 4) AS min_cos, ROUND(MAX(cos), 4) AS max_cos
+         |FROM j GROUP BY label
+         |ORDER BY label""".stripMargin)),
+    Entry("evt01_windowed_counts", Events.evt01WindowedCounts, Sql(
+      """SELECT date_trunc('hour', ts) AS window_start, event_type,
+        |  COUNT(*) AS n_events, ROUND(SUM(value), 4) AS sum_value
+        |FROM events
+        |GROUP BY 1, 2
+        |ORDER BY window_start, event_type""".stripMargin)),
+    Entry("evt02_sessionization", Events.evt02Sessionization(_), Sql(
+      """WITH x AS (
+        |  SELECT event_id, ts, user_id,
+        |    LAG(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev
+        |  FROM events),
+        |m AS (SELECT event_id, ts, user_id,
+        |  CASE WHEN prev IS NULL OR epoch_ms(ts) - epoch_ms(prev) > 1800000
+        |       THEN 1 ELSE 0 END AS is_new FROM x),
+        |s AS (SELECT user_id, ts,
+        |  CAST(SUM(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id
+        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
+        |    AS session_id
+        |  FROM m)
+        |SELECT user_id, session_id, COUNT(*) AS n_events,
+        |  MIN(ts) AS session_start, MAX(ts) AS session_end,
+        |  ROUND(CAST(epoch_ms(MAX(ts)) - epoch_ms(MIN(ts)) AS DOUBLE) / 1000.0, 4)
+        |    AS duration_secs
+        |FROM s
+        |GROUP BY user_id, session_id
+        |ORDER BY user_id, session_id""".stripMargin)),
+    Entry("evt03_json_extract", Events.evt03JsonExtract, Sql(
+      """SELECT event_type, COUNT(*) AS n_events,
+        |  ROUND(AVG(CAST(json_extract_string(props, '$.k') AS BIGINT)), 4) AS avg_k,
+        |  MAX(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS max_k
+        |FROM events
+        |GROUP BY event_type
+        |ORDER BY event_type""".stripMargin)),
+    Entry("evt04_funnel", Events.evt04Funnel, Sql(
+      """SELECT * FROM (
+        |  SELECT user_id,
+        |    MIN(CASE WHEN event_type = 'view' THEN ts END) AS first_view,
+        |    MIN(CASE WHEN event_type = 'click' THEN ts END) AS first_click,
+        |    MIN(CASE WHEN event_type = 'purchase' THEN ts END) AS first_purchase
+        |  FROM events GROUP BY user_id) t
+        |WHERE first_view IS NOT NULL AND first_click IS NOT NULL
+        |  AND first_purchase IS NOT NULL
+        |  AND first_view < first_click AND first_click < first_purchase
+        |ORDER BY user_id""".stripMargin)),
+    Entry("evt07_asof_join", Events.evt07AsofJoin, Sql(
+      """WITH v AS (SELECT user_id, ts, event_id, 0 AS kind,
+        |    event_id AS view_id, ts AS view_ts
+        |  FROM events WHERE event_type = 'view'),
+        |p AS (SELECT user_id, ts, event_id, 1 AS kind,
+        |    CAST(NULL AS BIGINT) AS view_id, CAST(NULL AS TIMESTAMP) AS view_ts
+        |  FROM events WHERE event_type = 'purchase'),
+        |u AS (SELECT * FROM v UNION ALL SELECT * FROM p),
+        |w AS (SELECT *,
+        |  LAST_VALUE(view_id IGNORE NULLS) OVER (PARTITION BY user_id
+        |    ORDER BY ts, kind, event_id
+        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS matched_view_id,
+        |  LAST_VALUE(view_ts IGNORE NULLS) OVER (PARTITION BY user_id
+        |    ORDER BY ts, kind, event_id
+        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS matched_view_ts
+        |  FROM u)
+        |SELECT event_id AS purchase_id, user_id, ts AS purchase_ts,
+        |  matched_view_id, matched_view_ts,
+        |  epoch_us(ts) - epoch_us(matched_view_ts) AS gap_us
+        |FROM w WHERE kind = 1
+        |ORDER BY purchase_id""".stripMargin)),
+    Entry("graph01_hierarchy_rollup", Graph.graph01HierarchyRollup, Sql(
+      """SELECT r_name || ' > ' || n_name AS path, r_name, n_name,
+        |  COUNT(*) AS n_customers, ROUND(SUM(c_acctbal), 4) AS total_acctbal
+        |FROM customer
+        |JOIN nation ON c_nationkey = n_nationkey
+        |JOIN region ON n_regionkey = r_regionkey
+        |GROUP BY 1, 2, 3
+        |ORDER BY path""".stripMargin)),
+    Entry("graph02_transitive_closure", Graph.graph02TransitiveClosure, Sql(
+      """WITH RECURSIVE edges AS (
+        |  SELECT CAST(n_nationkey AS BIGINT) AS src,
+        |    CAST((n_nationkey * 2 + 7) % 25 AS BIGINT) AS dst
+        |  FROM nation),
+        |r AS (
+        |  SELECT src, dst, CAST(1 AS BIGINT) AS hops FROM edges
+        |  UNION ALL
+        |  SELECT r.src, e.dst, r.hops + 1 FROM r JOIN edges e ON r.dst = e.src
+        |  WHERE r.hops < 4)
+        |SELECT src, dst, MIN(hops) AS min_hops
+        |FROM r GROUP BY src, dst
+        |ORDER BY src, dst""".stripMargin)),
+    Entry("graph03_triple_patterns", Graph.graph03TriplePatterns, Sql(
+      """WITH triples AS (
+        |  SELECT 'cust:' || CAST(c_custkey AS VARCHAR) AS s, 'in_nation' AS p,
+        |    'nat:' || CAST(c_nationkey AS VARCHAR) AS o FROM customer
+        |  UNION ALL
+        |  SELECT 'nat:' || CAST(n_nationkey AS VARCHAR), 'in_region',
+        |    'reg:' || CAST(n_regionkey AS VARCHAR) FROM nation
+        |  UNION ALL
+        |  SELECT 'nat:' || CAST(n_nationkey AS VARCHAR), 'label', n_name FROM nation
+        |  UNION ALL
+        |  SELECT 'reg:' || CAST(r_regionkey AS VARCHAR), 'label', r_name FROM region),
+        |p1 AS (SELECT s AS c, o AS n FROM triples WHERE p = 'in_nation'),
+        |p2 AS (SELECT s AS n, o AS r FROM triples WHERE p = 'in_region'),
+        |p3 AS (SELECT s AS r, o AS rl FROM triples WHERE p = 'label')
+        |SELECT rl AS region_label, COUNT(DISTINCT c) AS n_customers
+        |FROM p1 JOIN p2 USING (n) JOIN p3 USING (r)
+        |GROUP BY rl
+        |ORDER BY region_label""".stripMargin)),
+    Entry("graph04_bgp_nation_counts", Graph.graph04BgpNationCounts, Sql(
+      """WITH triples AS (
+        |  SELECT 'cust:' || CAST(c_custkey AS VARCHAR) AS s, 'in_nation' AS p,
+        |    'nat:' || CAST(c_nationkey AS VARCHAR) AS o FROM customer
+        |  UNION ALL
+        |  SELECT 'nat:' || CAST(n_nationkey AS VARCHAR), 'in_region',
+        |    'reg:' || CAST(n_regionkey AS VARCHAR) FROM nation
+        |  UNION ALL
+        |  SELECT 'nat:' || CAST(n_nationkey AS VARCHAR), 'label', n_name FROM nation
+        |  UNION ALL
+        |  SELECT 'reg:' || CAST(r_regionkey AS VARCHAR), 'label', r_name FROM region),
+        |p1 AS (SELECT s AS c, o AS n FROM triples WHERE p = 'in_nation'),
+        |p2 AS (SELECT s AS n, o AS r FROM triples WHERE p = 'in_region'),
+        |p3 AS (SELECT s AS r FROM triples WHERE p = 'label' AND o = 'ASIA'),
+        |p4 AS (SELECT s AS n, o AS nl FROM triples WHERE p = 'label')
+        |SELECT nl AS nation_label, COUNT(DISTINCT c) AS n_customers
+        |FROM p1 JOIN p2 USING (n) JOIN p3 USING (r) JOIN p4 USING (n)
+        |GROUP BY nl
+        |ORDER BY nation_label""".stripMargin)),
+    Entry("graph05_hierarchy_rollup4", Graph.graph05HierarchyRollup4, Sql(
+      """SELECT
+        |  CAST(3 - GROUPING(r_name) - GROUPING(n_name)
+        |         - GROUPING(o_orderpriority) AS BIGINT) AS level,
+        |  COALESCE(r_name, 'ALL') AS region,
+        |  COALESCE(n_name, 'ALL') AS nation,
+        |  COALESCE(o_orderpriority, 'ALL') AS priority,
+        |  COUNT(*) AS n_orders,
+        |  ROUND(SUM(o_totalprice), 4) AS total_price
+        |FROM orders
+        |JOIN customer ON o_custkey = c_custkey
+        |JOIN nation ON c_nationkey = n_nationkey
+        |JOIN region ON n_regionkey = r_regionkey
+        |GROUP BY ROLLUP(r_name, n_name, o_orderpriority)
+        |ORDER BY level, region, nation, priority""".stripMargin)),
+    // kernel form (round 15): bit-for-bit equal to the DataFrame loop
+    // (integer mass; GraphSpec pins it), 0.41x at sf10 and alive at
+    // 8g where the SQL loop needed 24g standalone (BASELINE round 15)
+    // 5 unrolled fixed-point PageRank iterations — generated, not
+    // hand-copied, so the Spark loop and the oracle stay in lockstep.
+    Entry("graph06_pagerank", Graph.graph06PagerankKernel(_), Sql {
+      val iters = (1 to 5).map { i =>
+        s"""r$i AS (SELECT e.dst AS node,
+           |  (15 * (1000000000000 // n.n)) // 100
+           |    + (85 * CAST(SUM(r.r // e.outdeg) AS BIGINT)) // 100 AS r
+           |  FROM e JOIN r${i - 1} r ON e.src = r.node CROSS JOIN n
+           |  GROUP BY e.dst, n.n)""".stripMargin
+      }.mkString(",\n")
+      s"""WITH pairs AS (SELECT DISTINCT
+         |    'c' || CAST(o_custkey AS VARCHAR) AS a,
+         |    's' || CAST(l_suppkey AS VARCHAR) AS b
+         |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
+         |ed AS (SELECT a AS src, b AS dst FROM pairs
+         |       UNION ALL SELECT b, a FROM pairs),
+         |deg AS (SELECT src, COUNT(*) AS outdeg FROM ed GROUP BY src),
+         |e AS (SELECT ed.src, ed.dst, deg.outdeg
+         |      FROM ed JOIN deg ON ed.src = deg.src),
+         |n AS (SELECT COUNT(*) AS n FROM deg),
+         |r0 AS (SELECT src AS node, 1000000000000 // n AS r
+         |       FROM deg CROSS JOIN n),
+         |$iters
+         |SELECT node, r AS rank_micro FROM r5
+         |ORDER BY r DESC, node LIMIT 20""".stripMargin
+    }),
+    Entry("graph07_optional_filter", Graph.graph07OptionalFilter, Sql(
+      """WITH triples AS (
+        |  SELECT 'nat:' || CAST(n_nationkey AS VARCHAR) AS s, 'in_region' AS p,
+        |    'reg:' || CAST(n_regionkey AS VARCHAR) AS o FROM nation
+        |  UNION ALL
+        |  SELECT 'reg:' || CAST(r_regionkey AS VARCHAR), 'label', r_name FROM region
+        |  UNION ALL
+        |  SELECT 'nat:' || CAST(n_nationkey AS VARCHAR), 'flagged', 'true'
+        |    FROM nation WHERE n_nationkey % 3 = 0),
+        |p0 AS (SELECT s AS n, o AS r FROM triples WHERE p = 'in_region'),
+        |p1 AS (SELECT s AS r, o AS rl FROM triples WHERE p = 'label'),
+        |p2 AS (SELECT s AS n, o AS fl FROM triples WHERE p = 'flagged')
+        |SELECT p0.n AS nation_iri, rl AS region_label, fl AS flagged
+        |FROM p0 JOIN p1 ON p0.r = p1.r LEFT JOIN p2 ON p0.n = p2.n
+        |WHERE rl <> 'ASIA'
+        |ORDER BY nation_iri""".stripMargin)),
+    Entry("graph08_ancestor_paths", Graph.graph08AncestorPaths(_), Sql(
+      """WITH RECURSIVE triples AS (
+        |  SELECT 'cust:' || CAST(c_custkey AS VARCHAR) AS s, 'in_nation' AS p,
+        |    'nat:' || CAST(c_nationkey AS VARCHAR) AS o FROM customer
+        |  UNION ALL
+        |  SELECT 'nat:' || CAST(n_nationkey AS VARCHAR), 'in_region',
+        |    'reg:' || CAST(n_regionkey AS VARCHAR) FROM nation),
+        |ed AS (SELECT s AS src, o AS dst FROM triples
+        |       WHERE p IN ('in_nation', 'in_region')),
+        |r AS (
+        |  SELECT src, dst, CAST(1 AS BIGINT) AS hops FROM ed
+        |  UNION ALL
+        |  SELECT r.src, e.dst, r.hops + 1 FROM r JOIN ed e ON r.dst = e.src
+        |  WHERE r.hops < 3)
+        |SELECT src AS start, dst AS ancestor, MIN(hops) AS min_hops
+        |FROM r GROUP BY src, dst
+        |ORDER BY start, ancestor""".stripMargin)),
+    // graph09: the SPARQL-text query compiled by graft.sparql.Sparql —
+    // the oracle is the de-sugared algebra (closure + label join +
+    // left join on the sparse annotation + filter), so it checks the
+    // PARSER end-to-end: a mis-parsed OPTIONAL or FILTER changes rows.
+    Entry("graph09_sparql_text", Graph.graph09SparqlText, Sql(
+      """WITH RECURSIVE triples AS (
+        |  SELECT 'cust:' || CAST(c_custkey AS VARCHAR) AS s, 'in_nation' AS p,
+        |    'nat:' || CAST(c_nationkey AS VARCHAR) AS o FROM customer
+        |  UNION ALL
+        |  SELECT 'nat:' || CAST(n_nationkey AS VARCHAR), 'in_region',
+        |    'reg:' || CAST(n_regionkey AS VARCHAR) FROM nation
+        |  UNION ALL
+        |  SELECT 'nat:' || CAST(n_nationkey AS VARCHAR), 'label', n_name FROM nation
+        |  UNION ALL
+        |  SELECT 'reg:' || CAST(r_regionkey AS VARCHAR), 'label', r_name FROM region
+        |  UNION ALL
+        |  SELECT 'nat:' || CAST(n_nationkey AS VARCHAR), 'flagged', 'true'
+        |    FROM nation WHERE n_nationkey % 3 = 0),
+        |ed AS (SELECT s AS src, o AS dst FROM triples
+        |       WHERE p IN ('in_nation', 'in_region')),
+        |r AS (
+        |  SELECT src, dst, CAST(1 AS BIGINT) AS hops FROM ed
+        |  UNION ALL
+        |  SELECT r.src, e.dst, r.hops + 1 FROM r JOIN ed e ON r.dst = e.src
+        |  WHERE r.hops < 8),
+        |cl AS (SELECT src AS c, dst AS anc FROM r GROUP BY src, dst),
+        |lab AS (SELECT s AS anc, o AS l FROM triples WHERE p = 'label'),
+        |flg AS (SELECT s AS anc, o AS fl FROM triples WHERE p = 'flagged')
+        |SELECT cl.c, cl.anc, lab.l, flg.fl
+        |FROM cl JOIN lab ON cl.anc = lab.anc
+        |LEFT JOIN flg ON cl.anc = flg.anc
+        |WHERE lab.l <> 'ASIA'
+        |ORDER BY cl.c, cl.anc""".stripMargin)),
+    // graph10: graph04's aggregation through the TEXT front-end —
+    // same de-sugared algebra, aliases from the (COUNT ... AS ?n)
+    // binding.
+    Entry("graph10_sparql_agg", Graph.graph10SparqlAgg, Sql(
+      """WITH triples AS (
+        |  SELECT 'cust:' || CAST(c_custkey AS VARCHAR) AS s, 'in_nation' AS p,
+        |    'nat:' || CAST(c_nationkey AS VARCHAR) AS o FROM customer
+        |  UNION ALL
+        |  SELECT 'nat:' || CAST(n_nationkey AS VARCHAR), 'in_region',
+        |    'reg:' || CAST(n_regionkey AS VARCHAR) FROM nation
+        |  UNION ALL
+        |  SELECT 'nat:' || CAST(n_nationkey AS VARCHAR), 'label', n_name FROM nation
+        |  UNION ALL
+        |  SELECT 'reg:' || CAST(r_regionkey AS VARCHAR), 'label', r_name FROM region),
+        |p1 AS (SELECT s AS c, o AS n FROM triples WHERE p = 'in_nation'),
+        |p2 AS (SELECT s AS n, o AS r FROM triples WHERE p = 'in_region'),
+        |p3 AS (SELECT s AS r FROM triples WHERE p = 'label' AND o = 'ASIA'),
+        |p4 AS (SELECT s AS n, o AS nl FROM triples WHERE p = 'label')
+        |SELECT nl, COUNT(DISTINCT c) AS n_customers
+        |FROM p1 JOIN p2 USING (n) JOIN p3 USING (r) JOIN p4 USING (n)
+        |GROUP BY nl
+        |ORDER BY nl""".stripMargin)),
+    // graph11: the UNION query's de-sugared algebra — branch 1 is the
+    // ASIA join, branch 2 the flagged scan (no ?r => NULL), combined
+    // with UNION ALL (SPARQL union is a bag).
+    Entry("graph11_sparql_union", Graph.graph11SparqlUnion, Sql(
+      """WITH triples AS (
+        |  SELECT 'nat:' || CAST(n_nationkey AS VARCHAR) AS s, 'in_region' AS p,
+        |    'reg:' || CAST(n_regionkey AS VARCHAR) AS o FROM nation
+        |  UNION ALL
+        |  SELECT 'nat:' || CAST(n_nationkey AS VARCHAR), 'label', n_name FROM nation
+        |  UNION ALL
+        |  SELECT 'reg:' || CAST(r_regionkey AS VARCHAR), 'label', r_name FROM region
+        |  UNION ALL
+        |  SELECT 'nat:' || CAST(n_nationkey AS VARCHAR), 'flagged', 'true'
+        |    FROM nation WHERE n_nationkey % 3 = 0),
+        |b1 AS (
+        |  SELECT ir.s AS x, lab.o AS l, ir.o AS r
+        |  FROM triples ir
+        |  JOIN triples rl ON ir.o = rl.s AND rl.p = 'label' AND rl.o = 'ASIA'
+        |  JOIN triples lab ON ir.s = lab.s AND lab.p = 'label'
+        |  WHERE ir.p = 'in_region'),
+        |b2 AS (
+        |  SELECT fl.s AS x, lab.o AS l, CAST(NULL AS VARCHAR) AS r
+        |  FROM triples fl
+        |  JOIN triples lab ON fl.s = lab.s AND lab.p = 'label'
+        |  WHERE fl.p = 'flagged' AND fl.o = 'true')
+        |SELECT x, l, r FROM b1
+        |UNION ALL
+        |SELECT x, l, r FROM b2
+        |ORDER BY x, r""".stripMargin)),
+    // graph12: the sequence/inverse-path query de-sugared — the
+    // 3-segment path is a plain join chain, the inverse pattern a
+    // swapped-endpoint join.
+    Entry("graph12_sparql_path_ops", Graph.graph12SparqlPathOps, Sql(
+      """WITH triples AS (
+        |  SELECT 'cust:' || CAST(c_custkey AS VARCHAR) AS s, 'in_nation' AS p,
+        |    'nat:' || CAST(c_nationkey AS VARCHAR) AS o FROM customer
+        |  UNION ALL
+        |  SELECT 'nat:' || CAST(n_nationkey AS VARCHAR), 'in_region',
+        |    'reg:' || CAST(n_regionkey AS VARCHAR) FROM nation
+        |  UNION ALL
+        |  SELECT 'nat:' || CAST(n_nationkey AS VARCHAR), 'label', n_name FROM nation
+        |  UNION ALL
+        |  SELECT 'reg:' || CAST(r_regionkey AS VARCHAR), 'label', r_name FROM region)
+        |SELECT cn.s AS c, nl.o AS nl, rl.o AS rl
+        |FROM triples cn
+        |JOIN triples nr ON cn.o = nr.s AND nr.p = 'in_region'
+        |JOIN triples rl ON nr.o = rl.s AND rl.p = 'label'
+        |JOIN triples nl ON cn.o = nl.s AND nl.p = 'label'
+        |WHERE cn.p = 'in_nation'
+        |ORDER BY c""".stripMargin)),
+    // graph13: VALUES is an inline constant table joined on the shared
+    // var; BIND is a computed column over the join.
+    Entry("graph13_sparql_values_bind", Graph.graph13SparqlValuesBind, Sql(
+      """WITH triples AS (
+        |  SELECT 'nat:' || CAST(n_nationkey AS VARCHAR) AS s, 'label' AS p,
+        |    n_name AS o FROM nation
+        |  UNION ALL
+        |  SELECT 'nat:' || CAST(n_nationkey AS VARCHAR), 'in_region',
+        |    'reg:' || CAST(n_regionkey AS VARCHAR) FROM nation),
+        |lab AS (SELECT s AS n, o AS l FROM triples WHERE p = 'label'),
+        |ir AS (SELECT s AS n FROM triples WHERE p = 'in_region'),
+        |v AS (SELECT * FROM (VALUES ('NATION_2'), ('NATION_7'), ('NATION_11')) AS t(l))
+        |SELECT lab.n, lab.l, lower(lab.l) AS ll
+        |FROM lab JOIN ir ON lab.n = ir.n JOIN v ON lab.l = v.l
+        |ORDER BY ll""".stripMargin)),
+    // graph14: MINUS de-sugars to an anti join on the shared var.
+    Entry("graph14_sparql_minus", Graph.graph14SparqlMinus, Sql(
+      """WITH triples AS (
+        |  SELECT 'nat:' || CAST(n_nationkey AS VARCHAR) AS s, 'in_region' AS p,
+        |    'reg:' || CAST(n_regionkey AS VARCHAR) AS o FROM nation
+        |  UNION ALL
+        |  SELECT 'nat:' || CAST(n_nationkey AS VARCHAR), 'label', n_name FROM nation
+        |  UNION ALL
+        |  SELECT 'reg:' || CAST(r_regionkey AS VARCHAR), 'label', r_name FROM region
+        |  UNION ALL
+        |  SELECT 'nat:' || CAST(n_nationkey AS VARCHAR), 'flagged', 'true'
+        |    FROM nation WHERE n_nationkey % 3 = 0),
+        |b1 AS (
+        |  SELECT ir.s AS n, lab.o AS l
+        |  FROM triples ir
+        |  JOIN triples rl ON ir.o = rl.s AND rl.p = 'label' AND rl.o = 'ASIA'
+        |  JOIN triples lab ON ir.s = lab.s AND lab.p = 'label'
+        |  WHERE ir.p = 'in_region'),
+        |fl AS (SELECT s AS n FROM triples WHERE p = 'flagged' AND o = 'true')
+        |SELECT b1.n, b1.l FROM b1 ANTI JOIN fl ON b1.n = fl.n
+        |ORDER BY b1.n""".stripMargin)),
+    // graph15: ASK is EXISTS over the pattern's solutions.
+    Entry("graph15_sparql_ask", Graph.graph15SparqlAsk, Sql(
+      """WITH triples AS (
+        |  SELECT 'nat:' || CAST(n_nationkey AS VARCHAR) AS s, 'label' AS p,
+        |    n_name AS o FROM nation
+        |  UNION ALL
+        |  SELECT 'reg:' || CAST(r_regionkey AS VARCHAR), 'label', r_name FROM region
+        |  UNION ALL
+        |  SELECT 'nat:' || CAST(n_nationkey AS VARCHAR), 'flagged', 'true'
+        |    FROM nation WHERE n_nationkey % 3 = 0)
+        |SELECT 'has_flagged' AS probe,
+        |  EXISTS(SELECT 1 FROM triples WHERE p = 'flagged' AND o = 'true') AS ask
+        |UNION ALL
+        |SELECT 'impossible_label',
+        |  EXISTS(SELECT 1 FROM triples WHERE p = 'label' AND o = 'NO_SUCH_LABEL')
+        |ORDER BY probe""".stripMargin)),
+    // graph16: CONSTRUCT = one projection per template triple over the
+    // BGP solutions; UNION (not ALL) carries the graph's set semantics.
+    Entry("graph16_sparql_construct", Graph.graph16SparqlConstruct, Sql(
+      """WITH cn AS (
+        |  SELECT 'cust:' || CAST(c_custkey AS VARCHAR) AS c,
+        |    'nat:' || CAST(c_nationkey AS VARCHAR) AS n FROM customer),
+        |nr AS (
+        |  SELECT 'nat:' || CAST(n_nationkey AS VARCHAR) AS n,
+        |    'reg:' || CAST(n_regionkey AS VARCHAR) AS r FROM nation),
+        |j AS (SELECT DISTINCT cn.c, nr.r FROM cn JOIN nr USING (n))
+        |SELECT s, p, o FROM (
+        |  SELECT c AS s, 'in_region' AS p, r AS o FROM j
+        |  UNION
+        |  SELECT r AS s, 'has_member' AS p, c AS o FROM j)
+        |ORDER BY s, p, o""".stripMargin)),
+    // graph17: DESCRIBE = both-side membership filter over the store.
+    Entry("graph17_sparql_describe", Graph.graph17SparqlDescribe, Sql(
+      """WITH triples AS (
+        |  SELECT 'cust:' || CAST(c_custkey AS VARCHAR) AS s, 'in_nation' AS p,
+        |    'nat:' || CAST(c_nationkey AS VARCHAR) AS o FROM customer
+        |  UNION ALL
+        |  SELECT 'nat:' || CAST(n_nationkey AS VARCHAR), 'in_region',
+        |    'reg:' || CAST(n_regionkey AS VARCHAR) FROM nation
+        |  UNION ALL
+        |  SELECT 'nat:' || CAST(n_nationkey AS VARCHAR), 'label', n_name FROM nation
+        |  UNION ALL
+        |  SELECT 'reg:' || CAST(r_regionkey AS VARCHAR), 'label', r_name FROM region
+        |  UNION ALL
+        |  SELECT 'nat:' || CAST(n_nationkey AS VARCHAR), 'flagged', 'true'
+        |    FROM nation WHERE n_nationkey % 3 = 0)
+        |SELECT DISTINCT s, p, o FROM triples
+        |WHERE s IN ('nat:4', 'reg:1') OR o IN ('nat:4', 'reg:1')
+        |ORDER BY s, p, o""".stripMargin)),
+    // graph18: named graphs = the quad store partitioned by predicate
+    // family; FROM prunes the default graph, ground GRAPH prunes one
+    // named graph, GRAPH ?g binds the graph column as a variable.
+    Entry("graph18_sparql_graphs", Graph.graph18SparqlGraphs, Sql(
+      """WITH quads AS (
+        |  SELECT 'cust:' || CAST(c_custkey AS VARCHAR) AS s, 'in_nation' AS p,
+        |    'nat:' || CAST(c_nationkey AS VARCHAR) AS o, 'graph:people' AS g
+        |  FROM customer
+        |  UNION ALL
+        |  SELECT 'nat:' || CAST(n_nationkey AS VARCHAR), 'in_region',
+        |    'reg:' || CAST(n_regionkey AS VARCHAR), 'graph:topology' FROM nation
+        |  UNION ALL
+        |  SELECT 'nat:' || CAST(n_nationkey AS VARCHAR), 'label', n_name,
+        |    'graph:labels' FROM nation
+        |  UNION ALL
+        |  SELECT 'reg:' || CAST(r_regionkey AS VARCHAR), 'label', r_name,
+        |    'graph:labels' FROM region
+        |  UNION ALL
+        |  SELECT 'nat:' || CAST(n_nationkey AS VARCHAR), 'flagged', 'true',
+        |    'graph:flags' FROM nation WHERE n_nationkey % 3 = 0)
+        |SELECT t.s AS n, l.o AS name, f.g AS g
+        |FROM quads t
+        |JOIN quads l ON l.g = 'graph:labels' AND l.p = 'label' AND l.s = t.s
+        |JOIN quads f ON f.p = 'flagged' AND f.o = 'true' AND f.s = t.s
+        |WHERE t.g = 'graph:topology' AND t.p = 'in_region'
+        |ORDER BY n""".stripMargin)),
+    // graph19: FILTER EXISTS de-sugars to a semi join, NOT EXISTS to
+    // an anti join — the oracle replays both as EXISTS subqueries
+    // over the triple synthesis.
+    Entry("graph19_sparql_exists", Graph.graph19SparqlExists, Sql(
+      """WITH triples AS (
+        |  SELECT 'cust:' || CAST(c_custkey AS VARCHAR) AS s, 'in_nation' AS p,
+        |    'nat:' || CAST(c_nationkey AS VARCHAR) AS o FROM customer
+        |  UNION ALL
+        |  SELECT 'nat:' || CAST(n_nationkey AS VARCHAR), 'in_region',
+        |    'reg:' || CAST(n_regionkey AS VARCHAR) FROM nation
+        |  UNION ALL
+        |  SELECT 'nat:' || CAST(n_nationkey AS VARCHAR), 'label', n_name FROM nation
+        |  UNION ALL
+        |  SELECT 'reg:' || CAST(r_regionkey AS VARCHAR), 'label', r_name FROM region
+        |  UNION ALL
+        |  SELECT 'nat:' || CAST(n_nationkey AS VARCHAR), 'flagged', 'true'
+        |    FROM nation WHERE n_nationkey % 3 = 0),
+        |base AS (
+        |  SELECT ir.s AS n, lab.o AS l
+        |  FROM triples ir
+        |  JOIN triples rl ON ir.o = rl.s AND rl.p = 'label' AND rl.o <> 'EUROPE'
+        |  JOIN triples lab ON ir.s = lab.s AND lab.p = 'label'
+        |  WHERE ir.p = 'in_region')
+        |SELECT n, l FROM base b
+        |WHERE EXISTS (SELECT 1 FROM triples c
+        |              WHERE c.p = 'in_nation' AND c.o = b.n)
+        |  AND NOT EXISTS (SELECT 1 FROM triples f
+        |                  WHERE f.p = 'flagged' AND f.o = 'true' AND f.s = b.n)
+        |ORDER BY n""".stripMargin)),
+    // graph20: p* = ZeroLengthPath ∪ p+ — the oracle replays the
+    // node self-pairs (set-union with the in_region edge set, which
+    // is single-hop in this store) and the label join.
+    Entry("graph20_sparql_path_star", Graph.graph20SparqlPathStar, Sql(
+      """WITH triples AS (
+        |  SELECT 'cust:' || CAST(c_custkey AS VARCHAR) AS s, 'in_nation' AS p,
+        |    'nat:' || CAST(c_nationkey AS VARCHAR) AS o FROM customer
+        |  UNION ALL
+        |  SELECT 'nat:' || CAST(n_nationkey AS VARCHAR), 'in_region',
+        |    'reg:' || CAST(n_regionkey AS VARCHAR) FROM nation
+        |  UNION ALL
+        |  SELECT 'nat:' || CAST(n_nationkey AS VARCHAR), 'label', n_name FROM nation
+        |  UNION ALL
+        |  SELECT 'reg:' || CAST(r_regionkey AS VARCHAR), 'label', r_name FROM region
+        |  UNION ALL
+        |  SELECT 'nat:' || CAST(n_nationkey AS VARCHAR), 'flagged', 'true'
+        |    FROM nation WHERE n_nationkey % 3 = 0),
+        |star AS (
+        |  SELECT n AS s, n AS o FROM (
+        |    SELECT s AS n FROM triples UNION SELECT o FROM triples)
+        |  UNION
+        |  SELECT s, o FROM triples WHERE p = 'in_region'),
+        |lab AS (SELECT s, o AS l FROM triples WHERE p = 'label')
+        |SELECT star.s AS start, star.o AS anc, lab.l
+        |FROM star JOIN lab ON star.o = lab.s
+        |ORDER BY start, anc""".stripMargin)),
+    // graph21: the subquery de-sugars to a pre-aggregated derived
+    // table joined on the shared var, filtered on the alias.
+    Entry("graph21_sparql_subquery", Graph.graph21SparqlSubquery, Sql(
+      """WITH triples AS (
+        |  SELECT 'cust:' || CAST(c_custkey AS VARCHAR) AS s, 'in_nation' AS p,
+        |    'nat:' || CAST(c_nationkey AS VARCHAR) AS o FROM customer
+        |  UNION ALL
+        |  SELECT 'nat:' || CAST(n_nationkey AS VARCHAR), 'label', n_name FROM nation),
+        |agg AS (
+        |  SELECT o AS n, CAST(COUNT(s) AS BIGINT) AS n_customers
+        |  FROM triples WHERE p = 'in_nation' GROUP BY o),
+        |lab AS (SELECT s AS n, o AS nl FROM triples WHERE p = 'label')
+        |SELECT lab.nl, agg.n_customers
+        |FROM agg JOIN lab ON agg.n = lab.n
+        |WHERE agg.n_customers >= 5
+        |ORDER BY lab.nl""".stripMargin)),
+    // graph22: the negated property set is one NOT IN predicate
+    // filter; only in_region survives the exclusion here.
+    Entry("graph22_sparql_negated_props", Graph.graph22SparqlNegatedProps, Sql(
+      """WITH triples AS (
+        |  SELECT 'cust:' || CAST(c_custkey AS VARCHAR) AS s, 'in_nation' AS p,
+        |    'nat:' || CAST(c_nationkey AS VARCHAR) AS o FROM customer
+        |  UNION ALL
+        |  SELECT 'nat:' || CAST(n_nationkey AS VARCHAR), 'in_region',
+        |    'reg:' || CAST(n_regionkey AS VARCHAR) FROM nation
+        |  UNION ALL
+        |  SELECT 'nat:' || CAST(n_nationkey AS VARCHAR), 'label', n_name FROM nation
+        |  UNION ALL
+        |  SELECT 'reg:' || CAST(r_regionkey AS VARCHAR), 'label', r_name FROM region
+        |  UNION ALL
+        |  SELECT 'nat:' || CAST(n_nationkey AS VARCHAR), 'flagged', 'true'
+        |    FROM nation WHERE n_nationkey % 3 = 0),
+        |neg AS (SELECT s, o FROM triples
+        |        WHERE p NOT IN ('in_nation', 'label', 'flagged')),
+        |lab AS (SELECT s AS o, o AS l FROM triples WHERE p = 'label')
+        |SELECT neg.s, neg.o, lab.l
+        |FROM neg JOIN lab ON neg.o = lab.o
+        |ORDER BY neg.s""".stripMargin)),
+    // graph23: the multi-triple OPTIONAL left-joins the inner-joined
+    // group as a unit — nations lacking EITHER predicate bind neither.
+    Entry("graph23_sparql_optional_group", Graph.graph23SparqlOptionalGroup, Sql(
+      """WITH triples AS (
+        |  SELECT 'cust:' || CAST(c_custkey AS VARCHAR) AS s, 'in_nation' AS p,
+        |    'nat:' || CAST(c_nationkey AS VARCHAR) AS o FROM customer
+        |  UNION ALL
+        |  SELECT 'nat:' || CAST(n_nationkey AS VARCHAR), 'label', n_name FROM nation
+        |  UNION ALL
+        |  SELECT 'nat:' || CAST(n_nationkey AS VARCHAR), 'flagged', 'true'
+        |    FROM nation WHERE n_nationkey % 3 = 0),
+        |flg AS (SELECT s AS n, o AS f FROM triples WHERE p = 'flagged'),
+        |lab AS (SELECT s AS n, o AS fl FROM triples WHERE p = 'label'),
+        |grp AS (SELECT flg.n, flg.f, lab.fl FROM flg JOIN lab ON flg.n = lab.n),
+        |cn AS (SELECT s AS c, o AS n FROM triples WHERE p = 'in_nation')
+        |SELECT cn.c, cn.n, grp.f, grp.fl
+        |FROM cn LEFT JOIN grp ON cn.n = grp.n
+        |ORDER BY cn.c""".stripMargin)),
+    // graph24: HAVING + GROUP_CONCAT replayed on the star schema —
+    // nation labels are unique, so COUNT(DISTINCT iri) == COUNT
+    // (DISTINCT label); the engine sorts GROUP_CONCAT values
+    // (determinism rule), mirrored by list_sort.
+    Entry("graph24_sparql_having", Graph.graph24SparqlHaving, Sql(
+      """WITH nr AS (SELECT r.r_name AS rl, n.n_name AS nl
+        |  FROM nation n JOIN region r ON n.n_regionkey = r.r_regionkey),
+        |g AS (SELECT rl, COUNT(DISTINCT nl) AS n_nations,
+        |    array_to_string(list_sort(list_distinct(LIST(nl))), ', ') AS nations,
+        |    MIN(nl) AS mn
+        |  FROM nr GROUP BY rl)
+        |SELECT rl, n_nations, nations FROM g WHERE mn < 'NATION_12' ORDER BY rl""".stripMargin)),
+    // graph25: FROM NAMED replayed on the star schema — the labels
+    // graph is nation+region labels, the flags graph every third
+    // nation; people/topology are excluded by the named list.
+    Entry("graph25_sparql_from_named", Graph.graph25SparqlFromNamed, Sql(
+      """WITH q AS (
+        |  SELECT 'graph:labels' AS g FROM nation
+        |  UNION ALL SELECT 'graph:labels' FROM region
+        |  UNION ALL SELECT 'graph:flags' FROM nation WHERE n_nationkey % 3 = 0)
+        |SELECT g, COUNT(*) AS n_triples FROM q GROUP BY g ORDER BY g""".stripMargin)),
+    // graph26: SUM/AVG over typed decimal literals — the engine
+    // strips `"lex"^^<datatype>` and sums doubles; decimal→string→
+    // double round-trips exactly, so the oracle aggregates the base
+    // column directly. Both sides round to 4dp.
+    Entry("graph26_sparql_numeric_agg", Graph.graph26SparqlNumericAgg, Sql(
+      """SELECT n_name AS nation,
+        |  ROUND(SUM(CAST(c_acctbal AS DOUBLE)), 4) AS total_bal,
+        |  ROUND(AVG(CAST(c_acctbal AS DOUBLE)), 4) AS avg_bal,
+        |  COUNT(*) AS n_cust
+        |FROM customer JOIN nation ON c_nationkey = n_nationkey
+        |GROUP BY n_name
+        |ORDER BY n_name""".stripMargin)),
+    // graph27: the recursive-CTE replay enumerates PATHS (UNION ALL)
+    // where the engine's frontier BFS expands each node once — MIN
+    // over path depths converges to the same hop distance; the hop
+    // bound keeps the path count finite.
+    Entry("graph27_bfs_distances", Graph.graph27BfsDistances(_), Sql(
+      """WITH RECURSIVE
+        |e1 AS (SELECT DISTINCT l_orderkey*2 AS src, l_partkey*2+1 AS dst FROM lineitem),
+        |edges AS (SELECT src, dst FROM e1 UNION ALL SELECT dst AS src, src AS dst FROM e1),
+        |seed AS (SELECT MIN(l_orderkey)*2 AS node FROM lineitem),
+        |bfs(node, dist) AS (
+        |  SELECT node, CAST(0 AS BIGINT) FROM seed
+        |  UNION ALL
+        |  SELECT e.dst, b.dist+1 FROM bfs b JOIN edges e ON e.src = b.node WHERE b.dist < 4
+        |),
+        |m AS (SELECT node, MIN(dist) AS dist FROM bfs GROUP BY node)
+        |SELECT CASE WHEN node % 2 = 0 THEN 'ord:' || (node // 2)::VARCHAR
+        |            ELSE 'prt:' || ((node-1) // 2)::VARCHAR END AS node, dist
+        |FROM m ORDER BY dist, node""".stripMargin)),
+    // graph30: the ≤ maxHops-edge paths enumerate as the same
+    // recursive shape with the cost carried; MIN per node is the
+    // Bellman-Ford recurrence term for term.
+    Entry("graph30_shortest_paths", Graph.graph30ShortestPaths(_), Sql(
+      """WITH RECURSIVE
+        |base AS (SELECT l_orderkey*2 AS a, l_partkey*2+1 AS b,
+        |    MIN(CAST(l_quantity AS BIGINT)) AS w
+        |  FROM lineitem GROUP BY 1, 2),
+        |edges AS (SELECT a AS src, b AS dst, w FROM base
+        |  UNION ALL SELECT b, a, w FROM base),
+        |seed AS (SELECT MIN(l_orderkey)*2 AS node FROM lineitem),
+        |paths(node, cost, hops) AS (
+        |  SELECT node, CAST(0 AS BIGINT), 0 FROM seed
+        |  UNION ALL
+        |  SELECT e.dst, p.cost + e.w, p.hops + 1
+        |  FROM paths p JOIN edges e ON e.src = p.node
+        |  WHERE p.hops < 4),
+        |m AS (SELECT node, MIN(cost) AS cost FROM paths GROUP BY node)
+        |SELECT CASE WHEN node % 2 = 0 THEN 'ord:' || (node // 2)::VARCHAR
+        |            ELSE 'prt:' || ((node-1) // 2)::VARCHAR END AS node, cost
+        |FROM m ORDER BY node""".stripMargin)),
+    // graph28: nested OPTIONAL == nested LEFT JOINs; labeled
+    // subjects are nations ∪ regions, regions miss the outer group
+    // (both vars null), nations optionally carry the sparse flag.
+    Entry("graph28_sparql_nested_optional", Graph.graph28SparqlNestedOptional, Sql(
+      """SELECT n, nl, rl, fl FROM (
+        |  SELECT 'nat:' || n_nationkey AS n, n_name AS nl, r_name AS rl,
+        |    CASE WHEN n_nationkey % 3 = 0 THEN 'true' END AS fl
+        |  FROM nation JOIN region ON n_regionkey = r_regionkey
+        |  UNION ALL
+        |  SELECT 'reg:' || r_regionkey, r_name, NULL, NULL FROM region)
+        |ORDER BY n""".stripMargin)),
+    // graph29: VALUES is SPARQL 18.5 multiset COMPATIBILITY — one
+    // output row per (solution, VALUES-row) compatible pair, so the
+    // replay must JOIN the VALUES rows (null cell = UNDEF constrains
+    // nothing), not collapse them into a WHERE-OR filter: a solution
+    // compatible with two VALUES rows correctly appears twice.
+    Entry("graph29_sparql_values_undef", Graph.graph29SparqlValuesUndef, Sql(
+      """SELECT s.n, s.nl FROM (
+        |  SELECT 'nat:' || n_nationkey AS n, n_name AS nl FROM nation
+        |  UNION ALL
+        |  SELECT 'reg:' || r_regionkey, r_name FROM region) s
+        |JOIN (VALUES ('nat:0', NULL), (NULL, 'NATION_18')) v(vn, vnl)
+        |  ON (v.vn IS NULL OR s.n = v.vn)
+        | AND (v.vnl IS NULL OR s.nl = v.vnl)
+        |ORDER BY n, nl""".stripMargin)),
+    Entry("mm01_binary_meta", Multimodal.mm01BinaryMeta,
+      RowsOnly("image payloads decode through ImageIO, which no SQL can replay; " +
+        "MultimodalSpec pins the exact pixel features")),
+    // Byte-based, not char-based: payload slicing happens on the UTF-8
+    // bytes (hex(encode(text)) = 2 hex chars per byte), so the oracle
+    // agrees with Spark's binary substring for ANY corpus, not just
+    // ASCII. md5 runs over the hex VARCHAR on both engines (DuckDB's
+    // md5/substring cannot take BLOBs).
+    Entry("mm02_frame_sample", Multimodal.mm02FrameSample(_), Sql(
+      """WITH f AS (SELECT doc_id, hex(encode(text)) AS h,
+        |    CAST(CEIL(octet_length(encode(text)) / 64.0) AS BIGINT) AS n_frames
+        |  FROM documents),
+        |x AS (SELECT doc_id, h, n_frames,
+        |    UNNEST(range(0, GREATEST(n_frames, 1), 4)) AS frame_idx FROM f)
+        |SELECT doc_id, frame_idx, n_frames,
+        |  CAST(LENGTH(substring(h, CAST(frame_idx * 128 + 1 AS INTEGER), 128)) // 2
+        |    AS BIGINT) AS frame_len,
+        |  md5(substring(h, CAST(frame_idx * 128 + 1 AS INTEGER), 128))
+        |    AS frame_fp
+        |FROM x
+        |ORDER BY doc_id, frame_idx""".stripMargin)),
+    // mm03: DuckDB replays the U8-PCM windowing over hex(payload) —
+    // 1-indexed list lambdas, ('0x'||h)::INT decode, GREATEST guards
+    // mirroring the Spark side's empty-window handling.
+    Entry("mm03_audio_features", Multimodal.mm03AudioFeatures(_), Sql(
+      """WITH m AS (SELECT doc_id, hex(encode(text)) AS h FROM documents),
+        |w AS (SELECT doc_id, h,
+        |    CAST(CEIL(length(h) / 64.0) AS BIGINT) AS n_windows FROM m),
+        |f AS (SELECT doc_id, h,
+        |    UNNEST(generate_series(0, GREATEST(n_windows, 1) - 1)) AS win_idx
+        |  FROM w),
+        |s AS (SELECT doc_id, win_idx,
+        |    list_transform(
+        |      regexp_extract_all(substring(h, CAST(win_idx * 64 + 1 AS BIGINT), 64), '..'),
+        |      x -> ('0x' || x)::INTEGER - 128) AS samples
+        |  FROM f),
+        |feat AS (SELECT doc_id, win_idx,
+        |    CAST(len(samples) AS BIGINT) AS n_samples,
+        |    ROUND(SQRT(COALESCE(list_sum(list_transform(samples,
+        |        x -> CAST(x * x AS DOUBLE))), 0) /
+        |      GREATEST(len(samples), 1)), 4) AS rms,
+        |    CAST(CASE WHEN len(samples) < 2 THEN 0 ELSE
+        |      list_sum(list_transform(generate_series(2, len(samples)),
+        |        i -> CASE WHEN (samples[i-1] >= 0) != (samples[i] >= 0)
+        |             THEN 1 ELSE 0 END)) END AS BIGINT) AS n_zero_cross,
+        |    CAST(COALESCE(list_max(list_transform(samples, x -> abs(x))), 0)
+        |      AS BIGINT) AS peak
+        |  FROM s)
+        |SELECT doc_id, win_idx, n_samples, rms, n_zero_cross, peak
+        |FROM feat
+        |ORDER BY doc_id, win_idx""".stripMargin)),
+    // mm04: mm03's rms chain + a per-doc LAG window + one fold; the
+    // 4dp-rounded rms values are bit-identical across engines
+    // (mm03's proven property) so the cut threshold cannot diverge.
+    Entry("mm04_scene_cuts", Multimodal.mm04SceneCuts(_), Sql(
+      """WITH m AS (SELECT doc_id, hex(encode(text)) AS h FROM documents),
+        |w AS (SELECT doc_id, h,
+        |    CAST(CEIL(length(h) / 64.0) AS BIGINT) AS n_windows FROM m),
+        |f AS (SELECT doc_id, h,
+        |    UNNEST(generate_series(0, GREATEST(n_windows, 1) - 1)) AS win_idx
+        |  FROM w),
+        |s AS (SELECT doc_id, win_idx,
+        |    list_transform(
+        |      regexp_extract_all(substring(h, CAST(win_idx * 64 + 1 AS BIGINT), 64), '..'),
+        |      x -> ('0x' || x)::INTEGER - 128) AS samples
+        |  FROM f),
+        |feat AS (SELECT doc_id, win_idx,
+        |    ROUND(SQRT(COALESCE(list_sum(list_transform(samples,
+        |        x -> CAST(x * x AS DOUBLE))), 0) /
+        |      GREATEST(len(samples), 1)), 4) AS rms
+        |  FROM s),
+        |d AS (SELECT doc_id, rms,
+        |    LAG(rms) OVER (PARTITION BY doc_id ORDER BY win_idx) AS prev
+        |  FROM feat),
+        |c AS (SELECT doc_id,
+        |    CASE WHEN prev IS NOT NULL AND ABS(rms - prev) >= 8.0
+        |      THEN 1 ELSE 0 END AS is_cut FROM d)
+        |SELECT doc_id, COUNT(*) AS n_frames,
+        |  CAST(SUM(is_cut) AS BIGINT) AS n_cuts,
+        |  CAST(SUM(is_cut) + 1 AS BIGINT) AS n_segments,
+        |  ROUND(COUNT(*) / CAST(SUM(is_cut) + 1 AS DOUBLE), 4)
+        |    AS avg_segment_frames
+        |FROM c GROUP BY doc_id
+        |ORDER BY doc_id""".stripMargin)),
+    // mm05: mm03's hex window-rms chain re-used to build the cyclic
+    // 63-bit dHash per doc, then the EXHAUSTIVE pairwise Hamming
+    // form — the banded Spark plan must reproduce it exactly (the
+    // 4-band pigeonhole guarantee at maxHamming = 3).
+    Entry("mm05_phash_neardup", Multimodal.mm05PhashNeardup(_), Sql(
+      """WITH m AS (SELECT doc_id, hex(encode(text)) AS h FROM documents),
+        |w AS (SELECT doc_id, h,
+        |    CAST(CEIL(length(h) / 64.0) AS BIGINT) AS n_windows FROM m),
+        |f AS (SELECT doc_id, h,
+        |    UNNEST(generate_series(0, GREATEST(n_windows, 1) - 1)) AS win_idx
+        |  FROM w),
+        |s AS (SELECT doc_id, win_idx,
+        |    list_transform(
+        |      regexp_extract_all(substring(h, CAST(win_idx * 64 + 1 AS BIGINT), 64), '..'),
+        |      x -> ('0x' || x)::INTEGER - 128) AS samples
+        |  FROM f),
+        |feat AS (SELECT doc_id, win_idx,
+        |    ROUND(SQRT(COALESCE(list_sum(list_transform(samples,
+        |        x -> CAST(x * x AS DOUBLE))), 0) /
+        |      GREATEST(len(samples), 1)), 4) AS rms
+        |  FROM s),
+        |r AS (SELECT doc_id, list(rms ORDER BY win_idx) AS rl FROM feat GROUP BY doc_id),
+        |hh AS (SELECT doc_id,
+        |    CASE WHEN len(rl) >= 2 THEN
+        |      CAST(list_sum(list_transform(range(0, 63),
+        |        i -> CASE WHEN rl[CAST(((i + 1) * GREATEST(1, len(rl) // 64))
+        |                            % len(rl) AS BIGINT) + 1] >
+        |                       rl[CAST((i * GREATEST(1, len(rl) // 64))
+        |                            % len(rl) AS BIGINT) + 1]
+        |             THEN (CAST(1 AS BIGINT) << CAST(i AS INTEGER))
+        |             ELSE CAST(0 AS BIGINT) END)) AS BIGINT)
+        |    ELSE 0 END AS h FROM r)
+        |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+        |  CAST(bit_count(xor(a.h, b.h)) AS BIGINT) AS hamming
+        |FROM hh a JOIN hh b ON a.doc_id < b.doc_id
+        |WHERE a.h <> 0 AND b.h <> 0
+        |  AND bit_count(xor(a.h, b.h)) <= 3
+        |ORDER BY 1, 2""".stripMargin)),
+    Entry("txt13_pii_redaction", TextAnalysis.txt13PiiRedaction, Sql(
+      """WITH p AS (SELECT doc_id,
+        |  text || ' contact user' || CAST(doc_id AS VARCHAR)
+        |       || '@example.com or 555-' || CAST(doc_id AS VARCHAR) AS raw
+        |  FROM documents),
+        |r AS (SELECT doc_id,
+        |  CAST(len(regexp_extract_all(raw, '[a-z0-9]+@[a-z]+\.[a-z]+')) AS BIGINT)
+        |    AS n_emails,
+        |  CAST(len(regexp_extract_all(raw, '555-[0-9]+')) AS BIGINT) AS n_phones,
+        |  regexp_replace(
+        |    regexp_replace(raw, '[a-z0-9]+@[a-z]+\.[a-z]+', '[EMAIL]', 'g'),
+        |    '555-[0-9]+', '[PHONE]', 'g') AS redacted
+        |  FROM p)
+        |SELECT doc_id, n_emails, n_phones,
+        |  CAST(LENGTH(redacted) AS BIGINT) AS redacted_len,
+        |  md5(redacted) AS redacted_fp
+        |FROM r ORDER BY doc_id""".stripMargin)),
+    Entry("txt14_repetition", TextAnalysis.txt14Repetition, Sql(
+      s"""WITH t AS (SELECT doc_id, $dkToks AS w FROM documents),
+         |bg AS (SELECT doc_id,
+         |  UNNEST([w[i] || ' ' || w[i+1] FOR i IN RANGE(1, len(w))]) AS b
+         |  FROM t WHERE len(w) >= 2),
+         |c AS (SELECT doc_id, b, COUNT(*) AS n FROM bg GROUP BY 1, 2)
+         |SELECT doc_id,
+         |  CAST(SUM(n) AS BIGINT) AS n_bigrams,
+         |  CAST(MAX(n) AS BIGINT) AS top_bigram_n,
+         |  ROUND(CAST(MAX(n) AS DOUBLE) / SUM(n), 4) AS top_bigram_frac
+         |FROM c GROUP BY doc_id
+         |ORDER BY doc_id""".stripMargin)),
+    Entry("txt16_sequence_packing", TextAnalysis.txt16SequencePacking(_), Sql(
+      s"""WITH docs AS (SELECT doc_id, source, $dkToks AS toks FROM documents),
+         |st AS (SELECT doc_id, source, toks,
+         |  UNNEST(range(0, GREATEST(len(toks) - 1, 0) + 1, 40)) AS start
+         |  FROM docs),
+         |ch AS (SELECT source, CAST(doc_id // 200 AS BIGINT) AS shard, doc_id,
+         |  CAST(start / 40 AS BIGINT) AS chunk_id,
+         |  CAST(len(list_slice(toks, start + 1, start + 50)) AS BIGINT) AS chunk_len
+         |  FROM st),
+         |cum AS (SELECT source, shard, chunk_len,
+         |  SUM(chunk_len) OVER (PARTITION BY source, shard
+         |    ORDER BY doc_id, chunk_id
+         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
+         |  FROM ch)
+         |SELECT source, shard, CAST((cum - chunk_len) // 512 AS BIGINT) AS bin_id,
+         |  COUNT(*) AS n_chunks, CAST(SUM(chunk_len) AS BIGINT) AS bin_tokens
+         |FROM cum
+         |GROUP BY 1, 2, 3
+         |ORDER BY source, shard, bin_id""".stripMargin)),
+    Entry("txt15_unigram_logprob", TextAnalysis.txt15UnigramLogprob(_), Sql(
+      s"""WITH t AS (SELECT doc_id, $dkToks AS w FROM documents),
+         |tok AS (SELECT doc_id, UNNEST(w) AS w FROM t),
+         |cnt AS (SELECT w, COUNT(*) AS c FROM tok GROUP BY w),
+         |tot AS (SELECT CAST(COUNT(*) AS DOUBLE) AS total FROM tok)
+         |SELECT doc_id, COUNT(*) AS n_tokens,
+         |  ROUND(AVG(-LN(c / total)), 4) AS avg_neg_logp
+         |FROM tok JOIN cnt USING (w) CROSS JOIN tot
+         |GROUP BY doc_id
+         |ORDER BY doc_id""".stripMargin)),
+    // txt25: terciles of the ROUNDED txt15 score — quantile_cont and
+    // Spark's percentile share the (p*(n-1)) interpolation (the rel10
+    // precedent), and rounding cutpoints to the score's own 4-decimal
+    // grid makes the <= boundary tests identical cross-engine.
+    Entry("txt25_ccnet_buckets", TextAnalysis.txt25CcnetBuckets(_), Sql(
+      s"""WITH t AS (SELECT doc_id, $dkToks AS w FROM documents),
+         |tok AS (SELECT doc_id, UNNEST(w) AS w FROM t),
+         |cnt AS (SELECT w, COUNT(*) AS c FROM tok GROUP BY w),
+         |tot AS (SELECT CAST(COUNT(*) AS DOUBLE) AS total FROM tok),
+         |sc AS (SELECT doc_id, ROUND(AVG(-LN(c / total)), 4) AS s
+         |  FROM tok JOIN cnt USING (w) CROSS JOIN tot GROUP BY doc_id),
+         |sl AS (SELECT d.lang, s FROM sc JOIN documents d USING (doc_id)),
+         |cut AS (SELECT lang,
+         |    ROUND(quantile_cont(s, 0.33333333), 4) AS c1,
+         |    ROUND(quantile_cont(s, 0.66666667), 4) AS c2
+         |  FROM sl GROUP BY lang),
+         |b AS (SELECT sl.lang,
+         |    CASE WHEN s <= c1 THEN 'head'
+         |         WHEN s <= c2 THEN 'middle' ELSE 'tail' END AS bucket, s
+         |  FROM sl JOIN cut USING (lang))
+         |SELECT lang, bucket, COUNT(*) AS n_docs,
+         |  ROUND(AVG(s), 4) AS avg_neg_logp,
+         |  ROUND(MIN(s), 4) AS min_s, ROUND(MAX(s), 4) AS max_s
+         |FROM b GROUP BY 1, 2
+         |ORDER BY 1, 2""".stripMargin)),
+    // txt26: same literal '. ' split, distinct-doc df, anti-join, and
+    // in-order reassembly (LIST ... ORDER BY pos == the sorted-struct
+    // collect); fully-boilerplate docs keep md5('').
+    Entry("txt26_line_dedup", TextAnalysis.txt26LineDedup(_), Sql(
+      """WITH t AS (SELECT doc_id, string_split(
+        |    'promo ' || source || ' banner. ' || text || '. copyright footer',
+        |    '. ') AS ls FROM documents),
+        |l AS (SELECT doc_id, generate_subscripts(ls, 1) AS pos, UNNEST(ls) AS ln
+        |  FROM t),
+        |f AS (SELECT ln FROM (
+        |    SELECT ln, COUNT(DISTINCT doc_id) AS df FROM l GROUP BY ln)
+        |  WHERE df >= 3),
+        |k AS (SELECT l.doc_id, l.pos, l.ln FROM l
+        |  LEFT JOIN f ON l.ln = f.ln WHERE f.ln IS NULL),
+        |r AS (SELECT doc_id, COUNT(*) AS n_kept,
+        |    array_to_string(LIST(ln ORDER BY pos), '. ') AS txt
+        |  FROM k GROUP BY doc_id)
+        |SELECT t.doc_id, CAST(len(t.ls) AS BIGINT) AS n_lines,
+        |  CAST(COALESCE(r.n_kept, 0) AS BIGINT) AS n_kept,
+        |  md5(COALESCE(r.txt, '')) AS kept_fp
+        |FROM t LEFT JOIN r USING (doc_id)
+        |ORDER BY doc_id""".stripMargin)),
+    // txt27: DuckDB's string_split(text,'') is per code point, as is
+    // the CharInfo loop; both sides round the double sum to 4.
+    Entry("txt27_char_entropy", TextAnalysis.txt27CharEntropy, Sql(
+      """WITH c AS (SELECT doc_id, UNNEST(string_split(text, '')) AS ch
+        |  FROM documents),
+        |f AS (SELECT doc_id, ch, COUNT(*) AS c FROM c GROUP BY doc_id, ch),
+        |l AS (SELECT doc_id, CAST(SUM(c) AS BIGINT) AS n_cp,
+        |    CAST(COUNT(*) AS BIGINT) AS n_uniq
+        |  FROM f GROUP BY doc_id)
+        |SELECT f.doc_id, ANY_VALUE(n_cp) AS n_cp, ANY_VALUE(n_uniq) AS n_uniq,
+        |  ROUND(SUM(-(CAST(c AS DOUBLE) / n_cp) * log2(CAST(c AS DOUBLE) / n_cp)), 4)
+        |    AS char_entropy
+        |FROM f JOIN l ON f.doc_id = l.doc_id
+        |GROUP BY f.doc_id ORDER BY f.doc_id""".stripMargin)),
+    // txt28: the oracle replays the window index over gram STRINGS
+    // (the Spark side keys 8-byte hashes — identical absent a 64-bit
+    // collision, the dedup13 contract); min(doc_id) is first-seen,
+    // strictly-smaller comparison marks repeats.
+    Entry("txt28_ngram_novelty", TextAnalysis.txt28NgramNovelty(_), Sql(
+      """WITH tk AS (SELECT doc_id,
+        |    string_split(trim(regexp_replace(text, '\s+', ' ', 'g')), ' ') AS w
+        |  FROM documents),
+        |g0 AS (SELECT doc_id, w, UNNEST(generate_series(1, len(w) - 7)) AS i
+        |  FROM tk WHERE len(w) >= 8),
+        |g AS (SELECT doc_id, array_to_string(w[i:i+7], ' ') AS gram FROM g0),
+        |f AS (SELECT gram, MIN(doc_id) AS first_doc FROM g GROUP BY gram),
+        |j AS (SELECT g.doc_id,
+        |    CASE WHEN f.first_doc < g.doc_id THEN 1 ELSE 0 END AS rep
+        |  FROM g JOIN f USING (gram))
+        |SELECT doc_id, COUNT(*) AS n_windows,
+        |  CAST(SUM(rep) AS BIGINT) AS n_repeated,
+        |  ROUND(CAST(SUM(rep) AS DOUBLE) / COUNT(*), 4) AS repeated_frac
+        |FROM j GROUP BY doc_id ORDER BY doc_id""".stripMargin)),
+    // txt29: the oracle replays the hashing-trick classifier exactly —
+    // same md5-derived bucket, same multiplicative milli-weight mix,
+    // integer sum (no float associativity), one double division at
+    // the end. DuckDB parses the 8 hex chars via ('0x'||…)::BIGINT;
+    // Spark via conv(…,16,10).
+    Entry("txt29_model_quality", TextAnalysis.txt29ModelQuality(_), Sql(
+      """WITH tk AS (SELECT doc_id,
+        |    string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS ws
+        |  FROM documents),
+        |f AS (SELECT doc_id, list_concat(ws,
+        |    CASE WHEN len(ws) >= 2
+        |      THEN list_transform(range(1, len(ws)), i -> ws[i] || ' ' || ws[i+1])
+        |      ELSE CAST([] AS VARCHAR[]) END) AS feats FROM tk),
+        |s AS (SELECT doc_id, CAST(len(feats) AS BIGINT) AS n_feats,
+        |    CAST(list_sum(list_transform(feats, f ->
+        |      ('0x' || substr(md5(f), 1, 8))::BIGINT % 4096 * 2654435761 % 2001 - 1000))
+        |      AS BIGINT) AS s_milli
+        |  FROM f)
+        |SELECT doc_id, n_feats,
+        |  ROUND(s_milli / 1000.0 / n_feats, 4) AS q_score,
+        |  (ROUND(s_milli / 1000.0 / n_feats, 4) > 0) AS keep
+        |FROM s ORDER BY doc_id""".stripMargin)),
+    Entry("samp02_source_mixture", TextAnalysis.samp02SourceMixture, Sql(
+      """WITH d AS (SELECT source, doc_id, n_chars,
+        |  doc_id % 100 < 95 - TRY_CAST(regexp_extract(source, '(\d+)$', 1) AS BIGINT) * 4
+        |    AS kept
+        |  FROM documents)
+        |SELECT source,
+        |  COUNT(*) AS n_docs,
+        |  COUNT(*) FILTER (WHERE kept) AS n_sampled,
+        |  ROUND(CAST(COUNT(*) FILTER (WHERE kept) AS DOUBLE) / COUNT(*), 4)
+        |    AS sample_rate,
+        |  ROUND(AVG(n_chars) FILTER (WHERE kept), 4) AS avg_chars_sampled
+        |FROM d
+        |GROUP BY source
+        |ORDER BY source""".stripMargin)),
+    Entry("samp03_temperature_mixture", TextAnalysis.samp03TemperatureMixture, Sql(
+      """WITH c AS (SELECT source, COUNT(*) AS n_docs FROM documents GROUP BY 1),
+        |t AS (SELECT CAST(SUM(n_docs) AS BIGINT) AS n_total, MAX(n_docs) AS n_max FROM c)
+        |SELECT source, n_docs,
+        |  ROUND(CAST(n_docs AS DOUBLE) / n_total, 6) AS natural_share,
+        |  ROUND(SQRT(CAST(n_docs AS DOUBLE)) / SQRT(CAST(n_max AS DOUBLE)), 6)
+        |    AS temp_weight_rel
+        |FROM c CROSS JOIN t
+        |ORDER BY source""".stripMargin)),
+    // samp04: the oracle computes the same global prefix sum with one
+    // window — exactness of the distributed 4-step prefix sum is the
+    // thing under test. Spark's default orderBy frame is RANGE, but
+    // doc_id makes the sort key unique so RANGE == ROWS.
+    Entry("samp04_token_budget", TextAnalysis.samp04TokenBudget(_), Sql(
+      """WITH s AS (
+        |  SELECT doc_id,
+        |    CAST(length(text) - length(replace(text, ' ', '')) + 1 AS BIGINT)
+        |      AS tokens,
+        |    CAST(length(replace(text, ' ', '')) AS DOUBLE) /
+        |      (length(text) - length(replace(text, ' ', '')) + 1) AS score
+        |  FROM documents),
+        |c AS (
+        |  SELECT doc_id, tokens,
+        |    CAST(SUM(tokens) OVER (ORDER BY score DESC, doc_id) AS BIGINT)
+        |      AS cum_tokens
+        |  FROM s)
+        |SELECT doc_id, tokens, cum_tokens FROM c WHERE cum_tokens <= 5000
+        |ORDER BY cum_tokens""".stripMargin)),
+    // samp05: the oracle replays dedup08's recursive-CTE components,
+    // left-joins the full corpus (singletons label as themselves),
+    // and applies the same cluster-modulo split rule.
+    Entry("samp05_leakage_safe_split", Dedup.samp05LeakageSafeSplit(_), Sql(
+      s"""WITH RECURSIVE t AS (SELECT doc_id, $dkToks AS w FROM documents),
+         |sh AS (SELECT doc_id, $dkShingles3 AS s FROM t WHERE len(w) >= 3),
+         |pairs AS (
+         |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
+         |  FROM sh a JOIN sh b ON a.doc_id < b.doc_id
+         |  WHERE $dkJac >= 0.5),
+         |edges AS (SELECT doc_a AS u, doc_b AS v FROM pairs
+         |  UNION ALL SELECT doc_b, doc_a FROM pairs),
+         |reach(u, lbl) AS (
+         |  SELECT u, u FROM (SELECT DISTINCT u FROM edges)
+         |  UNION
+         |  SELECT e.u, r.lbl FROM edges e JOIN reach r ON e.v = r.u),
+         |comp AS (SELECT u AS doc_id, MIN(lbl) AS cluster_id FROM reach GROUP BY u),
+         |sel AS (
+         |  SELECT d.doc_id, COALESCE(c.cluster_id, d.doc_id) AS cluster_id
+         |  FROM documents d LEFT JOIN comp c USING (doc_id))
+         |SELECT doc_id, cluster_id,
+         |  CASE WHEN cluster_id % 10 < 8 THEN 'train'
+         |       WHEN cluster_id % 10 = 8 THEN 'val'
+         |       ELSE 'test' END AS split
+         |FROM sel
+         |ORDER BY doc_id""".stripMargin)),
+    // samp07: samp05's cluster labels + per-cluster size → 1/n weight.
+    Entry("samp07_soft_dedup", Dedup.samp07SoftDedup(_), Sql(
+      s"""WITH RECURSIVE t AS (SELECT doc_id, $dkToks AS w FROM documents),
+         |sh AS (SELECT doc_id, $dkShingles3 AS s FROM t WHERE len(w) >= 3),
+         |pairs AS (
+         |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
+         |  FROM sh a JOIN sh b ON a.doc_id < b.doc_id
+         |  WHERE $dkJac >= 0.5),
+         |edges AS (SELECT doc_a AS u, doc_b AS v FROM pairs
+         |  UNION ALL SELECT doc_b, doc_a FROM pairs),
+         |reach(u, lbl) AS (
+         |  SELECT u, u FROM (SELECT DISTINCT u FROM edges)
+         |  UNION
+         |  SELECT e.u, r.lbl FROM edges e JOIN reach r ON e.v = r.u),
+         |comp AS (SELECT u AS doc_id, MIN(lbl) AS cluster_id FROM reach GROUP BY u),
+         |sel AS (
+         |  SELECT d.doc_id, COALESCE(c.cluster_id, d.doc_id) AS cluster_id
+         |  FROM documents d LEFT JOIN comp c USING (doc_id)),
+         |sz AS (SELECT cluster_id, COUNT(*) AS n_members FROM sel GROUP BY cluster_id)
+         |SELECT doc_id, cluster_id, n_members,
+         |  ROUND(1.0::DOUBLE / n_members, 4) AS weight
+         |FROM sel JOIN sz USING (cluster_id)
+         |ORDER BY doc_id""".stripMargin)),
+    // samp09: dedup11's unrolled-Lloyd cells (same k=10, 2
+    // iterations, same seed/tiebreak rules), then a deterministic
+    // per-cell uniform draw: rank by md5 of the id string (identical
+    // bytes and binary collation in both engines), keep rank <= m.
+    Entry("samp09_cluster_balanced", Dedup.samp09ClusterBalanced(_), Sql {
+      val iter = (1 to 2).map { i =>
         s"""a$i AS (SELECT e.vec_id, e.v, c.cluster, ROW_NUMBER() OVER (
            |    PARTITION BY e.vec_id
            |    ORDER BY ${dkCos("e.v", "c.centroid")} DESC, c.cluster) AS r
@@ -2296,30 +2568,440 @@ object SparkEntry {
            |    SELECT cluster, pos, AVG(x) AS c FROM f$i GROUP BY 1, 2)
            |  GROUP BY cluster)""".stripMargin
       }.mkString(",\n")
-      s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+      s"""WITH e AS (
+         |  SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
          |c0 AS (SELECT rn - 1 AS cluster, v AS centroid FROM (
          |    SELECT v, ROW_NUMBER() OVER (ORDER BY vec_id) AS rn FROM e)
          |  WHERE rn <= 10),
          |$iter,
-         |cells AS (SELECT vec_id, cluster, cos_raw FROM (
-         |    SELECT e.vec_id, c.cluster,
-         |      ${dkCos("e.v", "c.centroid")} AS cos_raw,
-         |      ROW_NUMBER() OVER (PARTITION BY e.vec_id
-         |        ORDER BY ${dkCos("e.v", "c.centroid")} DESC, c.cluster) AS r
-         |    FROM e CROSS JOIN c3 c) WHERE r = 1),
-         |rk AS (SELECT vec_id, cluster, cos_raw, ROW_NUMBER() OVER (
-         |    PARTITION BY cluster ORDER BY cos_raw DESC, vec_id) AS rank
+         |cells AS (SELECT vec_id, cluster FROM (
+         |    SELECT e.vec_id, c.cluster, ROW_NUMBER() OVER (
+         |      PARTITION BY e.vec_id
+         |      ORDER BY ${dkCos("e.v", "c.centroid")} DESC, c.cluster) AS r
+         |    FROM e CROSS JOIN c2 c) WHERE r = 1),
+         |picks AS (SELECT cluster, vec_id, ROW_NUMBER() OVER (
+         |    PARTITION BY cluster
+         |    ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) AS rnk
          |  FROM cells)
-         |SELECT vec_id, cluster, ROUND(cos_raw, 4) AS cos_centroid,
-         |  rank, rank <= 30 AS kept
-         |FROM rk ORDER BY vec_id""".stripMargin
-    },
+         |SELECT CAST(cluster AS INTEGER) AS cluster, vec_id,
+         |  CAST(rnk AS INTEGER) AS rnk
+         |FROM picks WHERE rnk <= 20
+         |ORDER BY cluster, rnk""".stripMargin
+    }),
+    Entry("samp10_epoch_mixture", TextAnalysis.samp10EpochMixture(_), Sql(samp10OracleSql(3))),
+    // samp11: identical k/sqrt(n_s) arithmetic on both sides; ties
+    // (equal-size sources at the same k) break on (source, doc_id).
+    Entry("samp11_interleave_schedule", TextAnalysis.samp11InterleaveSchedule(_), Sql(
+      """WITH c AS (SELECT source, COUNT(*) AS n_s FROM documents GROUP BY source),
+        |k AS (SELECT d.doc_id, d.source,
+        |    CAST(ROW_NUMBER() OVER (PARTITION BY d.source ORDER BY d.doc_id)
+        |      AS DOUBLE) AS k, c.n_s
+        |  FROM documents d JOIN c USING (source)),
+        |v AS (SELECT doc_id, source,
+        |    k / SQRT(CAST(n_s AS DOUBLE)) AS vtime FROM k),
+        |t AS (SELECT * FROM v ORDER BY vtime, source, doc_id LIMIT 200)
+        |SELECT CAST(ROW_NUMBER() OVER (ORDER BY vtime, source, doc_id)
+        |    AS BIGINT) AS rank,
+        |  doc_id, source, ROUND(vtime, 6) AS vtime
+        |FROM t ORDER BY rank""".stripMargin)),
+    // samp12: samp08's hash-threshold rule weighted by the
+    // temperature keep rate — the rate double (one sqrt of an exact
+    // integer ratio) and the floored uint32 threshold are computed
+    // identically, so the kept set matches bit for bit.
+    Entry("samp12_mixture_sample", TextAnalysis.samp12MixtureSample(_), Sql(
+      """WITH c AS (SELECT source, COUNT(*) AS n_docs,
+        |    CAST(SUM(n_chars) AS BIGINT) AS n_chars
+        |  FROM documents GROUP BY 1),
+        |m AS (SELECT MIN(n_chars) AS c_min FROM c),
+        |r AS (SELECT source, n_docs, n_chars,
+        |    SQRT(CAST(c_min AS DOUBLE) / n_chars) AS rate,
+        |    CAST(FLOOR(SQRT(CAST(c_min AS DOUBLE) / n_chars) * 4294967296.0)
+        |      AS BIGINT) AS thr
+        |  FROM c, m),
+        |k AS (SELECT d.source,
+        |    COUNT(*) FILTER (WHERE
+        |      ('0x' || substr(md5(CAST(d.doc_id AS VARCHAR) || ':7'), 1, 8))::BIGINT
+        |        < r.thr) AS n_kept
+        |  FROM documents d JOIN r USING (source) GROUP BY 1)
+        |SELECT r.source, CAST(r.n_docs AS BIGINT) AS n_docs,
+        |  r.n_chars,
+        |  ROUND(r.rate, 6) AS keep_rate,
+        |  CAST(k.n_kept AS BIGINT) AS n_kept,
+        |  ROUND(CAST(k.n_kept AS DOUBLE) / r.n_docs, 6) AS realized_rate
+        |FROM r JOIN k USING (source)
+        |ORDER BY source""".stripMargin)),
+    // dedup12: the oracle scores the delta (newest 20% of ids) by
+    // exhaustive Jaccard against every smaller-id doc — the result the
+    // incremental band-probe + exact-verify plan must reproduce.
+    Entry("dedup12_incremental", Dedup.dedup12Incremental(_), Sql(
+      s"""WITH t AS (SELECT doc_id, $dkToks AS w FROM documents),
+         |sh AS (SELECT doc_id, $dkShingles3 AS s FROM t WHERE len(w) >= 3),
+         |cut AS (SELECT CAST(FLOOR(0.8 * (MAX(doc_id) + 1)) AS BIGINT) AS c FROM documents),
+         |m AS (
+         |  SELECT b.doc_id AS doc_b, MIN(a.doc_id) AS dup_of
+         |  FROM sh b JOIN cut ON b.doc_id >= cut.c
+         |  JOIN sh a ON a.doc_id < b.doc_id
+         |  WHERE $dkJac >= 0.5
+         |  GROUP BY b.doc_id),
+         |sel AS (SELECT doc_id FROM documents JOIN cut ON doc_id >= cut.c)
+         |SELECT sel.doc_id, m.dup_of,
+         |  CASE WHEN m.dup_of IS NULL THEN 'keep' ELSE 'drop' END AS verdict
+         |FROM sel LEFT JOIN m ON sel.doc_id = m.doc_b
+         |ORDER BY sel.doc_id""".stripMargin)),
+    // dedup13: same planting, k=8 sliding windows (1-based list slice
+    // w[i:i+7]), distinct-doc df >= 2, and the islands merge (lag +
+    // running sum) the Spark side runs per doc.
+    Entry("dedup13_exact_substring", Dedup.dedup13ExactSubstring(_), Sql(
+      """WITH p AS (SELECT doc_id,
+        |    CASE WHEN doc_id % 5 = 0
+        |      THEN 'shared prefix banner alpha beta gamma delta epsilon zeta eta ' || text
+        |      ELSE text END AS t1
+        |  FROM documents),
+        |p2 AS (SELECT doc_id,
+        |    CASE WHEN doc_id % 7 = 0
+        |      THEN t1 || ' common footer block one two three four five six seven eight nine'
+        |      ELSE t1 END AS t
+        |  FROM p),
+        |tk AS (SELECT doc_id,
+        |    string_split(trim(regexp_replace(t, '\s+', ' ', 'g')), ' ') AS w
+        |  FROM p2),
+        |g0 AS (SELECT doc_id, w, UNNEST(generate_series(1, len(w) - 7)) AS i
+        |  FROM tk WHERE len(w) >= 8),
+        |g AS (SELECT doc_id, i - 1 AS pos, array_to_string(w[i:i+7], ' ') AS gram
+        |  FROM g0),
+        |d AS (SELECT gram FROM (
+        |    SELECT gram, COUNT(DISTINCT doc_id) AS df FROM g GROUP BY gram)
+        |  WHERE df >= 2),
+        |h AS (SELECT g.doc_id, g.pos FROM g JOIN d USING (gram)),
+        |s AS (SELECT doc_id, pos,
+        |    CASE WHEN LAG(pos) OVER (PARTITION BY doc_id ORDER BY pos) IS NULL
+        |           OR pos > LAG(pos) OVER (PARTITION BY doc_id ORDER BY pos) + 8
+        |         THEN 1 ELSE 0 END AS ns FROM h),
+        |s2 AS (SELECT doc_id, pos, SUM(ns) OVER (
+        |    PARTITION BY doc_id ORDER BY pos ROWS UNBOUNDED PRECEDING) AS sid
+        |  FROM s),
+        |sp AS (SELECT doc_id, sid, MIN(pos) AS st, MAX(pos) + 8 AS en
+        |  FROM s2 GROUP BY doc_id, sid)
+        |SELECT doc_id, COUNT(*) AS n_spans,
+        |  CAST(SUM(en - st) AS BIGINT) AS dup_tokens,
+        |  CAST(MAX(en - st) AS BIGINT) AS max_span
+        |FROM sp GROUP BY doc_id ORDER BY doc_id""".stripMargin)),
+    // samp06: same md5 order key and same overflow-safe shard mix,
+    // replayed verbatim — both engines emit lowercase-hex md5 strings.
+    Entry("samp06_shuffle_shard", TextAnalysis.samp06ShuffleShard(_), Sql(
+      s"""SELECT doc_id, source, shard,
+         |  ROW_NUMBER() OVER (PARTITION BY shard ORDER BY shuffle_key, doc_id) AS pos
+         |FROM (
+         |  SELECT doc_id, source,
+         |    md5(CAST(doc_id AS VARCHAR) || ':42') AS shuffle_key,
+         |    (((doc_id % 100003) * 2654435761) >> 16) % 8 AS shard
+         |  FROM documents)
+         |ORDER BY shard, pos""".stripMargin)),
+    // cat03: one SELECT block per profiled column (the unpivoted shape
+    // of the single wide aggregate the Spark side runs per table).
+    Entry("cat03_column_stats", CatalogOps.cat03ColumnStats(_), Sql {
+      def block(table: String, c: String) =
+        s"""SELECT '$table' AS table_name, '$c' AS column_name,
+           |  COUNT(*) AS n_rows, COUNT($c) AS n_nonnull,
+           |  COUNT(DISTINCT $c) AS n_distinct,
+           |  CAST(MIN($c) AS VARCHAR) AS min_val, CAST(MAX($c) AS VARCHAR) AS max_val
+           |FROM $table""".stripMargin
+      (Seq("doc_id", "lang", "source", "n_chars").map(block("documents", _)) ++
+        Seq("o_orderkey", "o_custkey", "o_orderstatus", "o_orderpriority")
+          .map(block("orders", _)))
+        .mkString("", "\nUNION ALL\n", "\nORDER BY table_name, column_name")
+    }),
+    // cat04: the shared Morton fragment, then identical bucket/extent
+    // aggregation — integer arithmetic end to end.
+    Entry("cat04_zorder_layout", CatalogOps.cat04ZorderLayout(_), Sql(
+      s"""WITH $dkMortonCtes
+        |SELECT z >> 26 AS bucket,
+        |  COUNT(*) AS n_rows,
+        |  MIN(x) AS min_x, MAX(x) AS max_x,
+        |  MIN(y) AS min_y, MAX(y) AS max_y,
+        |  (MAX(x) - MIN(x) + 1) * (MAX(y) - MIN(y) + 1) AS extent_area
+        |FROM zc GROUP BY 1 ORDER BY 1""".stripMargin)),
+    // cat05: the prune audit replayed off the same Morton cells —
+    // both layouts' bucket extents, the deterministic 16-window
+    // predicate grid, exact per-window selectivity, and the
+    // extent-intersection scan test.
+    Entry("cat05_prune_audit", CatalogOps.cat05PruneAudit(_), Sql(
+      s"""WITH $dkMortonCtes,
+        |zb AS (SELECT 'zorder' AS layout, z >> 26 AS bucket, COUNT(*) AS n_rows,
+        |    MIN(x) AS min_x, MAX(x) AS max_x, MIN(y) AS min_y, MAX(y) AS max_y
+        |  FROM zc GROUP BY 1, 2),
+        |xb AS (SELECT 'linear_x' AS layout, x >> 10 AS bucket, COUNT(*) AS n_rows,
+        |    MIN(x) AS min_x, MAX(x) AS max_x, MIN(y) AS min_y, MAX(y) AS max_y
+        |  FROM zc GROUP BY 1, 2),
+        |bk AS (SELECT * FROM zb UNION ALL SELECT * FROM xb),
+        |p AS (SELECT CAST(range AS BIGINT) AS qid,
+        |    (range // 4) * 16384 AS x_lo, (range // 4) * 16384 + 8192 AS x_hi,
+        |    (range % 4) * 16384 AS y_lo, (range % 4) * 16384 + 8192 AS y_hi
+        |  FROM range(16)),
+        |t AS (SELECT COUNT(*) AS total FROM zc),
+        |sel AS (SELECT (x // 16384) * 4 + (y // 16384) AS qid, COUNT(*) AS n_match
+        |  FROM zc WHERE (x % 16384) < 8192 AND (y % 16384) < 8192 GROUP BY 1),
+        |a AS (SELECT bk.layout, p.qid,
+        |    COUNT(*) FILTER (WHERE bk.min_x < p.x_hi AND bk.max_x >= p.x_lo
+        |      AND bk.min_y < p.y_hi AND bk.max_y >= p.y_lo) AS n_buckets_scanned,
+        |    SUM(CASE WHEN bk.min_x < p.x_hi AND bk.max_x >= p.x_lo
+        |      AND bk.min_y < p.y_hi AND bk.max_y >= p.y_lo
+        |      THEN bk.n_rows ELSE 0 END) AS rows_scanned
+        |  FROM bk CROSS JOIN p GROUP BY 1, 2)
+        |SELECT a.layout, a.qid,
+        |  CAST(a.n_buckets_scanned AS BIGINT) AS n_buckets_scanned,
+        |  ROUND(CAST(a.rows_scanned AS DOUBLE) / t.total, 4) AS frac_rows_scanned,
+        |  ROUND(CAST(COALESCE(sel.n_match, 0) AS DOUBLE) / t.total, 4) AS selectivity
+        |FROM a LEFT JOIN sel USING (qid) CROSS JOIN t
+        |ORDER BY layout, qid""".stripMargin)),
+    Entry("txt19_clean_text", TextAnalysis.txt19CleanText, Sql(
+      """WITH r AS (SELECT doc_id,
+        |  text || ' {{cite:c' || CAST(doc_id AS VARCHAR)
+        |    || '}}  see  fig. {{figure:f' || CAST(doc_id AS VARCHAR)
+        |    || '}}' || chr(10) || chr(10) || chr(10) || chr(10)
+        |    || 'tail {{formula:eq' || CAST(doc_id AS VARCHAR) || '}} end  '
+        |    AS raw FROM documents),
+        |c AS (SELECT doc_id, raw,
+        |  TRIM(regexp_replace(regexp_replace(regexp_replace(raw,
+        |    '\{\{(cite|formula|figure|table):[^}]*\}\}', '', 'g'),
+        |    '[ \t]+', ' ', 'g'),
+        |    '\n{3,}', chr(10) || chr(10), 'g')) AS clean FROM r)
+        |SELECT doc_id,
+        |  CAST(LENGTH(raw) AS BIGINT) AS n_raw,
+        |  CAST(LENGTH(clean) AS BIGINT) AS n_clean,
+        |  md5(clean) AS clean_fp
+        |FROM c
+        |ORDER BY doc_id""".stripMargin)),
+    Entry("txt20_gopher_filter", TextAnalysis.txt20GopherFilter, Sql(
+      s"""WITH tok AS (SELECT doc_id, UNNEST($dkToks) AS w FROM documents),
+         |a AS (SELECT doc_id, COUNT(*) AS n_tokens,
+         |  CAST(SUM(LENGTH(w)) AS BIGINT) AS sum_len,
+         |  COUNT(*) FILTER (WHERE NOT regexp_matches(w, '[A-Za-z0-9]'))
+         |    AS n_symbol,
+         |  COUNT(DISTINCT CASE WHEN w IN ('the','a','of','and') THEN w END)
+         |    AS n_stop_distinct
+         |  FROM tok GROUP BY 1),
+         |b AS (SELECT doc_id, n_tokens,
+         |  ROUND(CAST(sum_len AS DOUBLE) / n_tokens, 4) AS mean_tok_len,
+         |  ROUND(CAST(n_symbol AS DOUBLE) / n_tokens, 4) AS symbol_ratio,
+         |  n_stop_distinct FROM a),
+         |c AS (SELECT *, concat_ws(',',
+         |    CASE WHEN n_tokens < 50 THEN 'too_short' END,
+         |    CASE WHEN n_tokens > 100000 THEN 'too_long' END,
+         |    CASE WHEN mean_tok_len < 3 OR mean_tok_len > 10
+         |      THEN 'mean_len' END,
+         |    CASE WHEN symbol_ratio >= 0.1 THEN 'symbol' END,
+         |    CASE WHEN n_stop_distinct < 2 THEN 'stopword' END)
+         |  AS fail_reasons FROM b)
+         |SELECT doc_id, n_tokens, mean_tok_len, symbol_ratio,
+         |  n_stop_distinct, fail_reasons, fail_reasons = '' AS passes
+         |FROM c
+         |ORDER BY doc_id""".stripMargin)),
+    Entry("xref06_total_mismatch", Linkage.xref06TotalMismatch(_), Sql(
+      """WITH lt AS (SELECT l_orderkey,
+        |    ROUND(SUM(l_extendedprice * (1 - l_discount)), 4) AS line_total,
+        |    COUNT(*) AS n_lines
+        |  FROM lineitem GROUP BY 1)
+        |SELECT o_orderkey, o_totalprice, line_total, n_lines,
+        |  ROUND(ABS(o_totalprice - line_total), 4) AS abs_diff
+        |FROM orders JOIN lt ON o_orderkey = l_orderkey
+        |ORDER BY abs_diff DESC, o_orderkey
+        |LIMIT 20""".stripMargin)),
+    Entry("xref07_tiered_linkage", Linkage.xref07TieredLinkage(_), Sql(
+      s"""WITH topics AS (SELECT DISTINCT UNNEST(string_split(p_name, ' ')) AS topic
+         |  FROM part),
+         |vocab AS (SELECT DISTINCT UNNEST($dkToks) AS term FROM documents),
+         |lex(term) AS (VALUES ('join'), ('scan'), ('filter'), ('sort'),
+         |  ('merge'), ('hash'), ('window'), ('stream'), ('batch'), ('query')),
+         |exact AS (SELECT topic, 'corpus_vocab' AS ontology, term,
+         |    1.0::DOUBLE AS sim
+         |  FROM topics JOIN vocab ON LOWER(topic) = LOWER(term)),
+         |fuzzy AS (SELECT topic, 'lexicon' AS ontology, term,
+         |    jaro_winkler_similarity(LOWER(topic), LOWER(term)) AS sim
+         |  FROM topics CROSS JOIN lex
+         |  WHERE jaro_winkler_similarity(LOWER(topic), LOWER(term)) >= 0.65),
+         |u AS (SELECT * FROM exact UNION ALL SELECT * FROM fuzzy),
+         |best AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY topic
+         |    ORDER BY sim DESC, ontology, term) AS rn FROM u)
+         |SELECT topic, ontology, term AS matched_term,
+         |  ROUND(sim, 4) AS similarity
+         |FROM best WHERE rn = 1
+         |ORDER BY topic""".stripMargin)),
+    Entry("xref08_bridges", Linkage.xref08Bridges, Sql(
+      """WITH ids AS (
+        |  SELECT 'customer' AS source, LOWER(REPLACE(c_name, 'Customer#', '')) AS key,
+        |    CAST(c_custkey AS VARCHAR) AS source_id FROM customer
+        |  UNION ALL
+        |  SELECT 'supplier', LOWER(REPLACE(s_name, 'Supplier#', '')),
+        |    CAST(s_suppkey AS VARCHAR) FROM supplier
+        |  UNION ALL
+        |  SELECT 'part', LOWER(p_name), CAST(p_partkey AS VARCHAR) FROM part)
+        |SELECT a.source AS source_1, a.source_id AS id_1,
+        |  b.source AS source_2, b.source_id AS id_2, a.key AS bridge_id
+        |FROM ids a JOIN ids b ON a.key = b.key AND a.source < b.source
+        |ORDER BY source_1, source_2, bridge_id, id_1, id_2""".stripMargin)),
+    // xref09: reduction ratio + pairs completeness of two blocking
+    // schemes vs the exact-dup gold set. The shingle candidates come
+    // from string trigrams here vs 64-bit shingle hashes in Spark —
+    // identical pair sets absent a hash collision (the dedup03/10
+    // equivalence argument; collision odds ~2^-40 at this vocabulary).
+    Entry("xref09_blocking_quality", Linkage.xref09BlockingQuality(_), Sql(
+      s"""WITH t AS (SELECT doc_id, n_chars, $dkToks AS w FROM documents),
+         |fp AS (SELECT doc_id, $dkBagFp AS f FROM documents),
+         |gold AS (SELECT x.doc_id AS a, y.doc_id AS b
+         |  FROM fp x JOIN fp y ON x.f = y.f AND x.doc_id < y.doc_id),
+         |sh AS (SELECT doc_id, n_chars, $dkShingles3 AS s FROM t WHERE len(w) >= 3),
+         |ix AS (SELECT doc_id, n_chars, UNNEST(s) AS g FROM sh),
+         |kept AS (SELECT ix.doc_id, ix.n_chars, ix.g FROM ix
+         |  JOIN (SELECT g FROM (SELECT g, COUNT(*) AS df FROM ix GROUP BY g)
+         |        WHERE df <= 10000) d USING (g)),
+         |ca AS (SELECT DISTINCT x.doc_id AS a, y.doc_id AS b
+         |  FROM kept x JOIN kept y ON x.g = y.g AND x.doc_id < y.doc_id
+         |  AND ABS(x.n_chars - y.n_chars) <= 40),
+         |cb AS (SELECT x.doc_id AS a, y.doc_id AS b
+         |  FROM t x JOIN t y ON x.doc_id < y.doc_id
+         |  AND ABS(x.n_chars - y.n_chars) <= 40),
+         |n AS (SELECT CAST(COUNT(*) AS DOUBLE) AS nd FROM documents),
+         |gt AS (SELECT COUNT(*) AS gold_total FROM gold),
+         |m AS (
+         |  SELECT 'content_shingle' AS scheme,
+         |    (SELECT COUNT(*) FROM ca) AS n_candidates,
+         |    (SELECT COUNT(*) FROM gold g WHERE EXISTS
+         |       (SELECT 1 FROM ca WHERE ca.a = g.a AND ca.b = g.b)) AS gold_covered
+         |  UNION ALL
+         |  SELECT 'length_band',
+         |    (SELECT COUNT(*) FROM cb),
+         |    (SELECT COUNT(*) FROM gold g WHERE EXISTS
+         |       (SELECT 1 FROM cb WHERE cb.a = g.a AND cb.b = g.b)))
+         |SELECT scheme, n_candidates,
+         |  ROUND(1.0::DOUBLE - n_candidates / (nd * (nd - 1) / 2), 4)
+         |    AS reduction_ratio,
+         |  gold_total, gold_covered,
+         |  ROUND(gold_covered / CAST(gold_total AS DOUBLE), 4) AS completeness
+         |FROM m CROSS JOIN n CROSS JOIN gt
+         |ORDER BY scheme""".stripMargin)),
+    // xref10: fig2's UpSet matrix — CUBE replays as GROUP BY CUBE
+    // with GROUPING() markers; the unified CTE is xref03's verbatim.
+    Entry("xref10_upset_overlap", Linkage.xref10UpsetOverlap, Sql(
+      """WITH spine AS (
+        |  SELECT DISTINCT entity_id FROM (
+        |    SELECT CAST(c_custkey AS BIGINT) AS entity_id FROM customer
+        |    UNION ALL SELECT CAST(o_custkey AS BIGINT) FROM orders
+        |    UNION ALL SELECT CAST(user_id AS BIGINT) FROM events) u),
+        |profile AS (SELECT CAST(c_custkey AS BIGINT) AS p_id FROM customer),
+        |orderagg AS (SELECT CAST(o_custkey AS BIGINT) AS o_id,
+        |  ROUND(SUM(o_totalprice), 4) AS total_spent FROM orders GROUP BY 1),
+        |eventagg AS (SELECT CAST(user_id AS BIGINT) AS e_id FROM events GROUP BY 1),
+        |unified AS (
+        |  SELECT entity_id, p_id IS NOT NULL AS has_profile,
+        |    o_id IS NOT NULL AS has_orders, e_id IS NOT NULL AS has_events,
+        |    COALESCE(total_spent, 0.0) AS total_spent
+        |  FROM spine
+        |  LEFT JOIN profile ON entity_id = p_id
+        |  LEFT JOIN orderagg ON entity_id = o_id
+        |  LEFT JOIN eventagg ON entity_id = e_id)
+        |SELECT has_profile, has_orders, has_events,
+        |  CAST(GROUPING(has_profile) AS BIGINT) AS g_profile,
+        |  CAST(GROUPING(has_orders) AS BIGINT) AS g_orders,
+        |  CAST(GROUPING(has_events) AS BIGINT) AS g_events,
+        |  COUNT(*) AS n_entities, ROUND(SUM(total_spent), 4) AS total_value
+        |FROM unified
+        |GROUP BY CUBE(has_profile, has_orders, has_events)
+        |ORDER BY g_profile, g_orders, g_events,
+        |  has_profile, has_orders, has_events""".stripMargin)),
+    // xref11: fig5's domain×ontology reach matrix over xref07's
+    // linkage (the CTE chain is xref07's verbatim), topic domain =
+    // modal p_type with deterministic tiebreak, pivot as FILTERed
+    // conditional counts.
+    Entry("xref11_ontology_reach", Linkage.xref11OntologyReach(_), Sql(
+      s"""WITH topics AS (SELECT DISTINCT UNNEST(string_split(p_name, ' ')) AS topic
+         |  FROM part),
+         |vocab AS (SELECT DISTINCT UNNEST($dkToks) AS term FROM documents),
+         |lex(term) AS (VALUES ('join'), ('scan'), ('filter'), ('sort'),
+         |  ('merge'), ('hash'), ('window'), ('stream'), ('batch'), ('query')),
+         |exact AS (SELECT topic, 'corpus_vocab' AS ontology, term,
+         |    1.0::DOUBLE AS sim
+         |  FROM topics JOIN vocab ON LOWER(topic) = LOWER(term)),
+         |fuzzy AS (SELECT topic, 'lexicon' AS ontology, term,
+         |    jaro_winkler_similarity(LOWER(topic), LOWER(term)) AS sim
+         |  FROM topics CROSS JOIN lex
+         |  WHERE jaro_winkler_similarity(LOWER(topic), LOWER(term)) >= 0.65),
+         |u AS (SELECT * FROM exact UNION ALL SELECT * FROM fuzzy),
+         |best AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY topic
+         |    ORDER BY sim DESC, ontology, term) AS rn FROM u),
+         |linked AS (SELECT topic, ontology, ROUND(sim, 4) AS similarity
+         |  FROM best WHERE rn = 1),
+         |tcount AS (SELECT topic, p_type AS domain, COUNT(*) AS n FROM
+         |  (SELECT UNNEST(string_split(p_name, ' ')) AS topic, p_type FROM part)
+         |  GROUP BY 1, 2),
+         |tmap AS (SELECT topic, domain FROM (SELECT *, ROW_NUMBER() OVER (
+         |    PARTITION BY topic ORDER BY n DESC, domain) AS rn FROM tcount)
+         |  WHERE rn = 1)
+         |SELECT domain,
+         |  COUNT(*) FILTER (WHERE ontology = 'corpus_vocab') AS n_corpus_vocab,
+         |  COUNT(*) FILTER (WHERE ontology = 'lexicon') AS n_lexicon,
+         |  COUNT(*) FILTER (WHERE ontology = 'corpus_vocab') +
+         |    COUNT(*) FILTER (WHERE ontology = 'lexicon') AS total
+         |FROM linked JOIN tmap USING (topic)
+         |WHERE similarity >= 0.65
+         |GROUP BY domain
+         |ORDER BY total DESC, domain""".stripMargin)),
+    Entry("xref12_coverage_by_year", Linkage.xref12CoverageByYear, Sql(
+      """WITH spine AS (
+        |  SELECT DISTINCT entity_id FROM (
+        |    SELECT CAST(c_custkey AS BIGINT) AS entity_id FROM customer
+        |    UNION ALL SELECT CAST(o_custkey AS BIGINT) FROM orders
+        |    UNION ALL SELECT CAST(user_id AS BIGINT) FROM events) u),
+        |profile AS (SELECT CAST(c_custkey AS BIGINT) AS p_id FROM customer),
+        |orderagg AS (SELECT CAST(o_custkey AS BIGINT) AS o_id,
+        |  ROUND(SUM(o_totalprice), 4) AS total_spent FROM orders GROUP BY 1),
+        |eventagg AS (SELECT CAST(user_id AS BIGINT) AS e_id FROM events GROUP BY 1),
+        |unified AS (
+        |  SELECT entity_id, p_id IS NOT NULL AS has_profile,
+        |    o_id IS NOT NULL AS has_orders, e_id IS NOT NULL AS has_events,
+        |    COALESCE(total_spent, 0.0) AS total_spent
+        |  FROM spine
+        |  LEFT JOIN profile ON entity_id = p_id
+        |  LEFT JOIN orderagg ON entity_id = o_id
+        |  LEFT JOIN eventagg ON entity_id = e_id),
+        |fy AS (SELECT CAST(o_custkey AS BIGINT) AS entity_id,
+        |  MIN(CAST(year(o_orderdate) AS BIGINT)) AS year FROM orders GROUP BY 1)
+        |SELECT year, COUNT(*) AS n_entities,
+        |  COUNT(*) FILTER (WHERE has_profile) AS n_profile,
+        |  COUNT(*) FILTER (WHERE has_events) AS n_events_src,
+        |  COUNT(*) FILTER (WHERE has_profile AND has_orders AND has_events) AS n_all_sources,
+        |  ROUND(SUM(total_spent), 4) AS total_value
+        |FROM unified JOIN fy USING (entity_id)
+        |GROUP BY 1
+        |ORDER BY year""".stripMargin)),
+    // xref13: the flags keep three-valued logic on purpose (NULL year
+    // + has_x=true -> NULL flag), matching both the Spark operator and
+    // the reference's paper_temporal_flags DuckDB view text.
+    Entry("xref13_temporal_flags", Linkage.xref13TemporalFlags, Sql(
+      """WITH spine AS (
+        |  SELECT DISTINCT entity_id FROM (
+        |    SELECT CAST(c_custkey AS BIGINT) AS entity_id FROM customer
+        |    UNION ALL SELECT CAST(o_custkey AS BIGINT) FROM orders
+        |    UNION ALL SELECT CAST(user_id AS BIGINT) FROM events) u),
+        |orderagg AS (SELECT CAST(o_custkey AS BIGINT) AS o_id FROM orders GROUP BY 1),
+        |eventagg AS (SELECT CAST(user_id AS BIGINT) AS e_id FROM events GROUP BY 1),
+        |fy AS (SELECT CAST(o_custkey AS BIGINT) AS f_id,
+        |  MIN(CAST(year(o_orderdate) AS BIGINT)) AS year FROM orders GROUP BY 1)
+        |SELECT entity_id, year,
+        |  (year > 1996 AND e_id IS NOT NULL) AS events_metrics_stale,
+        |  (year > 1997 AND o_id IS NOT NULL) AS orders_coverage_incomplete,
+        |  (year IS NULL) AS year_missing
+        |FROM spine
+        |LEFT JOIN orderagg ON entity_id = o_id
+        |LEFT JOIN eventagg ON entity_id = e_id
+        |LEFT JOIN fy ON entity_id = f_id
+        |ORDER BY entity_id""".stripMargin)),
     // sim06: the TRAINED quantizer, oracle-checked by UNROLLING the 3
     // Lloyd iterations as CTE triples (seed -> assign -> positional
     // mean), the graph06 unrolled-recursion trick. Deterministic on
     // both sides: seeds are the nlist lowest vec_ids, assignment ties
     // break to the lowest cluster id.
-    "sim06_ivf_trained" -> {
+    Entry("sim06_ivf_trained", Similarity.sim06IvfTrained(_), Sql {
       val iter = (1 to 3).map { i =>
         s"""a$i AS (SELECT e.vec_id, e.v, c.cluster, ROW_NUMBER() OVER (
            |    PARTITION BY e.vec_id
@@ -2356,19 +3038,19 @@ object SparkEntry {
          |SELECT query_id, rank, vec_id AS neighbor_id, ROUND(cos_raw, 4) AS cos
          |FROM r WHERE rank <= 10
          |ORDER BY query_id, rank""".stripMargin
-    },
-    // sim16: sim06's unrolled Lloyd trained on the BASE subset only
-    // (vec_id % 5 != 4 — the corpus as of the last index build), then
-    // both populations assign to the frozen c3 centroids and the
-    // per-cell maintenance report aggregates (counts + 4dp mean
-    // affinities; AVG-of-cosines follows sim06's centroid-AVG
-    // precedent, drift subtracts the already-rounded means).
-    "sim16_ivf_append" -> {
+    }),
+    // samp14: cluster-balanced sampling replays end to end — sim06's
+    // unrolled 3-iteration Lloyd CTE trains the same quantizer, the
+    // final assignment keeps the winning cosine, and the per-cluster
+    // rank (affinity desc, vec_id) caps each cluster at the quota.
+    // Float-safety as sim06: exact cosines are deterministic per
+    // pair; only centroid AVGs carry distributed-sum noise.
+    Entry("samp14_cluster_balance", Similarity.samp14ClusterBalance(_), Sql {
       val iter = (1 to 3).map { i =>
-        s"""a$i AS (SELECT b.vec_id, b.v, c.cluster, ROW_NUMBER() OVER (
-           |    PARTITION BY b.vec_id
-           |    ORDER BY ${dkCos("b.v", "c.centroid")} DESC, c.cluster) AS r
-           |  FROM b CROSS JOIN c${i - 1} c),
+        s"""a$i AS (SELECT e.vec_id, e.v, c.cluster, ROW_NUMBER() OVER (
+           |    PARTITION BY e.vec_id
+           |    ORDER BY ${dkCos("e.v", "c.centroid")} DESC, c.cluster) AS r
+           |  FROM e CROSS JOIN c${i - 1} c),
            |f$i AS (SELECT cluster, generate_subscripts(v, 1) AS pos, UNNEST(v) AS x
            |  FROM a$i WHERE r = 1),
            |c$i AS (SELECT cluster, LIST(c ORDER BY pos) AS centroid FROM (
@@ -2376,54 +3058,127 @@ object SparkEntry {
            |  GROUP BY cluster)""".stripMargin
       }.mkString(",\n")
       s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-         |b AS (SELECT vec_id, v FROM e WHERE vec_id % 5 != 4),
-         |d AS (SELECT vec_id, v FROM e WHERE vec_id % 5 = 4),
          |c0 AS (SELECT rn - 1 AS cluster, v AS centroid FROM (
-         |    SELECT v, ROW_NUMBER() OVER (ORDER BY vec_id) AS rn FROM b)
+         |    SELECT v, ROW_NUMBER() OVER (ORDER BY vec_id) AS rn FROM e)
          |  WHERE rn <= 10),
          |$iter,
-         |ab AS (SELECT cluster, ccos FROM (
-         |    SELECT b.vec_id, c.cluster,
-         |      ${dkCos("b.v", "c.centroid")} AS ccos, ROW_NUMBER() OVER (
-         |      PARTITION BY b.vec_id
-         |      ORDER BY ${dkCos("b.v", "c.centroid")} DESC, c.cluster) AS r
-         |    FROM b CROSS JOIN c3 c) WHERE r = 1),
-         |ad AS (SELECT cluster, ccos FROM (
-         |    SELECT d.vec_id, c.cluster,
-         |      ${dkCos("d.v", "c.centroid")} AS ccos, ROW_NUMBER() OVER (
-         |      PARTITION BY d.vec_id
-         |      ORDER BY ${dkCos("d.v", "c.centroid")} DESC, c.cluster) AS r
-         |    FROM d CROSS JOIN c3 c) WHERE r = 1),
-         |sb AS (SELECT cluster, COUNT(*) AS n_base,
-         |    ROUND(AVG(ccos), 4) AS cos_base FROM ab GROUP BY cluster),
-         |sd AS (SELECT cluster, COUNT(*) AS n_new,
-         |    ROUND(AVG(ccos), 4) AS cos_new FROM ad GROUP BY cluster)
-         |SELECT CAST(COALESCE(sb.cluster, sd.cluster) AS BIGINT) AS cluster,
-         |  CAST(COALESCE(n_base, 0) AS BIGINT) AS n_base,
-         |  CAST(COALESCE(n_new, 0) AS BIGINT) AS n_new,
-         |  cos_base, cos_new,
-         |  ROUND(cos_base - cos_new, 4) AS drift
-         |FROM sb FULL OUTER JOIN sd ON sb.cluster = sd.cluster
-         |ORDER BY cluster""".stripMargin
-    },
+         |cells AS (SELECT vec_id, cluster, cos_raw FROM (
+         |    SELECT e.vec_id, c.cluster,
+         |      ${dkCos("e.v", "c.centroid")} AS cos_raw,
+         |      ROW_NUMBER() OVER (PARTITION BY e.vec_id
+         |        ORDER BY ${dkCos("e.v", "c.centroid")} DESC, c.cluster) AS r
+         |    FROM e CROSS JOIN c3 c) WHERE r = 1),
+         |rk AS (SELECT vec_id, cluster, cos_raw, ROW_NUMBER() OVER (
+         |    PARTITION BY cluster ORDER BY cos_raw DESC, vec_id) AS rank
+         |  FROM cells)
+         |SELECT vec_id, cluster, ROUND(cos_raw, 4) AS cos_centroid,
+         |  rank, rank <= 30 AS kept
+         |FROM rk ORDER BY vec_id""".stripMargin
+    }),
+    // sim09: the two-stage plan replayed verbatim — prefix-16 cosine
+    // top-50 per query, then exact full-dim rerank of those ids.
+    Entry("sim09_prefix_rerank", Similarity.sim09PrefixRerank(_), Sql(
+      s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+         |p AS (SELECT vec_id, v[1:16] AS vp FROM e),
+         |qp AS (SELECT vec_id AS query_id, vp AS qvp FROM p WHERE vec_id < 10),
+         |qf AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < 10),
+         |s AS (SELECT query_id, vec_id, ${dkCos("qvp", "vp")} AS pcos
+         |      FROM qp JOIN p ON vec_id != query_id),
+         |c AS (SELECT query_id, vec_id FROM (
+         |    SELECT query_id, vec_id, ROW_NUMBER() OVER (
+         |      PARTITION BY query_id ORDER BY pcos DESC, vec_id) AS pr FROM s)
+         |  WHERE pr <= 50),
+         |r AS (SELECT c.query_id, c.vec_id, ${dkCos("qv", "v")} AS cos_raw
+         |      FROM c JOIN e ON c.vec_id = e.vec_id
+         |      JOIN qf ON c.query_id = qf.query_id),
+         |t AS (SELECT query_id, vec_id, cos_raw, ROW_NUMBER() OVER (
+         |    PARTITION BY query_id ORDER BY cos_raw DESC, vec_id) AS rank FROM r)
+         |SELECT query_id, rank, vec_id AS neighbor_id, ROUND(cos_raw, 4) AS cos
+         |FROM t WHERE rank <= 10
+         |ORDER BY query_id, rank""".stripMargin)),
+    // sim10: the SQ8 train/encode/decode/search pipeline replayed
+    // verbatim — per-dim min/max, affine 0..255 code, reconstruction,
+    // asymmetric cosine. Parallel UNNESTs zip, so (x, i) stay aligned.
+    Entry("sim10_sq_ann", Similarity.sim10SqAnn(_), Sql(
+      s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+         |d AS (SELECT vec_id, UNNEST(v) AS x, UNNEST(range(1, len(v) + 1)) AS i FROM e),
+         |mm AS (SELECT i, MIN(x) AS lo, MAX(x) AS hi FROM d GROUP BY i),
+         |c AS (SELECT vec_id, i,
+         |    CASE WHEN hi > lo THEN round((x - lo) / (hi - lo) * 255) ELSE 0 END AS code,
+         |    lo, hi FROM d JOIN mm USING (i)),
+         |dv AS (SELECT vec_id, LIST(code / 255.0 * (hi - lo) + lo ORDER BY i) AS dec
+         |  FROM c GROUP BY vec_id),
+         |q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < 10),
+         |s AS (SELECT query_id, dv.vec_id, ${dkCos("qv", "dec")} AS cos_sq
+         |      FROM q JOIN dv ON dv.vec_id != query_id),
+         |r AS (SELECT query_id, vec_id, cos_sq, ROW_NUMBER() OVER (
+         |    PARTITION BY query_id ORDER BY cos_sq DESC, vec_id) AS rank
+         |  FROM s)
+         |SELECT query_id, rank, vec_id AS neighbor_id, ROUND(cos_sq, 4) AS cos_sq
+         |FROM r WHERE rank <= 10
+         |ORDER BY query_id, rank""".stripMargin)),
+    // sim12: the cone prune is exact (triangle inequality on the
+    // sphere), so the oracle is plain brute force — every pair whose
+    // ROUNDED cosine clears the radius. Same rounded-admission rule
+    // on both sides (the sim02 discipline).
+    Entry("sim12_range_search", Similarity.sim12RangeSearch(_), Sql(
+      s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+         |q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < 10)
+         |SELECT q.query_id, e.vec_id, ROUND(${dkCos("qv", "v")}, 4) AS cos
+         |FROM q JOIN e ON e.vec_id <> q.query_id
+         |WHERE ROUND(${dkCos("qv", "v")}, 4) >= 0.3
+         |ORDER BY q.query_id, e.vec_id""".stripMargin)),
+    // sim07: PQ oracle — all m=8 subspace codebooks train jointly in
+    // the same unrolled-CTE style (2 Lloyd iterations, squared-L2
+    // assignment ranked via list_distance, ties to the lowest cluster
+    // id), then codes + the per-query ADC lookup table + the summed
+    // partial-dot scoring are plain join/agg SQL.
+    Entry("sim07_pq_ann", Similarity.sim07PqAnn(_), Sql(
+      s"""WITH $dkPqAdcCtes,
+         |r AS (SELECT query_id, vec_id, score, ROW_NUMBER() OVER (
+         |    PARTITION BY query_id ORDER BY score DESC, vec_id) AS rank
+         |  FROM s)
+         |SELECT query_id, rank, vec_id AS neighbor_id, ROUND(score, 4) AS adc_score
+         |FROM r WHERE rank <= 10
+         |ORDER BY query_id, rank""".stripMargin)),
+    // sim13: the shared ADC scores, top-(k·refine) coarse candidates,
+    // then the exact-cosine rerank over raw vectors (cosine is
+    // normalization-invariant, so raw e.v0 is the same space).
+    Entry("sim13_pq_refine", Similarity.sim13PqRefine(_), Sql(
+      s"""WITH $dkPqAdcCtes,
+         |cr AS (SELECT query_id, vec_id, ROW_NUMBER() OVER (
+         |    PARTITION BY query_id ORDER BY score DESC, vec_id) AS crank
+         |  FROM s),
+         |cand AS (SELECT query_id, vec_id FROM cr WHERE crank <= 40),
+         |ex AS (SELECT cand.query_id, cand.vec_id,
+         |    ${dkCos("qe.v0", "ce.v0")} AS cos_raw
+         |  FROM cand
+         |  JOIN e qe ON qe.vec_id = cand.query_id
+         |  JOIN e ce ON ce.vec_id = cand.vec_id),
+         |rr AS (SELECT query_id, vec_id, cos_raw, ROW_NUMBER() OVER (
+         |    PARTITION BY query_id ORDER BY cos_raw DESC, vec_id) AS rank
+         |  FROM ex)
+         |SELECT query_id, rank, vec_id AS neighbor_id, ROUND(cos_raw, 4) AS cos
+         |FROM rr WHERE rank <= 10
+         |ORDER BY query_id, rank""".stripMargin)),
     // sim14: sim06's coarse chain (3 unrolled Lloyd iterations over
     // cosine assignment) → residuals vs the final centroids →
     // sim07's per-subspace chain (2 unrolled iterations over
     // list_distance) on the residuals → probed-cell ADC with the
     // q·centroid coarse correction. Integer/double arithmetic
     // matching the Spark stages operator for operator.
-    "sim14_ivf_pq" ->
+    Entry("sim14_ivf_pq", Similarity.sim14IvfPq(_), Sql(
       s"""WITH $dkIvfPqAdcCtes,
          |r AS (SELECT query_id, vec_id, score, ROW_NUMBER() OVER (
          |    PARTITION BY query_id ORDER BY score DESC, vec_id) AS rank
          |  FROM s)
          |SELECT query_id, rank, vec_id AS neighbor_id, ROUND(score, 4) AS adc_ip
          |FROM r WHERE rank <= 10
-         |ORDER BY query_id, rank""".stripMargin,
+         |ORDER BY query_id, rank""".stripMargin)),
     // sim15: the shared IVF-PQ ADC scores propose top-(k*refine)
     // candidates, then sim13's exact-cosine rerank over raw vectors
     // (cosine is normalization-invariant) picks the final k.
-    "sim15_ivfpq_refine" ->
+    Entry("sim15_ivfpq_refine", Similarity.sim15IvfPqRefine(_), Sql(
       s"""WITH $dkIvfPqAdcCtes,
          |cr AS (SELECT query_id, vec_id, ROW_NUMBER() OVER (
          |    PARTITION BY query_id ORDER BY score DESC, vec_id) AS crank
@@ -2439,7 +3194,145 @@ object SparkEntry {
          |  FROM ex)
          |SELECT query_id, rank, vec_id AS neighbor_id, ROUND(cos_raw, 4) AS cos
          |FROM rr WHERE rank <= 10
-         |ORDER BY query_id, rank""".stripMargin,
+         |ORDER BY query_id, rank""".stripMargin)),
+    Entry("evt08_daily_anomalies", Events.evt08DailyAnomalies(_), Sql(
+      """WITH daily AS (SELECT event_type, date_trunc('day', ts) AS day,
+        |    COUNT(*) AS n_events
+        |  FROM events GROUP BY 1, 2),
+        |s AS (SELECT event_type,
+        |    CAST(SUM(n_events) AS DOUBLE) / COUNT(*) AS mu
+        |  FROM daily GROUP BY 1),
+        |r AS (SELECT d.event_type, d.day, d.n_events, s.mu,
+        |    ROUND(d.n_events / s.mu, 4) AS ratio
+        |  FROM daily d JOIN s USING (event_type)),
+        |k AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY event_type
+        |    ORDER BY ABS(ratio - 1) DESC, day) AS rn FROM r)
+        |SELECT event_type, day, n_events,
+        |  ROUND(mu, 4) AS mean_daily, ratio
+        |FROM k WHERE rn <= 3
+        |ORDER BY event_type, day""".stripMargin)),
+    // evt09: the oracle is the NAIVE inequality join — DuckDB's
+    // IEJoin handles it natively; the Spark side's bin-bucketed
+    // equi-join must reproduce it exactly.
+    Entry("evt09_interval_join", Events.evt09IntervalJoin(_), Sql(
+      """WITH e AS (SELECT event_id, user_id,
+        |    -- FLOOR, not CAST: epoch() is fractional and DuckDB's
+        |    -- double->BIGINT cast rounds where Spark's unix_timestamp
+        |    -- truncates
+        |    CAST(FLOOR(epoch(ts)) AS BIGINT) AS sec, event_type FROM events),
+        |v AS (SELECT user_id, event_id AS view_id, sec AS view_sec
+        |  FROM e WHERE event_type = 'view'),
+        |p AS (SELECT user_id, event_id AS purchase_id, sec AS p_sec
+        |  FROM e WHERE event_type = 'purchase')
+        |SELECT p.purchase_id, v.view_id, p.p_sec - v.view_sec AS sec_before
+        |FROM p JOIN v ON p.user_id = v.user_id
+        | AND v.view_sec >= p.p_sec - 1800 AND v.view_sec < p.p_sec
+        |ORDER BY purchase_id, view_id""".stripMargin)),
+    // evt10: the oracle replays the md5 ingest-delay model and the
+    // lateness scan with ONE global window (exact at oracle scale);
+    // the Spark side's sharded two-level prefix max must be
+    // value-identical.
+    Entry("evt10_lateness_profile", Events.evt10LatenessProfile(_), Sql(
+      s"""WITH $dkLatenessCtes
+        |SELECT date_trunc('day', ts) AS day, COUNT(*) AS n_events,
+        |  CAST(SUM(CASE WHEN late_us > 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_late,
+        |  CAST(SUM(CASE WHEN late_us >= 60000000 THEN 1 ELSE 0 END) AS BIGINT) AS n_late_1m,
+        |  CAST(SUM(CASE WHEN late_us >= 3600000000 THEN 1 ELSE 0 END) AS BIGINT) AS n_late_1h,
+        |  ROUND(MAX(late_us) / 1000000.0, 4) AS max_late_s
+        |FROM lt GROUP BY 1 ORDER BY 1""".stripMargin)),
+    // evt11: the same lateness model folded into the candidate-delay
+    // drop curve — an event is dropped under watermark delay D iff
+    // late_us > D (Structured Streaming's event_time < hwm − D rule).
+    Entry("evt11_watermark_curve", Events.evt11WatermarkCurve(_), Sql(
+      s"""WITH $dkLatenessCtes,
+        |t AS (SELECT COUNT(*) AS n FROM lt),
+        |d AS (SELECT CAST(x AS BIGINT) AS delay_s
+        |      FROM (VALUES (0),(30),(60),(300),(1800),(3600),(7200)) v(x))
+        |SELECT d.delay_s,
+        |  CAST(COUNT(*) FILTER (WHERE lt.late_us > d.delay_s * 1000000) AS BIGINT) AS n_dropped,
+        |  ROUND(COUNT(*) FILTER (WHERE lt.late_us > d.delay_s * 1000000)
+        |    / CAST(t.n AS DOUBLE), 4) AS drop_frac,
+        |  ROUND(1.0 - COUNT(*) FILTER (WHERE lt.late_us > d.delay_s * 1000000)
+        |    / CAST(t.n AS DOUBLE), 4) AS completeness
+        |FROM lt CROSS JOIN d CROSS JOIN t
+        |GROUP BY d.delay_s, t.n
+        |ORDER BY delay_s""".stripMargin)),
+    Entry("dedup07_decontaminate", Dedup.dedup07Decontaminate(_), Sql(
+      s"""WITH t AS (SELECT doc_id, $dkToks AS w FROM documents),
+         |sh AS (SELECT doc_id, $dkShingles3 AS s FROM t),
+         |bench AS (SELECT DISTINCT UNNEST(s) AS s FROM sh WHERE doc_id < 10),
+         |corpus AS (SELECT doc_id, UNNEST(s) AS s FROM sh WHERE doc_id >= 10)
+         |SELECT doc_id, COUNT(*) AS n_overlap
+         |FROM corpus JOIN bench USING (s)
+         |GROUP BY doc_id
+         |HAVING COUNT(*) >= 5
+         |ORDER BY doc_id""".stripMargin)),
+    // dedup15: dedup07's probe reversed — per BENCHMARK doc, the
+    // fraction of its distinct grams found anywhere in the corpus
+    Entry("dedup15_contamination_report", Dedup.dedup15ContaminationReport(_), Sql(
+      s"""WITH t AS (SELECT doc_id, $dkToks AS w FROM documents),
+         |sh AS (SELECT doc_id, $dkShingles3 AS s FROM t),
+         |bench AS (SELECT doc_id, UNNEST(s) AS s FROM sh
+         |          WHERE doc_id < 10 AND len(s) > 0),
+         |hits AS (SELECT DISTINCT c.s
+         |         FROM (SELECT UNNEST(s) AS s FROM sh WHERE doc_id >= 10) c
+         |         JOIN (SELECT DISTINCT s FROM bench) b USING (s)),
+         |per AS (SELECT b.doc_id,
+         |          COUNT(*) AS n_grams,
+         |          CAST(COUNT(h.s) AS BIGINT) AS n_hit
+         |        FROM bench b LEFT JOIN hits h USING (s)
+         |        GROUP BY b.doc_id)
+         |SELECT doc_id, n_grams, n_hit,
+         |  ROUND(n_hit * 1.0 / n_grams, 4) AS frac_contaminated
+         |FROM per
+         |ORDER BY doc_id""".stripMargin)),
+    Entry("dedup08_cluster_resolve", Dedup.dedup08ClusterResolve(_), Sql(
+      s"""WITH RECURSIVE t AS (SELECT doc_id, $dkToks AS w FROM documents),
+         |sh AS (SELECT doc_id, $dkShingles3 AS s FROM t WHERE len(w) >= 3),
+         |pairs AS (
+         |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
+         |  FROM sh a JOIN sh b ON a.doc_id < b.doc_id
+         |  WHERE $dkJac >= 0.5),
+         |edges AS (SELECT doc_a AS u, doc_b AS v FROM pairs
+         |  UNION ALL SELECT doc_b, doc_a FROM pairs),
+         |reach(u, lbl) AS (
+         |  SELECT u, u FROM (SELECT DISTINCT u FROM edges)
+         |  UNION
+         |  SELECT e.u, r.lbl FROM edges e JOIN reach r ON e.v = r.u),
+         |comp AS (SELECT u AS doc_id, MIN(lbl) AS cluster_id FROM reach GROUP BY u),
+         |m AS (SELECT c.cluster_id, c.doc_id, d.n_chars
+         |  FROM comp c JOIN documents d USING (doc_id))
+         |SELECT cluster_id, n_members, survivor_id FROM (
+         |  SELECT cluster_id,
+         |    COUNT(*) OVER (PARTITION BY cluster_id) AS n_members,
+         |    doc_id AS survivor_id,
+         |    ROW_NUMBER() OVER (PARTITION BY cluster_id
+         |      ORDER BY n_chars DESC, doc_id) AS rn
+         |  FROM m) WHERE rn = 1
+         |ORDER BY cluster_id""".stripMargin)),
+    Entry("dedup09_cross_source_overlap", Dedup.dedup09CrossSourceOverlap, Sql(
+      s"""WITH d AS (SELECT $dkBagFp AS fp, source, COUNT(*) AS c
+         |  FROM documents GROUP BY 1, 2)
+         |SELECT a.source AS source_a, b.source AS source_b,
+         |  CAST(SUM(CASE WHEN a.source = b.source
+         |      THEN CAST(a.c * (a.c - 1) / 2 AS BIGINT)
+         |      ELSE a.c * b.c END) AS BIGINT) AS n_dup_pairs
+         |FROM d a JOIN d b ON a.fp = b.fp AND a.source <= b.source
+         |GROUP BY 1, 2
+         |HAVING SUM(CASE WHEN a.source = b.source
+         |      THEN CAST(a.c * (a.c - 1) / 2 AS BIGINT)
+         |      ELSE a.c * b.c END) > 0
+         |ORDER BY source_a, source_b""".stripMargin)),
+    Entry("dedup10_containment", Dedup.dedup10Containment(_), Sql(
+      s"""WITH t AS (SELECT doc_id, $dkToks AS w FROM documents),
+         |sh AS (SELECT doc_id, $dkShingles3 AS s FROM t WHERE len(w) >= 3)
+         |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+         |  ROUND(CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)
+         |    / LEAST(len(a.s), len(b.s)), 4) AS containment
+         |FROM sh a JOIN sh b ON a.doc_id < b.doc_id
+         |WHERE ROUND(CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)
+         |    / LEAST(len(a.s), len(b.s)), 4) >= 0.9
+         |ORDER BY doc_a, doc_b""".stripMargin)),
     // dedup11: SemDeDup oracle — the 2 Lloyd iterations unroll exactly
     // as in sim06; the within-cell pair threshold uses the 4dp
     // rounded-admission rule (dedup06/sim02's discipline — the fused
@@ -2449,7 +3342,7 @@ object SparkEntry {
     // (spec-pinned), the duplicate groups are expressible as a
     // recursive-CTE transitive closure + MIN per node — exact, with no
     // iteration-count dependence.
-    "dedup11_semantic" -> {
+    Entry("dedup11_semantic", Dedup.dedup11Semantic(_), Sql {
       val iter = (1 to 2).map { i =>
         s"""a$i AS (SELECT e.vec_id, e.v, c.cluster, ROW_NUMBER() OVER (
            |    PARTITION BY e.vec_id
@@ -2486,195 +3379,198 @@ object SparkEntry {
          |  COALESCE(g.group_id, c.vec_id) = c.vec_id AS survivor
          |FROM cells c LEFT JOIN grp g ON c.vec_id = g.u
          |ORDER BY c.vec_id""".stripMargin
-    },
-    // samp09: dedup11's unrolled-Lloyd cells (same k=10, 2
-    // iterations, same seed/tiebreak rules), then a deterministic
-    // per-cell uniform draw: rank by md5 of the id string (identical
-    // bytes and binary collation in both engines), keep rank <= m.
-    "samp09_cluster_balanced" -> {
-      val iter = (1 to 2).map { i =>
-        s"""a$i AS (SELECT e.vec_id, e.v, c.cluster, ROW_NUMBER() OVER (
-           |    PARTITION BY e.vec_id
-           |    ORDER BY ${dkCos("e.v", "c.centroid")} DESC, c.cluster) AS r
-           |  FROM e CROSS JOIN c${i - 1} c),
-           |f$i AS (SELECT cluster, generate_subscripts(v, 1) AS pos, UNNEST(v) AS x
-           |  FROM a$i WHERE r = 1),
-           |c$i AS (SELECT cluster, LIST(c ORDER BY pos) AS centroid FROM (
-           |    SELECT cluster, pos, AVG(x) AS c FROM f$i GROUP BY 1, 2)
-           |  GROUP BY cluster)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH e AS (
-         |  SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-         |c0 AS (SELECT rn - 1 AS cluster, v AS centroid FROM (
-         |    SELECT v, ROW_NUMBER() OVER (ORDER BY vec_id) AS rn FROM e)
-         |  WHERE rn <= 10),
-         |$iter,
-         |cells AS (SELECT vec_id, cluster FROM (
-         |    SELECT e.vec_id, c.cluster, ROW_NUMBER() OVER (
-         |      PARTITION BY e.vec_id
-         |      ORDER BY ${dkCos("e.v", "c.centroid")} DESC, c.cluster) AS r
-         |    FROM e CROSS JOIN c2 c) WHERE r = 1),
-         |picks AS (SELECT cluster, vec_id, ROW_NUMBER() OVER (
-         |    PARTITION BY cluster
-         |    ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) AS rnk
-         |  FROM cells)
-         |SELECT CAST(cluster AS INTEGER) AS cluster, vec_id,
-         |  CAST(rnk AS INTEGER) AS rnk
-         |FROM picks WHERE rnk <= 20
-         |ORDER BY cluster, rnk""".stripMargin
-    },
-    // sim07: PQ oracle — all m=8 subspace codebooks train jointly in
-    // the same unrolled-CTE style (2 Lloyd iterations, squared-L2
-    // assignment ranked via list_distance, ties to the lowest cluster
-    // id), then codes + the per-query ADC lookup table + the summed
-    // partial-dot scoring are plain join/agg SQL.
-    "sim07_pq_ann" ->
-      s"""WITH $dkPqAdcCtes,
-         |r AS (SELECT query_id, vec_id, score, ROW_NUMBER() OVER (
-         |    PARTITION BY query_id ORDER BY score DESC, vec_id) AS rank
-         |  FROM s)
-         |SELECT query_id, rank, vec_id AS neighbor_id, ROUND(score, 4) AS adc_score
-         |FROM r WHERE rank <= 10
-         |ORDER BY query_id, rank""".stripMargin,
-    // sim13: the shared ADC scores, top-(k·refine) coarse candidates,
-    // then the exact-cosine rerank over raw vectors (cosine is
-    // normalization-invariant, so raw e.v0 is the same space).
-    "sim13_pq_refine" ->
-      s"""WITH $dkPqAdcCtes,
-         |cr AS (SELECT query_id, vec_id, ROW_NUMBER() OVER (
-         |    PARTITION BY query_id ORDER BY score DESC, vec_id) AS crank
-         |  FROM s),
-         |cand AS (SELECT query_id, vec_id FROM cr WHERE crank <= 40),
-         |ex AS (SELECT cand.query_id, cand.vec_id,
-         |    ${dkCos("qe.v0", "ce.v0")} AS cos_raw
-         |  FROM cand
-         |  JOIN e qe ON qe.vec_id = cand.query_id
-         |  JOIN e ce ON ce.vec_id = cand.vec_id),
-         |rr AS (SELECT query_id, vec_id, cos_raw, ROW_NUMBER() OVER (
-         |    PARTITION BY query_id ORDER BY cos_raw DESC, vec_id) AS rank
-         |  FROM ex)
-         |SELECT query_id, rank, vec_id AS neighbor_id, ROUND(cos_raw, 4) AS cos
-         |FROM rr WHERE rank <= 10
-         |ORDER BY query_id, rank""".stripMargin,
-    "evt01_windowed_counts" ->
-      """SELECT date_trunc('hour', ts) AS window_start, event_type,
-        |  COUNT(*) AS n_events, ROUND(SUM(value), 4) AS sum_value
-        |FROM events
-        |GROUP BY 1, 2
-        |ORDER BY window_start, event_type""".stripMargin,
-    "evt02_sessionization" ->
-      """WITH x AS (
-        |  SELECT event_id, ts, user_id,
-        |    LAG(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev
-        |  FROM events),
-        |m AS (SELECT event_id, ts, user_id,
-        |  CASE WHEN prev IS NULL OR epoch_ms(ts) - epoch_ms(prev) > 1800000
-        |       THEN 1 ELSE 0 END AS is_new FROM x),
-        |s AS (SELECT user_id, ts,
-        |  CAST(SUM(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-        |    AS session_id
-        |  FROM m)
-        |SELECT user_id, session_id, COUNT(*) AS n_events,
-        |  MIN(ts) AS session_start, MAX(ts) AS session_end,
-        |  ROUND(CAST(epoch_ms(MAX(ts)) - epoch_ms(MIN(ts)) AS DOUBLE) / 1000.0, 4)
-        |    AS duration_secs
-        |FROM s
-        |GROUP BY user_id, session_id
-        |ORDER BY user_id, session_id""".stripMargin,
-    "evt03_json_extract" ->
-      """SELECT event_type, COUNT(*) AS n_events,
-        |  ROUND(AVG(CAST(json_extract_string(props, '$.k') AS BIGINT)), 4) AS avg_k,
-        |  MAX(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS max_k
-        |FROM events
-        |GROUP BY event_type
-        |ORDER BY event_type""".stripMargin,
-    "evt04_funnel" ->
-      """SELECT * FROM (
-        |  SELECT user_id,
-        |    MIN(CASE WHEN event_type = 'view' THEN ts END) AS first_view,
-        |    MIN(CASE WHEN event_type = 'click' THEN ts END) AS first_click,
-        |    MIN(CASE WHEN event_type = 'purchase' THEN ts END) AS first_purchase
-        |  FROM events GROUP BY user_id) t
-        |WHERE first_view IS NOT NULL AND first_click IS NOT NULL
-        |  AND first_purchase IS NOT NULL
-        |  AND first_view < first_click AND first_click < first_purchase
-        |ORDER BY user_id""".stripMargin,
-    "graph01_hierarchy_rollup" ->
-      """SELECT r_name || ' > ' || n_name AS path, r_name, n_name,
-        |  COUNT(*) AS n_customers, ROUND(SUM(c_acctbal), 4) AS total_acctbal
-        |FROM customer
-        |JOIN nation ON c_nationkey = n_nationkey
-        |JOIN region ON n_regionkey = r_regionkey
-        |GROUP BY 1, 2, 3
-        |ORDER BY path""".stripMargin,
-    "txt14_repetition" ->
-      s"""WITH t AS (SELECT doc_id, $dkToks AS w FROM documents),
-         |bg AS (SELECT doc_id,
-         |  UNNEST([w[i] || ' ' || w[i+1] FOR i IN RANGE(1, len(w))]) AS b
-         |  FROM t WHERE len(w) >= 2),
-         |c AS (SELECT doc_id, b, COUNT(*) AS n FROM bg GROUP BY 1, 2)
-         |SELECT doc_id,
-         |  CAST(SUM(n) AS BIGINT) AS n_bigrams,
-         |  CAST(MAX(n) AS BIGINT) AS top_bigram_n,
-         |  ROUND(CAST(MAX(n) AS DOUBLE) / SUM(n), 4) AS top_bigram_frac
-         |FROM c GROUP BY doc_id
-         |ORDER BY doc_id""".stripMargin,
-    "txt16_sequence_packing" ->
-      s"""WITH docs AS (SELECT doc_id, source, $dkToks AS toks FROM documents),
-         |st AS (SELECT doc_id, source, toks,
-         |  UNNEST(range(0, GREATEST(len(toks) - 1, 0) + 1, 40)) AS start
-         |  FROM docs),
-         |ch AS (SELECT source, CAST(doc_id // 200 AS BIGINT) AS shard, doc_id,
-         |  CAST(start / 40 AS BIGINT) AS chunk_id,
-         |  CAST(len(list_slice(toks, start + 1, start + 50)) AS BIGINT) AS chunk_len
-         |  FROM st),
-         |cum AS (SELECT source, shard, chunk_len,
-         |  SUM(chunk_len) OVER (PARTITION BY source, shard
-         |    ORDER BY doc_id, chunk_id
-         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-         |  FROM ch)
-         |SELECT source, shard, CAST((cum - chunk_len) // 512 AS BIGINT) AS bin_id,
-         |  COUNT(*) AS n_chunks, CAST(SUM(chunk_len) AS BIGINT) AS bin_tokens
-         |FROM cum
-         |GROUP BY 1, 2, 3
-         |ORDER BY source, shard, bin_id""".stripMargin,
-    "txt15_unigram_logprob" ->
-      s"""WITH t AS (SELECT doc_id, $dkToks AS w FROM documents),
-         |tok AS (SELECT doc_id, UNNEST(w) AS w FROM t),
-         |cnt AS (SELECT w, COUNT(*) AS c FROM tok GROUP BY w),
-         |tot AS (SELECT CAST(COUNT(*) AS DOUBLE) AS total FROM tok)
+    }),
+    Entry("txt17_tfidf_cosine_linkage", Linkage.txt17TfidfCosineLinkage(_), Sql(
+      """WITH lab AS (SELECT p_partkey AS lab_id, p_partkey % 2 = 0 AS is_probe,
+        |  lower(p_name) AS label FROM part),
+        |words AS (SELECT lab_id, is_probe, UNNEST(string_split(label, ' ')) AS w
+        |  FROM lab),
+        |pads AS (SELECT lab_id, is_probe, ' ' || w || ' ' AS pw
+        |  FROM words WHERE len(w) > 0),
+        |ns AS (SELECT lab_id, is_probe, pw, UNNEST([2, 3, 4]) AS n FROM pads),
+        |grams AS (SELECT lab_id, is_probe,
+        |    substr(pw, CAST(i AS INT), CAST(n AS INT)) AS g
+        |  FROM (SELECT lab_id, is_probe, pw, n,
+        |          UNNEST(range(1, len(pw) - n + 2)) AS i
+        |        FROM ns)),
+        |tf AS (SELECT lab_id, is_probe, g, CAST(COUNT(*) AS DOUBLE) AS tf
+        |  FROM grams GROUP BY ALL),
+        |dfx AS (SELECT g, COUNT(DISTINCT lab_id) AS df FROM grams GROUP BY g),
+        |nt AS (SELECT COUNT(*) AS n_labels FROM lab),
+        |w AS (SELECT lab_id, is_probe, g,
+        |    tf * (ln((1.0 + n_labels) / (1.0 + df)) + 1.0) AS wt
+        |  FROM tf JOIN dfx USING (g) CROSS JOIN nt),
+        |nrm AS (SELECT lab_id, sqrt(SUM(wt * wt)) AS nrm FROM w GROUP BY lab_id),
+        |dots AS (SELECT a.lab_id AS probe_id, b.lab_id AS cand_id,
+        |    SUM(a.wt * b.wt) AS dot
+        |  FROM w a JOIN w b ON a.g = b.g AND a.is_probe AND NOT b.is_probe
+        |  GROUP BY 1, 2),
+        |coss AS (SELECT probe_id, cand_id,
+        |    ROUND(dot / (na.nrm * nb.nrm), 4) AS cosine
+        |  FROM dots JOIN nrm na ON na.lab_id = probe_id
+        |            JOIN nrm nb ON nb.lab_id = cand_id),
+        |best AS (SELECT probe_id, cand_id, cosine, ROW_NUMBER() OVER (
+        |    PARTITION BY probe_id ORDER BY cosine DESC, cand_id) AS rn
+        |  FROM coss)
+        |SELECT probe_id, cand_id, cosine FROM best
+        |WHERE rn = 1 AND cosine >= 0.3
+        |ORDER BY probe_id""".stripMargin)),
+    // Driver-facing shape: the harness canonicalizes results with a
+    // pandas sort over every column, which cannot hash an array cell —
+    // ship the ids space-joined (same information, stable ordering);
+    // BpeSpec exercises the typed array API directly.
+    Entry("txt18_bpe_encode",
+      l => TextAnalysis.txt18BpeEncode(l)
+        .withColumn("token_ids", functions.concat_ws(" ", functions.col("token_ids"))),
+      RowsOnly("learned BPE merges are engine-private state no SQL replays; " +
+        "BpeSpec pins merge order, ids and round-trip")),
+    Entry("rel11_approx_stats", Relational.rel11ApproxStats,
+      RowsOnly("the HLL++ and percentile sketch layouts are engine-private; " +
+        "RelationalSpec pins the tolerance vs exact rel03/rel10")),
+    // rel14: oracle-expressible in the EXACT-DEGENERATION regime the
+    // fixture corpus sits in (31 distinct tokens << capacity 256, at
+    // every SF — the generator's vocabulary is fixed): with distinct
+    // items <= capacity, no Misra-Gries counter ever decrements —
+    // every partial holds <= |vocab| <= capacity entries so the
+    // update overflow branch never fires, and merged sizes stay
+    // <= |vocab| so the merge trim never fires; decr = 0 everywhere,
+    // count_lb = count_ub = the exact count regardless of Spark's
+    // partitioning — so the sketch output replays as plain
+    // GROUP BY + ROW_NUMBER (eval's order: count DESC, item ASC).
+    // The bounded regime (capacity < distinct: engine-private
+    // counter state, deterministic error bounds) stays property-
+    // pinned in SketchSpec, not oracled.
+    Entry("rel14_heavy_hitters", Relational.rel14HeavyHitters(_), Sql(
+      s"""WITH tok AS (SELECT UNNEST($dkToks) AS w FROM documents),
+         |c AS (SELECT w AS item, COUNT(*) AS cnt FROM tok GROUP BY w),
+         |r AS (SELECT item, cnt,
+         |    ROW_NUMBER() OVER (ORDER BY cnt DESC, item) AS rank FROM c)
+         |SELECT rank, item, cnt AS count_lb, cnt AS count_ub FROM r
+         |WHERE rank <= 20 ORDER BY rank""".stripMargin)),
+    Entry("nst01_order_history_unnest", Nested.nst01OrderHistoryUnnest(_), Sql(
+      """WITH agg AS (
+        |  SELECT o_custkey,
+        |    list(struct_pack(ok := o_orderkey, tp := o_totalprice,
+        |                     op := o_orderpriority)
+        |         ORDER BY o_orderkey) AS history
+        |  FROM orders GROUP BY o_custkey),
+        |ex AS (SELECT o_custkey, UNNEST(history) AS rec,
+        |         UNNEST(range(1, len(history) + 1)) AS pos
+        |       FROM agg)
+        |SELECT o_custkey, pos, rec.ok AS o_orderkey, rec.tp AS o_totalprice,
+        |  rec.op AS o_orderpriority
+        |FROM ex WHERE pos <= 3
+        |ORDER BY o_custkey, pos""".stripMargin)),
+    Entry("nst02_struct_paths_trycast", Nested.nst02StructPathsTryCast, Sql(
+      """WITH e AS (
+        |  SELECT c_custkey,
+        |    struct_pack(
+        |      cust := struct_pack(name := c_name, acctbal := c_acctbal,
+        |                          segment := c_mktsegment),
+        |      geo := struct_pack(nation := n_name, region := r_name)) AS rec,
+        |    CASE WHEN c_custkey % 3 = 0 THEN 'X' || CAST(c_custkey AS VARCHAR)
+        |         ELSE CAST(c_custkey AS VARCHAR) END AS id_str
+        |  FROM customer
+        |  JOIN nation ON c_nationkey = n_nationkey
+        |  JOIN region ON n_regionkey = r_regionkey)
+        |SELECT c_custkey, rec.cust.name AS cust_name, rec.cust.acctbal AS acctbal,
+        |  rec.geo.region AS region_name, id_str,
+        |  TRY_CAST(id_str AS BIGINT) AS parsed_id
+        |FROM e ORDER BY c_custkey""".stripMargin)),
+    Entry("nst03_type_words_unnest", Nested.nst03TypeWordsUnnest, Sql(
+      """WITH w AS (SELECT p_partkey, string_split(p_type, ' ') AS words FROM part),
+        |ex AS (SELECT p_partkey, UNNEST(words) AS word,
+        |         UNNEST(range(1, len(words) + 1)) AS pos
+        |       FROM w)
+        |SELECT pos, word, COUNT(*) AS n_parts
+        |FROM ex GROUP BY pos, word
+        |ORDER BY pos, word""".stripMargin)),
+    Entry("eval01_linkage_metrics", Evaluation.eval01LinkageMetrics(_), Sql(
+      s"""WITH t AS (SELECT doc_id, n_chars, $dkToks AS w FROM documents),
+         |sh AS (SELECT doc_id, n_chars, $dkShingles3 AS s FROM t),
+         |pred AS (
+         |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, $dkJac AS jaccard
+         |  FROM sh a JOIN sh b
+         |    ON a.doc_id < b.doc_id AND ABS(a.n_chars - b.n_chars) <= 40
+         |  WHERE $dkJac >= 0.05),
+         |strat AS (SELECT doc_a, doc_b,
+         |  CASE WHEN jaccard < 0.5 THEN 'j_005_050'
+         |       WHEN jaccard < 0.8 THEN 'j_050_080'
+         |       ELSE 'j_080_100' END AS stratum,
+         |  ((doc_a % 1000003) * 2654435761 + doc_b % 1000003) % 1000003 AS h
+         |  FROM pred),
+         |strat2 AS (SELECT *, COUNT(*) OVER (PARTITION BY stratum) AS n_pred_total
+         |  FROM strat),
+         |samp AS (SELECT doc_a, doc_b, stratum, n_pred_total FROM (
+         |  SELECT *, ROW_NUMBER() OVER (
+         |    PARTITION BY stratum ORDER BY h, doc_a, doc_b) AS rn
+         |  FROM strat2) WHERE rn <= 200),
+         |d AS (SELECT doc_id, $dkBagFp AS fp FROM documents),
+         |gold AS (SELECT x.doc_id AS doc_a, y.doc_id AS doc_b
+         |  FROM d x JOIN d y ON x.fp = y.fp AND x.doc_id < y.doc_id),
+         |ng AS (SELECT COUNT(*) AS n_gold FROM gold),
+         |m AS (SELECT stratum, COUNT(*) AS n_pred,
+         |  MAX(n_pred_total) AS n_pred_total,
+         |  COUNT(*) FILTER (WHERE g.doc_a IS NOT NULL) AS n_tp, n_gold
+         |  FROM samp s LEFT JOIN gold g
+         |    ON s.doc_a = g.doc_a AND s.doc_b = g.doc_b
+         |  CROSS JOIN ng
+         |  GROUP BY stratum, n_gold)
+         |SELECT stratum, n_pred, n_pred_total, n_tp, n_gold,
+         |  ROUND(CAST(n_tp AS DOUBLE) / n_pred, 4) AS precision,
+         |  ROUND(CAST(n_tp AS DOUBLE) / n_gold, 4) AS recall,
+         |  CASE WHEN CAST(n_tp AS DOUBLE) / n_pred + CAST(n_tp AS DOUBLE) / n_gold > 0
+         |       THEN ROUND(2 * (CAST(n_tp AS DOUBLE) / n_pred) * (CAST(n_tp AS DOUBLE) / n_gold)
+         |                  / (CAST(n_tp AS DOUBLE) / n_pred + CAST(n_tp AS DOUBLE) / n_gold), 4)
+         |       ELSE 0.0 END AS f1
+         |FROM m
+         |ORDER BY stratum""".stripMargin)),
+    Entry("eval02_ann_recall", Evaluation.eval02AnnRecall(_), Sql(
+      s"""WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
+         |flat AS (SELECT label, generate_subscripts(v, 1) AS pos, UNNEST(v) AS x FROM e),
+         |cpos AS (SELECT label, pos, AVG(x) AS c FROM flat GROUP BY 1, 2),
+         |cent AS (SELECT label, LIST(c ORDER BY pos) AS centroid FROM cpos GROUP BY label),
+         |q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < 10),
+         |tr AS (SELECT query_id, vec_id, ROW_NUMBER() OVER (
+         |    PARTITION BY query_id ORDER BY cos_raw DESC, vec_id) AS t_rank
+         |  FROM (SELECT query_id, vec_id, ${dkCos("qv", "v")} AS cos_raw
+         |        FROM q JOIN e ON vec_id != query_id)),
+         |tt AS (SELECT query_id, vec_id, t_rank FROM tr WHERE t_rank <= 10),
+         |cellr AS (SELECT query_id, qv, label, ROW_NUMBER() OVER (
+         |    PARTITION BY query_id ORDER BY ccos DESC, label) AS crank
+         |  FROM (SELECT query_id, qv, cent.label, ${dkCos("qv", "centroid")} AS ccos
+         |        FROM q CROSS JOIN cent)),
+         |pr AS (SELECT query_id, vec_id, ROW_NUMBER() OVER (
+         |    PARTITION BY query_id ORDER BY cos_raw DESC, vec_id) AS p_rank
+         |  FROM (SELECT c.query_id, e.vec_id, ${dkCos("c.qv", "e.v")} AS cos_raw
+         |        FROM cellr c JOIN e
+         |          ON e.label = c.label AND e.vec_id != c.query_id
+         |        WHERE c.crank <= 3)),
+         |pp AS (SELECT query_id, vec_id, p_rank FROM pr WHERE p_rank <= 10)
+         |SELECT t.query_id,
+         |  COUNT(p.p_rank) AS n_hits,
+         |  ROUND(CAST(COUNT(p.p_rank) AS DOUBLE) / 10, 4) AS recall_at_k,
+         |  ROUND(COALESCE(MAX(CASE WHEN t.t_rank = 1
+         |    THEN 1.0::DOUBLE / p.p_rank END), 0.0), 4) AS rr_top1
+         |FROM tt t LEFT JOIN pp p
+         |  ON t.query_id = p.query_id AND t.vec_id = p.vec_id
+         |GROUP BY t.query_id
+         |ORDER BY t.query_id""".stripMargin)),
+    Entry("txt21_dsir_importance", TextAnalysis.txt21DsirImportance(_), Sql(
+      s"""WITH t AS (SELECT doc_id, source = 'src0' AS is_tgt, $dkToks AS w FROM documents),
+         |tok AS (SELECT doc_id, is_tgt, UNNEST(w) AS w FROM t),
+         |cnt AS (SELECT w, COUNT(*) AS c_raw,
+         |  COUNT(*) FILTER (WHERE is_tgt) AS c_tgt FROM tok GROUP BY w),
+         |tot AS (SELECT CAST(SUM(c_raw) AS DOUBLE) AS t_raw,
+         |  CAST(SUM(c_tgt) AS DOUBLE) AS t_tgt,
+         |  CAST(COUNT(*) AS DOUBLE) AS vocab FROM cnt)
          |SELECT doc_id, COUNT(*) AS n_tokens,
-         |  ROUND(AVG(-LN(c / total)), 4) AS avg_neg_logp
+         |  ROUND(AVG(LN((CAST(c_tgt AS DOUBLE) + 1.0) / (t_tgt + vocab))
+         |          - LN(CAST(c_raw AS DOUBLE) / t_raw)), 4) AS avg_llr
          |FROM tok JOIN cnt USING (w) CROSS JOIN tot
          |GROUP BY doc_id
-         |ORDER BY doc_id""".stripMargin,
-    // txt25: terciles of the ROUNDED txt15 score — quantile_cont and
-    // Spark's percentile share the (p*(n-1)) interpolation (the rel10
-    // precedent), and rounding cutpoints to the score's own 4-decimal
-    // grid makes the <= boundary tests identical cross-engine.
-    "txt25_ccnet_buckets" ->
-      s"""WITH t AS (SELECT doc_id, $dkToks AS w FROM documents),
-         |tok AS (SELECT doc_id, UNNEST(w) AS w FROM t),
-         |cnt AS (SELECT w, COUNT(*) AS c FROM tok GROUP BY w),
-         |tot AS (SELECT CAST(COUNT(*) AS DOUBLE) AS total FROM tok),
-         |sc AS (SELECT doc_id, ROUND(AVG(-LN(c / total)), 4) AS s
-         |  FROM tok JOIN cnt USING (w) CROSS JOIN tot GROUP BY doc_id),
-         |sl AS (SELECT d.lang, s FROM sc JOIN documents d USING (doc_id)),
-         |cut AS (SELECT lang,
-         |    ROUND(quantile_cont(s, 0.33333333), 4) AS c1,
-         |    ROUND(quantile_cont(s, 0.66666667), 4) AS c2
-         |  FROM sl GROUP BY lang),
-         |b AS (SELECT sl.lang,
-         |    CASE WHEN s <= c1 THEN 'head'
-         |         WHEN s <= c2 THEN 'middle' ELSE 'tail' END AS bucket, s
-         |  FROM sl JOIN cut USING (lang))
-         |SELECT lang, bucket, COUNT(*) AS n_docs,
-         |  ROUND(AVG(s), 4) AS avg_neg_logp,
-         |  ROUND(MIN(s), 4) AS min_s, ROUND(MAX(s), 4) AS max_s
-         |FROM b GROUP BY 1, 2
-         |ORDER BY 1, 2""".stripMargin,
-    "txt22_boilerplate" ->
+         |ORDER BY doc_id""".stripMargin)),
+    Entry("txt22_boilerplate", TextAnalysis.txt22Boilerplate(_), Sql(
       s"""WITH t AS (SELECT doc_id, $dkToks AS w FROM documents),
          |sh AS (SELECT doc_id, list_distinct(
          |    [w[i] || ' ' || w[i+1] || ' ' || w[i+2] || ' ' || w[i+3]
@@ -2692,8 +3588,34 @@ object SparkEntry {
          |  COALESCE(ROUND(CAST(n_boiler AS DOUBLE) / n_windows, 4), 0.0)
          |    AS boiler_frac
          |FROM documents d LEFT JOIN pd ON d.doc_id = pd.doc_id
-         |ORDER BY d.doc_id""".stripMargin,
-    "txt24_quality_panel" ->
+         |ORDER BY d.doc_id""".stripMargin)),
+    Entry("txt23_bigram_logprob", TextAnalysis.txt23BigramLogprob(_), Sql(
+      s"""WITH t AS (SELECT doc_id, $dkToks AS w FROM documents),
+         |tok AS (SELECT doc_id,
+         |  UNNEST(w) AS w, UNNEST(range(1, len(w) + 1)) AS pos FROM t),
+         |bi AS (SELECT doc_id, w,
+         |  LAG(w) OVER (PARTITION BY doc_id ORDER BY pos) AS prev
+         |  FROM tok),
+         |b AS (SELECT doc_id, prev, w FROM bi WHERE prev IS NOT NULL),
+         |cbig AS (SELECT prev, w, COUNT(*) AS c_big FROM b GROUP BY 1, 2),
+         |cprev AS (SELECT prev, CAST(SUM(c_big) AS BIGINT) AS c_prev
+         |  FROM cbig GROUP BY prev),
+         |cuni AS (SELECT w, COUNT(*) AS c_uni FROM tok GROUP BY w),
+         |tot AS (SELECT CAST(COUNT(*) AS DOUBLE) AS t_uni FROM tok)
+         |SELECT doc_id, COUNT(*) AS n_bigrams,
+         |  ROUND(AVG(-LN(
+         |    0.7::DOUBLE * (CAST(c_big AS DOUBLE) / CAST(c_prev AS DOUBLE))
+         |    + (1.0::DOUBLE - 0.7::DOUBLE)
+         |      * (CAST(c_uni AS DOUBLE) / t_uni))), 4)
+         |    AS avg_neg_logp2
+         |FROM b
+         |JOIN cbig USING (prev, w)
+         |JOIN cprev USING (prev)
+         |JOIN cuni USING (w)
+         |CROSS JOIN tot
+         |GROUP BY doc_id
+         |ORDER BY doc_id""".stripMargin)),
+    Entry("txt24_quality_panel", TextAnalysis.txt24QualityPanel, Sql(
       s"""WITH t AS (SELECT doc_id, $dkToks AS w FROM documents),
          |s AS (SELECT doc_id, w,
          |  [w[i] || ' ' || w[i+1] FOR i IN RANGE(1, len(w))] AS bgs,
@@ -2728,8 +3650,8 @@ object SparkEntry {
          |    AND mean_tok_len >= 3 AND mean_tok_len <= 10
          |    AND symbol_ratio < 0.1 AND n_stop_distinct >= 2 AS passes
          |FROM p
-         |ORDER BY doc_id""".stripMargin,
-    "rep01_corpus_report" ->
+         |ORDER BY doc_id""".stripMargin)),
+    Entry("rep01_corpus_report", TextAnalysis.rep01CorpusReport, Sql(
       s"""WITH t AS (SELECT doc_id, source, lang, $dkToks AS w FROM documents),
          |s AS (SELECT doc_id, source, lang,
          |  [w[i] || ' ' || w[i+1] FOR i IN RANGE(1, len(w))] AS bgs,
@@ -2774,173 +3696,8 @@ object SparkEntry {
          |  ROUND(AVG(CAST(n_tokens AS DOUBLE)), 4) AS avg_tokens
          |FROM v
          |GROUP BY source
-         |ORDER BY source""".stripMargin,
-    "xref08_bridges" ->
-      """WITH ids AS (
-        |  SELECT 'customer' AS source, LOWER(REPLACE(c_name, 'Customer#', '')) AS key,
-        |    CAST(c_custkey AS VARCHAR) AS source_id FROM customer
-        |  UNION ALL
-        |  SELECT 'supplier', LOWER(REPLACE(s_name, 'Supplier#', '')),
-        |    CAST(s_suppkey AS VARCHAR) FROM supplier
-        |  UNION ALL
-        |  SELECT 'part', LOWER(p_name), CAST(p_partkey AS VARCHAR) FROM part)
-        |SELECT a.source AS source_1, a.source_id AS id_1,
-        |  b.source AS source_2, b.source_id AS id_2, a.key AS bridge_id
-        |FROM ids a JOIN ids b ON a.key = b.key AND a.source < b.source
-        |ORDER BY source_1, source_2, bridge_id, id_1, id_2""".stripMargin,
-    // xref09: reduction ratio + pairs completeness of two blocking
-    // schemes vs the exact-dup gold set. The shingle candidates come
-    // from string trigrams here vs 64-bit shingle hashes in Spark —
-    // identical pair sets absent a hash collision (the dedup03/10
-    // equivalence argument; collision odds ~2^-40 at this vocabulary).
-    // xref10: fig2's UpSet matrix — CUBE replays as GROUP BY CUBE
-    // with GROUPING() markers; the unified CTE is xref03's verbatim.
-    "xref10_upset_overlap" ->
-      """WITH spine AS (
-        |  SELECT DISTINCT entity_id FROM (
-        |    SELECT CAST(c_custkey AS BIGINT) AS entity_id FROM customer
-        |    UNION ALL SELECT CAST(o_custkey AS BIGINT) FROM orders
-        |    UNION ALL SELECT CAST(user_id AS BIGINT) FROM events) u),
-        |profile AS (SELECT CAST(c_custkey AS BIGINT) AS p_id FROM customer),
-        |orderagg AS (SELECT CAST(o_custkey AS BIGINT) AS o_id,
-        |  ROUND(SUM(o_totalprice), 4) AS total_spent FROM orders GROUP BY 1),
-        |eventagg AS (SELECT CAST(user_id AS BIGINT) AS e_id FROM events GROUP BY 1),
-        |unified AS (
-        |  SELECT entity_id, p_id IS NOT NULL AS has_profile,
-        |    o_id IS NOT NULL AS has_orders, e_id IS NOT NULL AS has_events,
-        |    COALESCE(total_spent, 0.0) AS total_spent
-        |  FROM spine
-        |  LEFT JOIN profile ON entity_id = p_id
-        |  LEFT JOIN orderagg ON entity_id = o_id
-        |  LEFT JOIN eventagg ON entity_id = e_id)
-        |SELECT has_profile, has_orders, has_events,
-        |  CAST(GROUPING(has_profile) AS BIGINT) AS g_profile,
-        |  CAST(GROUPING(has_orders) AS BIGINT) AS g_orders,
-        |  CAST(GROUPING(has_events) AS BIGINT) AS g_events,
-        |  COUNT(*) AS n_entities, ROUND(SUM(total_spent), 4) AS total_value
-        |FROM unified
-        |GROUP BY CUBE(has_profile, has_orders, has_events)
-        |ORDER BY g_profile, g_orders, g_events,
-        |  has_profile, has_orders, has_events""".stripMargin,
-    // xref11: fig5's domain×ontology reach matrix over xref07's
-    // linkage (the CTE chain is xref07's verbatim), topic domain =
-    // modal p_type with deterministic tiebreak, pivot as FILTERed
-    // conditional counts.
-    "xref11_ontology_reach" ->
-      s"""WITH topics AS (SELECT DISTINCT UNNEST(string_split(p_name, ' ')) AS topic
-         |  FROM part),
-         |vocab AS (SELECT DISTINCT UNNEST($dkToks) AS term FROM documents),
-         |lex(term) AS (VALUES ('join'), ('scan'), ('filter'), ('sort'),
-         |  ('merge'), ('hash'), ('window'), ('stream'), ('batch'), ('query')),
-         |exact AS (SELECT topic, 'corpus_vocab' AS ontology, term,
-         |    1.0::DOUBLE AS sim
-         |  FROM topics JOIN vocab ON LOWER(topic) = LOWER(term)),
-         |fuzzy AS (SELECT topic, 'lexicon' AS ontology, term,
-         |    jaro_winkler_similarity(LOWER(topic), LOWER(term)) AS sim
-         |  FROM topics CROSS JOIN lex
-         |  WHERE jaro_winkler_similarity(LOWER(topic), LOWER(term)) >= 0.65),
-         |u AS (SELECT * FROM exact UNION ALL SELECT * FROM fuzzy),
-         |best AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY topic
-         |    ORDER BY sim DESC, ontology, term) AS rn FROM u),
-         |linked AS (SELECT topic, ontology, ROUND(sim, 4) AS similarity
-         |  FROM best WHERE rn = 1),
-         |tcount AS (SELECT topic, p_type AS domain, COUNT(*) AS n FROM
-         |  (SELECT UNNEST(string_split(p_name, ' ')) AS topic, p_type FROM part)
-         |  GROUP BY 1, 2),
-         |tmap AS (SELECT topic, domain FROM (SELECT *, ROW_NUMBER() OVER (
-         |    PARTITION BY topic ORDER BY n DESC, domain) AS rn FROM tcount)
-         |  WHERE rn = 1)
-         |SELECT domain,
-         |  COUNT(*) FILTER (WHERE ontology = 'corpus_vocab') AS n_corpus_vocab,
-         |  COUNT(*) FILTER (WHERE ontology = 'lexicon') AS n_lexicon,
-         |  COUNT(*) FILTER (WHERE ontology = 'corpus_vocab') +
-         |    COUNT(*) FILTER (WHERE ontology = 'lexicon') AS total
-         |FROM linked JOIN tmap USING (topic)
-         |WHERE similarity >= 0.65
-         |GROUP BY domain
-         |ORDER BY total DESC, domain""".stripMargin,
-    "xref09_blocking_quality" ->
-      s"""WITH t AS (SELECT doc_id, n_chars, $dkToks AS w FROM documents),
-         |fp AS (SELECT doc_id, $dkBagFp AS f FROM documents),
-         |gold AS (SELECT x.doc_id AS a, y.doc_id AS b
-         |  FROM fp x JOIN fp y ON x.f = y.f AND x.doc_id < y.doc_id),
-         |sh AS (SELECT doc_id, n_chars, $dkShingles3 AS s FROM t WHERE len(w) >= 3),
-         |ix AS (SELECT doc_id, n_chars, UNNEST(s) AS g FROM sh),
-         |kept AS (SELECT ix.doc_id, ix.n_chars, ix.g FROM ix
-         |  JOIN (SELECT g FROM (SELECT g, COUNT(*) AS df FROM ix GROUP BY g)
-         |        WHERE df <= 10000) d USING (g)),
-         |ca AS (SELECT DISTINCT x.doc_id AS a, y.doc_id AS b
-         |  FROM kept x JOIN kept y ON x.g = y.g AND x.doc_id < y.doc_id
-         |  AND ABS(x.n_chars - y.n_chars) <= 40),
-         |cb AS (SELECT x.doc_id AS a, y.doc_id AS b
-         |  FROM t x JOIN t y ON x.doc_id < y.doc_id
-         |  AND ABS(x.n_chars - y.n_chars) <= 40),
-         |n AS (SELECT CAST(COUNT(*) AS DOUBLE) AS nd FROM documents),
-         |gt AS (SELECT COUNT(*) AS gold_total FROM gold),
-         |m AS (
-         |  SELECT 'content_shingle' AS scheme,
-         |    (SELECT COUNT(*) FROM ca) AS n_candidates,
-         |    (SELECT COUNT(*) FROM gold g WHERE EXISTS
-         |       (SELECT 1 FROM ca WHERE ca.a = g.a AND ca.b = g.b)) AS gold_covered
-         |  UNION ALL
-         |  SELECT 'length_band',
-         |    (SELECT COUNT(*) FROM cb),
-         |    (SELECT COUNT(*) FROM gold g WHERE EXISTS
-         |       (SELECT 1 FROM cb WHERE cb.a = g.a AND cb.b = g.b)))
-         |SELECT scheme, n_candidates,
-         |  ROUND(1.0::DOUBLE - n_candidates / (nd * (nd - 1) / 2), 4)
-         |    AS reduction_ratio,
-         |  gold_total, gold_covered,
-         |  ROUND(gold_covered / CAST(gold_total AS DOUBLE), 4) AS completeness
-         |FROM m CROSS JOIN n CROSS JOIN gt
-         |ORDER BY scheme""".stripMargin,
-    "xref07_tiered_linkage" ->
-      s"""WITH topics AS (SELECT DISTINCT UNNEST(string_split(p_name, ' ')) AS topic
-         |  FROM part),
-         |vocab AS (SELECT DISTINCT UNNEST($dkToks) AS term FROM documents),
-         |lex(term) AS (VALUES ('join'), ('scan'), ('filter'), ('sort'),
-         |  ('merge'), ('hash'), ('window'), ('stream'), ('batch'), ('query')),
-         |exact AS (SELECT topic, 'corpus_vocab' AS ontology, term,
-         |    1.0::DOUBLE AS sim
-         |  FROM topics JOIN vocab ON LOWER(topic) = LOWER(term)),
-         |fuzzy AS (SELECT topic, 'lexicon' AS ontology, term,
-         |    jaro_winkler_similarity(LOWER(topic), LOWER(term)) AS sim
-         |  FROM topics CROSS JOIN lex
-         |  WHERE jaro_winkler_similarity(LOWER(topic), LOWER(term)) >= 0.65),
-         |u AS (SELECT * FROM exact UNION ALL SELECT * FROM fuzzy),
-         |best AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY topic
-         |    ORDER BY sim DESC, ontology, term) AS rn FROM u)
-         |SELECT topic, ontology, term AS matched_term,
-         |  ROUND(sim, 4) AS similarity
-         |FROM best WHERE rn = 1
-         |ORDER BY topic""".stripMargin,
-    "txt23_bigram_logprob" ->
-      s"""WITH t AS (SELECT doc_id, $dkToks AS w FROM documents),
-         |tok AS (SELECT doc_id,
-         |  UNNEST(w) AS w, UNNEST(range(1, len(w) + 1)) AS pos FROM t),
-         |bi AS (SELECT doc_id, w,
-         |  LAG(w) OVER (PARTITION BY doc_id ORDER BY pos) AS prev
-         |  FROM tok),
-         |b AS (SELECT doc_id, prev, w FROM bi WHERE prev IS NOT NULL),
-         |cbig AS (SELECT prev, w, COUNT(*) AS c_big FROM b GROUP BY 1, 2),
-         |cprev AS (SELECT prev, CAST(SUM(c_big) AS BIGINT) AS c_prev
-         |  FROM cbig GROUP BY prev),
-         |cuni AS (SELECT w, COUNT(*) AS c_uni FROM tok GROUP BY w),
-         |tot AS (SELECT CAST(COUNT(*) AS DOUBLE) AS t_uni FROM tok)
-         |SELECT doc_id, COUNT(*) AS n_bigrams,
-         |  ROUND(AVG(-LN(
-         |    0.7::DOUBLE * (CAST(c_big AS DOUBLE) / CAST(c_prev AS DOUBLE))
-         |    + (1.0::DOUBLE - 0.7::DOUBLE)
-         |      * (CAST(c_uni AS DOUBLE) / t_uni))), 4)
-         |    AS avg_neg_logp2
-         |FROM b
-         |JOIN cbig USING (prev, w)
-         |JOIN cprev USING (prev)
-         |JOIN cuni USING (w)
-         |CROSS JOIN tot
-         |GROUP BY doc_id
-         |ORDER BY doc_id""".stripMargin,
-    "eval03_langid_confusion" ->
+         |ORDER BY source""".stripMargin)),
+    Entry("eval03_langid_confusion", Evaluation.eval03LangidConfusion, Sql(
       """WITH t AS (SELECT doc_id, lang,
         |  string_split(trim(regexp_replace(text, '\s+', ' ', 'g')), ' ') AS w
         |  FROM documents),
@@ -2963,10 +3720,10 @@ object SparkEntry {
         |  ROUND(CAST(n_docs AS DOUBLE)
         |    / SUM(n_docs) OVER (PARTITION BY labeled_lang), 4) AS frac_of_label
         |FROM m
-        |ORDER BY labeled_lang, pred_lang""".stripMargin,
+        |ORDER BY labeled_lang, pred_lang""".stripMargin)),
     // eval04: centroid silhouette — sim04's centroid CTE, then one
     // conditional-MAX fold per vector (own vs nearest-other cosine).
-    "eval04_cluster_quality" ->
+    Entry("eval04_cluster_quality", Evaluation.eval04ClusterQuality, Sql(
       s"""WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
          |flat AS (SELECT label, generate_subscripts(v, 1) AS pos, UNNEST(v) AS x FROM e),
          |cpos AS (SELECT label, pos, AVG(x) AS c FROM flat GROUP BY 1, 2),
@@ -2983,7 +3740,59 @@ object SparkEntry {
          |  ROUND(AVG(other), 4) AS avg_other,
          |  ROUND(AVG(CASE WHEN own > other THEN 1.0 ELSE 0.0 END), 4) AS purity
          |FROM p GROUP BY label
-         |ORDER BY label""".stripMargin,
+         |ORDER BY label""".stripMargin)),
+    Entry("pipe01_pretrain_corpus", Pipeline.pipe01PretrainCorpus(_), Sql(
+      """WITH r AS (SELECT doc_id, source,
+        |  text || ' {{cite:c' || CAST(doc_id AS VARCHAR)
+        |    || '}}  see  fig. {{figure:f' || CAST(doc_id AS VARCHAR)
+        |    || '}}' || chr(10) || chr(10) || chr(10) || chr(10)
+        |    || 'tail {{formula:eq' || CAST(doc_id AS VARCHAR) || '}} end  '
+        |    AS raw FROM documents),
+        |c AS (SELECT doc_id, source,
+        |  TRIM(regexp_replace(regexp_replace(regexp_replace(raw,
+        |    '\{\{(cite|formula|figure|table):[^}]*\}\}', '', 'g'),
+        |    '[ \t]+', ' ', 'g'),
+        |    '\n{3,}', chr(10) || chr(10), 'g')) AS text FROM r),
+        |tk AS (SELECT doc_id, source,
+        |  string_split(trim(regexp_replace(text, '\s+', ' ', 'g')), ' ') AS toks
+        |  FROM c),
+        |sig AS (SELECT doc_id,
+        |  len(toks) AS n_tokens,
+        |  ROUND(CAST(list_aggregate(list_transform(toks, t -> LENGTH(t)), 'sum')
+        |    AS DOUBLE) / len(toks), 4) AS mean_tok_len,
+        |  ROUND(CAST(len(list_filter(toks,
+        |    t -> NOT regexp_matches(t, '[A-Za-z0-9]'))) AS DOUBLE)
+        |    / len(toks), 4) AS symbol_ratio,
+        |  len(list_intersect(list_distinct(toks),
+        |    ['the','a','of','and'])) AS n_stop_distinct
+        |  FROM tk),
+        |pass AS (SELECT doc_id FROM sig
+        |  WHERE n_tokens >= 50 AND n_tokens <= 100000
+        |    AND mean_tok_len >= 3 AND mean_tok_len <= 10
+        |    AND symbol_ratio < 0.1 AND n_stop_distinct >= 2),
+        |fp AS (SELECT tk.doc_id, source, toks,
+        |  md5(array_to_string(list_sort(list_distinct(toks)), ' ')) AS fp
+        |  FROM tk JOIN pass ON tk.doc_id = pass.doc_id),
+        |surv AS (SELECT doc_id, source, toks FROM (
+        |  SELECT *, ROW_NUMBER() OVER (PARTITION BY fp ORDER BY doc_id) AS rn
+        |  FROM fp) WHERE rn = 1),
+        |st AS (SELECT doc_id, source, toks,
+        |  UNNEST(range(0, GREATEST(len(toks) - 1, 0) + 1, 40)) AS start
+        |  FROM surv),
+        |ch AS (SELECT source, CAST(doc_id // 200 AS BIGINT) AS shard, doc_id,
+        |  CAST(start / 40 AS BIGINT) AS chunk_id,
+        |  CAST(len(list_slice(toks, start + 1, start + 50)) AS BIGINT) AS chunk_len
+        |  FROM st),
+        |cum AS (SELECT source, shard, chunk_len,
+        |  SUM(chunk_len) OVER (PARTITION BY source, shard
+        |    ORDER BY doc_id, chunk_id
+        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
+        |  FROM ch)
+        |SELECT source, shard, CAST((cum - chunk_len) // 512 AS BIGINT) AS bin_id,
+        |  COUNT(*) AS n_chunks, CAST(SUM(chunk_len) AS BIGINT) AS bin_tokens
+        |FROM cum
+        |GROUP BY 1, 2, 3
+        |ORDER BY source, shard, bin_id""".stripMargin)),
     // The full funnel: plant+clean (txt19) → Gopher pass (txt20) →
     // bag-fp dedup keep-min (dedup02) → chunk (txt11) → pack (txt16),
     // each stage the same fragment its standalone oracle uses.
@@ -2991,7 +3800,7 @@ object SparkEntry {
     // (keeping text), txt15's scoring + txt25's terciles over the
     // CLEANED corpus, samp07's exhaustive-pair components among the
     // survivors, and the per-(source, bucket) weighted report.
-    "pipe02_weighted_corpus" ->
+    Entry("pipe02_weighted_corpus", Pipeline.pipe02WeightedCorpus(_), Sql(
       s"""WITH RECURSIVE t0 AS (SELECT doc_id, source, lang, string_split(
          |    'promo ' || source || ' banner. ' || text || '. copyright footer',
          |    '. ') AS ls FROM documents),
@@ -3049,309 +3858,50 @@ object SparkEntry {
          |  ROUND(CAST(SUM(s_units) AS DOUBLE) / SUM(k) / 10000.0, 4)
          |    AS avg_neg_logp
          |FROM pc GROUP BY 1, 2
-         |ORDER BY 1, 2""".stripMargin,
-    "pipe01_pretrain_corpus" ->
-      """WITH r AS (SELECT doc_id, source,
-        |  text || ' {{cite:c' || CAST(doc_id AS VARCHAR)
-        |    || '}}  see  fig. {{figure:f' || CAST(doc_id AS VARCHAR)
-        |    || '}}' || chr(10) || chr(10) || chr(10) || chr(10)
-        |    || 'tail {{formula:eq' || CAST(doc_id AS VARCHAR) || '}} end  '
-        |    AS raw FROM documents),
-        |c AS (SELECT doc_id, source,
-        |  TRIM(regexp_replace(regexp_replace(regexp_replace(raw,
-        |    '\{\{(cite|formula|figure|table):[^}]*\}\}', '', 'g'),
-        |    '[ \t]+', ' ', 'g'),
-        |    '\n{3,}', chr(10) || chr(10), 'g')) AS text FROM r),
-        |tk AS (SELECT doc_id, source,
-        |  string_split(trim(regexp_replace(text, '\s+', ' ', 'g')), ' ') AS toks
-        |  FROM c),
-        |sig AS (SELECT doc_id,
-        |  len(toks) AS n_tokens,
-        |  ROUND(CAST(list_aggregate(list_transform(toks, t -> LENGTH(t)), 'sum')
-        |    AS DOUBLE) / len(toks), 4) AS mean_tok_len,
-        |  ROUND(CAST(len(list_filter(toks,
-        |    t -> NOT regexp_matches(t, '[A-Za-z0-9]'))) AS DOUBLE)
-        |    / len(toks), 4) AS symbol_ratio,
-        |  len(list_intersect(list_distinct(toks),
-        |    ['the','a','of','and'])) AS n_stop_distinct
-        |  FROM tk),
-        |pass AS (SELECT doc_id FROM sig
-        |  WHERE n_tokens >= 50 AND n_tokens <= 100000
-        |    AND mean_tok_len >= 3 AND mean_tok_len <= 10
-        |    AND symbol_ratio < 0.1 AND n_stop_distinct >= 2),
-        |fp AS (SELECT tk.doc_id, source, toks,
-        |  md5(array_to_string(list_sort(list_distinct(toks)), ' ')) AS fp
-        |  FROM tk JOIN pass ON tk.doc_id = pass.doc_id),
-        |surv AS (SELECT doc_id, source, toks FROM (
-        |  SELECT *, ROW_NUMBER() OVER (PARTITION BY fp ORDER BY doc_id) AS rn
-        |  FROM fp) WHERE rn = 1),
-        |st AS (SELECT doc_id, source, toks,
-        |  UNNEST(range(0, GREATEST(len(toks) - 1, 0) + 1, 40)) AS start
-        |  FROM surv),
-        |ch AS (SELECT source, CAST(doc_id // 200 AS BIGINT) AS shard, doc_id,
-        |  CAST(start / 40 AS BIGINT) AS chunk_id,
-        |  CAST(len(list_slice(toks, start + 1, start + 50)) AS BIGINT) AS chunk_len
-        |  FROM st),
-        |cum AS (SELECT source, shard, chunk_len,
-        |  SUM(chunk_len) OVER (PARTITION BY source, shard
-        |    ORDER BY doc_id, chunk_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-        |  FROM ch)
-        |SELECT source, shard, CAST((cum - chunk_len) // 512 AS BIGINT) AS bin_id,
-        |  COUNT(*) AS n_chunks, CAST(SUM(chunk_len) AS BIGINT) AS bin_tokens
-        |FROM cum
-        |GROUP BY 1, 2, 3
-        |ORDER BY source, shard, bin_id""".stripMargin,
-    "ing02_scd2_history" ->
-      """SELECT o_custkey,
-        |  CAST(ROW_NUMBER() OVER w AS BIGINT) AS version,
-        |  o_orderkey,
-        |  o_orderdate AS valid_from,
-        |  LEAD(o_orderdate, 1) OVER w AS valid_to,
-        |  LEAD(o_orderdate, 1) OVER w IS NULL AS is_current,
-        |  o_totalprice
-        |FROM orders
-        |WHERE o_custkey % 50 = 0
-        |WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
-        |ORDER BY o_custkey, version""".stripMargin,
-    "txt21_dsir_importance" ->
-      s"""WITH t AS (SELECT doc_id, source = 'src0' AS is_tgt, $dkToks AS w FROM documents),
-         |tok AS (SELECT doc_id, is_tgt, UNNEST(w) AS w FROM t),
-         |cnt AS (SELECT w, COUNT(*) AS c_raw,
-         |  COUNT(*) FILTER (WHERE is_tgt) AS c_tgt FROM tok GROUP BY w),
-         |tot AS (SELECT CAST(SUM(c_raw) AS DOUBLE) AS t_raw,
-         |  CAST(SUM(c_tgt) AS DOUBLE) AS t_tgt,
-         |  CAST(COUNT(*) AS DOUBLE) AS vocab FROM cnt)
-         |SELECT doc_id, COUNT(*) AS n_tokens,
-         |  ROUND(AVG(LN((CAST(c_tgt AS DOUBLE) + 1.0) / (t_tgt + vocab))
-         |          - LN(CAST(c_raw AS DOUBLE) / t_raw)), 4) AS avg_llr
-         |FROM tok JOIN cnt USING (w) CROSS JOIN tot
-         |GROUP BY doc_id
-         |ORDER BY doc_id""".stripMargin,
-    "samp02_source_mixture" ->
-      """WITH d AS (SELECT source, doc_id, n_chars,
-        |  doc_id % 100 < 95 - TRY_CAST(regexp_extract(source, '(\d+)$', 1) AS BIGINT) * 4
-        |    AS kept
-        |  FROM documents)
-        |SELECT source,
-        |  COUNT(*) AS n_docs,
-        |  COUNT(*) FILTER (WHERE kept) AS n_sampled,
-        |  ROUND(CAST(COUNT(*) FILTER (WHERE kept) AS DOUBLE) / COUNT(*), 4)
-        |    AS sample_rate,
-        |  ROUND(AVG(n_chars) FILTER (WHERE kept), 4) AS avg_chars_sampled
-        |FROM d
-        |GROUP BY source
-        |ORDER BY source""".stripMargin,
-    // Byte-based, not char-based: payload slicing happens on the UTF-8
-    // bytes (hex(encode(text)) = 2 hex chars per byte), so the oracle
-    // agrees with Spark's binary substring for ANY corpus, not just
-    // ASCII. md5 runs over the hex VARCHAR on both engines (DuckDB's
-    // md5/substring cannot take BLOBs).
-    // mm03: DuckDB replays the U8-PCM windowing over hex(payload) —
-    // 1-indexed list lambdas, ('0x'||h)::INT decode, GREATEST guards
-    // mirroring the Spark side's empty-window handling.
-    // mm04: mm03's rms chain + a per-doc LAG window + one fold; the
-    // 4dp-rounded rms values are bit-identical across engines
-    // (mm03's proven property) so the cut threshold cannot diverge.
-    "mm04_scene_cuts" ->
-      """WITH m AS (SELECT doc_id, hex(encode(text)) AS h FROM documents),
-        |w AS (SELECT doc_id, h,
-        |    CAST(CEIL(length(h) / 64.0) AS BIGINT) AS n_windows FROM m),
-        |f AS (SELECT doc_id, h,
-        |    UNNEST(generate_series(0, GREATEST(n_windows, 1) - 1)) AS win_idx
-        |  FROM w),
-        |s AS (SELECT doc_id, win_idx,
-        |    list_transform(
-        |      regexp_extract_all(substring(h, CAST(win_idx * 64 + 1 AS BIGINT), 64), '..'),
-        |      x -> ('0x' || x)::INTEGER - 128) AS samples
-        |  FROM f),
-        |feat AS (SELECT doc_id, win_idx,
-        |    ROUND(SQRT(COALESCE(list_sum(list_transform(samples,
-        |        x -> CAST(x * x AS DOUBLE))), 0) /
-        |      GREATEST(len(samples), 1)), 4) AS rms
-        |  FROM s),
-        |d AS (SELECT doc_id, rms,
-        |    LAG(rms) OVER (PARTITION BY doc_id ORDER BY win_idx) AS prev
-        |  FROM feat),
-        |c AS (SELECT doc_id,
-        |    CASE WHEN prev IS NOT NULL AND ABS(rms - prev) >= 8.0
-        |      THEN 1 ELSE 0 END AS is_cut FROM d)
-        |SELECT doc_id, COUNT(*) AS n_frames,
-        |  CAST(SUM(is_cut) AS BIGINT) AS n_cuts,
-        |  CAST(SUM(is_cut) + 1 AS BIGINT) AS n_segments,
-        |  ROUND(COUNT(*) / CAST(SUM(is_cut) + 1 AS DOUBLE), 4)
-        |    AS avg_segment_frames
-        |FROM c GROUP BY doc_id
-        |ORDER BY doc_id""".stripMargin,
-    // mm05: mm03's hex window-rms chain re-used to build the cyclic
-    // 63-bit dHash per doc, then the EXHAUSTIVE pairwise Hamming
-    // form — the banded Spark plan must reproduce it exactly (the
-    // 4-band pigeonhole guarantee at maxHamming = 3).
-    "mm05_phash_neardup" ->
-      """WITH m AS (SELECT doc_id, hex(encode(text)) AS h FROM documents),
-        |w AS (SELECT doc_id, h,
-        |    CAST(CEIL(length(h) / 64.0) AS BIGINT) AS n_windows FROM m),
-        |f AS (SELECT doc_id, h,
-        |    UNNEST(generate_series(0, GREATEST(n_windows, 1) - 1)) AS win_idx
-        |  FROM w),
-        |s AS (SELECT doc_id, win_idx,
-        |    list_transform(
-        |      regexp_extract_all(substring(h, CAST(win_idx * 64 + 1 AS BIGINT), 64), '..'),
-        |      x -> ('0x' || x)::INTEGER - 128) AS samples
-        |  FROM f),
-        |feat AS (SELECT doc_id, win_idx,
-        |    ROUND(SQRT(COALESCE(list_sum(list_transform(samples,
-        |        x -> CAST(x * x AS DOUBLE))), 0) /
-        |      GREATEST(len(samples), 1)), 4) AS rms
-        |  FROM s),
-        |r AS (SELECT doc_id, list(rms ORDER BY win_idx) AS rl FROM feat GROUP BY doc_id),
-        |hh AS (SELECT doc_id,
-        |    CASE WHEN len(rl) >= 2 THEN
-        |      CAST(list_sum(list_transform(range(0, 63),
-        |        i -> CASE WHEN rl[CAST(((i + 1) * GREATEST(1, len(rl) // 64))
-        |                            % len(rl) AS BIGINT) + 1] >
-        |                       rl[CAST((i * GREATEST(1, len(rl) // 64))
-        |                            % len(rl) AS BIGINT) + 1]
-        |             THEN (CAST(1 AS BIGINT) << CAST(i AS INTEGER))
-        |             ELSE CAST(0 AS BIGINT) END)) AS BIGINT)
-        |    ELSE 0 END AS h FROM r)
-        |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-        |  CAST(bit_count(xor(a.h, b.h)) AS BIGINT) AS hamming
-        |FROM hh a JOIN hh b ON a.doc_id < b.doc_id
-        |WHERE a.h <> 0 AND b.h <> 0
-        |  AND bit_count(xor(a.h, b.h)) <= 3
-        |ORDER BY 1, 2""".stripMargin,
-    "mm03_audio_features" ->
-      """WITH m AS (SELECT doc_id, hex(encode(text)) AS h FROM documents),
-        |w AS (SELECT doc_id, h,
-        |    CAST(CEIL(length(h) / 64.0) AS BIGINT) AS n_windows FROM m),
-        |f AS (SELECT doc_id, h,
-        |    UNNEST(generate_series(0, GREATEST(n_windows, 1) - 1)) AS win_idx
-        |  FROM w),
-        |s AS (SELECT doc_id, win_idx,
-        |    list_transform(
-        |      regexp_extract_all(substring(h, CAST(win_idx * 64 + 1 AS BIGINT), 64), '..'),
-        |      x -> ('0x' || x)::INTEGER - 128) AS samples
-        |  FROM f),
-        |feat AS (SELECT doc_id, win_idx,
-        |    CAST(len(samples) AS BIGINT) AS n_samples,
-        |    ROUND(SQRT(COALESCE(list_sum(list_transform(samples,
-        |        x -> CAST(x * x AS DOUBLE))), 0) /
-        |      GREATEST(len(samples), 1)), 4) AS rms,
-        |    CAST(CASE WHEN len(samples) < 2 THEN 0 ELSE
-        |      list_sum(list_transform(generate_series(2, len(samples)),
-        |        i -> CASE WHEN (samples[i-1] >= 0) != (samples[i] >= 0)
-        |             THEN 1 ELSE 0 END)) END AS BIGINT) AS n_zero_cross,
-        |    CAST(COALESCE(list_max(list_transform(samples, x -> abs(x))), 0)
-        |      AS BIGINT) AS peak
-        |  FROM s)
-        |SELECT doc_id, win_idx, n_samples, rms, n_zero_cross, peak
-        |FROM feat
-        |ORDER BY doc_id, win_idx""".stripMargin,
-    "mm02_frame_sample" ->
-      """WITH f AS (SELECT doc_id, hex(encode(text)) AS h,
-        |    CAST(CEIL(octet_length(encode(text)) / 64.0) AS BIGINT) AS n_frames
-        |  FROM documents),
-        |x AS (SELECT doc_id, h, n_frames,
-        |    UNNEST(range(0, GREATEST(n_frames, 1), 4)) AS frame_idx FROM f)
-        |SELECT doc_id, frame_idx, n_frames,
-        |  CAST(LENGTH(substring(h, CAST(frame_idx * 128 + 1 AS INTEGER), 128)) // 2
-        |    AS BIGINT) AS frame_len,
-        |  md5(substring(h, CAST(frame_idx * 128 + 1 AS INTEGER), 128))
-        |    AS frame_fp
-        |FROM x
-        |ORDER BY doc_id, frame_idx""".stripMargin,
-    "samp03_temperature_mixture" ->
-      """WITH c AS (SELECT source, COUNT(*) AS n_docs FROM documents GROUP BY 1),
-        |t AS (SELECT CAST(SUM(n_docs) AS BIGINT) AS n_total, MAX(n_docs) AS n_max FROM c)
-        |SELECT source, n_docs,
-        |  ROUND(CAST(n_docs AS DOUBLE) / n_total, 6) AS natural_share,
-        |  ROUND(SQRT(CAST(n_docs AS DOUBLE)) / SQRT(CAST(n_max AS DOUBLE)), 6)
-        |    AS temp_weight_rel
-        |FROM c CROSS JOIN t
-        |ORDER BY source""".stripMargin,
-    // samp04: the oracle computes the same global prefix sum with one
-    // window — exactness of the distributed 4-step prefix sum is the
-    // thing under test. Spark's default orderBy frame is RANGE, but
-    // doc_id makes the sort key unique so RANGE == ROWS.
-    "samp04_token_budget" ->
-      """WITH s AS (
-        |  SELECT doc_id,
-        |    CAST(length(text) - length(replace(text, ' ', '')) + 1 AS BIGINT)
-        |      AS tokens,
-        |    CAST(length(replace(text, ' ', '')) AS DOUBLE) /
-        |      (length(text) - length(replace(text, ' ', '')) + 1) AS score
-        |  FROM documents),
-        |c AS (
-        |  SELECT doc_id, tokens,
-        |    CAST(SUM(tokens) OVER (ORDER BY score DESC, doc_id) AS BIGINT)
-        |      AS cum_tokens
-        |  FROM s)
-        |SELECT doc_id, tokens, cum_tokens FROM c WHERE cum_tokens <= 5000
-        |ORDER BY cum_tokens""".stripMargin,
-    // txt26: same literal '. ' split, distinct-doc df, anti-join, and
-    // in-order reassembly (LIST ... ORDER BY pos == the sorted-struct
-    // collect); fully-boilerplate docs keep md5('').
-    "txt26_line_dedup" ->
-      """WITH t AS (SELECT doc_id, string_split(
-        |    'promo ' || source || ' banner. ' || text || '. copyright footer',
-        |    '. ') AS ls FROM documents),
-        |l AS (SELECT doc_id, generate_subscripts(ls, 1) AS pos, UNNEST(ls) AS ln
-        |  FROM t),
-        |f AS (SELECT ln FROM (
-        |    SELECT ln, COUNT(DISTINCT doc_id) AS df FROM l GROUP BY ln)
-        |  WHERE df >= 3),
-        |k AS (SELECT l.doc_id, l.pos, l.ln FROM l
-        |  LEFT JOIN f ON l.ln = f.ln WHERE f.ln IS NULL),
-        |r AS (SELECT doc_id, COUNT(*) AS n_kept,
-        |    array_to_string(LIST(ln ORDER BY pos), '. ') AS txt
-        |  FROM k GROUP BY doc_id)
-        |SELECT t.doc_id, CAST(len(t.ls) AS BIGINT) AS n_lines,
-        |  CAST(COALESCE(r.n_kept, 0) AS BIGINT) AS n_kept,
-        |  md5(COALESCE(r.txt, '')) AS kept_fp
-        |FROM t LEFT JOIN r USING (doc_id)
-        |ORDER BY doc_id""".stripMargin,
-    // txt28: the oracle replays the window index over gram STRINGS
-    // (the Spark side keys 8-byte hashes — identical absent a 64-bit
-    // collision, the dedup13 contract); min(doc_id) is first-seen,
-    // strictly-smaller comparison marks repeats.
-    "txt28_ngram_novelty" ->
-      """WITH tk AS (SELECT doc_id,
-        |    string_split(trim(regexp_replace(text, '\s+', ' ', 'g')), ' ') AS w
-        |  FROM documents),
-        |g0 AS (SELECT doc_id, w, UNNEST(generate_series(1, len(w) - 7)) AS i
-        |  FROM tk WHERE len(w) >= 8),
-        |g AS (SELECT doc_id, array_to_string(w[i:i+7], ' ') AS gram FROM g0),
-        |f AS (SELECT gram, MIN(doc_id) AS first_doc FROM g GROUP BY gram),
-        |j AS (SELECT g.doc_id,
-        |    CASE WHEN f.first_doc < g.doc_id THEN 1 ELSE 0 END AS rep
-        |  FROM g JOIN f USING (gram))
-        |SELECT doc_id, COUNT(*) AS n_windows,
-        |  CAST(SUM(rep) AS BIGINT) AS n_repeated,
-        |  ROUND(CAST(SUM(rep) AS DOUBLE) / COUNT(*), 4) AS repeated_frac
-        |FROM j GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    // txt29: the oracle replays the hashing-trick classifier exactly —
-    // same md5-derived bucket, same multiplicative milli-weight mix,
-    // integer sum (no float associativity), one double division at
-    // the end. DuckDB parses the 8 hex chars via ('0x'||…)::BIGINT;
-    // Spark via conv(…,16,10).
-    "txt29_model_quality" ->
-      """WITH tk AS (SELECT doc_id,
-        |    string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS ws
-        |  FROM documents),
-        |f AS (SELECT doc_id, list_concat(ws,
-        |    CASE WHEN len(ws) >= 2
-        |      THEN list_transform(range(1, len(ws)), i -> ws[i] || ' ' || ws[i+1])
-        |      ELSE CAST([] AS VARCHAR[]) END) AS feats FROM tk),
-        |s AS (SELECT doc_id, CAST(len(feats) AS BIGINT) AS n_feats,
-        |    CAST(list_sum(list_transform(feats, f ->
-        |      ('0x' || substr(md5(f), 1, 8))::BIGINT % 4096 * 2654435761 % 2001 - 1000))
-        |      AS BIGINT) AS s_milli
-        |  FROM f)
-        |SELECT doc_id, n_feats,
-        |  ROUND(s_milli / 1000.0 / n_feats, 4) AS q_score,
-        |  (ROUND(s_milli / 1000.0 / n_feats, 4) > 0) AS keep
-        |FROM s ORDER BY doc_id""".stripMargin,
+         |ORDER BY 1, 2""".stripMargin)),
+    // pipe03: the funnel's three stages composed as one CTE chain —
+    // dedup07's contamination flag (unfiltered shingles), samp05's
+    // recursive-closure splits (len(w) >= 3 shingles, the pairs
+    // formulation), samp13's ranked quota, each stage's SQL text
+    // matching its standalone oracle.
+    Entry("pipe03_eval_suite", Pipeline.pipe03EvalSuite(_), Sql(
+      s"""WITH RECURSIVE t AS (SELECT doc_id, $dkToks AS w FROM documents),
+         |shc AS (SELECT doc_id, $dkShingles3 AS s FROM t),
+         |bench AS (SELECT DISTINCT UNNEST(s) AS s FROM shc WHERE doc_id < 10),
+         |corpus AS (SELECT doc_id, UNNEST(s) AS s FROM shc WHERE doc_id >= 10),
+         |contam AS (SELECT doc_id FROM corpus JOIN bench USING (s)
+         |  GROUP BY doc_id HAVING COUNT(*) >= 5),
+         |shp AS (SELECT doc_id, $dkShingles3 AS s FROM t WHERE len(w) >= 3),
+         |pairs AS (
+         |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
+         |  FROM shp a JOIN shp b ON a.doc_id < b.doc_id
+         |  WHERE $dkJac >= 0.5),
+         |edges AS (SELECT doc_a AS u, doc_b AS v FROM pairs
+         |  UNION ALL SELECT doc_b, doc_a FROM pairs),
+         |reach(u, lbl) AS (
+         |  SELECT u, u FROM (SELECT DISTINCT u FROM edges)
+         |  UNION
+         |  SELECT e.u, r.lbl FROM edges e JOIN reach r ON e.v = r.u),
+         |comp AS (SELECT u AS doc_id, MIN(lbl) AS cluster_id FROM reach GROUP BY u),
+         |sel AS (
+         |  SELECT d.doc_id, d.lang, COALESCE(c.cluster_id, d.doc_id) AS cluster_id
+         |  FROM documents d LEFT JOIN comp c USING (doc_id)
+         |  WHERE d.doc_id >= 10
+         |    AND d.doc_id NOT IN (SELECT doc_id FROM contam)),
+         |sp AS (SELECT doc_id, lang,
+         |  CASE WHEN cluster_id % 10 < 8 THEN 'train'
+         |       WHEN cluster_id % 10 = 8 THEN 'val'
+         |       ELSE 'test' END AS split
+         |  FROM sel),
+         |u AS (SELECT split, lang, doc_id,
+         |    ('0x' || substr(md5(CAST(doc_id AS VARCHAR) || ':7'), 1, 8))::BIGINT AS u
+         |  FROM sp),
+         |r AS (SELECT split, lang, doc_id,
+         |    ROW_NUMBER() OVER (PARTITION BY split, lang ORDER BY u, doc_id) AS rank
+         |  FROM u)
+         |SELECT split, lang, CAST(rank AS BIGINT) AS rank, doc_id
+         |FROM r WHERE rank <= 20
+         |ORDER BY split, lang, rank""".stripMargin)),
     // txt30: the trainer replay — the shared feature CTEs explode to
     // (doc_id, bucket), the shared Gopher CTEs label each doc, counts
     // group per bucket, and the NB log-odds transform mirrors the
@@ -3359,7 +3909,7 @@ object SparkEntry {
     // per-value math, no cross-row float sum; the one rounding is the
     // final milli integer, so a 1-ulp ln divergence would need to
     // land within ~1e-13 of a .5-milli boundary to flake).
-    "txt30_quality_trainer" ->
+    Entry("txt30_quality_trainer", TextAnalysis.txt30QualityTrainer(_), Sql(
       s"""WITH $dkFeatureCtes,
          |fb AS (SELECT doc_id, UNNEST(list_transform(feats, ft ->
          |    ('0x' || substr(md5(ft), 1, 8))::BIGINT % 4096)) AS bucket FROM f),
@@ -3377,762 +3927,55 @@ object SparkEntry {
          |    ln(CAST(n_keep + 1 AS DOUBLE) / CAST(t_keep + 4096 AS DOUBLE)) -
          |    ln(CAST(n_drop + 1 AS DOUBLE) / CAST(t_drop + 4096 AS DOUBLE))
          |  )) AS BIGINT) AS w_milli
-         |FROM c CROSS JOIN t ORDER BY bucket""".stripMargin,
-    // txt27: DuckDB's string_split(text,'') is per code point, as is
-    // the CharInfo loop; both sides round the double sum to 4.
-    "txt27_char_entropy" ->
-      """WITH c AS (SELECT doc_id, UNNEST(string_split(text, '')) AS ch
-        |  FROM documents),
-        |f AS (SELECT doc_id, ch, COUNT(*) AS c FROM c GROUP BY doc_id, ch),
-        |l AS (SELECT doc_id, CAST(SUM(c) AS BIGINT) AS n_cp,
-        |    CAST(COUNT(*) AS BIGINT) AS n_uniq
-        |  FROM f GROUP BY doc_id)
-        |SELECT f.doc_id, ANY_VALUE(n_cp) AS n_cp, ANY_VALUE(n_uniq) AS n_uniq,
-        |  ROUND(SUM(-(CAST(c AS DOUBLE) / n_cp) * log2(CAST(c AS DOUBLE) / n_cp)), 4)
-        |    AS char_entropy
-        |FROM f JOIN l ON f.doc_id = l.doc_id
-        |GROUP BY f.doc_id ORDER BY f.doc_id""".stripMargin,
-    "txt19_clean_text" ->
-      """WITH r AS (SELECT doc_id,
-        |  text || ' {{cite:c' || CAST(doc_id AS VARCHAR)
-        |    || '}}  see  fig. {{figure:f' || CAST(doc_id AS VARCHAR)
-        |    || '}}' || chr(10) || chr(10) || chr(10) || chr(10)
-        |    || 'tail {{formula:eq' || CAST(doc_id AS VARCHAR) || '}} end  '
-        |    AS raw FROM documents),
-        |c AS (SELECT doc_id, raw,
-        |  TRIM(regexp_replace(regexp_replace(regexp_replace(raw,
-        |    '\{\{(cite|formula|figure|table):[^}]*\}\}', '', 'g'),
-        |    '[ \t]+', ' ', 'g'),
-        |    '\n{3,}', chr(10) || chr(10), 'g')) AS clean FROM r)
-        |SELECT doc_id,
-        |  CAST(LENGTH(raw) AS BIGINT) AS n_raw,
-        |  CAST(LENGTH(clean) AS BIGINT) AS n_clean,
-        |  md5(clean) AS clean_fp
-        |FROM c
-        |ORDER BY doc_id""".stripMargin,
-    "dedup07_decontaminate" ->
-      s"""WITH t AS (SELECT doc_id, $dkToks AS w FROM documents),
-         |sh AS (SELECT doc_id, $dkShingles3 AS s FROM t),
-         |bench AS (SELECT DISTINCT UNNEST(s) AS s FROM sh WHERE doc_id < 10),
-         |corpus AS (SELECT doc_id, UNNEST(s) AS s FROM sh WHERE doc_id >= 10)
-         |SELECT doc_id, COUNT(*) AS n_overlap
-         |FROM corpus JOIN bench USING (s)
-         |GROUP BY doc_id
-         |HAVING COUNT(*) >= 5
-         |ORDER BY doc_id""".stripMargin,
-    // dedup15: dedup07's probe reversed — per BENCHMARK doc, the
-    // fraction of its distinct grams found anywhere in the corpus
-    "dedup15_contamination_report" ->
-      s"""WITH t AS (SELECT doc_id, $dkToks AS w FROM documents),
-         |sh AS (SELECT doc_id, $dkShingles3 AS s FROM t),
-         |bench AS (SELECT doc_id, UNNEST(s) AS s FROM sh
-         |          WHERE doc_id < 10 AND len(s) > 0),
-         |hits AS (SELECT DISTINCT c.s
-         |         FROM (SELECT UNNEST(s) AS s FROM sh WHERE doc_id >= 10) c
-         |         JOIN (SELECT DISTINCT s FROM bench) b USING (s)),
-         |per AS (SELECT b.doc_id,
-         |          COUNT(*) AS n_grams,
-         |          CAST(COUNT(h.s) AS BIGINT) AS n_hit
-         |        FROM bench b LEFT JOIN hits h USING (s)
-         |        GROUP BY b.doc_id)
-         |SELECT doc_id, n_grams, n_hit,
-         |  ROUND(n_hit * 1.0 / n_grams, 4) AS frac_contaminated
-         |FROM per
-         |ORDER BY doc_id""".stripMargin,
-    "txt13_pii_redaction" ->
-      """WITH p AS (SELECT doc_id,
-        |  text || ' contact user' || CAST(doc_id AS VARCHAR)
-        |       || '@example.com or 555-' || CAST(doc_id AS VARCHAR) AS raw
-        |  FROM documents),
-        |r AS (SELECT doc_id,
-        |  CAST(len(regexp_extract_all(raw, '[a-z0-9]+@[a-z]+\.[a-z]+')) AS BIGINT)
-        |    AS n_emails,
-        |  CAST(len(regexp_extract_all(raw, '555-[0-9]+')) AS BIGINT) AS n_phones,
-        |  regexp_replace(
-        |    regexp_replace(raw, '[a-z0-9]+@[a-z]+\.[a-z]+', '[EMAIL]', 'g'),
-        |    '555-[0-9]+', '[PHONE]', 'g') AS redacted
-        |  FROM p)
-        |SELECT doc_id, n_emails, n_phones,
-        |  CAST(LENGTH(redacted) AS BIGINT) AS redacted_len,
-        |  md5(redacted) AS redacted_fp
-        |FROM r ORDER BY doc_id""".stripMargin,
-    "nst01_order_history_unnest" ->
-      """WITH agg AS (
-        |  SELECT o_custkey,
-        |    list(struct_pack(ok := o_orderkey, tp := o_totalprice,
-        |                     op := o_orderpriority)
-        |         ORDER BY o_orderkey) AS history
-        |  FROM orders GROUP BY o_custkey),
-        |ex AS (SELECT o_custkey, UNNEST(history) AS rec,
-        |         UNNEST(range(1, len(history) + 1)) AS pos
-        |       FROM agg)
-        |SELECT o_custkey, pos, rec.ok AS o_orderkey, rec.tp AS o_totalprice,
-        |  rec.op AS o_orderpriority
-        |FROM ex WHERE pos <= 3
-        |ORDER BY o_custkey, pos""".stripMargin,
-    "nst02_struct_paths_trycast" ->
-      """WITH e AS (
-        |  SELECT c_custkey,
-        |    struct_pack(
-        |      cust := struct_pack(name := c_name, acctbal := c_acctbal,
-        |                          segment := c_mktsegment),
-        |      geo := struct_pack(nation := n_name, region := r_name)) AS rec,
-        |    CASE WHEN c_custkey % 3 = 0 THEN 'X' || CAST(c_custkey AS VARCHAR)
-        |         ELSE CAST(c_custkey AS VARCHAR) END AS id_str
-        |  FROM customer
-        |  JOIN nation ON c_nationkey = n_nationkey
-        |  JOIN region ON n_regionkey = r_regionkey)
-        |SELECT c_custkey, rec.cust.name AS cust_name, rec.cust.acctbal AS acctbal,
-        |  rec.geo.region AS region_name, id_str,
-        |  TRY_CAST(id_str AS BIGINT) AS parsed_id
-        |FROM e ORDER BY c_custkey""".stripMargin,
-    "nst03_type_words_unnest" ->
-      """WITH w AS (SELECT p_partkey, string_split(p_type, ' ') AS words FROM part),
-        |ex AS (SELECT p_partkey, UNNEST(words) AS word,
-        |         UNNEST(range(1, len(words) + 1)) AS pos
-        |       FROM w)
-        |SELECT pos, word, COUNT(*) AS n_parts
-        |FROM ex GROUP BY pos, word
-        |ORDER BY pos, word""".stripMargin,
-    "eval01_linkage_metrics" ->
-      s"""WITH t AS (SELECT doc_id, n_chars, $dkToks AS w FROM documents),
-         |sh AS (SELECT doc_id, n_chars, $dkShingles3 AS s FROM t),
-         |pred AS (
-         |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, $dkJac AS jaccard
-         |  FROM sh a JOIN sh b
-         |    ON a.doc_id < b.doc_id AND ABS(a.n_chars - b.n_chars) <= 40
-         |  WHERE $dkJac >= 0.05),
-         |strat AS (SELECT doc_a, doc_b,
-         |  CASE WHEN jaccard < 0.5 THEN 'j_005_050'
-         |       WHEN jaccard < 0.8 THEN 'j_050_080'
-         |       ELSE 'j_080_100' END AS stratum,
-         |  ((doc_a % 1000003) * 2654435761 + doc_b % 1000003) % 1000003 AS h
-         |  FROM pred),
-         |strat2 AS (SELECT *, COUNT(*) OVER (PARTITION BY stratum) AS n_pred_total
-         |  FROM strat),
-         |samp AS (SELECT doc_a, doc_b, stratum, n_pred_total FROM (
-         |  SELECT *, ROW_NUMBER() OVER (
-         |    PARTITION BY stratum ORDER BY h, doc_a, doc_b) AS rn
-         |  FROM strat2) WHERE rn <= 200),
-         |d AS (SELECT doc_id, $dkBagFp AS fp FROM documents),
-         |gold AS (SELECT x.doc_id AS doc_a, y.doc_id AS doc_b
-         |  FROM d x JOIN d y ON x.fp = y.fp AND x.doc_id < y.doc_id),
-         |ng AS (SELECT COUNT(*) AS n_gold FROM gold),
-         |m AS (SELECT stratum, COUNT(*) AS n_pred,
-         |  MAX(n_pred_total) AS n_pred_total,
-         |  COUNT(*) FILTER (WHERE g.doc_a IS NOT NULL) AS n_tp, n_gold
-         |  FROM samp s LEFT JOIN gold g
-         |    ON s.doc_a = g.doc_a AND s.doc_b = g.doc_b
-         |  CROSS JOIN ng
-         |  GROUP BY stratum, n_gold)
-         |SELECT stratum, n_pred, n_pred_total, n_tp, n_gold,
-         |  ROUND(CAST(n_tp AS DOUBLE) / n_pred, 4) AS precision,
-         |  ROUND(CAST(n_tp AS DOUBLE) / n_gold, 4) AS recall,
-         |  CASE WHEN CAST(n_tp AS DOUBLE) / n_pred + CAST(n_tp AS DOUBLE) / n_gold > 0
-         |       THEN ROUND(2 * (CAST(n_tp AS DOUBLE) / n_pred) * (CAST(n_tp AS DOUBLE) / n_gold)
-         |                  / (CAST(n_tp AS DOUBLE) / n_pred + CAST(n_tp AS DOUBLE) / n_gold), 4)
-         |       ELSE 0.0 END AS f1
-         |FROM m
-         |ORDER BY stratum""".stripMargin,
-    "eval02_ann_recall" ->
-      s"""WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
-         |flat AS (SELECT label, generate_subscripts(v, 1) AS pos, UNNEST(v) AS x FROM e),
-         |cpos AS (SELECT label, pos, AVG(x) AS c FROM flat GROUP BY 1, 2),
-         |cent AS (SELECT label, LIST(c ORDER BY pos) AS centroid FROM cpos GROUP BY label),
-         |q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < 10),
-         |tr AS (SELECT query_id, vec_id, ROW_NUMBER() OVER (
-         |    PARTITION BY query_id ORDER BY cos_raw DESC, vec_id) AS t_rank
-         |  FROM (SELECT query_id, vec_id, ${dkCos("qv", "v")} AS cos_raw
-         |        FROM q JOIN e ON vec_id != query_id)),
-         |tt AS (SELECT query_id, vec_id, t_rank FROM tr WHERE t_rank <= 10),
-         |cellr AS (SELECT query_id, qv, label, ROW_NUMBER() OVER (
-         |    PARTITION BY query_id ORDER BY ccos DESC, label) AS crank
-         |  FROM (SELECT query_id, qv, cent.label, ${dkCos("qv", "centroid")} AS ccos
-         |        FROM q CROSS JOIN cent)),
-         |pr AS (SELECT query_id, vec_id, ROW_NUMBER() OVER (
-         |    PARTITION BY query_id ORDER BY cos_raw DESC, vec_id) AS p_rank
-         |  FROM (SELECT c.query_id, e.vec_id, ${dkCos("c.qv", "e.v")} AS cos_raw
-         |        FROM cellr c JOIN e
-         |          ON e.label = c.label AND e.vec_id != c.query_id
-         |        WHERE c.crank <= 3)),
-         |pp AS (SELECT query_id, vec_id, p_rank FROM pr WHERE p_rank <= 10)
-         |SELECT t.query_id,
-         |  COUNT(p.p_rank) AS n_hits,
-         |  ROUND(CAST(COUNT(p.p_rank) AS DOUBLE) / 10, 4) AS recall_at_k,
-         |  ROUND(COALESCE(MAX(CASE WHEN t.t_rank = 1
-         |    THEN 1.0::DOUBLE / p.p_rank END), 0.0), 4) AS rr_top1
-         |FROM tt t LEFT JOIN pp p
-         |  ON t.query_id = p.query_id AND t.vec_id = p.vec_id
-         |GROUP BY t.query_id
-         |ORDER BY t.query_id""".stripMargin,
-    "graph03_triple_patterns" ->
-      """WITH triples AS (
-        |  SELECT 'cust:' || CAST(c_custkey AS VARCHAR) AS s, 'in_nation' AS p,
-        |    'nat:' || CAST(c_nationkey AS VARCHAR) AS o FROM customer
-        |  UNION ALL
-        |  SELECT 'nat:' || CAST(n_nationkey AS VARCHAR), 'in_region',
-        |    'reg:' || CAST(n_regionkey AS VARCHAR) FROM nation
-        |  UNION ALL
-        |  SELECT 'nat:' || CAST(n_nationkey AS VARCHAR), 'label', n_name FROM nation
-        |  UNION ALL
-        |  SELECT 'reg:' || CAST(r_regionkey AS VARCHAR), 'label', r_name FROM region),
-        |p1 AS (SELECT s AS c, o AS n FROM triples WHERE p = 'in_nation'),
-        |p2 AS (SELECT s AS n, o AS r FROM triples WHERE p = 'in_region'),
-        |p3 AS (SELECT s AS r, o AS rl FROM triples WHERE p = 'label')
-        |SELECT rl AS region_label, COUNT(DISTINCT c) AS n_customers
-        |FROM p1 JOIN p2 USING (n) JOIN p3 USING (r)
-        |GROUP BY rl
-        |ORDER BY region_label""".stripMargin,
-    "evt07_asof_join" ->
-      """WITH v AS (SELECT user_id, ts, event_id, 0 AS kind,
-        |    event_id AS view_id, ts AS view_ts
-        |  FROM events WHERE event_type = 'view'),
-        |p AS (SELECT user_id, ts, event_id, 1 AS kind,
-        |    CAST(NULL AS BIGINT) AS view_id, CAST(NULL AS TIMESTAMP) AS view_ts
-        |  FROM events WHERE event_type = 'purchase'),
-        |u AS (SELECT * FROM v UNION ALL SELECT * FROM p),
-        |w AS (SELECT *,
-        |  LAST_VALUE(view_id IGNORE NULLS) OVER (PARTITION BY user_id
-        |    ORDER BY ts, kind, event_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS matched_view_id,
-        |  LAST_VALUE(view_ts IGNORE NULLS) OVER (PARTITION BY user_id
-        |    ORDER BY ts, kind, event_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS matched_view_ts
-        |  FROM u)
-        |SELECT event_id AS purchase_id, user_id, ts AS purchase_ts,
-        |  matched_view_id, matched_view_ts,
-        |  epoch_us(ts) - epoch_us(matched_view_ts) AS gap_us
-        |FROM w WHERE kind = 1
-        |ORDER BY purchase_id""".stripMargin,
-    "graph05_hierarchy_rollup4" ->
-      """SELECT
-        |  CAST(3 - GROUPING(r_name) - GROUPING(n_name)
-        |         - GROUPING(o_orderpriority) AS BIGINT) AS level,
-        |  COALESCE(r_name, 'ALL') AS region,
-        |  COALESCE(n_name, 'ALL') AS nation,
-        |  COALESCE(o_orderpriority, 'ALL') AS priority,
-        |  COUNT(*) AS n_orders,
-        |  ROUND(SUM(o_totalprice), 4) AS total_price
-        |FROM orders
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN nation ON c_nationkey = n_nationkey
-        |JOIN region ON n_regionkey = r_regionkey
-        |GROUP BY ROLLUP(r_name, n_name, o_orderpriority)
-        |ORDER BY level, region, nation, priority""".stripMargin,
-    // 5 unrolled fixed-point PageRank iterations — generated, not
-    // hand-copied, so the Spark loop and the oracle stay in lockstep.
-    "graph06_pagerank" -> {
-      val iters = (1 to 5).map { i =>
-        s"""r$i AS (SELECT e.dst AS node,
-           |  (15 * (1000000000000 // n.n)) // 100
-           |    + (85 * CAST(SUM(r.r // e.outdeg) AS BIGINT)) // 100 AS r
-           |  FROM e JOIN r${i - 1} r ON e.src = r.node CROSS JOIN n
-           |  GROUP BY e.dst, n.n)""".stripMargin
+         |FROM c CROSS JOIN t ORDER BY bucket""".stripMargin)),
+    // sim16: sim06's unrolled Lloyd trained on the BASE subset only
+    // (vec_id % 5 != 4 — the corpus as of the last index build), then
+    // both populations assign to the frozen c3 centroids and the
+    // per-cell maintenance report aggregates (counts + 4dp mean
+    // affinities; AVG-of-cosines follows sim06's centroid-AVG
+    // precedent, drift subtracts the already-rounded means).
+    Entry("sim16_ivf_append", Similarity.sim16IvfAppend(_), Sql {
+      val iter = (1 to 3).map { i =>
+        s"""a$i AS (SELECT b.vec_id, b.v, c.cluster, ROW_NUMBER() OVER (
+           |    PARTITION BY b.vec_id
+           |    ORDER BY ${dkCos("b.v", "c.centroid")} DESC, c.cluster) AS r
+           |  FROM b CROSS JOIN c${i - 1} c),
+           |f$i AS (SELECT cluster, generate_subscripts(v, 1) AS pos, UNNEST(v) AS x
+           |  FROM a$i WHERE r = 1),
+           |c$i AS (SELECT cluster, LIST(c ORDER BY pos) AS centroid FROM (
+           |    SELECT cluster, pos, AVG(x) AS c FROM f$i GROUP BY 1, 2)
+           |  GROUP BY cluster)""".stripMargin
       }.mkString(",\n")
-      s"""WITH pairs AS (SELECT DISTINCT
-         |    'c' || CAST(o_custkey AS VARCHAR) AS a,
-         |    's' || CAST(l_suppkey AS VARCHAR) AS b
-         |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
-         |ed AS (SELECT a AS src, b AS dst FROM pairs
-         |       UNION ALL SELECT b, a FROM pairs),
-         |deg AS (SELECT src, COUNT(*) AS outdeg FROM ed GROUP BY src),
-         |e AS (SELECT ed.src, ed.dst, deg.outdeg
-         |      FROM ed JOIN deg ON ed.src = deg.src),
-         |n AS (SELECT COUNT(*) AS n FROM deg),
-         |r0 AS (SELECT src AS node, 1000000000000 // n AS r
-         |       FROM deg CROSS JOIN n),
-         |$iters
-         |SELECT node, r AS rank_micro FROM r5
-         |ORDER BY r DESC, node LIMIT 20""".stripMargin
-    },
-    "graph04_bgp_nation_counts" ->
-      """WITH triples AS (
-        |  SELECT 'cust:' || CAST(c_custkey AS VARCHAR) AS s, 'in_nation' AS p,
-        |    'nat:' || CAST(c_nationkey AS VARCHAR) AS o FROM customer
-        |  UNION ALL
-        |  SELECT 'nat:' || CAST(n_nationkey AS VARCHAR), 'in_region',
-        |    'reg:' || CAST(n_regionkey AS VARCHAR) FROM nation
-        |  UNION ALL
-        |  SELECT 'nat:' || CAST(n_nationkey AS VARCHAR), 'label', n_name FROM nation
-        |  UNION ALL
-        |  SELECT 'reg:' || CAST(r_regionkey AS VARCHAR), 'label', r_name FROM region),
-        |p1 AS (SELECT s AS c, o AS n FROM triples WHERE p = 'in_nation'),
-        |p2 AS (SELECT s AS n, o AS r FROM triples WHERE p = 'in_region'),
-        |p3 AS (SELECT s AS r FROM triples WHERE p = 'label' AND o = 'ASIA'),
-        |p4 AS (SELECT s AS n, o AS nl FROM triples WHERE p = 'label')
-        |SELECT nl AS nation_label, COUNT(DISTINCT c) AS n_customers
-        |FROM p1 JOIN p2 USING (n) JOIN p3 USING (r) JOIN p4 USING (n)
-        |GROUP BY nl
-        |ORDER BY nation_label""".stripMargin,
-    "graph07_optional_filter" ->
-      """WITH triples AS (
-        |  SELECT 'nat:' || CAST(n_nationkey AS VARCHAR) AS s, 'in_region' AS p,
-        |    'reg:' || CAST(n_regionkey AS VARCHAR) AS o FROM nation
-        |  UNION ALL
-        |  SELECT 'reg:' || CAST(r_regionkey AS VARCHAR), 'label', r_name FROM region
-        |  UNION ALL
-        |  SELECT 'nat:' || CAST(n_nationkey AS VARCHAR), 'flagged', 'true'
-        |    FROM nation WHERE n_nationkey % 3 = 0),
-        |p0 AS (SELECT s AS n, o AS r FROM triples WHERE p = 'in_region'),
-        |p1 AS (SELECT s AS r, o AS rl FROM triples WHERE p = 'label'),
-        |p2 AS (SELECT s AS n, o AS fl FROM triples WHERE p = 'flagged')
-        |SELECT p0.n AS nation_iri, rl AS region_label, fl AS flagged
-        |FROM p0 JOIN p1 ON p0.r = p1.r LEFT JOIN p2 ON p0.n = p2.n
-        |WHERE rl <> 'ASIA'
-        |ORDER BY nation_iri""".stripMargin,
-    // graph10: graph04's aggregation through the TEXT front-end —
-    // same de-sugared algebra, aliases from the (COUNT ... AS ?n)
-    // binding.
-    // graph15: ASK is EXISTS over the pattern's solutions.
-    "graph15_sparql_ask" ->
-      """WITH triples AS (
-        |  SELECT 'nat:' || CAST(n_nationkey AS VARCHAR) AS s, 'label' AS p,
-        |    n_name AS o FROM nation
-        |  UNION ALL
-        |  SELECT 'reg:' || CAST(r_regionkey AS VARCHAR), 'label', r_name FROM region
-        |  UNION ALL
-        |  SELECT 'nat:' || CAST(n_nationkey AS VARCHAR), 'flagged', 'true'
-        |    FROM nation WHERE n_nationkey % 3 = 0)
-        |SELECT 'has_flagged' AS probe,
-        |  EXISTS(SELECT 1 FROM triples WHERE p = 'flagged' AND o = 'true') AS ask
-        |UNION ALL
-        |SELECT 'impossible_label',
-        |  EXISTS(SELECT 1 FROM triples WHERE p = 'label' AND o = 'NO_SUCH_LABEL')
-        |ORDER BY probe""".stripMargin,
-    // graph16: CONSTRUCT = one projection per template triple over the
-    // BGP solutions; UNION (not ALL) carries the graph's set semantics.
-    "graph16_sparql_construct" ->
-      """WITH cn AS (
-        |  SELECT 'cust:' || CAST(c_custkey AS VARCHAR) AS c,
-        |    'nat:' || CAST(c_nationkey AS VARCHAR) AS n FROM customer),
-        |nr AS (
-        |  SELECT 'nat:' || CAST(n_nationkey AS VARCHAR) AS n,
-        |    'reg:' || CAST(n_regionkey AS VARCHAR) AS r FROM nation),
-        |j AS (SELECT DISTINCT cn.c, nr.r FROM cn JOIN nr USING (n))
-        |SELECT s, p, o FROM (
-        |  SELECT c AS s, 'in_region' AS p, r AS o FROM j
-        |  UNION
-        |  SELECT r AS s, 'has_member' AS p, c AS o FROM j)
-        |ORDER BY s, p, o""".stripMargin,
-    // graph17: DESCRIBE = both-side membership filter over the store.
-    "graph17_sparql_describe" ->
-      """WITH triples AS (
-        |  SELECT 'cust:' || CAST(c_custkey AS VARCHAR) AS s, 'in_nation' AS p,
-        |    'nat:' || CAST(c_nationkey AS VARCHAR) AS o FROM customer
-        |  UNION ALL
-        |  SELECT 'nat:' || CAST(n_nationkey AS VARCHAR), 'in_region',
-        |    'reg:' || CAST(n_regionkey AS VARCHAR) FROM nation
-        |  UNION ALL
-        |  SELECT 'nat:' || CAST(n_nationkey AS VARCHAR), 'label', n_name FROM nation
-        |  UNION ALL
-        |  SELECT 'reg:' || CAST(r_regionkey AS VARCHAR), 'label', r_name FROM region
-        |  UNION ALL
-        |  SELECT 'nat:' || CAST(n_nationkey AS VARCHAR), 'flagged', 'true'
-        |    FROM nation WHERE n_nationkey % 3 = 0)
-        |SELECT DISTINCT s, p, o FROM triples
-        |WHERE s IN ('nat:4', 'reg:1') OR o IN ('nat:4', 'reg:1')
-        |ORDER BY s, p, o""".stripMargin,
-    // graph18: named graphs = the quad store partitioned by predicate
-    // family; FROM prunes the default graph, ground GRAPH prunes one
-    // named graph, GRAPH ?g binds the graph column as a variable.
-    "graph18_sparql_graphs" ->
-      """WITH quads AS (
-        |  SELECT 'cust:' || CAST(c_custkey AS VARCHAR) AS s, 'in_nation' AS p,
-        |    'nat:' || CAST(c_nationkey AS VARCHAR) AS o, 'graph:people' AS g
-        |  FROM customer
-        |  UNION ALL
-        |  SELECT 'nat:' || CAST(n_nationkey AS VARCHAR), 'in_region',
-        |    'reg:' || CAST(n_regionkey AS VARCHAR), 'graph:topology' FROM nation
-        |  UNION ALL
-        |  SELECT 'nat:' || CAST(n_nationkey AS VARCHAR), 'label', n_name,
-        |    'graph:labels' FROM nation
-        |  UNION ALL
-        |  SELECT 'reg:' || CAST(r_regionkey AS VARCHAR), 'label', r_name,
-        |    'graph:labels' FROM region
-        |  UNION ALL
-        |  SELECT 'nat:' || CAST(n_nationkey AS VARCHAR), 'flagged', 'true',
-        |    'graph:flags' FROM nation WHERE n_nationkey % 3 = 0)
-        |SELECT t.s AS n, l.o AS name, f.g AS g
-        |FROM quads t
-        |JOIN quads l ON l.g = 'graph:labels' AND l.p = 'label' AND l.s = t.s
-        |JOIN quads f ON f.p = 'flagged' AND f.o = 'true' AND f.s = t.s
-        |WHERE t.g = 'graph:topology' AND t.p = 'in_region'
-        |ORDER BY n""".stripMargin,
-    // graph14: MINUS de-sugars to an anti join on the shared var.
-    "graph14_sparql_minus" ->
-      """WITH triples AS (
-        |  SELECT 'nat:' || CAST(n_nationkey AS VARCHAR) AS s, 'in_region' AS p,
-        |    'reg:' || CAST(n_regionkey AS VARCHAR) AS o FROM nation
-        |  UNION ALL
-        |  SELECT 'nat:' || CAST(n_nationkey AS VARCHAR), 'label', n_name FROM nation
-        |  UNION ALL
-        |  SELECT 'reg:' || CAST(r_regionkey AS VARCHAR), 'label', r_name FROM region
-        |  UNION ALL
-        |  SELECT 'nat:' || CAST(n_nationkey AS VARCHAR), 'flagged', 'true'
-        |    FROM nation WHERE n_nationkey % 3 = 0),
-        |b1 AS (
-        |  SELECT ir.s AS n, lab.o AS l
-        |  FROM triples ir
-        |  JOIN triples rl ON ir.o = rl.s AND rl.p = 'label' AND rl.o = 'ASIA'
-        |  JOIN triples lab ON ir.s = lab.s AND lab.p = 'label'
-        |  WHERE ir.p = 'in_region'),
-        |fl AS (SELECT s AS n FROM triples WHERE p = 'flagged' AND o = 'true')
-        |SELECT b1.n, b1.l FROM b1 ANTI JOIN fl ON b1.n = fl.n
-        |ORDER BY b1.n""".stripMargin,
-    // graph13: VALUES is an inline constant table joined on the shared
-    // var; BIND is a computed column over the join.
-    "graph13_sparql_values_bind" ->
-      """WITH triples AS (
-        |  SELECT 'nat:' || CAST(n_nationkey AS VARCHAR) AS s, 'label' AS p,
-        |    n_name AS o FROM nation
-        |  UNION ALL
-        |  SELECT 'nat:' || CAST(n_nationkey AS VARCHAR), 'in_region',
-        |    'reg:' || CAST(n_regionkey AS VARCHAR) FROM nation),
-        |lab AS (SELECT s AS n, o AS l FROM triples WHERE p = 'label'),
-        |ir AS (SELECT s AS n FROM triples WHERE p = 'in_region'),
-        |v AS (SELECT * FROM (VALUES ('NATION_2'), ('NATION_7'), ('NATION_11')) AS t(l))
-        |SELECT lab.n, lab.l, lower(lab.l) AS ll
-        |FROM lab JOIN ir ON lab.n = ir.n JOIN v ON lab.l = v.l
-        |ORDER BY ll""".stripMargin,
-    // graph12: the sequence/inverse-path query de-sugared — the
-    // 3-segment path is a plain join chain, the inverse pattern a
-    // swapped-endpoint join.
-    "graph12_sparql_path_ops" ->
-      """WITH triples AS (
-        |  SELECT 'cust:' || CAST(c_custkey AS VARCHAR) AS s, 'in_nation' AS p,
-        |    'nat:' || CAST(c_nationkey AS VARCHAR) AS o FROM customer
-        |  UNION ALL
-        |  SELECT 'nat:' || CAST(n_nationkey AS VARCHAR), 'in_region',
-        |    'reg:' || CAST(n_regionkey AS VARCHAR) FROM nation
-        |  UNION ALL
-        |  SELECT 'nat:' || CAST(n_nationkey AS VARCHAR), 'label', n_name FROM nation
-        |  UNION ALL
-        |  SELECT 'reg:' || CAST(r_regionkey AS VARCHAR), 'label', r_name FROM region)
-        |SELECT cn.s AS c, nl.o AS nl, rl.o AS rl
-        |FROM triples cn
-        |JOIN triples nr ON cn.o = nr.s AND nr.p = 'in_region'
-        |JOIN triples rl ON nr.o = rl.s AND rl.p = 'label'
-        |JOIN triples nl ON cn.o = nl.s AND nl.p = 'label'
-        |WHERE cn.p = 'in_nation'
-        |ORDER BY c""".stripMargin,
-    // graph11: the UNION query's de-sugared algebra — branch 1 is the
-    // ASIA join, branch 2 the flagged scan (no ?r => NULL), combined
-    // with UNION ALL (SPARQL union is a bag).
-    "graph11_sparql_union" ->
-      """WITH triples AS (
-        |  SELECT 'nat:' || CAST(n_nationkey AS VARCHAR) AS s, 'in_region' AS p,
-        |    'reg:' || CAST(n_regionkey AS VARCHAR) AS o FROM nation
-        |  UNION ALL
-        |  SELECT 'nat:' || CAST(n_nationkey AS VARCHAR), 'label', n_name FROM nation
-        |  UNION ALL
-        |  SELECT 'reg:' || CAST(r_regionkey AS VARCHAR), 'label', r_name FROM region
-        |  UNION ALL
-        |  SELECT 'nat:' || CAST(n_nationkey AS VARCHAR), 'flagged', 'true'
-        |    FROM nation WHERE n_nationkey % 3 = 0),
-        |b1 AS (
-        |  SELECT ir.s AS x, lab.o AS l, ir.o AS r
-        |  FROM triples ir
-        |  JOIN triples rl ON ir.o = rl.s AND rl.p = 'label' AND rl.o = 'ASIA'
-        |  JOIN triples lab ON ir.s = lab.s AND lab.p = 'label'
-        |  WHERE ir.p = 'in_region'),
-        |b2 AS (
-        |  SELECT fl.s AS x, lab.o AS l, CAST(NULL AS VARCHAR) AS r
-        |  FROM triples fl
-        |  JOIN triples lab ON fl.s = lab.s AND lab.p = 'label'
-        |  WHERE fl.p = 'flagged' AND fl.o = 'true')
-        |SELECT x, l, r FROM b1
-        |UNION ALL
-        |SELECT x, l, r FROM b2
-        |ORDER BY x, r""".stripMargin,
-    "graph10_sparql_agg" ->
-      """WITH triples AS (
-        |  SELECT 'cust:' || CAST(c_custkey AS VARCHAR) AS s, 'in_nation' AS p,
-        |    'nat:' || CAST(c_nationkey AS VARCHAR) AS o FROM customer
-        |  UNION ALL
-        |  SELECT 'nat:' || CAST(n_nationkey AS VARCHAR), 'in_region',
-        |    'reg:' || CAST(n_regionkey AS VARCHAR) FROM nation
-        |  UNION ALL
-        |  SELECT 'nat:' || CAST(n_nationkey AS VARCHAR), 'label', n_name FROM nation
-        |  UNION ALL
-        |  SELECT 'reg:' || CAST(r_regionkey AS VARCHAR), 'label', r_name FROM region),
-        |p1 AS (SELECT s AS c, o AS n FROM triples WHERE p = 'in_nation'),
-        |p2 AS (SELECT s AS n, o AS r FROM triples WHERE p = 'in_region'),
-        |p3 AS (SELECT s AS r FROM triples WHERE p = 'label' AND o = 'ASIA'),
-        |p4 AS (SELECT s AS n, o AS nl FROM triples WHERE p = 'label')
-        |SELECT nl, COUNT(DISTINCT c) AS n_customers
-        |FROM p1 JOIN p2 USING (n) JOIN p3 USING (r) JOIN p4 USING (n)
-        |GROUP BY nl
-        |ORDER BY nl""".stripMargin,
-    // graph23: the multi-triple OPTIONAL left-joins the inner-joined
-    // group as a unit — nations lacking EITHER predicate bind neither.
-    // graph25: FROM NAMED replayed on the star schema — the labels
-    // graph is nation+region labels, the flags graph every third
-    // nation; people/topology are excluded by the named list.
-    "graph25_sparql_from_named" ->
-      """WITH q AS (
-        |  SELECT 'graph:labels' AS g FROM nation
-        |  UNION ALL SELECT 'graph:labels' FROM region
-        |  UNION ALL SELECT 'graph:flags' FROM nation WHERE n_nationkey % 3 = 0)
-        |SELECT g, COUNT(*) AS n_triples FROM q GROUP BY g ORDER BY g""".stripMargin,
-    // graph27: the recursive-CTE replay enumerates PATHS (UNION ALL)
-    // where the engine's frontier BFS expands each node once — MIN
-    // over path depths converges to the same hop distance; the hop
-    // bound keeps the path count finite.
-    "graph27_bfs_distances" ->
-      """WITH RECURSIVE
-        |e1 AS (SELECT DISTINCT l_orderkey*2 AS src, l_partkey*2+1 AS dst FROM lineitem),
-        |edges AS (SELECT src, dst FROM e1 UNION ALL SELECT dst AS src, src AS dst FROM e1),
-        |seed AS (SELECT MIN(l_orderkey)*2 AS node FROM lineitem),
-        |bfs(node, dist) AS (
-        |  SELECT node, CAST(0 AS BIGINT) FROM seed
-        |  UNION ALL
-        |  SELECT e.dst, b.dist+1 FROM bfs b JOIN edges e ON e.src = b.node WHERE b.dist < 4
-        |),
-        |m AS (SELECT node, MIN(dist) AS dist FROM bfs GROUP BY node)
-        |SELECT CASE WHEN node % 2 = 0 THEN 'ord:' || (node // 2)::VARCHAR
-        |            ELSE 'prt:' || ((node-1) // 2)::VARCHAR END AS node, dist
-        |FROM m ORDER BY dist, node""".stripMargin,
-    // graph30: the ≤ maxHops-edge paths enumerate as the same
-    // recursive shape with the cost carried; MIN per node is the
-    // Bellman-Ford recurrence term for term.
-    "graph30_shortest_paths" ->
-      """WITH RECURSIVE
-        |base AS (SELECT l_orderkey*2 AS a, l_partkey*2+1 AS b,
-        |    MIN(CAST(l_quantity AS BIGINT)) AS w
-        |  FROM lineitem GROUP BY 1, 2),
-        |edges AS (SELECT a AS src, b AS dst, w FROM base
-        |  UNION ALL SELECT b, a, w FROM base),
-        |seed AS (SELECT MIN(l_orderkey)*2 AS node FROM lineitem),
-        |paths(node, cost, hops) AS (
-        |  SELECT node, CAST(0 AS BIGINT), 0 FROM seed
-        |  UNION ALL
-        |  SELECT e.dst, p.cost + e.w, p.hops + 1
-        |  FROM paths p JOIN edges e ON e.src = p.node
-        |  WHERE p.hops < 4),
-        |m AS (SELECT node, MIN(cost) AS cost FROM paths GROUP BY node)
-        |SELECT CASE WHEN node % 2 = 0 THEN 'ord:' || (node // 2)::VARCHAR
-        |            ELSE 'prt:' || ((node-1) // 2)::VARCHAR END AS node, cost
-        |FROM m ORDER BY node""".stripMargin,
-    // graph28: nested OPTIONAL == nested LEFT JOINs; labeled
-    // subjects are nations ∪ regions, regions miss the outer group
-    // (both vars null), nations optionally carry the sparse flag.
-    "graph28_sparql_nested_optional" ->
-      """SELECT n, nl, rl, fl FROM (
-        |  SELECT 'nat:' || n_nationkey AS n, n_name AS nl, r_name AS rl,
-        |    CASE WHEN n_nationkey % 3 = 0 THEN 'true' END AS fl
-        |  FROM nation JOIN region ON n_regionkey = r_regionkey
-        |  UNION ALL
-        |  SELECT 'reg:' || r_regionkey, r_name, NULL, NULL FROM region)
-        |ORDER BY n""".stripMargin,
-    // graph29: VALUES is SPARQL 18.5 multiset COMPATIBILITY — one
-    // output row per (solution, VALUES-row) compatible pair, so the
-    // replay must JOIN the VALUES rows (null cell = UNDEF constrains
-    // nothing), not collapse them into a WHERE-OR filter: a solution
-    // compatible with two VALUES rows correctly appears twice.
-    "graph29_sparql_values_undef" ->
-      """SELECT s.n, s.nl FROM (
-        |  SELECT 'nat:' || n_nationkey AS n, n_name AS nl FROM nation
-        |  UNION ALL
-        |  SELECT 'reg:' || r_regionkey, r_name FROM region) s
-        |JOIN (VALUES ('nat:0', NULL), (NULL, 'NATION_18')) v(vn, vnl)
-        |  ON (v.vn IS NULL OR s.n = v.vn)
-        | AND (v.vnl IS NULL OR s.nl = v.vnl)
-        |ORDER BY n, nl""".stripMargin,
-    // graph26: SUM/AVG over typed decimal literals — the engine
-    // strips `"lex"^^<datatype>` and sums doubles; decimal→string→
-    // double round-trips exactly, so the oracle aggregates the base
-    // column directly. Both sides round to 4dp.
-    "graph26_sparql_numeric_agg" ->
-      """SELECT n_name AS nation,
-        |  ROUND(SUM(CAST(c_acctbal AS DOUBLE)), 4) AS total_bal,
-        |  ROUND(AVG(CAST(c_acctbal AS DOUBLE)), 4) AS avg_bal,
-        |  COUNT(*) AS n_cust
-        |FROM customer JOIN nation ON c_nationkey = n_nationkey
-        |GROUP BY n_name
-        |ORDER BY n_name""".stripMargin,
-    // graph24: HAVING + GROUP_CONCAT replayed on the star schema —
-    // nation labels are unique, so COUNT(DISTINCT iri) == COUNT
-    // (DISTINCT label); the engine sorts GROUP_CONCAT values
-    // (determinism rule), mirrored by list_sort.
-    "graph24_sparql_having" ->
-      """WITH nr AS (SELECT r.r_name AS rl, n.n_name AS nl
-        |  FROM nation n JOIN region r ON n.n_regionkey = r.r_regionkey),
-        |g AS (SELECT rl, COUNT(DISTINCT nl) AS n_nations,
-        |    array_to_string(list_sort(list_distinct(LIST(nl))), ', ') AS nations,
-        |    MIN(nl) AS mn
-        |  FROM nr GROUP BY rl)
-        |SELECT rl, n_nations, nations FROM g WHERE mn < 'NATION_12' ORDER BY rl""".stripMargin,
-    "graph23_sparql_optional_group" ->
-      """WITH triples AS (
-        |  SELECT 'cust:' || CAST(c_custkey AS VARCHAR) AS s, 'in_nation' AS p,
-        |    'nat:' || CAST(c_nationkey AS VARCHAR) AS o FROM customer
-        |  UNION ALL
-        |  SELECT 'nat:' || CAST(n_nationkey AS VARCHAR), 'label', n_name FROM nation
-        |  UNION ALL
-        |  SELECT 'nat:' || CAST(n_nationkey AS VARCHAR), 'flagged', 'true'
-        |    FROM nation WHERE n_nationkey % 3 = 0),
-        |flg AS (SELECT s AS n, o AS f FROM triples WHERE p = 'flagged'),
-        |lab AS (SELECT s AS n, o AS fl FROM triples WHERE p = 'label'),
-        |grp AS (SELECT flg.n, flg.f, lab.fl FROM flg JOIN lab ON flg.n = lab.n),
-        |cn AS (SELECT s AS c, o AS n FROM triples WHERE p = 'in_nation')
-        |SELECT cn.c, cn.n, grp.f, grp.fl
-        |FROM cn LEFT JOIN grp ON cn.n = grp.n
-        |ORDER BY cn.c""".stripMargin,
-    // graph22: the negated property set is one NOT IN predicate
-    // filter; only in_region survives the exclusion here.
-    "graph22_sparql_negated_props" ->
-      """WITH triples AS (
-        |  SELECT 'cust:' || CAST(c_custkey AS VARCHAR) AS s, 'in_nation' AS p,
-        |    'nat:' || CAST(c_nationkey AS VARCHAR) AS o FROM customer
-        |  UNION ALL
-        |  SELECT 'nat:' || CAST(n_nationkey AS VARCHAR), 'in_region',
-        |    'reg:' || CAST(n_regionkey AS VARCHAR) FROM nation
-        |  UNION ALL
-        |  SELECT 'nat:' || CAST(n_nationkey AS VARCHAR), 'label', n_name FROM nation
-        |  UNION ALL
-        |  SELECT 'reg:' || CAST(r_regionkey AS VARCHAR), 'label', r_name FROM region
-        |  UNION ALL
-        |  SELECT 'nat:' || CAST(n_nationkey AS VARCHAR), 'flagged', 'true'
-        |    FROM nation WHERE n_nationkey % 3 = 0),
-        |neg AS (SELECT s, o FROM triples
-        |        WHERE p NOT IN ('in_nation', 'label', 'flagged')),
-        |lab AS (SELECT s AS o, o AS l FROM triples WHERE p = 'label')
-        |SELECT neg.s, neg.o, lab.l
-        |FROM neg JOIN lab ON neg.o = lab.o
-        |ORDER BY neg.s""".stripMargin,
-    // graph21: the subquery de-sugars to a pre-aggregated derived
-    // table joined on the shared var, filtered on the alias.
-    "graph21_sparql_subquery" ->
-      """WITH triples AS (
-        |  SELECT 'cust:' || CAST(c_custkey AS VARCHAR) AS s, 'in_nation' AS p,
-        |    'nat:' || CAST(c_nationkey AS VARCHAR) AS o FROM customer
-        |  UNION ALL
-        |  SELECT 'nat:' || CAST(n_nationkey AS VARCHAR), 'label', n_name FROM nation),
-        |agg AS (
-        |  SELECT o AS n, CAST(COUNT(s) AS BIGINT) AS n_customers
-        |  FROM triples WHERE p = 'in_nation' GROUP BY o),
-        |lab AS (SELECT s AS n, o AS nl FROM triples WHERE p = 'label')
-        |SELECT lab.nl, agg.n_customers
-        |FROM agg JOIN lab ON agg.n = lab.n
-        |WHERE agg.n_customers >= 5
-        |ORDER BY lab.nl""".stripMargin,
-    // graph20: p* = ZeroLengthPath ∪ p+ — the oracle replays the
-    // node self-pairs (set-union with the in_region edge set, which
-    // is single-hop in this store) and the label join.
-    "graph20_sparql_path_star" ->
-      """WITH triples AS (
-        |  SELECT 'cust:' || CAST(c_custkey AS VARCHAR) AS s, 'in_nation' AS p,
-        |    'nat:' || CAST(c_nationkey AS VARCHAR) AS o FROM customer
-        |  UNION ALL
-        |  SELECT 'nat:' || CAST(n_nationkey AS VARCHAR), 'in_region',
-        |    'reg:' || CAST(n_regionkey AS VARCHAR) FROM nation
-        |  UNION ALL
-        |  SELECT 'nat:' || CAST(n_nationkey AS VARCHAR), 'label', n_name FROM nation
-        |  UNION ALL
-        |  SELECT 'reg:' || CAST(r_regionkey AS VARCHAR), 'label', r_name FROM region
-        |  UNION ALL
-        |  SELECT 'nat:' || CAST(n_nationkey AS VARCHAR), 'flagged', 'true'
-        |    FROM nation WHERE n_nationkey % 3 = 0),
-        |star AS (
-        |  SELECT n AS s, n AS o FROM (
-        |    SELECT s AS n FROM triples UNION SELECT o FROM triples)
-        |  UNION
-        |  SELECT s, o FROM triples WHERE p = 'in_region'),
-        |lab AS (SELECT s, o AS l FROM triples WHERE p = 'label')
-        |SELECT star.s AS start, star.o AS anc, lab.l
-        |FROM star JOIN lab ON star.o = lab.s
-        |ORDER BY start, anc""".stripMargin,
-    // graph19: FILTER EXISTS de-sugars to a semi join, NOT EXISTS to
-    // an anti join — the oracle replays both as EXISTS subqueries
-    // over the triple synthesis.
-    "graph19_sparql_exists" ->
-      """WITH triples AS (
-        |  SELECT 'cust:' || CAST(c_custkey AS VARCHAR) AS s, 'in_nation' AS p,
-        |    'nat:' || CAST(c_nationkey AS VARCHAR) AS o FROM customer
-        |  UNION ALL
-        |  SELECT 'nat:' || CAST(n_nationkey AS VARCHAR), 'in_region',
-        |    'reg:' || CAST(n_regionkey AS VARCHAR) FROM nation
-        |  UNION ALL
-        |  SELECT 'nat:' || CAST(n_nationkey AS VARCHAR), 'label', n_name FROM nation
-        |  UNION ALL
-        |  SELECT 'reg:' || CAST(r_regionkey AS VARCHAR), 'label', r_name FROM region
-        |  UNION ALL
-        |  SELECT 'nat:' || CAST(n_nationkey AS VARCHAR), 'flagged', 'true'
-        |    FROM nation WHERE n_nationkey % 3 = 0),
-        |base AS (
-        |  SELECT ir.s AS n, lab.o AS l
-        |  FROM triples ir
-        |  JOIN triples rl ON ir.o = rl.s AND rl.p = 'label' AND rl.o <> 'EUROPE'
-        |  JOIN triples lab ON ir.s = lab.s AND lab.p = 'label'
-        |  WHERE ir.p = 'in_region')
-        |SELECT n, l FROM base b
-        |WHERE EXISTS (SELECT 1 FROM triples c
-        |              WHERE c.p = 'in_nation' AND c.o = b.n)
-        |  AND NOT EXISTS (SELECT 1 FROM triples f
-        |                  WHERE f.p = 'flagged' AND f.o = 'true' AND f.s = b.n)
-        |ORDER BY n""".stripMargin,
-    // graph09: the SPARQL-text query compiled by graft.sparql.Sparql —
-    // the oracle is the de-sugared algebra (closure + label join +
-    // left join on the sparse annotation + filter), so it checks the
-    // PARSER end-to-end: a mis-parsed OPTIONAL or FILTER changes rows.
-    "graph09_sparql_text" ->
-      """WITH RECURSIVE triples AS (
-        |  SELECT 'cust:' || CAST(c_custkey AS VARCHAR) AS s, 'in_nation' AS p,
-        |    'nat:' || CAST(c_nationkey AS VARCHAR) AS o FROM customer
-        |  UNION ALL
-        |  SELECT 'nat:' || CAST(n_nationkey AS VARCHAR), 'in_region',
-        |    'reg:' || CAST(n_regionkey AS VARCHAR) FROM nation
-        |  UNION ALL
-        |  SELECT 'nat:' || CAST(n_nationkey AS VARCHAR), 'label', n_name FROM nation
-        |  UNION ALL
-        |  SELECT 'reg:' || CAST(r_regionkey AS VARCHAR), 'label', r_name FROM region
-        |  UNION ALL
-        |  SELECT 'nat:' || CAST(n_nationkey AS VARCHAR), 'flagged', 'true'
-        |    FROM nation WHERE n_nationkey % 3 = 0),
-        |ed AS (SELECT s AS src, o AS dst FROM triples
-        |       WHERE p IN ('in_nation', 'in_region')),
-        |r AS (
-        |  SELECT src, dst, CAST(1 AS BIGINT) AS hops FROM ed
-        |  UNION ALL
-        |  SELECT r.src, e.dst, r.hops + 1 FROM r JOIN ed e ON r.dst = e.src
-        |  WHERE r.hops < 8),
-        |cl AS (SELECT src AS c, dst AS anc FROM r GROUP BY src, dst),
-        |lab AS (SELECT s AS anc, o AS l FROM triples WHERE p = 'label'),
-        |flg AS (SELECT s AS anc, o AS fl FROM triples WHERE p = 'flagged')
-        |SELECT cl.c, cl.anc, lab.l, flg.fl
-        |FROM cl JOIN lab ON cl.anc = lab.anc
-        |LEFT JOIN flg ON cl.anc = flg.anc
-        |WHERE lab.l <> 'ASIA'
-        |ORDER BY cl.c, cl.anc""".stripMargin,
-    "graph08_ancestor_paths" ->
-      """WITH RECURSIVE triples AS (
-        |  SELECT 'cust:' || CAST(c_custkey AS VARCHAR) AS s, 'in_nation' AS p,
-        |    'nat:' || CAST(c_nationkey AS VARCHAR) AS o FROM customer
-        |  UNION ALL
-        |  SELECT 'nat:' || CAST(n_nationkey AS VARCHAR), 'in_region',
-        |    'reg:' || CAST(n_regionkey AS VARCHAR) FROM nation),
-        |ed AS (SELECT s AS src, o AS dst FROM triples
-        |       WHERE p IN ('in_nation', 'in_region')),
-        |r AS (
-        |  SELECT src, dst, CAST(1 AS BIGINT) AS hops FROM ed
-        |  UNION ALL
-        |  SELECT r.src, e.dst, r.hops + 1 FROM r JOIN ed e ON r.dst = e.src
-        |  WHERE r.hops < 3)
-        |SELECT src AS start, dst AS ancestor, MIN(hops) AS min_hops
-        |FROM r GROUP BY src, dst
-        |ORDER BY start, ancestor""".stripMargin,
-    "graph02_transitive_closure" ->
-      """WITH RECURSIVE edges AS (
-        |  SELECT CAST(n_nationkey AS BIGINT) AS src,
-        |    CAST((n_nationkey * 2 + 7) % 25 AS BIGINT) AS dst
-        |  FROM nation),
-        |r AS (
-        |  SELECT src, dst, CAST(1 AS BIGINT) AS hops FROM edges
-        |  UNION ALL
-        |  SELECT r.src, e.dst, r.hops + 1 FROM r JOIN edges e ON r.dst = e.src
-        |  WHERE r.hops < 4)
-        |SELECT src, dst, MIN(hops) AS min_hops
-        |FROM r GROUP BY src, dst
-        |ORDER BY src, dst""".stripMargin
+      s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+         |b AS (SELECT vec_id, v FROM e WHERE vec_id % 5 != 4),
+         |d AS (SELECT vec_id, v FROM e WHERE vec_id % 5 = 4),
+         |c0 AS (SELECT rn - 1 AS cluster, v AS centroid FROM (
+         |    SELECT v, ROW_NUMBER() OVER (ORDER BY vec_id) AS rn FROM b)
+         |  WHERE rn <= 10),
+         |$iter,
+         |ab AS (SELECT cluster, ccos FROM (
+         |    SELECT b.vec_id, c.cluster,
+         |      ${dkCos("b.v", "c.centroid")} AS ccos, ROW_NUMBER() OVER (
+         |      PARTITION BY b.vec_id
+         |      ORDER BY ${dkCos("b.v", "c.centroid")} DESC, c.cluster) AS r
+         |    FROM b CROSS JOIN c3 c) WHERE r = 1),
+         |ad AS (SELECT cluster, ccos FROM (
+         |    SELECT d.vec_id, c.cluster,
+         |      ${dkCos("d.v", "c.centroid")} AS ccos, ROW_NUMBER() OVER (
+         |      PARTITION BY d.vec_id
+         |      ORDER BY ${dkCos("d.v", "c.centroid")} DESC, c.cluster) AS r
+         |    FROM d CROSS JOIN c3 c) WHERE r = 1),
+         |sb AS (SELECT cluster, COUNT(*) AS n_base,
+         |    ROUND(AVG(ccos), 4) AS cos_base FROM ab GROUP BY cluster),
+         |sd AS (SELECT cluster, COUNT(*) AS n_new,
+         |    ROUND(AVG(ccos), 4) AS cos_new FROM ad GROUP BY cluster)
+         |SELECT CAST(COALESCE(sb.cluster, sd.cluster) AS BIGINT) AS cluster,
+         |  CAST(COALESCE(n_base, 0) AS BIGINT) AS n_base,
+         |  CAST(COALESCE(n_new, 0) AS BIGINT) AS n_new,
+         |  cos_base, cos_new,
+         |  ROUND(cos_base - cos_new, 4) AS drift
+         |FROM sb FULL OUTER JOIN sd ON sb.cluster = sd.cluster
+         |ORDER BY cluster""".stripMargin
+    })
   )
 }

@@ -12,6 +12,7 @@ object Verify {
     // Optional name filter for local iteration (the driver always
     // passes exactly two args and gets the full dump).
     val only = args.drop(2).toSet
+    SparkEntry.requireKnown(only)
     // The session the bench times: same broadcast threshold, pushdown
     // and aggregate settings, so the oracle checks the benched plans.
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt

@@ -41,23 +41,15 @@ object Evaluation {
     * (the fraction of gold pairs the *sampled* predictions recover —
     * at the default bound it equals full recall whenever a stratum
     * holds fewer than `perStratum` pairs, and degrades gracefully,
-    * never explosively, past it).
-    *
-    * `fullCorpus = true` restores the unbounded r2 behavior (no
-    * length blocking, no sampling) for small-corpus exact audits. */
+    * never explosively, past it). */
   def eval01LinkageMetrics(
       lake: Lake,
       threshold: Double = 0.05,
       lenWindow: Int = 40,
-      perStratum: Int = 200,
-      fullCorpus: Boolean = false
+      perStratum: Int = 200
   ): DataFrame = {
     val pred = Dedup
-      .dedup03NgramJaccard(
-        lake,
-        threshold = threshold,
-        lenWindow = if (fullCorpus) 1000000 else lenWindow
-      )
+      .dedup03NgramJaccard(lake, threshold = threshold, lenWindow = lenWindow)
       .select(col("doc_a"), col("doc_b"), col("jaccard"))
     val stratum = when(col("jaccard") < 0.5, "j_005_050")
       .when(col("jaccard") < 0.8, "j_050_080")
@@ -72,26 +64,22 @@ object Evaluation {
         "n_pred_total",
         count(lit(1)).over(Window.partitionBy("stratum"))
       )
-    val sampled =
-      if (fullCorpus) strat
-      else {
-        // Knuth-style multiplicative hash, reduced mod a prime — small
-        // enough that neither engine overflows 64-bit signed math.
-        val h =
-          ((col("doc_a") % 1000003L) * 2654435761L + col("doc_b") % 1000003L) % 1000003L
-        strat
-          .withColumn("h", h)
-          .withColumn(
-            "rn",
-            row_number().over(
-              Window
-                .partitionBy("stratum")
-                .orderBy(col("h"), col("doc_a"), col("doc_b"))
-            )
-          )
-          .filter(col("rn") <= perStratum)
-          .drop("h", "rn")
-      }
+    // Knuth-style multiplicative hash, reduced mod a prime — small
+    // enough that neither engine overflows 64-bit signed math.
+    val h =
+      ((col("doc_a") % 1000003L) * 2654435761L + col("doc_b") % 1000003L) % 1000003L
+    val sampled = strat
+      .withColumn("h", h)
+      .withColumn(
+        "rn",
+        row_number().over(
+          Window
+            .partitionBy("stratum")
+            .orderBy(col("h"), col("doc_a"), col("doc_b"))
+        )
+      )
+      .filter(col("rn") <= perStratum)
+      .drop("h", "rn")
     val d = lake.documents
       .select(col("doc_id"), text.bagFingerprint(col("text")).as("fp"))
     val gold = d

@@ -419,8 +419,8 @@ object Similarity {
     * fewer vectors and the driver's share stays the same. */
   private[graft] val TrainCapBytes: Long = 64L << 20
 
-  /** trainEvery's deterministic sample: the xxhash64(vec_id) stripe of
-    * stride `every` — a pure function of vec_id, no RNG. */
+  /** A deterministic sample: the xxhash64(vec_id) stripe of stride
+    * `every` — a pure function of vec_id, no RNG. */
   private def stripe(frame: DataFrame, every: Long): DataFrame =
     frame.filter(pmod(xxhash64(col("vec_id")), lit(every)) === 0)
 
@@ -428,7 +428,7 @@ object Similarity {
     * vectors of `frame` in vec_id order. `capBytes` becomes a vector
     * cap at the widest dimension (never fewer than the `minRows` seeds
     * the codebook needs). At or below the cap the whole set trains.
-    * Above it the set is trainEvery's xxhash64 stripe with stride
+    * Above it the set is the xxhash64(vec_id) stripe with stride
     * ⌈n/cap⌉ (about `cap` vectors); a stripe too small to seed
     * `minRows` clusters falls back to the first `cap` rows read, so a
     * sampled codebook is never degenerate.
@@ -929,8 +929,7 @@ object Similarity {
       coarseIters: Int = 3,
       m: Int = 8,
       ks: Int = 16,
-      pqIters: Int = 2,
-      trainEvery: Int = 1
+      pqIters: Int = 2
   ): DataFrame = {
     val all = vecs(lake).localCheckpoint()
     val headDim = all.select(size(col("v"))).head(1)
@@ -938,7 +937,7 @@ object Similarity {
     val sd = headDim.head.getInt(0) / m
     val nl = resolveNlist(all, nlist)
     val (cents, cellIds, pqCents, codes) =
-      ivfPqBuild(all, nl, coarseIters, m, ks, pqIters, trainEvery)
+      ivfPqBuild(all, nl, coarseIters, m, ks, pqIters)
     ivfPqSearch(all, cents, cellIds, pqCents, codes, sd, k, nQueries, nprobe, m)
   }
 
@@ -953,49 +952,27 @@ object Similarity {
 
   /** IVF-PQ train: coarse centroids, cell assignments, residual
     * codebooks, residual codes — the four tables the persisted index
-    * ships. */
-  /** `trainEvery > 1` trains BOTH quantizers (coarse k-means and the
-    * per-subspace PQ codebooks) on a deterministic 1/trainEvery
-    * hash-sample of the corpus while still assigning and ENCODING
-    * every vector — the FAISS production guidance (quantizers train
-    * on a bounded sample; training on the full corpus is the
-    * anti-pattern at volume). Measured at sf30 (1.5M vectors,
-    * trainEvery=16): build+search 55.3 → 15.7 s (3.5×) with recall
-    * vs brute force unchanged — 0.34 vs 0.30 at ADC's lossy
-    * recall@10 (BASELINE round 12, "quantizer training is now
-    * sample-bound"). Deterministic — the sample is
-    * a pure function of vec_id (xxhash64 stripe), no RNG — and
-    * trainEvery=1 is bit-identical to the historical build (the
-    * oracle form) as long as the training set fits `TrainCapBytes`;
-    * above that cap `collectTrainingSet` stripes it even at
-    * trainEvery=1. A sample that misses the corpus entirely (tiny
-    * corpus, aggressive stride) falls back to full-corpus training
-    * rather than an empty codebook. */
+    * ships. Both quantizers (coarse k-means and the per-subspace PQ
+    * codebooks) train on a bounded sample while every vector is still
+    * assigned and ENCODED — the FAISS production guidance (training on
+    * the full corpus is the anti-pattern at volume). The bound is
+    * `TrainCapBytes`: below it the whole corpus trains, bit-identical
+    * to the historical build (the oracle form); above it
+    * `collectTrainingSet` trains on a deterministic xxhash64(vec_id)
+    * stripe whose stride follows from the input, falling back to the
+    * first rows read when the stripe cannot seed the codebook. */
   private def ivfPqBuild(
       all: DataFrame,
       nlist: Int,
       coarseIters: Int,
       m: Int,
       ks: Int,
-      pqIters: Int,
-      trainEvery: Int = 1
+      pqIters: Int
   ): (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    val trainSet =
-      if (trainEvery <= 1) all
-      else {
-        val sampled = stripe(all, trainEvery).localCheckpoint()
-        // A sample SMALLER than the codebooks it must seed (fewer
-        // rows than nlist coarse centroids or ks codewords per
-        // subspace) silently trains a degenerate quantizer — the
-        // seeds are `cluster < ks` over the training set, so missing
-        // rows mean missing codewords (advisor round 12). Fall back
-        // to full-corpus training, not just on empty.
-        if (sampled.count() < math.max(nlist, ks).toLong) all else sampled
-      }
-    val cents = kmeans(trainSet, nlist, coarseIters)
+    val cents = kmeans(all, nlist, coarseIters)
     val cells = argmaxCell(all, cents, Seq("v"))
       .select(col("vec_id"), col("cluster"), col("v"))
-    def residOf(frame: DataFrame): DataFrame = frame
+    val resid = cells
       .join(broadcast(cents), Seq("cluster"))
       .select(
         col("vec_id"),
@@ -1004,13 +981,7 @@ object Similarity {
       // lazy: pqTrainCore's first read materializes this chain and
       // every later consumer reads blocks
       .localCheckpoint(false)
-    val resid = residOf(cells)
-    val residTrain =
-      if (trainEvery <= 1) resid
-      else residOf(
-        argmaxCell(trainSet, cents, Seq("v"))
-          .select(col("vec_id"), col("cluster"), col("v")))
-    val (_, pqCents, codes) = pqTrainCore(resid, m, ks, pqIters, residTrain)
+    val (_, pqCents, codes) = pqTrainCore(resid, m, ks, pqIters)
     (cents, cells.select(col("vec_id"), col("cluster")), pqCents, codes)
   }
 
@@ -1116,8 +1087,7 @@ object Similarity {
       coarseIters: Int = 3,
       m: Int = 8,
       ks: Int = 16,
-      pqIters: Int = 2,
-      trainEvery: Int = 1
+      pqIters: Int = 2
   ): DataFrame = {
     val all = vecs(lake).localCheckpoint()
     val headDim = all.select(size(col("v"))).head(1)
@@ -1125,7 +1095,7 @@ object Similarity {
     val sd = headDim.head.getInt(0) / m
     val nl = resolveNlist(all, nlist)
     val (cents, cellIds, pqCents, codes) =
-      ivfPqBuild(all, nl, coarseIters, m, ks, pqIters, trainEvery)
+      ivfPqBuild(all, nl, coarseIters, m, ks, pqIters)
     val cand = ivfPqSearch(
       all, cents, cellIds, pqCents, codes, sd,
       k * refine, nQueries, nprobe, m, ordered = false
@@ -1252,10 +1222,7 @@ object Similarity {
       all: DataFrame,
       m: Int,
       ks: Int,
-      iters: Int,
-      // codebooks train on this frame (default: the full corpus);
-      // codes always encode `all` — see ivfPqBuild's trainEvery note
-      trainOn: DataFrame = null
+      iters: Int
   ): (DataFrame, DataFrame, DataFrame) = {
     // Subvector dimension from the schema-carried first row is a
     // driver scalar the planner needs anyway (slice lengths are
@@ -1286,7 +1253,7 @@ object Similarity {
     // of them — sliced into the m subspaces locally, and each subspace
     // runs LocalKernels.lloyd's L2 argmin from the first ks training
     // vectors as seeds.
-    val train = collectTrainingSet(if (trainOn == null) all else trainOn, ks)
+    val train = collectTrainingSet(all, ks)
     val codebooks = (0 until m).flatMap { sub =>
       val rows = train.map(v =>
         java.util.Arrays.copyOfRange(v, math.min(sub * sd, v.length),

@@ -655,36 +655,6 @@ class DedupSimilaritySpec extends AnyFunSuite {
     assert(kept.count() == rows.filter("kept").count())
   }
 
-  test("sim14 sampled training: valid complete results, deterministic, full-train identity") {
-    def rows(te: Int) = Similarity.sim14IvfPq(lake, trainEvery = te)
-      .collect().map(_.toSeq).toSeq
-    // trainEvery=1 is bit-identical to the historical (oracle) build
-    assert(rows(1) == Similarity.sim14IvfPq(lake).collect().map(_.toSeq).toSeq)
-    // sampled training still answers every query with k neighbors,
-    // and is deterministic run to run (hash stripe, no RNG)
-    val sampled = rows(4)
-    assert(sampled.size == rows(1).size, s"${sampled.size}")
-    assert(sampled == rows(4), "sampled training is not deterministic")
-    // aggressive stride on a tiny corpus falls back to full training
-    // instead of an empty codebook
-    assert(Similarity.sim14IvfPq(lake, trainEvery = 1000000).count() ==
-      rows(1).size.toLong)
-    // a NON-EMPTY sample smaller than max(nlist, ks) seeds fewer
-    // codewords than the codebooks need — it must also fall back to
-    // full training, bit-identically (advisor round 12). Find a
-    // stride whose deterministic hash stripe lands in (0, 16) on this
-    // corpus so the premise is guaranteed, then pin the identity.
-    val stride = (2 to 64).find { st =>
-      val c = lake.embeddings
-        .filter(org.apache.spark.sql.functions.expr(s"pmod(xxhash64(vec_id), $st) = 0"))
-        .count()
-      c > 0 && c < 16
-    }
-    assert(stride.nonEmpty, "no stride yields a small non-empty sample")
-    assert(rows(stride.get) == rows(1),
-      s"small non-empty sample (stride ${stride.get}) did not fall back")
-  }
-
   test("persisted IVF index: index-then-search equals train-then-search exactly") {
     val dir = java.nio.file.Files.createTempDirectory("ivf_index").toString
     Similarity.writeIvfIndex(lake, dir)

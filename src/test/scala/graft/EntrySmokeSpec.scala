@@ -8,30 +8,18 @@ class EntrySmokeSpec extends AnyFunSuite {
     assert(SparkEntry.entry(spark).count() > 0)
   }
 
-  test("every oracle key has a query; rows-only queries are the documented set") {
-    val q = SparkEntry.queries.keySet
-    val o = SparkEntry.oracleSql.keySet
-    assert((o -- q).isEmpty, s"oracles without queries: ${o -- q}")
-    // queries with no oracle get only the weaker rows-only gate — keep
-    // that set explicit so a forgotten oracle entry fails loudly here
-    // dedup05/emb01 left this set in round 13: their hash pipelines
-    // are splitmix64(java31) — mod-2^64 arithmetic the DuckDB oracle
-    // replays bit-for-bit (BASELINE round 13). rel14 left in round
-    // 15: the fixture corpus sits in Misra-Gries' exact-degeneration
-    // regime (31 distinct tokens << capacity 256 ⇒ decr = 0 ⇒
-    // lb = ub = exact count), so the oracle replays exact top-k; the
-    // bounded regime stays property-pinned in SketchSpec. The four
-    // that remain hold genuinely engine-private state (ImageIO
-    // bytes, HLL/KLL sketch layouts, learned BPE merges, Bloom bit
-    // layout), each property-tested instead.
-    val rowsOnly = Set(
-      "mm01_binary_meta",
-      "rel11_approx_stats",
-      "txt18_bpe_encode",
-      // Bloom filter bit layout is engine-private — no SQL oracle can
-      // replay might_contain; spec-pinned against exact dedup07
-      "dedup14_bloom_decontaminate"
-    )
-    assert(q -- o == rowsOnly, s"unexpected rows-only set: ${q -- o}")
+  test("registry names are unique") {
+    // a repeated name would silently drop one query from `queries`
+    val names = SparkEntry.registry.map(_.name)
+    assert(names.diff(names.distinct).isEmpty, s"repeated: ${names.diff(names.distinct)}")
+  }
+
+  test("an unknown query name is rejected, and the message names it") {
+    SparkEntry.requireKnown(Seq("q01_pricing_summary"))
+    val e = intercept[IllegalArgumentException] {
+      SparkEntry.requireKnown(Seq("q01_pricing_summary", "q01_pricing_sumary"))
+    }
+    assert(e.getMessage.contains("q01_pricing_sumary"), e.getMessage)
+    assert(!e.getMessage.contains("q01_pricing_summary"), e.getMessage)
   }
 }

@@ -25,7 +25,9 @@ class RelationalSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("every query has matching oracle or is declared rows-only") {
-    val missing = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet
+    val missing = SparkEntry.registry.collect {
+      case SparkEntry.Entry(name, _, SparkEntry.RowsOnly(_)) => name
+    }.toSet
     val surveyText = new String(
       java.nio.file.Files.readAllBytes(java.nio.file.Paths.get("SURVEY.md")),
       java.nio.charset.StandardCharsets.UTF_8
@@ -33,9 +35,9 @@ class RelationalSpec extends AnyFunSuite with BeforeAndAfterAll {
     val sec2 = surveyText
       .split("## §2")(1)
       .split("## §3")(0)
-    // A query without an oracle is allowed only if its own §2
+    // A registry entry may be `RowsOnly` only if its own §2
     // checklist line declares it `[rows-only]`, and a declared line
-    // must have no oracle: an oracle dropped from `oracleSql` (or one
+    // must be `RowsOnly`: an oracle swapped for a reason (or one
     // added without updating §2) fails here instead of passing
     // silently.
     val rowsOnly = sec2.linesIterator
