@@ -518,7 +518,7 @@ object SparkEntry {
       """SELECT c_mktsegment,
         |  COUNT(DISTINCT c_nationkey) AS n_nations,
         |  COUNT(*) AS n_customers,
-        |  ROUND(AVG(c_acctbal), 4) AS avg_acctbal
+        |  CAST(ROUND(AVG(CAST(c_acctbal AS DECIMAL(15,2))), 4) AS DOUBLE) AS avg_acctbal
         |FROM customer
         |GROUP BY c_mktsegment
         |ORDER BY c_mktsegment""".stripMargin)),

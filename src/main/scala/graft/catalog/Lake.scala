@@ -1,7 +1,15 @@
 package graft.catalog
 
+import org.apache.hadoop.fs.FileStatus
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.TableIdentifier
+import org.apache.spark.sql.execution.datasources.parquet.{
+  ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
 
 /** Catalog over a directory of parquet tables — the Spark-native analog
@@ -17,20 +25,18 @@ import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, Times
   */
 final case class Lake(spark: SparkSession, dir: String) {
 
-  /** Resolve with an EXPLICIT schema from the process-wide cache:
-    * a bare `spark.read.parquet` runs a footer-reading Spark job per
-    * call to infer the schema (measured: 1 job per resolve, even for
-    * the same path seconds apart in one session), and the suite
-    * resolves each table once per query invocation — hundreds of
-    * pure-overhead jobs per bench sweep (guide §6: metadata work is
-    * real I/O). The cache is STALENESS-GUARDED by the same per-entry
-    * (name, mtime, length) fingerprint discipline registerViews uses:
-    * a rewritten table re-infers, an unchanged one resolves with zero
-    * jobs. Data is never cached — only the StructType. */
-  def table(name: String): DataFrame = {
-    val path = pathOf(name)
-    spark.read.schema(Lake.schemaFor(spark, path)).parquet(path)
-  }
+  /** Resolve with an EXPLICIT schema: a bare `spark.read.parquet`
+    * runs a footer-reading Spark job per call to infer the schema,
+    * and the suite resolves each table once per query invocation.
+    * [[Lake.schemaFor]] reads the same footer on the driver instead,
+    * and caches the StructType per path under the table's
+    * (name, mtime, length) fingerprint — a rewritten table is read
+    * again, an unchanged one is not. Either way no Spark job runs.
+    * Data is never cached — only the StructType. */
+  def table(name: String): DataFrame = scan(name, Lake.schemaFor(spark, pathOf(name)))
+
+  private def scan(name: String, schema: StructType): DataFrame =
+    spark.read.schema(schema).parquet(pathOf(name))
 
   private def pathOf(name: String): String = s"$dir/$name.parquet"
 
@@ -57,7 +63,10 @@ final case class Lake(spark: SparkSession, dir: String) {
     // Harmless when ts is already micros; required before the scan can
     // even resolve a nanos schema.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = table("events")
+    normalizeEvents(table("events"))
+  }
+
+  private def normalizeEvents(raw: DataFrame): DataFrame =
     raw.schema("ts").dataType match {
       case LongType =>
         // `ts div 1000`, NOT `ts / 1000`: Column./ is double division and
@@ -67,7 +76,7 @@ final case class Lake(spark: SparkSession, dir: String) {
       case TimestampNTZType => raw.withColumn("ts", col("ts").cast(TimestampType))
       case _                => raw
     }
-  }
+
   def documents: DataFrame = table("documents")
   def embeddings: DataFrame = table("embeddings")
 
@@ -211,6 +220,11 @@ final case class Lake(spark: SparkSession, dir: String) {
     if (flat == "events") events else table(flat)
   }
 
+  /** [[resolve]] with a schema already read from the table's listing,
+    * so a registration lists each table once. */
+  private def resolve(name: String, schema: StructType): DataFrame =
+    if (name == "events") normalizeEvents(scan(name, schema)) else scan(name, schema)
+
   /** Register every table for `spark.sql`: flat temp views (the
     * historical surface) PLUS real `schema.table` databases + views
     * mirroring the reference's two-level namespace. The databases use
@@ -265,13 +279,14 @@ final case class Lake(spark: SparkSession, dir: String) {
             "unpartitioned parquet tables only, so its partition columns " +
             "would read as NULL")
     }
+    def readSchema(n: String) = Lake.schemaFor(spark, pathOf(n), listings(n))
     val schemas = prev match {
       case Some(r) if changed.forall(n =>
-            fps(n).nonEmpty && Lake.schemaFor(spark, pathOf(n)) == r.schemas(n)) =>
-        refreshTables(changed)
+            fps(n).nonEmpty && readSchema(n) == r.schemas(n)) =>
+        refreshTables(changed, r.schemas)
         r.schemas
       case _ =>
-        val all = tableNames.map(n => n -> Lake.schemaFor(spark, pathOf(n))).toMap
+        val all = tableNames.map(n => n -> readSchema(n)).toMap
         registerAll(all)
         all
     }
@@ -285,19 +300,20 @@ final case class Lake(spark: SparkSession, dir: String) {
     * `activity.events_src`; `activity.events` is a view over it). No
     * catalog object is missing at any point, so a concurrent reader
     * sees the old or the new listing, never an error. */
-  private def refreshTables(names: Seq[String]): Unit = names.foreach { n =>
-    resolve(n).createOrReplaceTempView(n)
-    val qn = if (n == "events") s"`${schemaOf(n)}`.`events_src`" else qualified(n)
-    spark.sql(s"REFRESH TABLE $qn")
-  }
+  private def refreshTables(names: Seq[String], schemas: Map[String, StructType]): Unit =
+    names.foreach { n =>
+      resolve(n, schemas(n)).createOrReplaceTempView(n)
+      val qn = if (n == "events") s"`${schemaOf(n)}`.`events_src`" else qualified(n)
+      spark.sql(s"REFRESH TABLE $qn")
+    }
 
   /** The full registration: every temp view, database, table, derived
-    * view and alias, from the schemas just inferred. */
+    * view and alias, from the schemas just read. */
   private def registerAll(schemas: Map[String, StructType]): Unit = {
     // Session-sticky: view expansion happens at query time, so the
     // nanos conf must hold for any later spark.sql over activity.events.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    tableNames.foreach(n => resolve(n).createOrReplaceTempView(n))
+    tableNames.foreach(n => resolve(n, schemas(n)).createOrReplaceTempView(n))
     val whBase = Lake.warehouseBase
     (schemaOf.values.toSeq.distinct :+ derivedSchema).sorted.foreach { db =>
       spark.sql(s"CREATE DATABASE IF NOT EXISTS `$db` LOCATION '$whBase/$db.db'")
@@ -310,9 +326,9 @@ final case class Lake(spark: SparkSession, dir: String) {
     // references) and again per spark.sql query — ~58 pure-metadata
     // jobs on a fresh session (OPTIMIZATION_r16.md). A catalog table
     // stores the StructType, so analysis is a catalog lookup: zero
-    // jobs. The
-    // schema comes from [[Lake.schemaFor]] (fingerprint-guarded, so a
-    // rewritten table re-infers); `LOCATION` makes the table EXTERNAL —
+    // jobs. The schema is the footer schema [[Lake.schemaFor]] read on
+    // the driver (fingerprint-guarded, so a rewritten table's footer is
+    // read again); `LOCATION` makes the table EXTERNAL —
     // DROP never touches the parquet files (CatalogSpec pins this).
     // Trade-off, documented: Spark caches a catalog table's resolved
     // relation (file listing included) per session, so an EXTERNAL
@@ -323,14 +339,21 @@ final case class Lake(spark: SparkSession, dir: String) {
     // full path DROPs and re-CREATEs: a concurrent `spark.sql` that
     // analyses a name inside that window fails with "table not found".
     // The in-place path has no such window.
-    def registerTable(qn: String, path: String, schema: StructType): Unit = {
+    // A name the session catalog does not hold needs no DROP: the
+    // lookup parses no SQL, and a cold registration skips 21 statements.
+    def held(db: String, name: String): Boolean =
+      spark.sessionState.catalog.tableExists(TableIdentifier(name, Some(db)))
+    def registerTable(db: String, name: String, path: String, schema: StructType): Unit = {
+      val qn = s"`$db`.`$name`"
       // CREATE TABLE has no OR REPLACE in the v1 path, and the name
       // may be held by an old-style view (pre-table registration in
       // the same session) — drop whichever object type holds it.
-      try spark.sql(s"DROP VIEW IF EXISTS $qn")
-      catch { case scala.util.control.NonFatal(_) => () }
-      try spark.sql(s"DROP TABLE IF EXISTS $qn")
-      catch { case scala.util.control.NonFatal(_) => () }
+      if (held(db, name)) {
+        try spark.sql(s"DROP VIEW IF EXISTS $qn")
+        catch { case scala.util.control.NonFatal(_) => () }
+        try spark.sql(s"DROP TABLE IF EXISTS $qn")
+        catch { case scala.util.control.NonFatal(_) => () }
+      }
       spark.sql(
         s"CREATE TABLE $qn (${schema.toDDL}) USING parquet LOCATION '$path'")
     }
@@ -343,7 +366,7 @@ final case class Lake(spark: SparkSession, dir: String) {
         // may reference a permanent table — analysis is still
         // job-free). The raw schema rides the same schemaFor cache.
         val raw = schemas(n)
-        registerTable(s"`${schemaOf(n)}`.`events_src`", path, raw)
+        registerTable(schemaOf(n), "events_src", path, raw)
         val tsExpr = raw("ts").dataType match {
           case LongType         => "timestamp_micros(ts div 1000) AS ts"
           case TimestampNTZType => "CAST(ts AS TIMESTAMP) AS ts"
@@ -352,12 +375,13 @@ final case class Lake(spark: SparkSession, dir: String) {
         val cols = raw.fieldNames
           .map { case "ts" => tsExpr; case c => s"`$c`" }
           .mkString(", ")
-        try spark.sql(s"DROP TABLE IF EXISTS ${qualified(n)}")
-        catch { case scala.util.control.NonFatal(_) => () }
+        if (held(schemaOf(n), n))
+          try spark.sql(s"DROP TABLE IF EXISTS ${qualified(n)}")
+          catch { case scala.util.control.NonFatal(_) => () }
         spark.sql(
           s"CREATE OR REPLACE VIEW ${qualified(n)} AS SELECT $cols " +
             s"FROM `${schemaOf(n)}`.`events_src`")
-      } else registerTable(qualified(n), path, schemas(n))
+      } else registerTable(schemaOf(n), n, path, schemas(n))
     }
     // Derived xref views LAST: their SQL references the base schema
     // views just created. Still definitions-only — a permanent view
@@ -415,35 +439,91 @@ object Lake {
   /** Process-wide parquet schema cache for [[Lake.table]]: path ->
     * (content fingerprint, schema). Values are METADATA only (a
     * StructType) — never data, listings, or results — so a cache hit
-    * changes no query plan semantics, it only skips the
-    * footer-reading inference job. The fingerprint (the table's
-    * [[tableListing]]) guards the tests'/update-verb's
-    * write-then-reread pattern: any file added, removed, or rewritten
-    * re-infers. An unreadable path fingerprints as "" and always
-    * re-infers, surfacing the real error through the normal reader. */
+    * changes no query plan semantics, it only skips the footer read.
+    * The fingerprint (the table's [[tableListing]]) guards the
+    * tests'/update-verb's write-then-reread pattern: any file added,
+    * removed, or rewritten is read again. An unreadable path
+    * fingerprints as "" and is never cached, surfacing the real error
+    * through Spark's reader. */
   private val schemaCache = scala.collection.concurrent.TrieMap
     .empty[String, (String, StructType)]
 
+  /** The schema `spark.read.parquet(path).schema` reports, without its
+    * Spark job: the footer of the listing's [[TableListing.schemaFile]]
+    * is read on the driver. Spark's inference answers instead when
+    * `spark.sql.parquet.mergeSchema` is on (every footer counts), when
+    * the listing cannot decide the file, or when the driver read
+    * fails — so a broken table fails with Spark's own error. */
   private[catalog] def schemaFor(
       spark: SparkSession,
-      path: String
+      path: String,
+      listing: TableListing
   ): StructType = {
-    val fp = tableListing(spark, path).fingerprint
+    val fp = listing.fingerprint
     schemaCache.get(path) match {
       case Some((seen, s)) if fp.nonEmpty && seen == fp => s
       case _ =>
-        val s = spark.read.parquet(path).schema
+        val s = listing.schemaFile
+          .filterNot(_ => spark.sessionState.conf.isParquetSchemaMergingEnabled)
+          .flatMap(footerSchema(spark, _))
+          .getOrElse(spark.read.parquet(path).schema)
         if (fp.nonEmpty) schemaCache.put(path, (fp, s))
         s
     }
   }
 
-  /** One table path's listing: its content fingerprint and the names
-    * of its hive-style `key=value` subdirectories. */
+  private[graft] def schemaFor(spark: SparkSession, path: String): StructType =
+    schemaFor(spark, path, tableListing(spark, path))
+
+  /** One file's footer schema, read and converted as Spark's parquet
+    * inference does (ParquetFileFormat.mergeSchemasInParallel: the
+    * same footer reader, the same converter settings, and the
+    * all-nullable data schema a file relation reports). None when the
+    * read fails. */
+  private def footerSchema(spark: SparkSession, f: FileStatus): Option[StructType] =
+    try {
+      val conf = spark.sessionState.conf
+      val footer = ParquetFooterReader.readFooter(
+        HadoopInputFile.fromStatus(f, spark.sessionState.newHadoopConf()),
+        ParquetMetadataConverter.SKIP_ROW_GROUPS)
+      val converter = new ParquetToSparkSchemaConverter(
+        assumeBinaryIsString = conf.isParquetBinaryAsString,
+        assumeInt96IsTimestamp = conf.isParquetINT96AsTimestamp,
+        inferTimestampNTZ = conf.parquetInferTimestampNTZEnabled,
+        nanosAsLong = conf.legacyParquetNanosAsLong,
+        respectUnknownTypeAnnotation = conf.parquetReaderRespectUnknownTypeAnnotation)
+      Some(Bridge.asNullable(
+        ParquetFileFormat.readSchemaFromFooter(new Footer(f.getPath, footer), converter)))
+    } catch { case scala.util.control.NonFatal(_) => None }
+
+  /** One table path's listing: its content fingerprint, the names of
+    * its hive-style `key=value` subdirectories, and the file whose
+    * footer Spark's schema inference reads when mergeSchema is off
+    * (None when the listing cannot decide it). */
   private[catalog] final case class TableListing(
       fingerprint: String,
-      partitionDirs: Seq[String]
+      partitionDirs: Seq[String],
+      schemaFile: Option[FileStatus]
   )
+
+  /** The file Spark's parquet inference reads with mergeSchema off
+    * (ParquetUtils.inferSchema over the file index's leaves, sorted by
+    * qualified path): the first `_common_metadata`, else the first
+    * `_metadata`, else the first data file. Names the file index hides
+    * are skipped — tested on the names below the table path only, so a
+    * lake under a dot-named dir is read like any other. A visible
+    * subdirectory means leaves this two-level listing may not see (or
+    * partition columns), so None: Spark's inference decides. */
+  private def inferenceFile(children: Seq[FileStatus]): Option[FileStatus] = {
+    val visible = children.filterNot(c => Bridge.hiddenByFileIndex(c.getPath.getName))
+    if (visible.isEmpty || visible.exists(_.isDirectory)) None
+    else {
+      val leaves = visible.sortBy(_.getPath.toString)
+      val summaries = Seq("_common_metadata", "_metadata")
+      summaries.flatMap(s => leaves.find(_.getPath.getName == s)).headOption
+        .orElse(leaves.find(l => !summaries.contains(l.getPath.getName)))
+    }
+  }
 
   /** Lists a table path through its own FileSystem (local, HDFS, S3A
     * alike) and folds each child's name + mtime + length into the
@@ -477,12 +557,14 @@ object Lake {
             )
             .toSeq
       }
-      // Spark's partition discovery skips `_`- and `.`-prefixed dirs.
+      // Spark's partition discovery skips the names its file index hides.
       val partitionDirs = top.toSeq.collect {
         case st if st.isDirectory && st.getPath.getName.contains('=') &&
-            !st.getPath.getName.startsWith("_") && !st.getPath.getName.startsWith(".") =>
+            !Bridge.hiddenByFileIndex(st.getPath.getName) =>
           st.getPath.getName
       }
-      TableListing(entries.sorted.mkString("|"), partitionDirs.sorted)
-    } catch { case scala.util.control.NonFatal(_) => TableListing("", Nil) }
+      val isFile = top.length == 1 && top.head.getPath == fs.makeQualified(p)
+      val schemaFile = if (isFile) top.headOption else inferenceFile(top.toSeq)
+      TableListing(entries.sorted.mkString("|"), partitionDirs.sorted, schemaFile)
+    } catch { case scala.util.control.NonFatal(_) => TableListing("", Nil, None) }
 }

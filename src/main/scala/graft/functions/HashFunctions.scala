@@ -51,8 +51,4 @@ object hashing {
         )
       }: _*
     )
-
-  /** SimHash: per-token 64-bit hash; callers bit-vote per position.
-    * Exposed for the explode+groupBy implementation in Dedup. */
-  def simhashTokenBits(t: Column): Column = xxhash64(t)
 }

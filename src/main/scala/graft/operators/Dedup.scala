@@ -679,31 +679,6 @@ object Dedup {
       .orderBy("vec_a", "vec_b")
   }
 
-  /** Cluster resolution — the missing end of the near-dup pipeline:
-    * pair lists (dedup04) to surviving documents. Connected components
-    * over the pair graph via iterative min-label propagation, then one
-    * canonical survivor per cluster by (longest n_chars, then smallest
-    * doc_id) — the fuzzy generalization of the reference's per-key
-    * ROW_NUMBER dedup (materialize_fulltext.py:87-118, which keeps one
-    * row per DOI by source priority; here the "key" is the discovered
-    * component).
-    *
-    * Scale design: each iteration is ONE equi-join of the edge list
-    * against the current labels plus a groupBy-min — the standard
-    * distributed CC shape, linear shuffle volume per hop. Labels only
-    * ever decrease, so the fixpoint test is "sum(label) unchanged" —
-    * a single scalar action per iteration, no change-detection join.
-    * Edges and per-iteration labels are localCheckpointed: the loop
-    * re-reads both every hop, and without truncation the lineage (and
-    * task-retry recompute) doubles per iteration (same discipline as
-    * Graph.transitiveClosure — on a real cluster swap in reliable
-    * .checkpoint()). Iterations needed = component diameter: near-dup
-    * clusters are cliques-ish (every copy resembles every other), so
-    * diameter is 1-3 in practice; `maxIters` bounds adversarial
-    * chains. For graphs with genuinely long chains at 100 TB, replace
-    * propagation with alternating large-star/small-star rounds
-    * (O(log n) convergence) — same join primitives.
-    */
   /** Shingle-CONTAINMENT near-dup pairs: C(A,B) = |A∩B| / min(|A|,|B|)
     * >= threshold — catches subset duplication (a document embedded in
     * a boilerplate-wrapped copy) that symmetric Jaccard misses: a doc
@@ -1012,6 +987,20 @@ object Dedup {
       .select(col("u"), coalesce(col("lbl"), col("u")).as("lbl"))
   }
 
+  /** Cluster resolution — the missing end of the near-dup pipeline:
+    * pair lists (dedup04) to surviving documents. Connected components
+    * over the pair graph, then one canonical survivor per cluster by
+    * (longest n_chars, then smallest doc_id) — the fuzzy generalization
+    * of the reference's per-key ROW_NUMBER dedup
+    * (materialize_fulltext.py:87-118, which keeps one row per DOI by
+    * source priority; here the "key" is the discovered component).
+    *
+    * Scale design: the pair list is localCheckpointed once, then
+    * [[connectedComponentsStar]] labels it — alternating
+    * large-star/small-star rounds whose count is O(log n) whatever the
+    * component diameter, finished by the driver-side union-find once
+    * the live edges fit `StarCCLocalEdges`; `maxIters` bounds the star
+    * rounds. Each label is its component's smallest doc_id. */
   def dedup08ClusterResolve(
       lake: Lake,
       threshold: Double = 0.5,

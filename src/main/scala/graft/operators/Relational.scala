@@ -4,6 +4,7 @@ import graft.catalog.Lake
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
 /** Relational/analytical core — the reference's SQL-view + vignette
   * query surface re-expressed as declarative DataFrame plans.
@@ -247,7 +248,11 @@ object Relational {
       .agg(
         countDistinct(col("c_nationkey")).as("n_nations"),
         count(lit(1)).as("n_customers"),
-        round(avg("c_acctbal"), 4).as("avg_acctbal")
+        // c_acctbal holds cents: the mean of its DECIMAL(15,2) cast is
+        // exact, where a double sum's last bit (and so a 4dp rounding
+        // boundary) moved with the partition order.
+        round(avg(col("c_acctbal").cast(DecimalType(15, 2))), 4)
+          .cast(DoubleType).as("avg_acctbal")
       )
       .orderBy("c_mktsegment")
 

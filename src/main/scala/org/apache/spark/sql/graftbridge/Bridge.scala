@@ -34,5 +34,18 @@ object Bridge {
     * private[spark]). */
   def drainListeners(sc: org.apache.spark.SparkContext): Unit =
     sc.listenerBus.waitUntilEmpty()
+
+  /** Whether Spark's file index skips a listed name (`_`/`.` prefixes
+    * and `._COPYING_`, but not the parquet summary files), so a
+    * driver-side pick sees the leaves Spark sees (HadoopFSUtils is
+    * private[spark]). */
+  def hiddenByFileIndex(name: String): Boolean =
+    org.apache.spark.util.HadoopFSUtils.shouldFilterOutPathName(name)
+
+  /** The schema a file-source relation reports for an inferred data
+    * schema: every field nullable (StructType.asNullable is
+    * private[spark]). */
+  def asNullable(s: org.apache.spark.sql.types.StructType): org.apache.spark.sql.types.StructType =
+    s.asNullable
 }
 

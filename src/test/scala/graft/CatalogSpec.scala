@@ -2,7 +2,11 @@ package graft
 
 import graft.catalog.Lake
 import graft.operators.CatalogOps
+import graft.sources.Ingest
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.types.{LongType, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 
 class CatalogSpec extends AnyFunSuite {
@@ -222,6 +226,188 @@ class CatalogSpec extends AnyFunSuite {
       assert(reads.get() > 0)
       assert(sqlCount("SELECT COUNT(*) FROM trade.region") == 10)
     }
+  }
+
+  /** Spark jobs started while `body` runs, the listener bus drained on
+    * both sides so no earlier job is counted and no later one missed. */
+  private def jobsDuring(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    Bridge.drainListeners(sc)
+    val n = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      body
+      Bridge.drainListeners(sc)
+      n.get
+    } finally sc.removeSparkListener(listener)
+  }
+
+  private def tempDir(prefix: String): java.io.File =
+    java.nio.file.Files.createTempDirectory(prefix).toFile
+
+  /** A three-row (id, name) frame, with `score` when `wide`. */
+  private def idFrame(wide: Boolean): org.apache.spark.sql.DataFrame = {
+    import spark.implicits._
+    val df = Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "name")
+    if (wide) df.withColumn("score", lit(0.5)) else df
+  }
+
+  /** The one `part-*` file a single-partition write leaves in `dir`. */
+  private def partFile(dir: String): java.io.File =
+    new java.io.File(dir).listFiles().filter(_.getName.startsWith("part-")).head
+
+  private def copy(from: java.io.File, to: java.io.File): Unit = {
+    to.getParentFile.mkdirs()
+    java.nio.file.Files.copy(from.toPath, to.toPath)
+  }
+
+  /** Writes `rows` event rows whose ts is TIMESTAMP(NANOS) — a layout
+    * Spark cannot write — with parquet-hadoop's example writer. */
+  private def writeNanosEvents(file: String, rows: Int): Unit = {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    val schema = org.apache.parquet.schema.MessageTypeParser.parseMessageType(
+      """message events {
+        |  required int64 event_id;
+        |  required int64 user_id;
+        |  required binary event_type (STRING);
+        |  required int64 ts (TIMESTAMP(NANOS,false));
+        |}""".stripMargin)
+    val writer = ExampleParquetWriter
+      .builder(new org.apache.hadoop.fs.Path(file))
+      .withType(schema)
+      .withConf(spark.sparkContext.hadoopConfiguration)
+      .build()
+    val groups = new SimpleGroupFactory(schema)
+    try (0 until rows).foreach { i =>
+      writer.write(groups.newGroup()
+        .append("event_id", i.toLong).append("user_id", (i % 7).toLong)
+        .append("event_type", "view")
+        .append("ts", 1700000000000000000L + i * 1234567L))
+    } finally writer.close()
+  }
+
+  test("the driver footer schema equals Spark's inference on every layout, with no Spark job") {
+    val root = tempDir("graft-footer-")
+    try {
+      // (path, what the layout exercises); each path is new, so no
+      // cached schema answers for it
+      val layouts = Seq.newBuilder[(String, String)]
+      // single-file tables under a dot-named parent dir (pyarrow-written,
+      // like the benchmark's lake, which lives in `.bench_work/`)
+      val dotLake = new java.io.File(root, ".bench_work/lake")
+      Lake(spark, sfDir).tableNames.foreach { n =>
+        copy(new java.io.File(s"$sfDir/$n.parquet"), new java.io.File(dotLake, s"$n.parquet"))
+        layouts += s"$dotLake/$n.parquet" -> s"single file $n under a dot dir"
+      }
+      // Spark part files with _SUCCESS (and hidden .crc siblings), also
+      // under the dot dir: only names below the table path may hide
+      val parts = s"$dotLake/parts.parquet"
+      Lake(spark, sfDir).orders.repartition(3).write.parquet(parts)
+      assert(new java.io.File(s"$parts/_SUCCESS").exists())
+      layouts += parts -> "part-file dir with _SUCCESS"
+      // summary files: their schema differs from the data's, so only
+      // the right pick (_common_metadata, then _metadata) matches
+      val narrow = s"$root/narrow"
+      val wide = s"$root/wide"
+      idFrame(wide = false).coalesce(1).write.parquet(narrow)
+      idFrame(wide = true).coalesce(1).write.parquet(wide)
+      for ((name, summaries) <- Seq(
+          "common" -> Seq("_common_metadata"),
+          "meta" -> Seq("_metadata"),
+          "both" -> Seq("_metadata", "_common_metadata"))) {
+        val dir = s"$root/summary_$name.parquet"
+        copy(partFile(narrow), new java.io.File(s"$dir/part-00000.parquet"))
+        summaries.foreach(s => copy(partFile(wide), new java.io.File(s"$dir/$s")))
+        layouts += dir -> s"dir holding ${summaries.mkString(" and ")}"
+      }
+      // IngestSpec's schema-evolution dir: the files differ, so the
+      // pick must be Spark's first-by-path file
+      import spark.implicits._
+      Seq((1L, "a"), (2L, "b")).toDF("id", "name").write.json(s"$root/chunk1")
+      Seq((4L, "d", 0.4)).toDF("id", "name", "score").write.json(s"$root/chunk2")
+      val evolved = s"$root/evolved.parquet"
+      Ingest.convertChunked(spark, Seq(
+        s"$root/chunk1" -> idFrame(wide = false).schema,
+        s"$root/chunk2" -> idFrame(wide = true).schema), evolved)
+      layouts += evolved -> "schema-evolution dir"
+      // both orders of a narrow and a wide file, named so either sorts first
+      for ((first, second, tag) <- Seq((narrow, wide, "narrow"), (wide, narrow, "wide"))) {
+        val dir = s"$root/order_$tag.parquet"
+        copy(partFile(first), new java.io.File(s"$dir/part-00000-a.parquet"))
+        copy(partFile(second), new java.io.File(s"$dir/part-00000-b.parquet"))
+        layouts += dir -> s"two schemas, $tag file first"
+      }
+      // events in both ts layouts: TIMESTAMP_NTZ (the test lake's) and
+      // TIMESTAMP(NANOS)
+      val nanos = s"$root/events_nanos.parquet"
+      new java.io.File(nanos).mkdirs()
+      writeNanosEvents(s"$nanos/part-00000.parquet", 5)
+      layouts += nanos -> "events with TIMESTAMP(NANOS)"
+
+      val all = layouts.result()
+      assert(all.exists(_._2.startsWith("single file events")))
+      all.foreach { case (path, what) =>
+        var driver: StructType = null
+        val jobs = jobsDuring { driver = Lake.schemaFor(spark, path) }
+        assert(jobs == 0, s"$what: the schema read ran $jobs Spark jobs")
+        assert(driver == spark.read.parquet(path).schema, s"$what at $path")
+      }
+      // the picks above are not all one schema: the checks discriminate
+      assert(Lake.schemaFor(spark, s"$root/order_narrow.parquet").size == 2)
+      assert(Lake.schemaFor(spark, s"$root/order_wide.parquet").size == 3)
+      assert(Lake.schemaFor(spark, s"$root/summary_common.parquet").size == 3)
+      assert(Lake.schemaFor(spark, s"$nanos").apply("ts").dataType == LongType)
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(root)
+  }
+
+  test("registration and the in-place refresh run zero Spark jobs") {
+    withTempLake("graft-jobs-") { tmp =>
+      val l = Lake(spark, tmp)
+      assert(jobsDuring(l.registerViews()) == 0, "cold registration ran Spark jobs")
+      assert(sqlCount("SELECT COUNT(*) FROM trade.region") == 5)
+      val regionView = tempView("region")
+      Lake(spark, sfDir).resolve("region").limit(3)
+        .write.mode("overwrite").parquet(s"$tmp/region.parquet")
+      assert(jobsDuring(l.registerViews()) == 0, "the in-place refresh ran Spark jobs")
+      assert(!(tempView("region") eq regionView), "region was not refreshed")
+      assert(sqlCount("SELECT COUNT(*) FROM trade.region") == 3)
+    }
+  }
+
+  test("Spark's inference still answers the schema read: mergeSchema, a broken footer, a missing table") {
+    val root = tempDir("graft-fallback-")
+    try {
+      // mergeSchema on: every footer counts, so Spark merges them
+      idFrame(wide = false).coalesce(1).write.parquet(s"$root/merged.parquet")
+      idFrame(wide = true).coalesce(1).write.mode("append").parquet(s"$root/merged.parquet")
+      val merging = spark.newSession()
+      merging.conf.set("spark.sql.parquet.mergeSchema", "true")
+      var merged: StructType = null
+      assert(jobsDuring { merged = Lake.schemaFor(merging, s"$root/merged.parquet") } > 0)
+      assert(merged.fieldNames.toSeq == Seq("id", "name", "score"))
+      assert(merged == merging.read.parquet(s"$root/merged.parquet").schema)
+      // a truncated footer and a missing table fail with Spark's error
+      val broken = s"$root/broken.parquet"
+      idFrame(wide = false).coalesce(1).write.parquet(broken)
+      val f = partFile(broken)
+      val bytes = java.nio.file.Files.readAllBytes(f.toPath)
+      java.nio.file.Files.write(f.toPath, bytes.take(bytes.length - 6))
+      new java.io.File(f.getParent, s".${f.getName}.crc").delete()
+      // (a failed job's message carries its stage and task ids, so the
+      // comparison is the exception class and the root cause's message)
+      def rootCause(t: Throwable): Throwable = Option(t.getCause).fold(t)(rootCause)
+      for (path <- Seq(broken, s"$root/missing.parquet")) {
+        val ours = intercept[Exception](Lake.schemaFor(spark, path))
+        val sparks = intercept[Exception](spark.read.parquet(path).schema)
+        assert(ours.getClass == sparks.getClass, s"$path: $ours vs $sparks")
+        assert(rootCause(ours).getMessage == rootCause(sparks).getMessage,
+          s"$path: ${rootCause(ours)} vs ${rootCause(sparks)}")
+      }
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(root)
   }
 
   test("catalog search matches schema-qualified names") {

@@ -2,6 +2,12 @@ package graft
 
 import graft.catalog.Lake
 import graft.operators._
+import org.apache.spark.sql.execution.{
+  InputAdapter, ProjectExec, SortExec, SparkPlan, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.adaptive.{
+  AQEShuffleReadExec, AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec}
+import org.apache.spark.sql.execution.window.WindowExec
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Plan-shape assertions: the properties that make these operators
@@ -15,6 +21,34 @@ class PlanAuditSpec extends AnyFunSuite {
 
   private def plan(df: org.apache.spark.sql.DataFrame): String =
     df.queryExecution.executedPlan.toString
+
+  /** A physical node's children, seen through AQE's wrappers. */
+  private def children(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+    case q: QueryStageExec        => Seq(q.plan)
+    case r: ReusedExchangeExec    => Seq(r.child)
+    case _                        => p.children
+  }
+
+  private def all(p: SparkPlan): Seq[SparkPlan] = p +: children(p).flatMap(all)
+
+  /** The first operator at or under `p` that is not a sort, a
+    * projection, an exchange or a codegen/AQE wrapper: what a window
+    * over `p` actually reads. */
+  private def throughWrappers(p: SparkPlan): SparkPlan = p match {
+    case _: SortExec | _: ProjectExec | _: Exchange | _: WholeStageCodegenExec |
+        _: InputAdapter | _: AQEShuffleReadExec | _: QueryStageExec |
+        _: ReusedExchangeExec =>
+      throughWrappers(children(p).head)
+    case _ => p
+  }
+
+  /** What each WindowExec without a partition key in df's plan reads
+    * (one task sorts that whole input). */
+  private def globalWindowInputs(df: org.apache.spark.sql.DataFrame): Seq[SparkPlan] =
+    all(df.queryExecution.executedPlan).collect {
+      case w: WindowExec if w.partitionSpec.isEmpty => throughWrappers(w.child)
+    }
 
   test("q01: range filter is pushed to the parquet scan") {
     val p = plan(Relational.q01PricingSummary(lake))
@@ -639,6 +673,36 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(!p.contains("CartesianProduct"), p)
   }
 
+  test("evt10: its one global window reads the per-shard aggregate, never the events") {
+    // the high-water mark's prefix max runs in one task by design; its
+    // input is one row per arrival shard (6h of arrival time), so the
+    // "No Partition Defined" WARN it logs is benign
+    val df = Events.evt10LatenessProfile(lake)
+    val inputs = globalWindowInputs(df)
+    assert(inputs.size == 1, s"expected 1 unpartitioned Window:\n${plan(df)}")
+    inputs.head match {
+      case a: org.apache.spark.sql.execution.aggregate.BaseAggregateExec =>
+        assert(a.groupingExpressions.map(_.name) == Seq("shard"),
+          s"the global window reads an aggregate not keyed on shard:\n${plan(df)}")
+      case other => fail(s"the global window reads ${other.nodeName}, not the shard aggregate:\n${plan(df)}")
+    }
+  }
+
+  test("samp11: its one global window ranks the LIMIT takeN frame, never the corpus") {
+    // the rank is numbered in one task over at most takeN rows; the
+    // full schedule is never globally windowed
+    val takeN = 37
+    val df = TextAnalysis.samp11InterleaveSchedule(lake, takeN)
+    val inputs = globalWindowInputs(df)
+    assert(inputs.size == 1, s"expected 1 unpartitioned Window:\n${plan(df)}")
+    val limit = inputs.head match {
+      case t: org.apache.spark.sql.execution.TakeOrderedAndProjectExec => t.limit
+      case g: org.apache.spark.sql.execution.GlobalLimitExec            => g.limit
+      case other => fail(s"the global window reads ${other.nodeName}, not a limit:\n${plan(df)}")
+    }
+    assert(limit == takeN, plan(df))
+  }
+
   test("cat05: prune audit never crosses the corpus with the predicate table") {
     val df = CatalogOps.cat05PruneAudit(lake)
     df.collect()
@@ -728,29 +792,20 @@ class PlanAuditSpec extends AnyFunSuite {
     // the batch's own one-row-per-key de-duplication.
     import org.apache.spark.sql.catalyst.plans.LeftAnti
     import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
-    import org.apache.spark.sql.execution.window.WindowExec
     import spark.implicits._
     val base = lake.orders.select("o_orderkey", "o_orderpriority", "o_totalprice")
     val batch = Seq((1L, "1-URGENT", 1.0), (7L, "2-HIGH", 2.0), (99999999L, "3-MEDIUM", 3.0))
       .toDF("o_orderkey", "o_orderpriority", "o_totalprice")
     val df = CatalogOps.upsert(base, batch, "o_orderkey")
     df.collect()
-    def children(p: SparkPlan): Seq[SparkPlan] = p match {
-      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
-      case q: QueryStageExec        => Seq(q.plan)
-      case r: ReusedExchangeExec    => Seq(r.child)
-      case _                        => p.children
-    }
     // every root-to-leaf path that ends at the base's parquet scan
     def scanPaths(p: SparkPlan): Seq[List[SparkPlan]] = p match {
       case _: FileSourceScanExec => Seq(List(p))
       case _                     => children(p).flatMap(scanPaths).map(p :: _)
     }
-    def all(p: SparkPlan): Seq[SparkPlan] = p +: children(p).flatMap(all)
     val root = df.queryExecution.executedPlan
     val paths = scanPaths(root)
     assert(paths.size == 1, s"base scanned ${paths.size} times:\n$root")

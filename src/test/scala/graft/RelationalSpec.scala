@@ -107,6 +107,21 @@ class RelationalSpec extends AnyFunSuite with BeforeAndAfterAll {
       "grouping sets differ from the composed per-set aggregates")
   }
 
+  test("rel03: the segment mean is exact, so its rows do not depend on the partition count") {
+    // FURNITURE's exact mean at sf0.001 is 4190.83825, on the 4dp
+    // rounding boundary: a double sum in partition order read
+    // 4190.8382 under 4 shuffle partitions and 4190.8383 under 1.
+    val rows = Seq("4", "1").map { n =>
+      val prev = spark.conf.get("spark.sql.shuffle.partitions")
+      spark.conf.set("spark.sql.shuffle.partitions", n)
+      try SparkEntry.queries("rel03_distinct_agg")(spark, sfDir).collect().toSeq
+      finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+    }
+    assert(rows(0) == rows(1), s"4 partitions: ${rows(0)}\n1 partition: ${rows(1)}")
+    assert(rows(0).map(r => r.getString(0) -> r.getDouble(3)).toMap.get("FURNITURE")
+      .contains(4190.8383), rows(0))
+  }
+
   test("q01 pricing summary has expected shape") {
     val df = SparkEntry.queries("q01_pricing_summary")(spark, sfDir)
     assert(df.columns.toSet.contains("sum_qty"))
