@@ -1,16 +1,16 @@
 package graft.catalog
 
-import org.apache.hadoop.fs.FileStatus
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.Footer
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.TableIdentifier
+import org.apache.spark.sql.catalyst.catalog.{CatalogTable, CatalogTableType}
 import org.apache.spark.sql.execution.datasources.parquet.{
   ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
-import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
 import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType}
 
 /** Catalog over a directory of parquet tables — the Spark-native analog
   * of the reference's view-only DuckDB file (reference:
@@ -25,6 +25,11 @@ import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, Times
   */
 final case class Lake(spark: SparkSession, dir: String) {
 
+  // Session-sticky, and set before any schema read: a TIMESTAMP(NANOS)
+  // footer converts only under it (events reads it as raw nanos), and
+  // view expansion at query time needs it for activity.events too.
+  spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+
   /** Resolve with an EXPLICIT schema: a bare `spark.read.parquet`
     * runs a footer-reading Spark job per call to infer the schema,
     * and the suite resolves each table once per query invocation.
@@ -33,10 +38,8 @@ final case class Lake(spark: SparkSession, dir: String) {
     * (name, mtime, length) fingerprint — a rewritten table is read
     * again, an unchanged one is not. Either way no Spark job runs.
     * Data is never cached — only the StructType. */
-  def table(name: String): DataFrame = scan(name, Lake.schemaFor(spark, pathOf(name)))
-
-  private def scan(name: String, schema: StructType): DataFrame =
-    spark.read.schema(schema).parquet(pathOf(name))
+  def table(name: String): DataFrame =
+    spark.read.schema(Lake.schemaFor(spark, pathOf(name))).parquet(pathOf(name))
 
   private def pathOf(name: String): String = s"$dir/$name.parquet"
 
@@ -49,33 +52,10 @@ final case class Lake(spark: SparkSession, dir: String) {
   def orders: DataFrame = table("orders")
   def lineitem: DataFrame = table("lineitem")
 
-  /** events.ts normalizer — the generated file has shipped with two
-    * physical layouts across testdata generations, and every operator
-    * downstream expects one logical type (TIMESTAMP, UTC session):
-    *   - TIMESTAMP(NANOS): Spark's schema converter rejects it, so read
-    *     raw nanos (legacy.parquet.nanosAsLong) and truncate to micros —
-    *     the same truncation DuckDB applies when it loads ns timestamps.
-    *   - TIMESTAMP(MICROS, isAdjustedToUTC=false): Spark reads it as
-    *     TIMESTAMP_NTZ; cast to TIMESTAMP — value-identical under the
-    *     UTC session zone GraftSession/Verify pin.
-    * Branch on the observed schema so either layout works. */
   def events: DataFrame = {
-    // Harmless when ts is already micros; required before the scan can
-    // even resolve a nanos schema.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    normalizeEvents(table("events"))
+    val raw = table("events")
+    raw.selectExpr(Lake.eventsColumns(raw.schema): _*)
   }
-
-  private def normalizeEvents(raw: DataFrame): DataFrame =
-    raw.schema("ts").dataType match {
-      case LongType =>
-        // `ts div 1000`, NOT `ts / 1000`: Column./ is double division and
-        // 19-digit nano values exceed double's 2^53 mantissa — the float
-        // round-trip shifts timestamps by up to a microsecond.
-        raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      case TimestampNTZType => raw.withColumn("ts", col("ts").cast(TimestampType))
-      case _                => raw
-    }
 
   def documents: DataFrame = table("documents")
   def embeddings: DataFrame = table("embeddings")
@@ -212,54 +192,47 @@ final case class Lake(spark: SparkSession, dir: String) {
 
   /** Name-based accessor that routes through the type-converting
     * reader where one exists — the ONE place that knows events needs
-    * the nanos conversion. Generic table iterators must use this, not
-    * `table(name)`, or they crash on the TIMESTAMP(NANOS) schema.
+    * its ts rule. Generic table iterators must use this, not
+    * `table(name)`, or they see events' raw ts column.
     * Accepts flat ("orders") or qualified ("trade.orders") names. */
   def resolve(name: String): DataFrame = {
     val flat = name.split('.').last
     if (flat == "events") events else table(flat)
   }
 
-  /** [[resolve]] with a schema already read from the table's listing,
-    * so a registration lists each table once. */
-  private def resolve(name: String, schema: StructType): DataFrame =
-    if (name == "events") normalizeEvents(scan(name, schema)) else scan(name, schema)
-
-  /** Register every table for `spark.sql`: flat temp views (the
-    * historical surface) PLUS real `schema.table` databases + views
-    * mirroring the reference's two-level namespace. The databases use
-    * an explicit tmpdir LOCATION so a plain unconfigured session never
-    * drops a spark-warehouse directory into the caller's cwd; base
-    * tables are EXTERNAL catalog tables over the parquet path, with
-    * events' nanos->micros conversion baked into the `activity.events`
-    * view text. */
+  /** Register every table for `spark.sql`: `registerViews(force = false)`. */
   def registerViews(): Unit = registerViews(force = false)
 
-  /** A commit costs in proportion to the tables it changed. Per
-    * session, the last registration records the dir, each table's
-    * content fingerprint (the two-level listing of
-    * [[Lake.tableListing]]: per-entry name + mtime + length through
-    * the Hadoop FileSystem, so it works on any store) and the schema
-    * each table was registered with. Then:
-    *   - no `<table>.parquet` fingerprint moved: return. Operators
-    *     that defensively call registerViews() per invocation (rel09,
-    *     rel12, searchCatalog, xref10) pay only the listing. Other
-    *     entries in the dir (`_landing/`, staging files) are not
-    *     tables and never trigger a registration;
-    *   - every changed table still exists with the schema it was
-    *     registered with (an upsert, an append, an in-place rewrite):
-    *     refresh just those tables in place — re-create the flat temp
-    *     view and `REFRESH TABLE` the catalog table. Nothing is
-    *     dropped, and no database, derived-view or alias statement is
-    *     re-issued: permanent views and SQL temp views are re-analysed
-    *     at query time, so they pick up the refreshed relation;
-    *   - anything else — the first registration in this session, a
-    *     different dir, `force` (the `update` verb's refresh
-    *     semantics), a changed schema or a missing table — runs the
-    *     full registration of [[registerAll]].
-    * The guard is LAST-registered-dir per session, not a seen-set: an
-    * intervening registration of a different dir replaces the
-    * (identically-named) views, so only the most recent dir is live.
+  /** Reconciles the lake's tables against the session catalog, so a
+    * registration costs in proportion to what changed. Per session, the
+    * last registration records its dir and each table's content
+    * fingerprint (the two-level listing of [[Lake.tableListing]]:
+    * per-entry name + mtime + length through the Hadoop FileSystem, so
+    * it works on any store). The tables reconciled are every table
+    * under `force` (the `update` verb's refresh semantics) or on this
+    * session's first registration of this dir, else those whose
+    * fingerprint moved. None: return at once, so operators that
+    * defensively call registerViews() per invocation (rel09, rel12,
+    * searchCatalog, xref10) pay only the listing; entries that are not
+    * `<table>.parquet` (`_landing/`, staging files) never count.
+    *
+    * Each reconciled table is a catalog table `schema.table`
+    * (`activity.events_src` for events). If the catalog already holds
+    * it as an EXTERNAL table with the footer schema at this table's
+    * location, it is refreshed in place with `REFRESH TABLE`: nothing is
+    * dropped, so a concurrent reader sees the old listing or the new
+    * one, never an error. Otherwise whatever holds the name is dropped
+    * and the table created again, with events' view and the table's
+    * flat alias — so the only window in which a reader of the name can
+    * fail opens on a schema or location change.
+    *
+    * On a session's first registration of a dir, and under `force`,
+    * the databases, the derived views and every flat alias are issued
+    * too, and the derived views again after any table was created
+    * again; none of these drops anything a reader can see. The guard is
+    * LAST-registered-dir per session, not a seen-set: an intervening
+    * registration of a different dir replaces the (identically-named)
+    * objects, so only the most recent dir is live.
     *
     * A table dir holding hive-style `key=value` subdirectories is
     * rejected: it would register without `PARTITIONED BY`, and its
@@ -279,130 +252,99 @@ final case class Lake(spark: SparkSession, dir: String) {
             "unpartitioned parquet tables only, so its partition columns " +
             "would read as NULL")
     }
-    def readSchema(n: String) = Lake.schemaFor(spark, pathOf(n), listings(n))
-    val schemas = prev match {
-      case Some(r) if changed.forall(n =>
-            fps(n).nonEmpty && readSchema(n) == r.schemas(n)) =>
-        refreshTables(changed, r.schemas)
-        r.schemas
-      case _ =>
-        val all = tableNames.map(n => n -> readSchema(n)).toMap
-        registerAll(all)
-        all
+    val fresh = prev.isEmpty
+    // An explicit tmpdir LOCATION, so a plain unconfigured session never
+    // drops a spark-warehouse directory into the caller's cwd.
+    if (fresh)
+      (schemaOf.values.toSeq.distinct :+ derivedSchema).sorted.foreach { db =>
+        spark.sql(s"CREATE DATABASE IF NOT EXISTS `$db` LOCATION '${Lake.warehouseBase}/$db.db'")
+      }
+    val tablesRecreated =
+      changed.filter(n => reconcile(n, Lake.schemaFor(spark, pathOf(n), listings(n))))
+    // Derived xref views after the tables their SQL references. Still
+    // definitions-only — nothing materializes until queried.
+    val viewsRecreated =
+      if (!fresh && tablesRecreated.isEmpty) Nil
+      else derivedViews.filter { case (n, sql) =>
+        createView(TableIdentifier(n, Some(derivedSchema)), sql)
+      }.map(_._1)
+    val recreated = tablesRecreated ++ viewsRecreated
+    // Flat names are SQL aliases, re-analysed per query, so an in-place
+    // refresh reaches them; one is re-created only with its target,
+    // because a view keeps the column list it was created with. The
+    // derived views get the reference's backward-compat unschema'd
+    // aliases too (create_unified_db.py:660 create_backward_compat_views
+    // — a notebook saying `FROM unified_entities` runs unmodified),
+    // skipped on a name conflict with a table, the reference's
+    // try/except-pass rule.
+    val aliases = tableNames.map(n => n -> qualified(n)) ++ derivedViews.collect {
+      case (n, _) if !tableNames.contains(n) => n -> s"$derivedSchema.$n"
     }
-    Lake.registered.put(spark, Lake.Registration(dir, fps, schemas))
+    aliases.foreach { case (n, target) =>
+      if (fresh || recreated.contains(n))
+        spark.sql(s"CREATE OR REPLACE TEMP VIEW `$n` AS SELECT * FROM $target")
+    }
+    Lake.registered.put(spark, Lake.Registration(dir, fps))
   }
 
-  /** In-place refresh of tables whose files changed under an unchanged
-    * schema. The flat temp view holds an analysed plan (file listing
-    * included), so it is re-created; the catalog table's cached
-    * relation is invalidated by `REFRESH TABLE` (events' raw sibling
-    * `activity.events_src`; `activity.events` is a view over it). No
-    * catalog object is missing at any point, so a concurrent reader
-    * sees the old or the new listing, never an error. */
-  private def refreshTables(names: Seq[String], schemas: Map[String, StructType]): Unit =
-    names.foreach { n =>
-      resolve(n, schemas(n)).createOrReplaceTempView(n)
-      val qn = if (n == "events") s"`${schemaOf(n)}`.`events_src`" else qualified(n)
-      spark.sql(s"REFRESH TABLE $qn")
-    }
-
-  /** The full registration: every temp view, database, table, derived
-    * view and alias, from the schemas just read. */
-  private def registerAll(schemas: Map[String, StructType]): Unit = {
-    // Session-sticky: view expansion happens at query time, so the
-    // nanos conf must hold for any later spark.sql over activity.events.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    tableNames.foreach(n => resolve(n, schemas(n)).createOrReplaceTempView(n))
-    val whBase = Lake.warehouseBase
-    (schemaOf.values.toSeq.distinct :+ derivedSchema).sorted.foreach { db =>
-      spark.sql(s"CREATE DATABASE IF NOT EXISTS `$db` LOCATION '$whBase/$db.db'")
-    }
-    // Base tables register as EXTERNAL TABLES with the cached explicit
-    // schema, not `parquet.`path`` views (round 16, guide §6 metadata):
-    // a path relation in a view body re-ran a footer-inference Spark
-    // job EVERY time the view text was analyzed — at registration
-    // (each derived view's analysis cascades through the base views it
-    // references) and again per spark.sql query — ~58 pure-metadata
-    // jobs on a fresh session (OPTIMIZATION_r16.md). A catalog table
-    // stores the StructType, so analysis is a catalog lookup: zero
-    // jobs. The schema is the footer schema [[Lake.schemaFor]] read on
-    // the driver (fingerprint-guarded, so a rewritten table's footer is
-    // read again); `LOCATION` makes the table EXTERNAL —
-    // DROP never touches the parquet files (CatalogSpec pins this).
-    // Trade-off, documented: Spark caches a catalog table's resolved
-    // relation (file listing included) per session, so an EXTERNAL
-    // rewrite is visible to `spark.sql` only after the next
-    // registerViews(), whose per-table fingerprint trips and refreshes
-    // that table (registerViews' in-place path) — the previous view
-    // form re-listed per query and hid that requirement. Only this
-    // full path DROPs and re-CREATEs: a concurrent `spark.sql` that
-    // analyses a name inside that window fails with "table not found".
-    // The in-place path has no such window.
-    // A name the session catalog does not hold needs no DROP: the
-    // lookup parses no SQL, and a cold registration skips 21 statements.
-    def held(db: String, name: String): Boolean =
-      spark.sessionState.catalog.tableExists(TableIdentifier(name, Some(db)))
-    def registerTable(db: String, name: String, path: String, schema: StructType): Unit = {
-      val qn = s"`$db`.`$name`"
-      // CREATE TABLE has no OR REPLACE in the v1 path, and the name
-      // may be held by an old-style view (pre-table registration in
-      // the same session) — drop whichever object type holds it.
-      if (held(db, name)) {
-        try spark.sql(s"DROP VIEW IF EXISTS $qn")
-        catch { case scala.util.control.NonFatal(_) => () }
-        try spark.sql(s"DROP TABLE IF EXISTS $qn")
-        catch { case scala.util.control.NonFatal(_) => () }
-      }
+  /** Brings table `n`'s catalog entry in line with its files, whose
+    * footer schema is `schema`; true when the table (or events' view)
+    * was created again.
+    *
+    * Base tables are EXTERNAL catalog tables with the footer schema, not
+    * `parquet.`path`` views: a path relation in a view body runs a
+    * footer-inference Spark job every time the view text is analysed,
+    * while a catalog table's schema is a lookup. `LOCATION` makes the
+    * table EXTERNAL, so DROP never touches the parquet files
+    * (CatalogSpec pins this). Spark caches a catalog table's resolved
+    * relation (file listing included) per session, so a rewrite is
+    * visible to `spark.sql` only after the `REFRESH TABLE` of the next
+    * registerViews(). events needs the per-layout ts rule, which a table
+    * cannot express: its raw file registers as `activity.events_src`,
+    * and `activity.events` is a view over it. */
+  private def reconcile(n: String, schema: StructType): Boolean = {
+    val db = schemaOf(n)
+    val id = TableIdentifier(if (n == "events") "events_src" else n, Some(db))
+    val path = new Path(pathOf(n))
+    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val held = catalogEntry(id)
+    val inPlace = held.exists(t =>
+      t.tableType == CatalogTableType.EXTERNAL && t.schema == schema &&
+        fs.makeQualified(new Path(t.location)) == fs.makeQualified(path))
+    if (inPlace) spark.sql(s"REFRESH TABLE ${id.quotedString}")
+    else {
+      held.foreach(drop(id, _))
       spark.sql(
-        s"CREATE TABLE $qn (${schema.toDDL}) USING parquet LOCATION '$path'")
+        s"CREATE TABLE ${id.quotedString} (${schema.toDDL}) USING parquet LOCATION '${pathOf(n)}'")
     }
-    tableNames.foreach { n =>
-      val path = pathOf(n)
-      if (n == "events") {
-        // events needs the per-layout ts normalization, which a table
-        // cannot express: register the RAW file as a sibling table and
-        // keep `activity.events` a thin view over it (a permanent view
-        // may reference a permanent table — analysis is still
-        // job-free). The raw schema rides the same schemaFor cache.
-        val raw = schemas(n)
-        registerTable(schemaOf(n), "events_src", path, raw)
-        val tsExpr = raw("ts").dataType match {
-          case LongType         => "timestamp_micros(ts div 1000) AS ts"
-          case TimestampNTZType => "CAST(ts AS TIMESTAMP) AS ts"
-          case _                => "ts"
-        }
-        val cols = raw.fieldNames
-          .map { case "ts" => tsExpr; case c => s"`$c`" }
-          .mkString(", ")
-        if (held(schemaOf(n), n))
-          try spark.sql(s"DROP TABLE IF EXISTS ${qualified(n)}")
-          catch { case scala.util.control.NonFatal(_) => () }
-        spark.sql(
-          s"CREATE OR REPLACE VIEW ${qualified(n)} AS SELECT $cols " +
-            s"FROM `${schemaOf(n)}`.`events_src`")
-      } else registerTable(schemaOf(n), n, path, schemas(n))
+    val viewRecreated = n == "events" && createView(TableIdentifier(n, Some(db)),
+      s"SELECT ${Lake.eventsColumns(schema).mkString(", ")} FROM ${id.quotedString}")
+    !inPlace || viewRecreated
+  }
+
+  /** CREATE OR REPLACE VIEW drops a held view before it creates the new
+    * one, so a view the catalog already holds with this text and this
+    * schema is kept as it is; a table holding the name is dropped. True
+    * when the view was created. */
+  private def createView(id: TableIdentifier, sql: String): Boolean = {
+    val held = catalogEntry(id)
+    val kept = held.exists(t => t.viewText.contains(sql) && t.schema == spark.sql(sql).schema)
+    if (!kept) {
+      held.filter(_.tableType != CatalogTableType.VIEW).foreach(drop(id, _))
+      spark.sql(s"CREATE OR REPLACE VIEW ${id.quotedString} AS $sql")
     }
-    // Derived xref views LAST: their SQL references the base schema
-    // views just created. Still definitions-only — a permanent view
-    // over permanent views, nothing materialized.
-    derivedViews.foreach { case (n, sql) =>
-      spark.sql(s"CREATE OR REPLACE VIEW `$derivedSchema`.`$n` AS $sql")
-    }
-    // Backward-compat UNSCHEMA'D aliases (create_unified_db.py:660
-    // create_backward_compat_views — "for backward compatibility with
-    // existing notebooks"): every derived view is also reachable by
-    // its bare name in the default namespace, so a reference-notebook
-    // query saying `FROM unified_entities` runs unmodified. Skipped
-    // on a name conflict with a base table, exactly the reference's
-    // try/except-pass rule (none conflict today; the guard keeps a
-    // future table from being shadowed by an alias).
-    derivedViews.foreach { case (n, _) =>
-      if (!tableNames.contains(n))
-        spark.sql(
-          s"CREATE OR REPLACE TEMP VIEW `$n` AS SELECT * FROM `$derivedSchema`.`$n`"
-        )
-    }
+    !kept
+  }
+
+  private def catalogEntry(id: TableIdentifier): Option[CatalogTable] = {
+    val catalog = spark.sessionState.catalog
+    if (catalog.tableExists(id)) Some(catalog.getTableMetadata(id)) else None
+  }
+
+  /** DROP by the object type the catalog reports. */
+  private def drop(id: TableIdentifier, held: CatalogTable): Unit = {
+    val kind = if (held.tableType == CatalogTableType.VIEW) "VIEW" else "TABLE"
+    spark.sql(s"DROP $kind ${id.quotedString}")
   }
 }
 
@@ -417,13 +359,34 @@ object Lake {
   private[catalog] lazy val warehouseBase: String =
     java.nio.file.Files.createTempDirectory("graft-warehouse-").toString
 
+  /** events' select list over the raw file's columns: `Lake.events`
+    * applies it, and it is the `activity.events` view text. The file
+    * has shipped with two physical ts layouts across testdata
+    * generations, and every operator downstream expects one logical
+    * type (TIMESTAMP, UTC session):
+    *   - TIMESTAMP(NANOS): read as raw nanos (Lake sets
+    *     legacy.parquet.nanosAsLong) and truncated to micros — the same
+    *     truncation DuckDB applies when it loads ns timestamps. `div`,
+    *     not `/`: `/` is double division, and 19-digit nano values
+    *     exceed double's 2^53 mantissa, which shifts timestamps by up
+    *     to a microsecond.
+    *   - TIMESTAMP(MICROS, isAdjustedToUTC=false): Spark reads it as
+    *     TIMESTAMP_NTZ; cast to TIMESTAMP — value-identical under the
+    *     UTC session zone GraftSession/Verify pin. */
+  private def eventsColumns(raw: StructType): Seq[String] =
+    raw.fieldNames.toSeq.map {
+      case "ts" =>
+        raw("ts").dataType match {
+          case LongType         => "timestamp_micros(ts div 1000) AS ts"
+          case TimestampNTZType => "CAST(ts AS TIMESTAMP) AS ts"
+          case _                => "ts"
+        }
+      case c => s"`$c`"
+    }
+
   /** What the last registration in a session recorded: its dir, and
-    * per table the content fingerprint and the registered schema. */
-  private final case class Registration(
-      dir: String,
-      fingerprints: Map[String, String],
-      schemas: Map[String, StructType]
-  )
+    * per table the content fingerprint. */
+  private final case class Registration(dir: String, fingerprints: Map[String, String])
 
   /** The last registration per session — the guard of registerViews.
     * WEAK-keyed on the session: a strong key would pin stopped

@@ -574,30 +574,8 @@ object Similarity {
       if (nlist > 0) nlist
       else math.ceil(math.sqrt(all.count().toDouble)).toInt.max(1)
     val cents = kmeans(all, k, iters)
-    val centRow = cents
-      .agg(collect_list(struct(col("cluster"), col("centroid"))).as("cs"))
-    // argmaxCell's map-only argmax, keeping the winning cosine too
-    val assigned = all
-      .crossJoin(broadcast(centRow))
-      .withColumn(
-        "w",
-        array_max(
-          transform(
-            col("cs"),
-            c =>
-              struct(
-                vectors.cosine(col("v"), c.getField("centroid")).as("ccos"),
-                negate(c.getField("cluster")).as("neg"),
-                c.getField("cluster").as("cluster")
-              )
-          )
-        )
-      )
-      .select(
-        col("vec_id"),
-        col("w.cluster").cast("long").as("cluster"),
-        col("w.ccos").as("ccos")
-      )
+    val assigned = argmaxCell(all, cents, Seq.empty, keepCos = true)
+      .withColumn("cluster", col("cluster").cast("long"))
     if (keptOnly) {
       // TopKByScore's contract (score DESC, id ASC ties) is exactly
       // the audit window's ORDER BY ccos DESC, vec_id — so the heap's

@@ -3,10 +3,13 @@ package graft
 import graft.catalog.Lake
 import graft.operators.CatalogOps
 import graft.sources.Ingest
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+import org.apache.spark.sql.catalyst.TableIdentifier
+import org.apache.spark.sql.catalyst.catalog.{
+  CreateTableEvent, DropTableEvent, ExternalCatalogEvent, ExternalCatalogEventListener}
 import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.types.{LongType, StructType}
+import org.apache.spark.sql.types.{LongType, StructType, TimestampType}
 import org.scalatest.funsuite.AnyFunSuite
 
 class CatalogSpec extends AnyFunSuite {
@@ -132,7 +135,8 @@ class CatalogSpec extends AnyFunSuite {
       val regionView = tempView("region")
       l0.resolve("region").limit(3)
         .write.mode("overwrite").parquet(s"$tmp/region.parquet")
-      l.registerViews() // NOT forced — the fingerprint must trip it
+      // NOT forced — the fingerprint must trip it
+      val rewrite = posted(l.registerViews())
       assert(
         spark.table("region").count() == 3,
         "non-forced registerViews served a stale catalog after a rewrite"
@@ -150,17 +154,21 @@ class CatalogSpec extends AnyFunSuite {
         .join(spark.read.parquet(s"$tmp/region.parquet"), $"n_regionkey" === $"r_regionkey")
         .count()
       assert(nationsKept < 25 && sqlCount(joinSql) == nationsKept)
-      assert(!(tempView("region") eq regionView), "region's temp view was not re-created")
+      assert(rewrite.created.isEmpty && rewrite.dropped.isEmpty,
+        s"a same-schema rewrite re-created catalog objects: $rewrite")
       assert(tempView("nation") eq nationView, "untouched nation's temp view was re-created")
 
       // (b) rewrite region with an added column: the schema changed, so
-      // the full registration runs (every temp view is re-created) and
-      // trade.region shows the new column.
+      // trade.region alone is dropped and created again, and both names
+      // show the new column (the flat alias is re-created with it).
       l0.resolve("region").limit(4).withColumn("r_extra", lit(7L))
         .write.mode("overwrite").parquet(s"$tmp/region.parquet")
-      l.registerViews()
+      val added = posted(l.registerViews())
       assert(sqlCount("SELECT SUM(r_extra) FROM trade.region") == 28)
-      assert(!(tempView("nation") eq nationView), "a schema change must re-register in full")
+      assert(sqlCount("SELECT SUM(r_extra) FROM region") == 28)
+      assert(added.created == Seq("trade.region") && added.dropped == Seq("trade.region"),
+        s"an added column must re-create trade.region only: $added")
+      assert(!(tempView("region") eq regionView) && (tempView("nation") eq nationView))
 
       // (c) a non-table entry in the lake dir is not a table change.
       val views = l.tableNames.map(n => n -> tempView(n)).toMap
@@ -168,11 +176,18 @@ class CatalogSpec extends AnyFunSuite {
       landing.mkdirs()
       java.nio.file.Files.write(new java.io.File(landing, "x.jsonl").toPath,
         "{\"o_orderkey\": 1}\n".getBytes("UTF-8"))
-      l.registerViews()
+      val landed = posted(l.registerViews())
+      assert(landed.created.isEmpty && landed.dropped.isEmpty, landed)
       l.tableNames.foreach { n =>
         assert(tempView(n) eq views(n), s"$n re-registered for a non-table file")
       }
       assert(sqlCount("SELECT COUNT(*) FROM trade.region") == 4)
+
+      // (d) force on an unchanged lake refreshes every table in place:
+      // the catalog already matches, so nothing is dropped.
+      val forced = posted(l.registerViews(force = true))
+      assert(forced.jobs == 0 && forced.created.isEmpty && forced.dropped.isEmpty, forced)
+      assert(sqlCount("SELECT SUM(r_extra) FROM region") == 28)
     }
   }
 
@@ -193,21 +208,39 @@ class CatalogSpec extends AnyFunSuite {
   test("readers of a table see no error while commits append to it and re-register") {
     // The in-place refresh drops nothing, so a concurrent reader sees
     // the old or the new listing. Appending keeps the old part files,
-    // so a stale listing stays readable.
+    // so a stale listing stays readable. A forced registration and a
+    // second session's first registration of the same dir find the
+    // catalog matching, so they refresh in place too. A dropped name
+    // fails a reader at analysis: the reader thread analyses both names
+    // on every pass and runs the reads on every tenth, and since the
+    // thread that changes the catalog posts its events synchronously, a
+    // probe analyses them again at every catalog event — the moments a
+    // drop can leave a name missing.
     withTempLake("graft-conc-") { tmp =>
       val l = Lake(spark, tmp)
       l.registerViews()
       val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
       val reads = new java.util.concurrent.atomic.AtomicInteger(0)
-      val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+      @volatile var phase = "append commits"
+      val errors = new java.util.concurrent.ConcurrentLinkedQueue[(String, Throwable)]()
+      def read(run: Boolean): Unit = {
+        val during = phase
+        try Seq("trade.region", "region").foreach { n =>
+          val df = spark.sql(s"SELECT COUNT(*), SUM(r_regionkey) FROM $n")
+          if (run) df.collect()
+        } catch { case t: Throwable => errors.add(during -> t) }
+      }
       val reader = new Thread(() =>
         while (!stop.get()) {
-          try {
-            spark.sql("SELECT COUNT(*), SUM(r_regionkey) FROM trade.region").collect()
-            reads.incrementAndGet()
-          } catch { case t: Throwable => errors.add(t) }
+          read(run = reads.get() % 10 == 0)
+          reads.incrementAndGet()
         }
       )
+      val probe = new ExternalCatalogEventListener {
+        override def onEvent(e: ExternalCatalogEvent): Unit = read(run = false)
+      }
+      val catalog = spark.sharedState.externalCatalog
+      catalog.addListener(probe)
       reader.start()
       try {
         val one = Lake(spark, sfDir).resolve("region").limit(1)
@@ -215,35 +248,54 @@ class CatalogSpec extends AnyFunSuite {
           one.write.mode("append").parquet(s"$tmp/region.parquet")
           l.registerViews()
         }
-        // let the reader run at least once after the last commit
+        phase = "registerViews(force = true)"
+        (1 to 5).foreach(_ => l.registerViews(force = true))
+        phase = "a second session's first registerViews()"
+        Lake(spark.newSession(), tmp).registerViews()
+        // let the reader run at least once after the last registration
         val seen = reads.get()
-        while (reads.get() < seen + 2 && errors.isEmpty) Thread.sleep(10)
+        while (reads.get() < seen + 2) Thread.sleep(10)
       } finally {
+        catalog.removeListener(probe)
         stop.set(true)
         reader.join()
       }
-      assert(errors.isEmpty, s"reader errors: ${errors.peek()}")
+      import scala.jdk.CollectionConverters._
+      val byPhase = errors.asScala.toSeq.groupBy(_._1).map { case (p, es) => s"$p: ${es.size}" }
+      assert(errors.isEmpty, s"reader errors (${byPhase.mkString(", ")}): ${errors.peek()}")
       assert(reads.get() > 0)
       assert(sqlCount("SELECT COUNT(*) FROM trade.region") == 10)
     }
   }
 
-  /** Spark jobs started while `body` runs, the listener bus drained on
-    * both sides so no earlier job is counted and no later one missed. */
-  private def jobsDuring(body: => Unit): Int = {
+  /** What `body` posted to the listener bus: the Spark jobs it started
+    * and the catalog objects (`db.name`) it created and dropped. */
+  private case class Posted(jobs: Int, created: Seq[String], dropped: Seq[String])
+
+  /** [[Posted]] for `body`, the listener bus drained on both sides so
+    * no earlier event is counted and no later one missed. */
+  private def posted(body: => Unit): Posted = {
     val sc = spark.sparkContext
     Bridge.drainListeners(sc)
-    val n = new java.util.concurrent.atomic.AtomicInteger(0)
+    val events = new java.util.concurrent.ConcurrentLinkedQueue[SparkListenerEvent]()
     val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
+      override def onJobStart(e: SparkListenerJobStart): Unit = events.add(e)
+      override def onOtherEvent(e: SparkListenerEvent): Unit = events.add(e)
     }
     sc.addSparkListener(listener)
     try {
       body
       Bridge.drainListeners(sc)
-      n.get
+      import scala.jdk.CollectionConverters._
+      val all = events.asScala.toSeq
+      Posted(
+        all.count(_.isInstanceOf[SparkListenerJobStart]),
+        all.collect { case CreateTableEvent(db, n) => s"$db.$n" },
+        all.collect { case DropTableEvent(db, n) => s"$db.$n" })
     } finally sc.removeSparkListener(listener)
   }
+
+  private def jobsDuring(body: => Unit): Int = posted(body).jobs
 
   private def tempDir(prefix: String): java.io.File =
     java.nio.file.Files.createTempDirectory(prefix).toFile
@@ -350,12 +402,19 @@ class CatalogSpec extends AnyFunSuite {
 
       val all = layouts.result()
       assert(all.exists(_._2.startsWith("single file events")))
-      all.foreach { case (path, what) =>
+      // registration refreshes a table in place only when the schema the
+      // catalog stored for it equals the footer schema
+      spark.sql(s"CREATE DATABASE footer_check LOCATION '$root/footer_check.db'")
+      try all.zipWithIndex.foreach { case ((path, what), i) =>
         var driver: StructType = null
         val jobs = jobsDuring { driver = Lake.schemaFor(spark, path) }
         assert(jobs == 0, s"$what: the schema read ran $jobs Spark jobs")
         assert(driver == spark.read.parquet(path).schema, s"$what at $path")
-      }
+        spark.sql(s"CREATE TABLE footer_check.t$i (${driver.toDDL}) USING parquet LOCATION '$path'")
+        val stored = spark.sessionState.catalog
+          .getTableMetadata(TableIdentifier(s"t$i", Some("footer_check"))).schema
+        assert(stored == driver, s"$what: the catalog stored $stored")
+      } finally spark.sql("DROP DATABASE footer_check CASCADE")
       // the picks above are not all one schema: the checks discriminate
       assert(Lake.schemaFor(spark, s"$root/order_narrow.parquet").size == 2)
       assert(Lake.schemaFor(spark, s"$root/order_wide.parquet").size == 3)
@@ -367,14 +426,43 @@ class CatalogSpec extends AnyFunSuite {
   test("registration and the in-place refresh run zero Spark jobs") {
     withTempLake("graft-jobs-") { tmp =>
       val l = Lake(spark, tmp)
-      assert(jobsDuring(l.registerViews()) == 0, "cold registration ran Spark jobs")
+      // a cold catalog: without its databases, the catalog holds no name
+      (l.schemaOf.values.toSeq.distinct :+ l.derivedSchema).foreach { db =>
+        spark.sql(s"DROP DATABASE IF EXISTS `$db` CASCADE")
+      }
+      val cold = posted(l.registerViews())
+      assert(cold.jobs == 0, "cold registration ran Spark jobs")
+      val tables = l.tableNames.map(n => if (n == "events") "activity.events_src" else l.qualified(n))
+      assert(cold.created.sorted == (tables ++ Seq("activity.events") ++ l.derivedQualified).sorted,
+        cold.created)
+      assert(cold.dropped.isEmpty, cold.dropped)
       assert(sqlCount("SELECT COUNT(*) FROM trade.region") == 5)
-      val regionView = tempView("region")
       Lake(spark, sfDir).resolve("region").limit(3)
         .write.mode("overwrite").parquet(s"$tmp/region.parquet")
-      assert(jobsDuring(l.registerViews()) == 0, "the in-place refresh ran Spark jobs")
-      assert(!(tempView("region") eq regionView), "region was not refreshed")
+      val refresh = posted(l.registerViews())
+      assert(refresh.jobs == 0, "the in-place refresh ran Spark jobs")
+      assert(refresh.created.isEmpty && refresh.dropped.isEmpty, refresh)
       assert(sqlCount("SELECT COUNT(*) FROM trade.region") == 3)
+      assert(sqlCount("SELECT COUNT(*) FROM region") == 3)
+    }
+  }
+
+  test("a session without the nanos conf registers and reads a TIMESTAMP(NANOS) events table") {
+    withTempLake("graft-nanos-") { tmp =>
+      val events = new java.io.File(s"$tmp/events.parquet")
+      org.apache.commons.io.FileUtils.deleteDirectory(events)
+      writeNanosEvents(s"$events/part-00000.parquet", 5)
+      val plain = spark.newSession()
+      plain.conf.set("spark.sql.legacy.parquet.nanosAsLong", "false")
+      try {
+        Lake(plain, tmp).registerViews()
+        val micros = (0 until 5).map(i => (1700000000000000000L + i * 1234567L) / 1000)
+        for (name <- Seq("activity.events", "events")) {
+          val df = plain.sql(s"SELECT unix_micros(ts) FROM $name ORDER BY event_id")
+          assert(plain.table(name).schema("ts").dataType == TimestampType, name)
+          assert(df.collect().map(_.getLong(0)).toSeq == micros, name)
+        }
+      } finally Lake(spark, sfDir).registerViews(force = true) // the catalog is shared
     }
   }
 
