@@ -49,9 +49,7 @@ object GraftSession {
         (1 << 20).toString)
       // spark.driver.maxResultSize stays at its 1g DEFAULT: the
       // guardrail exists to catch accidental driver-side collects,
-      // and no graft operator needs it raised — dedup13's sketch mode
-      // (the one former exception) now merges its partial bitmaps
-      // executor-side and fetches exactly one sketch (round-13 #9).
+      // and no graft operator needs it raised.
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.driver.host", "127.0.0.1")

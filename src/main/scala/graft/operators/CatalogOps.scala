@@ -258,11 +258,6 @@ object CatalogOps {
       .toDF("table_name", "column_name", "data_type", "schema_name")
   }
 
-  /** LLM-friendly dataset description: per-table row counts, on-disk
-    * bytes + column schema as one JSON document (datalake_cli.py:
-    * 124-230 `info`, the datalake.json/SCHEMA.md analog). Counts are
-    * parquet-footer metadata scans; the schema comes from the file
-    * footers, never a data read. */
   /** Auto-generated catalog markdown — the datalake_cli.py:409
     * `cmd_catalog` analog, except REAL: where the reference prints
     * "regeneration is manual for now" and points at a hand-written
@@ -310,6 +305,11 @@ object CatalogOps {
     sb.result()
   }
 
+  /** LLM-friendly dataset description: per-table row counts, on-disk
+    * bytes + column schema as one JSON document (datalake_cli.py:
+    * 124-230 `info`, the datalake.json/SCHEMA.md analog). Counts are
+    * parquet-footer metadata scans; the schema comes from the file
+    * footers, never a data read. */
   def infoJson(lake: Lake): String = {
     def esc(s: String): String =
       s.flatMap {

@@ -1950,6 +1950,9 @@ object Dedup {
       .orderBy("vec_id")
   }
 
+  /** Bit clamp of dedup13's Bloom fallback: 512 MB, 2^32 bits. */
+  private val Dedup13BloomMaxBits: Long = 1L << 32
+
   /** dedup13: EXACT-SUBSTRING dedup (the Lee et al. 2022 "ExactSubstr"
     * stage, arXiv:2107.06499 §4.1) — find maximal runs of >= k
     * consecutive tokens that recur verbatim in >= `minDocs` DISTINCT
@@ -1989,73 +1992,35 @@ object Dedup {
       lake: Lake,
       k: Int = 8,
       minDocs: Int = 2,
-      // true checkpoints the repartitioned gram stream (lineage cut,
-      // partitioning property LOST — downstream aggs re-shuffle); the
-      // default persists it instead: persist keeps hashpartitioning
-      // (gh), so the df aggregation runs shuffle-free off the cache
-      // and the semi-join probe re-reads the same blocks. Relying on
-      // ReuseExchange (the round-12 form) broke once the pre-filter
-      // landed: the optimizer pushes the dup semi-join below the
-      // probe side's repartition, the two exchange subtrees stop
-      // canonicalizing equal, and the kernel + corpus shuffle ran
-      // TWICE (plan-verified at sf1, ExplainOne).
-      materialize: Boolean = false,
       // Rare-window pre-filter (the round-13 fix for the sf30
       // shuffle-spill boundary). On this corpus 86-88% of window
       // occurrences are globally unique (measured sf1/sf10/sf30: kept
       // fraction 0.122/0.122/0.134), so shuffling one
       // (doc_id, pos, gh) row per corpus token mostly ships rows the
-      // df >= minDocs gate will discard. Modes:
-      //  - "set" (default): pass 1 shuffles ONLY the 8-byte hash
-      //    (projection-pruned scan, repartition-before-aggregate — a
-      //    ~12x narrower stream than the naive row) into an exact
-      //    occurrence count; hashes with >= minDocs occurrences — a
-      //    necessary condition for df >= minDocs — form the candidate
-      //    set. Pass 2 keeps only candidate occurrences, via a
-      //    codegen'd broadcast semi-join while the set fits
-      //    `maxBroadcastKeys`, else via a Bloom probe built FROM the
-      //    candidate set (memory-clamped; false positives only admit
-      //    extra rows into the exact aggregate). Exact either way.
-      //  - "sketch": one extra map-only scan folds the raw hash
-      //    stream into a mergeable seen-twice sketch
-      //    (graft.functions.TwiceSketch) — no pass-1 shuffle at all,
-      //    executor memory clamped, false positives only add rows.
-      //    Measured slower than "set" here (the treeReduce moves
-      //    ~4 GB of partial bitmaps at sf30) but the shape to reach
-      //    for when even an 8-byte-row shuffle is unaffordable.
-      //  - "off": the round-12 single-shuffle form.
-      //  - "auto" (default): "off" below `preFilterMinChars` of corpus
-      //    text, "set" above — the measured crossover on the bench
-      //    box sits between sf10 (155M chars: off 8.8 s vs set
-      //    10.6 s) and sf30 (465M chars: off 53.0 s spilling vs set
-      //    24.8 s, DuckDB 43.0); below the shuffle-spill boundary the
-      //    extra pass is pure constant, above it the narrow pass is
-      //    the difference between winning 0.6x and losing 1.23x. The
-      //    boundary is a per-executor shuffle-memory property — on a
-      //    real cluster, size it to executor memory or set the mode
-      //    explicitly.
-      // Ignored when minDocs < 2 (every window qualifies then).
-      preFilter: String = "auto",
+      // df >= minDocs gate will discard. At or above
+      // `preFilterMinChars` of corpus text (and minDocs >= 2), pass 1
+      // shuffles ONLY the 8-byte hash (projection-pruned scan,
+      // repartition-before-aggregate — a ~12x narrower stream than
+      // the naive row) into an exact occurrence count; hashes with
+      // >= minDocs occurrences — a necessary condition for
+      // df >= minDocs — form the candidate set. Pass 2 keeps only
+      // candidate occurrences, via a codegen'd broadcast semi-join
+      // while the set fits `maxBroadcastKeys`, else via a Bloom probe
+      // built FROM the candidate set (memory-clamped; false positives
+      // only admit extra rows into the exact aggregate). Exact either
+      // way. Below the threshold the plain single-shuffle form runs:
+      // the measured crossover on the bench box sits between sf10
+      // (155M chars: plain 8.8 s vs filtered 10.6 s) and sf30 (465M
+      // chars: plain 53.0 s spilling vs filtered 24.8 s, DuckDB
+      // 43.0); below the shuffle-spill boundary the extra pass is
+      // pure constant, above it the narrow pass is the difference
+      // between winning 0.6x and losing 1.23x. The boundary is a
+      // per-executor shuffle-memory property — on a real cluster,
+      // size it to executor memory.
       preFilterMinChars: Long = 256L << 20,
-      // "set" mode: switch from broadcast semi-join to the Bloom
-      // probe above this candidate-set size (16M longs ~= 128 MB raw)
-      maxBroadcastKeys: Long = 16L << 20,
-      // "sketch" mode sizing; also caps the "set" mode Bloom fallback.
-      // Executor sizing note (round 14): during the build EVERY
-      // concurrent task holds one partial (2 x sketchMaxBytes worst
-      // case) — size executors for tasksPerExecutor x 2 x
-      // sketchMaxBytes (local[32] at sf30 needed a 16g heap for 32
-      // concurrent 128 MB partials). The DRIVER needs no special
-      // sizing at the DEFAULT clamp… up to a point: the one fetched
-      // sketch serializes to <= 2 x sketchMaxBytes, so at the 512 MB
-      // default the fetch can reach 1 GiB — exactly the default
-      // spark.driver.maxResultSize — precisely when the byte clamp
-      // engages. Callers raising sketchMaxBytes past ~256 MB must
-      // raise spark.driver.maxResultSize to >= 2 x sketchMaxBytes +
-      // slack (GraftSession keeps Spark's 1g default; the old global
-      // 4g override was removed round 14).
-      sketchBitsPerKey: Int = 4,
-      sketchMaxBytes: Long = 512L << 20
+      // switch from broadcast semi-join to the Bloom probe above this
+      // candidate-set size (16M longs ~= 128 MB raw)
+      maxBroadcastKeys: Long = 16L << 20
   ): DataFrame = {
     val spark = lake.spark
     import spark.implicits._
@@ -2082,61 +2047,9 @@ object Dedup {
       .agg(coalesce(sum(length(col("text"))), lit(0L)))
       .as[Long]
       .collect()(0)
-    val mode =
-      if (minDocs < 2) "off"
-      else if (preFilter == "auto") {
-        if (totalChars >= preFilterMinChars) "set" else "off"
-      } else preFilter
     val gramsKept =
-      if (mode == "off") gramsRaw
-      else if (mode == "sketch") {
-        // Size the sketch from a cheap non-hashing scan: windows ~=
-        // tokens, ~6 chars per token+space, so chars/5 overestimates
-        // the distinct-key count a little; power-of-two rounding and
-        // the byte clamp absorb the slack either way.
-        val expected = math.max(64L, totalChars / 5)
-        val bits = sketchBitsPerKey
-        val cap = sketchMaxBytes
-        // Build over InternalRow (queryExecution.toRdd): the typed
-        // Dataset route boxes every 8-byte hash on its way into the
-        // fold — 76M boxed Longs at sf30 for a pass whose body is
-        // three bit-sets.
-        val partials = gramsRaw
-          .select("gh")
-          .queryExecution
-          .toRdd
-          .mapPartitions { it =>
-            val s = graft.functions.TwiceSketch
-              .create(expected, bits, maxBytesPerArray = cap)
-            it.foreach(r => s.add(r.getLong(0)))
-            Iterator.single(s)
-          }
-        // Merge EXECUTOR-SIDE down to one partition, then collect the
-        // single fully-merged sketch (round-13 review: treeReduce's
-        // final step fetched ~sqrt(P) partial bitmaps to the driver at
-        // once, which needed a global spark.driver.maxResultSize bump
-        // to 4g for a non-default mode — a guardrail that exists to
-        // catch accidental driver-side collects). Two shuffled-
-        // coalesce levels move the same partial bytes the treeReduce
-        // levels did, but the driver now receives exactly ONE sketch
-        // (<= 2 x sketchMaxBytes), under the default 1g for every
-        // realistic sizing (sf30: 2 x 64 MB).
-        def mergeLevel(
-            r: org.apache.spark.rdd.RDD[graft.functions.TwiceSketch],
-            n: Int) =
-          r.coalesce(n, shuffle = true)
-            .mapPartitions(it =>
-              if (it.hasNext) Iterator.single(it.reduce(_.merge(_)))
-              else Iterator.empty)
-        val p = partials.getNumPartitions
-        val level1 =
-          if (p > 8) mergeLevel(partials, math.ceil(math.sqrt(p)).toInt)
-          else partials
-        val sketch = mergeLevel(level1, 1).collect()(0)
-        val bcast = spark.sparkContext.broadcast(sketch)
-        gramsRaw.filter(graft.plans.SketchMightTwice(col("gh"), bcast))
-      } else {
-        require(mode == "set", s"unknown preFilter mode: $preFilter")
+      if (minDocs < 2 || totalChars < preFilterMinChars) gramsRaw
+      else {
         // Exact candidate set: hashes occurring >= minDocs times — a
         // superset of the df >= minDocs winners (df counts DISTINCT
         // docs <= occurrences). The hash column is projection-pruned
@@ -2162,7 +2075,7 @@ object Dedup {
           // raw-stream pass). Clamped bits; false positives only admit
           // extra rows into the exact df aggregate downstream.
           val bitsWanted = math.max(64L, nCand * 10L)
-          val numBits = math.min(bitsWanted, sketchMaxBytes * 8L)
+          val numBits = math.min(bitsWanted, Dedup13BloomMaxBits)
           val bf = cand.stat.bloomFilter("gh", math.max(nCand, 1L), numBits)
           val bcast = spark.sparkContext.broadcast(bf)
           gramsRaw.filter(graft.plans.BloomMightContainLong(col("gh"), bcast))
@@ -2170,28 +2083,32 @@ object Dedup {
       }
     val grams = gramsKept
       // both consumers (the df aggregation and the semi-join's stream
-      // side) key on gh: partition the window-hash stream once —
-      // the two consumer subtrees are identical, so ReuseExchange
-      // runs this shuffle ONCE and both read its files; neither
-      // re-runs scan+hash or pays its own corpus-stream exchange
+      // side) key on gh: partition the window-hash stream once and
+      // persist it. Persist keeps hashpartitioning(gh), so the df
+      // aggregation runs shuffle-free off the cache and the semi-join
+      // probe re-reads the same blocks; neither re-runs scan+hash or
+      // pays its own corpus-stream exchange. Relying on ReuseExchange
+      // (the round-12 form) broke once the pre-filter landed: the
+      // optimizer pushes the dup semi-join below the probe side's
+      // repartition, the two exchange subtrees stop canonicalizing
+      // equal, and the kernel + corpus shuffle ran TWICE
+      // (plan-verified at sf1, ExplainOne).
       .repartition(col("gh"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // Persist lifecycle (round-13 review): the cached blocks live as
     // long as the returned DataFrame's plan references them — Spark's
     // normal Dataset.persist contract; the ContextCleaner frees them
     // once the result is dereferenced. A session running MANY queries
     // after this one can reclaim earlier with
-    // spark.catalog.clearCache() (graft.Bench does exactly that
-    // before every timed run, so suite sweeps neither reuse nor pin
-    // this stream).
-    val gramsM =
-      if (materialize) grams.localCheckpoint(false)
-      else grams.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val dup = gramsM
+    // spark.catalog.clearCache() (graft.Bench does exactly that after
+    // each timed run stops its clock, so suite sweeps neither reuse
+    // nor pin this stream).
+    val dup = grams
       .groupBy("gh")
       .agg(countDistinct("doc_id").as("df"))
       .filter(col("df") >= minDocs)
       .select("gh")
-    val hits = gramsM.join(dup, Seq("gh"), "left_semi")
+    val hits = grams.join(dup, Seq("gh"), "left_semi")
     // Span merge as a per-doc ARRAY fold, not a window: collect each
     // doc's qualifying positions (one hash aggregation), sort the
     // bounded per-doc array, and fold gap>k span-splitting in a

@@ -1706,22 +1706,17 @@ object TextAnalysis {
     * repeated WITHIN its first document counts as novel there (the
     * global first occurrence is that document) and repeated
     * everywhere later. */
-  def txt28NgramNovelty(
-      lake: Lake,
-      k: Int = 8,
-      // false = full-lineage plan audits (see txt15)
-      materialize: Boolean = true
-  ): DataFrame = {
+  def txt28NgramNovelty(lake: Lake, k: Int = 8): DataFrame = {
     // one-exchange discipline (txt15): the window-hash stream feeds
     // the first-seen aggregation AND the verdict join, both keyed on
     // gh — partition once, checkpoint, reuse
-    val gramsRaw = lake.documents
+    val grams = lake.documents
       .select(
         col("doc_id"),
         explode(graft.plans.ShingleHashSeq(col("text"), k)).as("gh")
       )
       .repartition(col("gh"))
-    val grams = if (materialize) gramsRaw.localCheckpoint(false) else gramsRaw
+      .localCheckpoint(false)
     val firstSeen = grams
       .groupBy("gh")
       .agg(min("doc_id").as("first_doc"))

@@ -113,73 +113,19 @@ object MinHashSig {
     )
 }
 
-/** Probe of a broadcast [[graft.functions.TwiceSketch]] — dedup13's
-  * rare-window pre-filter predicate. The expression carries only the
-  * Broadcast HANDLE (small to serialize into tasks; the bitmap ships
-  * once per executor over the block manager — the same shape as
-  * Spark's own BloomFilterMightContain). Keeping the probe an
-  * expression keeps the filtered gram stream free of
-  * DeserializeToObject/SerializeFromObject: the mapPartitions
-  * formulation allocated a Tuple3 per corpus window (76M at sf30) on
-  * both sides of the filter. Real doGenCode (NOT CodegenFallback):
-  * a fallback predicate breaks whole-stage codegen for the entire
-  * scan+hash+filter stage — measured 43.6 s vs the 4.3 s codegen'd
-  * kernel floor at sf30. The generated code caches the
-  * broadcast-resolved sketch in per-stage mutable state, so the hot
-  * loop is three remixed bit tests on a local reference.
-  */
-case class SketchMightTwice(
-    child: Expression,
-    bc: org.apache.spark.broadcast.Broadcast[graft.functions.TwiceSketch]
-) extends UnaryExpression {
-
-  override def dataType: DataType = org.apache.spark.sql.types.BooleanType
-
-  override def prettyName: String = "sketch_might_twice"
-
-  @transient private lazy val sketch = bc.value
-
-  override def nullSafeEval(input: Any): Any =
-    sketch.mightTwice(input.asInstanceOf[Long])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val bcRef = ctx.addReferenceObj(
-      "twiceSketchBc",
-      bc,
-      "org.apache.spark.broadcast.Broadcast"
-    )
-    val sk = ctx.addMutableState("graft.functions.TwiceSketch", "twiceSketch")
-    nullSafeCodeGen(
-      ctx,
-      ev,
-      c => s"""
-        |if ($sk == null) {
-        |  $sk = (graft.functions.TwiceSketch) $bcRef.value();
-        |}
-        |${ev.value} = $sk.mightTwice($c);
-      """.stripMargin
-    )
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-object SketchMightTwice {
-  def apply(
-      c: Column,
-      bc: org.apache.spark.broadcast.Broadcast[graft.functions.TwiceSketch]
-  ): Column =
-    Bridge.column(SketchMightTwice(Bridge.expression(c), bc))
-}
-
 /** Codegen'd probe of a broadcast `util.sketch.BloomFilter` over a
-  * long column — dedup13's "set" pre-filter fallback when the exact
-  * candidate set outgrows a broadcast semi-join. Same design notes as
-  * [[SketchMightTwice]]: the expression carries only the broadcast
-  * handle, and a real doGenCode keeps the scan+hash+filter stage in
-  * whole-stage codegen (a fallback predicate measured 10x the
-  * codegen'd kernel floor on that stage).
+  * long column — dedup13's pre-filter fallback when the exact
+  * candidate set outgrows a broadcast semi-join. Two design choices:
+  *  - The expression carries only the Broadcast HANDLE: small to
+  *    serialize into tasks, while the bitmap ships once per executor
+  *    over the block manager (the shape of Spark's own
+  *    BloomFilterMightContain).
+  *  - A real doGenCode, NOT CodegenFallback: a fallback predicate
+  *    breaks whole-stage codegen for the entire scan+hash+filter
+  *    stage (measured 10x the codegen'd kernel floor on that stage).
+  *    The generated code caches the broadcast-resolved filter in
+  *    per-stage mutable state, so the hot loop probes a local
+  *    reference.
   */
 case class BloomMightContainLong(
     child: Expression,

@@ -578,11 +578,7 @@ class PlanAuditSpec extends AnyFunSuite {
   }
 
   test("dedup13: hash-keyed index, per-doc array fold, no window, no cartesian") {
-    // materialize=false: audit the full lineage, not the checkpoint's
-    // Scan ExistingRDD stump
-    val p = plan(
-      graft.operators.Dedup.dedup13ExactSubstring(lake, materialize = false)
-    )
+    val p = plan(graft.operators.Dedup.dedup13ExactSubstring(lake))
     // the frequency index and semi-join key on the 8-byte window hash,
     // never on a gram string column
     assert(p.contains("shingle_hash_seq"), p)
@@ -595,6 +591,26 @@ class PlanAuditSpec extends AnyFunSuite {
     // passes over a doc_id sort) must not reappear
     assert(p.contains("collect_list"), p)
     assert(!p.linesIterator.exists(_.contains("Window")), p)
+  }
+
+  test("dedup13: the corpus-size rule takes each pre-filter path") {
+    // (LeftSemi lines, Bloom probe present). The df semi-join is the
+    // one LeftSemi of the plain form. The candidate-set semi-join sits
+    // inside the persisted gram stream, whose plan prints once under
+    // each of its two InMemoryTableScans: 1 + 2. The Bloom path swaps
+    // that semi-join for the codegen'd probe.
+    def paths(df: org.apache.spark.sql.DataFrame) = {
+      val p = plan(df)
+      (p.linesIterator.count(_.contains("LeftSemi")),
+        p.contains("bloom_might_contain_long"))
+    }
+    // below preFilterMinChars (256 MB) at test scale: the plain form
+    assert(paths(Dedup.dedup13ExactSubstring(lake)) == (1, false))
+    assert(
+      paths(Dedup.dedup13ExactSubstring(lake, preFilterMinChars = 1L)) == (3, false))
+    assert(
+      paths(Dedup.dedup13ExactSubstring(
+        lake, preFilterMinChars = 1L, maxBroadcastKeys = 2)) == (1, true))
   }
 
   test("txt14: repetition is scan-shaped — native kernel, no aggregation") {

@@ -140,45 +140,10 @@ class SketchSpec extends AnyFunSuite {
     assert(rows.forall(_.getSeq[Any](1).size == 3))
   }
 
-  test("twice-sketch: no false negatives, whatever the partition split") {
-    import graft.functions.TwiceSketch
-    val rnd = new scala.util.Random(42)
-    // keys with known multiplicities: 500 unique, 200 doubled, 50 x5
-    val keys =
-      (1 to 500).map(i => (i.toLong * 0x9e3779b97f4a7c15L, 1)) ++
-        (1 to 200).map(i => (i.toLong * 0x2545f4914f6cdd1dL + 7, 2)) ++
-        (1 to 50).map(i => (i.toLong * 0xd1342543de82ef95L + 13, 5))
-    val stream = rnd.shuffle(keys.flatMap { case (h, n) => Seq.fill(n)(h) })
-    // split the occurrence stream across 7 "partitions" arbitrarily,
-    // build per-partition sketches, merge pairwise in tree order —
-    // exactly the treeReduce shape dedup13 uses
-    val parts = stream.grouped(math.max(1, stream.size / 7)).toSeq
-    val sketches = parts.map { p =>
-      val s = TwiceSketch.create(keys.size.toLong, 8)
-      p.foreach(s.add)
-      s
-    }
-    val merged = sketches.reduce(_.merge(_))
-    keys.foreach { case (h, n) =>
-      if (n >= 2)
-        assert(merged.mightTwice(h), s"repeated key $h missed (df=$n)")
-    }
-    // false positives stay sketch-like (well under half the uniques)
-    val fps = keys.count { case (h, n) => n == 1 && merged.mightTwice(h) }
-    assert(fps < 100, s"$fps/500 unique keys false-positive")
-  }
-
-  test("twice-sketch sizing: power-of-two bits, byte clamp honored") {
-    import graft.functions.TwiceSketch
-    val s = TwiceSketch.create(1000, 8)
-    assert(s.numBits >= 8000 && (s.numBits & (s.numBits - 1)) == 0)
-    val clamped = TwiceSketch.create(1L << 40, 8, maxBytesPerArray = 1L << 20)
-    assert(clamped.numBits == (1L << 23))
-  }
-
   test("dedup13: every pre-filter mode returns the identical result") {
+    // below preFilterMinChars at test scale: the plain form
     val off = graft.operators.Dedup
-      .dedup13ExactSubstring(lake, preFilter = "off")
+      .dedup13ExactSubstring(lake)
       .collect()
       .map(_.toString)
       .toSeq
@@ -186,41 +151,15 @@ class SketchSpec extends AnyFunSuite {
     for (
       (label, df) <- Seq(
         "set-broadcast" -> graft.operators.Dedup
-          .dedup13ExactSubstring(lake, preFilter = "set"),
+          .dedup13ExactSubstring(lake, preFilterMinChars = 1L),
         // candidate set larger than a 2-key broadcast cap: exercises
         // the Bloom-probe fallback branch
         "set-bloom" -> graft.operators.Dedup
-          .dedup13ExactSubstring(lake, preFilter = "set", maxBroadcastKeys = 2),
-        "sketch" -> graft.operators.Dedup
-          .dedup13ExactSubstring(lake, preFilter = "sketch"),
-        // auto at test scale resolves to "off"; force the boundary
-        // down to cover the auto->set decision too
-        "auto-set" -> graft.operators.Dedup
-          .dedup13ExactSubstring(lake, preFilterMinChars = 1L)
+          .dedup13ExactSubstring(lake, preFilterMinChars = 1L, maxBroadcastKeys = 2)
       )
     ) {
       val got = df.collect().map(_.toString).toSeq
       assert(got == off, s"$label spans differ from the unfiltered form")
     }
-  }
-
-  test("probe positions stay in bounds at the 512 MB clamp (numBits = 2^32)") {
-    // Int-truncated positions go NEGATIVE for half of all probes once
-    // mask >= 2^31 — i.e. exactly when the memory clamp the sketch
-    // exists for engages (round-13 review). One full-size sketch
-    // (2 x 512 MB bitmaps) exercises the whole position range.
-    // The two bitmaps need ~1 GB of heap; on a constrained test JVM
-    // (SPARK_DRIVER_MEM below 2g) cancel rather than OOM the suite
-    // (advisor round 13) — build.sbt's default forked -Xmx is 8g.
-    assume(
-      Runtime.getRuntime.maxMemory >= (2L << 30),
-      "needs >= 2g heap for two 512 MB bitmaps")
-    val s = graft.functions.TwiceSketch.create(
-      expectedItems = 2_000_000_000L, bitsPerKey = 4)
-    assert(s.numBits == (1L << 32), s"clamp expected 2^32 bits, got ${s.numBits}")
-    val keys = Array.tabulate(5000)(i => (i.toLong + 1L) * 0x9e3779b97f4a7c15L)
-    keys.foreach(s.add)
-    keys.foreach(s.add)
-    assert(keys.forall(s.mightTwice), "twice-added keys must be twice-positive")
   }
 }
