@@ -3,10 +3,12 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** Vector math over `array<float>` embedding columns — built from
-  * codegen'd higher-order functions (zip_with/aggregate), computed in
+/** Vector math over `array<float>` embedding columns, computed in
   * double precision with a fixed (sequential) accumulation order so
-  * results are deterministic and engine-comparable.
+  * results are deterministic and engine-comparable. The dot product
+  * is the native VectorDot expression; `toDouble` and `l2Normalize`
+  * are `transform` lambdas, which run interpreted on Spark 4.1.2
+  * (ArrayTransform is a CodegenFallback).
   *
   * This is the Spark-native analog of the reference's FAISS flat
   * inner-product kernel (reference: scripts/build_embedding_linkage.py

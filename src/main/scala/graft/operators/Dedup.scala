@@ -1103,9 +1103,9 @@ object Dedup {
     * pretraining sampler runs after dedup: cluster, then sample
     * evenly across clusters).
     *
-    * Cells are dedup11's k-means machinery verbatim (broadcast
-    * centroids, max_by argmax assignment). The per-cell draw is
-    * DETERMINISTIC uniform: order by md5(vec_id) — a seeded hash
+    * Cells are dedup11's k-means machinery verbatim (driver-trained
+    * codebook, map-only argmax against its broadcast handle). The
+    * per-cell draw is DETERMINISTIC uniform: order by md5(vec_id) — a seeded hash
     * shuffle both engines compute identically — and keep rank <= m.
     * Scale shape: the rank window partitions by cluster over the
     * CORPUS stream (one shuffle), and WindowGroupLimit prunes each
@@ -1852,8 +1852,8 @@ object Dedup {
     * fixed k silently re-quadratifies the pair check as the corpus
     * grows (at k=10 and a billion vectors each cell pairs 10^8 rows
     * against itself). sqrt(N) keeps both the cell count and the
-    * expected cell size at sqrt(N) — the paper's guidance — at the
-    * cost of one count() over the already-checkpointed frame. The
+    * expected cell size at sqrt(N) — the paper's guidance — at no job
+    * of its own: the k-means training collect counts the rows. The
     * explicit-k path stays for the oracle, whose unrolled-Lloyd CTEs
     * need the literal. */
   def semanticDedup(
@@ -1867,16 +1867,14 @@ object Dedup {
       // either path at test scale.
       blockedCutover: Double = 1e8
   ): DataFrame = {
-    // One materialization feeds the count, the k-means training
-    // collect, the assignment pass and the pair join — without it the
-    // upstream plan re-executes per consumer.
+    // One materialization feeds the k-means training collect (which
+    // also counts the rows), the assignment pass and the pair join —
+    // without it the upstream plan re-executes per consumer.
     val all = all0.localCheckpoint(false)
-    val n = all.count()
-    val kEff =
-      if (k > 0) k
-      else math.ceil(math.sqrt(n.toDouble)).toInt.max(1)
-    val cents = Similarity.kmeans(all, kEff, iters)
-    // Sort-free per-vector argmax (max_by partial aggregation) — see
+    val cents = Similarity.kmeans(all, k, iters)
+    val n = cents.n
+    val kEff = if (k > 0) k else Similarity.autoK(n)
+    // Map-only per-vector argmax against the broadcast codebook — see
     // Similarity.argmaxCell for the shape and tiebreak argument.
     val assigned = Similarity
       .argmaxCell(all, cents, Seq("v", "nrm"))

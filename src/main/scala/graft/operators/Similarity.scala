@@ -2,11 +2,10 @@ package graft.operators
 
 import graft.catalog.Lake
 import graft.functions.vectors
-import graft.plans.LocalKernels
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import graft.plans.{Codebook, LocalKernels}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, StructField, StructType}
 
 /** Similarity search over the embeddings table — the Spark-native
   * analog of the reference's FAISS flat-IP linkage
@@ -320,69 +319,30 @@ object Similarity {
     * Candidate volume is nprobe/nlist of the corpus per query — the
     * knob trades recall for compute exactly as in the reference's
     * FAISS usage (build_embedding_linkage.py:246-273). */
-  /** Per-vector argmax over the k broadcast centroids as ONE
-    * partial-aggregating groupBy. The previous row_number-over-
-    * (vec_id) formulation shuffled all n×k scored rows and globally
-    * sorted them per Lloyd iteration just to keep one row per vector;
-    * max_by keyed on (score, -cluster) computes the same winner with
-    * map-side combine — k rows fold to 1 BEFORE the exchange, so the
-    * shuffle shrinks k× and carries no ordering — and reproduces the
-    * window's (score desc, cluster asc) tiebreak exactly. At a
-    * billion vectors × k centroids × iters iterations that shuffle
-    * was the dominant train-time cost.
-    *
-    * Physical reality, pinned in PlanAuditSpec: a struct-buffered
-    * declarative max_by can't use HashAggregate, so Spark plans
-    * SortAggregate with PARTITION-LOCAL sorts (global=false). Those
-    * sorts are near-linear here — the broadcast cross join emits the
-    * k scored rows of each vector consecutively, so the pre-partial
-    * sort sees an already-clustered stream — and nothing re-sorts
-    * across the wire: the only Exchange carries the one-row-per-
-    * vector partial results. No Window node anywhere. */
+  /** Per-vector nearest cell, map-only: `book.nearest` scores each
+    * vector against the broadcast codebook in one loop and keeps the
+    * best (greatest cosine, ties to the lowest cluster id; NaN ranks
+    * above any score). No exchange, join or lambda touches the
+    * assignment, and the driver-held centroids never cross a Spark
+    * stage: shipping them as a folded broadcast row cost a
+    * single-partition fold job and a broadcast exchange per use
+    * (PlanAuditSpec pins the shape). Payload columns ride along on the
+    * row. */
   private[graft] def argmaxCell(
       all: DataFrame,
-      cents: DataFrame,
+      book: Codebook,
       payload: Seq[String],
       // sim16's drift report needs the winning cosine itself; the
-      // fold already computes it, so keeping it is free
+      // kernel already computes it, so keeping it is free
       keepCos: Boolean = false
-  ): DataFrame = {
-    // MAP-ONLY argmax: the k centroids fold into one broadcast row and
-    // each vector picks its cell in a single transform + array_max
-    // pass. The earlier formulation (crossJoin(broadcast(cents)) to
-    // n x k rows, then groupBy(vec_id) + max_by) re-SHUFFLED the whole
-    // corpus to group an already-unique key — at 100 TB that exchange
-    // is the assignment's entire cost; this shape has none. The
-    // ordering key struct(ccos, -cluster, cluster) reproduces max_by's
-    // tiebreak exactly (best ccos, then smallest cluster; struct
-    // comparison is lexicographic, and both formulations rank NaN
-    // above any double), and payload columns are constant per vec_id
-    // so carrying them on the row is value-identical to carrying them
-    // through the aggregate.
-    val centRow = cents
-      .agg(collect_list(struct(col("cluster"), col("centroid"))).as("cs"))
+  ): DataFrame =
     all
-      .crossJoin(broadcast(centRow))
-      .withColumn(
-        "w",
-        array_max(
-          transform(
-            col("cs"),
-            c =>
-              struct(
-                vectors.cosine(col("v"), c.getField("centroid")).as("ccos"),
-                negate(c.getField("cluster")).as("neg"),
-                c.getField("cluster").as("cluster")
-              )
-          )
-        )
-      )
+      .select(col("vec_id") +: book.nearest(col("v")).as("w") +: payload.map(col): _*)
       .select(
         col("vec_id") +: col("w.cluster").as("cluster") +:
-          ((if (keepCos) Seq(col("w.ccos").as("ccos")) else Nil) ++
+          ((if (keepCos) Seq(col("w.score").as("ccos")) else Nil) ++
             payload.map(col)): _*
       )
-  }
 
   /** Spherical k-means (Lloyd iterations, cosine assignment,
     * arithmetic-mean update — identical assignments to the
@@ -399,19 +359,22 @@ object Similarity {
     * (`LocalKernels.lloyd`, the same arithmetic as the Spark
     * expressions). A distributed Lloyd step costs several jobs for
     * n × k scorings that take microseconds, so the per-job floor was
-    * the whole training cost. Returns a k-row local frame
-    * (cluster, centroid), so consumers plan it like any small table. */
-  def kmeans(all: DataFrame, k: Int = 10, iters: Int = 3): DataFrame = {
-    val rows = collectTrainingSet(all, k)
-    val (ids, cents) = LocalKernels.lloyd(rows, k, iters, cosine = true)
-    all.sparkSession.createDataFrame(
-      java.util.Arrays.asList(ids.indices.map(i => Row(ids(i), cents(i))): _*),
-      StructType(Seq(
-        StructField("cluster", IntegerType),
-        StructField("centroid", ArrayType(DoubleType), nullable = false)
-      ))
-    )
+    * the whole training cost. Returns the trained `Codebook`, which
+    * also carries the frame's row count and widest dimension, so
+    * callers need no job of their own for either. `k <= 0` requests
+    * AUTO-k = ⌈√N⌉ over the frame's N rows (dedup11's rule, shared by
+    * sim11/sim14/samp14), resolved from the same training job. */
+  def kmeans(all: DataFrame, k: Int = 10, iters: Int = 3): Codebook = {
+    val train = collectTrainingSet(all, k)
+    val kEff = if (k > 0) k else autoK(train.n)
+    new Codebook(
+      Seq(LocalKernels.lloyd(train.rows, kEff, iters, cosine = true)), train.n, train.dim)
   }
+
+  /** AUTO-k: ⌈√N⌉ cells, so cell count and expected cell size are
+    * both ~√N, the FAISS guidance at volume. */
+  private[graft] def autoK(n: Long): Int =
+    math.ceil(math.sqrt(n.toDouble)).toInt.max(1)
 
   /** Driver-side training cap: a quantizer trains on at most this many
     * bytes of raw vector doubles, 2^17 vectors at dim 64. The vector
@@ -424,14 +387,19 @@ object Similarity {
   private def stripe(frame: DataFrame, every: Long): DataFrame =
     frame.filter(pmod(xxhash64(col("vec_id")), lit(every)) === 0)
 
-  /** The training set of a driver-local Lloyd loop: the non-null
-    * vectors of `frame` in vec_id order. `capBytes` becomes a vector
-    * cap at the widest dimension (never fewer than the `minRows` seeds
-    * the codebook needs). At or below the cap the whole set trains.
-    * Above it the set is the xxhash64(vec_id) stripe with stride
-    * ⌈n/cap⌉ (about `cap` vectors); a stripe too small to seed
-    * `minRows` clusters falls back to the first `cap` rows read, so a
-    * sampled codebook is never degenerate.
+  /** A driver-local training set: the non-null vectors in vec_id
+    * order, the number of rows the frame held (null vectors included)
+    * and its widest dimension. */
+  private[graft] final case class TrainingSet(rows: Array[Array[Double]], n: Long, dim: Int)
+
+  /** The training set of a driver-local Lloyd loop. `capBytes` becomes
+    * a vector cap at the widest dimension (never fewer than the
+    * `minRows` seeds the codebook needs; `minRows <= 0` stands for the
+    * auto-k ⌈√N⌉). At or below the cap the whole set trains. Above it
+    * the set is the xxhash64(vec_id) stripe with stride ⌈n/cap⌉ (about
+    * `cap` vectors); a stripe too small to seed `minRows` clusters
+    * falls back to the first `cap` rows read, so a sampled codebook is
+    * never degenerate.
     *
     * One job counts the rows and reads the widest dimension; each
     * partition also ships its rows while they fit its 1/P share of
@@ -442,57 +410,58 @@ object Similarity {
       frame: DataFrame,
       minRows: Int,
       capBytes: Long = TrainCapBytes
-  ): Array[Array[Double]] = {
-    val vs = frame
-      .select(col("vec_id").cast("long"), col("v"))
-      .filter(col("v").isNotNull)
+  ): TrainingSet = {
+    val rowsIn = frame.select(col("vec_id").cast("long"), col("v"))
+    val vs = rowsIn.filter(col("v").isNotNull)
     def rowsOf(df: DataFrame): Array[(Long, Array[Double])] =
       df.collect().map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-    val rdd = vs.queryExecution.toRdd
+    val rdd = rowsIn.queryExecution.toRdd
     val share = capBytes / math.max(rdd.getNumPartitions, 1)
-    // per partition: (row count, widest dim, its rows or null past the share)
+    // per partition: (rows, non-null vectors, widest dim, its vectors
+    // or null past the share)
     val parts = rdd.mapPartitions { it =>
       val kept = Array.newBuilder[(Long, Array[Double])]
+      var rows = 0L
       var n = 0L
       var dim = 0
       var bytes = 0L
       it.foreach { r =>
-        val v = r.getArray(1).toDoubleArray()
-        n += 1
-        dim = math.max(dim, v.length)
-        bytes += 8L * v.length
-        if (bytes <= share) kept += ((r.getLong(0), v))
+        rows += 1
+        if (!r.isNullAt(1)) {
+          val v = r.getArray(1).toDoubleArray()
+          n += 1
+          dim = math.max(dim, v.length)
+          bytes += 8L * v.length
+          if (bytes <= share) kept += ((r.getLong(0), v))
+        }
       }
-      Iterator((n, dim, if (bytes <= share) kept.result() else null))
+      Iterator((rows, n, dim, if (bytes <= share) kept.result() else null))
     }.collect()
-    val n = parts.map(_._1).sum
-    val dim = parts.map(_._2).foldLeft(1)(math.max)
-    val cap = math.max(capBytes / (8L * dim), minRows.toLong)
+    val rows = parts.map(_._1).sum
+    val n = parts.map(_._2).sum
+    val dim = parts.map(_._3).foldLeft(0)(math.max)
+    val need = if (minRows > 0) minRows else autoK(rows)
+    val cap = math.max(capBytes / (8L * math.max(dim, 1)), need.toLong)
     val picked =
-      if (n <= cap && parts.forall(_._3 != null)) parts.flatMap(_._3)
+      if (n <= cap && parts.forall(_._4 != null)) parts.flatMap(_._4)
       else if (n <= cap) rowsOf(vs)
       else {
         val sample = rowsOf(stripe(vs, math.ceil(n.toDouble / cap).toLong))
-        if (sample.length >= minRows) sample else rowsOf(vs.limit(cap.toInt))
+        if (sample.length >= need) sample else rowsOf(vs.limit(cap.toInt))
       }
-    picked.sortBy(_._1).map(_._2)
+    TrainingSet(picked.sortBy(_._1).map(_._2), rows, dim)
   }
 
-  /** Spherical k-means objective Σ cos(v, centroid of assigned cell)
-    * — the training-quality scalar a quantizer build reports. */
-  def kmeansObjective(all: DataFrame, cents: DataFrame): Double = {
-    // The objective only needs each vector's BEST score — plain max
-    // per vec_id, fully map-side partial; tiebreaks are irrelevant to
-    // the sum.
-    all
-      .crossJoin(broadcast(cents))
-      .withColumn("cos", vectors.cosine(col("v"), col("centroid")))
-      .groupBy("vec_id")
-      .agg(max("cos").as("best"))
-      .agg(sum("best"))
-      .head()
-      .getDouble(0)
-  }
+  /** Each query's `nprobe` best cells by centroid cosine (ties to the
+    * lower cluster id, NaN first, null last — the order the former
+    * row_number window over a queries × centroids cross join gave),
+    * scored map-side against the broadcast codebook: the query columns
+    * plus `cluster` and `qcdot` = VectorDot(qv, centroid). */
+  private def probeCells(queries: DataFrame, book: Codebook, nprobe: Int): DataFrame =
+    queries
+      .select(col("*"), explode(book.topCells(col("qv"), nprobe)).as("p"))
+      .select(col("*"), col("p.cluster").as("cluster"), col("p.qcdot").as("qcdot"))
+      .drop("p")
 
   /** IVF-flat ANN with a TRAINED coarse quantizer: k-means cells
     * instead of sim05's label cells — the full FAISS IVF shape
@@ -513,18 +482,13 @@ object Similarity {
     val cents = kmeans(all, nlist, iters)
     val cells = argmaxCell(all, cents, Seq("v", "nrm"))
       .select(col("vec_id"), col("cluster"), col("v"), col("nrm"))
-    val queries = all
-      .filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"), col("nrm").as("qnrm"))
-    val cellRank = Window
-      .partitionBy("query_id")
-      .orderBy(col("qcos").desc, col("cluster"))
-    val probed = queries
-      .crossJoin(broadcast(cents))
-      .withColumn("qcos", vectors.cosine(col("qv"), col("centroid")))
-      .withColumn("crank", row_number().over(cellRank))
-      .filter(col("crank") <= nprobe)
-      .select("query_id", "qv", "qnrm", "cluster")
+    val probed = probeCells(
+      all
+        .filter(col("vec_id") < nQueries)
+        .select(col("vec_id").as("query_id"), col("v").as("qv"), col("nrm").as("qnrm")),
+      cents,
+      nprobe
+    ).select("query_id", "qv", "qnrm", "cluster")
     topkPerQuery(
       cells
         .join(broadcast(probed), Seq("cluster"))
@@ -570,10 +534,7 @@ object Similarity {
       keptOnly: Boolean = false
   ): DataFrame = {
     val all = vecs(lake).localCheckpoint()
-    val k =
-      if (nlist > 0) nlist
-      else math.ceil(math.sqrt(all.count().toDouble)).toInt.max(1)
-    val cents = kmeans(all, k, iters)
+    val cents = kmeans(all, nlist, iters)
     val assigned = argmaxCell(all, cents, Seq.empty, keepCos = true)
       .withColumn("cluster", col("cluster").cast("long"))
     if (keptOnly) {
@@ -635,7 +596,8 @@ object Similarity {
   ): Unit = persist.releasingNewRdds(lake.spark) {
     val all = vecs(lake).filter(subset).localCheckpoint()
     val cents = kmeans(all, nlist, iters)
-    cents.write.mode("overwrite").parquet(s"$dir/centroids")
+    cents.frame(lake.spark).select("cluster", "centroid")
+      .write.mode("overwrite").parquet(s"$dir/centroids")
     argmaxCell(all, cents, Seq.empty)
       .select(col("vec_id"), col("cluster"))
       .write.mode("overwrite").parquet(s"$dir/cells")
@@ -647,8 +609,9 @@ object Similarity {
     * its FAISS index on every ingest cadence,
     * build_embedding_linkage.py:246 — at 100 TB that rebuild is the
     * anti-pattern and appends amortize it). New vectors are assigned
-    * MAP-SIDE to the EXISTING (frozen) centroids — the same broadcast
-    * argmax fold as the build, no shuffle — and their (vec_id,
+    * MAP-SIDE to the EXISTING (frozen) centroids — the centroid file
+    * is collected once into a Codebook and assigned through its
+    * broadcast handle, as the build assigns, no shuffle — and their (vec_id,
     * cluster) rows append to the cells table; full vectors never move
     * (ivfAnnFromIndex re-attaches them by id at query time).
     *
@@ -665,8 +628,7 @@ object Similarity {
       dir: String,
       delta: Column
   ): DataFrame = {
-    val spark = lake.spark
-    val cents = spark.read.parquet(s"$dir/centroids")
+    val cents = Codebook.collect(lake.spark.read.parquet(s"$dir/centroids"))
     val asg = argmaxCell(vecs(lake).filter(delta), cents, Seq.empty, keepCos = true)
       .localCheckpoint() // one assignment pass feeds both the write and the report
     asg
@@ -731,8 +693,9 @@ object Similarity {
     * results to sim06IvfTrained at the same build parameters — the
     * quantizer is deterministic, so index-then-search and
     * train-then-search are the same function of the data
-    * (spec-asserted). The probe path is sim06's: broadcast the
-    * centroid table, rank cells per query, scan only the probed
+    * (spec-asserted). The probe path is sim06's: collect the centroid
+    * table once into a Codebook, rank cells per query map-side against
+    * its broadcast handle, scan only the probed
     * cells' inverted lists (the cells table join prunes the corpus
     * BEFORE vectors attach). */
   def ivfAnnFromIndex(
@@ -744,19 +707,15 @@ object Similarity {
   ): DataFrame = {
     val spark = lake.spark
     val all = vecs(lake)
-    val cents = spark.read.parquet(s"$dir/centroids")
+    val cents = Codebook.collect(spark.read.parquet(s"$dir/centroids"))
     val cells = spark.read.parquet(s"$dir/cells")
-    val cellRank = Window
-      .partitionBy("query_id")
-      .orderBy(col("qcos").desc, col("cluster"))
-    val probed = all
-      .filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"), col("nrm").as("qnrm"))
-      .crossJoin(broadcast(cents))
-      .withColumn("qcos", vectors.cosine(col("qv"), col("centroid")))
-      .withColumn("crank", row_number().over(cellRank))
-      .filter(col("crank") <= nprobe)
-      .select("query_id", "qv", "qnrm", "cluster")
+    val probed = probeCells(
+      all
+        .filter(col("vec_id") < nQueries)
+        .select(col("vec_id").as("query_id"), col("v").as("qv"), col("nrm").as("qnrm")),
+      cents,
+      nprobe
+    ).select("query_id", "qv", "qnrm", "cluster")
     topkPerQuery(
       cells
         .join(broadcast(probed), Seq("cluster"))
@@ -893,11 +852,13 @@ object Similarity {
     * probed cell and the LUT is per-(query, subspace, code) — the
     * classic ADC-with-coarse-correction identity.
     *
-    * Scale shape: coarse train/assign is sim06's (broadcast
-    * centroids, map-only argmax); residual PQ is pqTrainCore on a
-    * map-derived frame; search joins candidates to codes by id and
-    * to the broadcast LUT by (query, subspace, code) — the corpus
-    * enters only through the probed-cell equi-join. */
+    * Scale shape: coarse train/assign is sim06's (driver-trained
+    * codebook, map-only argmax against its broadcast handle); the
+    * residual, the PQ encode, the probe ranking and the LUT run
+    * against the same kind of handle, so no centroid crosses a Spark
+    * stage; search joins candidates to codes by id and to the
+    * broadcast LUT by (query, subspace, code) — the corpus enters only
+    * through the probed-cell equi-join. */
   def sim14IvfPq(
       lake: Lake,
       k: Int = 10,
@@ -910,65 +871,51 @@ object Similarity {
       pqIters: Int = 2
   ): DataFrame = {
     val all = vecs(lake).localCheckpoint()
-    val headDim = all.select(size(col("v"))).head(1)
-    if (headDim.isEmpty) return emptyAnnResult(all, k, "adc_ip")
-    val sd = headDim.head.getInt(0) / m
-    val nl = resolveNlist(all, nlist)
-    val (cents, cellIds, pqCents, codes) =
-      ivfPqBuild(all, nl, coarseIters, m, ks, pqIters)
-    ivfPqSearch(all, cents, cellIds, pqCents, codes, sd, k, nQueries, nprobe, m)
+    val cents = kmeans(all, nlist, coarseIters)
+    if (cents.n == 0) return emptyAnnResult(all, k, "adc_ip")
+    val (cellIds, pqCents, codes) = ivfPqBuild(all, cents, m, ks, pqIters)
+    ivfPqSearch(all, cents, cellIds, pqCents, codes, cents.dim / m, k, nQueries, nprobe, m)
   }
 
-  /** `nlist <= 0` requests AUTO-nlist = ⌈√N⌉ (dedup11's auto-k rule,
-    * shared with sim11/samp14): cell count and expected cell size
-    * both ~√N, the FAISS guidance at volume. The literal default (10)
-    * stays the oracle form — the DuckDB chains unroll exactly that
-    * seeding. */
-  private def resolveNlist(all: DataFrame, nlist: Int): Int =
-    if (nlist > 0) nlist
-    else math.ceil(math.sqrt(all.count().toDouble)).toInt.max(1)
-
-  /** IVF-PQ train: coarse centroids, cell assignments, residual
-    * codebooks, residual codes — the four tables the persisted index
-    * ships. Both quantizers (coarse k-means and the per-subspace PQ
-    * codebooks) train on a bounded sample while every vector is still
-    * assigned and ENCODED — the FAISS production guidance (training on
-    * the full corpus is the anti-pattern at volume). The bound is
-    * `TrainCapBytes`: below it the whole corpus trains, bit-identical
-    * to the historical build (the oracle form); above it
-    * `collectTrainingSet` trains on a deterministic xxhash64(vec_id)
-    * stripe whose stride follows from the input, falling back to the
-    * first rows read when the stripe cannot seed the codebook. */
+  /** IVF-PQ train over a trained coarse quantizer: cell assignments,
+    * residual codebooks, residual codes — with the centroids, the four
+    * tables the persisted index ships. Both quantizers (coarse k-means
+    * and the per-subspace PQ codebooks) train on a bounded sample while
+    * every vector is still assigned and ENCODED — the FAISS production
+    * guidance (training on the full corpus is the anti-pattern at
+    * volume). The bound is `TrainCapBytes`: below it the whole corpus
+    * trains, bit-identical to the historical build (the oracle form);
+    * above it `collectTrainingSet` trains on a deterministic
+    * xxhash64(vec_id) stripe whose stride follows from the input,
+    * falling back to the first rows read when the stripe cannot seed
+    * the codebook. Each residual v − centroid(cell) is computed
+    * map-side against the broadcast codebook; a vector with no cell
+    * (an empty codebook) has no residual row. */
   private def ivfPqBuild(
       all: DataFrame,
-      nlist: Int,
-      coarseIters: Int,
+      cents: Codebook,
       m: Int,
       ks: Int,
       pqIters: Int
-  ): (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    val cents = kmeans(all, nlist, coarseIters)
+  ): (DataFrame, Codebook, DataFrame) = {
     val cells = argmaxCell(all, cents, Seq("v"))
       .select(col("vec_id"), col("cluster"), col("v"))
     val resid = cells
-      .join(broadcast(cents), Seq("cluster"))
-      .select(
-        col("vec_id"),
-        zip_with(col("v"), col("centroid"), (x, y) => x - y).as("v")
-      )
+      .filter(col("cluster").isNotNull)
+      .select(col("vec_id"), cents.residual(col("v"), col("cluster")).as("v"))
       // lazy: pqTrainCore's first read materializes this chain and
       // every later consumer reads blocks
       .localCheckpoint(false)
     val (_, pqCents, codes) = pqTrainCore(resid, m, ks, pqIters)
-    (cents, cells.select(col("vec_id"), col("cluster")), pqCents, codes)
+    (cells.select(col("vec_id"), col("cluster")), pqCents, codes)
   }
 
   /** Probed-cell ADC search over the four IVF-PQ tables. */
   private def ivfPqSearch(
       all: DataFrame,
-      cents: DataFrame,
+      cents: Codebook,
       cellIds: DataFrame,
-      pqCents: DataFrame,
+      pqCents: Codebook,
       codes: DataFrame,
       sd: Int,
       k: Int,
@@ -980,31 +927,17 @@ object Similarity {
     val queries = all
       .filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("query_id"), col("v").as("qv"))
-    val cellRank = Window
-      .partitionBy("query_id")
-      .orderBy(col("qcos").desc, col("cluster"))
-    val probed = queries
-      .crossJoin(broadcast(cents))
-      .withColumn("qcos", vectors.cosine(col("qv"), col("centroid")))
-      .withColumn("qcdot", vectors.dot(col("qv"), col("centroid")))
-      .withColumn("crank", row_number().over(cellRank))
-      .filter(col("crank") <= nprobe)
-      .select("query_id", "qv", "qcdot", "cluster")
-    val qsub = queries
-      .withColumn("sub_id", explode(sequence(lit(0), lit(m - 1))))
-      .select(
-        col("query_id"),
-        col("sub_id"),
-        slice(col("qv"), col("sub_id") * sd + 1, lit(sd)).as("qsv")
-      )
-    val lut = qsub
-      .join(broadcast(pqCents), Seq("sub_id"))
-      .select(
-        col("query_id"),
-        col("sub_id"),
-        col("cluster"),
-        vectors.dot(col("qsv"), col("centroid")).as("pdot")
-      )
+    val probed = probeCells(queries, cents, nprobe)
+    val lut = adcTable(
+      queries
+        .withColumn("sub_id", explode(sequence(lit(0), lit(m - 1))))
+        .select(
+          col("query_id"),
+          col("sub_id"),
+          slice(col("qv"), col("sub_id") * sd + 1, lit(sd)).as("qsv")
+        ),
+      pqCents
+    )
     val cand = cellIds
       .join(broadcast(probed.select("query_id", "qcdot", "cluster")), Seq("cluster"))
       .filter(col("vec_id") =!= col("query_id"))
@@ -1068,14 +1001,11 @@ object Similarity {
       pqIters: Int = 2
   ): DataFrame = {
     val all = vecs(lake).localCheckpoint()
-    val headDim = all.select(size(col("v"))).head(1)
-    if (headDim.isEmpty) return emptyAnnResult(all, k, "cos")
-    val sd = headDim.head.getInt(0) / m
-    val nl = resolveNlist(all, nlist)
-    val (cents, cellIds, pqCents, codes) =
-      ivfPqBuild(all, nl, coarseIters, m, ks, pqIters)
+    val cents = kmeans(all, nlist, coarseIters)
+    if (cents.n == 0) return emptyAnnResult(all, k, "cos")
+    val (cellIds, pqCents, codes) = ivfPqBuild(all, cents, m, ks, pqIters)
     val cand = ivfPqSearch(
-      all, cents, cellIds, pqCents, codes, sd,
+      all, cents, cellIds, pqCents, codes, cents.dim / m,
       k * refine, nQueries, nprobe, m, ordered = false
     ).select(col("query_id"), col("neighbor_id").as("vec_id"))
     val base = all.select(col("vec_id"), col("v"), col("nrm"))
@@ -1116,11 +1046,12 @@ object Similarity {
       pqIters: Int = 2
   ): Unit = persist.releasingNewRdds(lake.spark) {
     val all = vecs(lake).localCheckpoint()
-    val (cents, cellIds, pqCents, codes) =
-      ivfPqBuild(all, nlist, coarseIters, m, ks, pqIters)
-    cents.write.mode("overwrite").parquet(s"$dir/centroids")
+    val cents = kmeans(all, nlist, coarseIters)
+    val (cellIds, pqCents, codes) = ivfPqBuild(all, cents, m, ks, pqIters)
+    cents.frame(lake.spark).select("cluster", "centroid")
+      .write.mode("overwrite").parquet(s"$dir/centroids")
     cellIds.write.mode("overwrite").parquet(s"$dir/cells")
-    pqCents.write.mode("overwrite").parquet(s"$dir/codebooks")
+    pqCents.frame(lake.spark).write.mode("overwrite").parquet(s"$dir/codebooks")
     codes.write.mode("overwrite").parquet(s"$dir/codes")
   }
 
@@ -1147,26 +1078,17 @@ object Similarity {
     val headDim = all.select(size(col("v"))).head(1)
     if (headDim.isEmpty) return emptyAnnResult(all, k, "adc_ip")
     val dim = headDim.head.getInt(0)
-    val codebooks = spark.read.parquet(s"$dir/codebooks")
-    val geo = codebooks
-      .agg(
-        countDistinct(col("sub_id")).cast("int").as("m"),
-        max(size(col("centroid"))).as("sd")
-      )
-      .head()
-    require(
-      !geo.isNullAt(0) && geo.getInt(0) > 0,
-      s"persisted IVF-PQ index at $dir has an empty codebooks table"
-    )
-    val m = geo.getInt(0)
-    val sd = geo.getInt(1)
+    val codebooks = Codebook.collect(spark.read.parquet(s"$dir/codebooks"))
+    val m = codebooks.ids.count(_.nonEmpty)
+    require(m > 0, s"persisted IVF-PQ index at $dir has an empty codebooks table")
+    val sd = codebooks.width
     require(
       m * sd == dim,
       s"persisted codebooks (m=$m, sd=$sd) do not match corpus dim $dim"
     )
     ivfPqSearch(
       all,
-      spark.read.parquet(s"$dir/centroids"),
+      Codebook.collect(spark.read.parquet(s"$dir/centroids")),
       spark.read.parquet(s"$dir/cells"),
       codebooks,
       spark.read.parquet(s"$dir/codes"),
@@ -1186,7 +1108,7 @@ object Similarity {
       m: Int,
       ks: Int,
       iters: Int
-  ): (DataFrame, DataFrame, DataFrame) = {
+  ): (DataFrame, Codebook, DataFrame) = {
     val all = vecs(lake)
       .select(col("vec_id"), vectors.l2Normalize(col("v")).as("v"))
       .localCheckpoint()
@@ -1201,23 +1123,25 @@ object Similarity {
       m: Int,
       ks: Int,
       iters: Int
-  ): (DataFrame, DataFrame, DataFrame) = {
-    // Subvector dimension from the schema-carried first row is a
-    // driver scalar the planner needs anyway (slice lengths are
-    // literals); one tiny action on the checkpointed frame. An empty
-    // corpus (empty daily delta, new tenant) degrades to empty
-    // schema-correct frames instead of an NPE on the scalar.
-    val headDim = all.select(size(col("v"))).head(1)
-    if (headDim.isEmpty) {
+  ): (DataFrame, Codebook, DataFrame) = {
+    // Codebooks train on the driver (kmeans' rule): the training set is
+    // collected once as full (vec_id, v) rows — at most TrainCapBytes
+    // of them — sliced into the m subspaces locally, and each subspace
+    // runs LocalKernels.lloyd's L2 argmin from the first ks training
+    // vectors as seeds. The same job counts the rows and reads the
+    // widest dimension, which sizes the subvector slices (literals to
+    // the planner). An empty corpus (empty daily delta, new tenant)
+    // degrades to empty schema-correct frames.
+    val train = collectTrainingSet(all, ks)
+    if (train.n == 0) {
       return (
         all.select(col("vec_id"), lit(0).as("sub_id"), col("v").as("sv")).limit(0),
-        all.select(lit(0).as("sub_id"), lit(0).as("cluster"), col("v").as("centroid")).limit(0),
+        new Codebook(Seq.fill(m)((Array.empty[Int], Array.empty[Array[Double]])), 0L, 0),
         all.select(col("vec_id"), lit(0).as("sub_id"), lit(0).as("cluster")).limit(0)
       )
     }
-    val dDim = headDim.head.getInt(0)
-    require(dDim % m == 0, s"dim $dDim not divisible by m=$m")
-    val sd = dDim / m
+    require(train.dim % m == 0, s"dim ${train.dim} not divisible by m=$m")
+    val sd = train.dim / m
     val subv = all
       .withColumn("sub_id", explode(sequence(lit(0), lit(m - 1))))
       .select(
@@ -1226,78 +1150,56 @@ object Similarity {
         slice(col("v"), col("sub_id") * sd + 1, lit(sd)).as("sv")
       )
       .localCheckpoint()
-    // Codebooks train on the driver (kmeans' rule): the training set is
-    // collected once as full (vec_id, v) rows — at most TrainCapBytes
-    // of them — sliced into the m subspaces locally, and each subspace
-    // runs LocalKernels.lloyd's L2 argmin from the first ks training
-    // vectors as seeds.
-    val train = collectTrainingSet(all, ks)
-    val codebooks = (0 until m).flatMap { sub =>
-      val rows = train.map(v =>
-        java.util.Arrays.copyOfRange(v, math.min(sub * sd, v.length),
-          math.min((sub + 1) * sd, v.length)))
-      val (ids, cs) = LocalKernels.lloyd(rows, ks, iters, cosine = false)
-      ids.indices.map(i => Row(sub, ids(i), cs(i)))
-    }
-    val cents = all.sparkSession.createDataFrame(
-      java.util.Arrays.asList(codebooks: _*),
-      StructType(Seq(
-        StructField("sub_id", IntegerType, nullable = false),
-        StructField("cluster", IntegerType),
-        StructField("centroid", ArrayType(DoubleType), nullable = false)
-      ))
+    val book = new Codebook(
+      (0 until m).map { sub =>
+        LocalKernels.lloyd(
+          train.rows.map(v =>
+            java.util.Arrays.copyOfRange(v, math.min(sub * sd, v.length),
+              math.min((sub + 1) * sd, v.length))),
+          ks, iters, cosine = false)
+      },
+      train.n,
+      train.dim
     )
-    // MAP-ONLY encode (argmaxCell's fold, applied to the PQ argmin):
-    // the codebooks fold to ONE row per sub_id carrying all ks
-    // (cluster, centroid) entries, and each subvector row picks its
-    // code via array_min over a transform — lexicographic struct order
-    // (d2 asc, then cluster asc) is the training argmin's tiebreak and
-    // the former row_number-over-(vec_id, sub_id) window's (both rank
-    // NaN above any double). The window formulation exchanged and
-    // globally SORTED all n·m·ks scored rows, sv and centroid payloads
-    // included; this shape has NO exchange on the corpus at all.
-    // Measured (round 15, interleaved in one JVM, results
-    // checksum-identical): fold 1.57/1.41 s vs window 2.04/2.53 s at
-    // sf1 (two windows); at sf0.1 fold 1.19 vs window 1.42.
-    val folded = cents
-      .groupBy("sub_id")
-      .agg(collect_list(struct(col("cluster"), col("centroid"))).as("cs"))
-    val codes = subv
-      .join(broadcast(folded), Seq("sub_id"))
-      .select(
-        col("vec_id"),
-        col("sub_id"),
-        array_min(
-          transform(
-            col("cs"),
-            c =>
-              struct(
-                vectors.dist2(col("sv"), c.getField("centroid")).as("d2"),
-                c.getField("cluster").as("cluster")
-              )
-          )
-        ).getField("cluster").as("cluster")
-      )
-    (subv, cents, codes)
+    // Map-only encode: each subvector row picks its code from its
+    // subspace's group of the broadcast codebook — least squared L2,
+    // ties to the lower cluster id, the training argmin's rule (NaN
+    // ranks above any double). No exchange, join or per-row lambda
+    // touches the corpus, and the codebooks never cross a Spark stage.
+    val codes = subv.select(
+      col("vec_id"),
+      col("sub_id"),
+      book.nearest(col("sv"), col("sub_id"), cosine = false).getField("cluster").as("cluster")
+    )
+    (subv, book, codes)
   }
+
+  /** The ADC lookup table: for each (query_id, sub_id, qsv) row, one
+    * (query_id, sub_id, cluster, pdot) row per codebook entry of that
+    * subspace, pdot = VectorDot(qsv, centroid), scored map-side
+    * against the broadcast codebook. */
+  private def adcTable(queriesSub: DataFrame, book: Codebook): DataFrame =
+    queriesSub
+      .select(
+        col("query_id"),
+        col("sub_id"),
+        explode(book.dots(col("qsv"), col("sub_id"))).as("d"))
+      .select(
+        col("query_id"),
+        col("sub_id"),
+        col("d.cluster").as("cluster"),
+        col("d.dot").as("pdot"))
 
   /** ADC search tail shared by the trained and persisted-index PQ
     * paths: per-query partial-dot lookup table against the
     * codebooks, summed along each code word, heap top-k. */
   private def pqSearch(
       queriesSub: DataFrame,
-      cents: DataFrame,
+      cents: Codebook,
       codes: DataFrame,
       k: Int
   ): DataFrame = {
-    val lut = queriesSub
-      .join(broadcast(cents), Seq("sub_id"))
-      .select(
-        col("query_id"),
-        col("sub_id"),
-        col("cluster"),
-        vectors.dot(col("qsv"), col("centroid")).as("pdot")
-      )
+    val lut = adcTable(queriesSub, cents)
     topkPerQuery(
       codes
         .join(broadcast(lut), Seq("sub_id", "cluster"))
@@ -1326,7 +1228,7 @@ object Similarity {
       iters: Int = 2
   ): Unit = persist.releasingNewRdds(lake.spark) {
     val (_, cents, codes) = pqTrain(lake, m, ks, iters)
-    cents.write.mode("overwrite").parquet(s"$dir/codebooks")
+    cents.frame(lake.spark).write.mode("overwrite").parquet(s"$dir/codebooks")
     codes.write.mode("overwrite").parquet(s"$dir/codes")
   }
 
@@ -1345,7 +1247,7 @@ object Similarity {
       nQueries: Int = 10
   ): DataFrame = {
     val spark = lake.spark
-    val cents = spark.read.parquet(s"$dir/codebooks")
+    val cents = Codebook.collect(spark.read.parquet(s"$dir/codebooks"))
     val codes = spark.read.parquet(s"$dir/codes")
     val all = vecs(lake)
       .select(col("vec_id"), vectors.l2Normalize(col("v")).as("v"))
@@ -1488,7 +1390,7 @@ object Similarity {
     * per-vector candidate volume is ~nprobe/nlist of the corpus, and
     * total kernel work is nprobe/nlist · n² instead of n² (with
     * nlist grown as √n the kernel is ~n^1.5). Probe ranking is
-    * |corpus| × nlist against a BROADCAST k-row centroid frame;
+    * |corpus| × nlist scorings against the broadcast codebook, map-side;
     * top-k stays a partial WindowGroupLimit so the shuffle carries
     * n·k rows. Recall vs the exact sim08 graph is spec-asserted
     * (eval02's machinery); sim08 remains the exact oracle kernel.
@@ -1508,7 +1410,7 @@ object Similarity {
     * silently re-quadratifies the kernel as the corpus grows — at
     * nlist=10 and a billion vectors each probe scans nprobe/10 of
     * everything. √N keeps cell count and expected cell size both at
-    * √N for one count() over the checkpointed frame. The round-8 sf1
+    * √N, counted by the training collect at no job of its own. The round-8 sf1
     * sweep measured exactly this failure: the entry originally ran
     * nlist=10, so at 20k vectors each probe scanned 40% of the
     * corpus and the "ANN" ran at 0.4× the exact kernel — the entry
@@ -1528,59 +1430,25 @@ object Similarity {
     // scoring pass both read it, and re-decoding the parquet scan per
     // reference measured SLOWER than the one checkpoint job it saves.
     val all = vecs(lake).localCheckpoint()
-    val nlistEff = resolveNlist(all, nlist)
-    val cents = kmeans(all, nlistEff, iters)
+    val cents = kmeans(all, nlist, iters)
+    val nlistEff = if (nlist > 0) nlist else autoK(cents.n)
     // ONE centroid-scoring pass serves both roles: rank 1 is the home
     // assignment (argmaxCell's tiebreak — best ccos, then lowest
     // cluster), ranks 1..nprobe are the probe set. Materialized once
     // (narrow: id + cluster + vector) because two consumers read it.
     //
-    // MAP-ONLY top-nprobe (round 15, the PQ-fold move extended from
-    // argmin to arg-top-n): the former row_number() over
-    // (vec_id)(ccos desc, cluster) exchanged and globally sorted all
-    // n·nlist scored rows WITH their v payloads — at auto-⌈√N⌉ nlist
-    // that exchange is n^1.5 rows of vectors, the single largest
-    // shuffle in the query. The centroids fold to one broadcast row;
-    // each vector sorts its own nlist-entry score array locally and
-    // keeps the top nprobe: reverse(array_sort(struct(ccos, -cluster,
-    // cluster))) is exactly the window's (ccos desc, cluster asc)
-    // order including the NaN-first-under-desc rule (ascending sort
-    // puts NaN last; reversed, first), and posexplode's pos+1 is
-    // row_number. The PQ encode's fold-vs-window A/B pinned the trade
-    // at two SFs; sim11's standalone min-of-5 read 2.40 s before /
-    // 1.98 s after across windows (suite point 2.12), and the
-    // exchange the fold deletes grows as n^1.5 · |v| while the fold's
-    // cost stays the same n·nlist scorings the window already paid.
-    val nprobeEff = math.max(nprobe, 1)
-    val centRow = cents
-      .agg(collect_list(struct(col("cluster"), col("centroid"))).as("cs"))
+    // MAP-ONLY top-nprobe: each vector ranks its own cells against the
+    // broadcast codebook (`topCells`: ccos desc, cluster asc, NaN
+    // first, null last) and posexplode's pos+1 is the rank. A
+    // row_number() over (vec_id) would exchange and sort all n·nlist
+    // scored rows WITH their v payloads — at auto-⌈√N⌉ nlist, n^1.5
+    // rows of vectors (round 15).
     val scored = all
-      .crossJoin(broadcast(centRow))
-      .withColumn(
-        "ranked",
-        slice(
-          reverse(
-            array_sort(
-              transform(
-                col("cs"),
-                c =>
-                  struct(
-                    vectors.cosine(col("v"), c.getField("centroid")).as("ccos"),
-                    negate(c.getField("cluster")).as("negc"),
-                    c.getField("cluster").as("cluster")
-                  )
-              )
-            )
-          ),
-          1,
-          nprobeEff
-        )
-      )
       .select(
         col("vec_id"),
         col("v"),
         col("nrm"),
-        posexplode(col("ranked")).as(Seq("pos", "w"))
+        posexplode(cents.topCells(col("v"), math.max(nprobe, 1))).as(Seq("pos", "w"))
       )
       .select(
         col("vec_id"),
@@ -1888,8 +1756,8 @@ object Similarity {
     // the assigned cell's member-mean centroid (computed below), so
     // the bound is sound for any cell provenance. Label cells:
     // cluster = label, zero assignment cost. Trained cells: the
-    // shared map-only argmaxCell (broadcast centroid row, one
-    // transform + array_max pass, zero corpus exchange).
+    // shared map-only argmaxCell (one kernel pass against the
+    // broadcast codebook, zero corpus exchange).
     val assigned = (if (nlist <= 0) {
       all.withColumn("cluster", col("label").cast("long"))
     } else {

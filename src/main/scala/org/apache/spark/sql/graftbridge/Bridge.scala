@@ -47,5 +47,9 @@ object Bridge {
     * private[spark]). */
   def asNullable(s: org.apache.spark.sql.types.StructType): org.apache.spark.sql.types.StructType =
     s.asNullable
-}
 
+  /** Spark's DIVIDE_BY_ZERO error, as an ANSI-mode Divide raises it
+    * (QueryExecutionErrors is private[sql]). */
+  def divideByZeroError(): ArithmeticException =
+    org.apache.spark.sql.errors.QueryExecutionErrors.divideByZeroError(null)
+}

@@ -822,8 +822,8 @@ class DedupSimilaritySpec extends AnyFunSuite {
         graft.functions.vectors.toDouble(col("embedding")).as("v")
       )
       .withColumn("nrm", graft.functions.vectors.norm(col("v")))
-    val o1 = Similarity.kmeansObjective(withNrm, Similarity.kmeans(withNrm, 10, 1))
-    val o3 = Similarity.kmeansObjective(withNrm, Similarity.kmeans(withNrm, 10, 3))
+    val o1 = DedupSimilaritySpec.kmeansObjective(withNrm, Similarity.kmeans(withNrm, 10, 1))
+    val o3 = DedupSimilaritySpec.kmeansObjective(withNrm, Similarity.kmeans(withNrm, 10, 3))
     info(s"kmeans objective: 1 iter = $o1, 3 iters = $o3")
     assert(o3 >= o1 - 1e-9, s"objective regressed: $o1 -> $o3")
   }
@@ -1282,6 +1282,15 @@ class DedupSimilaritySpec extends AnyFunSuite {
 object DedupSimilaritySpec {
   import org.apache.spark.sql.DataFrame
   import org.apache.spark.sql.functions._
+
+  /** Spherical k-means objective Σ cos(v, centroid of assigned cell),
+    * scored through the codebook's nearest-cell kernel. */
+  def kmeansObjective(all: DataFrame, book: graft.plans.Codebook): Double =
+    Similarity
+      .argmaxCell(all, book, Seq.empty, keepCos = true)
+      .agg(sum("ccos"))
+      .head()
+      .getDouble(0)
 
   /** Reference connected components over an undirected pair list
     * (doc_a, doc_b): returns (u, lbl) where lbl is the smallest node id

@@ -29,7 +29,7 @@ class IvfMaintenanceSpec extends AnyFunSuite {
     val cents = spark.read.parquet(s"$dirA/centroids")
     cents.write.parquet(s"$dirB/centroids")
     Similarity
-      .argmaxCell(Similarity.vecs(lake), cents, Seq.empty)
+      .argmaxCell(Similarity.vecs(lake), graft.plans.Codebook.collect(cents), Seq.empty)
       .select(col("vec_id"), col("cluster"))
       .write.parquet(s"$dirB/cells")
     val a = Similarity.ivfAnnFromIndex(lake, dirA).collect().toSeq

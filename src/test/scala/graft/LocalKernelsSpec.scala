@@ -71,14 +71,15 @@ class LocalKernelsSpec extends AnyFunSuite {
     val n = all.count()
     val dim = all.select(size(col("v"))).head().getInt(0)
     val full = Similarity.collectTrainingSet(all, 4)
-    assert(full.length == n, "below the cap the whole frame trains")
+    assert(full.rows.length == n, "below the cap the whole frame trains")
+    assert(full.n == n && full.dim == dim, "the training job reports the row count and dimension")
     val k = 4
     // caps in vectors, turned into bytes at the frame's dimension
     for (capRows <- Seq(1L, 3L, n / 2)) {
-      val rows = Similarity.collectTrainingSet(all, k, capRows * 8 * dim)
+      val rows = Similarity.collectTrainingSet(all, k, capRows * 8 * dim).rows
       assert(rows.length >= k, s"cap $capRows: ${rows.length} rows cannot seed $k clusters")
       assert(rows.length < n, s"cap $capRows: nothing was sampled")
-      val again = Similarity.collectTrainingSet(all, k, capRows * 8 * dim)
+      val again = Similarity.collectTrainingSet(all, k, capRows * 8 * dim).rows
       assert(rows.map(_.toSeq).toSeq == again.map(_.toSeq).toSeq, s"cap $capRows: not deterministic")
       val (seeds, _) = LocalKernels.lloyd(rows, k, 0, cosine = true)
       assert(seeds.length == k, s"cap $capRows: degenerate codebook")
@@ -96,19 +97,19 @@ class LocalKernelsSpec extends AnyFunSuite {
       transform(sequence(lit(1), lit(dim)), p => (col("id") * p % 7).cast("double")).as("v"))
     val capBytes = 8L * 64 * 200
     // 200 vectors fit at dim 64: a stride-2 stripe of the 400
-    val narrow = Similarity.collectTrainingSet(frame(64), 4, capBytes)
+    val narrow = Similarity.collectTrainingSet(frame(64), 4, capBytes).rows
     assert(narrow.length >= 100 && narrow.length <= 300, s"${narrow.length} narrow vectors")
     // 12 fit at dim 1024: a stride-34 stripe of the 400
-    val wide = Similarity.collectTrainingSet(frame(64 * 16), 4, capBytes)
+    val wide = Similarity.collectTrainingSet(frame(64 * 16), 4, capBytes).rows
     assert(wide.forall(_.length == 64 * 16))
     assert(wide.length >= 4 && wide.length <= 24, s"${wide.length} wide vectors")
     // all 400 fit 8·64·400 bytes, but two skewed partitions each
     // overflow their 1/4 share: the set is still collected whole
     val fits = 8L * 64 * n
     val skewed = frame(64).repartition(4, col("vec_id") % 2)
-    val whole = Similarity.collectTrainingSet(skewed, 4, fits)
+    val whole = Similarity.collectTrainingSet(skewed, 4, fits).rows
     assert(whole.map(_.toSeq).toSeq ==
-      Similarity.collectTrainingSet(frame(64).coalesce(1), 4, fits).map(_.toSeq).toSeq)
+      Similarity.collectTrainingSet(frame(64).coalesce(1), 4, fits).rows.map(_.toSeq).toSeq)
     assert(whole.length == n)
   }
 
@@ -122,7 +123,7 @@ class LocalKernelsSpec extends AnyFunSuite {
       df.collect().map(r => r.getInt(0) -> r.getSeq[Double](1)).toMap
     for (iters <- Seq(0, 1, 3)) {
       assert(
-        asMap(Similarity.kmeans(all, 5, iters)) ==
+        asMap(Similarity.kmeans(all, 5, iters).frame(spark).select("cluster", "centroid")) ==
           asMap(LocalKernelsSpec.distributedKmeans(all, 5, iters)),
         s"iters=$iters")
     }
@@ -133,7 +134,7 @@ class LocalKernelsSpec extends AnyFunSuite {
     val subv = subv0.orderBy("sub_id", "vec_id").coalesce(1)
     def asMap(df: DataFrame) =
       df.collect().map(r => (r.getInt(0), r.getInt(1)) -> r.getSeq[Double](2)).toMap
-    assert(asMap(cents) == asMap(LocalKernelsSpec.distributedPq(subv, 4, 2)))
+    assert(asMap(cents.frame(spark)) == asMap(LocalKernelsSpec.distributedPq(subv, 4, 2)))
   }
 }
 
@@ -141,7 +142,7 @@ object LocalKernelsSpec {
 
   /** The distributed spherical Lloyd loop `Similarity.kmeans` replaced:
     * seeds are the first k rows by vec_id, each step assigns through
-    * `argmaxCell` and averages per (cluster, pos). */
+    * the `foldArgmax` reference and averages per (cluster, pos). */
   def distributedKmeans(all: DataFrame, k: Int, iters: Int): DataFrame = {
     var cents = all
       .orderBy("vec_id")
@@ -152,8 +153,7 @@ object LocalKernelsSpec {
       )
       .localCheckpoint()
     for (_ <- 0 until iters) {
-      cents = Similarity
-        .argmaxCell(all, cents, Seq("v"))
+      cents = foldArgmax(all, cents, Seq("v"))
         .select(col("cluster"), posexplode(col("v")).as(Seq("pos", "x")))
         .groupBy("cluster", "pos")
         .agg(avg("x").as("c"))
@@ -183,23 +183,8 @@ object LocalKernelsSpec {
       .select(col("sub_id"), col("cluster"), col("sv").as("centroid"))
       .localCheckpoint()
     for (_ <- 0 until iters) {
-      val folded = cents
-        .groupBy("sub_id")
-        .agg(collect_list(struct(col("cluster"), col("centroid"))).as("cs"))
-      cents = subv
-        .join(broadcast(folded), Seq("sub_id"))
-        .select(
-          col("sub_id"),
-          array_min(
-            transform(
-              col("cs"),
-              c =>
-                struct(
-                  graft.functions.vectors.dist2(col("sv"), c.getField("centroid")).as("d2"),
-                  c.getField("cluster").as("cluster"))
-            )
-          ).getField("cluster").as("cluster"),
-          posexplode(col("sv")).as(Seq("pos", "x")))
+      cents = foldPqEncode(subv, cents)
+        .select(col("sub_id"), col("cluster"), posexplode(col("sv")).as(Seq("pos", "x")))
         .groupBy("sub_id", "cluster", "pos")
         .agg(avg("x").as("c"))
         .groupBy("sub_id", "cluster")
@@ -213,4 +198,133 @@ object LocalKernelsSpec {
     }
     cents
   }
+
+  // The folds the Codebook kernels replaced, kept as references for
+  // CodebookSpec. Each takes the centroids as a frame and moves them
+  // through Spark the way the library used to.
+
+  /** Nearest cell by cosine: the centroids fold to one broadcast row,
+    * each vector takes the `array_max` of (ccos, -cluster, cluster). */
+  def foldArgmax(
+      all: DataFrame,
+      cents: DataFrame,
+      payload: Seq[String],
+      keepCos: Boolean = false
+  ): DataFrame = {
+    val centRow = cents
+      .agg(collect_list(struct(col("cluster"), col("centroid"))).as("cs"))
+    all
+      .crossJoin(broadcast(centRow))
+      .withColumn(
+        "w",
+        array_max(
+          transform(
+            col("cs"),
+            c =>
+              struct(
+                graft.functions.vectors.cosine(col("v"), c.getField("centroid")).as("ccos"),
+                negate(c.getField("cluster")).as("neg"),
+                c.getField("cluster").as("cluster")
+              )
+          )
+        )
+      )
+      .select(
+        col("vec_id") +: col("w.cluster").as("cluster") +:
+          ((if (keepCos) Seq(col("w.ccos").as("ccos")) else Nil) ++
+            payload.map(col)): _*
+      )
+  }
+
+  /** PQ encode over a (vec_id, sub_id, sv, ...) frame: the codebooks
+    * fold to one row per sub_id, each subvector takes the `array_min`
+    * of (d2, cluster). Every input column is kept. */
+  def foldPqEncode(subv: DataFrame, cents: DataFrame): DataFrame = {
+    val folded = cents
+      .groupBy("sub_id")
+      .agg(collect_list(struct(col("cluster"), col("centroid"))).as("cs"))
+    subv
+      .join(broadcast(folded), Seq("sub_id"))
+      .select(
+        subv.columns.map(col) :+
+          array_min(
+            transform(
+              col("cs"),
+              c =>
+                struct(
+                  graft.functions.vectors.dist2(col("sv"), c.getField("centroid")).as("d2"),
+                  c.getField("cluster").as("cluster"))
+            )
+          ).getField("cluster").as("cluster"): _*)
+  }
+
+  /** sim11's top-n cells: reverse(array_sort) of (ccos, -cluster,
+    * cluster, qcdot) per vector, sliced to n; (vec_id, crank, cluster,
+    * ccos, qcdot). */
+  def foldTopCells(all: DataFrame, cents: DataFrame, n: Int): DataFrame = {
+    val centRow = cents
+      .agg(collect_list(struct(col("cluster"), col("centroid"))).as("cs"))
+    all
+      .crossJoin(broadcast(centRow))
+      .select(
+        col("vec_id"),
+        posexplode(
+          slice(
+            reverse(
+              array_sort(
+                transform(
+                  col("cs"),
+                  c =>
+                    struct(
+                      graft.functions.vectors.cosine(col("v"), c.getField("centroid")).as("ccos"),
+                      negate(c.getField("cluster")).as("negc"),
+                      c.getField("cluster").as("cluster"),
+                      graft.functions.vectors.dot(col("v"), c.getField("centroid")).as("qcdot")
+                    )
+                )
+              )
+            ),
+            1,
+            n
+          )
+        ).as(Seq("pos", "w"))
+      )
+      .select(
+        col("vec_id"),
+        (col("pos") + 1).as("crank"),
+        col("w.cluster").as("cluster"),
+        col("w.ccos").as("ccos"),
+        col("w.qcdot").as("qcdot"))
+  }
+
+  /** ivfPqSearch's probe ranking: a row_number window over the
+    * queries x centroids cross join; same columns as foldTopCells. */
+  def windowTopCells(all: DataFrame, cents: DataFrame, n: Int): DataFrame =
+    all
+      .crossJoin(broadcast(cents))
+      .withColumn("ccos", graft.functions.vectors.cosine(col("v"), col("centroid")))
+      .withColumn("qcdot", graft.functions.vectors.dot(col("v"), col("centroid")))
+      .withColumn(
+        "crank",
+        row_number().over(Window.partitionBy("vec_id").orderBy(col("ccos").desc, col("cluster"))))
+      .filter(col("crank") <= n)
+      .select("vec_id", "crank", "cluster", "ccos", "qcdot")
+
+  /** ivfPqBuild's residual: a broadcast join on the cell id, then
+    * zip_with. */
+  def joinResidual(cells: DataFrame, cents: DataFrame): DataFrame =
+    cells
+      .join(broadcast(cents), Seq("cluster"))
+      .select(col("vec_id"), zip_with(col("v"), col("centroid"), (x, y) => x - y).as("r"))
+
+  /** The ADC lookup table: a broadcast join of the query subvectors
+    * with the codebooks on sub_id. */
+  def joinLut(qsub: DataFrame, cents: DataFrame): DataFrame =
+    qsub
+      .join(broadcast(cents), Seq("sub_id"))
+      .select(
+        col("vec_id"),
+        col("sub_id"),
+        col("cluster"),
+        graft.functions.vectors.dot(col("sv"), col("centroid")).as("pdot"))
 }

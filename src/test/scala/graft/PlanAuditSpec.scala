@@ -224,19 +224,17 @@ class PlanAuditSpec extends AnyFunSuite {
   }
 
   test("samp14: assignment is map-only — no join; only the cluster window and sort exchange") {
-    // the quantizer trains eagerly (bounded checkpoints); the returned
-    // plan must assign via the broadcast argmax fold — the ONLY legal
-    // join is the one-row-broadcast BNLJ carrying the folded centroid
-    // list (sim11's pinned pattern); a hash/merge join against a
-    // per-centroid table means the n×k scored stream came back. The
-    // corpus shuffles only for the per-cluster rank window and the
-    // final orderBy.
+    // the quantizer trains eagerly on the driver; the returned plan must
+    // assign through the broadcast codebook handle (codebook_nearest) —
+    // no join at all: a hash/merge join against a per-centroid table
+    // means the n×k scored stream came back, a nested-loop join means
+    // the centroid-list fold did. The corpus shuffles only for the
+    // per-cluster rank window and the final orderBy, and no exchange
+    // moves centroids (no single-partition fold, no broadcast).
     val p = plan(Similarity.samp14ClusterBalance(lake))
-    assert(!p.contains("SortMergeJoin") && !p.contains("ShuffledHashJoin")
-      && !p.contains("BroadcastHashJoin") && !p.contains("CartesianProduct"), p)
-    assert(p.linesIterator.count(_.contains("BroadcastNestedLoopJoin")) == 1, p)
-    // corpus-carrying exchanges: window hash + sort range (the other
-    // two move the k-row centroid fold, not the corpus)
+    assert(p.contains("codebook_nearest"), p)
+    assert(!p.contains("Join") && !p.contains("CartesianProduct"), p)
+    assert(!p.contains("SinglePartition") && !p.contains("BroadcastExchange"), p)
     val corpusExchanges = p.linesIterator.count(l =>
       l.contains("Exchange hashpartitioning") || l.contains("Exchange rangepartitioning"))
     assert(corpusExchanges <= 2, s"expected window+sort only:\n$p")
@@ -527,22 +525,22 @@ class PlanAuditSpec extends AnyFunSuite {
   test("kmeans assignment: map-only — no Window, no sort, no corpus exchange") {
     // The Lloyd argmax runs once per vector per iteration. History of
     // this pin: the row_number formulation globally sorted n x k
-    // scored rows; max_by folded k rows to 1 before one exchange; the
-    // current transform + array_max form deletes even that exchange —
-    // the corpus is never hash-partitioned at all, only the 1-row
-    // centroid-list broadcast touches the wire.
-    val all = Similarity.vecs(lake)
-    val cents = all.limit(3).select(
-      org.apache.spark.sql.functions.monotonically_increasing_id().as("cluster"),
-      org.apache.spark.sql.functions.col("v").as("centroid"))
-    val p = plan(Similarity.argmaxCell(all, cents, Seq("v", "nrm")))
+    // scored rows; max_by folded k rows to 1 before one exchange; a
+    // transform + array_max fold deleted that exchange but still moved
+    // the driver-held centroids through a single-partition collect_list
+    // exchange and a broadcast exchange. Now the assignment is one
+    // kernel call against the broadcast codebook handle: no join, no
+    // exchange of any kind and no lambda in the plan. The input is
+    // checkpointed, as every caller's is (vecs' float-to-double cast
+    // is itself a lambda).
+    val all = Similarity.vecs(lake).localCheckpoint()
+    val p = plan(Similarity.argmaxCell(all, Similarity.kmeans(all, 3, 1), Seq("v", "nrm")))
+    assert(p.contains("codebook_nearest"), p)
     assert(!p.contains("Window"), p)
     assert(!p.linesIterator.exists(l => l.contains("Sort ") && l.contains("true, ")),
       s"global sort found:\n$p")
-    // zero shuffles on the corpus side (the centroid fold's own tiny
-    // single-partition exchange is all that may appear)
-    val exchanges = "Exchange hashpartitioning".r.findAllIn(p).length
-    assert(exchanges == 0, s"expected 0 hash exchanges, got $exchanges\n$p")
+    assert(!p.contains("Join") && !p.contains("Exchange"), p)
+    assert(!p.contains("lambdafunction"), p)
   }
 
   test("txt16: the packing cumsum window partitions on (source, shard)") {
@@ -732,21 +730,20 @@ class PlanAuditSpec extends AnyFunSuite {
 
   test("sim16: delta assignment is the map-only broadcast fold — the corpus never shuffles") {
     // appendToIvfIndex's scale contract: a delta batch assigns to the
-    // FROZEN centroids via the one-row-broadcast argmax fold (samp14's
-    // pinned pattern). A hash/merge join means the n×k scored stream
-    // came back; a hashpartitioning exchange means the corpus is
-    // shuffling for an already-unique key. The only legal exchange is
-    // the SinglePartition fold of the ≤nlist checkpointed centroids.
+    // FROZEN centroids map-side, through the broadcast codebook handle
+    // (samp14's pinned pattern). A join means the n×k scored stream or
+    // the centroid fold came back; any exchange means the corpus is
+    // shuffling for an already-unique key or the driver-held centroids
+    // are travelling through Spark again.
     import org.apache.spark.sql.functions.{col, lit}
     val isDelta = col("vec_id") % 5 === lit(4L)
-    val cents = Similarity.kmeans(Similarity.vecs(lake).filter(!isDelta), 10, 3)
-    val p = plan(Similarity.argmaxCell(
-      Similarity.vecs(lake).filter(isDelta), cents, Seq.empty, keepCos = true))
-    assert(p.linesIterator.count(_.contains("BroadcastNestedLoopJoin")) == 1, p)
-    assert(!p.contains("SortMergeJoin") && !p.contains("ShuffledHashJoin")
-      && !p.contains("BroadcastHashJoin") && !p.contains("CartesianProduct"), p)
-    assert(!p.contains("Exchange hashpartitioning"),
-      s"corpus-key exchange in the map-only assignment:\n$p")
+    val all = Similarity.vecs(lake).localCheckpoint()
+    val cents = Similarity.kmeans(all.filter(!isDelta), 10, 3)
+    val p = plan(Similarity.argmaxCell(all.filter(isDelta), cents, Seq.empty, keepCos = true))
+    assert(p.contains("codebook_nearest"), p)
+    assert(!p.contains("Join"), s"a join in the map-only assignment:\n$p")
+    assert(!p.contains("Exchange"), s"an exchange in the map-only assignment:\n$p")
+    assert(!p.contains("lambdafunction"), p)
   }
 
   test("txt30: training is one corpus-key exchange; counting collapses map-side") {
@@ -776,28 +773,30 @@ class PlanAuditSpec extends AnyFunSuite {
       && !p.contains("BroadcastHashJoin") && !p.contains("CartesianProduct"), p)
   }
 
-  test("sim14/sim15: the only Window ranks the probe table (nQueries-bounded), group-limited to nprobe") {
-    // VERDICT r15 item 7: the residual Window in the IVF-PQ plans must
-    // be the QUERY-side cell ranking — input is nQueries·nlist rows
-    // (queries crossJoin broadcast(centroids)), NEVER corpus-sized (the
-    // corpus-sized windows were folded away in rounds 14-15: sim11's
-    // c8 fold, the PQ argmin fold). Pinned mechanically: exactly one
-    // Window node, partitioned by query_id, with a WindowGroupLimit
-    // (the per-group bounded heap) pushed below it so only nprobe rows
-    // per query survive to the exchange.
+  test("sim14/sim15: no Window, no local centroid scan under an Exchange") {
+    // Every use of a trained quantizer runs map-side against its
+    // broadcast codebook handle: the probe ranking is codebook_top_cells
+    // (it was a row_number Window over queries x broadcast centroids),
+    // the ADC table is codebook_dots (it was a broadcast join with the
+    // codebooks), and the assignment, residual and encode feed the
+    // build. So the final plan holds no Window, and no Exchange of any
+    // kind reads a LocalTableScan: centroids the driver holds never
+    // travel through a Spark stage.
+    import org.apache.spark.sql.execution.LocalTableScanExec
     for (
       df <- Seq(
         Similarity.sim14IvfPq(lake),
         Similarity.sim15IvfPqRefine(lake)
       )
     ) {
-      val p = plan(df)
-      val windows = p.linesIterator.filter(_.matches(".*\\bWindow \\[.*")).toSeq
-      assert(windows.size == 1, s"expected exactly 1 Window, got:\n$p")
-      assert(windows.head.contains("query_id"),
-        s"the surviving Window is not the query-side probe ranking:\n$p")
-      assert(p.contains("WindowGroupLimit"),
-        s"probe ranking lost its group-limit pushdown:\n$p")
+      df.collect()
+      val root = df.queryExecution.executedPlan
+      val p = root.toString
+      assert(p.contains("codebook_top_cells") && p.contains("codebook_dots"), p)
+      assert(!all(root).exists(_.isInstanceOf[WindowExec]), s"a Window came back:\n$p")
+      val shipped = all(root).collect { case e: Exchange => e }
+        .filter(e => all(e).exists(_.isInstanceOf[LocalTableScanExec]))
+      assert(shipped.isEmpty, s"a LocalTableScan under an Exchange:\n$p")
     }
   }
 
