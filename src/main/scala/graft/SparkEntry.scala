@@ -122,15 +122,6 @@ object SparkEntry {
       s"i -> ord($ch)::UBIGINT)), (acc, x) -> $step)"
   }
 
-  /** The scorer + verdict replay both learned-scorer evaluations
-    * (eval05 calibration, eval07 AUC) share: txt29's hashed
-    * classifier to a 4dp q_score and txt20's Gopher verdict, joined
-    * per doc as `j(doc_id, q_score, passes)`. Hoisted so a change to
-    * either feature pipeline can't leave one oracle replaying stale
-    * semantics. The `+ 0.0` on q_score is the emb02 negative-zero
-    * rule: DuckDB ROUND carries a tiny negative's sign into -0.0,
-    * Spark's BigDecimal round yields +0.0 — numerically equal,
-    * bitwise distinct to the value hash (and here a GROUP BY key). */
   /** txt29's lowercased unigram+bigram feature CTEs (tk, f) — shared
     * by the scorer replay and txt30's trainer replay so the feature
     * space cannot drift between them (the same one-implementation
@@ -161,6 +152,15 @@ object SparkEntry {
       |   AND n_stop_distinct >= 2) AS passes
       |  FROM ga)""".stripMargin
 
+  /** The scorer + verdict replay both learned-scorer evaluations
+    * (eval05 calibration, eval07 AUC) share: txt29's hashed
+    * classifier to a 4dp q_score and txt20's Gopher verdict, joined
+    * per doc as `j(doc_id, q_score, passes)`. Hoisted so a change to
+    * either feature pipeline can't leave one oracle replaying stale
+    * semantics. The `+ 0.0` on q_score is the emb02 negative-zero
+    * rule: DuckDB ROUND carries a tiny negative's sign into -0.0,
+    * Spark's BigDecimal round yields +0.0 — numerically equal,
+    * bitwise distinct to the value hash (and here a GROUP BY key). */
   private val dkScorerVerdictCtes: String =
     s"""$dkFeatureCtes,
       |sc AS (SELECT doc_id,
@@ -1698,7 +1698,7 @@ object SparkEntry {
     // 8g where the SQL loop needed 24g standalone (BASELINE round 15)
     // 5 unrolled fixed-point PageRank iterations — generated, not
     // hand-copied, so the Spark loop and the oracle stay in lockstep.
-    Entry("graph06_pagerank", Graph.graph06PagerankKernel(_), Sql {
+    Entry("graph06_pagerank", Graph.graph06Pagerank(_), Sql {
       val iters = (1 to 5).map { i =>
         s"""r$i AS (SELECT e.dst AS node,
            |  (15 * (1000000000000 // n.n)) // 100

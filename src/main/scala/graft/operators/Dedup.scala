@@ -210,6 +210,19 @@ object Dedup {
     minhashPairs(lake.documents, threshold, numPerm, bands, maxBucket)
       .orderBy("doc_a", "doc_b")
 
+  /** The cached (doc_id, sh) shingle-set frame minhashPairs and the
+    * decontamination kernel both start from — factored out (round 15)
+    * so a composition running BOTH over the same corpus (pipe03)
+    * parses and shingles the text once instead of once per stage. */
+  private[graft] def shingledDocs(docsText: DataFrame): DataFrame =
+    docsText
+      .select(
+        col("doc_id"),
+        graft.plans.ShingleHashes(col("text"), 3).as("sh")
+      )
+      .filter(size(col("sh")) > 0)
+      .cache()
+
   /** The MinHash-LSH verified-pair kernel over any (doc_id, text)
     * frame — shared by dedup04 (raw corpus) and pipe02 (the funnel's
     * line-deduped survivors).
@@ -260,19 +273,6 @@ object Dedup {
     * dedup04 1.75 → 2.29 s, pipe02 4.87 → 5.62 s — the stats join
     * it adds to every clean run costs more than the guard job it
     * deletes. */
-  /** The cached (doc_id, sh) shingle-set frame minhashPairs and the
-    * decontamination kernel both start from — factored out (round 15)
-    * so a composition running BOTH over the same corpus (pipe03)
-    * parses and shingles the text once instead of once per stage. */
-  private[graft] def shingledDocs(docsText: DataFrame): DataFrame =
-    docsText
-      .select(
-        col("doc_id"),
-        graft.plans.ShingleHashes(col("text"), 3).as("sh")
-      )
-      .filter(size(col("sh")) > 0)
-      .cache()
-
   private[graft] def minhashPairs(
       docsText: DataFrame,
       threshold: Double = 0.5,
@@ -412,18 +412,6 @@ object Dedup {
       .orderBy("doc_a", "doc_b")
   }
 
-  /** Benchmark decontamination — the eval-set leakage scan every
-    * pretraining corpus needs: flag training documents sharing >=
-    * `minOverlap` word trigrams with any benchmark document (here the
-    * benchmark set is the first `nBench` docs, standing in for a
-    * held-out eval suite — near-duplicates of benchmark docs light up
-    * with 70+ overlapping trigrams, incidental phrase reuse with 1-3).
-    *
-    * Scale shape: the benchmark shingle set is tiny and broadcast;
-    * the corpus is one explode + broadcast-semi join + count — no
-    * pairwise comparison, linear in corpus tokens, exactly how
-    * decontamination runs over a 100 TB corpus against a fixed
-    * benchmark suite. */
   /** Unordered kernel — pipe03 composes over this (the surviving-sort
     * rule: a consumer cannot optimize the public entry's presentation
     * orderBy away, and the contaminated set is corpus-fraction-sized
@@ -458,6 +446,18 @@ object Dedup {
       .filter(col("n_overlap") >= minOverlap)
   }
 
+  /** Benchmark decontamination — the eval-set leakage scan every
+    * pretraining corpus needs: flag training documents sharing >=
+    * `minOverlap` word trigrams with any benchmark document (here the
+    * benchmark set is the first `nBench` docs, standing in for a
+    * held-out eval suite — near-duplicates of benchmark docs light up
+    * with 70+ overlapping trigrams, incidental phrase reuse with 1-3).
+    *
+    * Scale shape: the benchmark shingle set is tiny and broadcast;
+    * the corpus is one explode + broadcast-semi join + count — no
+    * pairwise comparison, linear in corpus tokens, exactly how
+    * decontamination runs over a 100 TB corpus against a fixed
+    * benchmark suite. */
   def dedup07Decontaminate(
       lake: Lake,
       nBench: Int = 10,
@@ -650,25 +650,18 @@ object Dedup {
       col("label"),
       vectors.toDouble(col("embedding")).as("v")
     ).withColumn("nrm", vectors.norm(col("v")))
-    val packed = struct(col("vec_id").as("id"), col("v"), col("nrm"))
     // full blocks^2 grid per label; the a_id < b_id filter below
     // dedupes orientations (pmod blocking carries no id order, so a
     // triangular grid would still need both orientations per cell)
-    val a = e
-      .groupBy(col("label"), pmod(col("vec_id"), lit(blocks)).cast("int").as("ab"))
-      .agg(collect_list(packed).as("ablk"))
-      .withColumn("bb", explode(sequence(lit(0), lit(blocks - 1))))
-    val b = e
-      .groupBy(col("label"), pmod(col("vec_id"), lit(blocks)).cast("int").as("bb"))
-      .agg(collect_list(packed).as("bblk"))
-      .withColumn("ab", explode(sequence(lit(0), lit(blocks - 1))))
-    a.hint("shuffle_hash").join(b, Seq("label", "ab", "bb"))
-      .select(
-        col("label"),
-        explode(
-          graft.plans.BlockThresholdDots(col("ablk"), col("bblk"), threshold)
-        ).as("p")
-      )
+    Similarity.blockThresholdJoin(threshold, col("label")) { pack =>
+      val a = pack(e, "ablk",
+        Seq(col("label"), pmod(col("vec_id"), lit(blocks)).cast("int").as("ab")))
+        .withColumn("bb", explode(sequence(lit(0), lit(blocks - 1))))
+      val b = pack(e, "bblk",
+        Seq(col("label"), pmod(col("vec_id"), lit(blocks)).cast("int").as("bb")))
+        .withColumn("ab", explode(sequence(lit(0), lit(blocks - 1))))
+      a.hint("shuffle_hash").join(b, Seq("label", "ab", "bb"))
+    }
       .filter(col("p.a_id") < col("p.b_id"))
       .select(
         col("p.a_id").as("vec_a"),
@@ -1033,17 +1026,6 @@ object Dedup {
       .orderBy("cluster_id")
   }
 
-  /** samp05: LEAKAGE-SAFE train/val/test split — the curation
-    * correctness subtlety most pipelines get wrong: splitting by
-    * document hash puts near-duplicates of a training doc into the
-    * eval set, silently inflating every metric. The unit of
-    * assignment must be the NEAR-DUP CLUSTER, not the doc: MinHash
-    * pairs → star-CC cluster labels (dedup08's machinery), singletons
-    * keep their own id as the label, and the split decision is a
-    * deterministic modulo on the CLUSTER id (8/1/1) — so a whole
-    * duplicate group lands in exactly one split, reproducibly, with
-    * no RNG and no driver-side state. Linear dataflow: the CC labels
-    * plus one broadcast-joinable left join against the corpus. */
   /** Unordered kernel — pipe03 composes over this; the split frame is
     * CORPUS-sized, so the public entry's presentation sort surviving
     * inside the funnel would be a full-corpus range exchange + sort. */
@@ -1075,6 +1057,17 @@ object Dedup {
           .otherwise("test"))
   }
 
+  /** samp05: LEAKAGE-SAFE train/val/test split — the curation
+    * correctness subtlety most pipelines get wrong: splitting by
+    * document hash puts near-duplicates of a training doc into the
+    * eval set, silently inflating every metric. The unit of
+    * assignment must be the NEAR-DUP CLUSTER, not the doc: MinHash
+    * pairs → star-CC cluster labels (dedup08's machinery), singletons
+    * keep their own id as the label, and the split decision is a
+    * deterministic modulo on the CLUSTER id (8/1/1) — so a whole
+    * duplicate group lands in exactly one split, reproducibly, with
+    * no RNG and no driver-side state. Linear dataflow: the CC labels
+    * plus one broadcast-joinable left join against the corpus. */
   def samp05LeakageSafeSplit(
       lake: Lake,
       threshold: Double = 0.5,
@@ -1082,20 +1075,6 @@ object Dedup {
   ): DataFrame =
     leakageSplits(lake, threshold, maxIters).orderBy("doc_id")
 
-  /** samp07: SOFT dedup — keep every document but assign a sampling
-    * weight of 1/|cluster| from its near-dup cluster, so each
-    * duplicate group contributes exactly unit mass to the training
-    * mixture. The alternative to hard removal (dedup02/08) when
-    * near-dup variants carry signal worth keeping at reduced rate —
-    * the repetition-aware reweighting move scaling studies recommend
-    * over silent duplication. Downstream, `weight` multiplies any
-    * sampler's selection probability (samp01-03 compose unchanged).
-    *
-    * Scale shape: dedup04's linear candidate generation + star-CC
-    * labels (dedup08's machinery); cluster sizes via one map-side
-    * partial-aggregating groupBy and one equi-join on cluster_id —
-    * no window, no sort, both sides hash-partitioned on the same
-    * key. */
   /** samp09: cluster-BALANCED diversity sampling — draw up to `m`
     * documents per semantic cell instead of m·(cell share) per cell,
     * so tail topics survive subsampling and head topics stop
@@ -1133,6 +1112,20 @@ object Dedup {
       .orderBy("cluster", "rnk")
   }
 
+  /** samp07: SOFT dedup — keep every document but assign a sampling
+    * weight of 1/|cluster| from its near-dup cluster, so each
+    * duplicate group contributes exactly unit mass to the training
+    * mixture. The alternative to hard removal (dedup02/08) when
+    * near-dup variants carry signal worth keeping at reduced rate —
+    * the repetition-aware reweighting move scaling studies recommend
+    * over silent duplication. Downstream, `weight` multiplies any
+    * sampler's selection probability (samp01-03 compose unchanged).
+    *
+    * Scale shape: dedup04's linear candidate generation + star-CC
+    * labels (dedup08's machinery); cluster sizes via one map-side
+    * partial-aggregating groupBy and one equi-join on cluster_id —
+    * no window, no sort, both sides hash-partitioned on the same
+    * key. */
   def samp07SoftDedup(
       lake: Lake,
       threshold: Double = 0.5,
@@ -1412,6 +1405,63 @@ object Dedup {
         col("bk.bucket").as("bucket"))
   }
 
+  /** A `.compact-N` temp dir carrying `_SUCCESS` means a compaction
+    * crashed mid-swap: its merged rows may exist ONLY there (the swap
+    * deletes source batch dirs after the marker), so a reader that
+    * skips hidden dirs would treat stored rows as absent — duplicates
+    * would probe as new and enter the store permanently (round-13
+    * review). Read paths fail fast and name the fix; only
+    * compactBatchStore proceeds past this state, because its recovery
+    * preamble completes the swap first. An UNMARKED temp dir is
+    * harmless (the write crashed before any delete) and stays
+    * ignored here — the next compaction discards it. */
+  private[operators] def requireNoPendingCompaction(
+      fs: org.apache.hadoop.fs.FileSystem,
+      entries: Seq[org.apache.hadoop.fs.FileStatus],
+      p: org.apache.hadoop.fs.Path
+  ): Unit =
+    entries.foreach { st =>
+      if (st.isDirectory && st.getPath.getName.startsWith(".compact-") &&
+        fs.exists(new org.apache.hadoop.fs.Path(st.getPath, "_SUCCESS"))) {
+        val upTo = st.getPath.getName.stripPrefix(".compact-")
+        sys.error(
+          s"pending compaction swap at ${st.getPath}: a previous " +
+            "compaction committed its merge but crashed before the " +
+            s"swap completed — run the store's compaction (upTo=$upTo) " +
+            "to finish it before reading or appending to this store"
+        )
+      }
+    }
+
+  /** Guards the sink's batch-keyed store layout (FORMAT BREAK,
+    * advisor round 11): before the batch=N subdirs the sink wrote
+    * flat part files directly under `bands/`/`shingles/`/`pairs/`.
+    * Reading such a store through the batch=-filtered lister would
+    * silently treat it as EMPTY — every cross-batch duplicate missed,
+    * no error — and writing batch=N dirs next to the flat files makes
+    * a mixed layout Spark partition discovery rejects on later reads.
+    * So any non-hidden entry that is not a `batch=N` directory fails
+    * fast with a migration message: move the legacy files into a
+    * `batch=-1` subdir (strictly below every real batch id, so they
+    * probe as already-ingested corpus) or rebuild the store. */
+  private[operators] def requireBatchLayout(
+      entries: Seq[org.apache.hadoop.fs.FileStatus],
+      p: org.apache.hadoop.fs.Path
+  ): Unit = {
+    val legacy = entries.filter { st =>
+      val n = st.getPath.getName
+      !n.startsWith(".") && !n.startsWith("_") &&
+      !(st.isDirectory && n.startsWith("batch="))
+    }
+    require(
+      legacy.isEmpty,
+      s"legacy flat band-store layout under $p (e.g. ${legacy.head.getPath.getName}): " +
+        "this store predates the batch-keyed format — move the flat parquet " +
+        "files into a 'batch=-1' subdirectory (they will probe as " +
+        "already-ingested corpus) or rebuild the index with writeBandIndex"
+    )
+  }
+
   /** STREAMING twin of the MinHash-LSH pair kernel — the
     * foreachBatch sink for a continuously-ingesting corpus: each
     * micro-batch of (doc_id, text) documents
@@ -1453,63 +1503,6 @@ object Dedup {
     * `maxBucket` — and is deliberately NOT defaulted on, because the
     * verdict contract above the cap changes (dup_of can only name the
     * representative); the index owner turns it explicitly. */
-  /** Guards the sink's batch-keyed store layout (FORMAT BREAK,
-    * advisor round 11): before the batch=N subdirs the sink wrote
-    * flat part files directly under `bands/`/`shingles/`/`pairs/`.
-    * Reading such a store through the batch=-filtered lister would
-    * silently treat it as EMPTY — every cross-batch duplicate missed,
-    * no error — and writing batch=N dirs next to the flat files makes
-    * a mixed layout Spark partition discovery rejects on later reads.
-    * So any non-hidden entry that is not a `batch=N` directory fails
-    * fast with a migration message: move the legacy files into a
-    * `batch=-1` subdir (strictly below every real batch id, so they
-    * probe as already-ingested corpus) or rebuild the store. */
-  /** A `.compact-N` temp dir carrying `_SUCCESS` means a compaction
-    * crashed mid-swap: its merged rows may exist ONLY there (the swap
-    * deletes source batch dirs after the marker), so a reader that
-    * skips hidden dirs would treat stored rows as absent — duplicates
-    * would probe as new and enter the store permanently (round-13
-    * review). Read paths fail fast and name the fix; only
-    * compactBatchStore proceeds past this state, because its recovery
-    * preamble completes the swap first. An UNMARKED temp dir is
-    * harmless (the write crashed before any delete) and stays
-    * ignored here — the next compaction discards it. */
-  private[operators] def requireNoPendingCompaction(
-      fs: org.apache.hadoop.fs.FileSystem,
-      entries: Seq[org.apache.hadoop.fs.FileStatus],
-      p: org.apache.hadoop.fs.Path
-  ): Unit =
-    entries.foreach { st =>
-      if (st.isDirectory && st.getPath.getName.startsWith(".compact-") &&
-        fs.exists(new org.apache.hadoop.fs.Path(st.getPath, "_SUCCESS"))) {
-        val upTo = st.getPath.getName.stripPrefix(".compact-")
-        sys.error(
-          s"pending compaction swap at ${st.getPath}: a previous " +
-            "compaction committed its merge but crashed before the " +
-            s"swap completed — run the store's compaction (upTo=$upTo) " +
-            "to finish it before reading or appending to this store"
-        )
-      }
-    }
-
-  private[operators] def requireBatchLayout(
-      entries: Seq[org.apache.hadoop.fs.FileStatus],
-      p: org.apache.hadoop.fs.Path
-  ): Unit = {
-    val legacy = entries.filter { st =>
-      val n = st.getPath.getName
-      !n.startsWith(".") && !n.startsWith("_") &&
-      !(st.isDirectory && n.startsWith("batch="))
-    }
-    require(
-      legacy.isEmpty,
-      s"legacy flat band-store layout under $p (e.g. ${legacy.head.getPath.getName}): " +
-        "this store predates the batch-keyed format — move the flat parquet " +
-        "files into a 'batch=-1' subdirectory (they will probe as " +
-        "already-ingested corpus) or rebuild the index with writeBandIndex"
-    )
-  }
-
   def minhashPairsBatchSink(
       stateDir: String,
       threshold: Double = 0.5,
@@ -1918,21 +1911,15 @@ object Dedup {
       // the a-side replicates ×B for the grid, the unreplicated
       // b-side builds the hash relation (the sim11 orientation rule)
       val nBlk = math.max(1, math.ceil(n.toDouble / kEff / 1000.0)).toInt
-      val packed = struct(col("vec_id").as("id"), col("v"), col("nrm"))
-      val blk = assigned
-        .groupBy(col("cluster"), pmod(col("vec_id"), lit(nBlk)).cast("int").as("ab"))
-        .agg(collect_list(packed).as("ablk"))
-      val aSide = blk
-        .withColumn("bb", explode(sequence(lit(0), lit(nBlk - 1))))
-      val bSide = blk
-        .select(col("cluster"), col("ab").as("bb"), col("ablk").as("bblk"))
-      aSide
-        .join(bSide.hint("shuffle_hash"), Seq("cluster", "bb"))
-        .select(
-          explode(
-            graft.plans.BlockThresholdDots(col("ablk"), col("bblk"), tau)
-          ).as("p")
-        )
+      Similarity.blockThresholdJoin(tau) { pack =>
+        val blk = pack(assigned, "ablk",
+          Seq(col("cluster"), pmod(col("vec_id"), lit(nBlk)).cast("int").as("ab")))
+        val bSide = blk
+          .select(col("cluster"), col("ab").as("bb"), col("ablk").as("bblk"))
+        blk
+          .withColumn("bb", explode(sequence(lit(0), lit(nBlk - 1))))
+          .join(bSide.hint("shuffle_hash"), Seq("cluster", "bb"))
+      }
         .filter(col("p.a_id") < col("p.b_id"))
         .select(col("p.a_id").as("doc_a"), col("p.b_id").as("doc_b"))
     }).localCheckpoint(false)

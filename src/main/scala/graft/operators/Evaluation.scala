@@ -227,23 +227,6 @@ object Evaluation {
       .orderBy("label")
   }
 
-  /** eval05: CALIBRATION CURVE for the model-based quality score —
-    * the acceptance test a curation pipeline runs before replacing an
-    * expensive rule pipeline with a cheap learned scorer: at each
-    * keep-threshold, how much of the corpus survives and how well the
-    * kept set agrees with the rule verdict (txt20's Gopher `passes`
-    * as the reference labels, txt29's hashed-classifier score as the
-    * ranker). Emits one row per threshold: kept count/fraction,
-    * precision (kept docs the rules also pass), recall (rule-passing
-    * docs kept).
-    *
-    * Scale shape: both signal frames are MAP-ONLY passes over the
-    * corpus; they meet in one doc_id equi-join, and every threshold's
-    * counts are conditional sums inside ONE partial-aggregating
-    * pass — the whole curve costs one scan + one 1-row aggregate,
-    * then unpivots driver-side via stack. Thresholds are a fixed
-    * grid (the score is a bounded per-token average), so the output
-    * is |grid| rows at any corpus size. */
   /** eval06: Bland-Altman AGREEMENT audit between a recorded metric
     * and its recomputed value — the statistical content behind the
     * reference's fig1 (generate_paper_figures.py:123
@@ -324,6 +307,23 @@ object Evaluation {
         round(col("m.s_milli") / 1000.0 / col("m.n_feats"), 4).as("q_score")
       )
 
+  /** eval05: CALIBRATION CURVE for the model-based quality score —
+    * the acceptance test a curation pipeline runs before replacing an
+    * expensive rule pipeline with a cheap learned scorer: at each
+    * keep-threshold, how much of the corpus survives and how well the
+    * kept set agrees with the rule verdict (txt20's Gopher `passes`
+    * as the reference labels, txt29's hashed-classifier score as the
+    * ranker). Emits one row per threshold: kept count/fraction,
+    * precision (kept docs the rules also pass), recall (rule-passing
+    * docs kept).
+    *
+    * Scale shape: both signal frames are MAP-ONLY passes over the
+    * corpus; they meet in one doc_id equi-join, and every threshold's
+    * counts are conditional sums inside ONE partial-aggregating
+    * pass — the whole curve costs one scan + one 1-row aggregate,
+    * then unpivots driver-side via stack. Thresholds are a fixed
+    * grid (the score is a bounded per-token average), so the output
+    * is |grid| rows at any corpus size. */
   def eval05ScoreCalibration(lake: Lake, dim: Int = 4096): DataFrame = {
     val thresholds = Seq(-0.10, -0.05, 0.0, 0.05, 0.10, 0.15, 0.20)
     // one fused map pass for score + verdict (gopherVerdict carry)

@@ -285,32 +285,6 @@ object Events {
       .orderBy("purchase_id", "view_id")
   }
 
-  /** evt10: LATENESS PROFILE for watermark tuning — per event-time
-    * day, how far behind the already-observed event-time high-water
-    * mark events ARRIVE. THE question a streaming deployment must
-    * answer before picking `withWatermark`: a 1-minute watermark drops
-    * exactly the `n_late_1m` rows this report counts, so these
-    * thresholds are the streaming module's configuration evidence,
-    * computed in batch over history.
-    *
-    * The events table carries no ingest timestamp (event_id order IS
-    * event-time order — zero disorder), so arrival is modeled by a
-    * deterministic md5-derived ingest delay of 0..2h per event — the
-    * bounded-disorder shape of a partitioned message bus. The delay
-    * column is the STUB (emb01's contract): with a real ingest-time
-    * column, `aus` is that column and nothing else changes.
-    *
-    * The high-water mark is a running max over GLOBAL arrival order —
-    * the naive form is one corpus-wide window task. Same cure as
-    * samp04's distributed prefix sum, for max: shard by arrival-time
-    * bucket (`aus div shardUs`), per-shard running max (S-way parallel
-    * windows), then a shard-level prefix max over the S-row header
-    * frame broadcast back; bucketing by arrival TIME keeps
-    * earlier-shard ⟹ earlier-arrival, so the two-level max is exactly
-    * the global one. The header window runs on one partition by
-    * construction — S rows, not the corpus. An event is compared
-    * against STRICTLY EARLIER arrivals only (rowsBetween …, -1), so
-    * the first arrival is never late. */
   /** The shared lateness frame (evt10's model): (event_id, ts, tus,
     * late_us) under the deterministic arrival stub and the sharded
     * two-level high-water mark. */
@@ -349,6 +323,32 @@ object Events {
       )
   }
 
+  /** evt10: LATENESS PROFILE for watermark tuning — per event-time
+    * day, how far behind the already-observed event-time high-water
+    * mark events ARRIVE. THE question a streaming deployment must
+    * answer before picking `withWatermark`: a 1-minute watermark drops
+    * exactly the `n_late_1m` rows this report counts, so these
+    * thresholds are the streaming module's configuration evidence,
+    * computed in batch over history.
+    *
+    * The events table carries no ingest timestamp (event_id order IS
+    * event-time order — zero disorder), so arrival is modeled by a
+    * deterministic md5-derived ingest delay of 0..2h per event — the
+    * bounded-disorder shape of a partitioned message bus. The delay
+    * column is the STUB (emb01's contract): with a real ingest-time
+    * column, `aus` is that column and nothing else changes.
+    *
+    * The high-water mark is a running max over GLOBAL arrival order —
+    * the naive form is one corpus-wide window task. Same cure as
+    * samp04's distributed prefix sum, for max: shard by arrival-time
+    * bucket (`aus div shardUs`), per-shard running max (S-way parallel
+    * windows), then a shard-level prefix max over the S-row header
+    * frame broadcast back; bucketing by arrival TIME keeps
+    * earlier-shard ⟹ earlier-arrival, so the two-level max is exactly
+    * the global one. The header window runs on one partition by
+    * construction — S rows, not the corpus. An event is compared
+    * against STRICTLY EARLIER arrivals only (rowsBetween …, -1), so
+    * the first arrival is never late. */
   def evt10LatenessProfile(
       lake: Lake,
       shardUs: Long = 21600000000L // 6h of arrival time per shard

@@ -1,71 +1,152 @@
 package graft.operators
 
 import graft.catalog.Lake
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** Hierarchy / graph operators — the reference's ontology-hierarchy
   * surface (4-level OpenAlex topic rollups, ontology parent-child
-  * traversal in sparql_query.py) re-expressed as joins + an
-  * iterative fixpoint loop.
+  * traversal in sparql_query.py) re-expressed as joins + iterative
+  * kernels.
   *
-  * Scale notes: rollups are broadcast-dim joins; the closure loop is
-  * hop-bounded BFS where each iteration is one equi-join shuffled on
-  * the frontier key — the standard distributed pattern (no recursion
-  * in the engine, the driver only orchestrates plan construction).
+  * Scale notes: rollups are broadcast-dim joins; the iterative
+  * operators (transitive closure, PageRank, BFS, Bellman-Ford) are
+  * co-partitioned RDD kernels in the Pregel shape — edges partitioned
+  * once, state co-partitioned with them, one or two shuffles per hop
+  * and no recursion in the engine (the driver only orchestrates).
   */
 object Graph {
 
-  /** Per-partition adjacency index for the long-keyed Pregel kernels
-    * (graph27/graph30) — GraphX's EdgePartition idea re-expressed
-    * minimally: two (three with weights) PRIMITIVE long arrays sorted
-    * by source, looked up by binary search + linear walk. Why not a
-    * HashMap: an RDD join walks the FULL edge iterator every
+  /** Per-partition adjacency index for the long-keyed kernels
+    * (graph06's PageRank, graph27's BFS, graph30's Bellman-Ford) —
+    * GraphX's EdgePartition idea re-expressed minimally: ONE primitive
+    * long array of (src, dst, w) triples sorted by (src, dst), looked
+    * up by binary search + a walk along the src's run.
+    *
+    * It holds each DISTINCT (src, dst) pair once, with the LEAST weight
+    * its copies carried. That is what every caller needs: PageRank's
+    * outdeg counts distinct edges, graph30's edge cost is the min
+    * l_quantity, and graph27's seen set would absorb duplicate
+    * messages anyway. All copies of a pair hash to the same src
+    * partition, so the per-partition fold is global — no SQL distinct
+    * exchange, no per-row allocation.
+    *
+    * Why not a HashMap: an RDD join walks the FULL edge iterator every
     * superstep (O(|edges| x levels) — 144M row visits for 4 levels at
-    * sf3), and a boxed HashMap/HashSet index allocates per-row
-    * objects for |edges|/P rows in 32 concurrent tasks, which is an
-    * allocation failure at sf10 (120M directed edges). Primitive
-    * arrays cost exactly the data's bytes, the one sort is in-place,
-    * and each later level touches only the frontier's rows. */
-  private[operators] final class LongAdj(
-      val srcs: Array[Long],
-      val dsts: Array[Long],
-      val ws: Array[Long] // null when unweighted
-  ) extends Serializable {
-    /** first index holding src `n`, or -1 */
-    @inline def lower(n: Long): Int = {
-      var lo = 0; var hi = srcs.length
+    * sf3), and a boxed HashMap/HashSet index allocates per-row objects
+    * for |edges|/P rows in 32 concurrent tasks, which is an allocation
+    * failure at sf10 (120M directed edges). A primitive array costs
+    * exactly the data's bytes, the one sort is in-place, and each later
+    * level touches only the frontier's rows. */
+  private[graft] final class LongAdj private (e: Array[Long]) extends Serializable {
+    /** number of (distinct) edges */
+    def size: Int = e.length / 3
+    private def src(i: Int): Long = e(3 * i)
+
+    /** first edge index whose src is >= `n` */
+    private def lower(n: Long): Int = {
+      var lo = 0; var hi = size
       while (lo < hi) {
         val mid = (lo + hi) >>> 1
-        if (srcs(mid) < n) lo = mid + 1 else hi = mid
+        if (src(mid) < n) lo = mid + 1 else hi = mid
       }
-      if (lo < srcs.length && srcs(lo) == n) lo else -1
+      lo
+    }
+
+    /** the distinct sources, ascending */
+    def nodes: Iterator[Long] =
+      Iterator.range(0, size).filter(i => i == 0 || src(i) != src(i - 1)).map(src)
+
+    /** The neighbour walk: for each (node, x) of `it`, one
+      * (dst, f(x, w, outdeg)) per edge (node, dst, w) — a binary search
+      * to node's run, then a walk along it. A node this partition does
+      * not hold sends nothing. */
+    def send(it: Iterator[(Long, Long)])(f: LongAdj.Msg): Iterator[(Long, Long)] = {
+      val edges = size
+      new Iterator[(Long, Long)] {
+        private var i = 0; private var end = 0; private var deg = 0
+        private var x = 0L
+        def hasNext: Boolean = {
+          while (i == end && it.hasNext) {
+            val (n, v) = it.next()
+            i = lower(n); end = i; x = v
+            while (end < edges && src(end) == n) end += 1
+            deg = end - i
+          }
+          i < end
+        }
+        def next(): (Long, Long) = {
+          val r = (e(3 * i + 1), f(x, e(3 * i + 2), deg)); i += 1; r
+        }
+      }
     }
   }
 
-  private[operators] object LongAdj {
-    /** In-place dual/triple-array quicksort by `s` (median-of-3,
-      * insertion sort below 16) — no boxing, no permutation array. */
-    private def sort(s: Array[Long], d: Array[Long], w: Array[Long]): Unit = {
+  private[graft] object LongAdj {
+    /** A message value from the sender's value, the edge weight and the
+      * sender's out-degree (a SAM, so the walk calls it unboxed). */
+    trait Msg { def apply(x: Long, w: Long, deg: Int): Long }
+
+    /** The one build: (src, (dst, w)) edges into one growable buffer,
+      * one in-place (src, dst) sort, and each run of equal pairs folded
+      * into its first edge with the least weight. */
+    def build(it: Iterator[(Long, (Long, Long))]): LongAdj = {
+      var e = new Array[Long](3 << 10)
+      var n = 0
+      while (it.hasNext) {
+        if (3 * n == e.length) e = java.util.Arrays.copyOf(e, 2 * e.length)
+        val (s, (d, w)) = it.next()
+        e(3 * n) = s; e(3 * n + 1) = d; e(3 * n + 2) = w
+        n += 1
+      }
+      sort(e, n)
+      var m = 0
+      var i = 0
+      while (i < n) {
+        val k = 3 * (m - 1)
+        if (m > 0 && e(3 * i) == e(k) && e(3 * i + 1) == e(k + 1))
+          e(k + 2) = math.min(e(k + 2), e(3 * i + 2))
+        else {
+          System.arraycopy(e, 3 * i, e, 3 * m, 3)
+          m += 1
+        }
+        i += 1
+      }
+      new LongAdj(java.util.Arrays.copyOf(e, 3 * m))
+    }
+
+    /** In-place quicksort of the first `n` triples of `e` by (src, dst)
+      * (median-of-3, insertion sort below 16) — no boxing, no
+      * permutation array. */
+    private def sort(e: Array[Long], n: Int): Unit = {
+      // triple i's (src, dst) against (s, d)
+      @inline def cmp(i: Int, s: Long, d: Long): Int = {
+        val c = java.lang.Long.compare(e(3 * i), s)
+        if (c != 0) c else java.lang.Long.compare(e(3 * i + 1), d)
+      }
+      @inline def gt(i: Int, j: Int): Boolean = cmp(i, e(3 * j), e(3 * j + 1)) > 0
       @inline def swap(i: Int, j: Int): Unit = {
-        val t = s(i); s(i) = s(j); s(j) = t
-        val u = d(i); d(i) = d(j); d(j) = u
-        if (w != null) { val v = w(i); w(i) = w(j); w(j) = v }
+        var k = 0
+        while (k < 3) {
+          val t = e(3 * i + k); e(3 * i + k) = e(3 * j + k); e(3 * j + k) = t
+          k += 1
+        }
       }
       def qs(lo0: Int, hi0: Int): Unit = {
         var lo = lo0; var hi = hi0
         while (hi - lo > 15) {
           val mid = (lo + hi) >>> 1
-          // median-of-3 pivot to s(mid)
-          if (s(lo) > s(mid)) swap(lo, mid)
-          if (s(lo) > s(hi)) swap(lo, hi)
-          if (s(mid) > s(hi)) swap(mid, hi)
-          val pivot = s(mid)
+          if (gt(lo, mid)) swap(lo, mid)
+          if (gt(lo, hi)) swap(lo, hi)
+          if (gt(mid, hi)) swap(mid, hi)
+          val ps = e(3 * mid); val pd = e(3 * mid + 1)
           var i = lo; var j = hi
           while (i <= j) {
-            while (s(i) < pivot) i += 1
-            while (s(j) > pivot) j -= 1
+            while (cmp(i, ps, pd) < 0) i += 1
+            while (cmp(j, ps, pd) > 0) j -= 1
             if (i <= j) { swap(i, j); i += 1; j -= 1 }
           }
           // recurse into the smaller side, loop on the larger
@@ -75,146 +156,11 @@ object Graph {
         var i = lo + 1
         while (i <= hi) {
           var j = i
-          while (j > lo && s(j - 1) > s(j)) { swap(j - 1, j); j -= 1 }
+          while (j > lo && gt(j - 1, j)) { swap(j - 1, j); j -= 1 }
           i += 1
         }
       }
-      if (s.length > 1) qs(0, s.length - 1)
-    }
-
-    def build(
-        it: Iterator[(Long, Long)],
-        weights: Iterator[Long] = null
-    ): LongAdj = {
-      var cap = 1 << 10
-      var n = 0
-      var s = new Array[Long](cap); var d = new Array[Long](cap)
-      var w: Array[Long] = if (weights != null) new Array[Long](cap) else null
-      while (it.hasNext) {
-        if (n == cap) {
-          cap <<= 1
-          s = java.util.Arrays.copyOf(s, cap)
-          d = java.util.Arrays.copyOf(d, cap)
-          if (w != null) w = java.util.Arrays.copyOf(w, cap)
-        }
-        val (a, b) = it.next()
-        s(n) = a; d(n) = b
-        if (w != null) w(n) = weights.next()
-        n += 1
-      }
-      val adj = new LongAdj(
-        java.util.Arrays.copyOf(s, n),
-        java.util.Arrays.copyOf(d, n),
-        if (w != null) java.util.Arrays.copyOf(w, n) else null
-      )
-      sort(adj.srcs, adj.dsts, adj.ws)
-      adj
-    }
-
-    /** build from (src, dst, w) triples */
-    def buildWeighted(it: Iterator[(Long, (Long, Long))]): LongAdj = {
-      var cap = 1 << 10
-      var n = 0
-      var s = new Array[Long](cap); var d = new Array[Long](cap)
-      var w = new Array[Long](cap)
-      while (it.hasNext) {
-        if (n == cap) {
-          cap <<= 1
-          s = java.util.Arrays.copyOf(s, cap)
-          d = java.util.Arrays.copyOf(d, cap)
-          w = java.util.Arrays.copyOf(w, cap)
-        }
-        val (a, (b, c)) = it.next()
-        s(n) = a; d(n) = b; w(n) = c
-        n += 1
-      }
-      val adj = new LongAdj(
-        java.util.Arrays.copyOf(s, n),
-        java.util.Arrays.copyOf(d, n),
-        java.util.Arrays.copyOf(w, n)
-      )
-      sort(adj.srcs, adj.dsts, adj.ws)
-      adj
-    }
-
-    /** Dual-array quicksort by (s, d) LEXICOGRAPHIC — the
-      * dedupe-ready order buildDistinct needs (the by-s sort above
-      * leaves duplicate (s, d) pairs scattered inside a run). */
-    private def sortPairs(s: Array[Long], d: Array[Long]): Unit = {
-      @inline def lt(i: Int, js: Long, jd: Long): Boolean =
-        s(i) < js || (s(i) == js && d(i) < jd)
-      @inline def gt(i: Int, js: Long, jd: Long): Boolean =
-        s(i) > js || (s(i) == js && d(i) > jd)
-      @inline def swap(i: Int, j: Int): Unit = {
-        val t = s(i); s(i) = s(j); s(j) = t
-        val u = d(i); d(i) = d(j); d(j) = u
-      }
-      def qs(lo0: Int, hi0: Int): Unit = {
-        var lo = lo0; var hi = hi0
-        while (hi - lo > 15) {
-          val mid = (lo + hi) >>> 1
-          if (gt(lo, s(mid), d(mid))) swap(lo, mid)
-          if (gt(lo, s(hi), d(hi))) swap(lo, hi)
-          if (gt(mid, s(hi), d(hi))) swap(mid, hi)
-          val ps = s(mid); val pd = d(mid)
-          var i = lo; var j = hi
-          while (i <= j) {
-            while (lt(i, ps, pd)) i += 1
-            while (gt(j, ps, pd)) j -= 1
-            if (i <= j) { swap(i, j); i += 1; j -= 1 }
-          }
-          if (j - lo < hi - i) { qs(lo, j); lo = i }
-          else { qs(i, hi); hi = j }
-        }
-        var i = lo + 1
-        while (i <= hi) {
-          var j = i
-          while (j > lo && gt(j - 1, s(j), d(j))) { swap(j - 1, j); j -= 1 }
-          i += 1
-        }
-      }
-      if (s.length > 1) qs(0, s.length - 1)
-    }
-
-    /** build + DISTINCT: sort by (src, dst) and drop adjacent
-      * duplicates in place. All copies of a duplicate pair hash to
-      * the same src partition, so the per-partition dedupe is global
-      * — the SQL `repartition(a, b).distinct()` exchange (and its
-      * ~unique-key partial aggregate) lands inside the one index
-      * build shuffle, zero extra exchange, zero per-row allocation.
-      * For callers whose semantics NEED distinct edges (pagerank's
-      * outdeg); the BFS builds stay dedupe-free on purpose (their
-      * seen set absorbs duplicates — see the graph27 note). */
-    def buildDistinct(it: Iterator[(Long, Long)]): LongAdj = {
-      var cap = 1 << 10
-      var n = 0
-      var s = new Array[Long](cap); var d = new Array[Long](cap)
-      while (it.hasNext) {
-        if (n == cap) {
-          cap <<= 1
-          s = java.util.Arrays.copyOf(s, cap)
-          d = java.util.Arrays.copyOf(d, cap)
-        }
-        val (a, b) = it.next()
-        s(n) = a; d(n) = b
-        n += 1
-      }
-      s = java.util.Arrays.copyOf(s, n)
-      d = java.util.Arrays.copyOf(d, n)
-      sortPairs(s, d)
-      var m = 0
-      var i = 0
-      while (i < n) {
-        if (m == 0 || s(i) != s(m - 1) || d(i) != d(m - 1)) {
-          s(m) = s(i); d(m) = d(i); m += 1
-        }
-        i += 1
-      }
-      new LongAdj(
-        java.util.Arrays.copyOf(s, m),
-        java.util.Arrays.copyOf(d, m),
-        null
-      )
+      if (n > 1) qs(0, n - 1)
     }
   }
 
@@ -313,7 +259,7 @@ object Graph {
     * assumption. A FACT-scale closure (120M+ edges — the allocation
     * regime that killed graph27's boxed frontier at sf10) does not
     * belong here: it needs the primitive LongAdj index path the BFS
-    * kernels use (bfsKernel/bellmanFordKernel below), which this
+    * kernels use (graph27/graph30 below), which this
     * generic-K kernel deliberately does not reimplement. */
   private def closureKernel[K](
       raw: org.apache.spark.rdd.RDD[(K, K)],
@@ -1111,241 +1057,74 @@ object Graph {
     * node per iteration — a ~1e-6 relative perturbation, far below
     * rank gaps of interest, and identically reproduced everywhere.
     *
-    * Scale: the canonical distributed PageRank loop — per iteration
-    * one equi-join of ranks to the (src-partitioned) edge list and one
-    * groupBy(dst) sum; localCheckpoint caps lineage growth exactly as
-    * in transitiveClosure. Edges live once; degree is precomputed and
-    * carried on the edge row so the loop body never re-joins it. */
-  /** PRECONDITION: the edge list must be SYMMETRIC (every (u,v) paired
-    * with (v,u) — graph06 bidirects its pairs before calling). The node
-    * universe is derived from `src` alone and each iteration rebuilds
-    * ranks from groupBy(dst), so on a general directed graph sinks
-    * would never be ranked and in-degree-0 nodes would drop after the
-    * first iteration. On a symmetric graph src-set == dst-set == node
-    * set and neither case exists. */
-  def pagerankMicro(edges0: DataFrame, iters: Int): DataFrame = {
-    val totalMass = 1000000000000L
-    // Checkpoint the shared frames ONCE, in dependency order: edges0
-    // (often an expensive fact join) feeds deg and the edge join; deg
-    // feeds the node count, the rank seed and the edge join. Left
-    // unmaterialized, each of those references re-executes the whole
-    // upstream pipeline — the first cut of this loop recomputed the
-    // edge build ~10x and ran 16 s at sf0.1 vs ~2 s with checkpoints.
-    // Degree rides the edge row via a window over the SAME partitioning
-    // the edge list already needs — one shuffle, no self-join. (An
-    // aggregate-then-broadcast-join variant was measured SLOWER here:
-    // the blocking broadcast build costs more than the window's reuse
-    // of the single src shuffle.)
-    val withDeg = edges0
-      .withColumn(
-        "outdeg",
-        count(lit(1)).over(Window.partitionBy("src"))
-      )
-      .localCheckpoint()
-    val nodes = withDeg.select(col("src").as("node")).distinct().localCheckpoint()
-    // |V| is ONE scalar reused by every iteration: counting it on the
-    // driver (the count is answered from the checkpointed frame) and
-    // folding it into literal per-node/teleport constants deletes the
-    // crossJoin(broadcast(nRow)) from the seed AND from all `iters`
-    // loop bodies — each of those broadcast builds blocked the driver
-    // for a scheduling round-trip. Integer-exact vs the oracle: all
-    // operands are positive, so Scala Long division == SQL `div`/`//`.
-    val n = nodes.count()
-    // Empty graph: no nodes means no ranks — return the empty frame
-    // with the loop's schema instead of dividing by zero (advisor r5).
-    if (n == 0) return nodes.select(col("node"), lit(0L).as("r"))
-    val perNode = totalMass / n
-    val teleport = (15L * perNode) / 100L
-    // Seed is NOT checkpointed: it is a pure projection of the
-    // checkpointed `nodes`, referenced exactly once (iteration 1).
-    var ranks = nodes.select(col("node"), lit(perNode).as("r"))
-    var prevCkpt: Set[Int] = Set.empty
-    var i = 0
-    while (i < iters) {
-      // No forced broadcast on ranks: at this SF AQE broadcasts the
-      // |V|-row side (the edge list never re-shuffles), while on a
-      // billion-node graph the same plan degrades to a shuffle join
-      // instead of OOMing the driver — the q05 scaling-dim discipline.
-      // Damping is folded into the aggregate projection so each
-      // iteration is exactly one join stage + one aggregate stage.
-      //
-      // repartition-BEFORE-aggregate (round 14 — the xref02/q18
-      // lesson landing here the hard way): fused with the join, the
-      // partial aggregate's per-task hash map sees ~|V|-cardinality
-      // dst keys while sharing the stage's memory with the join
-      // itself, 32 tasks at once — at sf10 (100M contrib rows, 17M
-      // nodes) that stage died AGGREGATE_OUT_OF_MEMORY at 8g and
-      // even 16g, and crawled at 24g (198 s, spill-bound).
-      // Exchanging the RAW (dst, contrib) rows first bounds each
-      // task's aggregate to |V|/P keys (~34 MB): sf10 completes at
-      // 8g in ~80 s. The traded map-side compression was ~2x shuffle
-      // volume — the memory bound is what survives scale.
-      ranks = withDeg
-        .join(ranks, col("src") === col("node"))
-        .select(col("dst"), expr("r div outdeg").as("contrib"))
-        .repartition(col("dst"))
-        .groupBy("dst")
-        .agg(expr(s"$teleport + (85 * sum(contrib)) div 100").as("r"))
-        .withColumnRenamed("dst", "node")
-      // Checkpoint every THIRD iterate (and the last). Measured at
-      // sf0.1 (min of 5 sweeps each): every-2nd 3.61 s, every-3rd
-      // 2.88 s, none-at-all 2.91 s — each checkpoint is a blocking
-      // driver job, and the rank lineage grows LINEARLY (one join +
-      // one agg per iteration, unlike the closure loop's join+union
-      // doubling), so sparse materialization wins. Not zero, though:
-      // the cadence caps plan size for arbitrary iteration counts,
-      // at the price of one no-op barrier per 3 iterations. Task
-      // retries recompute at most back to the previous iteration's
-      // shuffle files either way.
-      //
-      // Release the SUPERSEDED rank checkpoint as soon as the next
-      // one is materialized (localCheckpoint is eager): once iterate
-      // i is pinned, iterate i-3's blocks are unreachable from any
-      // future step. At iters=5 this is measurably neutral (86 vs
-      // 93 s sf10, window noise — only two generations ever exist);
-      // the point is BOUNDED storage for real centrality runs
-      // (20-50 iterations), where waiting on the async ContextCleaner
-      // stacks dead rank generations against the live working set.
-      // Release ids come from the checkpointed Dataset's own
-      // LogicalRDD leaves (Bridge.checkpointRddIds) — never a global
-      // keyset diff.
-      if (i % 3 == 2 || i == iters - 1) {
-        val sc = ranks.sparkSession.sparkContext
-        ranks = ranks.localCheckpoint()
-        // ids read off the checkpointed Dataset itself (LogicalRDD
-        // leaves) — a global keyset diff could capture a concurrent
-        // job's RDD in a shared session (advisor round 12)
-        val added =
-          org.apache.spark.sql.graftbridge.Bridge.checkpointRddIds(ranks)
-        prevCkpt.foreach(id =>
-          sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false)))
-        prevCkpt = added
-      }
-      i += 1
-    }
-    ranks
-  }
-
-  /** pagerankMicro's rank recurrence on the co-partitioned primitive
-    * kernel (the bfsKernel pattern applied to the iterative-aggregate
-    * family's last DataFrame loop). SAME FUNCTION as pagerankMicro —
-    * every quantity is integer micro-mass and integer addition is
-    * order-independent, so the kernel reproduces the DataFrame loop
-    * BIT-FOR-BIT whatever the partitioning (spec-pinned equal at two
-    * SFs; contrast the float-sum case, where this rewrite would not
-    * be result-stable). Same SYMMETRIC-edges precondition.
+    * PRECONDITION: the edge list must be SYMMETRIC (every (u,v) paired
+    * with (v,u) — graph06 bidirects its pairs before calling). The
+    * node universe is the index's sources and each iteration rebuilds
+    * ranks from the messages' targets, so on a general directed graph
+    * sinks would never be ranked and in-degree-0 nodes would drop
+    * after the first iteration. On a symmetric graph neither case
+    * exists.
     *
-    * Why it beats the SQL loop at scale (measured in BASELINE round
-    * 15, "graph06's loop re-kerneled"):
+    * The loop is the co-partitioned primitive kernel (graph27's
+    * pattern). Integer addition is order-independent, so it is the
+    * SAME function as the DataFrame join/groupBy loop GraphSpec keeps
+    * as its reference — spec-pinned bit-for-bit over the full rank
+    * table. Why it beats that loop at scale (measured in BASELINE
+    * round 15, "graph06's loop re-kerneled"):
     *  - the edge side is ONE shuffle total: raw pairs hash-partition
-    *    by src and become a per-partition (src, dst)-sorted primitive
-    *    index; the caller-side `repartition(a,b).distinct()` exchange
-    *    AND the outdeg window shuffle both collapse into the build
-    *    (duplicates of a pair land in the same src partition, so the
-    *    in-array adjacent dedupe is global; outdeg is the run length,
-    *    free from the same sort).
+    *    by src into a LongAdj index, whose distinct-pair fold replaces
+    *    the SQL `repartition(a,b).distinct()` exchange, and whose run
+    *    length is outdeg — the outdeg window shuffle is gone too.
     *  - each iteration is exactly ONE shuffle (reduceByKey on dst):
     *    ranks stay co-partitioned with the index, the contribution
-    *    expansion is a narrow zipPartitions (binary search + run
-    *    walk, zero allocation per row), and the map-side combiner
-    *    both halves the shuffle volume the round-14 repartition fix
-    *    traded away AND bounds task memory by spilling
-    *    (ExternalAppendOnlyMap) instead of dying — the
+    *    expansion is the index's narrow neighbour walk, and the
+    *    map-side combiner both halves the shuffle volume and bounds
+    *    task memory by spilling (ExternalAppendOnlyMap) — the
     *    AGGREGATE_OUT_OF_MEMORY failure mode of the fused SQL
-    *    aggregate cannot occur here.
+    *    aggregate at sf10 cannot occur here.
     *  - no per-iteration AQE stage materializations, no broadcast
     *    builds, no join: the 10-stage SQL loop becomes iters+1
     *    stages.
     * Rank generations are each consumed exactly once (by the next
     * iteration), so none is persisted — every reduceByKey leaves
     * shuffle files that bound task-retry recompute to one iteration,
-    * exactly the recovery barrier the SQL loop's checkpoint cadence
-    * bought with blocking driver jobs. Only the index persists (it
-    * is read every iteration). Deep-loop callers (20-50 iterations)
-    * inherit linear lineage growth in the PLAN only; the shuffle
-    * barriers keep recovery flat, so no checkpoint cadence is needed
-    * at any iters. */
-  private[operators] def pagerankKernelMicro(
+    * so no checkpoint cadence is needed at any iters. Only the index
+    * persists (it is read every iteration). */
+  private[graft] def pagerankKernelMicro(
       spark: org.apache.spark.sql.SparkSession,
-      raw: org.apache.spark.rdd.RDD[(Long, Long)],
+      raw: RDD[(Long, Long)],
       iters: Int
   ): DataFrame = {
-    import org.apache.spark.HashPartitioner
-    import org.apache.spark.storage.StorageLevel
     val p = new HashPartitioner(
       spark.conf.get("spark.sql.shuffle.partitions").toInt
     )
     val adj = raw
       .partitionBy(p)
-      .mapPartitions(
-        it => Iterator.single(LongAdj.buildDistinct(it)),
-        preservesPartitioning = true
-      )
+      .mapValues((_, 0L))
+      .mapPartitions(it => Iterator.single(LongAdj.build(it)), preservesPartitioning = true)
       .persist(StorageLevel.MEMORY_AND_DISK)
     // |V| = Σ per-partition distinct srcs (each src lives in exactly
-    // one partition) — one small job, replacing the SQL nodes.count()
-    val n = adj
-      .map { a =>
-        var c = 0L; var i = 0
-        while (i < a.srcs.length) {
-          if (i == 0 || a.srcs(i) != a.srcs(i - 1)) c += 1
-          i += 1
-        }
-        c
-      }
-      .fold(0L)(_ + _)
+    // one partition) — one small job
+    val n = adj.map(_.nodes.size.toLong).fold(0L)(_ + _)
     import spark.implicits._
     if (n == 0)
       return spark.emptyDataset[(Long, Long)].toDF("node", "r")
     val totalMass = 1000000000000L
     val perNode = totalMass / n
     val teleport = (15L * perNode) / 100L
-    // seed narrowly off the index's own run heads — already
-    // partitioned by p, no separate nodes frame, no extra shuffle
-    var ranks: org.apache.spark.rdd.RDD[(Long, Long)] = adj
-      .mapPartitions(
-        { ait =>
-          val a = ait.next()
-          new Iterator[(Long, Long)] {
-            private var i = 0
-            def hasNext: Boolean = i < a.srcs.length
-            def next(): (Long, Long) = {
-              val r = (a.srcs(i), perNode)
-              val cur = a.srcs(i)
-              while (i < a.srcs.length && a.srcs(i) == cur) i += 1
-              r
-            }
-          }
-        },
-        preservesPartitioning = true
-      )
-    var it = 0
-    while (it < iters) {
-      val msgs = ranks
+    // seed narrowly off the index's own sources — already partitioned
+    // by p, no separate nodes frame, no extra shuffle
+    var ranks: RDD[(Long, Long)] = adj.mapPartitions(
+      _.next().nodes.map(node => (node, perNode)),
+      preservesPartitioning = true
+    )
+    for (_ <- 1 to iters) {
+      ranks = ranks
         .zipPartitions(adj, preservesPartitioning = false) { (rit, ait) =>
-          val a = ait.next()
-          rit.flatMap { case (node, r) =>
-            val i0 = a.lower(node)
-            if (i0 < 0) Iterator.empty
-            else {
-              var i1 = i0
-              while (i1 < a.srcs.length && a.srcs(i1) == node) i1 += 1
-              val c = r / (i1 - i0) // exact: r div outdeg, run length
-              val end = i1
-              new Iterator[(Long, Long)] {
-                private var k = i0
-                def hasNext: Boolean = k < end
-                def next(): (Long, Long) = {
-                  val t = (a.dsts(k), c); k += 1; t
-                }
-              }
-            }
-          }
+          ait.next().send(rit)((r, _, deg) => r / deg) // exact: r div outdeg
         }
-      ranks = msgs
         .reduceByKey(p, _ + _) // the iteration's ONE shuffle
         .mapValues(s => teleport + (85L * s) / 100L)
-      it += 1
     }
     spark.createDataFrame(ranks).toDF("node", "r")
   }
@@ -1353,55 +1132,16 @@ object Graph {
   /** graph06: rank customers and suppliers by PageRank on the
     * bidirected trading graph (distinct customer-supplier pairs from
     * lineitem x orders — the citation-graph centrality analog on the
-    * lake's own fact data). 5 iterations, top 20. */
-  def graph06Pagerank(lake: Lake, iters: Int = 5, topK: Int = 20): DataFrame = {
-    // The loop runs on LONG node ids (customer -> 2k, supplier -> 2k+1),
-    // not the display strings: 5 iterations of join+groupBy each hash,
-    // shuffle and compare the node key, and an 8-byte long beats a
-    // variable-length "c12345" string in every one of those. The
-    // 'c'/'s' labels are re-derived once, on the topK output.
-    val pairs = lake.lineitem
-      .select(col("l_orderkey"), col("l_suppkey"))
-      .join(lake.orders.select(col("o_orderkey"), col("o_custkey")),
-        col("l_orderkey") === col("o_orderkey"))
-      .select(
-        expr("o_custkey * 2L").as("a"),
-        expr("l_suppkey * 2L + 1L").as("b")
-      )
-      // repartition-before-distinct (round 14, same memory bound as
-      // the rank loop): the distinct's partial aggregate would
-      // otherwise share the fact-join stage's memory with ~unique
-      // (a, b) keys across 32 concurrent tasks
-      .repartition(col("a"), col("b"))
-      .distinct()
-      // Materialize before bidirecting: the union below references
-      // `pairs` twice, and without the checkpoint the fact join +
-      // distinct execute once per branch.
-      .localCheckpoint()
-    val edges = pairs
-      .select(col("a").as("src"), col("b").as("dst"))
-      .unionAll(pairs.select(col("b").as("src"), col("a").as("dst")))
-    pagerankMicro(edges, iters)
-      .select(
-        expr(
-          "IF(node % 2 = 0, concat('c', node div 2), concat('s', (node - 1) div 2))"
-        ).as("node"),
-        col("r")
-      )
-      .orderBy(col("r").desc, col("node"))
-      .limit(topK)
-      .select(col("node"), col("r").as("rank_micro"))
-  }
-
-  /** graph06 on the primitive kernel loop — the SAME function (see
-    * pagerankKernelMicro: integer mass ⇒ bit-for-bit equal results,
-    * spec-pinned), with the SQL distinct, the outdeg window and the
-    * per-iteration join/aggregate stages all gone. The raw bidirected
-    * stream feeds the index UN-deduped: duplicates of a pair land in
-    * the same src partition and die in the build's adjacent dedupe,
-    * and bidirect-then-distinct ≡ distinct-then-bidirect (the two
+    * lake's own fact data). 5 iterations, top 20.
+    *
+    * The loop runs on LONG node ids (customer -> 2k, supplier ->
+    * 2k+1): an 8-byte long beats a variable-length "c12345" string in
+    * every hash, shuffle and compare, and the 'c'/'s' labels are
+    * re-derived once, on the topK output. The raw bidirected stream
+    * feeds the index UN-deduped: the index keeps distinct pairs, and
+    * bidirect-then-distinct ≡ distinct-then-bidirect (the two
     * orientations are distinct elements either way). */
-  def graph06PagerankKernel(
+  def graph06Pagerank(
       lake: Lake,
       iters: Int = 5,
       topK: Int = 20
@@ -1432,258 +1172,193 @@ object Graph {
       .select(col("node"), col("r").as("rank_micro"))
   }
 
+  /** graph27 and graph30's shared frame. `loop` gets:
+    *  - `p`, the shuffle-partitions HashPartitioner;
+    *  - the bidirected order↔part co-purchase graph of lineitem on
+    *    long node ids (order → 2k, part → 2k+1; graph06's rationale),
+    *    weighted by `w` (unit hops when None), as one LongAdj per
+    *    partition of `p`. Raw edges go through ONE shuffle into the
+    *    index, whose in-array fold replaces both a SQL distinct (an
+    *    extra exchange, measured 2.4 vs 1.9 s at sf0.1) and a boxed
+    *    per-partition dedupe map (an allocation failure at sf10, 120M
+    *    directed edges). An unweighted graph shuffles bare (src, dst)
+    *    pairs: Java serialization writes a two-long tuple as one
+    *    object but a (src, (dst, w)) edge as three, which doubled
+    *    graph27's task time at sf0.1 when it shipped unit weights;
+    *  - the seed: the smallest order key at value 0, partitioned by
+    *    `p`. A driver-side 1-row scalar (bounded collect) — parquet
+    *    aggregate pushdown answers it from footer stats; an empty lake
+    *    gives an empty seed, so the kernel degrades to zero rows
+    *    instead of a null seed (EmptyLakeSpec).
+    * Its (node, value) result is displayed once as ord:/prt: strings. */
+  private def orderPartGraph(
+      lake: Lake,
+      w: Option[Column],
+      value: String
+  )(
+      loop: (HashPartitioner, RDD[LongAdj], RDD[(Long, Long)]) => RDD[(Long, Long)]
+  ): DataFrame = {
+    val spark = lake.spark
+    val p = new HashPartitioner(
+      spark.conf.get("spark.sql.shuffle.partitions").toInt
+    )
+    val rows = lake.lineitem
+      .select(Seq(expr("l_orderkey * 2L"), expr("l_partkey * 2L + 1L")) ++
+        w.map(_.cast("long")): _*)
+      .queryExecution
+      .toRdd // InternalRow: no Row boxing on the hot scan
+    val edges = w match {
+      case None =>
+        rows
+          .mapPartitions(_.flatMap { r =>
+            val (a, b) = (r.getLong(0), r.getLong(1)); Iterator((a, b), (b, a))
+          })
+          .partitionBy(p)
+          .mapValues((_, 1L))
+      case Some(_) =>
+        rows
+          .mapPartitions(_.flatMap { r =>
+            val (a, b, c) = (r.getLong(0), r.getLong(1), r.getLong(2))
+            Iterator((a, (b, c)), (b, (a, c)))
+          })
+          .partitionBy(p)
+    }
+    val adj = edges
+      .mapPartitions(it => Iterator.single(LongAdj.build(it)))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val seed = lake.lineitem
+      .agg((min("l_orderkey") * lit(2L)).cast("long").as("node"))
+      .filter(col("node").isNotNull)
+      .collect()
+      .map(r => (r.getLong(0), 0L))
+    import spark.implicits._
+    loop(
+      p,
+      adj,
+      spark.sparkContext
+        .parallelize(seed.toSeq, 1)
+        .partitionBy(p)
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    ).toDF("node", value)
+      .select(
+        expr(
+          "IF(node % 2 = 0, concat('ord:', node div 2), concat('prt:', (node - 1) div 2))"
+        ).as("node"),
+        col(value)
+      )
+  }
+
   /** graph27: multi-source-capable frontier BFS — hop distances from
     * a seed over the bidirected order↔part co-purchase graph (the
     * "how far is everything from X" traversal the closure can't
     * serve at scale: transitiveClosure materializes ALL-PAIRS
     * reachability — quadratic output — while BFS from a seed set is
-    * linear in the visited nodes).
+    * linear in the visited nodes). Every node is EXPANDED EXACTLY
+    * ONCE no matter how many paths reach it (the recursive-CTE replay
+    * enumerates paths — their count grows ~30x per level on this
+    * graph — which is exactly why the frontier form is the one that
+    * survives big graphs).
     *
-    * Scale shape — the textbook distributed BFS: each level is one
-    * frontier ⋈ edges equi-join, a distinct on the expanded
-    * neighbors, and a left-anti join against the visited set, so
-    * every node is EXPANDED EXACTLY ONCE no matter how many paths
-    * reach it (the recursive-CTE replay enumerates paths — their
-    * count grows ~30x per level on this graph — which is exactly why
-    * the frontier form is the one that survives big graphs).
-    * Frontiers are lazily cached per level (see the cache-vs-
-    * checkpoint note below); the visited set stays a lazy union of
-    * those small cached frames. The loop runs on long
-    * node ids (order → 2k, part → 2k+1; graph06's rationale),
-    * display strings are derived once on output. */
-  def graph27BfsDistances(lake: Lake, maxDepth: Int = 4): DataFrame = {
-    // Pregel-shape kernel (round 14, VERDICT r13 #2). The previous
-    // DataFrame loop was semantically right but paid ~9 physical
-    // stages PER LEVEL once the bench stopped crediting cross-sweep
-    // caches: each level's join/distinct/anti-join exchanges plus
-    // AQE's per-cache stage-materialization jobs put the sf0.1 run at
-    // 37 jobs / 37 stages / 1300 tasks for milliseconds of kernel
-    // work (measured with a stage-level listener, BASELINE round 14)
-    // — 4.9-5.2 s of pure floors. Tried and refuted on the DataFrame
-    // side (same BASELINE round, all sweeps-min at sf0.1):
-    // pre-partitioned edge cache 4.0 s, last-two-frontier anti-join
-    // 3.9 s, two-hop rounds 5.6 s,
-    // parallelismFirst=false 4.1 s, uncached frontiers 11.8 s — the
-    // floor is the number of AQE query-stage materializations, which
-    // no DataFrame shape can push below ~4/level. The co-partitioned
-    // form CAN: it is GraphX's execution model (public Pregel/GraphX
-    // design, e.g. org.apache.spark.graphx.Pregel) re-expressed
-    // minimally —
-    //   - edges hash-partitioned ONCE into a primitive per-partition
-    //     adjacency index (LongAdj — see its scaladoc and the
-    //     no-dedupe note at the build below);
-    //   - each level = exactly ONE shuffle (repartition the expanded
-    //     neighbor set by node), then a NARROW zipPartitions against
-    //     the co-partitioned visited set does dedupe + anti-join in
-    //     one per-partition hash set;
-    //   - visited stays co-partitioned via PartitionerAwareUnionRDD,
-    //     so no level ever re-exchanges state.
-    // Measured: 5.9 -> 1.9 s at sf0.1 (3x, identical rows). At 100 TB
-    // the model is exactly GraphX's: per-partition visited slices are
-    // |visited|/P, messages shuffle once per superstep, and P scales
-    // with the cluster (spark.sql.shuffle.partitions) — this is the
-    // one operator family where the declarative form is structurally
-    // worse, which is why it drops to the RDD layer (the documented
-    // last resort, taken on measurement).
-    val spark = lake.spark
-    import org.apache.spark.HashPartitioner
-    import org.apache.spark.rdd.RDD
-    import org.apache.spark.storage.StorageLevel
-    val p = new HashPartitioner(
-      spark.conf.get("spark.sql.shuffle.partitions").toInt
-    )
-    // NO edge dedupe (round-14 sf10 lesson): BFS doesn't need
-    // distinct edges — a duplicate (a,b) only re-sends a message the
-    // per-level seen set absorbs, and this schema's (order, part)
-    // pairs are nearly unique anyway. The SQL distinct costs an extra
-    // exchange (measured 2.4 vs 1.9 s at sf0.1), and a per-partition
-    // HashSet[(Long,Long)] dedupe allocates boxed tuples for
-    // |edges|/P rows x 32 concurrent tasks — an allocation failure at
-    // sf10 (120M directed edges). One shuffle into the primitive
-    // LongAdj index (see its scaladoc), zero per-row allocation.
-    val adj: RDD[LongAdj] = lake.lineitem
-      .select(expr("l_orderkey * 2L").as("a"), expr("l_partkey * 2L + 1L").as("b"))
-      .queryExecution
-      .toRdd // InternalRow: no Row boxing on the hot scan
-      .mapPartitions(it => it.map(r => (r.getLong(0), r.getLong(1))))
-      .flatMap { case (a, b) => Iterator((a, b), (b, a)) }
-      .partitionBy(p)
-      .mapPartitions(it => Iterator.single(LongAdj.build(it)))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // deterministic seed: the smallest order key. A driver-side
-    // 1-row scalar (bounded collect) — parquet aggregate pushdown
-    // answers it from footer stats; empty lake ⇒ empty seed ⇒ the
-    // BFS degrades to zero rows instead of a null seed (EmptyLakeSpec)
-    val seedArr = lake.lineitem
-      .agg((min("l_orderkey") * lit(2L)).cast("long").as("node"))
-      .filter(col("node").isNotNull)
-      .collect()
-      .map(_.getLong(0))
-    var visited: RDD[(Long, Long)] = spark.sparkContext
-      .parallelize(seedArr.map(n => (n, 0L)).toSeq, 1)
-      .partitionBy(p)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var frontier: RDD[(Long, Long)] = visited
-    for (d <- 1 to maxDepth) {
-      val msgs = frontier
-        // narrow: frontier and the index share partitioner p, so the
-        // expansion touches ONLY the frontier's adjacency rows
-        // (binary search + walk), not the full edge iterator
-        .zipPartitions(adj, preservesPartitioning = false) { (fit, ait) =>
-          val a = ait.next()
-          fit.flatMap { case (n, _) =>
-            val i0 = a.lower(n)
-            if (i0 < 0) Iterator.empty
-            else new Iterator[(Long, Long)] {
-              private var i = i0
-              def hasNext: Boolean = i < a.srcs.length && a.srcs(i) == n
-              def next(): (Long, Long) = { val r = (a.dsts(i), d.toLong); i += 1; r }
-            }
+    * Pregel-shape kernel (round 14, VERDICT r13 #2). The DataFrame
+    * loop paid ~9 physical stages PER LEVEL (each level's join /
+    * distinct / anti-join exchanges plus AQE's per-cache stage
+    * materializations: 37 jobs / 37 stages / 1300 tasks at sf0.1 for
+    * milliseconds of kernel work, BASELINE round 14), and no
+    * DataFrame shape tried got below ~4 materializations per level.
+    * The co-partitioned form is GraphX's execution model (public
+    * Pregel/GraphX design) re-expressed minimally:
+    *   - edges hash-partitioned ONCE into the LongAdj index;
+    *   - each level = exactly ONE shuffle (the frontier's neighbour
+    *     walk, repartitioned by node), then a NARROW zipPartitions
+    *     against the co-partitioned visited set does dedupe +
+    *     anti-join in one per-partition hash set;
+    *   - visited stays co-partitioned via PartitionerAwareUnionRDD,
+    *     so no level ever re-exchanges state.
+    * Measured: 5.9 -> 1.9 s at sf0.1 (3x, identical rows). At 100 TB
+    * per-partition visited slices are |visited|/P and messages
+    * shuffle once per superstep — the one operator family where the
+    * declarative form is structurally worse, which is why it drops to
+    * the RDD layer (the documented last resort, taken on
+    * measurement). */
+  def graph27BfsDistances(lake: Lake, maxDepth: Int = 4): DataFrame =
+    orderPartGraph(lake, None, "dist") { (p, adj, seed) =>
+      var visited = seed
+      var frontier = seed
+      for (_ <- 1 to maxDepth) {
+        val next = frontier
+          // narrow: frontier and the index share partitioner p, so the
+          // expansion touches ONLY the frontier's adjacency rows
+          .zipPartitions(adj, preservesPartitioning = false) { (fit, ait) =>
+            ait.next().send(fit)((d, w, _) => d + w) // unit hop weights
           }
-        }
-        .partitionBy(p) // the level's ONE shuffle
-      val next = msgs
-        .zipPartitions(visited, preservesPartitioning = true) { (m, vis) =>
-          val seen = new java.util.HashSet[Long]()
-          vis.foreach(kv => seen.add(kv._1))
-          m.filter(kv => seen.add(kv._1)) // anti-join + dedupe in one
-        }
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      visited = visited.union(next) // PartitionerAwareUnionRDD keeps p
-      frontier = next
-    }
-    import spark.implicits._
-    visited
-      .toDF("node", "dist")
-      .select(
-        expr(
-          "IF(node % 2 = 0, concat('ord:', node div 2), concat('prt:', (node - 1) div 2))"
-        ).as("node"),
-        col("dist")
-      )
-      .orderBy("dist", "node")
-  }
+          .partitionBy(p) // the level's ONE shuffle
+          .zipPartitions(visited, preservesPartitioning = true) { (m, vis) =>
+            val seen = new java.util.HashSet[Long]()
+            vis.foreach(kv => seen.add(kv._1))
+            m.filter(kv => seen.add(kv._1)) // anti-join + dedupe in one
+          }
+          .persist(StorageLevel.MEMORY_AND_DISK)
+        visited = visited.union(next) // PartitionerAwareUnionRDD keeps p
+        frontier = next
+      }
+      visited
+    }.orderBy("dist", "node")
 
   /** graph30: bounded-hop WEIGHTED shortest paths — graph27's BFS
     * with edge costs (min l_quantity over duplicate order-part
-    * edges), i.e. Bellman-Ford relaxation: after k rounds every node
-    * holds the cheapest cost over paths of ≤ k edges. Unlike BFS, a
-    * node already reached can get CHEAPER on a later round (a long
-    * low-weight path beats a short heavy one), so each round relaxes
-    * the FULL distance table, not a frontier — the per-round shape
-    * is one equi-join on src + one min-groupBy on node, exactly the
-    * partitioned-relaxation form a 100 TB edge list distributes
-    * (both sides hash on the node key; no frontier bookkeeping
-    * state). Hop-bounded like graph02/27: the round count is the
-    * contract (k-edge-bounded costs), not a convergence loop.
+    * edges, the index's least-weight fold), i.e. Bellman-Ford
+    * relaxation: after k rounds every node holds the cheapest cost
+    * over paths of ≤ k edges. Unlike BFS, a node already reached can
+    * get CHEAPER on a later round (a long low-weight path beats a
+    * short heavy one). Hop-bounded like graph02/27: the round count is
+    * the contract (k-edge-bounded costs), not a convergence loop.
     *
     * Oracle: the ≤ maxHops-edge paths enumerate exactly as a
     * recursive CTE (hops < maxHops guard, cycles allowed — the hop
     * bound keeps the enumeration finite) folded by MIN per node,
-    * which is term-for-term the Bellman-Ford recurrence. */
-  def graph30ShortestPaths(lake: Lake, maxHops: Int = 4): DataFrame = {
-    // Pregel-shape kernel, graph27's sibling (round 14, VERDICT r13
-    // #2 — the DataFrame relaxation loop paid the same per-round
-    // AQE stage floors: 26 jobs / 26 stages at sf0.1 for ms of
-    // kernel). Same co-partitioned model plus two Bellman-Ford-
-    // specific moves:
-    //   - raw weighted edges through ONE shuffle into the primitive
-    //     LongAdj index (see the no-dedupe note at the build below);
-    //   - DELTA relaxation: only nodes whose cost CHANGED last round
-    //     send messages — an unchanged node would re-send exactly
-    //     what it sent when it last changed and min() already took
-    //     it, so the pruning is exact (the classic delta/frontier
-    //     Bellman-Ford; round 1's "changed" set is the seed).
-    // Measured: 4.6 -> 2.7 s at sf0.1, identical rows. The hop bound
-    // stays the contract: after k rounds every node holds the
-    // cheapest ≤ k-edge cost (delta pruning does not change this —
-    // a cost that would improve at round k comes from a neighbor
-    // that changed at round k-1, which is in the changed set).
-    val spark = lake.spark
-    import org.apache.spark.HashPartitioner
-    import org.apache.spark.rdd.RDD
-    import org.apache.spark.storage.StorageLevel
-    val p = new HashPartitioner(
-      spark.conf.get("spark.sql.shuffle.partitions").toInt
-    )
-    // NO per-partition min-dedupe map (round-14 sf10 lesson, same as
-    // graph27's): duplicate weighted edges only emit duplicate relax
-    // messages that the min-merge absorbs, and a HashMap keyed by
-    // boxed (Long, Long) tuples for |edges|/P rows x 32 concurrent
-    // tasks is an allocation failure at sf10. Raw edges into the
-    // primitive LongAdj index — exact result.
-    val adj: RDD[LongAdj] = lake.lineitem
-      .select(
-        expr("l_orderkey * 2L").as("a"),
-        expr("l_partkey * 2L + 1L").as("b"),
-        col("l_quantity").cast("long").as("w")
-      )
-      .queryExecution
-      .toRdd
-      .mapPartitions(it =>
-        it.map(r => (r.getLong(0), r.getLong(1), r.getLong(2))))
-      .flatMap { case (a, b, w) => Iterator((a, (b, w)), (b, (a, w))) }
-      .partitionBy(p)
-      .mapPartitions(it => Iterator.single(LongAdj.buildWeighted(it)))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val seedArr = lake.lineitem
-      .agg((min("l_orderkey") * lit(2L)).cast("long").as("node"))
-      .filter(col("node").isNotNull) // empty lake ⇒ empty result
-      .collect()
-      .map(_.getLong(0))
-    var dist: RDD[(Long, Long)] = spark.sparkContext
-      .parallelize(seedArr.map(n => (n, 0L)).toSeq, 1)
-      .partitionBy(p)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var changed: RDD[(Long, Long)] = dist
-    for (_ <- 1 to maxHops) {
-      val relaxed = changed
-        // narrow: only the changed nodes' adjacency rows are touched
-        .zipPartitions(adj, preservesPartitioning = false) { (cit, ait) =>
-          val a = ait.next()
-          cit.flatMap { case (n, cost) =>
-            val i0 = a.lower(n)
-            if (i0 < 0) Iterator.empty
-            else new Iterator[(Long, Long)] {
-              private var i = i0
-              def hasNext: Boolean = i < a.srcs.length && a.srcs(i) == n
-              def next(): (Long, Long) = {
-                val r = (a.dsts(i), cost + a.ws(i)); i += 1; r
-              }
+    * which is term-for-term the Bellman-Ford recurrence.
+    *
+    * Pregel-shape kernel, graph27's sibling (the DataFrame relaxation
+    * loop paid the same per-round AQE stage floors: 26 jobs / 26
+    * stages at sf0.1), with DELTA relaxation: only nodes whose cost
+    * CHANGED last round send messages — an unchanged node would
+    * re-send exactly what it sent when it last changed and min()
+    * already took it, so the pruning is exact (round 1's "changed"
+    * set is the seed; a cost that would improve at round k comes from
+    * a neighbour that changed at round k-1). Measured: 4.6 -> 2.7 s
+    * at sf0.1, identical rows. */
+  def graph30ShortestPaths(lake: Lake, maxHops: Int = 4): DataFrame =
+    orderPartGraph(lake, Some(col("l_quantity")), "cost") { (p, adj, seed) =>
+      var dist = seed
+      var changed = seed
+      for (_ <- 1 to maxHops) {
+        val relaxed = changed
+          // narrow: only the changed nodes' adjacency rows are touched
+          .zipPartitions(adj, preservesPartitioning = false) { (cit, ait) =>
+            ait.next().send(cit)((cost, w, _) => cost + w)
+          }
+          .partitionBy(p) // the round's ONE shuffle
+        val merged = dist
+          .zipPartitions(relaxed, preservesPartitioning = true) { (dv, rv) =>
+            val m = new java.util.HashMap[Long, Long]()
+            dv.foreach { case (n, c) => m.put(n, c) }
+            val ch = new java.util.HashMap[Long, Long]()
+            rv.foreach { case (n, c) =>
+              // getOrDefault, not get: a boxed-null get would silently
+              // unbox to 0L under Scala's Long auto-unboxing
+              val old = m.getOrDefault(n, Long.MaxValue)
+              if (c < old) { m.put(n, c); ch.put(n, c) }
             }
+            import scala.jdk.CollectionConverters._
+            m.entrySet()
+              .iterator()
+              .asScala
+              .map(e => (e.getKey, (e.getValue, ch.containsKey(e.getKey))))
           }
-        }
-        .partitionBy(p) // the round's ONE shuffle
-      val merged = dist
-        .zipPartitions(relaxed, preservesPartitioning = true) { (dv, rv) =>
-          val m = new java.util.HashMap[Long, Long]()
-          dv.foreach { case (n, c) => m.put(n, c) }
-          val ch = new java.util.HashMap[Long, Long]()
-          rv.foreach { case (n, c) =>
-            // getOrDefault, not get: a boxed-null get would silently
-            // unbox to 0L under Scala's Long auto-unboxing
-            val old = m.getOrDefault(n, Long.MaxValue)
-            if (c < old) { m.put(n, c); ch.put(n, c) }
-          }
-          import scala.jdk.CollectionConverters._
-          m.entrySet()
-            .iterator()
-            .asScala
-            .map(e => (e.getKey, (e.getValue, ch.containsKey(e.getKey))))
-        }
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      dist = merged.mapValues(_._1)
-      changed = merged.filter(_._2._2).mapValues(_._1)
-    }
-    import spark.implicits._
-    dist
-      .toDF("node", "cost")
-      .select(
-        expr(
-          "IF(node % 2 = 0, concat('ord:', node div 2), concat('prt:', (node - 1) div 2))"
-        ).as("node"),
-        col("cost")
-      )
-      .orderBy("node")
-  }
+          .persist(StorageLevel.MEMORY_AND_DISK)
+        dist = merged.mapValues(_._1)
+        changed = merged.filter(_._2._2).mapValues(_._1)
+      }
+      dist
+    }.orderBy("node")
 }

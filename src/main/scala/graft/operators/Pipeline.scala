@@ -167,8 +167,9 @@ object Pipeline {
     * micro-batch-sized and whose store side reads ONLY the `fp` column
     * (projection-pruned scan of the survivor parquet); at 100 TB the
     * store probe rides a Bloom filter over stored fingerprints
-    * (dedup14's machinery) in front of the anti-join. */
-  /** `bloomFpp > 0` puts dedup14's machinery in FRONT of the exact
+    * (dedup14's machinery) in front of the anti-join.
+    *
+    * `bloomFpp > 0` puts dedup14's machinery in FRONT of the exact
     * anti-join (the 100 TB probe shape): a Bloom filter over the
     * stored fingerprints is probed map-only over the micro-batch;
     * definite-miss documents — the vast majority of a steady-state

@@ -518,15 +518,6 @@ object Relational {
       )
       .orderBy("order_year")
 
-  /** rel14: corpus-wide frequent tokens via the mergeable Misra-Gries
-    * sketch (plans/FrequentItemsSketch) — the one-pass bounded-memory
-    * form of txt06's exact top-n-grams. Exact top-k needs a shuffle of
-    * every distinct token; the sketch ships `capacity` counters per
-    * partition and merges once, with deterministic per-item bounds
-    * [count_lb, count_ub] and a survival guarantee for anything above
-    * n/(capacity+1). [rows-only]: estimates depend on partition order
-    * by design; the bounds/containment contract is spec-pinned against
-    * exact counts instead. */
   /** rel16: the remaining analytic-window surface in one pass —
     * lag/lead (neighbor rows), ntile (equi-depth quartiles),
     * percent_rank and cume_dist (rank normalizations) over each
@@ -556,6 +547,15 @@ object Relational {
       .orderBy("o_custkey", "o_orderkey")
   }
 
+  /** rel14: corpus-wide frequent tokens via the mergeable Misra-Gries
+    * sketch (plans/FrequentItemsSketch) — the one-pass bounded-memory
+    * form of txt06's exact top-n-grams. Exact top-k needs a shuffle of
+    * every distinct token; the sketch ships `capacity` counters per
+    * partition and merges once, with deterministic per-item bounds
+    * [count_lb, count_ub] and a survival guarantee for anything above
+    * n/(capacity+1). [rows-only]: estimates depend on partition order
+    * by design; the bounds/containment contract is spec-pinned against
+    * exact counts instead. */
   def rel14HeavyHitters(
       lake: Lake,
       capacity: Int = 256,

@@ -3,7 +3,7 @@ package graft.operators
 import graft.catalog.Lake
 import graft.functions.vectors
 import graft.plans.{Codebook, LocalKernels}
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -132,24 +132,15 @@ object Similarity {
       topicBlocks: Int = 4
   ): DataFrame = {
     val all = vecs(lake)
-    val packed = struct(col("vec_id").as("id"), col("v"), col("nrm"))
-    val topics = all
-      .filter(col("label") < 2)
-      .groupBy(pmod(col("vec_id"), lit(topicBlocks)).cast("int").as("tb"))
-      .agg(collect_list(packed).as("tblk"))
-      .withColumn("mb", explode(sequence(lit(0), lit(termBlocks - 1))))
-    val terms = all
-      .filter(col("label") >= 2)
-      .groupBy(pmod(col("vec_id"), lit(termBlocks)).cast("int").as("mb"))
-      .agg(collect_list(packed).as("mblk"))
-      .withColumn("tb", explode(sequence(lit(0), lit(topicBlocks - 1))))
-    terms
-      .join(topics.hint("shuffle_hash"), Seq("tb", "mb"))
-      .select(
-        explode(
-          graft.plans.BlockThresholdDots(col("tblk"), col("mblk"), threshold)
-        ).as("p")
-      )
+    blockThresholdJoin(threshold) { pack =>
+      val topics = pack(all.filter(col("label") < 2), "ablk",
+        Seq(pmod(col("vec_id"), lit(topicBlocks)).cast("int").as("tb")))
+        .withColumn("mb", explode(sequence(lit(0), lit(termBlocks - 1))))
+      val terms = pack(all.filter(col("label") >= 2), "bblk",
+        Seq(pmod(col("vec_id"), lit(termBlocks)).cast("int").as("mb")))
+        .withColumn("tb", explode(sequence(lit(0), lit(topicBlocks - 1))))
+      terms.join(topics.hint("shuffle_hash"), Seq("tb", "mb"))
+    }
       .select(
         col("p.a_id").as("topic_id"),
         col("p.b_id").as("term_id"),
@@ -157,6 +148,43 @@ object Similarity {
       )
       .orderBy("topic_id", "term_id")
   }
+
+  /** The blocked exact cosine-threshold join of sim02, dedup06 and
+    * semanticDedup (sim02's scaladoc has the design). `grid` gets
+    * `pack(frame, blk, keys)`, which packs a (vec_id, v, nrm) frame into
+    * one collect_list block of (id, v, nrm) structs per group of
+    * `keys`, in column `blk`; it returns the block grid — rows pairing
+    * an `ablk` with a `bblk`, joined on the caller's keys with the
+    * caller's hint side. BlockThresholdDots runs each pair's loop over
+    * flat primitive arrays: the result holds `keep` plus one `p` struct
+    * (a_id, b_id, cos_raw) per pair whose 4dp cosine reaches
+    * `threshold`. */
+  private[graft] def blockThresholdJoin(threshold: Double, keep: Column*)(
+      grid: ((DataFrame, String, Seq[Column]) => DataFrame) => DataFrame
+  ): DataFrame = {
+    val packed = struct(col("vec_id").as("id"), col("v"), col("nrm"))
+    val pack = (df: DataFrame, blk: String, keys: Seq[Column]) =>
+      df.groupBy(keys: _*).agg(collect_list(packed).as(blk))
+    grid(pack).select(keep :+ explode(
+      graft.plans.BlockThresholdDots(col("ablk"), col("bblk"), threshold)).as("p"): _*)
+  }
+
+  /** Deterministic pseudo-random hyperplanes: component (t, b, d) is
+    * a splitmix64-derived value in [-1, 1). Precomputed once on the
+    * driver and captured by the partition mapper — an expression-tree
+    * formulation would be a (tables x nBits x dim)-term codegen unit
+    * whose Janino compile alone costs seconds. Public because the
+    * oracle embeds the SAME constants as SQL literals (Double.toString
+    * round-trips exactly, and both engines fold the dot product
+    * sequentially, so signatures match bit-for-bit). */
+  def lshPlanes(tables: Int, nBits: Int, dim: Int): Array[Array[Array[Double]]] =
+    Array.tabulate(tables, nBits, dim) { (t, b, d) =>
+      var z = (t.toLong * 1000003L + b.toLong * 10007L + d.toLong + 1L) *
+        0x9e3779b97f4a7c15L
+      z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L
+      z = (z ^ (z >>> 27)) * 0x94d049bb133111ebL
+      ((z ^ (z >>> 31)) >>> 11).toDouble / (1L << 53).toDouble * 2.0 - 1.0
+    }
 
   /** ANN via random-hyperplane LSH: L tables x nBits hyperplanes.
     * Candidates = vectors sharing a (table, signature) bucket with the
@@ -178,23 +206,6 @@ object Similarity {
     * candidate dedup is on (query_id, vec_id) ids only; vectors are
     * re-attached by one equi-join against the base scan plus one
     * broadcast join for the bounded query side. */
-  /** Deterministic pseudo-random hyperplanes: component (t, b, d) is
-    * a splitmix64-derived value in [-1, 1). Precomputed once on the
-    * driver and captured by the partition mapper — an expression-tree
-    * formulation would be a (tables x nBits x dim)-term codegen unit
-    * whose Janino compile alone costs seconds. Public because the
-    * oracle embeds the SAME constants as SQL literals (Double.toString
-    * round-trips exactly, and both engines fold the dot product
-    * sequentially, so signatures match bit-for-bit). */
-  def lshPlanes(tables: Int, nBits: Int, dim: Int): Array[Array[Array[Double]]] =
-    Array.tabulate(tables, nBits, dim) { (t, b, d) =>
-      var z = (t.toLong * 1000003L + b.toLong * 10007L + d.toLong + 1L) *
-        0x9e3779b97f4a7c15L
-      z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L
-      z = (z ^ (z >>> 27)) * 0x94d049bb133111ebL
-      ((z ^ (z >>> 31)) >>> 11).toDouble / (1L << 53).toDouble * 2.0 - 1.0
-    }
-
   def sim03LshAnn(
       lake: Lake,
       k: Int = 10,
@@ -267,9 +278,6 @@ object Similarity {
     )
   }
 
-  /** Per-label centroids (posexplode + positional mean) and
-    * nearest-centroid cohesion stats — the IVF coarse-quantizer
-    * building block. */
   /** Per-label centroids (posexplode + positional mean) — the IVF
     * coarse quantizer shared by sim04 (cohesion stats) and sim05
     * (cell-probed ANN). */
@@ -286,6 +294,9 @@ object Similarity {
         ).as("centroid")
       )
 
+  /** Per-label centroids (posexplode + positional mean) and
+    * nearest-centroid cohesion stats — the IVF coarse-quantizer
+    * building block. */
   def sim04LabelCentroids(lake: Lake): DataFrame = {
     val all = vecs(lake)
     val centroids = labelCentroids(all)
@@ -302,23 +313,6 @@ object Similarity {
       .orderBy("label")
   }
 
-  /** IVF-style ANN: the label centroids are the coarse quantizer; each
-    * query ranks all cells by centroid cosine, probes the `nprobe`
-    * nearest, and exhaustively searches only vectors in those cells —
-    * the FAISS IVF-flat shape. Oracle-checked end to end (sim04's
-    * centroid CTE + probe/re-rank windows — centroid AVG float noise
-    * is orders below this corpus's cell-ranking margins, the eval02
-    * argument); DedupSimilaritySpec additionally asserts
-    * nprobe = nlist reproduces sim01 exactly and logs partial-probe
-    * recall.
-    *
-    * Scale shape: the centroid table is nlist rows (tiny, broadcast
-    * twice); candidate generation is an equi-join on the cell id, so
-    * the scan side shuffles once on `label` and each cell's exhaustive
-    * kernel is the sim01 broadcast brute force at cell granularity.
-    * Candidate volume is nprobe/nlist of the corpus per query — the
-    * knob trades recall for compute exactly as in the reference's
-    * FAISS usage (build_embedding_linkage.py:246-273). */
   /** Per-vector nearest cell, map-only: `book.nearest` scores each
     * vector against the broadcast codebook in one loop and keeps the
     * best (greatest cosine, ties to the lowest cluster id; NaN ranks
@@ -1057,15 +1051,8 @@ object Similarity {
 
   /** IVF-PQ ANN over a PERSISTED index: training is deterministic,
     * so index-then-search equals train-then-search row for row
-    * (spec-asserted, the ivfAnnFromIndex contract).
-    *
-    * The PQ geometry (m subspaces × sd dims) is read FROM the
-    * persisted codebooks — (count distinct sub_id, size(centroid)) —
-    * never from a caller guess: slicing query subvectors with an m
-    * that differs from the one the index was written with would
-    * silently score against the wrong codebooks and return wrong
-    * neighbors (advisor round-9). The one consistency requirement,
-    * m·sd == corpus dim, is checked and named. */
+    * (spec-asserted, the ivfAnnFromIndex contract). The PQ geometry is
+    * the persisted codebooks' (see persistedPq). */
   def ivfPqAnnFromIndex(
       lake: Lake,
       dir: String,
@@ -1077,15 +1064,7 @@ object Similarity {
     val all = vecs(lake).localCheckpoint()
     val headDim = all.select(size(col("v"))).head(1)
     if (headDim.isEmpty) return emptyAnnResult(all, k, "adc_ip")
-    val dim = headDim.head.getInt(0)
-    val codebooks = Codebook.collect(spark.read.parquet(s"$dir/codebooks"))
-    val m = codebooks.ids.count(_.nonEmpty)
-    require(m > 0, s"persisted IVF-PQ index at $dir has an empty codebooks table")
-    val sd = codebooks.width
-    require(
-      m * sd == dim,
-      s"persisted codebooks (m=$m, sd=$sd) do not match corpus dim $dim"
-    )
+    val (codebooks, m, sd) = persistedPq(spark, dir, headDim.head.getInt(0))
     ivfPqSearch(
       all,
       Codebook.collect(spark.read.parquet(s"$dir/centroids")),
@@ -1098,6 +1077,25 @@ object Similarity {
       nprobe,
       m
     )
+  }
+
+  /** A persisted index's PQ codebooks with their geometry (m subspaces
+    * × sd dims), read FROM the codebooks — (non-empty sub_id groups,
+    * centroid width) — never from a caller guess: slicing query
+    * subvectors with an m that differs from the one the index was
+    * written with would silently score against the wrong codebooks
+    * and return wrong neighbors (advisor round-9). The one consistency
+    * requirement, m·sd == the corpus dim `dim`, is checked and named. */
+  private def persistedPq(spark: SparkSession, dir: String, dim: Int): (Codebook, Int, Int) = {
+    val codebooks = Codebook.collect(spark.read.parquet(s"$dir/codebooks"))
+    val m = codebooks.ids.count(_.nonEmpty)
+    require(m > 0, s"persisted PQ index at $dir has an empty codebooks table")
+    val sd = codebooks.width
+    require(
+      m * sd == dim,
+      s"persisted codebooks (m=$m, sd=$sd) do not match corpus dim $dim"
+    )
+    (codebooks, m, sd)
   }
 
   /** PQ training shared by sim07PqAnn, sim13/sim14, and the
@@ -1237,34 +1235,49 @@ object Similarity {
     * deterministic, so index-then-search equals train-then-search
     * (spec-asserted, the ivfAnnFromIndex contract). Queries re-derive
     * their subvectors from the embeddings table (the index stores
-    * CODES, not vectors); scoring is the same broadcast-LUT ADC scan
-    * over the codes table. */
+    * CODES, not vectors) at the persisted codebooks' geometry (see
+    * persistedPq); scoring is the same broadcast-LUT ADC scan over the
+    * codes table. An empty corpus gives the empty ANN result. */
   def pqAnnFromIndex(
       lake: Lake,
       dir: String,
-      m: Int = 8,
       k: Int = 10,
       nQueries: Int = 10
   ): DataFrame = {
     val spark = lake.spark
-    val cents = Codebook.collect(spark.read.parquet(s"$dir/codebooks"))
-    val codes = spark.read.parquet(s"$dir/codes")
     val all = vecs(lake)
       .select(col("vec_id"), vectors.l2Normalize(col("v")).as("v"))
-      .filter(col("vec_id") < nQueries)
-    val dDim = all.select(size(col("v"))).first().getInt(0)
-    require(dDim % m == 0, s"dim $dDim not divisible by m=$m")
-    val sd = dDim / m
+    val headDim = all.select(size(col("v"))).head(1)
+    if (headDim.isEmpty) return emptyAnnResult(all, k, "adc_score")
+    val (cents, m, sd) = persistedPq(spark, dir, headDim.head.getInt(0))
     val queriesSub = all
+      .filter(col("vec_id") < nQueries)
       .withColumn("sub_id", explode(sequence(lit(0), lit(m - 1))))
       .select(
         col("vec_id").as("query_id"),
         col("sub_id"),
         slice(col("v"), col("sub_id") * sd + 1, lit(sd)).as("qsv")
       )
-    pqSearch(queriesSub, cents, codes, k)
+    pqSearch(queriesSub, cents, spark.read.parquet(s"$dir/codes"), k)
   }
 
+  /** IVF-style ANN: the label centroids are the coarse quantizer; each
+    * query ranks all cells by centroid cosine, probes the `nprobe`
+    * nearest, and exhaustively searches only vectors in those cells —
+    * the FAISS IVF-flat shape. Oracle-checked end to end (sim04's
+    * centroid CTE + probe/re-rank windows — centroid AVG float noise
+    * is orders below this corpus's cell-ranking margins, the eval02
+    * argument); DedupSimilaritySpec additionally asserts
+    * nprobe = nlist reproduces sim01 exactly and logs partial-probe
+    * recall.
+    *
+    * Scale shape: the centroid table is nlist rows (tiny, broadcast
+    * twice); candidate generation is an equi-join on the cell id, so
+    * the scan side shuffles once on `label` and each cell's exhaustive
+    * kernel is the sim01 broadcast brute force at cell granularity.
+    * Candidate volume is nprobe/nlist of the corpus per query — the
+    * knob trades recall for compute exactly as in the reference's
+    * FAISS usage (build_embedding_linkage.py:246-273). */
   def sim05IvfAnn(
       lake: Lake,
       k: Int = 10,
@@ -1404,8 +1417,9 @@ object Similarity {
     * when there is no locality to exploit. The spec asserts exactly
     * that (recall > coverage, full probe ≡ exact sim08). On real
     * clustered embedding spaces the same machinery reaches high
-    * recall at small nprobe/nlist; tune per corpus. */
-  /** `nlist <= 0` requests AUTO-nlist = ⌈√N⌉ (dedup11's auto-k rule,
+    * recall at small nprobe/nlist; tune per corpus.
+    *
+    * `nlist <= 0` requests AUTO-nlist = ⌈√N⌉ (dedup11's auto-k rule,
     * and the source of the n^1.5 kernel claim above): a FIXED nlist
     * silently re-quadratifies the kernel as the corpus grows — at
     * nlist=10 and a billion vectors each probe scans nprobe/10 of

@@ -281,9 +281,6 @@ object TextAnalysis {
       .orderBy("doc_id", "rank")
   }
 
-  /** Deterministic stratified sampling: modulo split on the stable id
-    * keeps ~30% per language stratum — reproducible across runs and
-    * cluster sizes (the property random() sampling lacks at scale). */
   /** samp04: highest-quality docs under a corpus TOKEN BUDGET — the
     * selection step after scoring (pick the best B tokens for the
     * training run). Selection order is (score desc, doc_id); a doc is
@@ -474,19 +471,6 @@ object TextAnalysis {
       .orderBy("source")
   }
 
-  /** samp13: EXACT per-stratum quota sampling — "exactly k docs per
-    * language", the fixed-size stratified draw an eval-set or
-    * balanced-corpus builder needs (samp01's rate sampling gives
-    * binomial-sized strata; here the size is the contract). Rank =
-    * the samp08/samp12 seeded md5 integer (no RNG — replayable
-    * across engines, retries, and partitionings), selection = the
-    * k smallest ranks per stratum, doc_id tiebreak.
-    *
-    * Scale shape: the k-bounded heap aggregate (TopKByScore, sim08's
-    * rationale) — never `ROW_NUMBER over a per-stratum sort`, which
-    * sorts each stratum's full candidate slice before discarding all
-    * but k (the dominant cost at corpus scale); the exchange carries
-    * |strata|·k (id, rank) pairs only. */
   /** The quota core over any (strata..., doc_id) frame — shared by
     * samp13 and the composed eval-suite funnel (pipe03). */
   private[graft] def exactQuotaCore(
@@ -520,10 +504,26 @@ object TextAnalysis {
       )
   }
 
+  /** samp13: EXACT per-stratum quota sampling — "exactly k docs per
+    * language", the fixed-size stratified draw an eval-set or
+    * balanced-corpus builder needs (samp01's rate sampling gives
+    * binomial-sized strata; here the size is the contract). Rank =
+    * the samp08/samp12 seeded md5 integer (no RNG — replayable
+    * across engines, retries, and partitionings), selection = the
+    * k smallest ranks per stratum, doc_id tiebreak.
+    *
+    * Scale shape: the k-bounded heap aggregate (TopKByScore, sim08's
+    * rationale) — never `ROW_NUMBER over a per-stratum sort`, which
+    * sorts each stratum's full candidate slice before discarding all
+    * but k (the dominant cost at corpus scale); the exchange carries
+    * |strata|·k (id, rank) pairs only. */
   def samp13ExactQuota(lake: Lake, k: Int = 20, seed: Int = 7): DataFrame =
     exactQuotaCore(lake.documents, Seq("lang"), k, seed)
       .orderBy("lang", "rank")
 
+  /** Deterministic stratified sampling: modulo split on the stable id
+    * keeps ~30% per language stratum — reproducible across runs and
+    * cluster sizes (the property random() sampling lacks at scale). */
   def samp01Stratified(lake: Lake, pct: Int = 30): DataFrame =
     lake.documents
       .filter(pmod(col("doc_id"), lit(100)) < pct)
@@ -800,29 +800,6 @@ object TextAnalysis {
       .orderBy("rank")
   }
 
-  /** txt26: LINE-level dedup — the RefinedWeb/CCNet stage exact-doc
-    * dedup cannot do: a boilerplate sentence repeated across >=
-    * `minDocs` distinct documents (headers, navigation, license
-    * blurbs) is struck from EVERY document, and each document's
-    * remaining lines reassemble in order. Documents whose every line
-    * is boilerplate survive as empty — they're txt20's problem, not
-    * silently dropped rows.
-    *
-    * Scale shape: one posexplode (linear in corpus lines), one
-    * partial-aggregating distinct-doc-count per line, one anti-join
-    * of lines against the frequent set, and per-doc reassembly via
-    * array_sort(collect_list(struct(pos, line))) — sorting WITHIN
-    * each doc's bounded line list, never a corpus-wide window. At
-    * 100 TB key the df index and anti-join on xxhash64(line) instead
-    * of the line text (the dedup10 8-byte-shingle move); strings are
-    * kept here so the oracle can replay the join verbatim.
-    *
-    * The synthetic corpus's sentences are all globally unique (every
-    * line embeds doc-specific tokens), so boilerplate is PLANTED
-    * deterministically — a per-source promo banner (df = source size)
-    * and a corpus-wide footer (df = corpus size) — the txt13/txt19
-    * move: the gate then exercises strike, survival, and in-order
-    * reassembly on every document. */
   /** The line-dedup transform keeping the reassembled text —
     * (doc_id, source, lang, n_lines, n_kept, text) — shared by the
     * txt26 gate and the pipe02 funnel. */
@@ -872,6 +849,29 @@ object TextAnalysis {
       )
   }
 
+  /** txt26: LINE-level dedup — the RefinedWeb/CCNet stage exact-doc
+    * dedup cannot do: a boilerplate sentence repeated across >=
+    * `minDocs` distinct documents (headers, navigation, license
+    * blurbs) is struck from EVERY document, and each document's
+    * remaining lines reassemble in order. Documents whose every line
+    * is boilerplate survive as empty — they're txt20's problem, not
+    * silently dropped rows.
+    *
+    * Scale shape: one posexplode (linear in corpus lines), one
+    * partial-aggregating distinct-doc-count per line, one anti-join
+    * of lines against the frequent set, and per-doc reassembly via
+    * array_sort(collect_list(struct(pos, line))) — sorting WITHIN
+    * each doc's bounded line list, never a corpus-wide window. At
+    * 100 TB key the df index and anti-join on xxhash64(line) instead
+    * of the line text (the dedup10 8-byte-shingle move); strings are
+    * kept here so the oracle can replay the join verbatim.
+    *
+    * The synthetic corpus's sentences are all globally unique (every
+    * line embeds doc-specific tokens), so boilerplate is PLANTED
+    * deterministically — a per-source promo banner (df = source size)
+    * and a corpus-wide footer (df = corpus size) — the txt13/txt19
+    * move: the gate then exercises strike, survival, and in-order
+    * reassembly on every document. */
   def txt26LineDedup(lake: Lake, minDocs: Int = 3): DataFrame =
     lineDedupedDocs(lake, minDocs)
       .select(

@@ -59,17 +59,6 @@ object Ingest {
       readJsonl(spark, path, schema).write.mode(mode).parquet(outPath)
     }
 
-  /** JSONL read with a QUARANTINE path — the production hardening a
-    * 100 TB ingestion needs: one malformed line in a multi-TB dump
-    * must not kill a multi-hour job (FAILFAST) or silently vanish
-    * (DROPMALFORMED); PERMISSIVE mode routes it, raw, to a corrupt-
-    * record column, and this splits the scan into (parsed rows,
-    * quarantined raw lines) so the bad input is auditable and
-    * replayable after a parser fix. The cache() is load-bearing:
-    * Spark refuses to evaluate a predicate on the internal corrupt-
-    * record column of an un-materialized JSON scan (the
-    * from_json/columnNameOfCorruptRecord rule), so the parsed frame
-    * materializes once and both splits filter the cached result. */
   /** The two splits of a quarantined read plus the cached parse they
     * filter; call [[unpersist]] once both splits are consumed or the
     * cache pins storage memory for the session lifetime. */
@@ -81,6 +70,17 @@ object Ingest {
     def unpersist(): Unit = { parsed.unpersist(); () }
   }
 
+  /** JSONL read with a QUARANTINE path — the production hardening a
+    * 100 TB ingestion needs: one malformed line in a multi-TB dump
+    * must not kill a multi-hour job (FAILFAST) or silently vanish
+    * (DROPMALFORMED); PERMISSIVE mode routes it, raw, to a corrupt-
+    * record column, and this splits the scan into (parsed rows,
+    * quarantined raw lines) so the bad input is auditable and
+    * replayable after a parser fix. The cache() is load-bearing:
+    * Spark refuses to evaluate a predicate on the internal corrupt-
+    * record column of an un-materialized JSON scan (the
+    * from_json/columnNameOfCorruptRecord rule), so the parsed frame
+    * materializes once and both splits filter the cached result. */
   def readJsonlQuarantined(
       spark: SparkSession,
       path: String,

@@ -685,6 +685,17 @@ class DedupSimilaritySpec extends AnyFunSuite {
     assert(codes.columns.toSeq.sorted == Seq("cluster", "sub_id", "vec_id"))
   }
 
+  test("persisted PQ index: the reader takes m from the index it reads") {
+    // written with m = 4, read with no m at all: slicing the queries at
+    // any other m would score subvectors against the wrong codebooks
+    val dir = java.nio.file.Files.createTempDirectory("pq_index_m4").toString
+    Similarity.writePqIndex(lake, dir, m = 4)
+    val fromIndex = Similarity.pqAnnFromIndex(lake, dir).collect().map(_.toSeq)
+    val inline = Similarity.sim07PqAnn(lake, m = 4).collect().map(_.toSeq)
+    assert(fromIndex.nonEmpty)
+    assert(fromIndex.toSeq == inline.toSeq)
+  }
+
   test("persisted IVF-PQ index: index-then-search equals train-then-search exactly") {
     val dir = java.nio.file.Files.createTempDirectory("ivfpq_index").toString
     Similarity.writeIvfPqIndex(lake, dir)

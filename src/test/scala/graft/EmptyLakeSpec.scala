@@ -55,6 +55,8 @@ class EmptyLakeSpec extends AnyFunSuite {
     Similarity.samp14ClusterBalance(_, nlist = 0))
   assertEmptyOk("samp14_cluster_balance keptOnly",
     Similarity.samp14ClusterBalance(_, keptOnly = true))
+  assertEmptyOk("graph02_transitive_closure", Graph.graph02TransitiveClosure)
+  assertEmptyOk("graph06_pagerank", Graph.graph06Pagerank(_))
   assertEmptyOk("graph27_bfs_distances", Graph.graph27BfsDistances(_))
   assertEmptyOk("graph30_shortest_paths", Graph.graph30ShortestPaths(_))
   assertEmptyOk("evt01_windowed_counts", Events.evt01WindowedCounts)
@@ -89,6 +91,13 @@ class EmptyLakeSpec extends AnyFunSuite {
   assertEmptyOk("sim07_pq_ann", Similarity.sim07PqAnn(_))
   assertEmptyOk("sim13_pq_refine", Similarity.sim13PqRefine(_))
   assertEmptyOk("sim14_ivf_pq", Similarity.sim14IvfPq(_))
+  // the persisted-PQ reader: an index written from an empty lake reads
+  // back as the empty ANN result, as the IVF-PQ reader's does
+  assertEmptyOk("pqAnnFromIndex", { lake =>
+    val dir = java.nio.file.Files.createTempDirectory("pq_index_empty").toString
+    Similarity.writePqIndex(lake, dir)
+    Similarity.pqAnnFromIndex(lake, dir)
+  })
   assertEmptyOk("sim08_knn_graph", Similarity.sim08KnnGraph(_))
   assertEmptyOk("sim11_knn_graph_ann", Similarity.sim11KnnGraphAnn(_))
   assertEmptyOk("txt12_bpe_tokens", TextAnalysis.txt12BpeTokens)

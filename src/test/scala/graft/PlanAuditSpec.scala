@@ -354,9 +354,9 @@ class PlanAuditSpec extends AnyFunSuite {
   }
 
   test("graph06: the rank loop body is equi-join plus aggregate only") {
-    // the retained DataFrame form (the kernel's reference semantics
-    // and the shape a pure-SQL consumer would run)
-    val p = plan(Graph.graph06Pagerank(lake, iters = 2))
+    // the DataFrame reference GraphSpec keeps (the kernel's reference
+    // semantics and the shape a pure-SQL consumer would run)
+    val p = plan(GraphSpec.graph06Pagerank(lake, iters = 2))
     // scalar n_nodes rides a broadcast single-row cross join (the
     // legitimate scalar idiom); anything else cartesian is a bug
     assert(!p.contains("CartesianProduct"), p)
@@ -368,7 +368,7 @@ class PlanAuditSpec extends AnyFunSuite {
     // RDD (ExternalRDDScan + SerializeFromObject) joined to nothing —
     // a Join or aggregate re-appearing above it means the loop leaked
     // back into the plan
-    val p = plan(Graph.graph06PagerankKernel(lake, iters = 2))
+    val p = plan(Graph.graph06Pagerank(lake, iters = 2))
     assert(p.contains("SerializeFromObject"), p)
     assert(!p.contains("Join"), p)
     assert(!p.contains("CartesianProduct"), p)
