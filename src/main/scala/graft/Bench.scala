@@ -1,4 +1,5 @@
 package graft
+import graft.Json.quote
 import org.apache.spark.sql.SparkSession
 object Bench {
   /** Untimed warmup: JVM/codegen spin-up and file-index listing are
@@ -129,12 +130,6 @@ object Bench {
     // alone is asymmetric (succeed-then-fail would keep the error and
     // discard a valid min-of-sweeps measurement).
     errors.keys.toSeq.foreach(n => if (succeeded(n)) errors.remove(n))
-    def esc(s: String): String = s.flatMap {
-      case '"'          => "\\\""
-      case '\\'         => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c            => c.toString
-    }
     // 3-decimal (ms) precision: the full-precision doubles made the
     // one JSON line long enough that the driver's tail capture cut off
     // its head (BENCH_r03 arrived unparseable). 1 ms resolution is
@@ -145,7 +140,7 @@ object Bench {
     // from the headline total: a broken query must not look like a
     // fast one.
     val failed = names.filter(n => errors.contains(n))
-    val errJson = failed.map(n => s"\"${esc(n)}\":\"${esc(errors(n))}\"").mkString("{", ",", "}")
+    val errJson = failed.map(n => s"${quote(n)}:${quote(errors(n))}").mkString("{", ",", "}")
     val total = names.filterNot(errors.contains).map(best(_)).sum
     // The driver tail-captures only the LAST 2000 chars of stdout.
     // Per-query timings in that line do NOT survive suite growth:
@@ -156,7 +151,7 @@ object Bench {
     // ~500 chars at any suite size.
     val qs = names
       .map(n =>
-        s"\"" + esc(n) + "\":" + f3(
+        quote(n) + ":" + f3(
           best.getOrElse(n, failedElapsed.getOrElse(n, 0.0))
         )
       )
@@ -166,9 +161,9 @@ object Bench {
     // from a window artifact (one spiked sweep) without a re-run.
     val sweepsByQuery = names
       .filter(allRuns.contains)
-      .map(n => s"\"${esc(n)}\":[${allRuns(n).map(f3).mkString(",")}]")
+      .map(n => s"${quote(n)}:[${allRuns(n).map(f3).mkString(",")}]")
       .mkString("{", ",", "}")
-    val noisyJson = noisy.map(n => s"\"${esc(n)}\"").mkString("[", ",", "]")
+    val noisyJson = noisy.map(quote).mkString("[", ",", "]")
     val sfName = new java.io.File(sfDir).getName
     // Anchor the detail file to an explicit base (env override) or the
     // cwd made ABSOLUTE in the summary JSON — run from outside the
@@ -184,7 +179,7 @@ object Bench {
       if (subsetEnv.isDefined) s"bench_${sfName}_subset_latest.json"
       else s"bench_${sfName}_latest.json"
     val subsetJson =
-      subsetEnv.map(s => s""""${esc(s)}"""").getOrElse("null")
+      subsetEnv.map(quote).getOrElse("null")
     val detailPath =
       new java.io.File(detailBase, latestName).getAbsolutePath
     // heap_gb: records the -Xmx the numbers were measured under — a
@@ -216,13 +211,13 @@ object Bench {
       .filterNot(errors.contains)
       .sortBy(n => -best(n))
       .take(5)
-      .map(n => s"\"${esc(n)}\":${f3(best(n))}")
+      .map(n => s"${quote(n)}:${f3(best(n))}")
       .mkString("{", ",", "}")
     // Failures must still be visible in the official record even
     // without the detail file: name the first 3 (messages truncated).
     val errBrief = failed
       .take(3)
-      .map(n => s"\"${esc(n)}\":\"${esc(errors(n).take(60))}\"")
+      .map(n => s"${quote(n)}:${quote(errors(n).take(60))}")
       .mkString("{", ",", "}")
     // n_runs/n_extra make run counts comparable across records
     // (advisor round 11): the noise-adaptive pass gives flagged

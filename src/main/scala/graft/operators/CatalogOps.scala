@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Json
 import graft.catalog.Lake
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -311,25 +312,18 @@ object CatalogOps {
     * parquet-footer metadata scans; the schema comes from the file
     * footers, never a data read. */
   def infoJson(lake: Lake): String = {
-    def esc(s: String): String =
-      s.flatMap {
-        case '"'          => "\\\""
-        case '\\'         => "\\\\"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"
-        case c            => c.toString
-      }
     val tables = lake.tableNames.sorted.map { name =>
       val df = lake.resolve(name)
       val fields = df.schema.fields
         .map(f =>
-          s"""{"name":"${esc(f.name)}","type":"${esc(f.dataType.simpleString)}","nullable":${f.nullable}}"""
+          s"""{"name":${Json.quote(f.name)},"type":${Json.quote(f.dataType.simpleString)},"nullable":${f.nullable}}"""
         )
         .mkString("[", ",", "]")
       val rows = df.count()
       val bytes = diskBytes(s"${lake.dir}/$name.parquet")
-      s"""{"table":"${esc(name)}","n_rows":$rows,"n_bytes":$bytes,"n_columns":${df.schema.size},"columns":$fields}"""
+      s"""{"table":${Json.quote(name)},"n_rows":$rows,"n_bytes":$bytes,"n_columns":${df.schema.size},"columns":$fields}"""
     }
-    s"""{"dir":"${esc(lake.dir)}","n_tables":${tables.size},"tables":${tables
+    s"""{"dir":${Json.quote(lake.dir)},"n_tables":${tables.size},"tables":${tables
         .mkString("[", ",", "]")}}"""
   }
 

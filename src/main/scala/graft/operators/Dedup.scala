@@ -3,7 +3,7 @@ package graft.operators
 import graft.catalog.Lake
 import graft.functions.{hashing, text}
 import graft.plans.LocalKernels
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -54,138 +54,168 @@ object Dedup {
       .select("doc_id", "fp", "group_size")
       .orderBy("doc_id")
 
+  /** (doc_id, carry…, sh) shingle-set projection of a (doc_id, text)
+    * frame: each document's sorted distinct k-word shingle hashes
+    * (xxhash64), documents with an empty set dropped — they can share
+    * no shingle. Every shingle-set operator except dedup14 starts here;
+    * a caller that reads the frame more than once caches it. */
+  def shingleCorpus(
+      docs: DataFrame,
+      k: Int = 3,
+      carry: Seq[String] = Nil
+  ): DataFrame =
+    docs
+      .select(
+        (col("doc_id") +: carry.map(col)) :+
+          graft.plans.ShingleHashes(col("text"), k).as("sh"): _*)
+      .filter(size(col("sh")) > 0)
+
+  /** Inverted index of a shingleCorpus frame: one (doc_id, carry…,
+    * extra…, s) row per document shingle. */
+  private def invert(shingled: DataFrame, extra: Column*): DataFrame =
+    shingled.select(
+      (shingled.columns.toSeq.filter(_ != "sh").map(col) ++ extra) :+
+        explode(col("sh")).as("s"): _*)
+
+  /** Document frequency `df` per shingle `s` of an inverted index. */
+  private def docFreq(index: DataFrame): DataFrame =
+    index.groupBy("s").agg(count(lit(1)).as("df"))
+
+  /** Self-join of an inverted index on the shingle: every co-occurrence
+    * with doc_id < doc_b and `pair` true. The b side's columns take a
+    * `_b` suffix (doc_id becomes doc_b). */
+  private def coShingled(index: DataFrame, pair: Column): DataFrame =
+    index
+      .join(
+        index.select(index.columns.toSeq.map {
+          case "s"      => col("s")
+          case "doc_id" => col("doc_id").as("doc_b")
+          case c        => col(c).as(s"${c}_b")
+        }: _*),
+        Seq("s"))
+      .filter(col("doc_id") < col("doc_b") && pair)
+
+  /** The df-capped candidate generator: shingles whose document
+    * frequency exceeds `maxDf` (boilerplate) leave the inverted index
+    * of `shingled`, the rest self-join on the shingle, and the distinct
+    * (doc_a, doc_b) pairs with doc_a < doc_b and `pair` true come back.
+    * The join volume is Σ df² over the kept shingles; one trigram with
+    * df = 10⁶ would otherwise add 10¹² rows. The cap only skips a pair
+    * whose every shared shingle is boilerplate-frequent. */
+  private[graft] def cappedCandidates(
+      shingled: DataFrame,
+      maxDf: Int,
+      pair: Column = lit(true)
+  ): DataFrame = {
+    val index = invert(shingled)
+    val kept = index.join(docFreq(index).filter(col("df") <= maxDf).select("s"), "s")
+    coShingled(kept, pair)
+      .select(col("doc_id").as("doc_a"), col("doc_b"))
+      .distinct()
+  }
+
+  /** A shingle-set similarity: its output column, and its value from
+    * the intersection count `ic` and the two set sizes, rounded to 4 dp
+    * (the oracle's rounding rule). */
+  private final case class SetScore(
+      name: String,
+      of: (Column, Column, Column) => Column
+  ) {
+    def apply(ic: Column, na: Column, nb: Column): Column = round(of(ic, na, nb), 4)
+  }
+  private val Jaccard = SetScore(
+    "jaccard",
+    (ic, na, nb) => ic.cast("double") / (na + nb - ic).cast("double"))
+  private val Containment = SetScore(
+    "containment",
+    (ic, na, nb) => ic.cast("double") / least(na, nb).cast("double"))
+
+  /** Adds `score.name` for the sorted shingle sets in columns `a` and
+    * `b`. Their exact intersection count is materialized once, as
+    * column `ic`: Jaccard reads it twice, and a repeated expression
+    * walks the arrays twice. */
+  private def withScore(df: DataFrame, score: SetScore, a: String, b: String): DataFrame =
+    df.withColumn("ic", graft.plans.SortedIntersectCount(col(a), col(b)))
+      .withColumn(score.name, score(col("ic"), size(col(a)), size(col(b))))
+
+  /** The exact verify: each candidate (doc_a, doc_b) fetches both full
+    * shingle sets from `shingled` and is kept with its score when that
+    * is at least `threshold`. Returns (doc_a, doc_b, score). */
+  private def verified(
+      candidates: DataFrame,
+      shingled: DataFrame,
+      score: SetScore,
+      threshold: Double
+  ): DataFrame =
+    withScore(
+      candidates
+        .join(shingled.select(col("doc_id").as("doc_a"), col("sh").as("sh_a")), "doc_a")
+        .join(shingled.select(col("doc_id").as("doc_b"), col("sh").as("sh_b")), "doc_b"),
+      score, "sh_a", "sh_b")
+      .filter(col(score.name) >= threshold)
+      .select("doc_a", "doc_b", score.name)
+
+  /** The largest `c` in `df`, 0 when `df` is empty (one job). */
+  private def maxOf(df: DataFrame, c: String): Long = {
+    val r = df.agg(max(c)).head()
+    if (r.isNullAt(0)) 0L else r.getLong(0)
+  }
+
+  /** The size-adaptive shingle-set self-join of dedup03 and dedup10:
+    * the pairs of `docs` (a cached shingleCorpus frame) with
+    * doc_a < doc_b, `pair` true and `score` at least `threshold`,
+    * ordered. One max() over the shingle document frequencies picks the
+    * plan (the xref07 idiom). While no shingle exceeds `maxDf`, the
+    * capped candidate set is the full one and the self-join's
+    * co-occurrence count already is the exact intersection, so the
+    * verify re-join of the shingle arrays is skipped (measured at
+    * sf0.1: dedup03 2.5 → 1.4 s, dedup10 18 → 9 jobs). Past the cap,
+    * the capped candidates verify exactly on their full sets, the only
+    * shape that survives boilerplate at 100 TB. Both branches are
+    * exact; DedupSimilaritySpec's "capped branch equals uncapped" test
+    * pins it for both scores on a corpus that forces the capped branch. */
+  private def shingleSetPairs(
+      docs: DataFrame,
+      score: SetScore,
+      threshold: Double,
+      maxDf: Int,
+      pair: Column = lit(true)
+  ): DataFrame =
+    (if (maxOf(docFreq(invert(docs)), "df") <= maxDf)
+       coShingled(invert(docs, size(col("sh")).as("nsh")), pair)
+         .groupBy(col("doc_id").as("doc_a"), col("doc_b"))
+         .agg(
+           count(lit(1)).as("ic"),
+           first(col("nsh")).as("na"),
+           first(col("nsh_b")).as("nb"))
+         .withColumn(score.name, score(col("ic"), col("na"), col("nb")))
+         .filter(col(score.name) >= threshold)
+         .select("doc_a", "doc_b", score.name)
+     else verified(cappedCandidates(docs, maxDf, pair), docs, score, threshold))
+      .orderBy("doc_a", "doc_b")
+
   /** Exact word-trigram Jaccard near-dup pairs with length blocking
-    * (|n_chars(a) - n_chars(b)| <= lenWindow), via a DF-CAPPED shingle
-    * inverted index — the dedup10 structure: shingles with document
-    * frequency > maxDf are dropped from CANDIDATE GENERATION only
-    * (join volume is sum(df²) over kept shingles; one boilerplate
-    * trigram with df=10⁶ would otherwise contribute 10¹² join rows at
-    * corpus scale), then candidates verify EXACTLY on their full
-    * shingle sets via SortedIntersectCount — the cap never changes a
-    * reported jaccard value, it can only skip a pair whose EVERY
-    * shared shingle is boilerplate-frequent. While the corpus's max
-    * df <= maxDf the result is bit-identical to the uncapped join
-    * (spec-pinned); past the cap the contract is "near-dup pairs that
-    * share at least one non-boilerplate shingle", which is the pair
-    * set a curator wants anyway.
-    *
-    * The plan is SIZE-ADAPTIVE (the xref07 idiom): one max() over the
-    * df frame decides whether the cap is even active. Inactive → the
-    * direct co-occurrence count IS the exact intersection and the
-    * verify re-join of shingle arrays is skipped (~2x faster
-    * locally); active → capped candidates + exact full-set verify,
-    * the only shape that survives boilerplate at 100 TB. Both
-    * branches are exact; equality is spec-pinned on a planted corpus
-    * that forces the capped branch. */
+    * (|n_chars(a) - n_chars(b)| <= lenWindow), over the df-capped
+    * shingle inverted index ([[cappedCandidates]]): shingles with
+    * document frequency > maxDf are dropped from CANDIDATE GENERATION
+    * only, and candidates verify EXACTLY on their full shingle sets —
+    * the cap never changes a reported jaccard value. While the corpus's
+    * max df <= maxDf the result is bit-identical to the uncapped join;
+    * past the cap the contract is "near-dup pairs that share at least
+    * one non-boilerplate shingle", which is the pair set a curator
+    * wants anyway. The plan is size-adaptive; see [[shingleSetPairs]]. */
   def dedup03NgramJaccard(
       lake: Lake,
       threshold: Double = 0.5,
       lenWindow: Int = 40,
       maxDf: Int = 10000
-  ): DataFrame = {
-    val docs = lake.documents
-      .select(
-        col("doc_id"),
-        col("n_chars"),
-        graft.plans.ShingleHashes(col("text"), 3).as("sh")
-      )
-      .filter(size(col("sh")) > 0)
-      .cache()
-    val index = docs.select(
-      col("doc_id"),
-      col("n_chars"),
-      explode(col("sh")).as("s")
-    )
-    val dfs = index.groupBy("s").agg(count(lit(1)).as("df"))
-    // Size-adaptive plan choice, the xref07 idiom: when NO shingle
-    // exceeds the cap, the capped candidate set is the full candidate
-    // set AND counting co-occurrences already yields the exact
-    // intersection — so the verify re-join of the shingle arrays is
-    // pure overhead and the direct count is ~2x faster (measured
-    // 2.5 → 1.4 s at sf0.1; eval01 inherits the same saving at its
-    // 0.05 threshold). One max() over the df frame decides; any
-    // boilerplate-frequent shingle flips to the capped + exact-verify
-    // plan, which is the only shape that survives 100 TB.
-    val maxObserved = dfs.agg(max("df")).head() match {
-      case r if r.isNullAt(0) => 0L
-      case r                  => r.getLong(0)
-    }
-    if (maxObserved <= maxDf) {
-      val sized = docs.select(
-        col("doc_id"),
-        col("n_chars"),
-        size(col("sh")).as("nsh"),
-        explode(col("sh")).as("s")
-      )
-      sized
-        .join(
-          sized.select(
-            col("doc_id").as("doc_b"),
-            col("n_chars").as("chars_b"),
-            col("nsh").as("nsh_b"),
-            col("s")
-          ),
-          Seq("s")
-        )
-        .filter(
-          col("doc_id") < col("doc_b") &&
-            abs(col("n_chars") - col("chars_b")) <= lenWindow
-        )
-        .groupBy(col("doc_id").as("doc_a"), col("doc_b"))
-        .agg(
-          count(lit(1)).as("ic"),
-          first(col("nsh")).as("na"),
-          first(col("nsh_b")).as("nb")
-        )
-        .withColumn(
-          "jaccard",
-          round(
-            col("ic").cast("double") /
-              (col("na") + col("nb") - col("ic")).cast("double"),
-            4
-          )
-        )
-        .filter(col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "jaccard")
-        .orderBy("doc_a", "doc_b")
-    } else {
-      val rare = dfs.filter(col("df") <= maxDf).select("s")
-      val capped = index.join(rare, "s")
-      val candidates = capped
-        .join(
-          capped.select(
-            col("doc_id").as("doc_b"),
-            col("n_chars").as("chars_b"),
-            col("s")
-          ),
-          Seq("s")
-        )
-        .filter(
-          col("doc_id") < col("doc_b") &&
-            abs(col("n_chars") - col("chars_b")) <= lenWindow
-        )
-        .select(col("doc_id").as("doc_a"), col("doc_b"))
-        .distinct()
-      val withSets = candidates
-        .join(docs.select(col("doc_id").as("doc_a"), col("sh").as("sh_a")), "doc_a")
-        .join(docs.select(col("doc_id").as("doc_b"), col("sh").as("sh_b")), "doc_b")
-      withSets
-        // Materialize the intersection count once — jaccard references
-        // it twice, and a repeated expression runs the array walk twice.
-        .withColumn("ic", graft.plans.SortedIntersectCount(col("sh_a"), col("sh_b")))
-        .withColumn(
-          "jaccard",
-          round(
-            col("ic").cast("double") /
-              (size(col("sh_a")) + size(col("sh_b")) - col("ic")).cast("double"),
-            4
-          )
-        )
-        .filter(col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "jaccard")
-        .orderBy("doc_a", "doc_b")
-    }
-  }
+  ): DataFrame =
+    shingleSetPairs(
+      shingleCorpus(lake.documents, carry = Seq("n_chars")).cache(),
+      Jaccard,
+      threshold,
+      maxDf,
+      abs(col("n_chars") - col("n_chars_b")) <= lenWindow)
 
   /** MinHash + LSH banded near-dup detection with exact verification.
     *
@@ -207,25 +237,13 @@ object Dedup {
     // kernel: a composed plan does not optimize a view's orderBy away
     // (xref02's round-12 lesson), so they were each paying a
     // pair-set-wide range exchange + sort they immediately destroyed
-    minhashPairs(lake.documents, threshold, numPerm, bands, maxBucket)
+    minhashPairs(shingleCorpus(lake.documents).cache(), threshold, numPerm, bands, maxBucket)
       .orderBy("doc_a", "doc_b")
 
-  /** The cached (doc_id, sh) shingle-set frame minhashPairs and the
-    * decontamination kernel both start from — factored out (round 15)
-    * so a composition running BOTH over the same corpus (pipe03)
-    * parses and shingles the text once instead of once per stage. */
-  private[graft] def shingledDocs(docsText: DataFrame): DataFrame =
-    docsText
-      .select(
-        col("doc_id"),
-        graft.plans.ShingleHashes(col("text"), 3).as("sh")
-      )
-      .filter(size(col("sh")) > 0)
-      .cache()
-
-  /** The MinHash-LSH verified-pair kernel over any (doc_id, text)
-    * frame — shared by dedup04 (raw corpus) and pipe02 (the funnel's
-    * line-deduped survivors).
+  /** The MinHash-LSH verified-pair kernel over a (doc_id, sh)
+    * shingleCorpus frame, which the caller caches: the band rows and
+    * the verify both read it. Shared by dedup04 (raw corpus), pipe02
+    * (the funnel's line-deduped survivors) and the CC consumers.
     *
     * BAND-BUCKET CAP (the dedup03/dedup10 df-cap discipline applied
     * to banding): a degenerate band bucket — mass-duplicated
@@ -265,7 +283,7 @@ object Dedup {
     * Guard cost, measured (same-window A/B at sf0.1, min of 5):
     * dedup04 1.56 → 1.81 s, pipe02 4.88 → 5.63 s — one extra
     * bounded agg job (~320k (band,bucket) rows) + its job floor,
-    * the same price dedup03's maxObserved check pays, shrinking
+    * the same price dedup03's max-df guard pays, shrinking
     * relative to the joins it guards as the corpus grows. The
     * guard-free alternative (ALWAYS take the sized branch — no
     * driver decision, semantically identical below the cap) was
@@ -274,89 +292,43 @@ object Dedup {
     * it adds to every clean run costs more than the guard job it
     * deletes. */
   private[graft] def minhashPairs(
-      docsText: DataFrame,
-      threshold: Double = 0.5,
-      numPerm: Int = 128,
-      bands: Int = 64,
-      maxBucket: Int = 1000
-  ): DataFrame =
-    minhashPairsOfShingled(shingledDocs(docsText), threshold, numPerm, bands, maxBucket)
-
-  /** minhashPairs over a pre-shingled (doc_id, sh) frame — `docs`
-    * must be the shingledDocs shape (non-empty sets, cached). */
-  private[graft] def minhashPairsOfShingled(
       docs: DataFrame,
       threshold: Double = 0.5,
       numPerm: Int = 128,
       bands: Int = 64,
       maxBucket: Int = 1000
   ): DataFrame = {
-    val rows = numPerm / bands
-    // The shingle sets and band rows are cached: both feed two
-    // branches of a self-join, and without persistence Spark would
-    // recompute the full shingle+signature pipeline once per branch.
-    val sigs = docs.select(
-      col("doc_id"),
-      hashing.minhashSignature(col("sh"), numPerm).as("sig")
-    )
-    val bandRows = sigs
-      .select(
-        col("doc_id"),
-        explode(hashing.bandKeys(col("sig"), bands, rows)).as("bk")
-      )
-      .select(col("doc_id"), col("bk.band").as("band"), col("bk.bucket").as("bucket"))
-      .cache()
+    // The band rows are cached: they feed both sides of the bucket
+    // self-join and the bucket stats.
+    val bandRows = bandIndexOf(docs, numPerm, bands).cache()
     // One aggregate over the cached band rows: per-bucket size AND
     // representative, so the capped branch needs no second pass.
     val bucketStats = bandRows
       .groupBy("band", "bucket")
       .agg(count(lit(1)).as("bsz"), min("doc_id").as("rep"))
-    val maxObserved = bucketStats.agg(max("bsz")).head() match {
-      case r if r.isNullAt(0) => 0L
-      case r                  => r.getLong(0)
-    }
     val candidates =
-      if (maxObserved <= maxBucket) {
-        bandRows
-          .join(
-            bandRows.select(
-              col("doc_id").as("doc_b"),
-              col("band"),
-              col("bucket")
-            ),
-            Seq("band", "bucket")
-          )
-          .filter(col("doc_id") < col("doc_b"))
-          .select(col("doc_id").as("doc_a"), col("doc_b"))
-          .distinct()
-      } else {
+      if (maxOf(bucketStats, "bsz") <= maxBucket) bucketPairs(bandRows).distinct()
+      else {
         val sized = bandRows.join(bucketStats, Seq("band", "bucket"))
-        val small = sized.filter(col("bsz") <= maxBucket)
-        val smallPairs = small
-          .join(
-            small.select(col("doc_id").as("doc_b"), col("band"), col("bucket")),
-            Seq("band", "bucket")
-          )
-          .filter(col("doc_id") < col("doc_b"))
-          .select(col("doc_id").as("doc_a"), col("doc_b"))
         // star pairs: rep < every other member by construction (min)
         val starPairs = sized
           .filter(col("bsz") > maxBucket && col("doc_id") =!= col("rep"))
           .select(col("rep").as("doc_a"), col("doc_id").as("doc_b"))
-        smallPairs.unionAll(starPairs).distinct()
+        bucketPairs(sized.filter(col("bsz") <= maxBucket)).unionAll(starPairs).distinct()
       }
-    val withSets = candidates
-      .join(docs.select(col("doc_id").as("doc_a"), col("sh").as("sh_a")), "doc_a")
-      .join(docs.select(col("doc_id").as("doc_b"), col("sh").as("sh_b")), "doc_b")
-    val ic = graft.plans.SortedIntersectCount(col("sh_a"), col("sh_b"))
-    val jac =
-      ic.cast("double") /
-        (size(col("sh_a")) + size(col("sh_b")) - ic).cast("double")
-    withSets
-      .withColumn("jaccard", round(jac, 4))
-      .filter(col("jaccard") >= threshold)
-      .select("doc_a", "doc_b", "jaccard")
+    verified(candidates, docs, Jaccard, threshold)
   }
+
+  /** Pairs of band rows (doc_id, band, bucket, …) that share a band
+    * bucket, as (doc_a, doc_b) with doc_a < doc_b — duplicates
+    * included when a pair shares several buckets. */
+  private def bucketPairs(rows: DataFrame): DataFrame =
+    rows
+      .join(
+        rows.select(col("doc_id").as("doc_b"), col("band"), col("bucket")),
+        Seq("band", "bucket"))
+      .filter(col("doc_id") < col("doc_b"))
+      .select(col("doc_id").as("doc_a"), col("doc_b"))
 
   /** SimHash near-dup pairs: 64-bit sign-vote fingerprint, candidate
     * pairs from 16-bit hamming bands, verified hamming <= maxHamming.
@@ -412,27 +384,25 @@ object Dedup {
       .orderBy("doc_a", "doc_b")
   }
 
-  /** Unordered kernel — pipe03 composes over this (the surviving-sort
+  /** The decontamination kernel over a (doc_id, sh) shingleCorpus
+    * frame, unordered — pipe03 composes over it (the surviving-sort
     * rule: a consumer cannot optimize the public entry's presentation
     * orderBy away, and the contaminated set is corpus-fraction-sized
-    * at real volume). */
+    * at real volume). pipe03 hands in its cached frame, shared with
+    * the leakage-split pairs; dedup07 hands in an uncached one, since
+    * for a single consumer at 100 TB two pruned scans beat writing a
+    * corpus-sized cache.
+    *
+    * The fused shingle hashes make the broadcast set and the join keys
+    * 8-byte longs instead of strings. Counts match the string-shingle
+    * oracle as long as no xxhash64 collision lands inside one
+    * document's shingle set — the same (negligible, data-verified)
+    * assumption dedup04's verify step already rests on. */
   private[graft] def decontaminated(
-      lake: Lake,
+      shingled: DataFrame,
       nBench: Int = 10,
       minOverlap: Int = 5
   ): DataFrame = {
-    // Fused single-pass shingle hashes (same kernel as dedup03/04):
-    // the composable string-shingle form re-tokenizes once per slice
-    // inside its zip_with lambdas, and 64-bit hashes make the
-    // broadcast set and the join keys 8-byte longs instead of
-    // strings. Counts match the string-shingle oracle as long as no
-    // xxhash64 collision lands inside one document's shingle set —
-    // the same (negligible, data-verified) assumption dedup04's
-    // verify step already rests on.
-    val shingled = lake.documents.select(
-      col("doc_id"),
-      graft.plans.ShingleHashes(col("text"), 3).as("sh")
-    )
     val benchShingles = shingled
       .filter(col("doc_id") < nBench)
       .select(explode(col("sh")).as("s"))
@@ -463,34 +433,7 @@ object Dedup {
       nBench: Int = 10,
       minOverlap: Int = 5
   ): DataFrame =
-    decontaminated(lake, nBench, minOverlap).orderBy("doc_id")
-
-  /** The decontamination kernel over a pre-shingled (doc_id, sh)
-    * frame (shingledDocs shape) — pipe03 composes this with the
-    * leakage-split pair generation over ONE shared shingle cache, so
-    * the corpus text is parsed once for the whole funnel (round 15).
-    * The standalone `decontaminated` keeps its two-map-scan shape:
-    * for a single consumer at 100 TB two pruned scans beat writing a
-    * corpus-sized cache. Results are identical: empty shingle sets
-    * (the only rows the shared frame filters out) contribute no
-    * exploded rows on either branch. */
-  private[graft] def decontaminatedOfShingled(
-      docs: DataFrame,
-      nBench: Int = 10,
-      minOverlap: Int = 5
-  ): DataFrame = {
-    val benchShingles = docs
-      .filter(col("doc_id") < nBench)
-      .select(explode(col("sh")).as("s"))
-      .distinct()
-    docs
-      .filter(col("doc_id") >= nBench)
-      .select(col("doc_id"), explode(col("sh")).as("s"))
-      .join(broadcast(benchShingles), "s")
-      .groupBy("doc_id")
-      .agg(count(lit(1)).as("n_overlap"))
-      .filter(col("n_overlap") >= minOverlap)
-  }
+    decontaminated(shingleCorpus(lake.documents), nBench, minOverlap).orderBy("doc_id")
 
   /** dedup15: CONTAMINATION REPORT — dedup07's probe REVERSED, the
     * benchmark-side statistic an eval owner reads before trusting a
@@ -519,13 +462,10 @@ object Dedup {
       nBench: Int = 10,
       k: Int = 3
   ): DataFrame = {
-    val shingled = lake.documents.select(
-      col("doc_id"),
-      graft.plans.ShingleHashes(col("text"), k).as("sh")
-    )
+    val shingled = shingleCorpus(lake.documents, k)
     // per bench doc, its distinct grams (ShingleHashes is a set)
     val bench = shingled
-      .filter(col("doc_id") < nBench && size(col("sh")) > 0)
+      .filter(col("doc_id") < nBench)
       .select(col("doc_id"), explode(col("sh")).as("s"))
       .localCheckpoint(false)
     val benchGrams = bench.select("s").distinct()
@@ -678,110 +618,23 @@ object Dedup {
     * fully contained in one 3x its size has J ~= 0.33 but C = 1.
     *
     * Containment admits NO length blocking (the contained side may be
-    * any fraction of the container), so candidate generation uses a
-    * df-CAPPED shingle inverted index instead: shingles with document
-    * frequency > maxDf (boilerplate) are dropped from candidate
-    * generation only, and surviving candidate pairs are verified
-    * EXACTLY on their full shingle sets via the codegen'd
-    * SortedIntersectCount — the dedup04 discipline. A qualifying pair
-    * is found whenever at least one of its shared shingles is rarer
-    * than the cap (shares >= threshold*min shingles, so only pairs
-    * overlapping exclusively on boilerplate can hide); on this
-    * corpus max df << maxDf, so the output equals the exhaustive
-    * result the oracle computes. Join volume is sum over kept
-    * shingles of df^2 — the cap makes that linear-ish at any corpus
-    * size. */
+    * any fraction of the container), so candidates come from the
+    * df-capped shingle inverted index alone ([[cappedCandidates]]) and
+    * verify EXACTLY on their full shingle sets — the dedup04
+    * discipline. A qualifying pair is found whenever at least one of
+    * its shared shingles is rarer than the cap (shares >=
+    * threshold*min shingles, so only pairs overlapping exclusively on
+    * boilerplate can hide); on this corpus max df << maxDf, so the
+    * output equals the exhaustive result the oracle computes. The plan
+    * is dedup03's size-adaptive one ([[shingleSetPairs]]); its capped
+    * branch is pinned by DedupSimilaritySpec's "capped branch equals
+    * uncapped" test. */
   def dedup10Containment(
       lake: Lake,
       threshold: Double = 0.9,
       maxDf: Int = 10000
-  ): DataFrame = {
-    val docs = lake.documents
-      .select(
-        col("doc_id"),
-        graft.plans.ShingleHashes(col("text"), 3).as("sh")
-      )
-      .filter(size(col("sh")) > 0)
-      .cache()
-    val index = docs.select(col("doc_id"), explode(col("sh")).as("s"))
-    val dfs = index.groupBy("s").agg(count(lit(1)).as("df"))
-    // Size-adaptive plan choice (dedup03's guard, round 15 — dedup10
-    // never got it): when NO shingle exceeds the cap, the capped
-    // candidate set IS the full candidate set AND counting
-    // co-occurrences in the self-join already yields the exact
-    // intersection — the cap join, the candidate distinct, and both
-    // verify re-joins of the shingle arrays are pure overhead on a
-    // clean corpus. One max() over the df frame decides; any
-    // boilerplate-frequent shingle flips to the capped + exact-verify
-    // plan, the only shape that survives 100 TB. Measured (round 15):
-    // 18 -> 9 jobs (BASELINE round 15, optimization phase); BenchOne
-    // min-of-5 2.25 -> 1.97 s at sf0.1 across windows (suite point
-    // 2.92); oracle hash-PASS
-    // unchanged on both branches (the capped branch stays spec-pinned
-    // by the boilerplate-flood test).
-    val maxObserved = dfs.agg(max("df")).head() match {
-      case r if r.isNullAt(0) => 0L
-      case r                  => r.getLong(0)
-    }
-    if (maxObserved <= maxDf) {
-      val sized = docs.select(
-        col("doc_id"),
-        size(col("sh")).as("nsh"),
-        explode(col("sh")).as("s")
-      )
-      sized
-        .join(
-          sized.select(
-            col("doc_id").as("doc_b"),
-            col("nsh").as("nsh_b"),
-            col("s")
-          ),
-          Seq("s")
-        )
-        .filter(col("doc_id") < col("doc_b"))
-        .groupBy(col("doc_id").as("doc_a"), col("doc_b"))
-        .agg(
-          count(lit(1)).as("ic"),
-          first(col("nsh")).as("na"),
-          first(col("nsh_b")).as("nb")
-        )
-        .withColumn(
-          "containment",
-          round(
-            col("ic").cast("double") /
-              least(col("na"), col("nb")).cast("double"),
-            4
-          )
-        )
-        .filter(col("containment") >= threshold)
-        .select("doc_a", "doc_b", "containment")
-        .orderBy("doc_a", "doc_b")
-    } else {
-      val rare = dfs.filter(col("df") <= maxDf).select("s")
-      val capped = index.join(rare, "s")
-      val candidates = capped
-        .join(capped.select(col("doc_id").as("doc_b"), col("s")), "s")
-        .filter(col("doc_id") < col("doc_b"))
-        .select(col("doc_id").as("doc_a"), col("doc_b"))
-        .distinct()
-      val withSets = candidates
-        .join(docs.select(col("doc_id").as("doc_a"), col("sh").as("sh_a")), "doc_a")
-        .join(docs.select(col("doc_id").as("doc_b"), col("sh").as("sh_b")), "doc_b")
-      val ic = graft.plans.SortedIntersectCount(col("sh_a"), col("sh_b"))
-      withSets
-        .withColumn(
-          "containment",
-          round(
-            ic.cast("double") /
-              least(size(col("sh_a")), size(col("sh_b"))).cast("double"),
-            4
-          )
-        )
-        .filter(col("containment") >= threshold)
-        .select("doc_a", "doc_b", "containment")
-        .orderBy("doc_a", "doc_b")
-    }
-  }
+  ): DataFrame =
+    shingleSetPairs(shingleCorpus(lake.documents).cache(), Containment, threshold, maxDf)
 
   /** Cross-source duplicate overlap matrix — per (source_a, source_b)
     * pair, how many exact-duplicate DOCUMENT pairs span the two
@@ -1002,7 +855,7 @@ object Dedup {
     // Materialize the pair list once: the label loop re-reads it every
     // iteration, and recomputing the MinHash pipeline per hop would
     // dominate the cost.
-    val pairs = minhashPairs(lake.documents, threshold)
+    val pairs = minhashPairs(shingleCorpus(lake.documents).cache(), threshold)
       .select(col("doc_a"), col("doc_b"))
       .localCheckpoint(false)
     // star CC: round count independent of component diameter (the
@@ -1026,21 +879,18 @@ object Dedup {
       .orderBy("cluster_id")
   }
 
-  /** Unordered kernel — pipe03 composes over this; the split frame is
-    * CORPUS-sized, so the public entry's presentation sort surviving
-    * inside the funnel would be a full-corpus range exchange + sort. */
+  /** Unordered kernel over the corpus's cached shingleCorpus frame —
+    * pipe03 composes over this and shares the frame with its
+    * decontamination stage; the split frame is CORPUS-sized, so the
+    * public entry's presentation sort surviving inside the funnel
+    * would be a full-corpus range exchange + sort. */
   private[graft] def leakageSplits(
       lake: Lake,
+      shingled: DataFrame,
       threshold: Double = 0.5,
-      maxIters: Int = 20,
-      // pre-shingled (doc_id, sh) frame to share the shingle cache
-      // with a sibling stage (pipe03); null = shingle here
-      shingled: DataFrame = null
+      maxIters: Int = 20
   ): DataFrame = {
-    val pairs = (
-      if (shingled == null) minhashPairs(lake.documents, threshold)
-      else minhashPairsOfShingled(shingled, threshold)
-    )
+    val pairs = minhashPairs(shingled, threshold)
       .select(col("doc_a"), col("doc_b"))
       .localCheckpoint(false)
     val labels = connectedComponentsStar(pairs, maxIters)
@@ -1073,7 +923,8 @@ object Dedup {
       threshold: Double = 0.5,
       maxIters: Int = 20
   ): DataFrame =
-    leakageSplits(lake, threshold, maxIters).orderBy("doc_id")
+    leakageSplits(lake, shingleCorpus(lake.documents).cache(), threshold, maxIters)
+      .orderBy("doc_id")
 
   /** samp09: cluster-BALANCED diversity sampling — draw up to `m`
     * documents per semantic cell instead of m·(cell share) per cell,
@@ -1131,7 +982,7 @@ object Dedup {
       threshold: Double = 0.5,
       maxIters: Int = 20
   ): DataFrame = {
-    val pairs = minhashPairs(lake.documents, threshold)
+    val pairs = minhashPairs(shingleCorpus(lake.documents).cache(), threshold)
       .select(col("doc_a"), col("doc_b"))
       .localCheckpoint(false)
     val labels = connectedComponentsStar(pairs, maxIters)
@@ -1187,10 +1038,9 @@ object Dedup {
       case None => emptyVerdicts(lake)
       case Some(cut) =>
         val docs = shingleCorpus(lake.documents).cache()
-        // bandIndexOfShingled keeps the signature in its own
-        // projection (the measured 10.6 s vs 1.2 s recompute trap —
-        // see its doc).
-        val bandRows = bandIndexOfShingled(docs, numPerm, bands).cache()
+        // bandIndexOf keeps the signature in its own projection (the
+        // measured 10.6 s vs 1.2 s recompute trap — see its doc).
+        val bandRows = bandIndexOf(docs, numPerm, bands).cache()
         incrementalVerdicts(lake.documents, bandRows, docs, threshold, cut)
     }
   }
@@ -1256,11 +1106,7 @@ object Dedup {
       .filter(col("doc_a") < col("doc_b"))
       .select("doc_a", "doc_b")
       .distinct()
-    val ic = graft.plans.SortedIntersectCount(col("sh_a"), col("sh_b"))
-    val jac =
-      ic.cast("double") /
-        (size(col("sh_a")) + size(col("sh_b")) - ic).cast("double")
-    val dupOf = candidates
+    val withSets = candidates
       .hint("shuffle_hash")
       .join(shingles.select(col("doc_id").as("doc_a"), col("sh").as("sh_a")), "doc_a")
       .hint("shuffle_hash")
@@ -1270,7 +1116,8 @@ object Dedup {
           .select(col("doc_id").as("doc_b"), col("sh").as("sh_b")),
         "doc_b"
       )
-      .filter(round(jac, 4) >= threshold)
+    val dupOf = withScore(withSets, Jaccard, "sh_a", "sh_b")
+      .filter(col(Jaccard.name) >= threshold)
       .groupBy("doc_b")
       .agg(min(col("doc_a")).as("dup_of"))
     documents
@@ -1315,7 +1162,7 @@ object Dedup {
       maxBucket: Int = Int.MaxValue
   ): Unit = persist.releasingNewRdds(lake.spark) {
     val docs = shingleCorpus(lake.documents).cache()
-    capBuckets(bandIndexOfShingled(docs, numPerm, bands), maxBucket)
+    capBuckets(bandIndexOf(docs, numPerm, bands), maxBucket)
       .write.mode("overwrite").parquet(s"$dir/bands")
     docs.write.mode("overwrite").parquet(s"$dir/shingles")
   }
@@ -1366,43 +1213,32 @@ object Dedup {
           spark.read.parquet(s"$dir/shingles"),
           threshold,
           cut,
-          deltaBands = Some(bandIndexOfShingled(delta, numPerm, bands)),
+          deltaBands = Some(bandIndexOf(delta, numPerm, bands)),
           deltaShingles = Some(delta)
         )
     }
   }
 
-  /** The static MinHash band index of a corpus — (doc_id, band,
-    * bucket) rows, the build side dedup12 probes and the static side
-    * of the STREAMING probe below. */
+  /** The MinHash band index of a (doc_id, sh) shingleCorpus frame —
+    * (doc_id, carry…, band, bucket) rows: the pair kernel's candidate
+    * source, the build side dedup12 probes and the static side of the
+    * STREAMING probe below. The signature lands in its OWN projection
+    * before bandKeys references it — inlining would splice the
+    * 128-perm signature expression into each band-key struct,
+    * recomputing it ~bands× per row (dedup12's measured 10.6 s vs
+    * 1.2 s). */
   def bandIndexOf(
-      docs: DataFrame,
-      numPerm: Int = 128,
-      bands: Int = 64
-  ): DataFrame = bandIndexOfShingled(shingleCorpus(docs), numPerm, bands)
-
-  /** Band index over an already-shingled (doc_id, sh) frame. The
-    * signature lands in its OWN projection before bandKeys references
-    * it — inlining would splice the 128-perm signature expression
-    * into each band-key struct, recomputing it ~bands× per row
-    * (dedup12's measured 10.6 s vs 1.2 s). */
-  def bandIndexOfShingled(
       shingled: DataFrame,
       numPerm: Int = 128,
-      bands: Int = 64
+      bands: Int = 64,
+      carry: Seq[String] = Nil
   ): DataFrame = {
     val rows = numPerm / bands
+    val kept = col("doc_id") +: carry.map(col)
     shingled
-      .select(
-        col("doc_id"),
-        hashing.minhashSignature(col("sh"), numPerm).as("sig"))
-      .select(
-        col("doc_id"),
-        explode(hashing.bandKeys(col("sig"), bands, rows)).as("bk"))
-      .select(
-        col("doc_id"),
-        col("bk.band").as("band"),
-        col("bk.bucket").as("bucket"))
+      .select(kept :+ hashing.minhashSignature(col("sh"), numPerm).as("sig"): _*)
+      .select(kept :+ explode(hashing.bandKeys(col("sig"), bands, rows)).as("bk"): _*)
+      .select(kept :+ col("bk.band").as("band") :+ col("bk.bucket").as("bucket"): _*)
   }
 
   /** A `.compact-N` temp dir carrying `_SUCCESS` means a compaction
@@ -1415,7 +1251,7 @@ object Dedup {
     * preamble completes the swap first. An UNMARKED temp dir is
     * harmless (the write crashed before any delete) and stays
     * ignored here — the next compaction discards it. */
-  private[operators] def requireNoPendingCompaction(
+  private def requireNoPendingCompaction(
       fs: org.apache.hadoop.fs.FileSystem,
       entries: Seq[org.apache.hadoop.fs.FileStatus],
       p: org.apache.hadoop.fs.Path
@@ -1444,7 +1280,7 @@ object Dedup {
     * fast with a migration message: move the legacy files into a
     * `batch=-1` subdir (strictly below every real batch id, so they
     * probe as already-ingested corpus) or rebuild the store. */
-  private[operators] def requireBatchLayout(
+  private def requireBatchLayout(
       entries: Seq[org.apache.hadoop.fs.FileStatus],
       p: org.apache.hadoop.fs.Path
   ): Unit = {
@@ -1461,6 +1297,31 @@ object Dedup {
         "already-ingested corpus) or rebuild the index with writeBandIndex"
     )
   }
+
+  /** The `batch=N` dirs with N <= `upTo` of the batch-keyed store at
+    * `root`, as (N, path); none when `root` does not exist. A legacy
+    * flat layout fails fast (requireBatchLayout). A `reading` lister —
+    * both sinks — also refuses a committed-but-unswapped `.compact-N`
+    * dir (requireNoPendingCompaction); compaction lists with
+    * `reading = false` because its recovery finishes that swap first. */
+  private[operators] def batchDirs(
+      fs: org.apache.hadoop.fs.FileSystem,
+      root: org.apache.hadoop.fs.Path,
+      upTo: Long,
+      reading: Boolean = true
+  ): Seq[(Long, org.apache.hadoop.fs.Path)] =
+    if (!fs.exists(root)) Seq.empty
+    else {
+      val entries = fs.listStatus(root).toSeq
+      requireBatchLayout(entries, root)
+      if (reading) requireNoPendingCompaction(fs, entries, root)
+      entries
+        .filter(st => st.isDirectory && st.getPath.getName.startsWith("batch="))
+        .flatMap(st =>
+          st.getPath.getName.stripPrefix("batch=").toLongOption
+            .filter(_ <= upTo)
+            .map(_ -> st.getPath))
+    }
 
   /** STREAMING twin of the MinHash-LSH pair kernel — the
     * foreachBatch sink for a continuously-ingesting corpus: each
@@ -1526,31 +1387,11 @@ object Dedup {
     val hadoopConf = spark.sparkContext.hadoopConfiguration
     def priorBatchDirs(sub: String): Seq[String] = {
       val p = new org.apache.hadoop.fs.Path(s"$stateDir/$sub")
-      val fs = p.getFileSystem(hadoopConf)
-      if (!fs.exists(p)) Seq.empty
-      else {
-        val entries = fs.listStatus(p).toSeq
-        requireBatchLayout(entries, p)
-        requireNoPendingCompaction(fs, entries, p)
-        entries
-          .filter(st => st.isDirectory && st.getPath.getName.startsWith("batch="))
-          .flatMap(st =>
-            st.getPath.getName
-              .stripPrefix("batch=")
-              .toLongOption
-              .filter(_ < batchId)
-              .map(_ => st.getPath.toString)
-          )
-      }
+      batchDirs(p.getFileSystem(hadoopConf), p, batchId - 1).map(_._2.toString)
     }
     val shingled = shingleCorpus(batch.select("doc_id", "text")).cache()
-    val bandRows = bandIndexOfShingled(shingled, numPerm, bands).cache()
-    val intra = bandRows
-      .join(
-        bandRows.select(col("doc_id").as("doc_b"), col("band"), col("bucket")),
-        Seq("band", "bucket"))
-      .filter(col("doc_id") < col("doc_b"))
-      .select(col("doc_id").as("doc_a"), col("doc_b"))
+    val bandRows = bandIndexOf(shingled, numPerm, bands).cache()
+    val intra = bucketPairs(bandRows)
     val priorBands = priorBatchDirs("bands")
     val (candidates, storedShingles) =
       if (priorBands.nonEmpty) {
@@ -1566,17 +1407,7 @@ object Dedup {
           Some(spark.read.parquet(priorBatchDirs("shingles"): _*)))
       } else (intra.distinct(), None)
     val allShingles = storedShingles.fold(shingled)(shingled.unionAll)
-    val withSets = candidates
-      .join(allShingles.select(col("doc_id").as("doc_a"), col("sh").as("sh_a")), "doc_a")
-      .join(allShingles.select(col("doc_id").as("doc_b"), col("sh").as("sh_b")), "doc_b")
-    val ic = graft.plans.SortedIntersectCount(col("sh_a"), col("sh_b"))
-    val jac =
-      ic.cast("double") /
-        (size(col("sh_a")) + size(col("sh_b")) - ic).cast("double")
-    withSets
-      .withColumn("jaccard", round(jac, 4))
-      .filter(col("jaccard") >= threshold)
-      .select("doc_a", "doc_b", "jaccard")
+    verified(candidates, allShingles, Jaccard, threshold)
       .write.mode("overwrite").parquet(s"$stateDir/pairs/batch=$batchId")
     bandRows.write.mode("overwrite").parquet(s"$stateDir/bands/batch=$batchId")
     shingled.write.mode("overwrite").parquet(s"$stateDir/shingles/batch=$batchId")
@@ -1645,24 +1476,9 @@ object Dedup {
       upTo: Long,
       transform: DataFrame => DataFrame = identity
   ): Unit = {
-    val hadoopConf = spark.sparkContext.hadoopConfiguration
     val root = new org.apache.hadoop.fs.Path(rootDir)
-    val fs = root.getFileSystem(hadoopConf)
-    def batchDirsUpTo(limit: Long): Seq[(Long, org.apache.hadoop.fs.Path)] =
-      if (!fs.exists(root)) Seq.empty
-      else {
-        val entries = fs.listStatus(root).toSeq
-        requireBatchLayout(entries, root)
-        entries
-          .filter(st => st.isDirectory && st.getPath.getName.startsWith("batch="))
-          .flatMap(st =>
-            st.getPath.getName
-              .stripPrefix("batch=")
-              .toLongOption
-              .filter(_ <= limit)
-              .map(_ -> st.getPath)
-          )
-      }
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def batchDirsUpTo(limit: Long) = batchDirs(fs, root, limit, reading = false)
     // Crash recovery for ANY leftover temp dir, whatever upTo it was
     // written under (advisor round 12: checking only the CURRENT upTo
     // let a re-run with a different upTo merge a partial source set —
@@ -1721,14 +1537,6 @@ object Dedup {
     require(fs.rename(tmp, dst), s"compaction rename failed: $tmp -> $dst")
   }
 
-  /** (doc_id, sh) shingle-hash projection of a (doc_id, text) frame. */
-  def shingleCorpus(docs: DataFrame): DataFrame =
-    docs
-      .select(
-        col("doc_id"),
-        graft.plans.ShingleHashes(col("text"), 3).as("sh"))
-      .filter(size(col("sh")) > 0)
-
   /** STREAMING-COMPATIBLE incremental dedup probe — dedup12's verdict
     * semantics for a delta frame that may be a STREAM: each arriving
     * (doc_id, text) computes its signature map-side, probes the
@@ -1758,17 +1566,7 @@ object Dedup {
       numPerm: Int = 128,
       bands: Int = 64
   ): DataFrame = {
-    val rows = numPerm / bands
-    val bk = shingleCorpus(delta)
-      .select(
-        col("doc_id"),
-        col("sh"),
-        explode(
-          hashing.bandKeys(
-            hashing.minhashSignature(col("sh"), numPerm), bands, rows)).as("bk"))
-      .select(
-        col("doc_id"), col("sh"),
-        col("bk.band").as("band"), col("bk.bucket").as("bucket"))
+    val bk = bandIndexOf(shingleCorpus(delta), numPerm, bands, carry = Seq("sh"))
     val cand = bk
       .join(
         bandIndex.select(
@@ -1786,15 +1584,11 @@ object Dedup {
         corpusShingles.select(col("doc_id").as("doc_a"), col("sh").as("sh_a")),
         Seq("doc_a"),
         "left_outer")
-    val ic = graft.plans.SortedIntersectCount(col("sh"), col("sh_a"))
-    val jac =
-      ic.cast("double") /
-        (size(col("sh")) + size(col("sh_a")) - ic).cast("double")
-    cand
+    withScore(cand, Jaccard, "sh", "sh_a")
       .groupBy("doc_id")
       .agg(
         min(
-          when(col("sh_a").isNotNull && round(jac, 4) >= threshold, col("doc_a"))
+          when(col("sh_a").isNotNull && col(Jaccard.name) >= threshold, col("doc_a"))
         ).as("dup_of"))
       .select(
         col("doc_id"),

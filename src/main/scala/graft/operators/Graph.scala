@@ -351,6 +351,27 @@ object Graph {
       .unionAll(nationFlag)
   }
 
+  /** Binds one pattern over a scan: filters each column whose term is
+    * a constant, turns a variable repeated within the pattern into an
+    * equality filter, and projects each variable once under its name
+    * without the `?`. `terms` maps scan columns to pattern terms; plain
+    * triple scans, path-closure frames and SPARQL `GRAPH` quads all
+    * bind through it. */
+  private[graft] def bind(df0: DataFrame, terms: Seq[(String, String)]): DataFrame = {
+    var df = terms.foldLeft(df0) { case (acc, (c, t)) =>
+      if (t.startsWith("?")) acc else acc.filter(col(c) === t)
+    }
+    val varTerms = terms.filter(_._2.startsWith("?"))
+    varTerms.groupBy(_._2).values.foreach { occ =>
+      occ.tail.foreach(o2 => df = df.filter(col(occ.head._1) === col(o2._1)))
+    }
+    val proj = varTerms
+      .map(_._2)
+      .distinct
+      .map(v => col(varTerms.find(_._2 == v).get._1).as(v.drop(1)))
+    df.select(proj: _*)
+  }
+
   /** Generic SPARQL basic-graph-pattern matcher — patterns as DATA,
     * not code (the sparql_query.py:89 `run_query` surface: arbitrary
     * (s, p, o) patterns with named variables). Terms starting with
@@ -380,24 +401,6 @@ object Graph {
       !optionalIdx.contains(0),
       "the first pattern anchors the binding set and cannot be OPTIONAL"
     )
-    // Constant-filter, repeated-variable-equality and variable
-    // projection over an arbitrary (column -> term) binding list —
-    // shared by plain triple scans and path-closure frames.
-    def bind(df0: DataFrame, terms: Seq[(String, String)]): DataFrame = {
-      var df = terms.foldLeft(df0) { case (acc, (c, t)) =>
-        if (t.startsWith("?")) acc else acc.filter(col(c) === t)
-      }
-      val varTerms = terms.filter(_._2.startsWith("?"))
-      // Repeated variable within one pattern => equality on the scan.
-      varTerms.groupBy(_._2).values.foreach { occ =>
-        occ.tail.foreach(o2 => df = df.filter(col(occ.head._1) === col(o2._1)))
-      }
-      val proj = varTerms
-        .map(_._2)
-        .distinct
-        .map(v => col(varTerms.find(_._2 == v).get._1).as(v.drop(1)))
-      df.select(proj: _*)
-    }
     def scan(pat: (String, String, String)): DataFrame = pat._2 match {
       // SPARQL property paths as pattern predicates: `p+`/`(p1|p2)+`
       // solutions are the transitive closure over the predicate union

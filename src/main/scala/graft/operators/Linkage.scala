@@ -683,9 +683,10 @@ object Linkage {
     * (fraction of the n² pair space a scheme prunes away) and PAIRS
     * COMPLETENESS (fraction of true-match pairs the blocks retain),
     * evaluated against the exact-duplicate gold set for two schemes —
-    * content blocking (dedup03's df-capped shingle inverted index)
-    * and attribute blocking (n_chars length bands via evt09's
-    * bin-bucket idiom). The tension it quantifies is THE blocking
+    * content blocking (dedup03's df-capped shingle candidate
+    * generator, `Dedup.cappedCandidates`, called without dedup03's
+    * max-df guard) and attribute blocking (n_chars length bands via
+    * evt09's bin-bucket idiom). The tension it quantifies is THE blocking
     * trade: both schemes are complete on exact-dup gold, but content
     * blocking prunes orders of magnitude more pairs per retained
     * match.
@@ -721,31 +722,14 @@ object Linkage {
         fp.select(col("doc_id").as("b"), col("n_chars").as("nb"), col("f")),
         "f")
       .filter(col("doc_id") < col("b"))
-      .select(col("doc_id").as("a"), col("b"), col("n_chars").as("na"), col("nb"))
+      .select(col("doc_id").as("doc_a"), col("b").as("doc_b"), col("n_chars").as("na"), col("nb"))
       .localCheckpoint(false)
-    // scheme 1: content blocking — the df-capped shingle index
-    val ix = docs
-      .select(
-        col("doc_id"),
-        col("n_chars"),
-        graft.plans.ShingleHashes(col("text"), 3).as("sh")
-      )
-      .filter(size(col("sh")) > 0)
-      .select(col("doc_id"), col("n_chars"), explode(col("sh")).as("s"))
-    val kept = ix.join(
-      ix.groupBy("s").agg(count(lit(1)).as("df"))
-        .filter(col("df") <= maxDf).select("s"),
-      "s"
-    )
-    val candContent = kept
-      .join(
-        kept.select(col("doc_id").as("b"), col("n_chars").as("cb"), col("s")),
-        Seq("s")
-      )
-      .filter(col("doc_id") < col("b") &&
-        abs(col("n_chars") - col("cb")) <= lenWindow)
-      .select(col("doc_id").as("a"), col("b"))
-      .distinct()
+    // scheme 1: content blocking — dedup03's df-capped candidates
+    val candContent = Dedup
+      .cappedCandidates(
+        Dedup.shingleCorpus(docs, carry = Seq("n_chars")),
+        maxDf,
+        abs(col("n_chars") - col("n_chars_b")) <= lenWindow)
       .localCheckpoint(false)
     // scheme 2: attribute blocking — length bands, ANALYTIC. The pair
     // count a band join WOULD produce (each |diff| <= W pair exactly
@@ -768,22 +752,24 @@ object Linkage {
         .crossJoin(broadcast(goldTotal))
         .crossJoin(broadcast(goldCovered))
         .crossJoin(broadcast(totals))
+        // try_divide: a ratio with no pairs (< 2 docs) or no gold
+        // pairs is NULL, not a DIVIDE_BY_ZERO under ANSI
         .select(
           lit(name).as("scheme"),
           col("n_candidates"),
           round(
-            lit(1.0) - col("n_candidates") / (col("n") * (col("n") - 1) / 2),
+            lit(1.0) - try_divide(col("n_candidates"), col("n") * (col("n") - 1) / 2),
             4
           ).as("reduction_ratio"),
           col("gold_total"),
           col("gold_covered"),
-          round(col("gold_covered") / col("gold_total").cast("double"), 4)
+          round(try_divide(col("gold_covered"), col("gold_total").cast("double")), 4)
             .as("completeness")
         )
     schemeRow(
       "content_shingle",
       candContent.agg(count(lit(1)).as("n_candidates")),
-      gold.join(candContent, Seq("a", "b"), "left_semi")
+      gold.join(candContent, Seq("doc_a", "doc_b"), "left_semi")
         .agg(count(lit(1)).as("gold_covered"))
     )
       .unionAll(schemeRow("length_band", nCandLength, goldCoveredLength))

@@ -202,25 +202,11 @@ object Pipeline {
       bloomExpectedItems: Long = 10000000L
   ): (DataFrame, Long) => Unit = { (batch: DataFrame, batchId: Long) =>
     val spark = batch.sparkSession
-    val hadoopConf = spark.sparkContext.hadoopConfiguration
     val root = new org.apache.hadoop.fs.Path(s"$stateDir/survivors")
-    val fs = root.getFileSystem(hadoopConf)
-    val priorIds: Seq[(Long, String)] =
-      if (!fs.exists(root)) Seq.empty
-      else {
-        val entries = fs.listStatus(root).toSeq
-        Dedup.requireBatchLayout(entries, root)
-        Dedup.requireNoPendingCompaction(fs, entries, root)
-        entries
-          .filter(st => st.isDirectory && st.getPath.getName.startsWith("batch="))
-          .flatMap(st =>
-            st.getPath.getName
-              .stripPrefix("batch=")
-              .toLongOption
-              .filter(_ < batchId)
-              .map(id => id -> st.getPath.toString)
-          )
-      }
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val priorIds: Seq[(Long, String)] = Dedup
+      .batchDirs(fs, root, batchId - 1)
+      .map { case (id, p) => id -> p.toString }
     val prior: Seq[String] = priorIds.map(_._2)
     val cleaned = cleanedDocsOf(batch.select("doc_id", "source", "text"))
     val passing = TextAnalysis
@@ -489,8 +475,7 @@ object Pipeline {
     // soft-dedup mass among the survivors, on the cleaned text
     val pairs = Dedup
       .minhashPairs(
-        cleaned.join(selected.select("doc_id"), "doc_id")
-          .select("doc_id", "text"),
+        Dedup.shingleCorpus(cleaned.join(selected.select("doc_id"), "doc_id")).cache(),
         threshold
       )
       .select(col("doc_a"), col("doc_b"))
@@ -565,11 +550,10 @@ object Pipeline {
     // previously parsed + shingled the corpus text once per stage —
     // three ShingleHashes passes; now one (guide §1.2: don't compute
     // things twice).
-    val docsSh = Dedup.shingledDocs(lake.documents)
+    val docsSh = Dedup.shingleCorpus(lake.documents).cache()
     val contaminated =
-      Dedup.decontaminatedOfShingled(docsSh, nBench, minOverlap).select("doc_id")
-    val splits =
-      Dedup.leakageSplits(lake, shingled = docsSh).select("doc_id", "split")
+      Dedup.decontaminated(docsSh, nBench, minOverlap).select("doc_id")
+    val splits = Dedup.leakageSplits(lake, docsSh).select("doc_id", "split")
     val clean = lake.documents
       .select(col("doc_id"), col("lang"))
       .filter(col("doc_id") >= nBench)

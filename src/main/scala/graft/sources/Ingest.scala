@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.Json
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.types.StructType
 
@@ -255,12 +256,6 @@ object Ingest {
       outDir: String,
       targetPartitions: Int = 4
   ): String = {
-    def esc(s: String): String = s.flatMap {
-      case '"'          => "\\\""
-      case '\\'         => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c            => c.toString
-    }
     val entries = tables.map { case (schema, table, df) =>
       val path = s"$outDir/$schema/$table"
       writeParquet(df, path, targetPartitions)
@@ -272,11 +267,11 @@ object Ingest {
         .filter(f => f.isFile && f.getName.endsWith(".parquet"))
       val cols = written.schema.fields
         .map(f =>
-          s"""{"name":"${esc(f.name)}","type":"${esc(f.dataType.simpleString)}","nullable":${f.nullable}}"""
+          s"""{"name":${Json.quote(f.name)},"type":${Json.quote(f.dataType.simpleString)},"nullable":${f.nullable}}"""
         )
         .mkString("[", ",", "]")
-      s"""{"schema":"${esc(schema)}","table":"${esc(table)}",""" +
-        s""""path":"${esc(s"$schema/$table")}","n_rows":$nRows,""" +
+      s"""{"schema":${Json.quote(schema)},"table":${Json.quote(table)},""" +
+        s""""path":${Json.quote(s"$schema/$table")},"n_rows":$nRows,""" +
         s""""n_files":${parts.length},"n_bytes":${parts.map(_.length).sum},""" +
         s""""columns":$cols}"""
     }

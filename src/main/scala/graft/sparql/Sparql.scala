@@ -548,27 +548,9 @@ object Sparql {
       gVar: String,
       pats: Seq[(String, String, String)]
   ): DataFrame = {
-    def scan(pat: (String, String, String)): DataFrame = {
-      val terms = Seq(
-        "s" -> pat._1,
-        "p" -> pat._2,
-        "o" -> pat._3,
-        "g" -> ("?" + gVar)
-      )
-      var df = quads
-      terms.foreach { case (c, t) =>
-        if (!t.startsWith("?")) df = df.filter(col(c) === t)
-      }
-      val varTerms = terms.filter(_._2.startsWith("?"))
-      varTerms.groupBy(_._2).values.foreach { occ =>
-        occ.tail.foreach(o2 => df = df.filter(col(occ.head._1) === col(o2._1)))
-      }
-      val proj = varTerms
-        .map(_._2)
-        .distinct
-        .map(v => col(varTerms.find(_._2 == v).get._1).as(v.drop(1)))
-      df.select(proj: _*)
-    }
+    def scan(pat: (String, String, String)): DataFrame = Graph.bind(
+      quads,
+      Seq("s" -> pat._1, "p" -> pat._2, "o" -> pat._3, "g" -> ("?" + gVar)))
     pats.map(scan).reduceLeft { (a, b) =>
       val shared = a.columns.intersect(b.columns).toSeq
       if (shared.nonEmpty) a.join(b, shared) else a.crossJoin(b)

@@ -239,6 +239,17 @@ class DedupSimilaritySpec extends AnyFunSuite {
     assert(capped == uncapped,
       s"capped $capped vs uncapped $uncapped")
     assert(capped.contains((1L, 2L)), "the rare-shingle near-dup pair must survive the cap")
+    // dedup10 runs the same size-adaptive core with the containment
+    // score: 1 ⊂ 2 up to the boundary trigrams (C = 51/53 >= 0.9)
+    def contained(cap: Int) = Dedup
+      .dedup10Containment(planted, maxDf = cap)
+      .collect()
+      .map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2)))
+      .toMap
+    val cappedC = contained(3)
+    val uncappedC = contained(Int.MaxValue)
+    assert(cappedC == uncappedC, s"dedup10 capped $cappedC vs uncapped $uncappedC")
+    assert(cappedC.contains((1L, 2L)), "dedup10's contained pair must survive the cap")
   }
 
   test("dedup04: band-bucket cap keeps components connected on a mass-duplicate corpus") {
@@ -264,7 +275,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val planted = Lake(spark, dir)
     def run(cap: Int) = Dedup
-      .minhashPairs(planted.documents, maxBucket = cap)
+      .minhashPairs(Dedup.shingleCorpus(planted.documents).cache(), maxBucket = cap)
       .collect()
       .map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2)))
       .toMap
@@ -322,7 +333,8 @@ class DedupSimilaritySpec extends AnyFunSuite {
       .toDF("doc_id", "text")
     // the premise must actually hold on today's hashing: some band
     // bucket is oversized AND contains members of both groups
-    val buckets = Dedup.bandIndexOf(docs)
+    val shingled = Dedup.shingleCorpus(docs).cache()
+    val buckets = Dedup.bandIndexOf(shingled)
       .groupBy("band", "bucket")
       .agg(
         count(lit(1)).as("n"),
@@ -333,7 +345,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
       "no heterogeneous oversized bucket formed — the spec premise broke")
     assert(buckets.exists { case (nx, ny) => ny > 0 && nx == 0 },
       "no pure-Y bucket formed — Y could not reconnect")
-    def run(cap: Int) = Dedup.minhashPairs(docs, maxBucket = cap)
+    def run(cap: Int) = Dedup.minhashPairs(shingled, maxBucket = cap)
       .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
     val capped = run(4)
     val uncapped = run(Int.MaxValue)

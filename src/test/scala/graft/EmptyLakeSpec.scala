@@ -103,4 +103,21 @@ class EmptyLakeSpec extends AnyFunSuite {
   assertEmptyOk("txt12_bpe_tokens", TextAnalysis.txt12BpeTokens)
   assertEmptyOk("pipe01_pretrain_corpus", Pipeline.pipe01PretrainCorpus(_))
   assertEmptyOk("pipe03_eval_suite", Pipeline.pipe03EvalSuite(_))
+  // the shingle-set operators: one shingle projection, the df-capped
+  // candidate generator and the MinHash pair kernel on zero documents
+  assertEmptyOk("dedup07_decontaminate", Dedup.dedup07Decontaminate(_))
+  assertEmptyOk("dedup08_cluster_resolve", Dedup.dedup08ClusterResolve(_))
+  assertEmptyOk("dedup10_containment", Dedup.dedup10Containment(_))
+  assertEmptyOk("dedup15_contamination_report", Dedup.dedup15ContaminationReport(_))
+  // xref09 reports one row per blocking scheme whatever the corpus:
+  // no candidates, no gold pairs, and undefined ratios read as NULL
+  test("xref09_blocking_quality reports both schemes empty on an empty lake") {
+    val rows = Linkage.xref09BlockingQuality(empty).collect()
+    assert(rows.map(_.getString(0)).toSeq == Seq("content_shingle", "length_band"))
+    rows.foreach { r =>
+      assert(r.getAs[Long]("n_candidates") == 0L && r.getAs[Long]("gold_total") == 0L, r)
+      assert(r.isNullAt(r.fieldIndex("reduction_ratio")) &&
+        r.isNullAt(r.fieldIndex("completeness")), r)
+    }
+  }
 }

@@ -29,8 +29,8 @@ class StreamingSpec extends AnyFunSuite {
     // can match an earlier delta doc (the doc_a < doc_id filter keeps
     // the ordering); the index refresh cadence is the deployment knob
     val allDocs = lake.documents.select("doc_id", "text")
-    val index = graft.operators.Dedup.bandIndexOf(allDocs).cache()
     val shingles = graft.operators.Dedup.shingleCorpus(allDocs).cache()
+    val index = graft.operators.Dedup.bandIndexOf(shingles).cache()
     // the delta arrives as a STREAM, in two micro-batches
     val delta = lake.documents
       .filter(col("doc_id") >= cut)
