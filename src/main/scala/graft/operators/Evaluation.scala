@@ -91,8 +91,10 @@ object Evaluation {
       .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
     val goldTotal = gold.agg(count(lit(1)).as("n_gold"))
     val tp = count(when(col("is_gold"), 1))
-    val p = col("n_tp").cast("double") / col("n_pred")
-    val r = col("n_tp").cast("double") / col("n_gold")
+    // try_divide: a lake with no gold pair (n_gold = 0) reads a NULL
+    // recall, and its f1 falls to 0.0, instead of DIVIDE_BY_ZERO
+    val p = try_divide(col("n_tp").cast("double"), col("n_pred"))
+    val r = try_divide(col("n_tp").cast("double"), col("n_gold"))
     sampled
       .join(gold.withColumn("is_gold", lit(true)), Seq("doc_a", "doc_b"), "left")
       .groupBy("stratum")
@@ -206,7 +208,7 @@ object Evaluation {
   def eval04ClusterQuality(lake: Lake): DataFrame = {
     val all = Similarity.vecs(lake)
     val cents = Similarity
-      .labelCentroids(all)
+      .meanCentroids(all, "label")
       .select(col("label").as("clabel"), col("centroid"))
     all
       .crossJoin(broadcast(cents))

@@ -13,10 +13,17 @@ import org.apache.spark.sql.functions._
   *
   * Scale design: brute force is the per-bucket kernel. The query side
   * is always the small side and is broadcast, so the scan side streams
-  * once with no shuffle; top-k is a per-query window over the
-  * (|queries| x k)-sized aggregate, not the full cross product. The
-  * LSH variant buckets the space so each bucket's kernel fits one
-  * executor core — the IVF-style scale path for 100 TB corpora.
+  * once with no shuffle; top-k is a bounded heap per query
+  * (`topkPerQuery`), so the exchange carries |queries| x k pairs, not
+  * the full cross product. The LSH variant buckets the space so each
+  * bucket's kernel fits one executor core — the IVF-style scale path
+  * for 100 TB corpora.
+  *
+  * The family shares one definition of each step: the query side
+  * (`queries`), the exact cosine (`cosRaw`), the probed-cell candidate
+  * join (`probedCandidates`), the exact rerank (`rerank`), the mutual
+  * k-NN fold (`mutualKnn`), the PQ subspace split (`subvectors`) and
+  * the cell mean (`meanCentroids`).
   */
 object Similarity {
 
@@ -31,25 +38,25 @@ object Similarity {
       vectors.toDouble(col("embedding")).as("v")
     ).withColumn("nrm", vectors.norm(col("v")))
 
-  /** Per-query top-k over a scored candidate frame — shared tail of
-    * the whole ANN family (sim01/03/05/06/07/09/10), via the native
-    * bounded-heap aggregate (TopKByScore; sim08's rationale). The
-    * row_number-window alternative ORDERS each query's candidate
-    * slice before its rank<=k filter — corpus-sized for brute force,
-    * ~nprobe/nlist·n for the IVF family — and that sort is the
-    * dominant cost at scale (measured 12× the kernel on sim08's sf1
-    * stream). Input contract: (query_id, vec_id, cos_raw [+ any]);
-    * output matches the window formulation row for row:
+  /** Per-query top-k over a scored candidate frame — the one tail of
+    * the whole ANN family, the rerank and the mutual-kNN fold
+    * included, via the native bounded-heap aggregate (TopKByScore;
+    * sim08's rationale). The row_number-window alternative ORDERS each
+    * query's candidate slice before its rank<=k filter — corpus-sized
+    * for brute force, ~nprobe/nlist·n for the IVF family — and that
+    * sort is the dominant cost at scale (measured 12× the kernel on
+    * sim08's sf1 stream). Input contract: (query_id, vec_id, cos_raw
+    * [+ any]); output matches the window formulation row for row:
     * (query_id, rank, neighbor_id, score-rounded-4) ordered
     * (cos_raw desc, vec_id asc) per query. */
   private[graft] def topkPerQuery(
       scored: DataFrame,
       k: Int,
       scoreName: String = "cos",
-      // composed consumers (sim15's candidate stage) pass false: the
-      // presentation sort is NOT pruned under downstream operators
-      // (the xref02Unified lesson), so an intermediate top-k must not
-      // carry one
+      // composed consumers (a rerank's candidate stage, the mutual
+      // fold) pass false: Catalyst drops a sort under a join, but not
+      // under every downstream operator (the xref02Unified lesson), so
+      // an intermediate top-k carries none
       ordered: Boolean = true
   ): DataFrame = {
     val out = scored
@@ -65,6 +72,57 @@ object Similarity {
     if (ordered) out.orderBy("query_id", "rank") else out
   }
 
+  /** The query side of an exact search: a (vec_id, v, nrm) frame's
+    * rows as (query_id, qv, qnrm), the names `cosRaw` reads, plus the
+    * `keep` columns. The mutual graphs query with every row. */
+  private def asQueries(frame: DataFrame, keep: String*): DataFrame =
+    frame.select(
+      Seq(col("vec_id").as("query_id"), col("v").as("qv"), col("nrm").as("qnrm")) ++
+        keep.map(col): _*)
+
+  /** The ANN family's queries: the vectors with vec_id < nQueries. */
+  private def queries(all: DataFrame, nQueries: Int): DataFrame =
+    asQueries(all.filter(col("vec_id") < nQueries))
+
+  /** The exact cosine of a query row against a corpus row, the one
+    * formula every exact score in this object uses: the norms are
+    * computed once per vector (`vecs`), so a compared pair costs one
+    * dot product. */
+  private val cosRaw: Column =
+    vectors.dot(col("qv"), col("v")) / (col("qnrm") * col("nrm"))
+
+  /** Every query of `qs` against every row of `corpus` but itself,
+    * scored: the exhaustive kernel, with the query side broadcast. */
+  private def scoreAll(corpus: DataFrame, qs: DataFrame): DataFrame =
+    corpus.join(broadcast(qs), col("vec_id") =!= col("query_id")).withColumn("cos_raw", cosRaw)
+
+  /** Cell-probed candidates: each corpus row of `cells` meets the
+    * broadcast probe rows (query_id [+ any]) of its cell in one
+    * equi-join on `cell`, never its own query row. */
+  private def probedCandidates(cells: DataFrame, probed: DataFrame, cell: String): DataFrame =
+    cells.join(broadcast(probed), Seq(cell)).filter(col("vec_id") =!= col("query_id"))
+
+  /** The candidate stage of a two-stage search: each query's `n`
+    * best-scored ids (query_id, vec_id), unordered. */
+  private def topIds(scored: DataFrame, n: Int): DataFrame =
+    topkPerQuery(scored, n, ordered = false)
+      .select(col("query_id"), col("neighbor_id").as("vec_id"))
+
+  /** The exact rerank closing every two-stage search (sim03, sim09,
+    * sim13, sim15): the candidate ids `cand` (query_id, vec_id) fetch
+    * their full vectors from `all` in one id equi-join — the corpus is
+    * touched |queries|·|candidates| times, never scanned into the
+    * kernel — the broadcast query side attaches by query_id, and the
+    * exact cosine feeds the heap top-k. */
+  private def rerank(all: DataFrame, cand: DataFrame, k: Int, nQueries: Int): DataFrame =
+    topkPerQuery(
+      cand
+        .join(all.select(col("vec_id"), col("v"), col("nrm")), Seq("vec_id"))
+        .join(broadcast(queries(all, nQueries)), Seq("query_id"))
+        .withColumn("cos_raw", cosRaw),
+      k
+    )
+
   /** The brute-force kernel shared by sim01 and every audit that
     * replays it over a transformed representation (emb03's prefix
     * legs): queries = vec_id < nQueries from `base` (broadcast),
@@ -74,20 +132,8 @@ object Similarity {
       base: DataFrame,
       k: Int,
       nQueries: Int
-  ): DataFrame = {
-    val queries = base
-      .filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"), col("nrm").as("qnrm"))
-    topkPerQuery(
-      base
-        .join(broadcast(queries), col("vec_id") =!= col("query_id"))
-        .withColumn(
-          "cos_raw",
-          vectors.dot(col("qv"), col("v")) / (col("qnrm") * col("nrm"))
-        ),
-      k
-    )
-  }
+  ): DataFrame =
+    topkPerQuery(scoreAll(base, queries(base, nQueries)), k)
 
   /** Exact cosine top-k for a set of query vectors (vec_id < nQueries),
     * brute force with a broadcast query side. */
@@ -203,9 +249,9 @@ object Similarity {
     * Plan shape: the bucket frame is narrow (vec_id, tbl, sig — no
     * vectors); the corpus signature pass runs exactly once (the query
     * side gets its own pass over <= nQueries rows, see below);
-    * candidate dedup is on (query_id, vec_id) ids only; vectors are
-    * re-attached by one equi-join against the base scan plus one
-    * broadcast join for the bounded query side. */
+    * candidate dedup is on (query_id, vec_id) ids only; the shared
+    * `rerank` re-attaches vectors by one equi-join against the base
+    * scan plus one broadcast join for the bounded query side. */
   def sim03LshAnn(
       lake: Lake,
       k: Int = 10,
@@ -263,30 +309,19 @@ object Similarity {
       .filter(col("vec_id") =!= col("query_id"))
       .select("query_id", "vec_id")
       .distinct()
-    val queries = all
-      .filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"), col("nrm").as("qnrm"))
-    val candidates = candIds
-      .join(all.select(col("vec_id"), col("v"), col("nrm")), Seq("vec_id"))
-      .join(broadcast(queries), Seq("query_id"))
-    topkPerQuery(
-      candidates.withColumn(
-        "cos_raw",
-        vectors.dot(col("qv"), col("v")) / (col("qnrm") * col("nrm"))
-      ),
-      k
-    )
+    rerank(all, candIds, k, nQueries)
   }
 
-  /** Per-label centroids (posexplode + positional mean) — the IVF
-    * coarse quantizer shared by sim04 (cohesion stats) and sim05
-    * (cell-probed ANN). */
-  private[operators] def labelCentroids(all: DataFrame): DataFrame =
-    all
-      .select(col("label"), posexplode(col("v")).as(Seq("pos", "x")))
-      .groupBy("label", "pos")
+  /** Per-cell mean centroids (posexplode + positional mean) of a
+    * (key, v) frame, one (key, centroid) row per cell: the label
+    * quantizer of sim04, sim05 and eval04, and sim12's cone reference
+    * point. */
+  private[operators] def meanCentroids(frame: DataFrame, key: String): DataFrame =
+    frame
+      .select(col(key), posexplode(col("v")).as(Seq("pos", "x")))
+      .groupBy(key, "pos")
       .agg(avg("x").as("c"))
-      .groupBy("label")
+      .groupBy(key)
       .agg(
         transform(
           array_sort(collect_list(struct(col("pos"), col("c")))),
@@ -299,9 +334,8 @@ object Similarity {
     * building block. */
   def sim04LabelCentroids(lake: Lake): DataFrame = {
     val all = vecs(lake)
-    val centroids = labelCentroids(all)
     all
-      .join(broadcast(centroids), "label")
+      .join(broadcast(meanCentroids(all, "label")), "label")
       .withColumn("cos", vectors.cosine(col("v"), col("centroid")))
       .groupBy("label")
       .agg(
@@ -474,23 +508,10 @@ object Similarity {
   ): DataFrame = {
     val all = vecs(lake).localCheckpoint()
     val cents = kmeans(all, nlist, iters)
-    val cells = argmaxCell(all, cents, Seq("v", "nrm"))
-      .select(col("vec_id"), col("cluster"), col("v"), col("nrm"))
-    val probed = probeCells(
-      all
-        .filter(col("vec_id") < nQueries)
-        .select(col("vec_id").as("query_id"), col("v").as("qv"), col("nrm").as("qnrm")),
-      cents,
-      nprobe
-    ).select("query_id", "qv", "qnrm", "cluster")
+    val probed = probeCells(queries(all, nQueries), cents, nprobe)
     topkPerQuery(
-      cells
-        .join(broadcast(probed), Seq("cluster"))
-        .filter(col("vec_id") =!= col("query_id"))
-        .withColumn(
-          "cos_raw",
-          vectors.dot(col("qv"), col("v")) / (col("qnrm") * col("nrm"))
-        ),
+      probedCandidates(argmaxCell(all, cents, Seq("v", "nrm")), probed, "cluster")
+        .withColumn("cos_raw", cosRaw),
       k
     )
   }
@@ -597,6 +618,13 @@ object Similarity {
       .write.mode("overwrite").parquet(s"$dir/cells")
   }
 
+  /** A persisted index table, read with the footer schema the driver
+    * reads (`Lake.schemaFor`), so opening it runs no Spark job. */
+  private def indexTable(spark: SparkSession, dir: String, table: String): DataFrame = {
+    val path = s"$dir/$table"
+    spark.read.schema(Lake.schemaFor(spark, path)).parquet(path)
+  }
+
   /** Append a DELTA batch to a persisted IVF index WITHOUT retraining
     * — the index-maintenance verb between writeIvfIndex rebuilds
     * (FAISS IndexIVF.add on a trained index; the reference rebuilds
@@ -622,7 +650,7 @@ object Similarity {
       dir: String,
       delta: Column
   ): DataFrame = {
-    val cents = Codebook.collect(lake.spark.read.parquet(s"$dir/centroids"))
+    val cents = Codebook.collect(indexTable(lake.spark, dir, "centroids"))
     val asg = argmaxCell(vecs(lake).filter(delta), cents, Seq.empty, keepCos = true)
       .localCheckpoint() // one assignment pass feeds both the write and the report
     asg
@@ -689,9 +717,9 @@ object Similarity {
     * train-then-search are the same function of the data
     * (spec-asserted). The probe path is sim06's: collect the centroid
     * table once into a Codebook, rank cells per query map-side against
-    * its broadcast handle, scan only the probed
-    * cells' inverted lists (the cells table join prunes the corpus
-    * BEFORE vectors attach). */
+    * its broadcast handle, scan only the probed cells' inverted lists
+    * (`probedCandidates` over the narrow cells table prunes the corpus
+    * BEFORE vectors attach by id). */
   def ivfAnnFromIndex(
       lake: Lake,
       dir: String,
@@ -701,24 +729,12 @@ object Similarity {
   ): DataFrame = {
     val spark = lake.spark
     val all = vecs(lake)
-    val cents = Codebook.collect(spark.read.parquet(s"$dir/centroids"))
-    val cells = spark.read.parquet(s"$dir/cells")
-    val probed = probeCells(
-      all
-        .filter(col("vec_id") < nQueries)
-        .select(col("vec_id").as("query_id"), col("v").as("qv"), col("nrm").as("qnrm")),
-      cents,
-      nprobe
-    ).select("query_id", "qv", "qnrm", "cluster")
+    val cents = Codebook.collect(indexTable(spark, dir, "centroids"))
+    val probed = probeCells(queries(all, nQueries), cents, nprobe)
     topkPerQuery(
-      cells
-        .join(broadcast(probed), Seq("cluster"))
-        .filter(col("vec_id") =!= col("query_id"))
+      probedCandidates(indexTable(spark, dir, "cells"), probed, "cluster")
         .join(all.select(col("vec_id"), col("v"), col("nrm")), Seq("vec_id"))
-        .withColumn(
-          "cos_raw",
-          vectors.dot(col("qv"), col("v")) / (col("qnrm") * col("nrm"))
-        ),
+        .withColumn("cos_raw", cosRaw),
       k
     )
   }
@@ -752,14 +768,7 @@ object Similarity {
       iters: Int = 2
   ): DataFrame = {
     val (subv, cents, codes) = pqTrain(lake, m, ks, iters)
-    pqSearch(
-      subv
-        .filter(col("vec_id") < nQueries)
-        .select(col("vec_id").as("query_id"), col("sub_id"), col("sv").as("qsv")),
-      cents,
-      codes,
-      k
-    )
+    topkPerQuery(pqScores(subv, nQueries, cents, codes), k, "adc_score")
   }
 
   /** sim13: PQ + EXACT REFINE, the production FAISS serving shape
@@ -777,7 +786,9 @@ object Similarity {
     *
     * Cosine is normalization-invariant, so the refine stage scores
     * raw vectors while the codes were trained on the normalized
-    * corpus — same space, one less projection. */
+    * corpus — same space, one less projection. The candidate stage
+    * runs unordered (`topIds`); only the rerank pays a presentation
+    * sort. */
   def sim13PqRefine(
       lake: Lake,
       m: Int = 8,
@@ -788,28 +799,7 @@ object Similarity {
       iters: Int = 2
   ): DataFrame = {
     val (subv, cents, codes) = pqTrain(lake, m, ks, iters)
-    val cand = pqSearch(
-      subv
-        .filter(col("vec_id") < nQueries)
-        .select(col("vec_id").as("query_id"), col("sub_id"), col("sv").as("qsv")),
-      cents,
-      codes,
-      k * refine
-    ).select(col("query_id"), col("neighbor_id").as("vec_id"))
-    val base = vecs(lake).select(col("vec_id"), col("v"), col("nrm"))
-    val queries = base
-      .filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"), col("nrm").as("qnrm"))
-    topkPerQuery(
-      cand
-        .join(base, Seq("vec_id")) // narrow id join: candidates only
-        .join(broadcast(queries), Seq("query_id"))
-        .withColumn(
-          "cos_raw",
-          vectors.dot(col("qv"), col("v")) / (col("qnrm") * col("nrm"))
-        ),
-      k
-    )
+    rerank(vecs(lake), topIds(pqScores(subv, nQueries, cents, codes), k * refine), k, nQueries)
   }
 
   /** Schema-correct empty ANN result (query_id, rank, neighbor_id,
@@ -868,7 +858,9 @@ object Similarity {
     val cents = kmeans(all, nlist, coarseIters)
     if (cents.n == 0) return emptyAnnResult(all, k, "adc_ip")
     val (cellIds, pqCents, codes) = ivfPqBuild(all, cents, m, ks, pqIters)
-    ivfPqSearch(all, cents, cellIds, pqCents, codes, cents.dim / m, k, nQueries, nprobe, m)
+    topkPerQuery(
+      ivfPqScores(all, cents, cellIds, pqCents, codes, m, cents.dim / m, nQueries, nprobe),
+      k, "adc_ip")
   }
 
   /** IVF-PQ train over a trained coarse quantizer: cell assignments,
@@ -904,48 +896,31 @@ object Similarity {
     (cells.select(col("vec_id"), col("cluster")), pqCents, codes)
   }
 
-  /** Probed-cell ADC search over the four IVF-PQ tables. */
-  private def ivfPqSearch(
+  /** Probed-cell ADC scores over the four IVF-PQ tables: (query_id,
+    * vec_id, cos_raw) for every candidate in a probed cell. */
+  private def ivfPqScores(
       all: DataFrame,
       cents: Codebook,
       cellIds: DataFrame,
       pqCents: Codebook,
       codes: DataFrame,
-      sd: Int,
-      k: Int,
-      nQueries: Int,
-      nprobe: Int,
       m: Int,
-      ordered: Boolean = true
+      sd: Int,
+      nQueries: Int,
+      nprobe: Int
   ): DataFrame = {
-    val queries = all
-      .filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"))
-    val probed = probeCells(queries, cents, nprobe)
+    val qs = queries(all, nQueries)
     val lut = adcTable(
-      queries
-        .withColumn("sub_id", explode(sequence(lit(0), lit(m - 1))))
-        .select(
-          col("query_id"),
-          col("sub_id"),
-          slice(col("qv"), col("sub_id") * sd + 1, lit(sd)).as("qsv")
-        ),
-      pqCents
-    )
-    val cand = cellIds
-      .join(broadcast(probed.select("query_id", "qcdot", "cluster")), Seq("cluster"))
-      .filter(col("vec_id") =!= col("query_id"))
+      subvectors(qs.select("query_id", "qv"), m, sd)
+        .select(col("query_id"), col("sub_id"), col("sv").as("qsv")),
+      pqCents)
+    val probed = probeCells(qs, cents, nprobe).select("query_id", "qcdot", "cluster")
+    probedCandidates(cellIds, probed, "cluster")
       .select("query_id", "vec_id", "qcdot")
-    topkPerQuery(
-      cand
-        .join(codes, Seq("vec_id"))
-        .join(broadcast(lut), Seq("query_id", "sub_id", "cluster"))
-        .groupBy("query_id", "vec_id")
-        .agg((first("qcdot") + sum("pdot")).as("cos_raw")),
-      k,
-      scoreName = "adc_ip",
-      ordered = ordered
-    )
+      .join(codes, Seq("vec_id"))
+      .join(broadcast(lut), Seq("query_id", "sub_id", "cluster"))
+      .groupBy("query_id", "vec_id")
+      .agg((first("qcdot") + sum("pdot")).as("cos_raw"))
   }
 
   /** sim15: IVF-PQ + EXACT REFINE — the FAISS production serving
@@ -966,9 +941,8 @@ object Similarity {
     * id join (never a corpus scan). Cosine is
     * normalization-invariant, so the rerank scores raw vectors while
     * the index was built on residuals — same space (sim13's rule).
-    * The candidate stage runs UNORDERED (topkPerQuery's composed-
-    * consumer contract); only the final rerank pays a presentation
-    * sort.
+    * The candidate stage runs unordered (`topIds`); only the final
+    * rerank pays a presentation sort.
     *
     * Sizing guidance (round-14 clustered-corpus measurements,
     * BASELINE "ANN recall on clustered corpora"): size `refine` to
@@ -998,28 +972,10 @@ object Similarity {
     val cents = kmeans(all, nlist, coarseIters)
     if (cents.n == 0) return emptyAnnResult(all, k, "cos")
     val (cellIds, pqCents, codes) = ivfPqBuild(all, cents, m, ks, pqIters)
-    val cand = ivfPqSearch(
-      all, cents, cellIds, pqCents, codes, cents.dim / m,
-      k * refine, nQueries, nprobe, m, ordered = false
-    ).select(col("query_id"), col("neighbor_id").as("vec_id"))
-    val base = all.select(col("vec_id"), col("v"), col("nrm"))
-    val queries = base
-      .filter(col("vec_id") < nQueries)
-      .select(
-        col("vec_id").as("query_id"),
-        col("v").as("qv"),
-        col("nrm").as("qnrm")
-      )
-    topkPerQuery(
-      cand
-        .join(base, Seq("vec_id")) // narrow id join: candidates only
-        .join(broadcast(queries), Seq("query_id"))
-        .withColumn(
-          "cos_raw",
-          vectors.dot(col("qv"), col("v")) / (col("qnrm") * col("nrm"))
-        ),
-      k
-    )
+    val cand = topIds(
+      ivfPqScores(all, cents, cellIds, pqCents, codes, m, cents.dim / m, nQueries, nprobe),
+      k * refine)
+    rerank(all, cand, k, nQueries)
   }
 
   /** IVF-PQ write_index analog, completing index persistence across
@@ -1052,7 +1008,8 @@ object Similarity {
   /** IVF-PQ ANN over a PERSISTED index: training is deterministic,
     * so index-then-search equals train-then-search row for row
     * (spec-asserted, the ivfAnnFromIndex contract). The PQ geometry is
-    * the persisted codebooks' (see persistedPq). */
+    * the persisted codebooks' (see persistedPq); the call collects the
+    * two codebook tables and runs no other Spark job. */
   def ivfPqAnnFromIndex(
       lake: Lake,
       dir: String,
@@ -1061,22 +1018,20 @@ object Similarity {
       nprobe: Int = 3
   ): DataFrame = {
     val spark = lake.spark
-    val all = vecs(lake).localCheckpoint()
-    val headDim = all.select(size(col("v"))).head(1)
-    if (headDim.isEmpty) return emptyAnnResult(all, k, "adc_ip")
-    val (codebooks, m, sd) = persistedPq(spark, dir, headDim.head.getInt(0))
-    ivfPqSearch(
-      all,
-      Codebook.collect(spark.read.parquet(s"$dir/centroids")),
-      spark.read.parquet(s"$dir/cells"),
-      codebooks,
-      spark.read.parquet(s"$dir/codes"),
-      sd,
-      k,
-      nQueries,
-      nprobe,
-      m
-    )
+    val all = vecs(lake)
+    persistedPq(dir, all) match {
+      case None => emptyAnnResult(all, k, "adc_ip")
+      case Some((checked, codebooks, m, sd)) =>
+        topkPerQuery(
+          ivfPqScores(
+            checked,
+            Codebook.collect(indexTable(spark, dir, "centroids")),
+            indexTable(spark, dir, "cells"),
+            codebooks,
+            indexTable(spark, dir, "codes"),
+            m, sd, nQueries, nprobe),
+          k, "adc_ip")
+    }
   }
 
   /** A persisted index's PQ codebooks with their geometry (m subspaces
@@ -1084,18 +1039,21 @@ object Similarity {
     * centroid width) — never from a caller guess: slicing query
     * subvectors with an m that differs from the one the index was
     * written with would silently score against the wrong codebooks
-    * and return wrong neighbors (advisor round-9). The one consistency
-    * requirement, m·sd == the corpus dim `dim`, is checked and named. */
-  private def persistedPq(spark: SparkSession, dir: String, dim: Int): (Codebook, Int, Int) = {
-    val codebooks = Codebook.collect(spark.read.parquet(s"$dir/codebooks"))
+    * and return wrong neighbors. The one consistency requirement,
+    * m·sd == the query's dimension, is checked in the search plan on
+    * the query rows of `all` (returned with `v` checked): a mismatch
+    * fails the search with an error naming m, sd and that dimension.
+    * None when the table holds no codebook rows: such an index comes
+    * from an empty corpus and holds no vectors. */
+  private def persistedPq(dir: String, all: DataFrame): Option[(DataFrame, Codebook, Int, Int)] = {
+    val codebooks = Codebook.collect(indexTable(all.sparkSession, dir, "codebooks"))
     val m = codebooks.ids.count(_.nonEmpty)
-    require(m > 0, s"persisted PQ index at $dir has an empty codebooks table")
     val sd = codebooks.width
-    require(
-      m * sd == dim,
-      s"persisted codebooks (m=$m, sd=$sd) do not match corpus dim $dim"
-    )
-    (codebooks, m, sd)
+    val dim = size(col("v"))
+    val checked = all.withColumn("v", when(dim =!= m * sd, raise_error(concat(
+      lit(s"persisted codebooks (m=$m, sd=$sd) do not match corpus dim "), dim.cast("string")))
+    ).otherwise(col("v")))
+    Option.when(m > 0)((checked, codebooks, m, sd))
   }
 
   /** PQ training shared by sim07PqAnn, sim13/sim14, and the
@@ -1140,14 +1098,7 @@ object Similarity {
     }
     require(train.dim % m == 0, s"dim ${train.dim} not divisible by m=$m")
     val sd = train.dim / m
-    val subv = all
-      .withColumn("sub_id", explode(sequence(lit(0), lit(m - 1))))
-      .select(
-        col("vec_id"),
-        col("sub_id"),
-        slice(col("v"), col("sub_id") * sd + 1, lit(sd)).as("sv")
-      )
-      .localCheckpoint()
+    val subv = subvectors(all, m, sd).localCheckpoint()
     val book = new Codebook(
       (0 until m).map { sub =>
         LocalKernels.lloyd(
@@ -1172,6 +1123,16 @@ object Similarity {
     (subv, book, codes)
   }
 
+  /** The PQ subspace split of a (key, vector) frame: one (key, sub_id,
+    * sv) row per sub_id < m, sv the sub_id-th sd-dim slice of the
+    * vector. */
+  private def subvectors(frame: DataFrame, m: Int, sd: Int): DataFrame = {
+    val Array(key, v) = frame.columns
+    frame
+      .withColumn("sub_id", explode(sequence(lit(0), lit(m - 1))))
+      .select(col(key), col("sub_id"), slice(col(v), col("sub_id") * sd + 1, lit(sd)).as("sv"))
+  }
+
   /** The ADC lookup table: for each (query_id, sub_id, qsv) row, one
     * (query_id, sub_id, cluster, pdot) row per codebook entry of that
     * subspace, pdot = VectorDot(qsv, centroid), scored map-side
@@ -1188,25 +1149,27 @@ object Similarity {
         col("d.cluster").as("cluster"),
         col("d.dot").as("pdot"))
 
-  /** ADC search tail shared by the trained and persisted-index PQ
-    * paths: per-query partial-dot lookup table against the
-    * codebooks, summed along each code word, heap top-k. */
-  private def pqSearch(
-      queriesSub: DataFrame,
+  /** ADC scores shared by the trained and persisted-index PQ paths:
+    * the vec_id < nQueries rows of the (vec_id, sub_id, sv) split are
+    * the queries, whose per-query partial-dot lookup table against the
+    * codebooks is summed along each code word — (query_id, vec_id,
+    * cos_raw) for every coded vector but the query. */
+  private def pqScores(
+      subv: DataFrame,
+      nQueries: Int,
       cents: Codebook,
-      codes: DataFrame,
-      k: Int
+      codes: DataFrame
   ): DataFrame = {
-    val lut = adcTable(queriesSub, cents)
-    topkPerQuery(
-      codes
-        .join(broadcast(lut), Seq("sub_id", "cluster"))
-        .filter(col("vec_id") =!= col("query_id"))
-        .groupBy("query_id", "vec_id")
-        .agg(sum("pdot").as("cos_raw")),
-      k,
-      scoreName = "adc_score"
-    )
+    val lut = adcTable(
+      subv
+        .filter(col("vec_id") < nQueries)
+        .select(col("vec_id").as("query_id"), col("sub_id"), col("sv").as("qsv")),
+      cents)
+    codes
+      .join(broadcast(lut), Seq("sub_id", "cluster"))
+      .filter(col("vec_id") =!= col("query_id"))
+      .groupBy("query_id", "vec_id")
+      .agg(sum("pdot").as("cos_raw"))
   }
 
   /** PQ write_index analog, completing index persistence across the
@@ -1237,7 +1200,9 @@ object Similarity {
     * their subvectors from the embeddings table (the index stores
     * CODES, not vectors) at the persisted codebooks' geometry (see
     * persistedPq); scoring is the same broadcast-LUT ADC scan over the
-    * codes table. An empty corpus gives the empty ANN result. */
+    * codes table. The call collects the codebooks table and runs no
+    * other Spark job. An index with no codebook rows gives the empty
+    * ANN result. */
   def pqAnnFromIndex(
       lake: Lake,
       dir: String,
@@ -1247,18 +1212,13 @@ object Similarity {
     val spark = lake.spark
     val all = vecs(lake)
       .select(col("vec_id"), vectors.l2Normalize(col("v")).as("v"))
-    val headDim = all.select(size(col("v"))).head(1)
-    if (headDim.isEmpty) return emptyAnnResult(all, k, "adc_score")
-    val (cents, m, sd) = persistedPq(spark, dir, headDim.head.getInt(0))
-    val queriesSub = all
-      .filter(col("vec_id") < nQueries)
-      .withColumn("sub_id", explode(sequence(lit(0), lit(m - 1))))
-      .select(
-        col("vec_id").as("query_id"),
-        col("sub_id"),
-        slice(col("v"), col("sub_id") * sd + 1, lit(sd)).as("qsv")
-      )
-    pqSearch(queriesSub, cents, spark.read.parquet(s"$dir/codes"), k)
+    persistedPq(dir, all) match {
+      case None => emptyAnnResult(all, k, "adc_score")
+      case Some((checked, cents, m, sd)) =>
+        topkPerQuery(
+          pqScores(subvectors(checked, m, sd), nQueries, cents, indexTable(spark, dir, "codes")),
+          k, "adc_score")
+    }
   }
 
   /** IVF-style ANN: the label centroids are the coarse quantizer; each
@@ -1285,31 +1245,18 @@ object Similarity {
       nprobe: Int = 3
   ): DataFrame = {
     val all = vecs(lake)
-    val centroids = labelCentroids(all)
-    val queries = all
-      .filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"), col("nrm").as("qnrm"))
     // Rank cells per query: |queries| x nlist rows — provably bounded,
     // both sides broadcastable.
     val cellRank = Window
       .partitionBy("query_id")
       .orderBy(col("ccos").desc, col("label"))
-    val probed = queries
-      .crossJoin(broadcast(centroids))
+    val probed = queries(all, nQueries)
+      .crossJoin(broadcast(meanCentroids(all, "label")))
       .withColumn("ccos", vectors.cosine(col("qv"), col("centroid")))
       .withColumn("crank", row_number().over(cellRank))
       .filter(col("crank") <= nprobe)
       .select("query_id", "qv", "qnrm", "label")
-    topkPerQuery(
-      all
-        .join(broadcast(probed), Seq("label"))
-        .filter(col("vec_id") =!= col("query_id"))
-        .withColumn(
-          "cos_raw",
-          vectors.dot(col("qv"), col("v")) / (col("qnrm") * col("nrm"))
-        ),
-      k
-    )
+    topkPerQuery(probedCandidates(all, probed, "label").withColumn("cos_raw", cosRaw), k)
   }
 
   /** sim08: MUTUAL k-NN graph over the whole embedding corpus — the
@@ -1337,16 +1284,15 @@ object Similarity {
     * quadratic kernel or cache it): orienting each directed edge to
     * (min, max) and counting per undirected pair sees 2 exactly when
     * both directions survived — one map-side-combinable groupBy on
-    * an n*k-row frame. At 100 TB the exact kernel swaps for IVF
-    * cell-restricted candidates (sim11) with identical downstream
-    * top-k/mutuality machinery. */
+    * an n*k-row frame (`mutualKnn`). At 100 TB the exact kernel swaps
+    * for IVF cell-restricted candidates (sim11) with the same
+    * `mutualKnn` downstream. */
   def sim08KnnGraph(lake: Lake, k: Int = 5, chunks: Int = 32): DataFrame = {
     val all = vecs(lake)
-    val srcs = all
-      .select(col("vec_id").as("src"), col("v").as("av"), col("nrm").as("anrm"))
-      .withColumn("chunk", pmod(col("src"), lit(chunks)).cast("int"))
+    val srcs = asQueries(all)
+      .withColumn("chunk", pmod(col("query_id"), lit(chunks)).cast("int"))
     val dsts = all
-      .select(col("vec_id").as("dst"), col("v").as("bv"), col("nrm").as("bnrm"))
+      .select(col("vec_id"), col("v"), col("nrm"))
       .withColumn("chunk", explode(sequence(lit(0), lit(chunks - 1))))
     // Build side = srcs (round 13, the sim11 lesson): each chunk key
     // holds n/chunks src rows but ALL n replicated dst rows — the
@@ -1354,32 +1300,26 @@ object Similarity {
     // relation, which is the memory wall at volume; the partitioned
     // src frame builds in n/chunks-row pieces and the replicated
     // stream probes through without materializing.
-    val knn = srcs
-      .hint("shuffle_hash")
-      .join(dsts, Seq("chunk"))
-      .filter(col("src") =!= col("dst"))
-      .withColumn(
-        "cos_raw",
-        vectors.dot(col("av"), col("bv")) / (col("anrm") * col("bnrm"))
-      )
-      .groupBy("src")
-      .agg(graft.plans.TopKByScore(col("cos_raw"), col("dst"), k).as("nb"))
-      .select(col("src"), explode(col("nb")).as("nbr"))
-      .select(col("src"), col("nbr.id").as("dst"), col("nbr.score").as("cos_raw"))
-    knn
-      .select(
-        least(col("src"), col("dst")).as("src"),
-        greatest(col("src"), col("dst")).as("dst"),
-        col("cos_raw")
-      )
-      .groupBy("src", "dst")
-      // cos is symmetric, so max == min across the (at most) two
-      // directed copies; count == 2 is the mutuality test.
-      .agg(count(lit(1)).as("deg"), round(max("cos_raw"), 4).as("cos"))
+    mutualKnn(srcs.hint("shuffle_hash").join(dsts, Seq("chunk")), k)
+  }
+
+  /** The mutual k-NN fold of sim08 and sim11 over candidate pairs
+    * (query_id, qv, qnrm) × (vec_id, v, nrm): each source keeps its k
+    * best neighbours by exact cosine in `topkPerQuery`'s heap (so the
+    * exchange carries n·k pairs), each directed edge is oriented to
+    * (min, max), and an undirected pair is an edge (src, dst, cos)
+    * exactly when both directions survived (count == 2). Cosine is
+    * symmetric bit for bit, so both copies carry the same 4dp score. */
+  private def mutualKnn(pairs: DataFrame, k: Int): DataFrame =
+    topkPerQuery(
+      pairs.filter(col("vec_id") =!= col("query_id")).withColumn("cos_raw", cosRaw),
+      k, ordered = false)
+      .select(col("query_id").as("src"), col("neighbor_id").as("dst"), col("cos"))
+      .groupBy(least(col("src"), col("dst")).as("src"), greatest(col("src"), col("dst")).as("dst"))
+      .agg(count(lit(1)).as("deg"), max("cos").as("cos"))
       .filter(col("deg") === 2)
       .select("src", "dst", "cos")
       .orderBy("src", "dst")
-  }
 
   /** sim11: ANN-backed mutual k-NN graph — sim08's semantics with the
     * O(n²) kernel replaced by IVF candidate generation (the scale
@@ -1389,8 +1329,7 @@ object Similarity {
     * nearest coarse cells (sim05's label-centroid quantizer), the
     * candidate set is the vectors whose HOME cell is probed, exact
     * cosine + per-src top-k run within candidates only, and the
-    * mutuality fold (orient to (min, max), COUNT == 2) is sim08's
-    * verbatim.
+    * mutuality fold is sim08's `mutualKnn`.
     *
     * The quantizer is the TRAINED k-means one (sim06), not sim05's
     * label cells: the documents' class labels have no cosine locality
@@ -1404,7 +1343,7 @@ object Similarity {
     * total kernel work is nprobe/nlist · n² instead of n² (with
     * nlist grown as √n the kernel is ~n^1.5). Probe ranking is
     * |corpus| × nlist scorings against the broadcast codebook, map-side;
-    * top-k stays a partial WindowGroupLimit so the shuffle carries
+    * top-k is `mutualKnn`'s bounded heap, so the shuffle carries
     * n·k rows. Recall vs the exact sim08 graph is spec-asserted
     * (eval02's machinery); sim08 remains the exact oracle kernel.
     *
@@ -1494,43 +1433,15 @@ object Similarity {
     ).toInt))
     val cells = scored
       .filter(col("crank") === 1)
-      .select(
-        col("vec_id").as("dst"), col("cluster"),
-        col("v").as("bv"), col("nrm").as("bnrm"),
+      .select(col("vec_id"), col("cluster"), col("v"), col("nrm"),
         pmod(col("vec_id"), lit(saltsEff)).cast("int").as("salt"))
-    val probed = scored
-      .select(col("vec_id").as("src"), col("cluster"),
-        col("v").as("av"), col("nrm").as("anrm"))
+    val probed = asQueries(scored, "cluster")
       .withColumn("salt", explode(sequence(lit(0), lit(saltsEff - 1))))
-    // top-k per src via the native bounded-heap aggregate (sim08's
-    // rewiring rationale — no candidate-stream sort, n·k exchange).
     // Build side = cells (round 13): the home frame is exactly n rows
     // and (cluster, salt)-partitioned, while the probe frame is the
     // replicated nprobe·n·salts stream — the round-12 hint built the
     // REPLICATED side and hit the memory wall above.
-    val knn = cells
-      .hint("shuffle_hash")
-      .join(probed, Seq("cluster", "salt"))
-      .filter(col("src") =!= col("dst"))
-      .withColumn(
-        "cos_raw",
-        vectors.dot(col("av"), col("bv")) / (col("anrm") * col("bnrm"))
-      )
-      .groupBy("src")
-      .agg(graft.plans.TopKByScore(col("cos_raw"), col("dst"), k).as("nb"))
-      .select(col("src"), explode(col("nb")).as("nbr"))
-      .select(col("src"), col("nbr.id").as("dst"), col("nbr.score").as("cos_raw"))
-    knn
-      .select(
-        least(col("src"), col("dst")).as("src"),
-        greatest(col("src"), col("dst")).as("dst"),
-        col("cos_raw")
-      )
-      .groupBy("src", "dst")
-      .agg(count(lit(1)).as("deg"), round(max("cos_raw"), 4).as("cos"))
-      .filter(col("deg") === 2)
-      .select("src", "dst", "cos")
-      .orderBy("src", "dst")
+    mutualKnn(cells.hint("shuffle_hash").join(probed, Seq("cluster", "salt")), k)
   }
 
   /** sim09: PREFIX-DIMENSION prefilter + exact rerank — the
@@ -1546,8 +1457,8 @@ object Similarity {
     * the prefix columns are a separate narrow parquet projection, so
     * the corpus-wide pass touches a quarter of the data, and full
     * 64-dim vectors are fetched for only |queries| × overfetch rows
-    * through the id equi-join (never carried through the prefilter
-    * window). Recall is governed by overfetch/k and how much mass the
+    * through the rerank's id equi-join (never carried through the
+    * stage-1 heap). Recall is governed by overfetch/k and how much mass the
     * leading dims carry — exact on the head by construction when the
     * true neighbor's prefix rank is within overfetch; eval02's
     * recall harness applies unchanged. */
@@ -1560,41 +1471,12 @@ object Similarity {
   ): DataFrame = {
     val all = vecs(lake)
     val pre = all
-      .select(col("vec_id"), slice(col("v"), 1, prefixDims).as("vp"))
-      .withColumn("pnrm", vectors.norm(col("vp")))
-    val qPre = pre
-      .filter(col("vec_id") < nQueries)
-      .select(
-        col("vec_id").as("query_id"),
-        col("vp").as("qvp"),
-        col("pnrm").as("qpnrm")
-      )
+      .select(col("vec_id"), slice(col("v"), 1, prefixDims).as("v"))
+      .withColumn("nrm", vectors.norm(col("v")))
     // stage-1 prefilter: per-query top-`overfetch` on prefix cosine —
     // the heap aggregate again; candidate ids only, vectors never
     // carried
-    val candidates = pre
-      .join(broadcast(qPre), col("vec_id") =!= col("query_id"))
-      .withColumn(
-        "pcos",
-        vectors.dot(col("qvp"), col("vp")) / (col("qpnrm") * col("pnrm"))
-      )
-      .groupBy("query_id")
-      .agg(graft.plans.TopKByScore(col("pcos"), col("vec_id"), overfetch).as("nb"))
-      .select(col("query_id"), explode(col("nb")).as("nbr"))
-      .select(col("query_id"), col("nbr.id").as("vec_id"))
-    val qFull = all
-      .filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"), col("nrm").as("qnrm"))
-    topkPerQuery(
-      candidates
-        .join(all.select(col("vec_id"), col("v"), col("nrm")), Seq("vec_id"))
-        .join(broadcast(qFull), Seq("query_id"))
-        .withColumn(
-          "cos_raw",
-          vectors.dot(col("qv"), col("v")) / (col("qnrm") * col("nrm"))
-        ),
-      k
-    )
+    rerank(all, topIds(scoreAll(pre, queries(pre, nQueries)), overfetch), k, nQueries)
   }
 
   /** sim10: SCALAR-QUANTIZATION ANN — FAISS's IndexScalarQuantizer
@@ -1664,33 +1546,20 @@ object Similarity {
       k: Int,
       nQueries: Int
   ): DataFrame = {
-    val all = vecs(lake)
     val enc = codes
       .crossJoin(broadcast(stats))
       .withColumn("rng", zip_with(col("hi"), col("lo"), (h, l) => h - l))
       .withColumn(
-        "dec",
+        "v",
         zip_with(
           zip_with(col("code"), col("rng"), (c, r) => c / 255.0 * r),
           col("lo"),
           (a, l) => a + l
         )
       )
-      .select(col("vec_id"), col("dec"))
-      .withColumn("dnrm", vectors.norm(col("dec")))
-    val queries = all
-      .filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"), col("nrm").as("qnrm"))
-    topkPerQuery(
-      enc
-        .join(broadcast(queries), col("vec_id") =!= col("query_id"))
-        .withColumn(
-          "cos_raw",
-          vectors.dot(col("qv"), col("dec")) / (col("qnrm") * col("dnrm"))
-        ),
-      k,
-      scoreName = "cos_sq"
-    )
+      .select(col("vec_id"), col("v"))
+      .withColumn("nrm", vectors.norm(col("v")))
+    topkPerQuery(scoreAll(enc, queries(vecs(lake), nQueries)), k, scoreName = "cos_sq")
   }
 
   /** SQ8 write_index analog: `params/` (one row of per-dimension lo
@@ -1715,8 +1584,8 @@ object Similarity {
       nQueries: Int = 10
   ): DataFrame = {
     val spark = lake.spark
-    val stats = spark.read.parquet(s"$dir/params")
-    val codes = spark.read.parquet(s"$dir/codes")
+    val stats = indexTable(spark, dir, "params")
+    val codes = indexTable(spark, dir, "codes")
     sqSearch(lake, stats, codes, k, nQueries)
   }
 
@@ -1780,18 +1649,7 @@ object Similarity {
     // the cone reference point: each cell's member-mean centroid —
     // one aggregation to k rows, checkpointed for its two consumers
     // (the bound pass and the query grid)
-    val cellCents = assigned
-      .select(col("cluster"), posexplode(col("v")).as(Seq("pos", "x")))
-      .groupBy("cluster", "pos")
-      .agg(avg("x").as("c"))
-      .groupBy("cluster")
-      .agg(
-        transform(
-          array_sort(collect_list(struct(col("pos"), col("c")))),
-          s => s.getField("c")
-        ).as("centroid")
-      )
-      .localCheckpoint()
+    val cellCents = meanCentroids(assigned, "cluster").localCheckpoint()
     // per-cell cone aperture: min member cosine to the cell mean.
     // The ccos attach is a broadcast hash join (map-only); the
     // aggregation shuffles only k partial rows.
@@ -1800,9 +1658,6 @@ object Similarity {
       .withColumn("ccos", vectors.cosine(col("v"), col("centroid")))
       .groupBy("cluster")
       .agg(min("ccos").as("min_ccos"))
-    val queries = all
-      .filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"), col("nrm").as("qnrm"))
     // nQueries x ncells grid, pruned by the cone bound — broadcastable.
     //
     // The bound in COSINE space, not angle space: pruning is sound iff
@@ -1830,18 +1685,13 @@ object Similarity {
         col("min_ccos") * lit(rp) -
         sqrt(lit(1.0) - col("min_ccos") * col("min_ccos")) * lit(sinRp) -
         lit(1e-6)
-    val qcells = queries
+    val qcells = queries(all, nQueries)
       .crossJoin(broadcast(cellCents.join(bounds, "cluster")))
       .withColumn("qccos", vectors.cosine(col("qv"), col("centroid")))
       .filter(!prune)
       .select(col("cluster"), col("query_id"), col("qv"), col("qnrm"))
-    assigned
-      .join(broadcast(qcells), Seq("cluster"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn(
-        "cos_raw",
-        vectors.dot(col("qv"), col("v")) / (col("qnrm") * col("nrm"))
-      )
+    probedCandidates(assigned, qcells, "cluster")
+      .withColumn("cos_raw", cosRaw)
       // compare on the ROUNDED value (sim02's discipline): the
       // admission test and the emitted column are then the same
       // number in both engines, so a borderline pair can't be

@@ -19,7 +19,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * must give the same value, compared bit for bit, or fail with the
   * same error class. Also pins the Spark job count of one sim14 and
   * one dedup11 run, so centroids travelling through Spark again fail
-  * here. */
+  * here, and the jobs each persisted-index reader call runs. */
 class CodebookSpec extends AnyFunSuite {
   import TestSpark._
   import LocalKernelsSpec._
@@ -236,5 +236,25 @@ class CodebookSpec extends AnyFunSuite {
     info(s"jobs: sim14 $sim14, dedup11 $dedup11")
     assert(sim14 <= 12, s"sim14 ran $sim14 Spark jobs")
     assert(dedup11 <= 12, s"dedup11 ran $dedup11 Spark jobs")
+  }
+
+  test("persisted-index readers run no corpus job before the search") {
+    // A reader call collects the codebooks it searches with and nothing
+    // else: the IVF centroids, the PQ codebooks, both for IVF-PQ, and
+    // no table at all for SQ8, whose params join the plan. A corpus
+    // checkpoint or dimension probe shows up here as an extra job.
+    val lake = Lake(spark, sfDir)
+    val dir = java.nio.file.Files.createTempDirectory("reader_jobs").toString
+    Similarity.writeIvfIndex(lake, s"$dir/ivf")
+    Similarity.writePqIndex(lake, s"$dir/pq")
+    Similarity.writeIvfPqIndex(lake, s"$dir/ivfpq")
+    Similarity.writeSqIndex(lake, s"$dir/sq")
+    val got = Map(
+      "ivf" -> jobs(Similarity.ivfAnnFromIndex(lake, s"$dir/ivf")),
+      "pq" -> jobs(Similarity.pqAnnFromIndex(lake, s"$dir/pq")),
+      "ivfpq" -> jobs(Similarity.ivfPqAnnFromIndex(lake, s"$dir/ivfpq")),
+      "sq" -> jobs(Similarity.sqAnnFromIndex(lake, s"$dir/sq"))
+    )
+    assert(got == Map("ivf" -> 1, "pq" -> 1, "ivfpq" -> 2, "sq" -> 0), got)
   }
 }

@@ -708,6 +708,29 @@ class DedupSimilaritySpec extends AnyFunSuite {
     assert(fromIndex.toSeq == inline.toSeq)
   }
 
+  test("persisted PQ indexes: a corpus of another dimension fails the search, naming it") {
+    // dim-64 indexes written from the test lake, searched against a lake
+    // whose vectors keep only their first 32 dims: the check runs in
+    // the search plan on the query rows, and names m, sd and the dim
+    import org.apache.spark.sql.functions.{col, slice}
+    val dir = java.nio.file.Files.createTempDirectory("pq_dim").toString
+    Similarity.writePqIndex(lake, s"$dir/pq")
+    Similarity.writeIvfPqIndex(lake, s"$dir/ivfpq")
+    lake.embeddings.withColumn("embedding", slice(col("embedding"), 1, 32))
+      .write.parquet(s"$dir/lake/embeddings.parquet")
+    val narrow = Lake(spark, s"$dir/lake")
+    for (search <- Seq(
+      () => Similarity.pqAnnFromIndex(narrow, s"$dir/pq").collect(),
+      () => Similarity.ivfPqAnnFromIndex(narrow, s"$dir/ivfpq").collect()
+    )) {
+      val e = intercept[Exception](search())
+      val messages = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(_.getMessage).mkString("\n")
+      assert(messages.contains("persisted codebooks (m=8, sd=8) do not match corpus dim 32"),
+        messages)
+    }
+  }
+
   test("persisted IVF-PQ index: index-then-search equals train-then-search exactly") {
     val dir = java.nio.file.Files.createTempDirectory("ivfpq_index").toString
     Similarity.writeIvfPqIndex(lake, dir)
@@ -1028,6 +1051,24 @@ class DedupSimilaritySpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
     val bfRows = bf.map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
     assert(full.sameElements(bfRows), "full-ring refine must equal brute force")
+  }
+
+  test("eval01: a lake with predicted pairs but no gold pair reads a NULL recall") {
+    // two near-duplicate documents: dedup03 predicts the pair, but the
+    // extra word changes the bag fingerprint, so n_gold = 0
+    import spark.implicits._
+    val text = (1 to 40).map(i => s"w$i").mkString(" ")
+    val dir = java.nio.file.Files.createTempDirectory("eval01_nogold").toString
+    Seq((1L, text), (2L, s"$text extra"))
+      .map { case (id, t) => (id, t, "en", "web", t.length.toLong) }
+      .toDF("doc_id", "text", "lang", "source", "n_chars")
+      .write.parquet(s"$dir/documents.parquet")
+    val rows = Evaluation.eval01LinkageMetrics(Lake(spark, dir)).collect()
+    assert(rows.length == 1, rows.toSeq)
+    val r = rows.head
+    assert(r.getAs[Long]("n_pred") == 1L && r.getAs[Long]("n_gold") == 0L, r)
+    assert(r.isNullAt(r.fieldIndex("recall")), r)
+    assert(r.getAs[Double]("f1") == 0.0, r)
   }
 
   test("ANN recall eval: full probe scores 1.0 everywhere; partial probe is internally consistent") {

@@ -91,13 +91,28 @@ class EmptyLakeSpec extends AnyFunSuite {
   assertEmptyOk("sim07_pq_ann", Similarity.sim07PqAnn(_))
   assertEmptyOk("sim13_pq_refine", Similarity.sim13PqRefine(_))
   assertEmptyOk("sim14_ivf_pq", Similarity.sim14IvfPq(_))
-  // the persisted-PQ reader: an index written from an empty lake reads
-  // back as the empty ANN result, as the IVF-PQ reader's does
-  assertEmptyOk("pqAnnFromIndex", { lake =>
-    val dir = java.nio.file.Files.createTempDirectory("pq_index_empty").toString
-    Similarity.writePqIndex(lake, dir)
-    Similarity.pqAnnFromIndex(lake, dir)
-  })
+  // the shared query side, exact rerank and exhaustive kernel on zero
+  // vectors, and sim16's base/delta assignment of nothing
+  assertEmptyOk("sim03_lsh_ann", Similarity.sim03LshAnn(_))
+  assertEmptyOk("sim09_prefix_rerank", Similarity.sim09PrefixRerank(_))
+  assertEmptyOk("sim10_sq_ann", Similarity.sim10SqAnn(_))
+  assertEmptyOk("sim15_ivfpq_refine", Similarity.sim15IvfPqRefine(_))
+  assertEmptyOk("sim16_ivf_append", Similarity.sim16IvfAppend(_))
+  // the persisted-index readers: an index written from an empty lake
+  // reads back as the empty ANN result (a PQ codebooks table with no
+  // rows holds no vectors)
+  private def fromEmptyIndex(name: String)(write: (Lake, String) => Unit)(
+      read: (Lake, String) => DataFrame): Unit =
+    assertEmptyOk(name, { lake =>
+      val dir = java.nio.file.Files.createTempDirectory(s"${name}_empty").toString
+      write(lake, dir)
+      read(lake, dir)
+    })
+  fromEmptyIndex("pqAnnFromIndex")(Similarity.writePqIndex(_, _))(Similarity.pqAnnFromIndex(_, _))
+  fromEmptyIndex("ivfAnnFromIndex")(Similarity.writeIvfIndex(_, _))(Similarity.ivfAnnFromIndex(_, _))
+  fromEmptyIndex("ivfPqAnnFromIndex")(Similarity.writeIvfPqIndex(_, _))(
+    Similarity.ivfPqAnnFromIndex(_, _))
+  fromEmptyIndex("sqAnnFromIndex")(Similarity.writeSqIndex(_, _))(Similarity.sqAnnFromIndex(_, _))
   assertEmptyOk("sim08_knn_graph", Similarity.sim08KnnGraph(_))
   assertEmptyOk("sim11_knn_graph_ann", Similarity.sim11KnnGraphAnn(_))
   assertEmptyOk("txt12_bpe_tokens", TextAnalysis.txt12BpeTokens)

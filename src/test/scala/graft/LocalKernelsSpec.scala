@@ -297,8 +297,9 @@ object LocalKernelsSpec {
         col("w.qcdot").as("qcdot"))
   }
 
-  /** ivfPqSearch's probe ranking: a row_number window over the
-    * queries x centroids cross join; same columns as foldTopCells. */
+  /** The IVF-PQ probe ranking `probeCells` replaced: a row_number
+    * window over the queries x centroids cross join; same columns as
+    * foldTopCells. */
   def windowTopCells(all: DataFrame, cents: DataFrame, n: Int): DataFrame =
     all
       .crossJoin(broadcast(cents))

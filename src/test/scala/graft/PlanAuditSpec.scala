@@ -800,6 +800,46 @@ class PlanAuditSpec extends AnyFunSuite {
     }
   }
 
+  test("sim03/09/13/15: the rerank is one id equi-join into the corpus under a broadcast query side") {
+    // The shared rerank: candidate ids meet the corpus (the side that
+    // carries nrm) in exactly one equi-join on vec_id; above it the
+    // query side attaches by query_id as a BroadcastHashJoin, and no
+    // BroadcastNestedLoopJoin sits between that join and the root. A
+    // candidate stage that kept its presentation sort shows up as a
+    // second global sort in sim13/sim15.
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.execution.joins.{
+      BaseJoinExec, BroadcastHashJoinExec, BroadcastNestedLoopJoinExec}
+    def keys(j: BaseJoinExec) = j.leftKeys.collect { case a: Attribute => a.name }
+    def pathsTo(p: SparkPlan, target: SparkPlan): Seq[List[SparkPlan]] =
+      if (p eq target) Seq(List(p))
+      else children(p).flatMap(pathsTo(_, target)).map(p :: _)
+    for ((name, df) <- Seq(
+      "sim03" -> Similarity.sim03LshAnn(lake),
+      "sim09" -> Similarity.sim09PrefixRerank(lake),
+      "sim13" -> Similarity.sim13PqRefine(lake),
+      "sim15" -> Similarity.sim15IvfPqRefine(lake)
+    )) {
+      df.collect()
+      val root = df.queryExecution.executedPlan
+      val corpusJoins = all(root).collect {
+        case j: BaseJoinExec if keys(j) == Seq("vec_id") && j.output.exists(_.name == "nrm") => j
+      }
+      assert(corpusJoins.size == 1, s"$name: ${corpusJoins.size} candidate-corpus joins:\n$root")
+      val above = pathsTo(root, corpusJoins.head).flatten
+      assert(above.exists {
+        case j: BroadcastHashJoinExec => keys(j) == Seq("query_id")
+        case _                        => false
+      }, s"$name: the query side is not a broadcast hash join:\n$root")
+      assert(!above.exists(_.isInstanceOf[BroadcastNestedLoopJoinExec]),
+        s"$name: a BroadcastNestedLoopJoin in the rerank:\n$root")
+      if (name == "sim13" || name == "sim15") {
+        val sorts = all(root).collect { case s: SortExec if s.global => s }
+        assert(sorts.size == 1, s"$name: ${sorts.size} global sorts:\n$root")
+      }
+    }
+  }
+
   test("upsert: a local batch broadcasts into a left-anti join; the base is scanned once, unshuffled") {
     // A commit's batch is small: the base must stream through one
     // left-anti BroadcastHashJoin, with no Window and no hash Exchange

@@ -1,13 +1,17 @@
 #!/usr/bin/env python3
-"""Count code lines in the Scala sources under a directory.
+"""Count code lines in Scala sources.
 
-Usage: python3 tools/loc.py [dir ...]     (default: src/main)
+Usage: python3 tools/loc.py [path ...]     (default: src/main)
 
-A code line is any line of a `.scala` file that is not blank, not a
-`//` line and not inside a `/* ... */` block (scaladoc included). A
-block opens on a line whose text starts with `/*` and closes on the
-first line containing `*/`. Prints one count per directory, then the
-total when more than one directory is given.
+A path is a directory (every `.scala` file under it counts) or a
+single file (it counts as itself, whatever its extension). A path that
+does not exist is an error: the script names it on stderr and exits 1.
+
+A code line is any line that is not blank, not a `//` line and not
+inside a `/* ... */` block (scaladoc included). A block opens on a line
+whose text starts with `/*` and closes on the first line containing
+`*/`. Prints one count per path, then the total when more than one
+path is given.
 """
 import os
 import sys
@@ -32,6 +36,8 @@ def code_lines(path):
 
 
 def count(root):
+    if os.path.isfile(root):
+        return code_lines(root)
     total = 0
     for d, _, files in os.walk(root):
         total += sum(code_lines(os.path.join(d, f))
@@ -41,6 +47,9 @@ def count(root):
 
 def main():
     roots = sys.argv[1:] or ["src/main"]
+    missing = [r for r in roots if not os.path.exists(r)]
+    if missing:
+        sys.exit("loc.py: no such file or directory: " + ", ".join(missing))
     counts = [count(r) for r in roots]
     for r, c in zip(roots, counts):
         print(f"{c}\t{r}")
