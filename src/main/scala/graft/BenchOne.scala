@@ -2,6 +2,7 @@ package graft
 
 import java.util.concurrent.atomic.AtomicLong
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.graftbridge.Bridge
@@ -11,12 +12,15 @@ import org.apache.spark.sql.graftbridge.Bridge
   * (its warm-up, noop sink, blocking cache release after each sweep,
   * min of N sweeps).
   *
-  * Each line also carries the last sweep's jobs, stages, tasks and
-  * task run time. Every Spark job pays a fixed scheduling floor
-  * (~0.1-0.3 s in local mode), so for the iterative operators the job
-  * count is the cost model; unlike wall clock it does not move with
+  * Each line also carries the last sweep's jobs, stages, tasks, classes
+  * compiled and task run time. Every Spark job pays a fixed scheduling
+  * floor (~0.1-0.3 s in local mode), so for the iterative operators the
+  * job count is the cost model; unlike wall clock it does not move with
   * background load, which makes it the way to A/B a driver-loop
-  * change across two builds.
+  * change across two builds. `compiled` is the same kind of counter
+  * for the codegen layer: the classes Janino compiled in the sweep
+  * (Spark's compile-time histogram count), 0 once every generated
+  * class of the query is held by the session's class cache.
   *
   * usage: graft.BenchOne <query> [query ...]
   * env:   SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS, SPARK_GRAFT_SWEEPS,
@@ -25,9 +29,11 @@ import org.apache.spark.sql.graftbridge.Bridge
 object BenchOne {
 
   /** Jobs started, stages completed, their tasks and task run time
-    * (ms) since the last reset. */
+    * (ms), and classes compiled, since the last reset. */
   private final class Counters extends SparkListener {
     val jobs, stages, tasks, taskMs = new AtomicLong
+    private var compiledAtReset = 0L
+    private def compiledTotal = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     override def onJobStart(j: SparkListenerJobStart): Unit =
       jobs.incrementAndGet()
     override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
@@ -35,9 +41,13 @@ object BenchOne {
       tasks.addAndGet(s.stageInfo.numTasks)
       taskMs.addAndGet(s.stageInfo.taskMetrics.executorRunTime)
     }
-    def reset(): Unit = Seq(jobs, stages, tasks, taskMs).foreach(_.set(0))
+    def reset(): Unit = {
+      Seq(jobs, stages, tasks, taskMs).foreach(_.set(0))
+      compiledAtReset = compiledTotal
+    }
     def summary: String =
-      f"jobs=${jobs.get}%3d stages=${stages.get}%3d tasks=${tasks.get}%4d task_s=${taskMs.get / 1000.0}%.2f"
+      f"jobs=${jobs.get}%3d stages=${stages.get}%3d tasks=${tasks.get}%4d " +
+        f"compiled=${compiledTotal - compiledAtReset}%3d task_s=${taskMs.get / 1000.0}%.2f"
   }
 
   def main(args: Array[String]): Unit = {

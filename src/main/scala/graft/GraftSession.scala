@@ -13,7 +13,22 @@ import org.apache.spark.sql.SparkSession
   *  - AQE on (runtime coalesce + skew-join splitting),
   *  - broadcast threshold generous (dimension tables are tiny relative
   *    to facts at every scale factor),
-  *  - parquet filter/column pushdown on (default, asserted explicitly).
+  *  - parquet filter/column pushdown on (default, asserted explicitly),
+  *  - each query shape compiles once per JVM. An analyst session runs
+  *    a few shapes again and again with new literals, and Spark caches
+  *    compiled classes by their source text. The static
+  *    `spark.sql.codegen.cache.maxEntries` is 1000: Spark's default,
+  *    100, is smaller than the measured working set (about 200
+  *    distinct classes for the perfbench `lake_sql` read templates
+  *    plus an orders commit, 101 for sim14 + dedup11). The
+  *    `plans.HoistLiterals` rule, installed with `withExtensions`,
+  *    moves numeric and datetime literals out of the source into the
+  *    class's references, so new numbers give the same source.
+  *    `spark.sql.codegen.useIdInClassName` is off, so a whole-stage
+  *    class is named without its stage id: the id depends on the
+  *    order in which adaptive execution plans a query's stages, and
+  *    with it in the name the same pipeline compiled again when two
+  *    broadcast stages were planned in the other order.
   */
 object GraftSession {
 
@@ -28,7 +43,8 @@ object GraftSession {
       b: SparkSession.Builder,
       shufflePartitions: Int
   ): SparkSession.Builder =
-    b.config("spark.sql.shuffle.partitions", shufflePartitions.toString)
+    b.withExtensions(graft.plans.HoistLiterals.install)
+      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -50,6 +66,8 @@ object GraftSession {
       // spark.driver.maxResultSize stays at its 1g DEFAULT: the
       // guardrail exists to catch accidental driver-side collects,
       // and no graft operator needs it raised.
+      .config("spark.sql.codegen.cache.maxEntries", "1000")
+      .config("spark.sql.codegen.useIdInClassName", "false")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.driver.host", "127.0.0.1")

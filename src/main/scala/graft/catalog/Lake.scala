@@ -438,6 +438,28 @@ object Lake {
   private[graft] def schemaFor(spark: SparkSession, path: String): StructType =
     schemaFor(spark, path, tableListing(spark, path))
 
+  /** The schema `spark.read.parquet(paths: _*).schema` reports, over
+    * one or more paths. Spark's inference sorts all their leaves and
+    * reads the first summary file, else the first data file; each
+    * path's listing already picked its own first by that rule, so the
+    * first of those picks is the file. Not cached: a batch store lists
+    * new `batch=N` dirs every batch, and the cache would keep an entry
+    * per dir for the life of the process. */
+  private[graft] def schemaFor(spark: SparkSession, paths: Seq[String]): StructType = {
+    val picks = paths.map(tableListing(spark, _).schemaFile)
+    (if (picks.forall(_.isDefined)) inferenceFile(picks.flatten) else None)
+      .filterNot(_ => spark.sessionState.conf.isParquetSchemaMergingEnabled)
+      .flatMap(footerSchema(spark, _))
+      .getOrElse(spark.read.parquet(paths: _*).schema)
+  }
+
+  /** Persisted state at one or more paths (an index table, a batch
+    * store's `batch=N` dirs), read with the schema above, so opening
+    * it runs no Spark job: a bare `spark.read.parquet` runs a
+    * schema-inference job per call, per micro-batch in a sink. */
+  private[graft] def readParquet(spark: SparkSession, paths: String*): DataFrame =
+    spark.read.schema(schemaFor(spark, paths)).parquet(paths: _*)
+
   /** One file's footer schema, read and converted as Spark's parquet
     * inference does (ParquetFileFormat.mergeSchemasInParallel: the
     * same footer reader, the same converter settings, and the

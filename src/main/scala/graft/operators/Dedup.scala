@@ -1209,8 +1209,8 @@ object Dedup {
           shingleCorpus(lake.documents.filter(col("doc_id") >= cut)).cache()
         incrementalVerdicts(
           lake.documents,
-          spark.read.parquet(s"$dir/bands"),
-          spark.read.parquet(s"$dir/shingles"),
+          Lake.readParquet(spark, s"$dir/bands"),
+          Lake.readParquet(spark, s"$dir/shingles"),
           threshold,
           cut,
           deltaBands = Some(bandIndexOf(delta, numPerm, bands)),
@@ -1395,7 +1395,7 @@ object Dedup {
     val priorBands = priorBatchDirs("bands")
     val (candidates, storedShingles) =
       if (priorBands.nonEmpty) {
-        val storedBands = spark.read.parquet(priorBands: _*)
+        val storedBands = Lake.readParquet(spark, priorBands: _*)
         val cross = bandRows
           .join(
             storedBands.select(col("doc_id").as("doc_s"), col("band"), col("bucket")),
@@ -1404,7 +1404,7 @@ object Dedup {
             least(col("doc_id"), col("doc_s")).as("doc_a"),
             greatest(col("doc_id"), col("doc_s")).as("doc_b"))
         (intra.unionAll(cross).distinct(),
-          Some(spark.read.parquet(priorBatchDirs("shingles"): _*)))
+          Some(Lake.readParquet(spark, priorBatchDirs("shingles"): _*)))
       } else (intra.distinct(), None)
     val allShingles = storedShingles.fold(shingled)(shingled.unionAll)
     verified(candidates, allShingles, Jaccard, threshold)
@@ -1526,7 +1526,7 @@ object Dedup {
     // already fully compacted (e.g. this run only finished a
     // recovered swap): nothing to fold
     if (dirs.map(_._2) == Seq(dst)) return
-    val merged = transform(spark.read.parquet(dirs.map(_._2.toString): _*))
+    val merged = transform(Lake.readParquet(spark, dirs.map(_._2.toString): _*))
     merged.write.mode("overwrite").parquet(tmp.toString)
     // swap: drop the source subdirs, then move the merged dir into
     // the batch=upTo slot (rename is atomic per dir on HDFS/local).

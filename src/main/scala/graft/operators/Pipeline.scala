@@ -230,7 +230,7 @@ object Pipeline {
     val survivors =
       if (prior.isEmpty) canon
       else {
-        val storedFps = spark.read.parquet(prior: _*).select("fp")
+        val storedFps = Lake.readParquet(spark, prior: _*).select("fp")
         def antiJoin(cands: DataFrame): DataFrame = cands
           .join(storedFps, Seq("fp"), "left_anti")
           .select("doc_id", "source", "toks", "fp")
@@ -319,7 +319,7 @@ object Pipeline {
       fpp: Double
   ): Option[org.apache.spark.util.sketch.BloomFilter] =
     paths.foldLeft(loaded) { (acc, path) =>
-      val df = spark.read.parquet(path).select("fp")
+      val df = Lake.readParquet(spark, path).select("fp")
       if (df.isEmpty) acc
       else {
         val b = df.stat.bloomFilter("fp", expectedItems, fpp)

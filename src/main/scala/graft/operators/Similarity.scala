@@ -3,7 +3,7 @@ package graft.operators
 import graft.catalog.Lake
 import graft.functions.vectors
 import graft.plans.{Codebook, LocalKernels}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -618,13 +618,6 @@ object Similarity {
       .write.mode("overwrite").parquet(s"$dir/cells")
   }
 
-  /** A persisted index table, read with the footer schema the driver
-    * reads (`Lake.schemaFor`), so opening it runs no Spark job. */
-  private def indexTable(spark: SparkSession, dir: String, table: String): DataFrame = {
-    val path = s"$dir/$table"
-    spark.read.schema(Lake.schemaFor(spark, path)).parquet(path)
-  }
-
   /** Append a DELTA batch to a persisted IVF index WITHOUT retraining
     * — the index-maintenance verb between writeIvfIndex rebuilds
     * (FAISS IndexIVF.add on a trained index; the reference rebuilds
@@ -650,7 +643,7 @@ object Similarity {
       dir: String,
       delta: Column
   ): DataFrame = {
-    val cents = Codebook.collect(indexTable(lake.spark, dir, "centroids"))
+    val cents = Codebook.collect(Lake.readParquet(lake.spark, s"$dir/centroids"))
     val asg = argmaxCell(vecs(lake).filter(delta), cents, Seq.empty, keepCos = true)
       .localCheckpoint() // one assignment pass feeds both the write and the report
     asg
@@ -729,10 +722,10 @@ object Similarity {
   ): DataFrame = {
     val spark = lake.spark
     val all = vecs(lake)
-    val cents = Codebook.collect(indexTable(spark, dir, "centroids"))
+    val cents = Codebook.collect(Lake.readParquet(spark, s"$dir/centroids"))
     val probed = probeCells(queries(all, nQueries), cents, nprobe)
     topkPerQuery(
-      probedCandidates(indexTable(spark, dir, "cells"), probed, "cluster")
+      probedCandidates(Lake.readParquet(spark, s"$dir/cells"), probed, "cluster")
         .join(all.select(col("vec_id"), col("v"), col("nrm")), Seq("vec_id"))
         .withColumn("cos_raw", cosRaw),
       k
@@ -1025,10 +1018,10 @@ object Similarity {
         topkPerQuery(
           ivfPqScores(
             checked,
-            Codebook.collect(indexTable(spark, dir, "centroids")),
-            indexTable(spark, dir, "cells"),
+            Codebook.collect(Lake.readParquet(spark, s"$dir/centroids")),
+            Lake.readParquet(spark, s"$dir/cells"),
             codebooks,
-            indexTable(spark, dir, "codes"),
+            Lake.readParquet(spark, s"$dir/codes"),
             m, sd, nQueries, nprobe),
           k, "adc_ip")
     }
@@ -1046,7 +1039,7 @@ object Similarity {
     * None when the table holds no codebook rows: such an index comes
     * from an empty corpus and holds no vectors. */
   private def persistedPq(dir: String, all: DataFrame): Option[(DataFrame, Codebook, Int, Int)] = {
-    val codebooks = Codebook.collect(indexTable(all.sparkSession, dir, "codebooks"))
+    val codebooks = Codebook.collect(Lake.readParquet(all.sparkSession, s"$dir/codebooks"))
     val m = codebooks.ids.count(_.nonEmpty)
     val sd = codebooks.width
     val dim = size(col("v"))
@@ -1216,7 +1209,8 @@ object Similarity {
       case None => emptyAnnResult(all, k, "adc_score")
       case Some((checked, cents, m, sd)) =>
         topkPerQuery(
-          pqScores(subvectors(checked, m, sd), nQueries, cents, indexTable(spark, dir, "codes")),
+          pqScores(subvectors(checked, m, sd), nQueries, cents,
+            Lake.readParquet(spark, s"$dir/codes")),
           k, "adc_score")
     }
   }
@@ -1584,8 +1578,8 @@ object Similarity {
       nQueries: Int = 10
   ): DataFrame = {
     val spark = lake.spark
-    val stats = indexTable(spark, dir, "params")
-    val codes = indexTable(spark, dir, "codes")
+    val stats = Lake.readParquet(spark, s"$dir/params")
+    val codes = Lake.readParquet(spark, s"$dir/codes")
     sqSearch(lake, stats, codes, k, nQueries)
   }
 

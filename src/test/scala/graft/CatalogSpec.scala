@@ -1,13 +1,13 @@
 package graft
 
 import graft.catalog.Lake
-import graft.operators.CatalogOps
+import graft.operators.{CatalogOps, Dedup, Pipeline}
 import graft.sources.Ingest
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
 import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.catalyst.catalog.{
   CreateTableEvent, DropTableEvent, ExternalCatalogEvent, ExternalCatalogEventListener}
-import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.{LongType, StructType, TimestampType}
 import org.scalatest.funsuite.AnyFunSuite
@@ -495,6 +495,65 @@ class CatalogSpec extends AnyFunSuite {
         assert(rootCause(ours).getMessage == rootCause(sparks).getMessage,
           s"$path: ${rootCause(ours)} vs ${rootCause(sparks)}")
       }
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(root)
+  }
+
+  test("several paths read with the schema Spark infers over them, with no Spark job") {
+    val root = tempDir("graft-paths-")
+    try {
+      val narrow = s"$root/narrow"
+      val wide = s"$root/wide"
+      idFrame(wide = false).coalesce(1).write.parquet(narrow)
+      idFrame(wide = true).coalesce(1).write.parquet(wide)
+      // a batch store: batch=0 narrow, batch=1 wide; and a third dir
+      // whose _common_metadata (wide) outranks every data file
+      val store = s"$root/store"
+      copy(partFile(narrow), new java.io.File(s"$store/batch=0/part-00000.parquet"))
+      copy(partFile(wide), new java.io.File(s"$store/batch=1/part-00000.parquet"))
+      copy(partFile(narrow), new java.io.File(s"$store/batch=2/part-00000.parquet"))
+      copy(partFile(wide), new java.io.File(s"$store/batch=2/_common_metadata"))
+      val b = (0 to 2).map(i => s"$store/batch=$i")
+      for ((paths, width) <- Seq(
+          Seq(b(0), b(1)) -> 2, Seq(b(1), b(0)) -> 2, Seq(b(1)) -> 3,
+          Seq(b(0), b(2)) -> 3, Seq(b(2), b(1), b(0)) -> 3)) {
+        var driver: StructType = null
+        assert(jobsDuring { driver = Lake.schemaFor(spark, paths) } == 0, paths)
+        assert(driver == spark.read.parquet(paths: _*).schema, paths)
+        assert(driver.size == width, paths)
+        var read: org.apache.spark.sql.DataFrame = null
+        assert(jobsDuring { read = Lake.readParquet(spark, paths: _*) } == 0, paths)
+        assert(jobsDuring(spark.read.parquet(paths: _*)) == 1, paths)
+        assert(read.collect().map(_.toString).sorted.toSeq ==
+          spark.read.parquet(paths: _*).collect().map(_.toString).sorted.toSeq, paths)
+      }
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(root)
+  }
+
+  test("persisted-state readers open their stores with no schema-inference job") {
+    // Jobs each call runs: opening a stored table runs none, so what is
+    // left is the calls' own work (the delta cut, the batch's writes
+    // and verifies). A bare spark.read.parquet added one inference job
+    // per table opened: incrementalFromIndex 4 → 2 (bands, shingles),
+    // the band sink's second batch 15 → 13 (prior bands, prior
+    // shingles), the pretrain sink's second batch 5 → 4 (prior
+    // fingerprints).
+    val root = tempDir("graft-stores-")
+    try {
+      val dir = s"$root/band_index"
+      Dedup.writeBandIndex(lake, dir)
+      val index = jobsDuring(Dedup.incrementalFromIndex(lake, dir))
+      val docs = lake.documents.select("doc_id", "source", "text")
+      val b0 = docs.filter(col("doc_id") % 2 === 0)
+      val b1 = docs.filter(col("doc_id") % 2 === 1)
+      val bands = Dedup.minhashPairsBatchSink(s"$root/lsh")
+      bands(b0.select("doc_id", "text"), 0L)
+      val bandSink = jobsDuring(bands(b1.select("doc_id", "text"), 1L))
+      val survivors = Pipeline.pretrainPrefixBatchSink(s"$root/pretrain")
+      survivors(b0, 0L)
+      val prefixSink = jobsDuring(survivors(b1, 1L))
+      val got = Map("index" -> index, "bandSink" -> bandSink, "prefixSink" -> prefixSink)
+      info(got.toString)
+      assert(got == Map("index" -> 2, "bandSink" -> 13, "prefixSink" -> 4), got)
     } finally org.apache.commons.io.FileUtils.deleteDirectory(root)
   }
 
