@@ -3,8 +3,9 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** Hashing primitives for sketch-based dedup: MinHash signatures,
-  * LSH band keys, and SimHash bit-vote components.
+/** Hashing primitives for sketch-based dedup (MinHash signatures,
+  * LSH band keys, and SimHash bit-vote components) and the seeded
+  * md5 document hash of the sampling operators.
   *
   * All hashes are deterministic expressions (xxhash64 + affine
   * transforms over a prime field), so signatures are reproducible
@@ -51,4 +52,17 @@ object hashing {
         )
       }: _*
     )
+
+  /** md5 hex of "id:seed" — the seeded document hash behind samp06's
+    * within-shard order and samp08/samp12/samp13's keep decisions:
+    * uniform, spelled identically in every engine, re-dealt by the
+    * seed. */
+  def seededMd5(id: Column, seed: Int): Column =
+    md5(concat(id.cast("string"), lit(":" + seed)))
+
+  /** The first 8 hex chars of an md5 hex string as an unsigned 32-bit
+    * integer (bigint) — exact in both engines, so an integer threshold
+    * on it is bit-reproducible. */
+  def md5U32(hex: Column): Column =
+    conv(substring(hex, 1, 8), 16, 10).cast("long")
 }

@@ -56,14 +56,17 @@ object text {
       .otherwise(array().cast("array<string>"))
   }
 
-  /** Language marker lexicon shared by the langid / quality operators
-    * (TextAnalysis.txt02/txt03) and their DuckDB oracles. The scoring
-    * logic itself lives in the operators as single-pass explode +
-    * aggregate shapes — a Column-level CASE over per-language
-    * marker-count lambdas re-evaluates the tokenizer once per
-    * reference (lambda bodies are invisible to codegen's common-
-    * subexpression elimination), so no filter-lambda helpers are
-    * exposed here. */
+  /** Language marker lexicon, the one copy every operator takes its
+    * lists from: txt02's explode + broadcast-join vote, txt03's
+    * stopword count, the Gopher rules' distinct-stopword signal (the
+    * "en" list) and the txt24 panel's per-language filter counts (all
+    * in TextAnalysis); the DuckDB oracles spell the same lists out in
+    * their SQL. The scoring logic lives in the operators: a
+    * Column-level CASE over per-language marker-count lambdas inlined
+    * into one projection re-evaluates the tokenizer once per reference
+    * (lambda bodies are invisible to codegen's common-subexpression
+    * elimination), so txt02 counts after one explode and the panel
+    * filters a token array it has already materialized. */
   val langMarkers: Map[String, Seq[String]] = Map(
     "en" -> Seq("the", "a", "of", "and"),
     "de" -> Seq("der", "die", "das", "und"),

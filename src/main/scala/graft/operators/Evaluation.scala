@@ -303,11 +303,7 @@ object Evaluation {
         col("text"),
         graft.plans.HashedClassifierScore(col("text"), dim).as("m")
       )
-      .select(
-        col("doc_id"),
-        col("text"),
-        round(col("m.s_milli") / 1000.0 / col("m.n_feats"), 4).as("q_score")
-      )
+      .select(col("doc_id"), col("text"), TextAnalysis.qScore)
 
   /** eval05: CALIBRATION CURVE for the model-based quality score —
     * the acceptance test a curation pipeline runs before replacing an

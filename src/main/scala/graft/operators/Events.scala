@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.catalog.Lake
+import graft.functions.hashing
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -290,8 +291,7 @@ object Events {
     * two-level high-water mark. */
   private def latenessFrame(lake: Lake, shardUs: Long): DataFrame = {
     val delayUs =
-      conv(substring(md5(col("event_id").cast("string")), 1, 8), 16, 10)
-        .cast("long") % 7200L * 1000000L
+      hashing.md5U32(md5(col("event_id").cast("string"))) % 7200L * 1000000L
     val ev = lake.events
       .select(
         col("event_id"),

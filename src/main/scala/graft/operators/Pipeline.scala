@@ -83,9 +83,9 @@ object Pipeline {
   }
 
   /** pipe01's packing tail over a (doc_id, source, toks) survivor
-    * frame — factored out so the streaming prefix's accumulated
-    * survivor store can be packed with the IDENTICAL plan (the
-    * twin-≡-batch spec rides this). */
+    * frame — shared with txt16 (the whole corpus) and the streaming
+    * prefix's accumulated survivor store, which is packed with the
+    * IDENTICAL plan (the twin-≡-batch spec rides this). */
   private[graft] def packCorpus(
       survivors: DataFrame,
       chunkSize: Int = 50,
@@ -93,18 +93,12 @@ object Pipeline {
       capacity: Int = 512,
       shardSize: Int = 200
   ): DataFrame = {
-    // (source, shard) packing key, like txt16: a per-source-only
+    // (source, shard) packing key: a per-source-only
     // window serializes a 10-TB source through one task at scale;
     // sharding caps the window partition at shardSize docs for one
     // partial bin per shard boundary (bounds pinned in PipelineSpec).
-    val chunks = survivors
-      .withColumn("n_tokens", size(col("toks")))
-      .withColumn(
-        "start",
-        explode(
-          sequence(lit(0), greatest(col("n_tokens") - 1, lit(0)), lit(stride))
-        )
-      )
+    val chunks = TextAnalysis
+      .withChunkStarts(survivors, stride)
       .select(
         col("source"),
         (col("doc_id") / shardSize).cast("long").as("shard"),

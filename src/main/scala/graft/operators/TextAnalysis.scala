@@ -1,8 +1,8 @@
 package graft.operators
 
 import graft.catalog.Lake
-import graft.functions.text
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.functions.{hashing, text}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -15,10 +15,18 @@ import org.apache.spark.sql.functions._
   * text statistics / filtering as done before the reference's
   * per-DOI fulltext dedup (materialize_fulltext.py).
   *
-  * Scale notes: everything here is embarrassingly parallel per
-  * document (map-only until the final small aggregation); n-gram
-  * frequency is explode -> partial-agg'd count, so the shuffle
-  * carries (ngram, partial_count) pairs, not documents.
+  * Scale notes: most operators here are map-only per document until
+  * a final small aggregation; n-gram frequency is explode ->
+  * partial-agg'd count, so the shuffle carries (ngram, partial_count)
+  * pairs, not documents. The exceptions shuffle on purpose: samp04's
+  * range-partitioned prefix sum, txt22's window-hash df index and
+  * txt28's first-seen join, each documented at the operator.
+  *
+  * Shared text decisions are written once: the Gopher signals and
+  * rules ([[gopherRules]]), the language vote ([[langVote]], over
+  * text.langMarkers), the capped vocabulary model
+  * ([[vocabModelScores]]), the classifier score ([[qScore]]) and the
+  * chunk starts ([[withChunkStarts]]).
   */
 object TextAnalysis {
 
@@ -59,28 +67,17 @@ object TextAnalysis {
     val markerRows = text.langMarkers.toSeq
       .flatMap { case (l, ws) => ws.map(w => (w, l)) }
     val lex = lake.spark.createDataFrame(markerRows).toDF("term", "mlang")
-    val counts = lake.documents
+    val counts = markerCounts(l => count(when(col("mlang") === l, 1)))
+    val perDoc = lake.documents
       .select(col("doc_id"), explode(text.tokens(col("text"))).as("term"))
       .join(broadcast(lex), "term")
       .groupBy("doc_id")
-      .agg(
-        count(when(col("mlang") === "en", 1)).as("s_en"),
-        count(when(col("mlang") === "de", 1)).as("s_de"),
-        count(when(col("mlang") === "es", 1)).as("s_es"),
-        count(when(col("mlang") === "fr", 1)).as("s_fr")
-      )
-    val pred = when(
-      col("s_en") >= col("s_de") && col("s_en") >= col("s_es") &&
-        col("s_en") >= col("s_fr"),
-      "en"
-    ).when(col("s_de") >= col("s_es") && col("s_de") >= col("s_fr"), "de")
-      .when(col("s_es") >= col("s_fr"), "es")
-      .otherwise("fr")
+      .agg(counts.head, counts.tail: _*)
     lake.documents
       .select(col("doc_id"), col("lang").as("labeled_lang"))
-      .join(counts, Seq("doc_id"), "left")
-      .na.fill(0L, Seq("s_en", "s_de", "s_es", "s_fr"))
-      .withColumn("pred_lang", pred)
+      .join(perDoc, Seq("doc_id"), "left")
+      .na.fill(0L, text.langMarkers.keys.map(l => s"s_$l").toSeq)
+      .withColumn("pred_lang", langVote)
       .select(
         col("doc_id"),
         col("labeled_lang"),
@@ -92,6 +89,23 @@ object TextAnalysis {
 
   def txt02LangId(lake: Lake): DataFrame =
     langIdVerdicts(lake).orderBy("doc_id")
+
+  /** One marker-count column `s_<lang>` per text.langMarkers language,
+    * from a per-language count expression. */
+  private def markerCounts(count: String => Column): Seq[Column] =
+    text.langMarkers.keys.toSeq.map(l => count(l).as(s"s_$l"))
+
+  /** The four-language vote over the s_en, s_de, s_es, s_fr marker
+    * counts: the most markers wins, ties going to the earlier language
+    * in en, de, es, fr order (txt02, eval03 and the txt24 panel). */
+  private val langVote: Column =
+    when(
+      col("s_en") >= col("s_de") && col("s_en") >= col("s_es") &&
+        col("s_en") >= col("s_fr"),
+      "en"
+    ).when(col("s_de") >= col("s_es") && col("s_de") >= col("s_fr"), "de")
+      .when(col("s_es") >= col("s_fr"), "es")
+      .otherwise("fr")
 
   /** Quality scoring + threshold filter (pretraining-corpus gate).
     * Same one-pass shape as txt02: explode once, aggregate token and
@@ -207,7 +221,13 @@ object TextAnalysis {
     * Here the explode is map-side, the lexicon join is a broadcast
     * that drops non-lexicon tokens before any exchange, and the
     * shuffle carries only |matching tokens| rows — linear in corpus
-    * size with a tiny constant, and the tokenizer runs exactly once. */
+    * size with a tiny constant, and the tokenizer runs exactly once.
+    *
+    * The document frequency `df` comes from a window over the tf
+    * frame, not a groupBy + join back: the join formulation recomputes
+    * the whole tokenize + explode branch a second time, while the
+    * window reuses the one pass (its shuffle carries only the matched
+    * (doc, term) rows). */
   private def termFrequencies(lake: Lake, terms: Seq[String]): DataFrame = {
     val lex = lake.spark
       .createDataFrame(terms.map(Tuple1(_)))
@@ -217,6 +237,10 @@ object TextAnalysis {
       .join(broadcast(lex), "term")
       .groupBy("doc_id", "term")
       .agg(count(lit(1)).cast("double").as("tf"))
+      .withColumn(
+        "df",
+        count(lit(1)).over(Window.partitionBy("term")).cast("double")
+      )
   }
 
   def txt08Bm25Search(lake: Lake, k1: Double = 1.2, b: Double = 0.75): DataFrame = {
@@ -229,16 +253,8 @@ object TextAnalysis {
       count(lit(1)).cast("double").as("n_docs"),
       avg("dl").as("avgdl")
     )
-    // df via a window over the tf frame, not a groupBy+join back:
-    // the join formulation recomputes the whole tokenize+explode
-    // branch a second time, while the window reuses the one pass
-    // (its shuffle carries only the matched (doc, term) rows).
-    val tf = termFrequencies(lake, bm25Query)
-      .withColumn(
-        "df",
-        count(lit(1)).over(Window.partitionBy("term")).cast("double")
-      )
-    tf.join(dl, "doc_id")
+    termFrequencies(lake, bm25Query)
+      .join(dl, "doc_id")
       .crossJoin(broadcast(stats))
       .withColumn(
         "idf",
@@ -259,16 +275,11 @@ object TextAnalysis {
     * (run_baseline_comparisons.py:164 TF-IDF baseline shape). */
   def txt09TfIdf(lake: Lake): DataFrame = {
     val nDocs = lake.documents.agg(count(lit(1)).cast("double").as("n_docs"))
-    // df via window (see txt08): one tokenize pass, not two.
-    val tf = termFrequencies(lake, lexicon)
-      .withColumn(
-        "df",
-        count(lit(1)).over(Window.partitionBy("term")).cast("double")
-      )
     val w = Window
       .partitionBy("doc_id")
       .orderBy(col("tfidf_raw").desc, col("term"))
-    tf.crossJoin(broadcast(nDocs))
+    termFrequencies(lake, lexicon)
+      .crossJoin(broadcast(nDocs))
       .withColumn("tfidf_raw", col("tf") * log(col("n_docs") / col("df")))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= 3)
@@ -363,7 +374,7 @@ object TextAnalysis {
       shards: Int = 8,
       seed: Int = 42
   ): DataFrame = {
-    val key = md5(concat(col("doc_id").cast("string"), lit(":" + seed)))
+    val key = hashing.seededMd5(col("doc_id"), seed)
     // Take the HIGH bits of the Knuth product: an odd multiplier is a
     // bijection on the low k bits, so `product % 2^k` would still be
     // `doc_id % 2^k` reshuffled — correlated with every id-derived
@@ -401,10 +412,7 @@ object TextAnalysis {
     * pass over the ids. */
   def samp08SeededSample(lake: Lake, seed: Int = 7): DataFrame =
     lake.documents
-      .filter(
-        substring(
-          md5(concat(col("doc_id").cast("string"), lit(":" + seed))),
-          1, 4) < lit("3333"))
+      .filter(substring(hashing.seededMd5(col("doc_id"), seed), 1, 4) < lit("3333"))
       .select("doc_id", "source", "lang", "n_chars")
       .orderBy("doc_id")
 
@@ -446,16 +454,7 @@ object TextAnalysis {
     lake.documents
       .select(col("doc_id"), col("source"))
       .join(broadcast(rates), "source")
-      .withColumn(
-        "u",
-        conv(
-          substring(
-            md5(concat(col("doc_id").cast("string"), lit(":" + seed))),
-            1, 8
-          ),
-          16, 10
-        ).cast("long")
-      )
+      .withColumn("u", hashing.md5U32(hashing.seededMd5(col("doc_id"), seed)))
       .groupBy("source")
       .agg(
         first("n_docs").as("n_docs"),
@@ -482,13 +481,7 @@ object TextAnalysis {
     val ranked = docs.select(
       strata.map(col) :+
         col("doc_id") :+
-        conv(
-          substring(
-            md5(concat(col("doc_id").cast("string"), lit(":" + seed))),
-            1, 8
-          ),
-          16, 10
-        ).cast("long").as("u"): _*
+        hashing.md5U32(hashing.seededMd5(col("doc_id"), seed)).as("u"): _*
     )
     ranked
       .groupBy(strata.map(col): _*)
@@ -584,55 +577,58 @@ object TextAnalysis {
     * consumers that pair the verdict with another per-doc signal
     * (eval05/eval07's learned score) fuse into THIS one map pass
     * instead of re-scanning the corpus and self-joining on doc_id. */
-  def gopherVerdict(docs: DataFrame, carry: Seq[String] = Nil): DataFrame =
+  def gopherVerdict(docs: DataFrame, carry: Seq[String] = Nil): DataFrame = {
+    val keys = col("doc_id") +: carry.map(col)
     docs
+      .select(keys :+ text.tokens(col("text")).as("toks"): _*)
+      .select(keys ++ gopherSignals: _*)
+      .select(keys ++ Seq(col("n_tokens"), col("n_stop_distinct")) ++ gopherRatios: _*)
       .select(
-        col("doc_id") +: carry.map(col) :+ text.tokens(col("text")).as("toks"): _*
-      )
-      .select(
-        (col("doc_id") +: carry.map(col)) ++ Seq(
-          size(col("toks")).cast("long").as("n_tokens"),
-          expr("aggregate(toks, 0L, (a, t) -> a + length(t))").as("sum_len"),
-          expr("size(filter(toks, t -> NOT t rlike '[A-Za-z0-9]'))")
-            .cast("long")
-            .as("n_symbol"),
-          expr(
-            "size(array_intersect(array_distinct(toks), array('the','a','of','and')))"
-          ).cast("long").as("n_stop_distinct")
-        ): _*
-      )
-      .withColumn(
-        "mean_tok_len",
-        round(col("sum_len").cast("double") / col("n_tokens"), 4)
-      )
-      .withColumn(
-        "symbol_ratio",
-        round(col("n_symbol").cast("double") / col("n_tokens"), 4)
-      )
-      .withColumn(
-        "fail_reasons",
-        concat_ws(
-          ",",
-          when(col("n_tokens") < 50, "too_short"),
-          when(col("n_tokens") > 100000, "too_long"),
-          when(
-            col("mean_tok_len") < 3 || col("mean_tok_len") > 10,
-            "mean_len"
-          ),
-          when(col("symbol_ratio") >= 0.1, "symbol"),
-          when(col("n_stop_distinct") < 2, "stopword")
-        )
-      )
-      .select(
-        (col("doc_id") +: carry.map(col)) ++ Seq(
+        keys ++ Seq(
           col("n_tokens"),
           col("mean_tok_len"),
           col("symbol_ratio"),
           col("n_stop_distinct"),
-          col("fail_reasons"),
-          (col("fail_reasons") === "").as("passes")
+          concat_ws(",", gopherRules.map { case (r, fails) => when(fails, r) }: _*)
+            .as("fail_reasons"),
+          gopherPasses.as("passes")
         ): _*
       )
+  }
+
+  /** The Gopher count signals over a `toks` array column: tokens,
+    * summed token length, symbol-only tokens and distinct English
+    * stopwords (text.langMarkers("en")). */
+  private def gopherSignals: Seq[Column] = Seq(
+    size(col("toks")).cast("long").as("n_tokens"),
+    expr("aggregate(toks, 0L, (a, t) -> a + length(t))").as("sum_len"),
+    expr("size(filter(toks, t -> NOT t rlike '[A-Za-z0-9]'))")
+      .cast("long")
+      .as("n_symbol"),
+    size(array_intersect(
+      array_distinct(col("toks")),
+      array(text.langMarkers("en").map(lit): _*)
+    )).cast("long").as("n_stop_distinct")
+  )
+
+  /** The two ratio signals over [[gopherSignals]]' counts. */
+  private def gopherRatios: Seq[Column] = Seq(
+    round(col("sum_len").cast("double") / col("n_tokens"), 4).as("mean_tok_len"),
+    round(col("n_symbol").cast("double") / col("n_tokens"), 4).as("symbol_ratio")
+  )
+
+  /** The Gopher rules as (fail reason, fail condition) over the signal
+    * columns, in fail_reasons order. */
+  private val gopherRules: Seq[(String, Column)] = Seq(
+    "too_short" -> (col("n_tokens") < 50),
+    "too_long" -> (col("n_tokens") > 100000),
+    "mean_len" -> (col("mean_tok_len") < 3 || col("mean_tok_len") > 10),
+    "symbol" -> (col("symbol_ratio") >= 0.1),
+    "stopword" -> (col("n_stop_distinct") < 2)
+  )
+
+  /** A document passes when no rule fails (NULL when a signal is). */
+  private val gopherPasses: Column = !gopherRules.map(_._2).reduce(_ || _)
 
   def txt20GopherFilter(lake: Lake): DataFrame =
     gopherVerdict(lake.documents).orderBy("doc_id")
@@ -932,19 +928,7 @@ object TextAnalysis {
       col("doc_id"),
       text.tokens(col("text")).as("toks")
     )
-    // chunk starts: 0, stride, 2*stride, ... while start < n_tokens
-    docs
-      .withColumn("n_tokens", size(col("toks")))
-      .withColumn(
-        "start",
-        explode(
-          sequence(
-            lit(0),
-            greatest((col("n_tokens") - 1), lit(0)),
-            lit(stride)
-          )
-        )
-      )
+    withChunkStarts(docs, stride)
       .withColumn("chunk_toks", slice(col("toks"), col("start") + 1, lit(chunkSize)))
       .select(
         col("doc_id"),
@@ -956,6 +940,18 @@ object TextAnalysis {
       .orderBy("doc_id", "chunk_id")
   }
 
+  /** One row per chunk start — 0, stride, 2·stride, … while start <
+    * n_tokens, and one row for a doc with no tokens — over a frame
+    * with a `toks` array column, adding `n_tokens` and `start` (txt11
+    * and the txt16/pipe01 packing tail). */
+  private[graft] def withChunkStarts(docs: DataFrame, stride: Int): DataFrame =
+    docs
+      .withColumn("n_tokens", size(col("toks")))
+      .withColumn(
+        "start",
+        explode(sequence(lit(0), greatest(col("n_tokens") - 1, lit(0)), lit(stride)))
+      )
+
   /** Sequence packing — the step after chunking (txt11) in a
     * pretraining pipeline: fill fixed-capacity context windows with
     * consecutive chunks and report per-bin fill. Packing is done per
@@ -965,61 +961,26 @@ object TextAnalysis {
     * partition. Bin assignment is cumulative-sum div capacity: a
     * chunk whose cumsum straddles a boundary opens the next bin (the
     * streaming-packer approximation; bins overshoot by at most one
-    * chunk). */
+    * chunk).
+    *
+    * The body is pipe01's packing tail ([[Pipeline.packCorpus]]) over
+    * every document: its cumsum window partitions by (source, shard)
+    * with shard = doc_id div shardSize, so no window task holds more
+    * than shardSize docs of one source, and (source, shard, bin_id) is
+    * the packed-sequence key. The token array is materialized before
+    * packCorpus sizes it, so the tokenizer runs once per row. */
   def txt16SequencePacking(
       lake: Lake,
       chunkSize: Int = 50,
       stride: Int = 40,
       capacity: Int = 512,
       shardSize: Int = 200
-  ): DataFrame = {
-    // Materialize the token array before sizing it — referencing the
-    // tokenizer expression twice in one select runs it twice per row.
-    //
-    // The cumsum window partitions by (source, shard), NOT source
-    // alone: at 100 TB a single 10-TB source would otherwise flow
-    // through ONE window task — the same serialization the docstring
-    // rejects for a global ordering, one level down. shard = doc_id
-    // div shardSize caps every window partition at shardSize docs,
-    // trading at most one partial bin per shard boundary (the
-    // standard streaming-packing trade; bounds pinned in
-    // PipelineSpec). Bin ids are shard-local, so (source, shard,
-    // bin_id) is the packed-sequence key.
-    val chunks = lake.documents
-      .select(col("doc_id"), col("source"), text.tokens(col("text")).as("toks"))
-      .withColumn("n_tokens", size(col("toks")))
-      .withColumn(
-        "start",
-        explode(
-          sequence(lit(0), greatest(col("n_tokens") - 1, lit(0)), lit(stride))
-        )
-      )
-      .select(
-        col("source"),
-        (col("doc_id") / shardSize).cast("long").as("shard"),
-        col("doc_id"),
-        (col("start") / stride).cast("long").as("chunk_id"),
-        size(slice(col("toks"), col("start") + 1, lit(chunkSize)))
-          .cast("long")
-          .as("chunk_len")
-      )
-    val w = Window
-      .partitionBy("source", "shard")
-      .orderBy("doc_id", "chunk_id")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    chunks
-      .withColumn("cum", sum("chunk_len").over(w))
-      .withColumn(
-        "bin_id",
-        floor((col("cum") - col("chunk_len")) / lit(capacity))
-      )
-      .groupBy("source", "shard", "bin_id")
-      .agg(
-        count(lit(1)).as("n_chunks"),
-        sum("chunk_len").as("bin_tokens")
-      )
-      .orderBy("source", "shard", "bin_id")
-  }
+  ): DataFrame =
+    Pipeline.packCorpus(
+      lake.documents
+        .select(col("doc_id"), col("source"), text.tokens(col("text")).as("toks")),
+      chunkSize, stride, capacity, shardSize
+    )
 
   /** Whitespace + BPE-ish regex token counts (letter runs, digit
     * runs, single punctuation — the pre-BPE pretokenizer shape). */
@@ -1194,58 +1155,74 @@ object TextAnalysis {
       lake: Lake,
       maxModel: Int = 1000000
   ): DataFrame = {
-    // Pass 1 — train: one tokenize scan, counts folded ROW-SIDE by
-    // the native TokenCounts map (one entry per distinct word per
-    // doc, ~8× fewer aggregate-input rows than explode(tokens)), then
-    // summed per word. The vocab-sized count table is materialized
-    // ONCE (localCheckpoint) and feeds two bounded jobs: the exact
-    // full-vocabulary token total, and the top-`maxModel`-by-count
-    // collect. The driver never holds more than `maxModel` rows —
-    // the BPE-maxWords / dedup04-maxBucket discipline applied to the
-    // model build. Below the cap the collected set IS the full
-    // vocabulary and every number is bit-identical to the uncapped
-    // form (long sums are exact in any order). Above the cap the
-    // DROPPED-TAIL RULE is: p(w) for retained words still uses the
-    // full-corpus total (capping never inflates probabilities), and a
-    // token outside the top-K contributes to NEITHER n_tokens nor s —
-    // the UnigramModelScore missing-key semantics, so rare-tail
-    // tokens simply stop voting instead of skewing the mean.
-    // (Spec: "unigram model cap" in TextSelectionSpec.)
-    // Default 1M entries (CCNet's own vocabulary scale): a broadcast
-    // Map[String,Double] costs ~50-100 B/entry, so 1M keeps the model
-    // ~50-100 MB on the driver and every executor — the 4M default it
-    // replaces sat at 200-400 MB, close to the edge the cap exists to
-    // protect (judge round 11 #2). Raise it per-call when a corpus
-    // genuinely needs a longer head.
-    val cdf = lake.documents
+    val vocab = lake.documents
       .select(explode(graft.plans.TokenCounts(col("text"))).as(Seq("w", "n")))
       .groupBy("w")
       .agg(sum("n").as("c"))
-      .localCheckpoint(false)
-    val total = cdf.agg(sum("c")).head().getLong(0).toDouble
-    val counts = cdf.orderBy(col("c").desc, col("w")).limit(maxModel).collect()
-    val model = counts.map { r =>
-      r.getString(0) -> -math.log(r.getLong(1).toDouble / total)
-    }.toMap
-    // Broadcast lifecycle: the returned frame holds the broadcast by
-    // reference until the frame itself is unreachable, at which point
-    // Spark's ContextCleaner GCs the blocks — repeated calls do not
-    // accumulate beyond live frames, and the value is ≤ maxModel
-    // entries by construction.
+    vocabModelScores(lake, vocab, Seq(sum("c")), maxModel, "avg_neg_logp") {
+      (r, t) => -math.log(r.getLong(1).toDouble / t(0))
+    }
+  }
+
+  /** The capped vocabulary model of the unigram family (txt15, txt21,
+    * txt25): build once from a (w, c, ...) count table, score every
+    * document with [[graft.plans.UnigramModelScore]], and emit
+    * (doc_id, n_tokens, `scoreAs` = round(Σ weight / n_tokens, 4)).
+    * `totals` are full-vocabulary long aggregates over the table, read
+    * NULL-safe (an empty table sums to 0); `weight` maps a count row
+    * and those totals to the word's score.
+    *
+    * Pass 1 — train: the vocab-sized count table is materialized ONCE
+    * (localCheckpoint) and feeds two bounded jobs: the exact
+    * full-vocabulary totals, and the top-`maxModel`-by-count collect
+    * (count desc, w). The driver never holds more than `maxModel` rows
+    * — the BPE-maxWords / dedup04-maxBucket discipline applied to the
+    * model build. Below the cap the collected set IS the full
+    * vocabulary and every number is bit-identical to the uncapped form
+    * (long sums are exact in any order). Above the cap the
+    * DROPPED-TAIL RULE is: the weights of retained words still use the
+    * full-corpus totals (capping never inflates probabilities), and a
+    * token outside the top-K contributes to NEITHER n_tokens nor the
+    * sum — the UnigramModelScore missing-key semantics, so rare-tail
+    * tokens simply stop voting instead of skewing the mean. (Spec:
+    * "unigram model cap" in TextSelectionSpec.) Default 1M entries
+    * (CCNet's own vocabulary scale): a broadcast Map[String,Double]
+    * costs ~50-100 B/entry, so 1M keeps the model ~50-100 MB on the
+    * driver and every executor. Raise it per call when a corpus
+    * genuinely needs a longer head.
+    *
+    * Pass 2 — score: ONE map-only scan; the native fold deletes the
+    * token explode, the repartition-by-word, the checkpoint, the
+    * model join and the groupBy(doc_id) of a join formulation.
+    * n_tokens > 0 keeps the fused form row-equal to that join (which
+    * dropped a doc none of whose tokens matched). The returned frame
+    * holds the broadcast by reference; Spark's ContextCleaner frees it
+    * once the frame is unreachable, and it holds at most `maxModel`
+    * entries. */
+  private def vocabModelScores(
+      lake: Lake,
+      vocab: DataFrame,
+      totals: Seq[Column],
+      maxModel: Int,
+      scoreAs: String
+  )(weight: (Row, IndexedSeq[Double]) => Double): DataFrame = {
+    val cdf = vocab.localCheckpoint(false)
+    val tot = cdf.agg(totals.head, totals.tail: _*).head()
+    val t = totals.indices.map(i => if (tot.isNullAt(i)) 0.0 else tot.getLong(i).toDouble)
+    val model = cdf
+      .orderBy(col("c").desc, col("w"))
+      .limit(maxModel)
+      .collect()
+      .map(r => r.getString(0) -> weight(r, t))
+      .toMap
     val b = lake.spark.sparkContext.broadcast(model)
-    // Pass 2 — score: ONE map-only scan; the native fold deletes the
-    // token explode, the repartition-by-word, the checkpoint, the
-    // model join and the groupBy(doc_id) the round-9 shape paid
-    // (measured 1.16 s -> see commit pair at sf1). n_tokens > 0 keeps
-    // the fused form row-equal to the join formulation (which dropped
-    // a doc none of whose tokens matched).
     lake.documents
       .select(col("doc_id"), graft.plans.UnigramModelScore(col("text"), b).as("u"))
       .filter(col("u.n_tokens") > 0)
       .select(
         col("doc_id"),
         col("u.n_tokens").as("n_tokens"),
-        round(col("u.s") / col("u.n_tokens"), 4).as("avg_neg_logp")
+        round(col("u.s") / col("u.n_tokens"), 4).as(scoreAs)
       )
   }
 
@@ -1266,37 +1243,19 @@ object TextAnalysis {
     * table is |langs| rows (exact interpolated terciles of the
     * ROUNDED score so both engines bucket identically), broadcast
     * back for a map-side bucket assignment; the report reduces to
-    * |langs|·3 rows with partial aggregation. Exact per-lang
-    * percentile buffers one language's scores on a reducer — past
-    * that, `exactCuts = false` swaps the cutpoint agg for the
-    * mergeable approx_percentile sketch (rel11's discipline; CCNet
-    * itself computes cutpoints on a sample): bounded per-partition
-    * memory, identical bucketing join and report, cutpoints within
-    * the sketch's rank-error bound of exact (spec-pinned). The exact
-    * default is kept to oracle-match; the bucketing join and report
-    * are scale-indifferent either way. */
-  def txt25CcnetBuckets(
-      lake: Lake,
-      exactCuts: Boolean = true,
-      sketchAccuracy: Int = 10000
-  ): DataFrame = {
+    * |langs|·3 rows with partial aggregation. The exact per-lang
+    * percentile buffers one language's scores on a reducer; it is the
+    * cutpoint rule the oracle replays. */
+  def txt25CcnetBuckets(lake: Lake): DataFrame = {
     val scored = unigramScores(lake)
       .join(lake.documents.select(col("doc_id"), col("lang")), "doc_id")
       .select(col("lang"), col("avg_neg_logp").as("s"))
-    val cutAggs =
-      if (exactCuts)
-        Seq(
-          round(expr("percentile(s, 0.33333333)"), 4).as("c1"),
-          round(expr("percentile(s, 0.66666667)"), 4).as("c2")
-        )
-      else
-        Seq(
-          round(expr(s"approx_percentile(s, 0.33333333, $sketchAccuracy)"), 4).as("c1"),
-          round(expr(s"approx_percentile(s, 0.66666667, $sketchAccuracy)"), 4).as("c2")
-        )
     val cuts = scored
       .groupBy("lang")
-      .agg(cutAggs.head, cutAggs.tail: _*)
+      .agg(
+        round(expr("percentile(s, 0.33333333)"), 4).as("c1"),
+        round(expr("percentile(s, 0.66666667)"), 4).as("c2")
+      )
     scored
       .join(broadcast(cuts), "lang")
       .withColumn(
@@ -1386,57 +1345,30 @@ object TextAnalysis {
     * map, replacing the O(L²) distinct×rescan array formulation
     * (panel 3.2 s -> ~1 s at sf0.1; value-identical, pinned by the
     * panel==txt14 spec and the unchanged oracle). */
-  def qualityPanel(docs: DataFrame): DataFrame = {
-    val sEn = size(filter(col("toks"), x => x.isin("the", "a", "of", "and")))
-    val sDe = size(filter(col("toks"), x => x.isin("der", "die", "das", "und")))
-    val sEs = size(filter(col("toks"), x => x.isin("el", "la", "los", "que")))
-    val sFr = size(filter(col("toks"), x => x.isin("le", "les", "des", "et")))
+  def qualityPanel(docs: DataFrame): DataFrame =
     docs
       .select(col("doc_id"), text.tokens(col("text")).as("toks"))
       .select(
-        col("doc_id"),
-        col("toks"),
-        greatest(size(col("toks")) - 1, lit(0)).cast("long").as("m_bigrams"),
-        graft.plans.TopBigramCount(col("toks")).as("top_bg"),
-        size(col("toks")).cast("long").as("n_tokens"),
-        expr("aggregate(toks, 0L, (a, t) -> a + length(t))").as("sum_len"),
-        expr("size(filter(toks, t -> NOT t rlike '[A-Za-z0-9]'))")
-          .cast("long")
-          .as("n_symbol"),
-        expr(
-          "size(array_intersect(array_distinct(toks), array('the','a','of','and')))"
-        ).cast("long").as("n_stop_distinct"),
-        sEn.as("s_en"), sDe.as("s_de"), sEs.as("s_es"), sFr.as("s_fr")
+        Seq(
+          col("doc_id"),
+          col("toks"),
+          greatest(size(col("toks")) - 1, lit(0)).cast("long").as("m_bigrams"),
+          graft.plans.TopBigramCount(col("toks")).as("top_bg")
+        ) ++ gopherSignals ++
+          markerCounts(l => size(filter(col("toks"), _.isin(text.langMarkers(l): _*)))): _*
       )
       .select(
-        col("doc_id"),
-        col("n_tokens"),
-        round(col("sum_len").cast("double") / col("n_tokens"), 4)
-          .as("mean_tok_len"),
-        round(col("n_symbol").cast("double") / col("n_tokens"), 4)
-          .as("symbol_ratio"),
-        col("n_stop_distinct"),
-        when(
-          col("s_en") >= col("s_de") && col("s_en") >= col("s_es") &&
-            col("s_en") >= col("s_fr"),
-          "en"
-        ).when(col("s_de") >= col("s_es") && col("s_de") >= col("s_fr"), "de")
-          .when(col("s_es") >= col("s_fr"), "es")
-          .otherwise("fr")
-          .as("pred_lang"),
-        col("m_bigrams").as("n_bigrams"),
-        when(
-          col("m_bigrams") > 0,
-          round(col("top_bg").cast("double") / col("m_bigrams"), 4)
-        ).otherwise(0.0).as("top_bigram_frac")
+        Seq(col("doc_id"), col("n_tokens")) ++ gopherRatios ++ Seq(
+          col("n_stop_distinct"),
+          langVote.as("pred_lang"),
+          col("m_bigrams").as("n_bigrams"),
+          when(
+            col("m_bigrams") > 0,
+            round(col("top_bg").cast("double") / col("m_bigrams"), 4)
+          ).otherwise(0.0).as("top_bigram_frac")
+        ): _*
       )
-      .withColumn(
-        "passes",
-        col("n_tokens") >= 50 && col("n_tokens") <= 100000 &&
-          col("mean_tok_len") >= 3 && col("mean_tok_len") <= 10 &&
-          col("symbol_ratio") < 0.1 && col("n_stop_distinct") >= 2
-      )
-  }
+      .withColumn("passes", gopherPasses)
 
   /** rep01: the per-source corpus report card — the aggregate view a
     * curation run publishes (coverage_stats generalized from presence
@@ -1606,67 +1538,38 @@ object TextAnalysis {
     * p_raw needs no smoothing (every scored token is in the corpus by
     * construction).
     *
-    * Scale shape = txt15's: one tokenize pass builds the vocabulary
-    * table with BOTH counts in a single groupBy (the target count is
-    * a conditional aggregate, not a second pass), localCheckpoint
-    * materializes it once for the totals aggregate + scoring join,
-    * and the per-doc result is a map-side-combinable avg. Linear in
-    * corpus tokens; the vocab join broadcasts while it fits and
-    * degrades to shuffle, never OOM. */
+    * Scale shape = txt15's ([[vocabModelScores]]): ONE tokenize pass
+    * builds the vocabulary table with BOTH counts in a single groupBy
+    * (the target count is a conditional aggregate, not a second
+    * pass), the per-word log-likelihood ratio is computed once per
+    * distinct word on the driver from the exact full-vocabulary totals
+    * (both token sums AND the smoothing denominator's vocab size), and
+    * scoring is one map-only fold against the broadcast model — zero
+    * token-stream exchanges. Above the cap the dropped tail keeps the
+    * smoothing arithmetic unchanged while tail tokens stop
+    * contributing to either n_tokens or the LLR sum. */
   def txt21DsirImportance(
       lake: Lake,
       targetSource: String = "src0",
       maxModel: Int = 1000000
   ): DataFrame = {
-    // txt15's two-pass native-kernel shape: ONE tokenize scan builds
-    // the vocabulary with BOTH counts (the target count is a
-    // conditional aggregate, not a second pass), the per-word
-    // log-likelihood ratio is computed once per distinct word on the
-    // driver, and scoring is one map-only fold against the broadcast
-    // model — zero token-stream exchanges (the round-9 shape paid a
-    // repartition + checkpoint + join + groupBy over 12.5M token rows
-    // at sf1). The count table is checkpointed once; the exact
-    // full-vocabulary totals (both token sums AND the smoothing
-    // denominator's vocab size) come from a distributed aggregate,
-    // and the driver collects only the top-`maxModel` words by raw
-    // count — bit-identical below the cap, and above it the dropped
-    // tail keeps the smoothing arithmetic unchanged while tail tokens
-    // stop contributing to either n_tokens or the LLR sum (the
-    // UnigramModelScore missing-key rule; see txt15's dropped-tail
-    // note and the "unigram model cap" spec).
-    val cdf = lake.documents
+    val vocab = lake.documents
       .select(
         (col("source") === targetSource).as("is_tgt"),
         explode(graft.plans.TokenCounts(col("text"))).as(Seq("w", "n"))
       )
       .groupBy("w")
       .agg(
-        sum("n").as("c_raw"),
+        sum("n").as("c"),
         sum(when(col("is_tgt"), col("n")).otherwise(0L)).as("c_tgt")
       )
-      .localCheckpoint(false)
-    val tot = cdf
-      .agg(sum("c_raw"), sum("c_tgt"), count(lit(1)))
-      .head()
-    val (tRaw, tTgt, vocab) =
-      (tot.getLong(0).toDouble, tot.getLong(1).toDouble, tot.getLong(2).toDouble)
-    val counts =
-      cdf.orderBy(col("c_raw").desc, col("w")).limit(maxModel).collect()
-    val model = counts.map { r =>
-      r.getString(0) ->
-        (math.log((r.getLong(2).toDouble + 1.0) / (tTgt + vocab))
-          - math.log(r.getLong(1).toDouble / tRaw))
-    }.toMap
-    val b = lake.spark.sparkContext.broadcast(model)
-    lake.documents
-      .select(col("doc_id"), graft.plans.UnigramModelScore(col("text"), b).as("u"))
-      .filter(col("u.n_tokens") > 0)
-      .select(
-        col("doc_id"),
-        col("u.n_tokens").as("n_tokens"),
-        round(col("u.s") / col("u.n_tokens"), 4).as("avg_llr")
-      )
-      .orderBy("doc_id")
+    vocabModelScores(
+      lake, vocab, Seq(sum("c"), sum("c_tgt"), count(lit(1))), maxModel, "avg_llr"
+    ) { (r, t) =>
+      val Seq(tRaw, tTgt, nVocab) = t
+      math.log((r.getLong(2).toDouble + 1.0) / (tTgt + nVocab)) -
+        math.log(r.getLong(1).toDouble / tRaw)
+    }.orderBy("doc_id")
   }
 
   /** txt27: per-document CHARACTER-ENTROPY quality signal — code-point
@@ -1763,23 +1666,26 @@ object TextAnalysis {
     * no float associativity hazard) and divided once at the end.
     *
     * Scale shape: map-only — tokenize, hash, and fold happen inside
-    * one fused `HashedClassifierScore` pass per row (no explode, no
-    * shuffle, no per-row feature-array materialization — the
-    * Column-graph formulation was measured 2.5× slower on the
-    * intermediate arrays alone); the weight table is implicit in the
-    * hash so there is not even a broadcast. Linear in corpus tokens,
-    * embarrassingly parallel. */
+    * one fused `WeightedClassifierScore` pass per row over the stub
+    * vector (no explode, no shuffle, no per-row feature-array
+    * materialization — the Column-graph formulation was measured 2.5×
+    * slower on the intermediate arrays alone); the dim-entry vector
+    * ships with the task binary, so there is not even a broadcast.
+    * Linear in corpus tokens, embarrassingly parallel. */
   def txt29ModelQuality(lake: Lake, dim: Int = 4096): DataFrame =
+    classifierQuality(lake, graft.plans.HashedClassifierScore(col("text"), dim))
+
+  /** The mean milli-weight of a classifier fold's `m` struct
+    * (n_feats, s_milli), as txt29/txt30 and eval05/eval07 score it. */
+  private[graft] val qScore: Column =
+    round(col("m.s_milli") / 1000.0 / col("m.n_feats"), 4).as("q_score")
+
+  /** txt29's output shape (doc_id, n_feats, q_score, keep) for a
+    * classifier fold over the documents' text. */
+  private def classifierQuality(lake: Lake, fold: Column): DataFrame =
     lake.documents
-      .select(
-        col("doc_id"),
-        graft.plans.HashedClassifierScore(col("text"), dim).as("m")
-      )
-      .select(
-        col("doc_id"),
-        col("m.n_feats").as("n_feats"),
-        round(col("m.s_milli") / 1000.0 / col("m.n_feats"), 4).as("q_score")
-      )
+      .select(col("doc_id"), fold.as("m"))
+      .select(col("doc_id"), col("m.n_feats").as("n_feats"), qScore)
       .withColumn("keep", col("q_score") > 0)
       .orderBy("doc_id")
 
@@ -1866,17 +1772,9 @@ object TextAnalysis {
       .select(col("bucket"), col("w_milli"))
       .collect()
       .foreach(r => weights(r.getLong(0).toInt) = r.getLong(1))
-    lake.documents
-      .select(
-        col("doc_id"),
-        graft.plans.WeightedClassifierScore(col("text"), dim, weights).as("m")
-      )
-      .select(
-        col("doc_id"),
-        col("m.n_feats").as("n_feats"),
-        round(col("m.s_milli") / 1000.0 / col("m.n_feats"), 4).as("q_score")
-      )
-      .withColumn("keep", col("q_score") > 0)
-      .orderBy("doc_id")
+    classifierQuality(
+      lake,
+      graft.plans.WeightedClassifierScore(col("text"), dim, weights)
+    )
   }
 }

@@ -23,10 +23,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * unchanged arithmetic: c_uni over ALL pairs counts every token
   * occurrence exactly once.
   *
-  * Tokenization is byte-identical to text.tokens (shared
-  * [[UnigramModelScore.tokenize]] helper). Output is
-  * array<struct<prev:string, w:string, n:bigint>>; callers explode
-  * and sum per pair. CodegenFallback: the fold is the work.
+  * Tokenization is [[Tokenize]], byte-identical to text.tokens.
+  * Output is array<struct<prev:string, w:string, n:bigint>>; callers
+  * explode and sum per pair. CodegenFallback: the fold is the work.
   */
 case class BigramCounts(child: Expression)
     extends UnaryExpression
@@ -46,7 +45,7 @@ case class BigramCounts(child: Expression)
   override def prettyName: String = "bigram_counts"
 
   override def nullSafeEval(input: Any): Any = {
-    val ws = UnigramModelScore.tokenize(input.asInstanceOf[UTF8String])
+    val ws = Tokenize(input.asInstanceOf[UTF8String])
     // insertion-ordered so the array bytes are deterministic per text
     val m = new java.util.LinkedHashMap[(String, String), Long](ws.length * 2)
     var i = 0
@@ -132,7 +131,7 @@ case class BigramModelScore(
   }
 
   override def nullSafeEval(input: Any): Any = {
-    val ws = UnigramModelScore.tokenize(input.asInstanceOf[UTF8String])
+    val ws = Tokenize(input.asInstanceOf[UTF8String])
     var n = 0L
     var sum = 0.0
     var i = 1

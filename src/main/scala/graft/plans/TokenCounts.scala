@@ -18,9 +18,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * the declarative explode(tokens) pushes every corpus token through
   * the aggregate.
   *
-  * Tokenization is byte-identical to text.tokens (the
-  * UnigramModelScore chain — shared helper). Output is
-  * map<string,bigint>; callers explode the map and sum per word.
+  * Tokenization is [[Tokenize]], byte-identical to text.tokens.
+  * Output is map<string,bigint>; callers explode the map and sum per
+  * word.
   * CodegenFallback: the fold is the work (TopBigramCount argument).
   */
 case class TokenCounts(child: Expression)
@@ -32,7 +32,7 @@ case class TokenCounts(child: Expression)
   override def prettyName: String = "token_counts"
 
   override def nullSafeEval(input: Any): Any = {
-    val ws = UnigramModelScore.tokenize(input.asInstanceOf[UTF8String])
+    val ws = Tokenize(input.asInstanceOf[UTF8String])
     // insertion-ordered so the map bytes are deterministic per text
     val m = new java.util.LinkedHashMap[String, Long](ws.length * 2)
     var i = 0

@@ -24,13 +24,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * travels by reference inside the expression tree — the precedent is
   * Spark's own BloomFilterMightContain holding its broadcast filter.
   *
-  * Tokenization replicates text.tokens = split(trim(regexp_replace(
-  * text, "\\s+", " ")), " ") byte for byte (the HashedClassifierScore
-  * chain, minus its lowercasing — the LM family scores case-sensitive
-  * tokens): after \s+ collapse, the edges hold at most one space, so
-  * stripping exactly one equals Spark's space-only trim. A token
-  * absent from the model contributes to NEITHER n_tokens nor s —
-  * the inner-join semantics of the formulation this fuses (with a
+  * Tokenization is [[Tokenize]], byte-identical to text.tokens (the
+  * hashed-classifier fold calls it on lowercased text; the LM family
+  * scores case-sensitive tokens). A token absent from the model
+  * contributes to NEITHER n_tokens nor s — the inner-join semantics of the formulation this fuses (with a
   * corpus-trained model every token is present; the rule only matters
   * for externally supplied models).
   *
@@ -65,7 +62,7 @@ case class UnigramModelScore(
   }
 
   override def nullSafeEval(input: Any): Any = {
-    val ws = UnigramModelScore.tokenize(input.asInstanceOf[UTF8String])
+    val ws = Tokenize(input.asInstanceOf[UTF8String])
     var n = 0L
     var sum = 0.0
     var i = 0
@@ -90,17 +87,4 @@ case class UnigramModelScore(
 object UnigramModelScore {
   def apply(text: Column, model: Broadcast[Map[String, Double]]): Column =
     Bridge.column(UnigramModelScore(Bridge.expression(text), model))
-
-  /** The text.tokens chain, byte for byte: split(trim(regexp_replace(
-    * text, "\\s+", " ")), " "). After the \s+ collapse the edges hold
-    * at most one space, so stripping exactly one equals Spark's
-    * space-only trim. Shared by UnigramModelScore and TokenCounts so
-    * train and score passes can never tokenize differently. */
-  private[plans] def tokenize(u: UTF8String): Array[String] = {
-    val s = u.toString.replaceAll("\\s+", " ")
-    val t =
-      if (s.startsWith(" ") || s.endsWith(" ")) s.replaceAll("^ | $", "")
-      else s
-    t.split(" ", -1)
-  }
 }

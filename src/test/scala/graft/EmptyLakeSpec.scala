@@ -42,6 +42,12 @@ class EmptyLakeSpec extends AnyFunSuite {
   assertEmptyOk("rel16_window_suite", Relational.rel16WindowSuite(_))
   assertEmptyOk("txt01_stats", TextAnalysis.txt01Stats)
   assertEmptyOk("txt24_quality_panel", TextAnalysis.txt24QualityPanel(_))
+  // the capped vocabulary models read their full-vocabulary totals on
+  // the driver: an empty count table sums to NULL
+  assertEmptyOk("txt15_unigram_logprob", TextAnalysis.txt15UnigramLogprob(_))
+  assertEmptyOk("txt21_dsir_importance", TextAnalysis.txt21DsirImportance(_))
+  assertEmptyOk("txt23_bigram_logprob", TextAnalysis.txt23BigramLogprob(_))
+  assertEmptyOk("txt25_ccnet_buckets", TextAnalysis.txt25CcnetBuckets(_))
   assertEmptyOk("samp04_token_budget", TextAnalysis.samp04TokenBudget(_))
   assertEmptyOk("samp10_epoch_mixture", TextAnalysis.samp10EpochMixture(_))
   assertEmptyOk("dedup01_exact", Dedup.dedup01Exact)

@@ -258,27 +258,6 @@ class TextSelectionSpec extends AnyFunSuite {
     assert(rows.map(_._3).sum == lake.documents.count())
   }
 
-  test("ccnet buckets: sketch cutpoints partition completely and land near the exact terciles") {
-    // the 100 TB path — approx_percentile cutpoints (bounded
-    // per-partition memory) must still yield a complete, ordered,
-    // near-balanced partition; at accuracy 10000 on this corpus the
-    // rank error is far below a tercile width
-    val approx = TextAnalysis.txt25CcnetBuckets(lake, exactCuts = false)
-      .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2)))
-    val exact = TextAnalysis.txt25CcnetBuckets(lake)
-      .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2)))
-    // same partition frame: every (lang, bucket) cell exists
-    assert(approx.map(t => (t._1, t._2)).toSet == exact.map(t => (t._1, t._2)).toSet)
-    // full cover: the sketch path never drops or double-buckets a doc
-    assert(approx.map(_._3).sum == lake.documents.count())
-    // per-cell counts within a small absolute band of the exact ones
-    val e = exact.map(t => (t._1, t._2) -> t._3).toMap
-    approx.foreach { case (l, b, n) =>
-      assert(math.abs(n - e((l, b))) <= math.max(2L, e((l, b)) / 10),
-        s"($l,$b): sketch $n vs exact ${e((l, b))}")
-    }
-  }
-
   test("line dedup: frequent lines struck everywhere, untouched docs round-trip") {
     val docs = lake.documents.select("doc_id", "text", "source").collect()
       .map(r => (r.getLong(0), s"promo ${r.getString(2)} banner. ${r.getString(1)}. copyright footer"))
@@ -430,6 +409,53 @@ class TextSelectionSpec extends AnyFunSuite {
     }
     langs.foreach { case (id, l) =>
       assert(panel(id)._3 == l, s"doc $id language mismatch")
+    }
+  }
+
+  test("gopher rules and language vote: verdict and panel agree on hand-made boundary rows") {
+    // gopherVerdict and qualityPanel read one rule list and one vote;
+    // these rows sit on each comparison's edge (< vs >=), where a
+    // flipped direction would change a verdict
+    import spark.implicits._
+    import graft.functions.text
+    def ws(n: Int, w: String): Seq[String] = Seq.fill(n)(w)
+    // (doc_id, tokens, expected fail_reasons, expected pred_lang)
+    val rows: Seq[(Long, Seq[String], String, String)] = Seq(
+      (1L, Seq("the", "of") ++ ws(48, "abcd"), "", "en"), // 50 tokens
+      (2L, Seq("the", "of") ++ ws(47, "abcd"), "too_short", "en"), // 49
+      (3L, Seq("the", "of") ++ ws(99998, "abcd"), "", "en"), // 100000
+      (4L, Seq("the", "of") ++ ws(99999, "abcd"), "too_long", "en"), // 100001
+      (5L, Seq("the", "and") ++ ws(48, "abc"), "", "en"), // mean exactly 3
+      (6L, Seq("the", "and") ++ ws(47, "abc") :+ "ab", "mean_len", "en"), // 2.98
+      (7L, Seq("the", "and") ++ ws(47, "abcdefghij") :+ ("x" * 24), "", "en"), // mean exactly 10
+      (8L, Seq("the", "and") ++ ws(47, "abcdefghij") :+ ("x" * 25), "mean_len", "en"), // 10.02
+      (9L, Seq("the", "of") ++ ws(43, "abcd") ++ ws(5, "!!!"), "symbol", "en"), // ratio exactly 0.1
+      (10L, Seq("the", "of") ++ ws(44, "abcd") ++ ws(4, "!!!"), "", "en"), // 0.08
+      (11L, Seq("the", "the") ++ ws(48, "abcd"), "stopword", "en"), // 1 distinct stopword
+      (12L, Seq("the", "of", "der", "die") ++ ws(46, "abcd"), "", "en"), // en/de tie
+      (13L, Seq("der", "el") ++ ws(48, "abcd"), "stopword", "de"), // de/es tie
+      (14L, Seq("el", "le") ++ ws(48, "abcd"), "stopword", "es"), // es/fr tie
+      (15L, Seq("le", "les", "the") ++ ws(47, "abcd"), "stopword", "fr"), // fr most
+      (16L, ws(50, "abcd"), "stopword", "en"), // no markers
+      (17L, ws(10, "!"), "too_short,mean_len,symbol,stopword", "en")
+    )
+    val docs = rows.map { case (id, toks, _, _) => (id, toks.mkString(" ")) }
+      .toDF("doc_id", "text")
+    val verdict = TextAnalysis.gopherVerdict(docs).collect().map(r => r.getLong(0) -> r).toMap
+    val panel = TextAnalysis.qualityPanel(docs).collect().map(r => r.getLong(0) -> r).toMap
+    assert(verdict.size == rows.size && panel.size == rows.size)
+    rows.foreach { case (id, toks, reasons, lang) =>
+      val (v, p) = (verdict(id), panel(id))
+      Seq("n_tokens", "mean_tok_len", "symbol_ratio", "n_stop_distinct", "passes").foreach { c =>
+        assert(v.getAs[Any](c) == p.getAs[Any](c),
+          s"doc $id $c: verdict ${v.getAs[Any](c)} vs panel ${p.getAs[Any](c)}")
+      }
+      assert(v.getAs[String]("fail_reasons") == reasons, s"doc $id fail_reasons")
+      assert(v.getAs[Boolean]("passes") == reasons.isEmpty, s"doc $id passes")
+      // the vote: most markers wins, ties to the earlier of en, de, es, fr
+      val counts = text.langMarkers.map { case (l, m) => l -> toks.count(m.contains) }
+      assert(Seq("en", "de", "es", "fr").maxBy(counts) == lang, s"doc $id fixture")
+      assert(p.getAs[String]("pred_lang") == lang, s"doc $id pred_lang")
     }
   }
 
